@@ -489,6 +489,14 @@ NOT_BENCHED: set[str] = set()
 
 
 def main() -> None:
+    from perfbench.run import parse_cpus
+
+    # a malformed core count must fail here, not after the whole run
+    try:
+        cpus = parse_cpus(os.environ.get("SPARK_GRAFT_CPUS"))
+    except ValueError as e:
+        print(f"bench: {e}", file=sys.stderr)
+        sys.exit(2)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
@@ -760,7 +768,6 @@ def main() -> None:
     # overwrote the 32-core detail, leaving scaling attribution to
     # journal archaeology).  BENCH_DETAIL.json stays the newest-run
     # artifact for driver compatibility.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or (os.cpu_count() or 0))
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
         "BENCH_DETAIL.json" if not subset else "BENCH_SUBSET.json",

@@ -93,12 +93,66 @@ def test_daily_import_unverified_aborts(spark, fixtures):
     # remove one DB row → that workbook charge becomes unverified
     broken = charge_table.filter("seq_no <> '0012'")
     cfg = EntityConfig(entity="wb", transport_root="/tmp/unused")
+    before = _persisted_rdds(spark)
     with pytest.raises(QualityGateError, match="unverified"):
         run_daily_import(grid, broken, customer_dim, cfg)
+    assert _persisted_rdds(spark) == before  # no cache outlives the abort
     # non-strict mode: same pipeline surfaces the rows instead
     out = run_daily_import(grid, broken, customer_dim, cfg, strict=False)
     assert out["unverified"].count() == 1
     assert out["matched"].count() == 2
+    out["matched"].unpersist()
+
+
+def _persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.parametrize("strict", [True, False])
+def test_daily_import_decodes_once(spark, fixtures, tmp_path, strict):
+    """Every gate and the reconcile join read one decode of the
+    workbook, and the documents read the reconcile cache, not the
+    workbook.  The grid comes from a one-row source through a
+    ``mapInPandas`` decoder that logs each call, like
+    ``read_workbook_grids`` over a one-workbook drop dir."""
+    grid_rows, charge_table, customer_dim = fixtures
+    rows = grid_rows.toPandas()
+    log = str(tmp_path / "decodes.log")
+
+    def decode(batches):
+        for pdf in batches:
+            if len(pdf):
+                with open(log, "a") as f:
+                    f.write("decode\n")
+                yield rows
+
+    grid = spark.range(1, numPartitions=1).mapInPandas(decode, schema=grid_rows.schema)
+
+    def decodes() -> int:
+        if not os.path.exists(log):
+            return 0
+        with open(log) as f:
+            return len(f.readlines())
+
+    cfg = EntityConfig(entity="pw", transport_root=str(tmp_path / "xero"))
+    before = _persisted_rdds(spark)
+    out = run_daily_import(grid, charge_table, customer_dim, cfg, strict=strict)
+    assert decodes() == 1
+    assert len(out["payloads"].collect()) == 3
+    assert decodes() == 1
+    assert _persisted_rdds(spark) == before + 1  # the caller-owned matched
+    out["matched"].unpersist()
+    assert _persisted_rdds(spark) == before
+
+
+def test_daily_import_leaves_a_caller_cache_alone(spark, fixtures, tmp_path):
+    grid, charge_table, customer_dim = fixtures
+    grid = grid.cache()
+    cfg = EntityConfig(entity="pw", transport_root=str(tmp_path / "xero"))
+    out = run_daily_import(grid, charge_table, customer_dim, cfg)
+    out["matched"].unpersist()
+    assert grid.storageLevel.useMemory  # still the caller's
+    grid.unpersist()
 
 
 def test_asof_join_backward(spark):

@@ -118,7 +118,12 @@ def total_debtors(grid: DataFrame) -> DataFrame:
 
 def day_summary(grid: DataFrame) -> DataFrame:
     """Per-day roll-up + A6 balance flag (src/parse.ts:139-143)."""
-    charges = parse_charges(grid)
+    return summarize_charges(grid, parse_charges(grid))
+
+
+def summarize_charges(grid: DataFrame, charges: DataFrame) -> DataFrame:
+    """``day_summary`` over charges already parsed from ``grid`` — for a
+    caller that needs the charges too and should not parse them twice."""
     sums = charges.groupBy("src_file").agg(
         F.sum(F.when(F.col("section") == "charges", F.col("amount"))).alias(
             "charges_total"

@@ -58,16 +58,19 @@ def materialize(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
 
     ``checkpoint_dir=None`` → ``localCheckpoint()`` (executor-local,
     fast, not fault-tolerant). A path → reliable ``checkpoint()``
-    into that directory (Spark creates a per-set UUID subdirectory
-    under it).  The dir is (re-)pointed on every call: the previous
-    set-once-if-unset rule meant that once ANY caller had set a
-    checkpoint dir on the shared SparkContext, a later caller asking
-    for a DIFFERENT dir silently checkpointed into the first one
-    (r16: surfaced by the lazy-rounds guard test).  One extra mkdir
-    per materialize call is noise next to the checkpoint write.
+    into that directory.  ``setCheckpointDir`` creates a fresh UUID
+    subdirectory on every call, so it runs only when the requested
+    directory differs from the last one this function set on the
+    SparkContext, or when something else re-pointed the context since:
+    the rounds of one iterative operator share one subdirectory, and a
+    caller asking for a different directory never checkpoints into the
+    previous caller's.
     """
     if checkpoint_dir is None:
         return df.localCheckpoint()
     sc = df.sparkSession.sparkContext
-    sc.setCheckpointDir(checkpoint_dir)
+    last = getattr(sc, "_materialize_checkpoint_dir", None)
+    if last != (checkpoint_dir, sc.getCheckpointDir()):
+        sc.setCheckpointDir(checkpoint_dir)
+        sc._materialize_checkpoint_dir = (checkpoint_dir, sc.getCheckpointDir())
     return df.checkpoint()

@@ -24,8 +24,12 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from xero_api_etl_utilities_spark.operators.daydocket import day_summary, parse_charges
+from xero_api_etl_utilities_spark.operators.daydocket import (
+    parse_charges,
+    summarize_charges,
+)
 from xero_api_etl_utilities_spark.operators.quality import (
     all_true,
     enforce_empty,
@@ -85,8 +89,6 @@ def fan_out(df: DataFrame, consumers: dict, storage_level=None) -> dict:
     a consumer returning a lazy DataFrame still computes correctly but
     re-plans from source once the cache is gone.
     """
-    from pyspark.storagelevel import StorageLevel
-
     cached = df.persist(storage_level or StorageLevel.MEMORY_AND_DISK)
     try:
         cached.count()
@@ -109,34 +111,62 @@ def run_daily_import(
     ``charge_table`` columns: date, amount, customer_id, seq_no,
     terminal_id, tran_timestamp. ``customer_dim``: customer_id,
     xero_id, terms_type, terms_days.
+
+    Cache ownership: this function caches ``grid`` so that the gates
+    and the reconcile join decode the workbook once, and releases that
+    cache before it returns or raises.  A grid the caller has cached
+    already is used as it is and left cached.  On return the caller
+    owns the persisted ``matched`` frame and must ``unpersist()`` it;
+    ``payloads`` and ``documents`` read it.  ``charges``, ``summary``
+    and ``unverified`` stay lazy over the grid, so reading them after
+    the return decodes the workbook again.  When a gate raises, nothing
+    this function cached stays cached.
     """
-    charges = parse_charges(grid)
-    require_nonempty(charges, "parsed charges")
+    owns_grid_cache = grid.storageLevel == StorageLevel.NONE
+    if owns_grid_cache:
+        grid = grid.persist(StorageLevel.MEMORY_AND_DISK)
+    matched = None
+    try:
+        charges = parse_charges(grid)
+        require_nonempty(charges, "parsed charges")
 
-    summary = day_summary(grid)
-    # soft gate: warn-equivalent — surfaced as a flag, run continues
-    # (src/helpers.ts:188-198)
-    balanced = all_true(summary, "is_balanced")
+        summary = summarize_charges(grid, charges)
+        # soft gate: warn-equivalent — surfaced as a flag, run continues
+        # (src/helpers.ts:188-198)
+        balanced = all_true(summary, "is_balanced")
 
-    probe = charges.select(
-        "date",
-        F.round(F.col("amount"), 2).alias("amount"),  # probe-side 2dp rule
-        "customer_id",
-        "seq_no",
-        "notes",
-        "section",
-    )
-    # persist_matched: the pipeline consumes BOTH halves (the gate reads
-    # unverified, the document path reads matched) — caching matched
-    # makes that exactly one pass over the charge fact table.
-    matched, unverified = reconcile(
-        probe,
-        charge_table,
-        on=["date", "amount", "customer_id", "seq_no"],
-        persist_matched=True,
-    )
-    if strict:
-        enforce_empty(unverified, "unverified charges")  # hard gate Q3
+        probe = charges.select(
+            "date",
+            F.round(F.col("amount"), 2).alias("amount"),  # probe-side 2dp rule
+            "customer_id",
+            "seq_no",
+            "notes",
+            "section",
+        )
+        # persist_matched: the pipeline consumes BOTH halves (the gate reads
+        # unverified, the document path reads matched) — caching matched
+        # makes that exactly one pass over the charge fact table.
+        matched, unverified = reconcile(
+            probe,
+            charge_table,
+            on=["date", "amount", "customer_id", "seq_no"],
+            persist_matched=True,
+        )
+        # Every matched buffer must be loaded before the grid cache goes:
+        # unpersisting the grid re-plans each dependent cache whose
+        # buffers are not loaded yet, back onto a fresh decode.  The
+        # hard gate loads them all (it broadcasts the keys of matched).
+        if strict:
+            enforce_empty(unverified, "unverified charges")  # hard gate Q3
+        else:
+            matched.count()
+    except BaseException:
+        if matched is not None:
+            matched.unpersist()
+        raise
+    finally:
+        if owns_grid_cache:
+            grid.unpersist()
 
     enriched = matched.join(F.broadcast(customer_dim), "customer_id", "left")
     ok_rows, invalid_rows = validate_required(enriched)

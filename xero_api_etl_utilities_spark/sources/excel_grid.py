@@ -213,16 +213,23 @@ def _decode_workbook_batches(batches):
 
 
 def read_workbook_grids(spark: SparkSession, drop_dir: str) -> DataFrame:
-    """S2 at scale: one task per workbook partition, Arrow-batched
-    decode to the grid schema via the stdlib xlsx/xls decoders.
+    """S2 at scale: Arrow-batched decode of the scan's splits to the
+    grid schema via the stdlib xlsx/xls decoders.
+
+    The decode runs straight on the binaryFile scan, with no shuffle in
+    front of it.  The scan never splits a file; it packs whole files
+    into splits of at most ``min(maxPartitionBytes, max(openCostInBytes,
+    total / defaultParallelism))`` bytes, where the total charges every
+    file ``openCostInBytes`` (4 MB) on top of its length.  So many small
+    workbooks spread evenly across the cores, and a single workbook is
+    one decode task.  Workbooks are independent decode units: how they
+    share a split does not change the grid.
 
     STRICT mode: one undecodable workbook fails its task loudly.  The
     drop-dir production route is
     :func:`read_workbook_grids_with_quarantine`, which keeps the batch
     alive and routes bad blobs to a reviewable side output."""
-    files = list_day_docket_files(spark, drop_dir)
-    # one workbook per task: workbooks are independent decode units
-    return files.repartition("file_name").mapInPandas(
+    return list_day_docket_files(spark, drop_dir).mapInPandas(
         _decode_workbook_batches, schema=GRID_SCHEMA
     )
 
@@ -272,10 +279,10 @@ def read_workbook_grids_with_quarantine(
     reader's output for every file that decodes.
 
     One decode pass feeds both sides (the frame is cached so the two
-    filtered views don't re-decode the drop-dir)."""
-    files = list_day_docket_files(spark, drop_dir)
+    filtered views don't re-decode the drop-dir).  The decode runs on
+    the scan's splits exactly as in :func:`read_workbook_grids`."""
     decoded = (
-        files.repartition("file_name")
+        list_day_docket_files(spark, drop_dir)
         .mapInPandas(_decode_workbook_batches_permissive, schema=_QUARANTINE_SCHEMA)
         .cache()
     )
