@@ -1,14 +1,16 @@
 """Benchmark harness (driver contract: one JSON line on stdout).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
+Times every catalog query, in catalog order, at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Each query is fully
 materialized executor-side via the noop sink (no driver collect cost in
-the measurement).
+the measurement); the bounded baselines run at their own sf.  A shared
+memo (``operators.materialize.session_memo``) is timed once, as its own
+``<memo>_build`` entry before the query that first needs it, and that
+query is timed at marginal cost.
 
-The final stdout line is deliberately SHORT — round 2's 70-query inline
-"queries" map overflowed the driver's tail capture and BENCH_r02.json
-recorded ``parsed: null``.  Per-query timings now go to BENCH_DETAIL.json
-next to this script; stdout gets only:
+The final stdout line is deliberately SHORT — an inline per-query map
+overflows the driver's tail capture.  Per-query timings go to
+BENCH_DETAIL.json next to this script; stdout gets only:
 
   {"metric": "headline_total", "value": <sec>, "unit": "sec",
    "sf": <float>, "n_queries": <int>, "detail": "BENCH_DETAIL.json"}
@@ -24,444 +26,21 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "daily_pnl_rollup",
-    "scan_project_filter",
-    "reconcile_matched",
-    "reconcile_unverified",
-    "dim_join_enrich",
-    "join_exactly_one",
-    "agg_conditional_sums",
-    "agg_string_receipts",
-    "agg_balance_check",
-    "window_segmentation",
-    "window_rank_topk",
-    "sort_limit_topk",
-    "union_tagged_streams",
-    "invoice_line_assembly",
-    "scalar_string_pack",
-    "scalar_date_pack",
-    "events_tumbling",
-    "events_sessionization",
-    "events_dedup_latest",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "parts_brand_margin",
-    "join_asof",
-    "window_lag_lead",
-    "window_moving_frame",
-    "window_distribution_ranks",
-    "join_above_avg",
-    "events_sliding",
-    "agg_rollup",
-    "agg_cube",
-    "agg_percentiles",
-    "set_ops_custkeys",
-    "pivot_event_values",
-    "dedup_exact",
-    # r11: the full-corpus MinHash signature sketch is ITS OWN
-    # memoized substrate (corpus_ops.minhash_sigs) — before r11 the
-    # shingle-explode + 64-min pass re-ran inside candidates, the
-    # cleaning pipeline, the band census, and the calibration query;
-    # now those are semi-joins/filters of this one frame. Timed first
-    # so every downstream line is marginal cost.
-    "dedup_sigs_build",
-    # Shared candidates substrate (plans/corpus_ops.lsh_candidates
-    # memo) now feeds dedup_minhash_lsh TOO — timed before it so the
-    # attribution stays on this line (see dedup_substrate_build note
-    # below for the verify-side half of the substrate)
-    "dedup_candidates_build",
-    "dedup_minhash_lsh",
-    # r9: estimator-calibration census — rides the memoized candidate
-    # frame built on the line above; its exact-verify side (threshold
-    # floored to keep every pair) is its own cost
-    "dedup_minhash_calibration",
-    # r13: X171 rides the memoized signature frame (dedup_sigs_build
-    # above) — its marginal cost is banding + the mixed-pair join +
-    # candidate-restricted verify, never a re-shingle
-    "dedup_incremental_pairs",
-    # r14: X174/X176 — the persisted band catalog.  Only the FIRST of
-    # the three timed runs pays the parquet publish
-    # (wave14._CATALOG_CACHE memoizes the path), so the reported
-    # median/best are the disk-read marginal cost a production crawl
-    # pays against an already-written store; the publish shows up in
-    # the first-run max.  X176/X177 ride the same persisted artifact.
-    "dedup_catalog_persisted",
-    "dedup_catalog_absorb",
-    "dedup_catalog_expire",
-    # r15: X179 — the sequenced absorb-loop replay.  Only the FIRST
-    # timed run pays the store publish + both batch verifies
-    # (wave15._STORE_CACHE memoizes the store root); median/best are
-    # the pairs-artifact read-back a reviewer of the published store
-    # pays.  The end-to-end loop cost lives in the first-run max.
-    "dedup_store_asof",
-    # r15: X181 rides the same memoized store; each run compacts the
-    # catalog (idempotent after the first) then censuses the
-    # read-back, so the line prices compaction + one sidecar scan
-    "dedup_catalog_compact",
-    # r15: X182 — the IVF index absorb.  First run pays the coarse
-    # quantizer training + index publish (wave15._IVF_INDEX_CACHE);
-    # median/best are the sidecar census read-back.  X183 rides the
-    # same persisted index: its line is the broadcast tombstone
-    # anti-join + census.
-    "similarity_index_absorb",
-    "similarity_index_expire",
-    "dedup_embedding_cosine",
-    # similarity_topk (brute force) is the oracle baseline, NOT a
-    # headline entry: the headline similarity routes are the two
-    # scale-safe paths (LSH, IVF) — no BroadcastNestedLoopJoin.
-    "similarity_topk_lsh",
-    "similarity_topk_ivf",
-    "cluster_assign",
-    # Shared candidates->verify substrate (plans/corpus_ops.py memo):
-    # built ONCE per session and reused by pipeline_corpus_clean,
-    # dedup_verified_pairs, dedup_clusters, dedup_cluster_sizes and
-    # dedup_containment. Timed here as its own entry, BEFORE the first
-    # consumer, so the consumers' marginal times (~0.02-0.04 s) can't
-    # be misread as the cost of LSH + verification, and the pipeline
-    # query's time stops silently absorbing the build ("no silent
-    # caps" — VERDICT r3 missing #4). Memoized, so it is timed once,
-    # not best-of-2.
-    "dedup_substrate_build",
-    # r7: the pipeline's own quality-gated survivor/near-dup memo
-    # (extensions._pipeline_stages) — timed as its own line so the
-    # best-of-2 rule can't silently absorb the build into a discarded
-    # first run ("no silent caps")
-    "pipeline_stages_build",
-    "pipeline_corpus_clean",
-    # r7: rides the same memoized frames — marginal-cost line
-    "pipeline_curation_report",
-    "sample_split_assign",
-    "join_range_intransit",
-    "text_quality",
-    "text_token_counts",
-    # completing the catalog (everything except the two deliberately
-    # small-slice exact baselines, so per-round history covers every
-    # production-shaped query)
-    "agg_all_balanced",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "filter_negation_membership_routing",
-    "filter_null_and_zero",
-    "join_cardinality_violations",
-    "scalar_null_conditional_pack",
-    "text_fingerprint",
-    "text_lang_id",
-    # corpus-hygiene ops (plans/corpus_ops.py)
-    "text_normalize",
-    "text_pii_mask",
-    "text_repetition",
-    "decontaminate_ngrams",
-    # r9: contamination depth (longest contiguous benchmark run)
-    "decontaminate_longest_run",
-    "doc_pack_chunks",
-    "sample_stratified",
-    # analytics extras (plans/analytics_extra.py)
-    "events_funnel",
-    "events_cohort_retention",
-    "text_top_terms",
-    "text_doc_frequency",
-    "text_rarity",
-    "events_json_props",
-    "agg_approx_distinct_ok",
-    # candidates -> exact-verify: the production near-dup pair flow
-    "dedup_verified_pairs",
-    # iterative: MinHash-LSH candidate graph -> connected components.
-    # Cost = one candidate generation (the edge list is checkpointed
-    # once) + diameter-many small label joins
-    "dedup_clusters",
-    # exact top-k through the Arrow/matmul path: unlike the excluded
-    # BroadcastNestedLoopJoin form, this is ONE corpus scan with
-    # per-batch matmul + candidate-only shuffle — the correct exact
-    # method for a bounded query set, so it earns a headline slot
-    "similarity_topk_pandas",
-    # scale-shaped ops (plans/scale_ops.py)
-    "join_skewed_salted",
-    # round-3 training-pipeline wave (plans/training_ops.py);
-    # dedup_containment sits after dedup_clusters so it reuses the
-    # shared materialized LSH candidate frame
-    "dedup_containment",
-    "embedding_quantize_sq8",
-    "sample_per_source_topk",
-    "sample_mixture_rebalance",
-    "events_interarrival",
-    "multimodal_decode_features",
-    "events_daily_fill_forward",
-    "events_transition_matrix",
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "q18_large_orders",
-    "q19_bracketed_revenue",
-    # after dedup_clusters: reuses the materialized clusters frame
-    "dedup_cluster_sizes",
-    "q4_priority_returns",
-    "events_trailing_7d",
-    "agg_winsorized_revenue",
-    # round-3 decorrelation wave + CDC merge + equi-depth bins
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q13_order_count_distribution",
-    "q15_top_supplier",
-    "q17_small_qty_revenue",
-    "q22_dormant_customers",
-    "merge_cdc_snapshot",
-    "window_equidepth_bins",
-    "fuzzy_name_match",
-    "agg_grouping_sets",
-    "events_first_touch_attribution",
-    "sample_weighted_by_length",
-    "unpivot_measures",
-    "window_share_of_total",
-    "events_top_paths",
-    "profile_orders",
-    "profile_orders_approx",
-    "basket_part_pairs",
-    "embedding_pq_codes",
-    "similarity_topk_ivfpq",
-    "snapshot_diff_summary",
-    # round-4 wave (X34-X39): media decode, refined/forced-distributed
-    # IVF-PQ, BM25, Gopher rules, Q12/Q21/set algebra, growth/anomaly/
-    # pivot analytics. split_leakage_safe rides the shared cluster
-    # substrate, so it sits after dedup_clusters like its siblings.
-    "multimodal_audio_features",
-    "multimodal_video_meta",
-    "similarity_topk_ivfpq_rerank",
-    "similarity_topk_ivfpq_dist",
-    "text_bm25_topk",
-    "text_gopher_rules",
-    "split_leakage_safe",
-    "q12_shipmode_priority",
-    "q21_suppliers_kept_waiting",
-    "set_customer_segments",
-    "events_user_accumulation",
-    "events_daily_anomalies",
-    "events_pivot_daily",
-    # TPC-H completion wave: the last four classic shapes (argmin
-    # join-back, HAVING-vs-scalar, NOT-IN anti join, semi-join chain)
-    "q2_min_cost_supplier",
-    "q11_important_stock",
-    "q16_supplier_part_counts",
-    "q20_excess_stock_suppliers",
-    # graph/sketch wave (X40-X42). The co-occurrence edge list is a
-    # shared memoized substrate (plans/graph_ops.co_edges, ~3 s warm at
-    # sf0.1): timed once here, before its first consumer, so the six
-    # graph queries' lines are marginal cost — the dedup_substrate
-    # attribution pattern.
-    "graph_edges_build",
-    "graph_triangle_counts",
-    "events_max_concurrency",
-    "events_heavy_hitters_cms",
-    # runtime-filter / layout / novelty wave (X43-X45)
-    "join_bloom_pruned",
-    "layout_zorder_stats",
-    "text_bigram_novelty",
-    # negative-sampling / rolling-distinct / skew-diag wave (X46-X48)
-    "sample_negative_pairs",
-    "events_trailing_7d_distinct",
-    "events_trailing_7d_distinct_approx",
-    "diag_key_skew",
-    "graph_pagerank",
-    "join_asof_tolerance",
-    "events_session_window",
-    "agg_value_variance_exact",
-    "agg_kmv_distinct",
-    "text_posting_lists",
-    "replica_bucket_diff",
-    "text_retrieve_rerank",
-    "nested_invoice_stats",
-    "diag_join_size_estimate",
-    "graph_kcore",
-    "text_hashing_features",
-    "agg_kmv_overlap",
-    # capstone composite: rides the memoized cluster substrate (built
-    # under dedup_substrate_build / pipeline_corpus_clean above), so
-    # this line is marginal cost like its X1 siblings
-    "pipeline_training_corpus",
-    # r5 seeds (registered below the packed r4 correctness window;
-    # locally oracle-verified, rotate into the driver window next round)
-    "merge_scd2_history",
-    "events_weekday_seasonality",
-    "events_time_to_convert",
-    "events_position_attribution",
-    "events_burstiness",
-    "diag_referential_integrity",
-    "text_top_terms_per_doc",
-    "agg_revenue_concentration",
-    "events_stickiness",
-    "join_point_in_time",
-    "diag_data_contract",
-    "part_pareto_frontier",
-    "events_changepoint",
-    "events_daily_trend",
-    "basket_brand_triples",
-    "layout_shard_moves",
-    "fuzzy_sorted_neighborhood",
-    "graph_label_propagation",
-    "events_user_diversity",
-    "text_bpe_merges",
-    "basket_brand_rules",
-    "layout_zonemap_prune",
-    "agg_mad_outliers",
-    "events_decayed_type_scores",
-    "events_clamped_balance",
-    "events_bounce_rate",
-    "window_interval_coalesce",
-    "graph_bfs_depth",
-    "orders_rfm_segments",
-    "dedup_lsh_quality",
-    "part_abc_classification",
-    # round-6 wave: X96-X101 (plans/corpus_extra.py), wired this round
-    "events_seq_pairs",
-    "diag_distribution_drift",
-    "text_boilerplate_shingles",
-    "sample_epoch_shuffle",
-    "dedup_semantic_clusters",
-    "sample_token_budget_plan",
-    "graph_cc_star",
-    "multimodal_ahash_pairs",
-    # ride the memoized substrate (built under dedup_substrate_build
-    # above), so these lines are marginal cost like their siblings
-    "decontaminate_neardup",
-    "dedup_cluster_representatives",
-    "diag_ks_drift",
-    "decontaminate_report",
-    "diag_quality_deciles",
-    # round-7 wave: the X110-X118 census queries (VERDICT r6 missing
-    # #2 — registered in r6 but never timed), ordered after their
-    # substrate producers so memoized-checkpoint consumers
-    # (dedup_pair_provenance, dedup_savings_census rides the verified
-    # pairs; similarity_ivf_cell_balance rides the IVF build) are
-    # marginal-cost lines like their siblings above
-    "text_dup_span_coverage",
-    # r9: the emit step rides the same span substrate shapes
-    "text_span_dedup_emit",
-    # r9: video frame-sample + real-thumb-decode chain
-    "multimodal_frame_sample",
-    # r9: cohort LTV triangle (calendar-bounded windows)
-    "orders_cohort_ltv",
-    # r10: the decorrelation-proof wave (X151-X154) + corpus publish
-    "corr_all_quantified",
-    "corr_not_in_null_trap",
-    "corr_scalar_select_twice",
-    "corr_nested_exists_scalar",
-    # r10: X155 — the timed line INCLUDES the emit+pack+write (the
-    # builder publishes eagerly), so this is the full publish cost
-    "pipeline_corpus_publish",
-    # r10: X156 — benchmark-decontamination emit
-    "decontaminate_span_emit",
-    # r11: the remaining correlated shapes (X158-X160)
-    "corr_argmin_multiway",
-    "corr_having_global_share",
-    "corr_notin_countdistinct",
-    # r11: X161 encode census — rides the memoized merge table
-    # (trained once per session under the text_bpe_merges line)
-    "text_bpe_encode",
-    # r11: X163 temperature mixture design (one source window)
-    "sample_temperature_mix",
-    # r12 wave (X164-X166): the ANN index-lifecycle queries — the
-    # truncation-recall census prices IVF indexes at four prefix
-    # widths (trains all four inline), the drift census is the batch
-    # twin of the streaming maintenance trigger, and the residual
-    # IVF-PQ line INCLUDES its one-per-session residual encode build
-    # (the _rpq_index memo)
-    "similarity_truncation_recall_ivf",
-    "similarity_ivf_drift_census",
-    "similarity_topk_ivfpq_residual",
-    # r12 mid-round (X167-X168): the retrain-delta census (trains the
-    # old corpus-only + new full geometries inline) and the negated
-    # funnel pattern (one user-keyed fold, no join)
-    "similarity_ivf_retrain_delta",
-    "events_funnel_exclusion",
-    # r12 (X169): recall under frozen vs retrained geometry — trains
-    # both geometries + one 20-query truth pass inline
-    "similarity_ivf_retrain_recall",
-    "embedding_dim_health",
-    "dedup_pair_provenance",
-    "similarity_ivf_cell_balance",
-    "dedup_savings_census",
-    "corpus_mix_census",
-    # r7: the 80-probe kNN shortlist memo shared by purity + kappa —
-    # explicit build line (same best-of-2 attribution rule)
-    "knn_shortlist_build",
-    "similarity_label_purity",
-    "text_head_coverage",
-    "sample_pack_waste",
-    # r7: the relative max_df cap (df <= max(256, 5% of n_docs)) prunes
-    # saturated tokens on ANY vocabulary — 128.7 s near-dense (r6,
-    # excluded) -> 7.4 s with 31k surviving pairs (see docstring)
-    "text_tf_cosine_pairs",
-    # r7: distributed exact NTILE census (score-band rank decomposition)
-    "diag_quality_deciles_dist",
-    # r7 wave: X119-X126 (plans/cdc_ops.py feature capstone +
-    # plans/corpus_wave7.py census/planning operators)
-    "feature_pit_scd2",
-    "text_unigram_logprob",
-    "text_winnow_fingerprints",
-    "corpus_self_similarity",
-    "split_balance_report",
-    "text_zipf_slope",
-    "embedding_label_centroid_sim",
-    "sample_curriculum_order",
-    # r7: interval x interval overlap join (claim-bucket lowering)
-    "join_interval_overlap",
-    # r7 late wave: X129-X134 (similarity_ivfpq_recall rides the
-    # memoized PQ index built under similarity_topk_ivfpq above)
-    "label_noise_kappa",
-    "tokenizer_oov_census",
-    "text_char_entropy",
-    "similarity_ivfpq_recall",
-    "text_rake_keywords",
-    "doc_chunk_overlap_census",
-    "multimodal_audio_vad",
-    "similarity_range_search",
-    "layout_partition_advisor",
-    "diag_langid_confusion",
-    "orders_rfm_migration",
-    "diag_benford_firstdigit",
-    "join_asof_nearest",
-    "diag_functional_deps",
-    "text_bigram_surprisal",
-    "orders_yoy_growth",
-    "text_source_tvd_matrix",
-    # r13 wave: X170 learned quality scorer.  Only the FIRST of the
-    # three timed runs pays the driver-side perceptron training
-    # (quality_model._WEIGHTS_CACHE memoizes the weights), so the
-    # reported median/best are score-only — the marginal per-batch
-    # cost a production run pays once the model is trained.  The
-    # bounded 400-doc training shows up in the first-run max instead
-    # (ADVICE r13).  X172 rides the same memoized weights, so its
-    # line is the marginal one-pass census.
-    "text_quality_classifier",
-    "text_quality_calibration",
-    # r14: X175 rides the same memoized weights for epoch A and pays
-    # epoch B's bounded training on its first timed run only —
-    # median/best are the one-pass two-fold census cost.
-    "text_quality_drift",
-    # r15: X180 rides X175's memoized weights and census shape — the
-    # marginal cost of the swap DECISION on top of the census
-    "quality_swap_gate",
-]
-# Exactness baselines benched at a BOUNDED sf (r9, VERDICT r7/r8
-# carried item: "no catalog name absent from every bench artifact").
-# These are the guarded exact shapes that exist to pin correctness,
-# not to race the scale paths: similarity_topk is the brute-force
-# top-k oracle baseline (VERDICT r1 item 2), dedup_ngram_jaccard the
-# all-pairs Jaccard baseline (r1 item 3), and
-# dedup_prefix_filter_pairs a prefix filter that is sub-quadratic on
-# Zipfian corpora but near-dense on this synthetic 31-word vocabulary
-# (every token's df ~ 0.78·n_docs).  They are timed every full run at
-# the fixed sf below — separate from the headline sum, which stays a
-# like-for-like series over $SPARK_GRAFT_SF_DIR.  The benched scale
-# paths for the same semantics are similarity_topk_lsh/_ivf/_pandas,
-# dedup_minhash_lsh, and text_tf_cosine_pairs (relative-capped since
-# r7).
-# The bounded dir derives from the SAME env root as the headline run
-# (a sibling sf0.01 of $SPARK_GRAFT_SF_DIR), overridable via
-# $SPARK_GRAFT_BOUNDED_SF_DIR — no absolute this-machine path baked in
-# (ADVICE r9).
+# Exactness baselines benched at a BOUNDED sf: the guarded exact shapes
+# that exist to pin correctness, not to race the scale paths —
+# similarity_topk / similarity_topk_mips are the brute-force top-k
+# baselines, similarity_truncation_recall runs four brute-force passes
+# by construction, dedup_ngram_jaccard is the all-pairs Jaccard
+# baseline, and dedup_prefix_filter_pairs is a prefix filter that is
+# sub-quadratic on Zipfian corpora but near-dense on this synthetic
+# 31-word vocabulary (every token's df ~ 0.78·n_docs).  They are timed
+# every full run at the fixed sf below, separate from the headline sum,
+# which stays a like-for-like series over $SPARK_GRAFT_SF_DIR.  The
+# benched scale paths for the same semantics are
+# similarity_topk_lsh/_ivf/_pandas, dedup_minhash_lsh, and
+# text_tf_cosine_pairs.
+# The bounded dir is the sibling sf0.01 of $SPARK_GRAFT_SF_DIR,
+# overridable via $SPARK_GRAFT_BOUNDED_SF_DIR.
 _BOUNDED_DIR = os.environ.get(
     "SPARK_GRAFT_BOUNDED_SF_DIR",
     os.path.join(
@@ -474,18 +53,28 @@ _BOUNDED_DIR = os.environ.get(
     ),
 )
 BOUNDED_SF = {
-    "similarity_topk": _BOUNDED_DIR,
-    "similarity_topk_mips": _BOUNDED_DIR,  # r10: same O(QxN) exact shape
-    # r11: X162 — four brute-force passes by construction (the census
-    # is the exactness instrument; the scale path is IVF + sampling)
-    "similarity_truncation_recall": _BOUNDED_DIR,
-    "dedup_ngram_jaccard": _BOUNDED_DIR,
-    "dedup_prefix_filter_pairs": _BOUNDED_DIR,
+    name: _BOUNDED_DIR
+    for name in (
+        "similarity_topk",
+        "similarity_topk_mips",
+        "similarity_truncation_recall",
+        "dedup_ngram_jaccard",
+        "dedup_prefix_filter_pairs",
+    )
 }
-# machine-readable (tests/test_catalog_structure.py asserts HEADLINE +
-# BOUNDED_SF + NOT_BENCHED covers every catalog query, so a new
-# registration can never silently skip the bench again):
-NOT_BENCHED: set[str] = set()
+
+# Fresh Spark session every N timed entries: one long-lived local-mode
+# JVM accumulates codegen caches, literal-heavy plans, broadcast-cleanup
+# debt and GC rent, and every entry after the aging point pays it
+# (fresh-session re-runs collapsed the worst entries 2-3x at the same
+# commit).
+RECYCLE_EVERY = 40
+
+
+def timed_names(names) -> list[str]:
+    """The entries timed at the run sf: ``names`` (catalog order for a
+    full run) minus the bounded baselines."""
+    return [n for n in names if n not in BOUNDED_SF]
 
 
 def main() -> None:
@@ -501,6 +90,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
 
+    from xero_api_etl_utilities_spark.operators.materialize import SESSION_MEMOS
     from xero_api_etl_utilities_spark.plans import catalog
     from xero_api_etl_utilities_spark.session import get_spark
 
@@ -516,12 +106,10 @@ def main() -> None:
     # warm-up: JIT/codegen + file-listing caches, not measured
     materialize(qs["scan_project_filter"](spark, sf_dir))
 
-    # Environment self-calibration (r4): round-over-round comparisons
-    # were polluted by the box itself drifting — r3's environment ran
-    # every untouched sub-second query 2.3-3.8x slower than r2's
-    # records (PLANS.md round-4 findings). Two probes quantify the two
-    # drift axes so future rounds can normalize before calling a
-    # per-query delta a regression:
+    # Environment self-calibration: the host itself drifts (untouched
+    # sub-second queries have run 2.3-3.8x slower between runs), so two
+    # probes quantify the two drift axes and a per-query delta can be
+    # normalized before it is called a regression:
     #   calib_jvm_sec   — pure whole-stage-codegen compute (sum of
     #                     id*id over range(2e8)): core throughput.
     #   calib_sched_sec — 20 one-row jobs: per-job fixed overhead
@@ -545,13 +133,8 @@ def main() -> None:
             "calib_sched_sec": round(best_sched, 3),
         }
 
-    # Quiet-box gate (VERDICT r14 item 1): the artifact the driver
-    # files per round must itself be a quiet-box run — r14's clean
-    # band lived only in BENCH_HISTORY.jsonl because the driver's
-    # closing run landed on an intermittently contended host
-    # (calib_sched 4.05 vs the 2.5 threshold).  The contention is
-    # transient (two clean runs happened within hours), so instead of
-    # measuring through it, wait it out: re-calibrate every 90 s until
+    # Quiet-box gate: host contention is transient, so instead of
+    # measuring through it, wait it out — re-calibrate every 90 s until
     # the sched probe reads quiet or the wait budget (~12 min) runs
     # out, then stamp every attempt into the artifact so a still-
     # degraded run self-flags with its full history.
@@ -573,113 +156,10 @@ def main() -> None:
     calib["quiet_box"] = calib["calib_sched_sec"] < QUIET_SCHED_SEC
     print(f"bench calibration: {calib}", file=sys.stderr, flush=True)
 
-    # median-of-3 (r9; was best-of-2): the box shows multi-second
-    # CPU-steal stalls that can inflate a single run 10-40x, and a
-    # single contended DRIVER run distorted the whole r7 round signal
-    # (313.8s vs 290.2s on byte-identical code).  The median absorbs
-    # one bad run per query in either direction without letting a
-    # lucky cache-warm outlier stand in for the typical cost.
-    # optional argv subset: `python bench.py q1 q2` times just those
-    # (iteration aid; BENCH_DETAIL.json is only rewritten on full runs)
-    # memoized shared-substrate builds: timed ONCE as their own entry
-    # before their first consumer so the shared cost can't hide inside
-    # whichever query happens to run first ("no silent caps")
-    def _build_dedup_substrate() -> None:
-        # forces the memoized candidates->verify build (localCheckpoint
-        # materializes it); consumers then pay only marginal cost
-        from xero_api_etl_utilities_spark.plans.corpus_ops import _verified_pairs
-
-        _verified_pairs(spark, sf_dir)
-
-    def _build_graph_edges() -> None:
-        # forces the memoized co-occurrence edge list shared by the six
-        # graph queries (plans/graph_ops.co_edges)
-        from xero_api_etl_utilities_spark.plans.graph_ops import co_edges
-
-        co_edges(spark, sf_dir).count()
-
-    def _build_dedup_sigs() -> None:
-        # forces the memoized full-corpus MinHash signature frame —
-        # the shared sketch under candidates, the cleaning pipeline,
-        # the band census, and the calibration query (r11)
-        from xero_api_etl_utilities_spark.plans.corpus_ops import minhash_sigs
-
-        minhash_sigs(spark, sf_dir).count()
-
-    def _build_dedup_candidates() -> None:
-        # forces the memoized LSH candidate frame shared by
-        # dedup_minhash_lsh and the verify substrate
-        from xero_api_etl_utilities_spark.plans.corpus_ops import (
-            lsh_candidates,
-        )
-
-        lsh_candidates(spark, sf_dir).count()
-
-    def _build_pipeline_stages() -> None:
-        from xero_api_etl_utilities_spark.plans.extensions import (
-            _pipeline_stages,
-        )
-
-        _pipeline_stages(spark, sf_dir)
-
-    def _build_knn_shortlist() -> None:
-        from xero_api_etl_utilities_spark.plans.corpus_extra import (
-            probe_knn_shortlist,
-        )
-
-        probe_knn_shortlist(spark, sf_dir)
-
-    SUBSTRATES = {
-        "dedup_sigs_build": _build_dedup_sigs,
-        "pipeline_stages_build": _build_pipeline_stages,
-        "knn_shortlist_build": _build_knn_shortlist,
-        "dedup_candidates_build": _build_dedup_candidates,
-        "dedup_substrate_build": _build_dedup_substrate,
-        "graph_edges_build": _build_graph_edges,
-    }
-
-    # ---- session recycling (VERDICT r12 item 1) -------------------
-    # Two consecutive rounds shipped closing bench numbers with a
-    # known 13-20% session-aging confound: the single long-lived
-    # local-mode JVM accumulates codegen caches, literal-heavy plans
-    # (the 64-dim inlined-centroid ANN wave), broadcast-cleanup debt
-    # and GC rent, and every entry AFTER the aging point pays it
-    # (BENCH_SUBSET.json at e4b8b16: fresh-session re-runs collapse
-    # the worst entries 2-3x at the SAME commit).  full_gate --batch
-    # already recycles its session every N names; the bench now does
-    # the same, with one extra obligation the gate doesn't have:
-    # ATTRIBUTION.  Memoized substrates are keyed by applicationId,
-    # so a naive restart would silently charge the NEXT consumer for
-    # a substrate rebuild ("no silent caps").  After every restart we
-    # therefore re-warm, UNTIMED, every memo parent that has already
-    # been timed this run — the timed entry keeps the one-build cost,
-    # consumers keep marginal cost, and the rebuild is harness
-    # overhead recorded separately (rewarm_sec, never in the total).
-    RECYCLE_EVERY = int(os.environ.get("SPARK_GRAFT_BENCH_RECYCLE", "40"))
-    # Timed catalog entries that fill a session-keyed memo consumed by
-    # LATER entries (beyond the explicit SUBSTRATES builders):
-    #   dedup_clusters        -> corpus_ops.doc_clusters cache
-    #                            (dedup_cluster_sizes/_representatives)
-    #   text_bpe_merges       -> mining_ops._trained_merges
-    #                            (text_bpe_encode)
-    #   similarity_topk_ivfpq -> training_ops._pq_index
-    #                            (_rerank/_dist/similarity_ivfpq_recall)
-    #   dedup_catalog_persisted -> wave14._CATALOG_CACHE (the published
-    #                            parquet band catalog; keyed by appId so
-    #                            a recycled session would re-publish
-    #                            inside dedup_catalog_absorb unwarmed)
-    MEMO_PARENTS = (
-        "dedup_clusters",
-        "text_bpe_merges",
-        "similarity_topk_ivfpq",
-        "dedup_catalog_persisted",
-    )
-    built_parents: list[str] = []  # substrate-dependency order = HEADLINE order
+    # After every session recycle the memos built so far are rebuilt,
+    # untimed, so no consumer pays a rebuild; the rebuild is harness
+    # overhead recorded as rewarm_sec, never in the total.
     state = {"since": 0, "recycles": 0, "rewarm_sec": 0.0}
-
-    def _note_parent(name: str) -> None:
-        if (name in SUBSTRATES or name in MEMO_PARENTS) and name not in built_parents:
-            built_parents.append(name)
 
     def _maybe_recycle(rewarm: bool) -> None:
         nonlocal spark
@@ -696,17 +176,14 @@ def main() -> None:
         # re-JIT the fresh JVM so the first timed entry after the
         # restart isn't charged for codegen warm-up
         materialize(qs["scan_project_filter"](spark, sf_dir))
+        n_memos = len(SESSION_MEMOS.builds)
         if rewarm:
-            for b in built_parents:
-                if b in SUBSTRATES:
-                    SUBSTRATES[b]()
-                else:
-                    materialize(qs[b](spark, sf_dir))
+            SESSION_MEMOS.rewarm(spark)
         dt = time.perf_counter() - t0
         state["rewarm_sec"] += dt
         print(
             f"bench recycle #{state['recycles']}: fresh session, "
-            f"{len(built_parents) if rewarm else 0} memo parents re-warmed"
+            f"{len(SESSION_MEMOS.builds) - n_memos} memos re-warmed"
             f" untimed in {dt:.1f}s",
             file=sys.stderr,
             flush=True,
@@ -714,36 +191,46 @@ def main() -> None:
 
     import statistics
 
-    subset = [n for n in sys.argv[1:] if n in qs or n in SUBSTRATES]
+    # optional argv subset: `python bench.py q1 q2` times just those
+    # (iteration aid; BENCH_DETAIL.json is only rewritten on full runs)
+    subset = [n for n in sys.argv[1:] if n in qs]
 
-    def _timed(name: str, run_dir: str) -> tuple[float, float]:
-        """(median, best) of three runs — median is the headline stat
-        (one stall can't distort it); best is recorded alongside so
-        rounds measured under the old best-of-2 rule stay comparable
-        like-for-like."""
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            materialize(qs[name](spark, run_dir))
-            runs.append(time.perf_counter() - t0)
+    def _run(name: str, run_dir: str) -> float:
+        t0 = time.perf_counter()
+        materialize(qs[name](spark, run_dir))
+        return time.perf_counter() - t0
+
+    def _stats(runs: list[float]) -> tuple[float, float]:
+        """(median, best) of three runs — the median absorbs one
+        CPU-steal stall per query in either direction; best is recorded
+        alongside for comparison with best-of-2 records."""
         return round(statistics.median(runs), 3), round(min(runs), 3)
 
     timings: dict[str, float] = {}
     best: dict[str, float] = {}
-    for name in [n for n in (subset or HEADLINE) if n not in BOUNDED_SF]:
+
+    def _record(name: str, med: float, low: float) -> None:
+        timings[name], best[name] = med, low
+        print(f"bench {name}: {med}s", file=sys.stderr, flush=True)
+
+    for name in timed_names(subset or qs):
         _maybe_recycle(rewarm=True)
-        if name in SUBSTRATES:
-            # memoized: a second run would time the cache hit, so this
-            # entry is single-run by construction
-            t0 = time.perf_counter()
-            SUBSTRATES[name]()
-            timings[name] = best[name] = round(time.perf_counter() - t0, 3)
-            print(f"bench {name}: {timings[name]}s", file=sys.stderr, flush=True)
-        else:
-            timings[name], best[name] = _timed(name, sf_dir)
-            print(f"bench {name}: {timings[name]}s", file=sys.stderr, flush=True)
+        mark = len(SESSION_MEMOS.builds)
+        runs = [_run(name, sf_dir)]
+        # A first run that built shared memos is not this entry's cost:
+        # each build becomes its own single-run `<memo>_build` entry,
+        # placed before this one, and the entry is re-timed at marginal
+        # cost.
+        builds = SESSION_MEMOS.builds[mark:]
+        for b in builds:
+            secs = round(b.seconds, 3)
+            _record(f"{b.name}_build", secs, secs)
+        if builds:
+            runs = []
+        while len(runs) < 3:
+            runs.append(_run(name, sf_dir))
+        _record(name, *_stats(runs))
         state["since"] += 1
-        _note_parent(name)
 
     # bounded-sf exactness baselines: every full run; subset runs only
     # when asked for by name.  No rewarm on recycle: these are the
@@ -753,7 +240,7 @@ def main() -> None:
         if subset and name not in subset:
             continue
         _maybe_recycle(rewarm=False)
-        bounded[name], _ = _timed(name, bdir)
+        bounded[name], _ = _stats([_run(name, bdir) for _ in range(3)])
         state["since"] += 1
         print(
             f"bench {name} (bounded {bdir}): {bounded[name]}s",
@@ -764,17 +251,14 @@ def main() -> None:
     # cpus is stamped into every detail/history row, and full runs ALSO
     # write a per-core-count copy (BENCH_DETAIL_c<N>.json) so a later
     # run at a different core count cannot clobber the only per-query
-    # record of this one (VERDICT r15 item 2: the driver's 8-core run
-    # overwrote the 32-core detail, leaving scaling attribution to
-    # journal archaeology).  BENCH_DETAIL.json stays the newest-run
+    # record of this one.  BENCH_DETAIL.json stays the newest-run
     # artifact for driver compatibility.
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
         "BENCH_DETAIL.json" if not subset else "BENCH_SUBSET.json",
     )
     # stamp the code version so a detail file is always attributable
-    # to the commit it measured (ADVICE r8: the driver's regeneration
-    # used to silently overwrite the builder's like-for-like baseline)
+    # to the commit it measured
     try:
         import subprocess
 
@@ -816,12 +300,10 @@ def main() -> None:
             "w",
         ) as f:
             json.dump(detail_doc, f, indent=1, sort_keys=True)
-    # append-only history (VERDICT r9 item 5, completing ADVICE r8 low
-    # #2): BENCH_DETAIL.json still holds the NEWEST full run for the
-    # driver, but every full run ALSO appends one commit-stamped line
-    # here, so a later driver re-run can never erase the builder's
-    # committed like-for-like baseline — bench_compare picks runs by
-    # commit from the journal.
+    # append-only history: BENCH_DETAIL.json holds the NEWEST full run,
+    # and every full run ALSO appends one commit-stamped line here, so a
+    # later re-run can never erase a committed baseline — bench_compare
+    # picks runs by commit from the journal.
     if not subset:
         history_path = os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "BENCH_HISTORY.jsonl"

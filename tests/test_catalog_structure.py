@@ -2,11 +2,9 @@
 that keep the per-round contract honest:
 
 * every registered query has an oracle (zero rows-only entries);
-* every registered query is either in bench's HEADLINE or in its
-  documented NOT_BENCHED set (VERDICT r6 flagged X110–X118 as
-  registered-but-never-timed; this pins the invariant);
-* HEADLINE contains no unknown names (a typo'd bench entry would
-  silently never run) and no duplicates.
+* bench times every registered query exactly once, either at the run
+  sf or as a bounded-sf baseline, so a new registration can never
+  silently skip the bench.
 """
 
 from __future__ import annotations
@@ -16,30 +14,11 @@ def test_every_query_is_benched_or_documented():
     import bench
     from xero_api_etl_utilities_spark.plans import catalog
 
-    qs = set(catalog.queries())
-    headline = [n for n in bench.HEADLINE]
-    substrates = {
-        "dedup_sigs_build",
-        "dedup_candidates_build",
-        "dedup_substrate_build",
-        "pipeline_stages_build",
-        "knn_shortlist_build",
-        "graph_edges_build",
-    }
-    assert len(headline) == len(set(headline)), "duplicate bench entries"
-    unknown = set(headline) - qs - substrates
-    assert not unknown, f"bench names not in catalog: {sorted(unknown)}"
-    bounded = set(bench.BOUNDED_SF)
-    unbenched = qs - set(headline) - bounded - bench.NOT_BENCHED
-    assert not unbenched, (
-        f"registered but neither benched nor documented: {sorted(unbenched)}"
-    )
-    assert not ((bench.NOT_BENCHED | bounded) & set(headline))
-    assert bench.NOT_BENCHED <= qs and bounded <= qs
-    # r9: every catalog query is timed somewhere (headline at the run
-    # sf, or the bounded-sf exactness baselines) — NOT_BENCHED must
-    # stay empty unless a future entry documents a genuine exclusion
-    assert bench.NOT_BENCHED == set()
+    qs = list(catalog.queries())
+    bounded = list(bench.BOUNDED_SF)
+    assert set(bounded) <= set(qs), f"unknown bounded: {set(bounded) - set(qs)}"
+    # each registered name exactly once: at the run sf or bounded
+    assert sorted(bench.timed_names(qs) + bounded) == sorted(qs)
 
 
 def test_every_query_has_an_oracle():

@@ -29,10 +29,14 @@ def test_queries_and_oracles_are_keyed_identically():
 
 
 def test_window_priority_names_all_registered():
-    # a typo'd name in _WINDOW_PRIORITY silently burns a driver slot;
-    # every listed name must exist once the catalog is loaded
+    # a typo'd name in _WINDOW_PRIORITY silently burns a driver slot and a
+    # duplicate silently shrinks the window; the list fills the driver's
+    # 50-row window exactly and leads queries()
     from xero_api_etl_utilities_spark.plans import catalog
 
-    registered = set(catalog.queries())
+    registered = list(catalog.queries())
     unknown = [n for n in catalog._WINDOW_PRIORITY if n not in registered]
     assert unknown == [], f"priority names not registered: {unknown}"
+    assert len(catalog._WINDOW_PRIORITY) == 50
+    assert len(set(catalog._WINDOW_PRIORITY)) == 50, "duplicate priority names"
+    assert registered[:50] == catalog._WINDOW_PRIORITY

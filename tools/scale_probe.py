@@ -217,8 +217,9 @@ def main() -> int:
             f.write(f"factor={args.factor} base={BASE_SF}\n")
         print(f"probe dir built in {time.perf_counter() - t0:.1f}s", flush=True)
 
-    import bench  # HEADLINE order + BOUNDED_SF exclusions
+    import bench  # BOUNDED_SF exclusions
     from explain_audit import formatted_plan
+    from xero_api_etl_utilities_spark.operators.materialize import SESSION_MEMOS
     from xero_api_etl_utilities_spark.plans import catalog
 
     qs = catalog.queries()
@@ -240,49 +241,22 @@ def main() -> int:
               flush=True)
     targets = ranked[: args.top]
 
-    # substrate builds execute eagerly through their memo functions
-    def _substrate(name):
-        from xero_api_etl_utilities_spark.plans import (
-            corpus_extra, corpus_ops, extensions,
-        )
-        return {
-            "dedup_sigs_build": lambda d: corpus_ops.minhash_sigs(spark, d).count(),
-            "dedup_candidates_build": lambda d: corpus_ops.lsh_candidates(spark, d).count(),
-            "dedup_substrate_build": lambda d: corpus_ops._verified_pairs(spark, d).count(),
-            "pipeline_stages_build": lambda d: extensions._pipeline_stages(spark, d),
-            "knn_shortlist_build": lambda d: corpus_extra.probe_knn_shortlist(spark, d),
-            "graph_edges_build": lambda d: __import__(
-                "xero_api_etl_utilities_spark.plans.graph_ops", fromlist=["co_edges"]
-            ).co_edges(spark, d).count(),
-            # r15: the wave15 store/index publishes happen at plan-
-            # CONSTRUCTION time (session-memoized side effects), so a
-            # consumer row's sec is read-back marginal cost only.
-            # Name these explicitly to journal the 10x COLD chain —
-            # seed + both sequenced batch verifies + absorbs for the
-            # replay store; quantizer training + full assignment for
-            # the IVF index ("no silent caps").
-            "absorb_replay_build": lambda d: __import__(
-                "xero_api_etl_utilities_spark.plans.wave15",
-                fromlist=["publish_absorb_replay"],
-            ).publish_absorb_replay(spark, d),
-            "ivf_index_build": lambda d: __import__(
-                "xero_api_etl_utilities_spark.plans.wave15",
-                fromlist=["publish_ivf_index"],
-            ).publish_ivf_index(spark, d),
-        }.get(name)
+    # `<memo>_build` names run a session memo (operators.materialize)
+    # eagerly and time it, so a memo build — the wave15 store and index
+    # publishes happen at plan-construction time — is journaled as its
+    # own row and a consumer row's sec stays marginal cost.  The
+    # signature memo feeds most dedup targets, so it is built first.
+    def _memo_build(name):
+        if name.endswith("_build"):
+            return SESSION_MEMOS.builders.get(name[: -len("_build")])
+        return None
 
-    # substrates feed the targets — force the shared builds first so
-    # attribution matches bench's accounting
     ordered = [n for n in ("dedup_sigs_build",) if n not in targets] + targets
     if args.names:
         wanted = set(args.names)
-        # explicitly-named publish builds are not catalog targets —
+        # explicitly named memo builds are not catalog targets —
         # prepend them so they run (and are timed) before consumers
-        named_builds = [
-            n
-            for n in ("absorb_replay_build", "ivf_index_build")
-            if n in wanted
-        ]
+        named_builds = [n for n in args.names if _memo_build(n) and n not in ordered]
         ordered = named_builds + [n for n in ordered if n in wanted]
 
     done_at_commit = set()
@@ -312,11 +286,11 @@ def main() -> int:
             break
         ran += 1
         rec = {"name": name, "commit": cur_commit, "factor": args.factor}
-        sub = _substrate(name)
+        build = _memo_build(name)
         try:
-            if sub is not None:
+            if build is not None:
                 t0 = time.perf_counter()
-                sub(args.dir)
+                build(spark, args.dir)
                 rec.update(sec=round(time.perf_counter() - t0, 2), kind="build",
                            ok=True)
             else:

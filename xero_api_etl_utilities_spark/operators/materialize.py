@@ -21,11 +21,23 @@ semantics:
 
 Every operator that truncates lineage routes through
 :func:`materialize` and exposes ``checkpoint_dir``.
+
+A materialized frame that several catalog queries share is built once
+per session through :func:`session_memo`, which also keeps the build
+times and the list of what was built, so a harness can attribute each
+shared build and rebuild them all in a fresh session.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+import os
+import time
+from collections.abc import Callable
+from dataclasses import dataclass
+from typing import Any
+
+from pyspark.sql import DataFrame, SparkSession
 
 
 def compute_width(df: DataFrame, *keys: str) -> DataFrame:
@@ -74,3 +86,76 @@ def materialize(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
         sc.setCheckpointDir(checkpoint_dir)
         sc._materialize_checkpoint_dir = (checkpoint_dir, sc.getCheckpointDir())
     return df.checkpoint()
+
+
+@dataclass(frozen=True)
+class MemoBuild:
+    """One memo build: ``seconds`` is its own time, with the memo builds
+    it triggered itself excluded."""
+
+    name: str
+    sf_dir: str
+    seconds: float
+
+
+class MemoRegistry:
+    """Session-keyed memos of ``fn(spark, sf_dir)`` builders.
+
+    Entries are keyed on ``(applicationId, abspath(sf_dir))``; the first
+    call under a new ``applicationId`` drops every entry of the previous
+    session, whose frames died with it.  ``builds`` lists every build in
+    completion order, so a memo's dependencies come before it.
+    """
+
+    def __init__(self) -> None:
+        self.builders: dict[str, Callable[[SparkSession, str], Any]] = {}
+        self.builds: list[MemoBuild] = []
+        self._entries: dict[tuple[str, str, str], Any] = {}
+        self._app: str | None = None
+        self._nested: list[float] = []  # open builds' nested-build seconds
+
+    def memo(self, name: str):
+        if name in self.builders:
+            raise ValueError(f"duplicate memo name {name!r}")
+
+        def wrap(fn):
+            @functools.wraps(fn)
+            def memoized(spark: SparkSession, sf_dir: str):
+                app = spark.sparkContext.applicationId
+                if app != self._app:
+                    self._entries.clear()
+                    self._app = app
+                key = (name, app, os.path.abspath(sf_dir))
+                if key not in self._entries:
+                    self._nested.append(0.0)
+                    t0 = time.perf_counter()
+                    try:
+                        self._entries[key] = fn(spark, sf_dir)
+                    finally:
+                        total = time.perf_counter() - t0
+                        nested = self._nested.pop()
+                        if self._nested:
+                            self._nested[-1] += total
+                    self.builds.append(MemoBuild(name, sf_dir, total - nested))
+                return self._entries[key]
+
+            self.builders[name] = memoized
+            return memoized
+
+        return wrap
+
+    def rewarm(self, spark: SparkSession) -> None:
+        """Rebuild, for ``spark``'s session, every memo built so far, in
+        build order."""
+        for name, sf_dir in dict.fromkeys((b.name, b.sf_dir) for b in self.builds):
+            self.builders[name](spark, sf_dir)
+
+
+SESSION_MEMOS = MemoRegistry()
+
+
+def session_memo(name: str):
+    """Decorator: build ``fn(spark, sf_dir)`` once per session and data
+    directory, and return that value to every later caller.  ``name``
+    names the build in :data:`SESSION_MEMOS`."""
+    return SESSION_MEMOS.memo(name)

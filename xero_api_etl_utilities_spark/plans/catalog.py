@@ -7,6 +7,7 @@ the two dicts the driver contract (__spark_entry__.py) expects.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -18,59 +19,19 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str | Callable[[], str]] = {}
 
-# The driver's CORRECTNESS_r{N}.json records only the FIRST 50 entries of
-# queries().  Registration order alone left the newest third of the catalog
-# invisible to that hard signal (VERDICT r2, "What's missing" #1).  Names
-# listed here are emitted first — newest / least-stable work belongs at the
-# top; long-stable scalar packs and relational basics can live outside the
-# window because many rounds of green driver rows already pin them.
-# Names not yet registered are ignored, so new-round queries can be listed
-# here before their module lands.
+# The driver's correctness record covers only the FIRST 50 entries of
+# queries(), so these names, the r16 record's window, are emitted first;
+# every other query follows in registration order.
 _WINDOW_PRIORITY: list[str] = [
-    # r15 WINDOW (slots 1-50).  Composition, per the written r15
-    # rotation plan below: (a) r14 had ZERO reds, so the r15 wave's
-    # new registrations (X179-X180) go first, (b) behavior-changed
-    # queries — dedup_catalog_persisted (publish-path orderBy
-    # dropped, d95d760) and the three scorer entries whose fold
-    # gained the NULL-safe coalesce (d95d760), (c) ALL 33 names
-    # whose newest driver row is still r9 (zeroes the r9 staleness
-    # tail — every catalog name then holds a driver row >= r10),
-    # (d) pad to 50 with 11 r10 names, dedup/span/publish-heavy
-    # shapes first.
-    #
-    # r16 ROTATION PLAN (write it while the context is fresh): (a)
-    # any r15 reds to the TOP, (b) the r16 wave + behavior-changed
-    # queries, (c) the 35 remaining r10-only names that did not fit
-    # this round's fold (corr_all_quantified,
-    # corr_nested_exists_scalar, corr_not_in_null_trap,
-    # corr_scalar_select_twice, dedup_ngram_jaccard,
-    # events_dedup_latest, events_sessionization, events_sliding,
-    # filter_negation_membership_routing, filter_null_and_zero,
-    # invoice_line_assembly, orders_rfm_migration,
-    # orders_rfm_segments, part_abc_classification,
-    # parts_brand_margin, pivot_event_values, q10_returned_items,
-    # q13_order_count_distribution, q14_promo_revenue,
-    # q15_top_supplier, q17_small_qty_revenue, q18_large_orders,
-    # q19_bracketed_revenue, q22_dormant_customers,
-    # q4_priority_returns, q7_volume_shipping, q8_market_share,
-    # q9_product_profit, set_ops_custkeys, snapshot_diff_summary,
-    # sort_limit_topk, text_fingerprint, text_lang_id, text_quality,
-    # text_token_counts, multimodal_frame_sample,
-    # dedup_ngram_jaccard, sample_split_assign — 38 with the three
-    # X181-X183 displacements), (d) pad with the oldest r11 rows.
-    # --- (a) r15 new registrations ---
     "dedup_store_asof",
     "quality_swap_gate",
     "dedup_catalog_compact",
     "similarity_index_absorb",
     "similarity_index_expire",
-    # --- (b) r15 behavior-changed (publish sort drop + NULL-safe
-    # scorer coalesce, d95d760) ---
     "dedup_catalog_persisted",
     "text_quality_drift",
     "text_quality_classifier",
     "text_quality_calibration",
-    # --- (c) ALL 33 r9-only names (zero the r9 staleness tail) ---
     "agg_all_balanced",
     "agg_balance_check",
     "agg_conditional_sums",
@@ -104,10 +65,6 @@ _WINDOW_PRIORITY: list[str] = [
     "window_moving_frame",
     "window_rank_topk",
     "window_segmentation",
-    # --- (d) 8 r10 pads: dedup/span/publish-heavy shapes first
-    # (multimodal_frame_sample, dedup_ngram_jaccard and
-    # sample_split_assign were displaced below the fold by the
-    # X181-X183 registrations — they join the r16 plan's r10 list) ---
     "dedup_verified_pairs",
     "dedup_containment",
     "dedup_embedding_cosine",
@@ -116,532 +73,6 @@ _WINDOW_PRIORITY: list[str] = [
     "pipeline_corpus_publish",
     "merge_cdc_snapshot",
     "cluster_assign",
-    # ------------------- below the driver's 50-row fold -------------------
-    # r14 WINDOW (slots 1-50 last round).  Composition, per the written r14
-    # rotation plan below: (a) r13 had ZERO reds, so the r14 wave's
-    # new registrations (X174-X176) go first, (b) behavior-changed
-    # queries — the six whose oracles moved to the shared
-    # star-contraction cc_ctes() chain (911185b), the two mining
-    # oracles that gained MATERIALIZED basket CTEs, fuzzy_name_match
-    # (exact hamming split), and the two classifier entries whose
-    # trainer moved to the literal doc_id<n slice (2230365), (c) ALL
-    # 23 names whose newest driver row is still r8 (zeroes the r8
-    # staleness tail — every catalog name then holds a driver row
-    # >= r9), (d) pad to 50 with 12 r9 names, dedup/similarity-heavy
-    # shapes first.
-    #
-    # r15 ROTATION PLAN (write it while the context is fresh): (a)
-    # any r14 reds to the TOP, (b) the r15 wave + behavior-changed
-    # queries, (c) the 33 remaining r9-only names that did not fit
-    # this round's fold (agg_all_balanced, agg_balance_check,
-    # agg_conditional_sums, agg_cube, agg_percentiles,
-    # agg_revenue_concentration, agg_rollup, agg_string_receipts,
-    # daily_pnl_rollup, diag_quality_deciles_dist, dim_join_enrich,
-    # events_tumbling, join_asof, join_cardinality_violations,
-    # join_exactly_one, join_range_intransit, orders_cohort_ltv,
-    # part_pareto_frontier, q1_pricing_summary, q3_shipping_priority,
-    # q5_local_supplier_volume, q6_forecast_revenue, reconcile_matched,
-    # reconcile_unverified, scalar_date_pack,
-    # scalar_null_conditional_pack, scalar_string_pack,
-    # scan_project_filter, text_zipf_slope, window_lag_lead,
-    # window_moving_frame, window_rank_topk, window_segmentation),
-    # (d) pad with the oldest r10 rows.
-    # --- (a) r14 new registrations ---
-    "dedup_catalog_persisted",
-    "text_quality_drift",
-    "dedup_catalog_absorb",
-    "dedup_catalog_expire",
-    # --- (b) r14 behavior-changed (oracle rewrites at 911185b,
-    # trainer slice contract at 2230365) ---
-    "dedup_clusters",
-    "dedup_cluster_representatives",
-    "dedup_cluster_sizes",
-    "dedup_savings_census",
-    "split_leakage_safe",
-    "pipeline_training_corpus",
-    "basket_brand_triples",
-    "basket_brand_rules",
-    "fuzzy_name_match",
-    "text_quality_classifier",
-    "text_quality_calibration",
-    # --- (c) ALL 23 r8-only names (zero the r8 staleness tail) ---
-    "agg_approx_distinct_ok",
-    "corpus_mix_census",
-    "diag_benford_firstdigit",
-    "diag_functional_deps",
-    "diag_ks_drift",
-    "diag_langid_confusion",
-    "diag_quality_deciles",
-    "doc_chunk_overlap_census",
-    "join_asof_nearest",
-    "label_noise_kappa",
-    "layout_partition_advisor",
-    "orders_yoy_growth",
-    "sample_curriculum_order",
-    "sample_pack_waste",
-    "sample_token_budget_plan",
-    "split_balance_report",
-    "text_bigram_surprisal",
-    "text_char_entropy",
-    "text_head_coverage",
-    "text_rake_keywords",
-    "text_source_tvd_matrix",
-    "text_unigram_logprob",
-    "tokenizer_oov_census",
-    # --- (d) 12 r9 pads: dedup/similarity/sketch-heavy shapes first ---
-    "dedup_exact",
-    "dedup_minhash_calibration",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "similarity_topk",
-    "similarity_topk_ivf",
-    "similarity_topk_lsh",
-    "fuzzy_sorted_neighborhood",
-    "decontaminate_longest_run",
-    "multimodal_audio_vad",
-    "feature_pit_scd2",
-    # (join_asof displaced below the fold by the fourth r14
-    # registration — it joins the r15 plan's r9 list)
-    "join_asof",
-    # r13 WINDOW (slots 1-50 two rounds back).  Composition, per the written r13
-    # rotation plan below: (a) r12 had ZERO reds, so the r13 wave's
-    # new registrations go first, (b) behavior-changed queries
-    # (similarity_ivf_retrain_recall — zero-recall geometry-row anchor
-    # fix; the two pipeline entries — oracle SQL restructured with
-    # MATERIALIZED CTE hints), (c) ALL 25 names whose newest driver
-    # row is still r6 (zeroes the r6 staleness tail — every catalog
-    # name then holds a driver row >= r8), (d) pad to 50 with 20 of
-    # the 42 r8-only names, heavy dedup/similarity/decontaminate
-    # shapes and MATERIALIZED-touched oracles first.
-    #
-    # r14 ROTATION PLAN (write it while the context is fresh): (a)
-    # any r13 reds to the TOP, (b) the r14 wave + behavior-changed
-    # queries, (c) the 22 remaining r8-only names that did not fit
-    # this round's fold (agg_approx_distinct_ok, corpus_mix_census,
-    # diag_benford_firstdigit, diag_functional_deps, diag_ks_drift,
-    # diag_langid_confusion, diag_quality_deciles,
-    # doc_chunk_overlap_census, label_noise_kappa,
-    # layout_partition_advisor, orders_yoy_growth,
-    # sample_curriculum_order, sample_pack_waste,
-    # sample_token_budget_plan, split_balance_report,
-    # text_bigram_surprisal, text_char_entropy, text_head_coverage,
-    # text_rake_keywords, text_source_tvd_matrix,
-    # text_unigram_logprob, tokenizer_oov_census), (d) pad with the
-    # oldest r9 rows.
-    # --- (a) r13 new registrations ---
-    "text_quality_classifier",
-    "dedup_incremental_pairs",
-    "text_quality_calibration",
-    # --- (a') r13 behavior-changed ---
-    "similarity_ivf_retrain_recall",
-    "pipeline_corpus_clean",
-    "pipeline_curation_report",
-    # --- (b) ALL 25 r6-only names (zero the r6 staleness tail) ---
-    "agg_mad_outliers",
-    "diag_data_contract",
-    "diag_distribution_drift",
-    "diag_referential_integrity",
-    "doc_pack_chunks",
-    "events_bounce_rate",
-    "events_burstiness",
-    "events_changepoint",
-    "events_daily_anomalies",
-    "events_daily_trend",
-    "events_decayed_type_scores",
-    "events_json_props",
-    "events_pivot_daily",
-    "events_position_attribution",
-    "events_seq_pairs",
-    "events_stickiness",
-    "events_time_to_convert",
-    "events_user_accumulation",
-    "events_user_diversity",
-    "events_weekday_seasonality",
-    "text_boilerplate_shingles",
-    "text_hashing_features",
-    "text_posting_lists",
-    "text_rarity",
-    "text_top_terms_per_doc",
-    # --- (c) 20 r8 pads: heavy dedup/similarity/decontaminate shapes
-    # and MATERIALIZED-touched oracles first ---
-    "corpus_self_similarity",
-    "decontaminate_neardup",
-    "decontaminate_report",
-    "dedup_cluster_representatives",
-    "dedup_pair_provenance",
-    "dedup_savings_census",
-    "dedup_semantic_clusters",
-    "graph_cc_star",
-    "multimodal_ahash_pairs",
-    "similarity_ivf_cell_balance",
-    "similarity_ivfpq_recall",
-    "similarity_label_purity",
-    "similarity_range_search",
-    "text_dup_span_coverage",
-    "text_tf_cosine_pairs",
-    "text_winnow_fingerprints",
-    "embedding_dim_health",
-    "embedding_label_centroid_sim",
-    "join_interval_overlap",
-    # (join_asof_nearest displaced below the fold by the third r13
-    # registration — it joins the r14 plan's r8 list)
-    "join_asof_nearest",
-    # ------------------- below the driver's 50-row fold -------------------
-    # r12 window (slots 1-50 last round).  Composition, per the written r12
-    # rotation plan (VERDICT r11 "Next round" item 2): (a) r11 had
-    # ZERO reds, so the r12 wave's new registrations (X164-X166) plus
-    # the two behavior-changed queries (pipeline_corpus_clean /
-    # pipeline_curation_report — the near-dup stage now rides the
-    # shared full-corpus _verified_pairs substrate, oracles updated to
-    # the both-survivor restriction) go first, (b) ALL 22 names whose
-    # newest driver row is still r5 (zeroes the r5 staleness tail —
-    # every catalog name then has a driver row >= r6), (c) pad to 50
-    # with 23 of the 45 r6-only names, load-bearing TPC-H / CDC /
-    # retrieval names first.  Unregistered names are ignored, so
-    # planned-but-unlanded r12 queries can be listed before their
-    # module lands.
-    #
-    # r13 ROTATION PLAN (write it while the context is fresh): (a)
-    # any r12 reds to the TOP, (b) the r13 wave + behavior-changed
-    # queries, (c) the 22 remaining r6-only names that did not fit
-    # this round's fold (doc_pack_chunks, diag_distribution_drift,
-    # events_bounce_rate, events_burstiness, events_changepoint,
-    # events_daily_anomalies, events_daily_trend,
-    # events_decayed_type_scores, events_json_props,
-    # events_pivot_daily, events_position_attribution,
-    # events_seq_pairs, events_stickiness, events_time_to_convert,
-    # events_user_accumulation, events_user_diversity,
-    # events_weekday_seasonality, text_boilerplate_shingles,
-    # text_hashing_features, text_posting_lists, text_rarity,
-    # text_top_terms_per_doc), (d) pad with the oldest r8 rows.
-    # --- (a) r12 new registrations (X164-X168; X167/X168 landed
-    # mid-round, displacing the last two r6 pads below the fold) ---
-    "similarity_truncation_recall_ivf",
-    "similarity_ivf_drift_census",
-    "similarity_topk_ivfpq_residual",
-    "similarity_ivf_retrain_delta",
-    "events_funnel_exclusion",
-    "similarity_ivf_retrain_recall",
-    # --- (a') r12 behavior-changed (shared-substrate pipeline shave) ---
-    "pipeline_corpus_clean",
-    "pipeline_curation_report",
-    # --- (b) ALL 22 r5-only names (zero the r5 staleness tail) ---
-    "agg_kmv_distinct",
-    "agg_kmv_overlap",
-    "basket_brand_rules",
-    "basket_brand_triples",
-    "dedup_prefix_filter_pairs",
-    "diag_join_size_estimate",
-    "diag_key_skew",
-    "events_clamped_balance",
-    "events_session_window",
-    "events_trailing_7d_distinct",
-    "events_trailing_7d_distinct_approx",
-    "join_asof_tolerance",
-    "join_bloom_pruned",
-    "layout_shard_moves",
-    "layout_zorder_stats",
-    "multimodal_audio_features",
-    "nested_invoice_stats",
-    "pipeline_training_corpus",
-    "profile_orders_approx",
-    "sample_negative_pairs",
-    "text_bigram_novelty",
-    "text_retrieve_rerank",
-    # --- (c) 23 r6 pads, load-bearing TPC-H / CDC / retrieval first ---
-    "q21_suppliers_kept_waiting",
-    "merge_scd2_history",
-    "join_point_in_time",
-    "split_leakage_safe",
-    "text_bm25_topk",
-    "text_gopher_rules",
-    "similarity_topk_ivfpq_rerank",
-    "similarity_topk_ivfpq_dist",
-    "decontaminate_ngrams",
-    "dedup_lsh_quality",
-    "sample_epoch_shuffle",
-    "sample_stratified",
-    "set_customer_segments",
-    "join_above_avg",
-    "window_interval_coalesce",
-    "window_distribution_ranks",
-    "layout_zonemap_prune",
-    "replica_bucket_diff",
-    "multimodal_video_meta",
-    "agg_value_variance_exact",
-    "agg_mad_outliers",
-    "diag_referential_integrity",
-    "diag_data_contract",
-    # ------------------- below the driver's 50-row fold -------------------
-    # r11 window names (all green r11; kept high for visibility)
-    "corr_argmin_multiway",
-    "corr_having_global_share",
-    "corr_notin_countdistinct",
-    "similarity_topk_mips",  # corpus-norm tie-exactness fix (r11)
-    "text_bpe_encode",  # X161 encode census (r11; displaces the last r5 pad)
-    "similarity_truncation_recall",  # X162 matryoshka recall census (r11)
-    "sample_temperature_mix",  # X163 temperature mixture design (r11)
-    "text_bpe_merges",  # behavior-changed r11: merges memoized per session
-    # --- (b) ALL 30 r3-only names (zero the staleness backlog) ---
-    "multimodal_decode_features",
-    "embedding_quantize_sq8",
-    "embedding_pq_codes",
-    "agg_grouping_sets",
-    "agg_winsorized_revenue",
-    "basket_part_pairs",
-    "events_cohort_retention",
-    "events_daily_fill_forward",
-    "events_first_touch_attribution",
-    "events_funnel",
-    "events_interarrival",
-    "events_top_paths",
-    "events_trailing_7d",
-    "events_transition_matrix",
-    "fuzzy_name_match",
-    "join_skewed_salted",
-    "profile_orders",
-    "sample_mixture_rebalance",
-    "sample_per_source_topk",
-    "sample_weighted_by_length",
-    "similarity_topk_ivfpq",
-    "similarity_topk_pandas",
-    "text_doc_frequency",
-    "text_normalize",
-    "text_pii_mask",
-    "text_repetition",
-    "text_top_terms",
-    "unpivot_measures",
-    "window_equidepth_bins",
-    "window_share_of_total",
-    # --- (c) oldest remaining (r5) rows, load-bearing first (12) ---
-    "q2_min_cost_supplier",
-    "q11_important_stock",
-    "q16_supplier_part_counts",
-    "q12_shipmode_priority",
-    "q20_excess_stock_suppliers",
-    "graph_pagerank",
-    "graph_triangle_counts",
-    "graph_kcore",
-    "graph_label_propagation",
-    "graph_bfs_depth",
-    "events_heavy_hitters_cms",
-    "events_max_concurrency",
-    "join_asof_tolerance",
-    "join_bloom_pruned",
-    "text_retrieve_rerank",
-    # ------------------- below the driver's 50-row fold -------------------
-    # r10 window names (all green r10; kept high for visibility)
-    "corr_all_quantified",
-    "corr_not_in_null_trap",
-    "corr_scalar_select_twice",
-    "corr_nested_exists_scalar",
-    "pipeline_corpus_publish",
-    "decontaminate_span_emit",
-    "orders_rfm_migration",
-    "orders_rfm_segments",
-    "text_span_dedup_emit",
-    "multimodal_frame_sample",
-    "part_abc_classification",
-    "filter_negation_membership_routing",
-    "pivot_event_values",
-    "set_ops_custkeys",
-    "parts_brand_margin",
-    "cluster_assign",
-    "pipeline_corpus_clean",
-    "sample_split_assign",
-    "text_quality",
-    "text_token_counts",
-    "text_fingerprint",
-    "text_lang_id",
-    "events_sliding",
-    "events_sessionization",
-    "events_dedup_latest",
-    "sort_limit_topk",
-    "union_tagged_streams",
-    "invoice_line_assembly",
-    "filter_null_and_zero",
-    "q4_priority_returns",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q13_order_count_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q17_small_qty_revenue",
-    "q18_large_orders",
-    "q19_bracketed_revenue",
-    "q22_dormant_customers",
-    "dedup_containment",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "dedup_clusters",
-    "dedup_verified_pairs",
-    "dedup_cluster_sizes",
-    "merge_cdc_snapshot",
-    "snapshot_diff_summary",
-    # r9 window names (all green r9; kept high for visibility)
-    "orders_cohort_ltv",
-    "dedup_minhash_calibration",
-    "decontaminate_longest_run",
-    "agg_revenue_concentration",
-    "part_pareto_frontier",
-    "fuzzy_sorted_neighborhood",
-    "multimodal_audio_vad",
-    "daily_pnl_rollup",
-    "diag_quality_deciles_dist",
-    "text_zipf_slope",
-    "feature_pit_scd2",
-    "scan_project_filter",
-    "reconcile_matched",
-    "reconcile_unverified",
-    "window_segmentation",
-    "scalar_string_pack",
-    "scalar_date_pack",
-    "scalar_null_conditional_pack",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "similarity_topk",
-    "similarity_topk_lsh",
-    "similarity_topk_ivf",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "agg_rollup",
-    "agg_cube",
-    "agg_percentiles",
-    "agg_conditional_sums",
-    "agg_string_receipts",
-    "agg_balance_check",
-    "agg_all_balanced",
-    "join_asof",
-    "join_exactly_one",
-    "join_cardinality_violations",
-    "join_range_intransit",
-    "dim_join_enrich",
-    "window_rank_topk",
-    "window_lag_lead",
-    "window_moving_frame",
-    "events_tumbling",
-    # r7/r8 window names (all green r8; kept high for visibility)
-    "dedup_semantic_clusters",
-    "sample_token_budget_plan",
-    "graph_cc_star",
-    "multimodal_ahash_pairs",
-    "decontaminate_neardup",
-    "dedup_cluster_representatives",
-    "diag_ks_drift",
-    "decontaminate_report",
-    "diag_quality_deciles",
-    "text_dup_span_coverage",
-    "embedding_dim_health",
-    "dedup_pair_provenance",
-    "similarity_ivf_cell_balance",
-    "dedup_savings_census",
-    "corpus_mix_census",
-    "similarity_label_purity",
-    "text_head_coverage",
-    "sample_pack_waste",
-    "agg_approx_distinct_ok",
-    "text_unigram_logprob",
-    "text_winnow_fingerprints",
-    "corpus_self_similarity",
-    "split_balance_report",
-    "embedding_label_centroid_sim",
-    "sample_curriculum_order",
-    "text_tf_cosine_pairs",
-    "pipeline_curation_report",
-    "join_interval_overlap",
-    "label_noise_kappa",
-    "tokenizer_oov_census",
-    "text_char_entropy",
-    "similarity_ivfpq_recall",
-    "text_rake_keywords",
-    "doc_chunk_overlap_census",
-    "similarity_range_search",
-    "layout_partition_advisor",
-    "diag_langid_confusion",
-    "diag_benford_firstdigit",
-    "join_asof_nearest",
-    "diag_functional_deps",
-    "text_bigram_surprisal",
-    "orders_yoy_growth",
-    "text_source_tvd_matrix",
-    # r6 window names (all green r6; kept high for visibility)
-    "dedup_lsh_quality",
-    "window_interval_coalesce",
-    "events_bounce_rate",
-    "agg_mad_outliers",
-    "events_decayed_type_scores",
-    "layout_zonemap_prune",
-    "events_user_diversity",
-    "events_daily_trend",
-    "agg_value_variance_exact",
-    "replica_bucket_diff",
-    "text_hashing_features",
-    "text_posting_lists",
-    "diag_data_contract",
-    "set_customer_segments",
-    "window_distribution_ranks",
-    "join_above_avg",
-    "q21_suppliers_kept_waiting",
-    "decontaminate_ngrams",
-    "doc_pack_chunks",
-    "sample_stratified",
-    "split_leakage_safe",
-    "text_top_terms_per_doc",
-    "text_rarity",
-    "events_json_props",
-    "events_weekday_seasonality",
-    "events_time_to_convert",
-    "events_position_attribution",
-    "events_burstiness",
-    "events_stickiness",
-    "events_changepoint",
-    "similarity_topk_ivfpq_dist",
-    "similarity_topk_ivfpq_rerank",
-    "events_daily_anomalies",
-    "multimodal_video_meta",
-    "events_pivot_daily",
-    "events_user_accumulation",
-    "merge_scd2_history",
-    "diag_referential_integrity",
-    "join_point_in_time",
-    "text_gopher_rules",
-    "text_bm25_topk",
-    "events_seq_pairs",
-    "diag_distribution_drift",
-    "text_boilerplate_shingles",
-    "sample_epoch_shuffle",
-    # --- r4/r5 window (all green r4 or r5; kept high for regression
-    # visibility) ---
-    "events_clamped_balance",
-    "basket_brand_rules",
-    "dedup_prefix_filter_pairs",
-    "basket_brand_triples",
-    "layout_shard_moves",
-    "pipeline_training_corpus",
-    "agg_kmv_overlap",
-    "diag_join_size_estimate",
-    "nested_invoice_stats",
-    "agg_kmv_distinct",
-    "events_session_window",
-    "events_trailing_7d_distinct_approx",
-    "sample_negative_pairs",
-    "events_trailing_7d_distinct",
-    "diag_key_skew",
-    "layout_zorder_stats",
-    "text_bigram_novelty",
-    "multimodal_audio_features",
-    "profile_orders_approx",
-    # --- changed in round 4 (merge.py presence-marker rework;
-    # WindowExec fix) ---
-    # --- round-3 additions ---
-    # --- heavier / sketch queries worth keeping under the driver's eye ---
 ]
 
 
@@ -649,6 +80,13 @@ def _window_ordered(d: dict) -> dict:
     """Priority names first (in listed order), then registration order."""
     head = {k: d[k] for k in _WINDOW_PRIORITY if k in d}
     return head | {k: v for k, v in d.items() if k not in head}
+
+
+def oracle_sf_dir() -> str:
+    """The data directory that data-dependent oracle SQL is generated
+    from (centroids, corpus statistics, trained weights).  Read on every
+    call: a harness may set the variable after importing this module."""
+    return os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
 def register(

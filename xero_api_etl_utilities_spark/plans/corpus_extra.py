@@ -44,7 +44,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.functions.crosshash import h32, h32_sql
-from xero_api_etl_utilities_spark.plans.catalog import register
+from xero_api_etl_utilities_spark.operators.materialize import session_memo
+from xero_api_etl_utilities_spark.plans.catalog import oracle_sf_dir, register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
 
@@ -711,7 +712,7 @@ def _semdedup_oracle() -> str:
     )
     from xero_api_etl_utilities_spark.plans.sketch_oracles import _vec_lit
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = oracle_sf_dir()
     cents = train_centroids_from_parquet(
         os.path.join(sf_dir, "embeddings.parquet"), k=16, iters=4, sample=1000
     )
@@ -1365,23 +1366,17 @@ FROM cells ORDER BY lang, source
 
 
 # The 80-probe / k=10 brute-force shortlist feeds TWO catalog
-# consumers (X116 purity and X129 kappa) — memoized per
-# (SparkContext, sf_dir) like the dedup substrate, so the second
-# consumer's marginal cost is a broadcast join, not a second exact
-# search (~5 s at sf0.1).
-_KNN_SHORTLIST_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# consumers (X116 purity and X129 kappa) — built once per session, so
+# the second consumer's marginal cost is a broadcast join, not a
+# second exact search (~5 s at sf0.1).
+@session_memo("knn_shortlist")
 def probe_knn_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _KNN_SHORTLIST_CACHE:
-        from xero_api_etl_utilities_spark.operators import similarity as sim
+    from xero_api_etl_utilities_spark.operators import similarity as sim
 
-        emb = load_table(spark, sf_dir, "embeddings")
-        queries = emb.filter(F.col("vec_id") < 80)
-        nn = sim.topk_bruteforce(queries, emb, k=10, max_queries=100)
-        _KNN_SHORTLIST_CACHE[key] = nn.localCheckpoint()
-    return _KNN_SHORTLIST_CACHE[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 80)
+    nn = sim.topk_bruteforce(queries, emb, k=10, max_queries=100)
+    return nn.localCheckpoint()
 
 
 def similarity_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:

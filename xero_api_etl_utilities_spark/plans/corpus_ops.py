@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.operators import packing as pk
+from xero_api_etl_utilities_spark.operators.materialize import session_memo
 from xero_api_etl_utilities_spark.operators import similarity as sim
 from xero_api_etl_utilities_spark.operators import textnorm as tn
 from xero_api_etl_utilities_spark.operators import textstats as tx
@@ -275,87 +276,77 @@ WHERE (lang = 'en' AND {_strat_bucket_sql(2)} < 1)
 
 # The candidates → exact-verify subtree is the expensive upstream of
 # BOTH dedup_verified_pairs and dedup_clusters (~10 s each at sf0.1).
-# They are two views of ONE pipeline stage, so compute it once per
-# (SparkContext, sf_dir) and hand both consumers the same materialized
-# frame — exactly what a production DAG does with a shared stage
-# (VERDICT r2 item 5: paying the upstream twice bought nothing).
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CANDS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_SIGS_CACHE: dict[tuple[str, str], DataFrame] = {}
+# They are two views of ONE pipeline stage, so it is built once per
+# session and both consumers get the same materialized frame — what a
+# production DAG does with a shared stage.
 
 
+@session_memo("dedup_sigs")
 def minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-corpus MinHash signature frame (64 hashes, unigram
     shingles — the production banding params), materialized once per
-    (SparkContext, sf_dir).
+    session.
 
     The shingle-explode + 64-way min aggregate is the single most
-    expensive sketch pass, and before r11 it re-ran up to four times
-    per session (candidate build, the cleaning pipeline's survivor
-    signatures, the band-census query, the estimator-calibration
-    query — VERDICT r10 item 5).  Signatures are pure per-document
-    functions of the text, so every consumer derives from THIS frame:
-    subset runs are semi-joins/filters of it, never recomputations.
+    expensive sketch pass, and four consumers need it (candidate
+    build, the cleaning pipeline's survivor signatures, the
+    band-census query, the estimator-calibration query).  Signatures
+    are pure per-document functions of the text, so every consumer
+    derives from THIS frame: subset runs are semi-joins/filters of it,
+    never recomputations.
 
     100 TB shape: ~520 B/doc (64 × 8 B mins + the id) — the standard
     materialized sketch column a production corpus store keeps
     alongside the text; one corpus scan builds it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIGS_CACHE:
-        from xero_api_etl_utilities_spark.operators import dedup as dd
+    from xero_api_etl_utilities_spark.operators import dedup as dd
 
-        docs = load_table(spark, sf_dir, "documents")
-        # Negative result (r15): repartitioning the docs scan before
-        # the tokenize+shingle+64-min pass measured SLOWER cold (the
-        # extra exchange stage costs more to JIT+run than the
-        # single-row-group scan task saves at this corpus size: 8.0 →
-        # 10.7 s cold A/B) — left on the scan's natural partitioning.
-        sigs = dd.minhash_signatures(docs, "doc_id", "text", n=1, num_hashes=64)
-        _SIGS_CACHE[key] = sigs.localCheckpoint()
-    return _SIGS_CACHE[key]
+    docs = load_table(spark, sf_dir, "documents")
+    # Repartitioning the docs scan before the tokenize+shingle+64-min
+    # pass measured SLOWER cold (the extra exchange stage costs more to
+    # JIT+run than the single-row-group scan task saves at this corpus
+    # size: 8.0 → 10.7 s cold A/B), so it stays on the scan's natural
+    # partitioning.
+    sigs = dd.minhash_signatures(docs, "doc_id", "text", n=1, num_hashes=64)
+    return sigs.localCheckpoint()
 
 
+@session_memo("dedup_candidates")
 def lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The recall-tuned MinHash-LSH candidate set, materialized once
-    per (SparkContext, sf_dir): the shared upstream of BOTH verify
-    rules (jaccard for dedup_verified_pairs/dedup_clusters,
-    containment for dedup_containment)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CANDS_CACHE:
-        from xero_api_etl_utilities_spark.operators import dedup as dd
+    per session: the shared upstream of BOTH verify rules (jaccard for
+    dedup_verified_pairs/dedup_clusters, containment for
+    dedup_containment)."""
+    from xero_api_etl_utilities_spark.operators import dedup as dd
 
-        cands = dd.minhash_lsh_candidates(
-            minhash_sigs(spark, sf_dir), bands=16, rows_per_band=4, max_bucket=500
-        )
-        # The operator's pair-keyed dedup already lands the frame at
-        # compute width (see minhash_lsh_candidates), so the memo
-        # checkpoints it as-is and every CPU-bound consumer (exact
-        # verify, calibration's sampled-intersect census) inherits the
-        # parallelism.
-        _CANDS_CACHE[key] = cands.localCheckpoint()
-    return _CANDS_CACHE[key]
+    cands = dd.minhash_lsh_candidates(
+        minhash_sigs(spark, sf_dir), bands=16, rows_per_band=4, max_bucket=500
+    )
+    # The operator's pair-keyed dedup already lands the frame at
+    # compute width (see minhash_lsh_candidates), so the memo
+    # checkpoints it as-is and every CPU-bound consumer (exact
+    # verify, calibration's sampled-intersect census) inherits the
+    # parallelism.
+    return cands.localCheckpoint()
 
 
+@session_memo("dedup_substrate")
 def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PAIRS_CACHE:
-        from xero_api_etl_utilities_spark.operators import dedup as dd
+    from xero_api_etl_utilities_spark.operators import dedup as dd
 
-        docs = load_table(spark, sf_dir, "documents")
-        pairs = dd.jaccard_verify(
-            lsh_candidates(spark, sf_dir),
-            docs,
-            "doc_id",
-            "text",
-            n=1,
-            parallelism=spark.sparkContext.defaultParallelism,
-            # the memoized candidate checkpoint already sits at compute
-            # width (pair-keyed exchange in minhash_lsh_candidates) —
-            # skip the redundant re-exchange + re-checkpoint (r16)
-            cands_at_width=True,
-        )
-        _PAIRS_CACHE[key] = pairs.localCheckpoint()
-    return _PAIRS_CACHE[key]
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = dd.jaccard_verify(
+        lsh_candidates(spark, sf_dir),
+        docs,
+        "doc_id",
+        "text",
+        n=1,
+        parallelism=spark.sparkContext.defaultParallelism,
+        # the memoized candidate checkpoint already sits at compute
+        # width (pair-keyed exchange in minhash_lsh_candidates) —
+        # skip the redundant re-exchange + re-checkpoint
+        cands_at_width=True,
+    )
+    return pairs.localCheckpoint()
 
 
 def dedup_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -377,18 +368,13 @@ def _verified_pairs_oracle() -> str:
 register("dedup_verified_pairs", dedup_verified_pairs, _verified_pairs_oracle)
 
 
-_CLUSTERS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo("doc_clusters")
 def doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) for every document, materialized once per
-    (SparkContext, sf_dir): connected components iterate driver-side
-    jobs at BUILD time, so the two consumers (dedup_clusters, the
-    cluster-size histogram) must share one run, not re-propagate."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CLUSTERS_CACHE:
-        _CLUSTERS_CACHE[key] = _build_clusters(spark, sf_dir).localCheckpoint()
-    return _CLUSTERS_CACHE[key]
+    session: connected components iterate driver-side jobs at BUILD
+    time, so the two consumers (dedup_clusters, the cluster-size
+    histogram) must share one run, not re-propagate."""
+    return _build_clusters(spark, sf_dir).localCheckpoint()
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

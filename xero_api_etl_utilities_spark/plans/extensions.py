@@ -21,10 +21,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.operators import dedup as dd
+from xero_api_etl_utilities_spark.operators.materialize import session_memo
 from xero_api_etl_utilities_spark.operators import similarity as sim
 from xero_api_etl_utilities_spark.operators import textstats as tx
 from xero_api_etl_utilities_spark.plans import sketch_oracles as sk
-from xero_api_etl_utilities_spark.plans.catalog import register
+from xero_api_etl_utilities_spark.plans.catalog import oracle_sf_dir, register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
 
@@ -499,64 +500,58 @@ def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The quality-gated survivor frame + verified near-dup id set feed TWO
 # catalog consumers (the cleaned corpus and the X128 funnel report) —
-# memoized per (SparkContext, sf_dir) like the corpus_ops substrate so
-# the report's marginal cost is one aggregate, not a second full
-# LSH+verify run.
-_PIPE_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+# built once per session so the report's marginal cost is one
+# aggregate, not a second full LSH+verify run.
+@session_memo("pipeline_stages")
 def _pipeline_stages(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PIPE_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        flags = tx.quality_flags(F.col("text"))
-        q = docs.filter(flags["len_ok"] & flags["punct_ok"] & flags["stopword_ok"])
-        surv_ids = (
-            q.select("doc_id", F.sha2(F.col("text"), 256).alias("_h"))
-            .groupBy("_h")
-            .agg(F.min("doc_id").alias("doc_id"))
-            .select("doc_id")
-        )
-        # surv feeds two consumers (the pair restriction and the final
-        # anti-join): materialize once instead of re-running the
-        # quality gate + digest dedup per branch
-        surv = q.join(surv_ids, "doc_id").localCheckpoint()
-        # Near-dup pruning = the FULL-CORPUS verified-pair substrate
-        # (corpus_ops._verified_pairs — LSH candidates + exact-Jaccard
-        # verify, built ONCE per session for the whole dedup family)
-        # restricted to pairs whose both ends survived the quality
-        # gate + exact dedup.  Before r12 the pipeline re-ran its own
-        # candidates+verify over survivor signatures — a second full
-        # LSH+verify per session for a pair set that differs from the
-        # substrate's only through the stop-bucket cap (a full-corpus
-        # bucket over the cap whose survivor subset fits under it),
-        # which is the better rule anyway: the cap exists to bound
-        # degenerate buckets, and a bucket degenerate pre-dedup stays
-        # excluded rather than resurfacing post-dedup.  The oracle
-        # (sketch_oracles.corpus_clean_oracle) replays this exact
-        # composition, so the semantics stay hash-pinned.
-        from xero_api_etl_utilities_spark.plans.corpus_ops import (
-            _verified_pairs,
-        )
+    docs = load_table(spark, sf_dir, "documents")
+    flags = tx.quality_flags(F.col("text"))
+    q = docs.filter(flags["len_ok"] & flags["punct_ok"] & flags["stopword_ok"])
+    surv_ids = (
+        q.select("doc_id", F.sha2(F.col("text"), 256).alias("_h"))
+        .groupBy("_h")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+    )
+    # surv feeds two consumers (the pair restriction and the final
+    # anti-join): materialize once instead of re-running the
+    # quality gate + digest dedup per branch
+    surv = q.join(surv_ids, "doc_id").localCheckpoint()
+    # Near-dup pruning = the FULL-CORPUS verified-pair substrate
+    # (corpus_ops._verified_pairs — LSH candidates + exact-Jaccard
+    # verify, built ONCE per session for the whole dedup family)
+    # restricted to pairs whose both ends survived the quality
+    # gate + exact dedup.  Re-running candidates+verify over survivor
+    # signatures would be a second full LSH+verify per session for a
+    # pair set that differs from the substrate's only through the
+    # stop-bucket cap (a full-corpus bucket over the cap whose
+    # survivor subset fits under it), and the substrate's is the
+    # better rule anyway: the cap exists to bound degenerate buckets,
+    # and a bucket degenerate pre-dedup stays excluded rather than
+    # resurfacing post-dedup.  The oracle
+    # (sketch_oracles.corpus_clean_oracle) replays this exact
+    # composition, so the semantics stay hash-pinned.
+    from xero_api_etl_utilities_spark.plans.corpus_ops import (
+        _verified_pairs,
+    )
 
-        pairs = (
-            _verified_pairs(spark, sf_dir)
-            .join(
-                surv.select(F.col("doc_id").alias("doc_a")),
-                "doc_a",
-                "left_semi",
-            )
-            .join(
-                surv.select(F.col("doc_id").alias("doc_b")),
-                "doc_b",
-                "left_semi",
-            )
+    pairs = (
+        _verified_pairs(spark, sf_dir)
+        .join(
+            surv.select(F.col("doc_id").alias("doc_a")),
+            "doc_a",
+            "left_semi",
         )
-        near_dups = (
-            pairs.select(F.col("doc_b").alias("doc_id")).distinct().localCheckpoint()
+        .join(
+            surv.select(F.col("doc_id").alias("doc_b")),
+            "doc_b",
+            "left_semi",
         )
-        _PIPE_CACHE[key] = (surv, near_dups)
-    return _PIPE_CACHE[key]
+    )
+    near_dups = (
+        pairs.select(F.col("doc_b").alias("doc_id")).distinct().localCheckpoint()
+    )
+    return surv, near_dups
 
 
 register("pipeline_corpus_clean", pipeline_corpus_clean, sk.corpus_clean_oracle)
@@ -770,9 +765,7 @@ def _ivf_cell_balance_oracle(k_cells: int = 16) -> str:
     )
     from xero_api_etl_utilities_spark.plans.sketch_oracles import _vec_lit
 
-    sf_dir = _os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = oracle_sf_dir()
     cents = train_centroids_from_parquet(
         _os.path.join(sf_dir, "embeddings.parquet"),
         k=k_cells,

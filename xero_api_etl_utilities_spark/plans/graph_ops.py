@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.functions.crosshash import h32_sql
 from xero_api_etl_utilities_spark.operators.graph import triangles
+from xero_api_etl_utilities_spark.operators.materialize import session_memo
 from xero_api_etl_utilities_spark.operators.sketches import cms_build, cms_estimate
 from xero_api_etl_utilities_spark.plans.catalog import register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
@@ -80,20 +81,11 @@ def _co_edges(
 # The co-occurrence edge list is the shared upstream of SIX graph
 # queries (triangles, pagerank, k-core, LPA, BFS census, star-CC) —
 # a fact-sized distinct + self-join that measured ~3 s warm at sf0.1
-# PER REBUILD. Memoize it once per (SparkContext, sf_dir) exactly like
-# the dedup candidates->verify substrate (corpus_ops._PAIRS_CACHE):
-# consumers pay marginal cost, and bench times the build as its own
-# `graph_edges_build` entry before the first consumer so the shared
-# cost can't hide inside whichever query runs first ("no silent
-# caps" — the r4 substrate-attribution precedent).
-_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# PER REBUILD, so it is built once per session and the consumers pay
+# marginal cost.
+@session_memo("graph_edges")
 def co_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EDGES_CACHE:
-        _EDGES_CACHE[key] = _co_edges(spark, sf_dir).localCheckpoint()
-    return _EDGES_CACHE[key]
+    return _co_edges(spark, sf_dir).localCheckpoint()
 
 
 def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,7 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.functions.crosshash import h32, h32_sql, py_h32
-from xero_api_etl_utilities_spark.plans.catalog import register
+from xero_api_etl_utilities_spark.operators.materialize import session_memo
+from xero_api_etl_utilities_spark.plans.catalog import oracle_sf_dir, register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
 
@@ -619,8 +620,6 @@ def dedup_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_quality_oracle() -> str:
-    import os
-
     import duckdb
 
     from xero_api_etl_utilities_spark.plans.sketch_oracles import (
@@ -629,7 +628,7 @@ def _lsh_quality_oracle() -> str:
 
     # same capped slice as the query: modulus from the parquet the
     # driver's gate runs against (the IVF-centroid oracle pattern)
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = oracle_sf_dir()
     n_docs = duckdb.sql(
         f"SELECT count(*) FROM read_parquet('{sf_dir}/documents.parquet')"
     ).fetchone()[0]
@@ -1572,20 +1571,14 @@ FROM summ ORDER BY layout
 _BPE_ROUNDS = 4
 
 # trained merges feed TWO catalog consumers (the merge table X84 and
-# the encode census X161) — memoize per (SparkContext, sf_dir) so the
-# driver-looped training runs once per session (the corpus_ops
-# substrate pattern)
-_MERGES_CACHE: dict[tuple[str, str], list[tuple[int, str, str, int]]] = {}
-
-
+# the encode census X161), so the driver-looped training runs once per
+# session
+@session_memo("bpe_merges")
 def _trained_merges(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, int]]:
     from xero_api_etl_utilities_spark.operators.bpe import bpe_merges
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MERGES_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        _MERGES_CACHE[key] = bpe_merges(docs, rounds=_BPE_ROUNDS)
-    return _MERGES_CACHE[key]
+    docs = load_table(spark, sf_dir, "documents")
+    return bpe_merges(docs, rounds=_BPE_ROUNDS)
 
 
 def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xero_api_etl_utilities_spark.plans.catalog import register
+from xero_api_etl_utilities_spark.plans.catalog import oracle_sf_dir, register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
 BM25_TERMS = ["spark", "window", "merge"]
@@ -114,7 +114,7 @@ def _bm25_score_exprs() -> tuple[str, str]:
 
     import duckdb
 
-    sf_dir = _os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = oracle_sf_dir()
     path = _os.path.join(sf_dir, "documents.parquet")
     con = duckdb.connect()
     df_cols = ", ".join(

@@ -29,6 +29,7 @@ import os
 from xero_api_etl_utilities_spark.functions.crosshash import h32_sql
 from xero_api_etl_utilities_spark.operators.dedup import _P, minhash_coeffs
 from xero_api_etl_utilities_spark.operators.similarity import hyperplanes
+from xero_api_etl_utilities_spark.plans.catalog import oracle_sf_dir
 
 _I64_MIN = "(-9223372036854775807 - 1)"
 
@@ -337,14 +338,14 @@ FROM ranked WHERE rank <= {k}
 def topk_ivf_oracle(k: int = 5, nprobe: int = 4) -> str:
     """Twin of similarity_topk_ivf. Centroids are re-trained by the
     Sparkless twin (pyarrow read ordered by vec_id + the same numpy
-    k-means core) from the parquet the driver's gate runs against —
-    $SPARK_GRAFT_ORACLE_SF_DIR, defaulting to the contract's sf0.01 —
-    so the inlined literals are bit-identical to the plan's. Cell
+    k-means core) from the parquet the driver's gate runs against
+    (:func:`catalog.oracle_sf_dir`), so the inlined literals are
+    bit-identical to the plan's. Cell
     choice mirrors reverse(array_sort(struct(d, cell))) including the
     (unreachable, margin-checked) tie-break via struct list_sort."""
     from xero_api_etl_utilities_spark.operators.ivf import train_centroids_from_parquet
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = oracle_sf_dir()
     cents = train_centroids_from_parquet(
         os.path.join(sf_dir, "embeddings.parquet"), k=16, iters=4, sample=1000
     )
@@ -385,7 +386,7 @@ def range_search_ivf_oracle(tau: float = 0.30, nprobe: int = 4) -> str:
     — tau margin measured >= 2.2e-5 on every test sf."""
     from xero_api_etl_utilities_spark.operators.ivf import train_centroids_from_parquet
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = oracle_sf_dir()
     cents = train_centroids_from_parquet(
         os.path.join(sf_dir, "embeddings.parquet"), k=16, iters=4, sample=1000
     )
@@ -417,7 +418,7 @@ def cluster_assign_oracle() -> str:
     bit-identical centroid literals as :func:`topk_ivf_oracle`."""
     from xero_api_etl_utilities_spark.operators.ivf import train_centroids_from_parquet
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = oracle_sf_dir()
     cents = train_centroids_from_parquet(
         os.path.join(sf_dir, "embeddings.parquet"), k=16, iters=4, sample=1000
     )

@@ -30,7 +30,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.functions.crosshash import h32_sql
-from xero_api_etl_utilities_spark.plans.catalog import register
+from xero_api_etl_utilities_spark.operators.materialize import session_memo
+from xero_api_etl_utilities_spark.plans.catalog import oracle_sf_dir, register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
 
@@ -661,13 +662,10 @@ GROUP BY lang
 )
 
 
-# the PQ index (codebooks + encoded corpus) materializes ONCE per
-# (SparkContext, sf_dir) — the same shared-upstream pattern as
-# corpus_ops.lsh_candidates: one encode feeds both the code-dump query
-# and the ADC search.
-_PQ_CACHE: dict[tuple[str, str], tuple] = {}
-
-
+# the PQ index (codebooks + encoded corpus) materializes once per
+# session: one encode feeds both the code-dump query and the ADC
+# search.
+@session_memo("pq_index")
 def _pq_index(spark: SparkSession, sf_dir: str):
     import os as _os
 
@@ -678,18 +676,15 @@ def _pq_index(spark: SparkSession, sf_dir: str):
 
     from xero_api_etl_utilities_spark.operators import ivf
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        cents = ivf.train_centroids(emb, k=16, iters=4, sample=1000)
-        books = train_pq_codebooks_from_parquet(
-            _os.path.join(sf_dir, "embeddings.parquet")
-        )
-        cells = ivf.assign_cells(emb, cents, "embedding", 1).select("vec_id", "cell")
-        codes = pq_codes(emb, "vec_id", "embedding", books)
-        index = cells.join(codes, "vec_id").localCheckpoint()
-        _PQ_CACHE[key] = (cents, books, index)
-    return _PQ_CACHE[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = ivf.train_centroids(emb, k=16, iters=4, sample=1000)
+    books = train_pq_codebooks_from_parquet(
+        _os.path.join(sf_dir, "embeddings.parquet")
+    )
+    cells = ivf.assign_cells(emb, cents, "embedding", 1).select("vec_id", "cell")
+    codes = pq_codes(emb, "vec_id", "embedding", books)
+    index = cells.join(codes, "vec_id").localCheckpoint()
+    return cents, books, index
 
 
 def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -720,7 +715,7 @@ def _pq_oracle() -> str:
         train_pq_codebooks_from_parquet,
     )
 
-    sf_dir = _os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = oracle_sf_dir()
     books = train_pq_codebooks_from_parquet(
         _os.path.join(sf_dir, "embeddings.parquet")
     )
@@ -794,7 +789,7 @@ def _ivfpq_oracle_sql(rerank: int | None) -> str:
     )
     from xero_api_etl_utilities_spark.plans.sketch_oracles import _vec_lit
 
-    sf_dir = _os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = oracle_sf_dir()
     cents = train_centroids_from_parquet(
         _os.path.join(sf_dir, "embeddings.parquet"), k=16, iters=4, sample=1000
     )

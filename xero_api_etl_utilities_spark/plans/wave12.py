@@ -37,16 +37,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xero_api_etl_utilities_spark.plans.catalog import register
+from xero_api_etl_utilities_spark.operators.materialize import session_memo
+from xero_api_etl_utilities_spark.plans.catalog import oracle_sf_dir, register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
 _K_CELLS = 16
 _IVF_ITERS = 4
 _IVF_SAMPLE = 1000
-
-
-def _oracle_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
 # ---------------------------------------------------------------------------
@@ -161,7 +158,7 @@ def similarity_truncation_recall_ivf(
 def _truncation_recall_ivf_oracle() -> str:
     from xero_api_etl_utilities_spark.plans.sketch_oracles import _vec_lit
 
-    sf_dir = _oracle_sf_dir()
+    sf_dir = oracle_sf_dir()
 
     def ivf_at(d: int) -> str:
         cents = _trunc_cents_from_parquet(sf_dir, d)
@@ -312,7 +309,7 @@ def _drift_census_oracle() -> str:
     from xero_api_etl_utilities_spark.operators.ivf import _kmeans_unit
     from xero_api_etl_utilities_spark.plans.sketch_oracles import _vec_lit
 
-    sf_dir = _oracle_sf_dir()
+    sf_dir = oracle_sf_dir()
     tb = pq.read_table(
         os.path.join(sf_dir, "embeddings.parquet"),
         columns=["vec_id", "embedding"],
@@ -365,30 +362,25 @@ register(
 # X166: residual-encoded IVF-PQ (IVFADC) search
 # ---------------------------------------------------------------------------
 
-# the residual index materializes once per (SparkContext, sf_dir) —
-# the _pq_index pattern: one encode feeds every search this session
-_RPQ_CACHE: dict[tuple[str, str], tuple] = {}
-
-
+# the residual index materializes once per session: one encode feeds
+# every search
+@session_memo("rpq_index")
 def _rpq_index(spark: SparkSession, sf_dir: str):
     from xero_api_etl_utilities_spark.operators import ivf
     from xero_api_etl_utilities_spark.operators.quantize import (
         train_pq_codebooks_from_parquet,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _RPQ_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        cents = ivf.train_centroids(
-            emb, k=_K_CELLS, iters=_IVF_ITERS, sample=_IVF_SAMPLE
-        )
-        books = train_pq_codebooks_from_parquet(
-            os.path.join(sf_dir, "embeddings.parquet"),
-            residual_centroids=cents,
-        )
-        index = ivf.encode_ivfpq_residual(emb, cents, books).localCheckpoint()
-        _RPQ_CACHE[key] = (cents, books, index)
-    return _RPQ_CACHE[key]
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = ivf.train_centroids(
+        emb, k=_K_CELLS, iters=_IVF_ITERS, sample=_IVF_SAMPLE
+    )
+    books = train_pq_codebooks_from_parquet(
+        os.path.join(sf_dir, "embeddings.parquet"),
+        residual_centroids=cents,
+    )
+    index = ivf.encode_ivfpq_residual(emb, cents, books).localCheckpoint()
+    return cents, books, index
 
 
 def similarity_topk_ivfpq_residual(
@@ -441,7 +433,7 @@ def _ivfpq_residual_oracle() -> str:
     )
     from xero_api_etl_utilities_spark.plans.sketch_oracles import _vec_lit
 
-    sf_dir = _oracle_sf_dir()
+    sf_dir = oracle_sf_dir()
     cents = train_centroids_from_parquet(
         os.path.join(sf_dir, "embeddings.parquet"),
         k=_K_CELLS,
@@ -640,7 +632,7 @@ def similarity_ivf_retrain_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _retrain_delta_oracle() -> str:
     from xero_api_etl_utilities_spark.plans.sketch_oracles import _vec_lit
 
-    sf_dir = _oracle_sf_dir()
+    sf_dir = oracle_sf_dir()
 
     def cell1(cents) -> str:
         structs = ", ".join(
@@ -904,7 +896,7 @@ def similarity_ivf_retrain_recall(spark: SparkSession, sf_dir: str) -> DataFrame
 def _retrain_recall_oracle() -> str:
     from xero_api_etl_utilities_spark.plans.sketch_oracles import _vec_lit
 
-    sf_dir = _oracle_sf_dir()
+    sf_dir = oracle_sf_dir()
 
     def ivf_for(tag: str, cents) -> str:
         structs = ", ".join(

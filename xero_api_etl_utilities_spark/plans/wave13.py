@@ -26,19 +26,13 @@ requires (VERDICT r12 items 6 and 7).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.functions.crosshash import h32, h32_sql
 from xero_api_etl_utilities_spark.operators.litfold import lit_longs
-from xero_api_etl_utilities_spark.plans.catalog import register
+from xero_api_etl_utilities_spark.plans.catalog import oracle_sf_dir, register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
-
-
-def _oracle_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
 # ---------------------------------------------------------------------------
@@ -114,7 +108,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _quality_classifier_oracle() -> str:
     from xero_api_etl_utilities_spark.operators import quality_model as qm
 
-    weights = qm.weights_from_parquet(_oracle_sf_dir())
+    weights = qm.weights_from_parquet(oracle_sf_dir())
     wlist = "[" + ", ".join(str(int(w)) for w in weights) + "]"
     fi = h32_sql("'f:' || t")
     si = h32_sql("'s:' || t")
@@ -381,7 +375,7 @@ def text_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _quality_calibration_oracle() -> str:
     from xero_api_etl_utilities_spark.operators import quality_model as qm
 
-    weights = qm.weights_from_parquet(_oracle_sf_dir())
+    weights = qm.weights_from_parquet(oracle_sf_dir())
     wlist = "[" + ", ".join(str(int(w)) for w in weights) + "]"
     fi = h32_sql("'f:' || t")
     si = h32_sql("'s:' || t")

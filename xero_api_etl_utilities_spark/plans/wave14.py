@@ -42,7 +42,8 @@ from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.functions.crosshash import h32, h32_sql
 from xero_api_etl_utilities_spark.operators.litfold import lit_longs
-from xero_api_etl_utilities_spark.plans.catalog import register
+from xero_api_etl_utilities_spark.operators.materialize import session_memo
+from xero_api_etl_utilities_spark.plans.catalog import oracle_sf_dir, register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
 _BANDS = 16
@@ -51,15 +52,9 @@ _MAX_BUCKET = 500
 _HASH_P = 1_000_000_007
 
 
-def _oracle_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-
-
 # ---------------------------------------------------------------------------
 # X174: the persisted band catalog (write once, dedup against the disk)
 # ---------------------------------------------------------------------------
-
-_CATALOG_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _catalog_dir(sf_dir: str, run_suffix: str) -> str:
@@ -73,6 +68,7 @@ def _catalog_dir(sf_dir: str, run_suffix: str) -> str:
     )
 
 
+@session_memo("band_catalog")
 def publish_band_catalog(spark: SparkSession, sf_dir: str) -> str:
     """Write the corpus dedup CATALOG to disk, once per session: the
     (doc, band, bh) band rows of the EXISTING corpus (doc_id % 5 != 4,
@@ -89,32 +85,29 @@ def publish_band_catalog(spark: SparkSession, sf_dir: str) -> str:
     bucket join a directory-pruned read; a production store would
     additionally bucket each partition by ``bh`` so the probe join
     arrives pre-shuffled (sources/writer.write_bucketed_table)."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in _CATALOG_CACHE:
-        from xero_api_etl_utilities_spark.operators.dedup import band_rows
-        from xero_api_etl_utilities_spark.plans.corpus_ops import minhash_sigs
-        from xero_api_etl_utilities_spark.plans.wave10 import _prune_stale_runs
-        from xero_api_etl_utilities_spark.sources.writer import write_partitioned
+    from xero_api_etl_utilities_spark.operators.dedup import band_rows
+    from xero_api_etl_utilities_spark.plans.corpus_ops import minhash_sigs
+    from xero_api_etl_utilities_spark.plans.wave10 import _prune_stale_runs
+    from xero_api_etl_utilities_spark.sources.writer import write_partitioned
 
-        path = _catalog_dir(sf_dir, spark.sparkContext.applicationId)
-        _prune_stale_runs(path, sf_dir)
-        sigs = minhash_sigs(spark, sf_dir)
-        corpus_bands = band_rows(
-            sigs.filter(F.col("doc") % 5 != 4), bands=_BANDS, rows_per_band=_ROWS
-        )
-        new_bands = band_rows(
-            sigs.filter(F.col("doc") % 5 == 4), bands=_BANDS, rows_per_band=_ROWS
-        )
-        write_partitioned(corpus_bands, os.path.join(path, "corpus"), ["band"])
-        write_partitioned(new_bands, os.path.join(path, "arrivals"), ["band"])
-        (
-            corpus_bands.groupBy("band", "bh")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_corpus"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "census"))
-        )
-        _CATALOG_CACHE[key] = path
-    return _CATALOG_CACHE[key]
+    path = _catalog_dir(sf_dir, spark.sparkContext.applicationId)
+    _prune_stale_runs(path, sf_dir)
+    sigs = minhash_sigs(spark, sf_dir)
+    corpus_bands = band_rows(
+        sigs.filter(F.col("doc") % 5 != 4), bands=_BANDS, rows_per_band=_ROWS
+    )
+    new_bands = band_rows(
+        sigs.filter(F.col("doc") % 5 == 4), bands=_BANDS, rows_per_band=_ROWS
+    )
+    write_partitioned(corpus_bands, os.path.join(path, "corpus"), ["band"])
+    write_partitioned(new_bands, os.path.join(path, "arrivals"), ["band"])
+    (
+        corpus_bands.groupBy("band", "bh")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_corpus"))
+        .write.mode("overwrite")
+        .parquet(os.path.join(path, "census"))
+    )
+    return path
 
 
 def incremental_cands_from_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -361,8 +354,8 @@ def drift_counted_ctes() -> str:
     X180 swap-gate oracle."""
     from xero_api_etl_utilities_spark.operators import quality_model as qm
 
-    w_a = qm.weights_from_parquet_slice(_oracle_sf_dir(), *_EPOCH_A)
-    w_b = qm.weights_from_parquet_slice(_oracle_sf_dir(), *_EPOCH_B)
+    w_a = qm.weights_from_parquet_slice(oracle_sf_dir(), *_EPOCH_A)
+    w_b = qm.weights_from_parquet_slice(oracle_sf_dir(), *_EPOCH_B)
     fi = h32_sql("'f:' || t")
     si = h32_sql("'s:' || t")
 

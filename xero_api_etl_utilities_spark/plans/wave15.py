@@ -55,22 +55,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xero_api_etl_utilities_spark.plans.catalog import register
+from xero_api_etl_utilities_spark.operators.materialize import session_memo
+from xero_api_etl_utilities_spark.plans.catalog import oracle_sf_dir, register
 
 _BANDS = 16
 _ROWS = 4
 _MAX_BUCKET = 500
 
 
-def _oracle_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-
-
 # ---------------------------------------------------------------------------
 # X179: the absorbing store replay — batch-sequenced, disk-backed, oracled
 # ---------------------------------------------------------------------------
-
-_STORE_CACHE: dict[tuple[str, str], str] = {}
 
 # arrival classes: cls 0 = seed corpus, cls 1 = first crawl batch,
 # cls 2 = second crawl batch.  cls 1 ∪ cls 2 == the X171 arrival set
@@ -86,6 +81,7 @@ def _cls():
     )
 
 
+@session_memo("absorb_replay")
 def publish_absorb_replay(spark: SparkSession, sf_dir: str) -> str:
     """Drive the X176/X178 absorb loop in batch mode against a real
     on-disk store, once per session: seed ``catalog/part=corpus`` with
@@ -105,23 +101,20 @@ def publish_absorb_replay(spark: SparkSession, sf_dir: str) -> str:
     so the driver can hash the result (streaming/incremental_dedup.py
     pins the same mechanics under checkpoint restart and compaction).
     """
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in _STORE_CACHE:
-        from xero_api_etl_utilities_spark.plans.wave10 import _prune_stale_runs
-        from xero_api_etl_utilities_spark.plans.wave14 import _catalog_dir
+    from xero_api_etl_utilities_spark.plans.wave10 import _prune_stale_runs
+    from xero_api_etl_utilities_spark.plans.wave14 import _catalog_dir
 
-        path = os.path.join(
-            os.path.dirname(_catalog_dir(sf_dir, "x")),
-            "..",
-            "absorb_store",
-            f"{os.path.basename(sf_dir.rstrip(os.sep))}"
-            f"-{spark.sparkContext.applicationId}",
-        )
-        path = os.path.abspath(path)
-        _prune_stale_runs(path, sf_dir)
-        build_absorb_replay(spark, sf_dir, path)
-        _STORE_CACHE[key] = path
-    return _STORE_CACHE[key]
+    path = os.path.join(
+        os.path.dirname(_catalog_dir(sf_dir, "x")),
+        "..",
+        "absorb_store",
+        f"{os.path.basename(sf_dir.rstrip(os.sep))}"
+        f"-{spark.sparkContext.applicationId}",
+    )
+    path = os.path.abspath(path)
+    _prune_stale_runs(path, sf_dir)
+    build_absorb_replay(spark, sf_dir, path)
+    return path
 
 
 def build_absorb_replay(spark: SparkSession, sf_dir: str, path: str) -> None:
@@ -444,9 +437,8 @@ register("dedup_catalog_compact", dedup_catalog_compact, _catalog_compact_oracle
 # X182: IVF index absorb — append-maintained ANN, censused vs re-assignment
 # ---------------------------------------------------------------------------
 
-_IVF_INDEX_CACHE: dict[tuple[str, str], str] = {}
 
-
+@session_memo("ivf_index")
 def publish_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Persist the IVF cell index as the similarity tier's store-side
     artifact, once per session: the frozen coarse quantizer (the
@@ -460,36 +452,33 @@ def publish_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     an ANN store keeps; absorbing a crawl costs one scan of the batch
     against 16 inlined centroids, and the quantizer retrain decision
     is a separate drift-gated operation (X163's retrain lifecycle)."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in _IVF_INDEX_CACHE:
-        from xero_api_etl_utilities_spark.operators import ivf
-        from xero_api_etl_utilities_spark.plans.wave10 import _prune_stale_runs
-        from xero_api_etl_utilities_spark.plans.wave14 import _catalog_dir
-        from xero_api_etl_utilities_spark.sources.parquet import load_table
+    from xero_api_etl_utilities_spark.operators import ivf
+    from xero_api_etl_utilities_spark.plans.wave10 import _prune_stale_runs
+    from xero_api_etl_utilities_spark.plans.wave14 import _catalog_dir
+    from xero_api_etl_utilities_spark.sources.parquet import load_table
 
-        path = os.path.abspath(
-            os.path.join(
-                os.path.dirname(_catalog_dir(sf_dir, "x")),
-                "..",
-                "ivf_index",
-                f"{os.path.basename(sf_dir.rstrip(os.sep))}"
-                f"-{spark.sparkContext.applicationId}",
-            )
+    path = os.path.abspath(
+        os.path.join(
+            os.path.dirname(_catalog_dir(sf_dir, "x")),
+            "..",
+            "ivf_index",
+            f"{os.path.basename(sf_dir.rstrip(os.sep))}"
+            f"-{spark.sparkContext.applicationId}",
         )
-        _prune_stale_runs(path, sf_dir)
-        emb = load_table(spark, sf_dir, "embeddings")
-        cents = ivf.train_centroids(emb, k=16, iters=4, sample=1000)
-        for part, pred in (
-            ("corpus", F.col("vec_id") % 5 != 4),
-            ("arrivals", F.col("vec_id") % 5 == 4),
-        ):
-            ivf.assign_cells(emb.filter(pred), cents).select(
-                "vec_id", "cell"
-            ).write.mode("overwrite").parquet(
-                os.path.join(path, "index", f"part={part}")
-            )
-        _IVF_INDEX_CACHE[key] = path
-    return _IVF_INDEX_CACHE[key]
+    )
+    _prune_stale_runs(path, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = ivf.train_centroids(emb, k=16, iters=4, sample=1000)
+    for part, pred in (
+        ("corpus", F.col("vec_id") % 5 != 4),
+        ("arrivals", F.col("vec_id") % 5 == 4),
+    ):
+        ivf.assign_cells(emb.filter(pred), cents).select(
+            "vec_id", "cell"
+        ).write.mode("overwrite").parquet(
+            os.path.join(path, "index", f"part={part}")
+        )
+    return path
 
 
 def similarity_index_absorb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -523,7 +512,7 @@ def _index_absorb_oracle() -> str:
     from xero_api_etl_utilities_spark.plans.sketch_oracles import _vec_lit
 
     cents = train_centroids_from_parquet(
-        os.path.join(_oracle_sf_dir(), "embeddings.parquet"),
+        os.path.join(oracle_sf_dir(), "embeddings.parquet"),
         k=16,
         iters=4,
         sample=1000,
@@ -604,7 +593,7 @@ def _index_expire_oracle() -> str:
     from xero_api_etl_utilities_spark.plans.sketch_oracles import _vec_lit
 
     cents = train_centroids_from_parquet(
-        os.path.join(_oracle_sf_dir(), "embeddings.parquet"),
+        os.path.join(oracle_sf_dir(), "embeddings.parquet"),
         k=16,
         iters=4,
         sample=1000,
