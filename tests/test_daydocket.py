@@ -13,7 +13,6 @@ import pytest
 from xero_api_etl_utilities_spark.operators.daydocket import (
     day_summary,
     parse_charges,
-    total_debtors,
 )
 from xero_api_etl_utilities_spark.sources.excel_grid import grid_from_rows
 
@@ -77,8 +76,25 @@ def test_parse_charges_sections_and_cleaning(grid):
 
 
 def test_total_debtors_scan(grid):
-    [row] = total_debtors(grid).collect()
+    [row] = day_summary(grid).collect()
     assert row["total_debtors"] == Decimal("120.00")
+
+
+def test_repeated_total_debtors_label_keeps_the_first_row(spark):
+    """Two labelled rows still make one summary row per workbook: G of
+    the first label in row order, whatever order the rows arrive in."""
+    rows = [
+        _cell_row("DD 04.xls", 40, A="Total Debtors", G="999.00"),
+        _cell_row("DD 04.xls", 3, B="45295"),
+        _cell_row("DD 04.xls", 21, C="Amount"),
+        _cell_row("DD 04.xls", 22, C="10.00", D="5"),
+        _cell_row("DD 04.xls", 26, C="Amount"),
+        _cell_row("DD 04.xls", 28, D="Total Charges"),
+        _cell_row("DD 04.xls", 31, E="Total Debtors", G="10.00"),
+    ]
+    [row] = day_summary(grid_from_rows(spark, rows)).collect()
+    assert row["total_debtors"] == Decimal("10.00")
+    assert row["is_balanced"] is True
 
 
 def test_day_summary_balanced(grid):

@@ -104,8 +104,62 @@ def test_daily_import_unverified_aborts(spark, fixtures):
     out["matched"].unpersist()
 
 
+_FIRST_OWN_RDD: list[int] = []
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _first_own_rdd(spark):
+    """RDD ids only grow: every RDD this module creates has an id at
+    least this one."""
+    _FIRST_OWN_RDD[:] = [spark.sparkContext.emptyRDD().id()]
+
+
 def _persisted_rdds(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+    """Persisted RDDs created by this module.  Earlier modules leave
+    ``localCheckpoint`` RDDs unreachable, and Spark's ContextCleaner
+    unpersists those whenever the JVM collects them, which can fall
+    between a test's before and after counts."""
+    ids = spark.sparkContext._jsc.getPersistentRDDs().keySet()
+    return sum(1 for i in ids if i >= _FIRST_OWN_RDD[0])
+
+
+def test_daily_import_rejects_a_day_with_no_charges(spark, fixtures):
+    """A sheet whose sections hold no charge row fails the non-empty
+    gate, and the tagged-rows cache is released with the raise."""
+    _, charge_table, customer_dim = fixtures
+    empty = grid_from_rows(
+        spark,
+        [
+            _cell_row("DD 05.xls", 3, B="45296"),
+            _cell_row("DD 05.xls", 21, C="Amount"),
+            _cell_row("DD 05.xls", 22, C="0.00", D="10643"),  # zero amount: dropped
+            _cell_row("DD 05.xls", 26, C="Amount"),
+            _cell_row("DD 05.xls", 28, D="Total Charges"),
+            _cell_row("DD 05.xls", 31, F="Total Debtors", G="0.00"),
+        ],
+    )
+    cfg = EntityConfig(entity="pw", transport_root="/tmp/unused")
+    before = _persisted_rdds(spark)
+    with pytest.raises(QualityGateError, match="parsed charges"):
+        run_daily_import(empty, charge_table, customer_dim, cfg)
+    assert _persisted_rdds(spark) == before
+
+
+def test_daily_import_flags_an_unbalanced_day(spark, fixtures, tmp_path):
+    """The balance gate is soft: every charge verifies, so the strict
+    run completes and reports ``all_balanced`` False."""
+    grid, charge_table, customer_dim = fixtures
+    off = grid.filter("row_idx <> 31").unionByName(
+        grid_from_rows(spark, [_cell_row("DD 01.xls", 31, F="Total Debtors", G="999.00")])
+    )
+    cfg = EntityConfig(entity="pw", transport_root=str(tmp_path / "xero"))
+    out = run_daily_import(off, charge_table, customer_dim, cfg, strict=True)
+    assert out["all_balanced"] is False
+    assert out["matched"].count() == 3
+    [day] = out["summary"].collect()
+    assert day["is_balanced"] is False
+    assert day["total_debtors"] == Decimal("999.00")
+    out["matched"].unpersist()
 
 
 @pytest.mark.parametrize("strict", [True, False])

@@ -52,3 +52,30 @@ def test_bench_headline_excludes_bruteforce():
 
     assert "similarity_topk" in catalog.queries()
     assert "similarity_topk" not in bench.timed_names(catalog.queries())
+
+
+def test_day_docket_tagging_is_one_exchange(spark):
+    """The Day Docket parse tags every row with windows over ONE
+    ``src_file`` exchange — no broadcast header joins back onto the
+    grid."""
+    import contextlib
+    import io
+
+    from xero_api_etl_utilities_spark.operators.daydocket import tag_day_rows
+    from xero_api_etl_utilities_spark.sources.excel_grid import grid_from_rows
+
+    grid = grid_from_rows(
+        spark,
+        [
+            ("DD 01.xls", 3, None, "45292", None, None, None, None, None),
+            ("DD 01.xls", 21, None, None, "Amount", None, None, None, None),
+            ("DD 01.xls", 22, None, None, "10.00", "1", None, None, None),
+            ("DD 01.xls", 31, "Total Debtors", None, None, None, None, None, "10.00"),
+        ],
+    )
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        tag_day_rows(grid).explain()
+    plan = buf.getvalue()
+    assert plan.count("Exchange hashpartitioning(src_file") == 1, plan
+    assert "BroadcastExchange" not in plan, plan

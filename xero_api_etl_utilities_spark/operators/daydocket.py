@@ -1,27 +1,36 @@
 """The Day-Docket parser: grid → charges/payments + per-day summary.
 
 Relational re-expression of the reference's imperative sheet walk
-(/root/reference/src/parse.ts:61-146):
+(src/parse.ts:61-146), which reads each sheet once and then checks the
+day.  Here one tagging pass (:func:`tag_day_rows`) gives every grid row
+what that walk knows when it reaches the row:
 
-- B3 Excel-serial date, D15 till variance (src/parse.ts:64-65)
-- rows ≥ 21, sections delimited by literal "Amount" marker rows:
+- its file's B3 Excel-serial date and D15 till variance
+  (src/parse.ts:64-65)
+- its file's Total Debtors amount: column G of the row carrying the
+  "Total Debtors" label, found by a whole-sheet scan
+  (src/parse.ts:135-136)
+- its section: rows ≥ 21 are split by literal "Amount" marker rows,
   section 1 = account charges, section 2 = payments until the
   "Total Charges" terminator (src/parse.ts:81-132) — W1 running-sum
-  segmentation, one window per file
-- cell cleaning: first-dash strip, default customer "10528" for
-  amount-only rows, seq lpad4, zero-amount and all-null row drops
-  (src/parse.ts:85-106)
-- "Total Debtors" row located by whole-sheet scan, total read from
-  column G of that row (src/parse.ts:135-136)
-- balance check: round2(sum(charges)+sum(payments)) == round2(total
-  debtors) (src/parse.ts:139-143), surfaced as an `is_balanced` flag
-  (the Q3 soft gate input)
+  segmentation plus a running terminator count
+- its cleaned charge fields: first-dash strip, default customer "10528"
+  for amount-only rows, seq lpad4, zero-amount and all-null rows
+  dropped (src/parse.ts:85-106)
 
-Every step is a window/filter/aggregate over the grid DataFrame —
-workbooks parse independently and in parallel (partition = src_file).
+All of these are windows over one ``src_file`` exchange: workbooks
+parse independently and in parallel, and nothing is joined back.
+:func:`charges_from_tagged` and :func:`summary_from_tagged` derive the
+charges and the day summary — with the balance check
+round2(sum(charges)+sum(payments)) == round2(total debtors)
+(src/parse.ts:139-143) as the ``is_balanced`` flag, the Q3 soft gate
+input — from the tagged rows, so a caller that caches them parses
+each sheet once.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -36,122 +45,151 @@ from xero_api_etl_utilities_spark.operators.segmentation import segment_by_marke
 
 STORE_ACCOUNT = "10528"  # the store's own account (src/parse.ts:92)
 
+CHARGE_COLUMNS = ("src_file", "date", "section", "amount", "customer_id", "seq_no", "notes")
+SUMMARY_COLUMNS = (
+    "src_file",
+    "date",
+    "till_variance",
+    "charges_total",
+    "payments_total",
+    "total_debtors",
+    "is_balanced",
+)
 
-def _day_header(grid: DataFrame) -> DataFrame:
-    """Per-file header cells: B3 serial date, D15 till variance."""
-    b3 = grid.filter(F.col("row_idx") == 3).select(
+
+def tag_day_rows(grid: DataFrame) -> DataFrame:
+    """Every grid row with its file's header cells and its parse.
+
+    Columns: the file's ``SUMMARY_COLUMNS`` (its day summary, repeated
+    on each of its rows) and the row's ``CHARGE_COLUMNS``.  ``section``
+    is "charges" or "payments" for a row that parses to a charge and
+    null for every other row; the charge fields are only meaningful
+    where it is set.
+
+    A sheet with more than one "Total Debtors" label takes column G of
+    the first labelled row in row order.  The reference reads one cell
+    per sheet; which one it reads for a repeated label is not known
+    here, so taking the first is this parser's choice.  It keeps one
+    summary row per workbook.
+    """
+    zero = F.lit(0).cast(MONEY)
+    rows = Window.partitionBy("src_file").orderBy("row_idx")
+    sheet = rows.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    body = F.col("row_idx") >= 21
+    seg = segment_by_marker(
+        grid,
+        is_marker=body & (F.col("C") == "Amount"),
+        order_by=["row_idx"],
+        partition_by=["src_file"],
+    )
+    is_debtors = reduce(
+        lambda a, b: a | b, [F.col(c) == "Total Debtors" for c in "ABCDEFG"]
+    )
+
+    def cell(row_idx: int, col: str):
+        return F.first(
+            F.when(F.col("row_idx") == row_idx, F.col(col)), ignorenulls=True
+        ).over(sheet)
+
+    # the label row is kept as a struct so that a blank G there still
+    # wins over a later label
+    debtors_row = F.first(F.when(is_debtors, F.struct("G")), ignorenulls=True).over(sheet)
+    terminated = F.sum(
+        F.when(body & (F.col("D") == "Total Charges"), 1).otherwise(0)
+    ).over(rows)
+    tagged = seg.select(
+        "*",
+        excel_serial_to_date(cell(3, "B").cast("double").cast("int")).alias("date"),
+        cell(15, "D").cast(MONEY).alias("till_variance"),
+        F.coalesce(debtors_row["G"].cast("double").cast(MONEY), zero).alias(
+            "total_debtors"
+        ),
+        terminated.alias("_terminated"),
+    )
+    # P7 all-null row drop
+    kind = F.when(
+        body
+        & (F.col("C") != "Amount")
+        & ~(
+            F.col("C").isNull()
+            & F.col("D").isNull()
+            & F.col("E").isNull()
+            & F.col("F").isNull()
+        ),
+        F.when(F.col("section") == 1, "charges").when(
+            (F.col("section") == 2) & (F.col("_terminated") == 0), "payments"
+        ),
+    )
+    # cast only section rows: header and marker cells are not numbers
+    amount = F.when(
+        kind.isNotNull(), F.coalesce(F.col("C").cast("double"), F.lit(0)).cast(MONEY)
+    )
+    section = F.when(F.abs(F.round(amount, 2)) != 0, kind)  # P6 zero-amount drop
+    parsed = tagged.select(
         "src_file",
-        excel_serial_to_date(F.col("B").cast("double").cast("int")).alias("date"),
+        "row_idx",
+        "date",
+        "till_variance",
+        "total_debtors",
+        section.alias("section"),
+        amount.alias("amount"),
+        F.when(F.col("D").isNull(), F.lit(STORE_ACCOUNT))
+        .otherwise(strip_dashes(F.col("D")))
+        .alias("customer_id"),
+        lpad4(F.coalesce(F.col("E"), F.lit("0"))).alias("seq_no"),
+        F.col("F").alias("notes"),
     )
-    d15 = grid.filter(F.col("row_idx") == 15).select(
-        "src_file", F.col("D").cast(MONEY).alias("till_variance")
+
+    def total(section: str):
+        return F.coalesce(
+            F.sum(F.when(F.col("section") == section, F.col("amount"))).over(sheet),
+            zero,
+        )
+
+    totals = parsed.withColumns(
+        {"charges_total": total("charges"), "payments_total": total("payments")}
     )
-    return b3.join(d15, "src_file", "left")
+    return totals.drop("row_idx").withColumn(
+        "is_balanced",
+        F.round(F.col("charges_total") + F.col("payments_total"), 2)
+        == F.round(F.col("total_debtors"), 2),
+    )
+
+
+def charges_from_tagged(tagged: DataFrame) -> DataFrame:
+    """The charge and payment rows of :func:`tag_day_rows` output."""
+    return tagged.filter(F.col("section").isNotNull()).select(*CHARGE_COLUMNS)
 
 
 def parse_charges(grid: DataFrame) -> DataFrame:
     """Charge + payment rows with section tags, cleaned per the
     reference's cell rules. Columns:
     (src_file, date, section, amount, customer_id, seq_no, notes)."""
-    rows = grid.filter(F.col("row_idx") >= 21)
-    seg = segment_by_marker(
-        rows,
-        is_marker=F.col("C") == "Amount",
-        order_by=["row_idx"],
-        partition_by=["src_file"],
-    )
-    w = Window.partitionBy("src_file").orderBy("row_idx")
-    seg = seg.withColumn(
-        "_terminated",
-        F.sum(F.when(F.col("D") == "Total Charges", 1).otherwise(0)).over(w),
-    )
-    section = (
-        F.when((F.col("section") == 1) & (F.col("C") != "Amount"), "charges")
-        .when(
-            (F.col("section") == 2)
-            & (F.col("C") != "Amount")
-            & (F.col("_terminated") == 0),
-            "payments",
-        )
-    )
-    tagged = seg.withColumn("section_tag", section).filter(
-        F.col("section_tag").isNotNull()
-    )
-    # P7 all-null row drop; P6 zero-amount drop; field cleaning
-    cleaned = (
-        tagged.filter(
-            ~(
-                F.col("C").isNull()
-                & F.col("D").isNull()
-                & F.col("E").isNull()
-                & F.col("F").isNull()
-            )
-        )
-        .select(
-            "src_file",
-            F.col("section_tag").alias("section"),
-            F.coalesce(F.col("C").cast("double"), F.lit(0)).cast(MONEY).alias("amount"),
-            F.when(F.col("D").isNull(), F.lit(STORE_ACCOUNT))
-            .otherwise(strip_dashes(F.col("D")))
-            .alias("customer_id"),
-            lpad4(F.coalesce(F.col("E"), F.lit("0"))).alias("seq_no"),
-            F.col("F").alias("notes"),
-        )
-        .filter(F.abs(F.round(F.col("amount"), 2)) != 0)
-    )
-    header = _day_header(grid).select("src_file", "date")
-    return cleaned.join(F.broadcast(header), "src_file", "left").select(
-        "src_file", "date", "section", "amount", "customer_id", "seq_no", "notes"
-    )
+    return charges_from_tagged(tag_day_rows(grid))
 
 
-def total_debtors(grid: DataFrame) -> DataFrame:
-    """The whole-sheet 'Total Debtors' scan → column G of that row."""
-    any_match = None
-    for c in ("A", "B", "C", "D", "E", "F", "G"):
-        cond = F.col(c) == "Total Debtors"
-        any_match = cond if any_match is None else (any_match | cond)
-    return grid.filter(any_match).select(
-        "src_file", F.col("G").cast("double").cast(MONEY).alias("total_debtors")
+def summary_from_tagged(tagged: DataFrame) -> DataFrame:
+    """Per-day roll-up + A6 balance flag (src/parse.ts:139-143) of
+    :func:`tag_day_rows` output, one row per workbook.  Columns:
+    (src_file, date, till_variance, charges_total, payments_total,
+    total_debtors, is_balanced)."""
+    return tagged.groupBy("src_file").agg(
+        *[F.first(c).alias(c) for c in SUMMARY_COLUMNS[1:]]
     )
 
 
 def day_summary(grid: DataFrame) -> DataFrame:
-    """Per-day roll-up + A6 balance flag (src/parse.ts:139-143)."""
-    return summarize_charges(grid, parse_charges(grid))
+    """:func:`summary_from_tagged` straight from the grid."""
+    return summary_from_tagged(tag_day_rows(grid))
 
 
-def summarize_charges(grid: DataFrame, charges: DataFrame) -> DataFrame:
-    """``day_summary`` over charges already parsed from ``grid`` — for a
-    caller that needs the charges too and should not parse them twice."""
-    sums = charges.groupBy("src_file").agg(
-        F.sum(F.when(F.col("section") == "charges", F.col("amount"))).alias(
-            "charges_total"
-        ),
-        F.sum(F.when(F.col("section") == "payments", F.col("amount"))).alias(
-            "payments_total"
-        ),
-    )
-    header = _day_header(grid)
-    td = total_debtors(grid)
-    zero = F.lit(0).cast(MONEY)
-    return (
-        header.join(sums, "src_file", "left")
-        .join(td, "src_file", "left")
-        .select(
-            "src_file",
-            "date",
-            "till_variance",
-            F.coalesce(F.col("charges_total"), zero).alias("charges_total"),
-            F.coalesce(F.col("payments_total"), zero).alias("payments_total"),
-            F.coalesce(F.col("total_debtors"), zero).alias("total_debtors"),
-            (
-                F.round(
-                    F.coalesce(F.col("charges_total"), zero)
-                    + F.coalesce(F.col("payments_total"), zero),
-                    2,
-                )
-                == F.round(F.coalesce(F.col("total_debtors"), zero), 2)
-            ).alias("is_balanced"),
-        )
+def day_gates(tagged: DataFrame) -> DataFrame:
+    """The day's two gate inputs as one row, for one action:
+    ``n_charges`` — charge and payment rows parsed over every workbook
+    (the non-empty gate) — and ``all_balanced``, the ``bool_and`` of the
+    workbooks' ``is_balanced`` flags (the soft balance gate; null when
+    there is no workbook)."""
+    return tagged.agg(
+        F.count("section").alias("n_charges"),
+        F.bool_and("is_balanced").alias("all_balanced"),
     )

@@ -1,12 +1,14 @@
 """EP1 — the daily import run, end-to-end (SURVEY.md §3).
 
-The reference's `main(entity)` call graph
-(/root/reference/src/main.ts:7-38) as ONE lazy Spark DAG:
+The reference's `main(entity)` call graph (src/main.ts:7-38) as one
+Spark DAG over one cached parse of the day:
 
-    grid → parse (S2/S3/W1) → balance check (A6/Q3-soft)
-         → verify vs charge table (J1 + J2 customer join)
+    grid → tag rows (S2/S3/W1, one src_file exchange)  [cached]
+         → non-empty + balance gates (Q1, A6/Q3-soft: one action)
+         → verify charges vs charge table (J1)
          → unverified gate (Q3-hard)
-         → document assembly (P9/P12/F6/F15/D2, P10 side-output)
+         → customer join (J2), document assembly
+           (P9/P12/F6/F15/D2, P10 side-output)
          → idempotent REST sink + JSON audit (S8/S11)
 
 The reference's entity routing (`pw`/`wb` selecting log path, DB URL
@@ -27,13 +29,14 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from xero_api_etl_utilities_spark.operators.daydocket import (
-    parse_charges,
-    summarize_charges,
+    charges_from_tagged,
+    day_gates,
+    summary_from_tagged,
+    tag_day_rows,
 )
 from xero_api_etl_utilities_spark.operators.quality import (
-    all_true,
+    QualityGateError,
     enforce_empty,
-    require_nonempty,
 )
 from xero_api_etl_utilities_spark.operators.reconcile import reconcile
 from xero_api_etl_utilities_spark.plans.documents_out import (
@@ -106,35 +109,39 @@ def run_daily_import(
 ) -> dict[str, DataFrame]:
     """Execute the EP1 flow; returns every intermediate DataFrame for
     auditing (the S11 log surface). Raises QualityGateError when the
-    unverified gate trips (strict) — the src/helpers.ts:212-214 abort.
+    workbooks parse to no charge, and when the unverified gate trips
+    (strict) — the src/helpers.ts:212-214 abort.
 
     ``charge_table`` columns: date, amount, customer_id, seq_no,
     terminal_id, tran_timestamp. ``customer_dim``: customer_id,
     xero_id, terms_type, terms_days.
 
-    Cache ownership: this function caches ``grid`` so that the gates
-    and the reconcile join decode the workbook once, and releases that
-    cache before it returns or raises.  A grid the caller has cached
-    already is used as it is and left cached.  On return the caller
-    owns the persisted ``matched`` frame and must ``unpersist()`` it;
+    Cache ownership: this function caches the tagged rows of ``grid``
+    (``tag_day_rows``: one parse of every workbook) so that both gates,
+    the reconcile probe and the unverified anti-join read one decode of
+    the workbook, and releases that cache before it returns or raises.
+    ``grid`` itself is never cached or released here, so a grid the
+    caller has cached stays cached.  On return the caller owns the
+    persisted ``matched`` frame and must ``unpersist()`` it;
     ``payloads`` and ``documents`` read it.  ``charges``, ``summary``
-    and ``unverified`` stay lazy over the grid, so reading them after
-    the return decodes the workbook again.  When a gate raises, nothing
-    this function cached stays cached.
+    and ``unverified`` stay lazy, so reading them after the return
+    decodes the workbook again.  When a gate raises, nothing this
+    function cached stays cached.
     """
-    owns_grid_cache = grid.storageLevel == StorageLevel.NONE
-    if owns_grid_cache:
-        grid = grid.persist(StorageLevel.MEMORY_AND_DISK)
+    tagged = tag_day_rows(grid).persist(StorageLevel.MEMORY_AND_DISK)
     matched = None
     try:
-        charges = parse_charges(grid)
-        require_nonempty(charges, "parsed charges")
-
-        summary = summarize_charges(grid, charges)
-        # soft gate: warn-equivalent — surfaced as a flag, run continues
+        # both gates in one action: the non-empty gate (Q1, the
+        # ``require_nonempty`` message) and the soft balance gate,
+        # warn-equivalent — surfaced as a flag, the run continues
         # (src/helpers.ts:188-198)
-        balanced = all_true(summary, "is_balanced")
+        gates = day_gates(tagged).first()
+        if not gates["n_charges"]:
+            raise QualityGateError("quality gate: parsed charges is empty")
+        balanced = gates["all_balanced"] is not False
 
+        charges = charges_from_tagged(tagged)
+        summary = summary_from_tagged(tagged)
         probe = charges.select(
             "date",
             F.round(F.col("amount"), 2).alias("amount"),  # probe-side 2dp rule
@@ -152,8 +159,8 @@ def run_daily_import(
             on=["date", "amount", "customer_id", "seq_no"],
             persist_matched=True,
         )
-        # Every matched buffer must be loaded before the grid cache goes:
-        # unpersisting the grid re-plans each dependent cache whose
+        # Every matched buffer must be loaded before the tagged cache
+        # goes: unpersisting it re-plans each dependent cache whose
         # buffers are not loaded yet, back onto a fresh decode.  The
         # hard gate loads them all (it broadcasts the keys of matched).
         if strict:
@@ -165,8 +172,7 @@ def run_daily_import(
             matched.unpersist()
         raise
     finally:
-        if owns_grid_cache:
-            grid.unpersist()
+        tagged.unpersist()
 
     enriched = matched.join(F.broadcast(customer_dim), "customer_id", "left")
     ok_rows, invalid_rows = validate_required(enriched)
