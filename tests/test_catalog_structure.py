@@ -27,3 +27,59 @@ def test_every_query_has_an_oracle():
     qs = set(catalog.queries())
     os_ = set(catalog.oracle_sql())
     assert qs == os_, f"rows-only entries: {sorted(qs - os_)}"
+
+
+def test_every_package_module_is_reachable():
+    """Every package module is imported, directly or transitively, by
+    the catalog or by the EP1 job: a module only tests import is dead
+    weight and must get a caller or be deleted. Package ``__init__``s
+    and ``session`` (the harness-owned session builder) are exempt.
+    The walk is static: ``import``/``from … import`` anywhere in a
+    module's AST, with the ``__init__`` of every package on the way."""
+    import ast
+    from pathlib import Path
+
+    pkg = "xero_api_etl_utilities_spark"
+    base = Path(__file__).resolve().parent.parent / pkg
+
+    def path_of(mod: str) -> Path | None:
+        rel = Path(*mod.split(".")[1:])
+        for p in (base / rel).with_suffix(".py"), base / rel / "__init__.py":
+            if p.is_file():
+                return p
+        return None
+
+    def imports(mod: str):
+        tree = ast.parse(path_of(mod).read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                yield from (a.name for a in node.names)
+            elif isinstance(node, ast.ImportFrom) and node.module:
+                yield node.module
+                yield from (f"{node.module}.{a.name}" for a in node.names)
+
+    roots = [
+        "plans.catalog",
+        "plans.flagship",
+        "plans.pipeline",
+        "sources.excel_grid",
+        "sources.rest",
+    ]
+    seen: set[str] = set()
+    todo = [f"{pkg}.{r}" for r in roots]
+    while todo:
+        mod = todo.pop()
+        parts = mod.split(".")
+        for i in range(1, len(parts) + 1):
+            m = ".".join(parts[:i])
+            if m not in seen and m.split(".")[0] == pkg and path_of(m):
+                seen.add(m)
+                todo.extend(imports(m))
+
+    every = {
+        ".".join((pkg, *p.relative_to(base).with_suffix("").parts))
+        for p in base.rglob("*.py")
+        if p.name != "__init__.py"
+    }
+    unreachable = sorted(every - seen - {f"{pkg}.session"})
+    assert not unreachable, f"modules only tests import: {unreachable}"

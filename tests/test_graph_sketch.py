@@ -186,61 +186,6 @@ class TestPageRankInt:
         assert lpa_lazy == lpa_ck
 
 
-class TestStreamingCms:
-    def test_sketch_maintained_by_ivm_sink(self, spark, tmp_path):
-        """Counters are additive → the existing additive-rollup IVM
-        sink maintains a LIVE count-min sketch across micro-batches
-        with no new stateful operator. Two availableNow batches; the
-        final snapshot must equal the batch sketch of all data."""
-        from pyspark.sql import types as T
-
-        from xero_api_etl_utilities_spark.operators.sketches import (
-            cms_build,
-            cms_pairs,
-        )
-        from xero_api_etl_utilities_spark.streaming.cdc_sink import (
-            apply_rollup_stream,
-        )
-        from xero_api_etl_utilities_spark.streaming.filestream import (
-            stream_drop_dir,
-        )
-
-        schema = T.StructType([T.StructField("k", T.LongType())])
-        drop = str(tmp_path / "drop")
-        snap = str(tmp_path / "sketch")
-        ckpt = str(tmp_path / "ckpt")
-
-        def run():
-            stream = stream_drop_dir(spark, drop, schema)
-            q = apply_rollup_stream(
-                cms_pairs(stream, "k", d=4, w=16),
-                snapshot_dir=snap,
-                group_cols=["cms_row", "cms_bucket"],
-                agg_exprs={"cms_count": "count(*)"},
-                checkpoint_dir=ckpt,
-            )
-            q.awaitTermination()
-
-        b1 = [(k,) for k in [1] * 20 + [2] * 10 + list(range(3, 10))]
-        b2 = [(k,) for k in [1] * 5 + [7] * 9 + list(range(10, 15))]
-        spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(drop)
-        run()
-        spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(drop)
-        run()
-
-        live = {
-            (r["cms_row"], r["cms_bucket"]): r["cms_count"]
-            for r in spark.read.parquet(snap).collect()
-        }
-        want = {
-            (r["cms_row"], r["cms_bucket"]): r["cms_count"]
-            for r in cms_build(
-                spark.createDataFrame(b1 + b2, schema), "k", d=4, w=16
-            ).collect()
-        }
-        assert live == want
-
-
 class TestKCore:
     def test_clique_survives_chain_peels(self, spark):
         from xero_api_etl_utilities_spark.operators.graph import kcore

@@ -12,9 +12,7 @@ from pyspark.sql import functions as F
 from xero_api_etl_utilities_spark.operators import events as ev
 from xero_api_etl_utilities_spark.operators.quality import (
     QualityGateError,
-    all_true,
     enforce_empty,
-    require_nonempty,
     split_exactly_one,
 )
 from xero_api_etl_utilities_spark.operators.reconcile import reconcile
@@ -56,9 +54,6 @@ def test_quality_gates(spark):
     empty = spark.createDataFrame([], "a int")
     nonempty = spark.createDataFrame([(1,)], "a int")
     with pytest.raises(QualityGateError):
-        require_nonempty(empty, "tenants")
-    require_nonempty(nonempty)
-    with pytest.raises(QualityGateError):
         enforce_empty(nonempty, "unverified")
     enforce_empty(empty)
 
@@ -70,13 +65,6 @@ def test_split_exactly_one(spark):
     unique, violations = split_exactly_one(df, ["k"])
     assert [r["v"] for r in unique.collect()] == ["a"]
     assert sorted(r["v"] for r in violations.collect()) == ["b", "c"]
-
-
-def test_all_true(spark):
-    df = spark.createDataFrame([(True,), (True,)], "ok boolean")
-    assert all_true(df, "ok") is True
-    df2 = spark.createDataFrame([(True,), (False,)], "ok boolean")
-    assert all_true(df2, "ok") is False
 
 
 def _events(spark, rows):

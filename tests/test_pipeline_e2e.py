@@ -252,45 +252,3 @@ def test_validate_entity_config():
         )
     msg = str(exc.value)  # every problem reported at once
     assert "entity" in msg and "transport_root" in msg and "expense_gl_code" in msg
-
-
-def test_fan_out_single_materialization(spark):
-    """Five consumers over one source (the reference's Promise.all
-    shape): each consumer's plan reads the in-memory cache, results
-    are correct, cache is released afterwards."""
-    import io
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as F
-
-    from xero_api_etl_utilities_spark.plans.pipeline import fan_out
-
-    src = spark.range(0, 1000).withColumn("v", F.col("id") % 7)
-
-    plans = {}
-
-    def consumer(agg_fn, name):
-        def run(df):
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                agg_fn(df).explain()
-            plans[name] = buf.getvalue()
-            return agg_fn(df).collect()
-
-        return run
-
-    out = fan_out(
-        src,
-        {
-            "n": consumer(lambda d: d.agg(F.count("*").alias("n")), "n"),
-            "s": consumer(lambda d: d.agg(F.sum("v").alias("s")), "s"),
-            "mx": consumer(lambda d: d.agg(F.max("id").alias("m")), "mx"),
-            "grp": consumer(lambda d: d.groupBy("v").count(), "grp"),
-            "f": consumer(lambda d: d.filter(F.col("v") == 0), "f"),
-        },
-    )
-    assert out["n"][0]["n"] == 1000
-    assert out["mx"][0]["m"] == 999
-    assert len(out["grp"]) == 7
-    assert all("InMemoryTableScan" in p for p in plans.values())
-    assert src.storageLevel.useMemory is False  # released

@@ -117,110 +117,3 @@ def test_users_without_purchases_are_absent(spark):
         ],
     )
     assert set(got) == {2}
-
-
-# ---------------------------------------------------------------------------
-# streaming twin: funnel_exclusion_stream parity + cross-batch state
-# ---------------------------------------------------------------------------
-
-import pyspark.sql.types as T  # noqa: E402
-
-_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampNTZType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-    ]
-)
-
-
-def _run_stream(spark, drop, ckpt, out):
-    from xero_api_etl_utilities_spark.streaming.filestream import (
-        stream_drop_dir,
-    )
-    from xero_api_etl_utilities_spark.streaming.stateful import (
-        funnel_exclusion_stream,
-    )
-
-    q = (
-        funnel_exclusion_stream(stream_drop_dir(spark, drop, _STREAM_SCHEMA))
-        .writeStream.format("parquet")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .option("path", out)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out)
-
-
-def _final_per_user(rows):
-    last = {}
-    for r in rows:
-        k = (r["at_us"], r["event_id"])
-        if r["user_id"] not in last or k > last[r["user_id"]][0]:
-            last[r["user_id"]] = (
-                k,
-                (r["n_purchases"], r["n_converted"], r["first_conversion_us"]),
-            )
-    return {u: v for u, (_, v) in last.items()}
-
-
-def test_funnel_exclusion_stream_state_crosses_batches(spark, tmp_path):
-    drop, ckpt, out = (
-        str(tmp_path / "drop"),
-        str(tmp_path / "ckpt"),
-        str(tmp_path / "out"),
-    )
-    # batch 1: user 1 views then errors — no emission (no purchase yet)
-    spark.createDataFrame(
-        [(1, _t(1), 1, "view"), (2, _t(2), 1, "error")], _STREAM_SCHEMA
-    ).write.mode("append").parquet(drop)
-    assert _run_stream(spark, drop, ckpt, out).count() == 0
-    # batch 2 (restart from checkpoint): the purchase must see the
-    # carried view AND the carried blocking error
-    spark.createDataFrame(
-        [(3, _t(3), 1, "purchase")], _STREAM_SCHEMA
-    ).write.mode("append").parquet(drop)
-    rows = _run_stream(spark, drop, ckpt, out).collect()
-    assert _final_per_user(rows)[1] == (1, 0, -1)
-    # batch 3: a fresh view redeems the next purchase
-    spark.createDataFrame(
-        [(4, _t(4), 1, "view"), (5, _t(5), 1, "purchase")], _STREAM_SCHEMA
-    ).write.mode("append").parquet(drop)
-    rows = _run_stream(spark, drop, ckpt, out).collect()
-    us = int(_t(5).timestamp() * 1_000_000)
-    assert _final_per_user(rows)[1] == (2, 1, us)
-
-
-def test_funnel_exclusion_stream_matches_batch(spark, tmp_path):
-    """End-state parity on the GENERATED events table: the last emitted
-    row per user equals plans/wave12.events_funnel_exclusion."""
-    import datetime as dt
-    import os
-
-    drop, ckpt, out = (
-        str(tmp_path / "drop"),
-        str(tmp_path / "ckpt"),
-        str(tmp_path / "out"),
-    )
-    sf = "/root/testdata/sf0.001"
-    spark.read.parquet(os.path.join(sf, "events.parquet")).select(
-        "event_id", "ts", "user_id", "event_type"
-    ).write.mode("append").parquet(drop)
-    got = _final_per_user(_run_stream(spark, drop, ckpt, out).collect())
-
-    want = {}
-    for r in events_funnel_exclusion(spark, sf).collect():
-        fc = r["first_conversion_ts"]
-        fc_us = (
-            -1
-            if fc is None
-            else int(
-                (fc - dt.datetime(1970, 1, 1)).total_seconds() * 1_000_000
-            )
-        )
-        want[r["user_id"]] = (r["n_purchases"], r["n_converted"], fc_us)
-    assert got == want

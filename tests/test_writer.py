@@ -104,26 +104,6 @@ def test_versioned_run_exhaustion_raises(spark, tmp_path):
         write_versioned_run(df, base, max_versions=2)
 
 
-def test_compact_dir_reduces_files(spark, tmp_path):
-    """Many small files collapse to the byte-target count; data
-    survives bit-exact and re-compaction is a stable no-op."""
-    import glob
-
-    from xero_api_etl_utilities_spark.sources.writer import compact_dir
-
-    p = str(tmp_path / "frag")
-    spark.range(0, 10_000).repartition(64).write.parquet(p)
-    assert len(glob.glob(f"{p}/*.parquet")) == 64
-    before = spark.read.parquet(p).groupBy().sum("id").collect()[0][0]
-
-    n = compact_dir(spark, p, target_file_bytes=1 << 20)
-    files = glob.glob(f"{p}/*.parquet")
-    assert len(files) == n < 64
-    assert spark.read.parquet(p).groupBy().sum("id").collect()[0][0] == before
-    # idempotent: same target -> same count
-    assert compact_dir(spark, p, target_file_bytes=1 << 20) == n
-
-
 def test_versioned_run_reraises_non_collision_errors(spark, tmp_path):
     """An AnalysisException that is NOT a path collision (here: CSV
     cannot serialize an array column) must surface immediately instead
@@ -137,24 +117,3 @@ def test_versioned_run_reraises_non_collision_errors(spark, tmp_path):
         write_versioned_run(df, str(tmp_path / "bad"), fmt="csv")
     # no version directories were probed into existence
     assert not (tmp_path / "bad").exists()
-
-
-def test_compact_dir_recovers_interrupted_swap(spark, tmp_path):
-    """Crash between the two publish renames strands data in
-    .precompact; the next compact_dir restores and completes."""
-    import glob
-    import os
-
-    from xero_api_etl_utilities_spark.sources.writer import compact_dir
-
-    p = str(tmp_path / "frag")
-    spark.range(0, 1000).repartition(16).write.parquet(p)
-    total = spark.read.parquet(p).groupBy().sum("id").collect()[0][0]
-    # simulate the crash window: old dir renamed away, new never landed
-    os.rename(p, f"{p}.precompact")
-    assert not os.path.isdir(p)
-
-    n = compact_dir(spark, p, target_file_bytes=1 << 30)
-    assert os.path.isdir(p) and not os.path.isdir(f"{p}.precompact")
-    assert len(glob.glob(f"{p}/*.parquet")) == n == 1
-    assert spark.read.parquet(p).groupBy().sum("id").collect()[0][0] == total

@@ -10,13 +10,15 @@ Pandas UDFs only where built-ins cannot express the semantics.
 Layout
 ------
 - ``session``    : tuned SparkSession builder
-- ``sources``    : parquet star schema, excel positional grid, binary files,
-                   REST source/sink stubs
+- ``sources``    : parquet star schema, Excel workbook grids (xlsx + BIFF),
+                   REST source/sink, parquet/JSON sinks and compaction
 - ``functions``  : scalar column-expression pack (SURVEY.md §2.8 F1–F24)
 - ``operators``  : reconciliation join, marker segmentation, quality gates,
                    dedup, similarity search, text analysis, event windows
-- ``plans``      : full query catalog (SURVEY.md §2) over the test star schema
-- ``streaming``  : Structured Streaming surface (file-drop replay, watermarks)
+- ``plans``      : full query catalog (SURVEY.md §2) over the test star
+                   schema, and the EP1 daily import (``plans/pipeline``)
+
+Every job is a batch run; there is no Structured Streaming surface.
 """
 
 __version__ = "0.1.0"

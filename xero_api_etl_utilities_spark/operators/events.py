@@ -1,9 +1,7 @@
-"""X5 — event-stream operators (batch form; streaming twins live in
-``streaming/``).
+"""X5 — event-stream operators, batch form.
 
 Tumbling/hopping window aggregation, gap-based sessionization, and
-keep-latest dedup over the `events` table. Batch and streaming share
-the same column expressions; the streaming layer adds watermarks.
+keep-latest dedup over the `events` table.
 
 Scale design: every operator shuffles once on its natural key
 (window start / user / dedup key). Sessionization is the classic

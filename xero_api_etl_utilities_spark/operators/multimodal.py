@@ -61,23 +61,6 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def media_from_binary_files(files: DataFrame, media_type: str, mime_type: str) -> DataFrame:
-    """Wrap a binaryFile-source DataFrame (path, content, length, …)
-    into the media schema with metadata defaults."""
-    return files.select(
-        F.abs(F.xxhash64(F.col("path"))).alias("media_id"),
-        F.col("content"),
-        F.struct(
-            F.lit(media_type).alias("media_type"),
-            F.lit(mime_type).alias("mime_type"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("long").alias("duration_ms"),
-            F.lit(None).cast("int").alias("sample_rate"),
-        ).alias("meta"),
-    )
-
-
 def fake_decode_features(content: bytes, dim: int = 8) -> list[float]:
     """Deterministic stand-in decoder: features derived from a sha256
     digest of the bytes — stable across runs/executors, so the

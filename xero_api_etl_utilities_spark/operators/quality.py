@@ -13,6 +13,8 @@ Engine form: each gate is a pure DataFrame split — (passed, violations)
 — plus a driver-side ``enforce`` that raises after ONE aggregate
 action. Violations are a side-output DataFrame the caller can persist
 (the S11 JSON audit-log semantics) rather than stringly-typed throws.
+EP1 answers Q1 and the Q3 soft warn together in one action
+(``operators/daydocket.day_gates``, read by ``plans/pipeline.py``).
 
 Scale note: every gate is a single aggregate or windowed count — no
 collect of row data to the driver; ``enforce`` pulls back one number.
@@ -26,15 +28,6 @@ from pyspark.sql import functions as F
 
 class QualityGateError(RuntimeError):
     """Raised when a hard gate fails (the reference's `throw` paths)."""
-
-
-def require_nonempty(df: DataFrame, name: str = "input") -> DataFrame:
-    """Q1/Q2: abort when a required set is empty (or a keyed lookup
-    finds nothing). Lazy-friendly: raises at first action via a cheap
-    limit(1) probe, not a full count."""
-    if df.limit(1).count() == 0:
-        raise QualityGateError(f"quality gate: {name} is empty")
-    return df
 
 
 def split_exactly_one(df: DataFrame, keys: list[str]) -> tuple[DataFrame, DataFrame]:
@@ -62,19 +55,12 @@ def enforce_empty(df: DataFrame, name: str = "violations") -> None:
         raise QualityGateError(f"quality gate: {name} is non-empty")
 
 
-def all_true(df: DataFrame, flag_col: str) -> bool:
-    """A8/Q3 soft gate: `importedDays.every(d => d.isBalanced)`
-    (src/helpers.ts:188) as a single bool_and aggregate."""
-    row = df.agg(F.bool_and(F.col(flag_col)).alias("ok")).collect()[0]
-    return bool(row["ok"]) if row["ok"] is not None else True
-
-
 def observed_gate(df: DataFrame, name: str, **metric_exprs):
     """Zero-extra-pass gate metrics via ``DataFrame.observe``.
 
     The gates above each cost one extra (cheap) job; when the frame is
-    about to be fully materialized anyway — the D4 fan-out persist, a
-    sink write — even that probe is wasted work at 100 TB. Spark's
+    about to be fully materialized anyway — a cache fill, a sink
+    write — even that probe is wasted work at 100 TB. Spark's
     observation API attaches named aggregates that are computed DURING
     whatever action materializes the frame: the metrics ride the
     existing pass, touching every row exactly once, for free.

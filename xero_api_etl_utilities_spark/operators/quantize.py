@@ -142,17 +142,6 @@ def train_pq_codebooks_from_parquet(
     return books
 
 
-def _sub_dist(vec_col: str, centroid: list[float], lo: int):
-    """Σ_d (vec[lo+d] − c_d)² with FIXED left-to-right association so
-    the oracle's identically-ordered sum is bit-equal."""
-    e = None
-    for d, c in enumerate(centroid):
-        t = F.element_at(F.col(vec_col), lo + d + 1).cast("double") - F.lit(float(c))
-        sq = t * t
-        e = sq if e is None else e + sq
-    return e
-
-
 def pq_codes(
     df: DataFrame,
     id_col: str,
@@ -172,12 +161,12 @@ def pq_codes(
     cols = [F.col(id_col)]
     ds = len(codebooks[0][0])
     # Codebooks ride as ONE folded nested-array literal consumed by a
-    # per-subspace ``transform`` (r15): the unrolled per-code
-    # ``_sub_dist`` expression built ~2000 nodes through as many py4j
-    # calls — ~12 s of DRIVER plan-construction per index build.  The
-    # distance fold is the same left-to-right (v-c)² sum over the same
-    # doubles (a leading 0.0 is exact: squares are never -0.0), so
-    # codes are bit-identical; only plan size changes.
+    # per-subspace ``transform``: an expression unrolled per code and
+    # dimension would build ~2000 nodes through as many py4j calls —
+    # ~12 s of DRIVER plan-construction per index build.  The distance
+    # fold sums (v-c)² with FIXED left-to-right association (a leading
+    # 0.0 is exact: squares are never -0.0), so the oracle's
+    # identically-ordered sum is bit-equal.
     books = lit_doubles(
         [[[float(x) for x in c] for c in book] for book in codebooks]
     )

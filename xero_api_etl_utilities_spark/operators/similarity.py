@@ -223,29 +223,6 @@ def hyperplanes(n_planes: int, dim: int, seed: int) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def hyperplane_buckets(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 7,
-) -> DataFrame:
-    """Random-hyperplane LSH bucket id per vector (sign-bit signature).
-
-    Hyperplanes are generated driver-side from the seed and inlined as
-    array literals — tiny, broadcast with the plan itself.
-    """
-    planes = hyperplanes(n_planes, dim, seed)
-    # planes ride as ONE folded array-of-arrays literal folded by an
-    # aggregate (r15, see ivf._centroid_scores): same dot fold, same
-    # left-to-right integer bit sum (shiftleft(1L, i) == 1 << i), so
-    # bucket ids are identical; plan size is constant in planes·dim.
-    planes_lit = lit_doubles([[float(x) for x in p] for p in planes])
-    bucket = _plane_bucket(F.col(vec_col), planes_lit, n_planes)
-    return df.select(F.col(id_col), F.col(vec_col), bucket.alias("bucket"))
-
-
 def _plane_bucket(vec_col, planes_lit, n_planes: int):
     """Sign-bit bucket id: Σ_i (dot(vec, plane_i) >= 0 ? 1<<i : 0),
     folded left-to-right from 0L exactly like the unrolled form (the

@@ -40,12 +40,8 @@ def _bucket(key_col, i: int, w: int):
 
 def cms_pairs(df: DataFrame, key: str, d: int = 4, w: int = 64) -> DataFrame:
     """The stateless projection under the sketch: each row exploded to
-    its ``d`` ``(cms_row, cms_bucket)`` cells. Split out from
-    :func:`cms_build` because it composes with STREAMS too: counters
-    are additive, so `cms_pairs(stream) → apply_rollup_stream(count)`
-    maintains a live sketch snapshot through the existing IVM sink —
-    no new stateful operator needed (pinned in test_graph_sketch.py).
-    """
+    its ``d`` ``(cms_row, cms_bucket)`` cells; :func:`cms_build`
+    counts them."""
     pairs = F.array(
         *[
             F.struct(F.lit(i).alias("r"), _bucket(F.col(key), i, w).alias("b"))

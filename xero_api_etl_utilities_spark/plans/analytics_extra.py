@@ -1401,15 +1401,15 @@ ORDER BY price_cents, p_partkey
 
 
 def events_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X76 (r5 seed): batch changepoint detection — the offline twin
-    of the streaming CUSUM (streaming/drift.py): per event type, the
-    day where the cumulative deviation from the overall mean peaks,
-    i.e. argmax_t |n·S_t − t·S_n| over the daily-total series (the
-    CUSUM statistic cross-multiplied so the mean never becomes a
-    float: S_t = prefix sum of daily cents, n = #days, S_n = total).
-    Ties break to the earliest day. One day-grain aggregate, one
-    type-partitioned window, one argmax via max_by struct — every
-    hashed value an integer."""
+    """X76 (r5 seed): batch changepoint detection, a CUSUM over the
+    daily totals: per event type, the day where the cumulative
+    deviation from the overall mean peaks, i.e. argmax_t
+    |n·S_t − t·S_n| over the daily-total series (the CUSUM statistic
+    cross-multiplied so the mean never becomes a float: S_t = prefix
+    sum of daily cents, n = #days, S_n = total). Ties break to the
+    earliest day. One day-grain aggregate, one type-partitioned
+    window, one argmax via max_by struct — every hashed value an
+    integer."""
     ev_ = load_table(spark, sf_dir, "events")
     daily = ev_.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")

@@ -80,26 +80,6 @@ def validate_entity_config(config: EntityConfig) -> EntityConfig:
     return config
 
 
-def fan_out(df: DataFrame, consumers: dict, storage_level=None) -> dict:
-    """D4: multi-query fan-out over one shared source — the engine
-    form of the reference's ``Promise.all`` of 5 reads over the same
-    date (src/queries.ts:55-121).
-
-    The shared upstream is persisted and force-materialized ONCE, every
-    consumer runs against the cached frame (InMemoryTableScan, no
-    re-scan of the source), and the cache is released afterwards.
-    Consumers must materialize their result (collect/write/count);
-    a consumer returning a lazy DataFrame still computes correctly but
-    re-plans from source once the cache is gone.
-    """
-    cached = df.persist(storage_level or StorageLevel.MEMORY_AND_DISK)
-    try:
-        cached.count()
-        return {name: fn(cached) for name, fn in consumers.items()}
-    finally:
-        cached.unpersist()
-
-
 def run_daily_import(
     grid: DataFrame,
     charge_table: DataFrame,
@@ -131,8 +111,8 @@ def run_daily_import(
     tagged = tag_day_rows(grid).persist(StorageLevel.MEMORY_AND_DISK)
     matched = None
     try:
-        # both gates in one action: the non-empty gate (Q1, the
-        # ``require_nonempty`` message) and the soft balance gate,
+        # both gates in one action: the non-empty gate (Q1, abort on
+        # a day with no charge) and the soft balance gate,
         # warn-equivalent — surfaced as a flag, the run continues
         # (src/helpers.ts:188-198)
         gates = day_gates(tagged).first()

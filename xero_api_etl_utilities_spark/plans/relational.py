@@ -796,7 +796,7 @@ FROM lineitem
 
 def events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5: tumbling 1-hour window aggregation over the event stream
-    (batch form; the watermarked streaming twin is in streaming/)."""
+    (batch form)."""
     e = load_table(spark, sf_dir, "events")
     return ev.tumbling_agg(e, "1 hour")
 

@@ -10,12 +10,10 @@ pieces a production vector platform runs continuously:
   sizing table matryoshka serving actually consults (Kusupati et al.
   2022): it prices truncation AND the approximate index together, so
   the d'=64 row doubles as the pure-IVF recall baseline.
-- X165 ``similarity_ivf_drift_census`` — the batch twin of the
-  streaming maintenance sink's drift trigger
-  (``streaming/ann_maintenance.py``): newly-arrived vectors assigned
-  under the FROZEN corpus-trained centroids, per-cell load factors for
-  the indexed corpus vs the arrivals, and the hot-cell flag that says
-  "retrain".
+- X165 ``similarity_ivf_drift_census`` — the index-maintenance drift
+  trigger: newly-arrived vectors assigned under the FROZEN
+  corpus-trained centroids, per-cell load factors for the indexed
+  corpus vs the arrivals, and the hot-cell flag that says "retrain".
 - X166 ``similarity_topk_ivfpq_residual`` — IVF-PQ with RESIDUAL
   encoding (the FAISS IVFADC recipe, Jégou et al. 2011): codes model
   v − c(cell) instead of v, spending the same 4 bytes/vector on the
@@ -233,9 +231,8 @@ _DRIFT_HOT_X100 = 300
 
 
 def similarity_ivf_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X165: the index-maintenance decision table — the batch twin of
-    the streaming drift trigger (streaming/ann_maintenance.py).  The
-    embeddings table splits into the INDEXED corpus (vec_id % 5 != 4)
+    """X165: the index-maintenance decision table.  The embeddings
+    table splits into the INDEXED corpus (vec_id % 5 != 4)
     and NEW ARRIVALS (vec_id % 5 == 4); centroids train on the corpus
     only and are then FROZEN — exactly the state of a deployed index
     when fresh data lands.  Per cell: corpus and arrival counts, load
@@ -456,7 +453,7 @@ def _ivfpq_residual_oracle() -> str:
     )
     # corpus residual codes: ((v[i] - cl[cell+1][i]) - cd)^2 summed
     # with the exact left-to-right association of the Spark encode
-    # (zip_with residual materialized, then _sub_dist)
+    # (zip_with residual materialized, then the fixed-order sum)
     code_cols = []
     for s, book in enumerate(books):
         dists = []
@@ -706,8 +703,7 @@ def events_funnel_exclusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-back for the view timestamp); both provably classify each
     purchase identically.  Per-user event counts are bounded
     (sessionized upstream), so the collected arrays stay small; at
-    100 TB this is the same one-pass-per-user shape the stateful
-    streaming sessionizer runs incrementally."""
+    100 TB this stays one pass per user."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type"
     )

@@ -228,31 +228,6 @@ _EPOCH_A = (0, 400)  # X170's seed slice
 _EPOCH_B = (400, 800)  # the next curation epoch's slice
 
 
-def _score_expr(weights: list[int], toks) -> F.Column:
-    """The X170 zero-shuffle in-row scorer: one F.aggregate fold over
-    the token array against a broadcast integer-weight literal."""
-    from xero_api_etl_utilities_spark.operators import quality_model as qm
-
-    w_arr = lit_longs([int(w) for w in weights])
-    # NULL text -> NULL token array -> NULL fold; the DuckDB oracle
-    # COALESCEs its list_sum to 0, so match it exactly (a NULL-text
-    # document scores 0 = rejected, not NULL) — ADVICE r14
-    return F.coalesce(
-        F.aggregate(
-            toks,
-            F.lit(0).cast("bigint"),
-            lambda acc, t: acc
-            + F.element_at(
-                w_arr, (h32(F.concat(F.lit("f:"), t)) % qm.DIM + 1).cast("int")
-            )
-            * F.when(h32(F.concat(F.lit("s:"), t)) % 2 == 0, F.lit(1))
-            .otherwise(F.lit(-1))
-            .cast("bigint"),
-        ),
-        F.lit(0).cast("bigint"),
-    )
-
-
 def drift_counted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared per-source two-model census frame under X175 (the
     drift table) and X180 (the gated swap verdict): raw integer counts
@@ -265,14 +240,13 @@ def drift_counted(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_a = qm.weights_from_parquet_slice(sf_dir, *_EPOCH_A)
     w_b = qm.weights_from_parquet_slice(sf_dir, *_EPOCH_B)
     docs = load_table(spark, sf_dir, "documents")
-    # r15 (guide §1.2): the two models share the hashing-trick feature
-    # map — only the weight vectors differ — yet scoring each model
-    # with its own _score_expr fold re-derived BOTH md5 hashes per
-    # token per model (4 md5/token).  One fold with a two-field struct
-    # accumulator over a per-token (index, sign) feature array hashes
-    # each token once (2 md5/token) and accumulates both scores in the
-    # same element order, so each sum is bit-identical to its
-    # single-model fold.
+    # The two models share the hashing-trick feature map — only the
+    # weight vectors differ — so a fold per model would re-derive BOTH
+    # md5 hashes per token per model (4 md5/token).  One fold with a
+    # two-field struct accumulator over a per-token (index, sign)
+    # feature array hashes each token once (2 md5/token) and
+    # accumulates both scores in the same element order, so each sum
+    # is bit-identical to a single-model fold.
     wa_arr = lit_longs([int(w) for w in w_a])
     wb_arr = lit_longs([int(w) for w in w_b])
     feats = F.transform(

@@ -2,9 +2,9 @@
 gate and make the model-swap decision itself an oracled operator
 (VERDICT r14 items 3 and 7).
 
-- X179 ``dedup_store_asof`` — the absorbing-store semantics X178
-  pins in pytest, promoted to a DuckDB-hash catalog row: the X171
-  arrival set (doc_id % 5 == 4) split into two sequenced batches
+- X179 ``dedup_store_asof`` — the absorbing-store semantics as a
+  DuckDB-hash catalog row: the X171 arrival set (doc_id % 5 == 4)
+  split into two sequenced batches
   (doc_id % 10 == 4, then doc_id % 10 == 9), each deduped against
   the persisted store AS OF its arrival (corpus, then corpus ∪
   batch 1) and then absorbed — batch 2's pairs can land on batch 1
@@ -18,7 +18,7 @@ gate and make the model-swap decision itself an oracled operator
   the swap POLICY — not just the census it reads — is oracled.
 - X181 ``dedup_catalog_compact`` — compaction equivalence as a hash
   row: the X179 store's accreted catalog partitions are merged by
-  streaming.incremental_dedup.compact_store (replay-guard markers
+  sources.writer.compact_store (replay-guard markers
   preserved), and the COMPACTED read-back is censused per band
   against the from-scratch full-corpus rebuild oracle — the X176
   absorb identity extended through the housekeeping operation:
@@ -41,7 +41,7 @@ gate and make the model-swap decision itself an oracled operator
   expire(tombstones) ≡ rebuild(vectors ∖ tombstones): deletes are
   id-local in the sidecar, completing the index's CRUD story
   (create = publish, absorb = X182, expire = X183, compact =
-  compact_store).
+  sources.writer.compact_store).
 
 Reference provenance: the reference ETL (src/queries.ts) has no
 dedup or model tier; these extend the training-data-pipeline surface
@@ -96,10 +96,8 @@ def publish_absorb_replay(spark: SparkSession, sf_dir: str) -> str:
 
     100 TB shape: per batch the store contributes one scan of its band
     sidecar (~16 rows/doc, never the text outside verification) and
-    the absorb is a map-only append — the continuous-crawl loop X178
-    runs under Structured Streaming, here sequenced deterministically
-    so the driver can hash the result (streaming/incremental_dedup.py
-    pins the same mechanics under checkpoint restart and compaction).
+    the absorb is a map-only append — a continuous crawl's loop,
+    sequenced deterministically so the driver can hash the result.
     """
     from xero_api_etl_utilities_spark.plans.wave10 import _prune_stale_runs
     from xero_api_etl_utilities_spark.plans.wave14 import _catalog_dir
@@ -386,11 +384,8 @@ def dedup_catalog_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: compaction reads the band sidecar once and writes
     ceil(bytes/target) files — never the documents; without it a
     crawl-cadence store accretes one partition of kilobyte files per
-    batch until file-open cost dominates every scan (the failure mode
-    streaming/incremental_dedup.py names)."""
-    from xero_api_etl_utilities_spark.streaming.incremental_dedup import (
-        compact_store,
-    )
+    batch until file-open cost dominates every scan."""
+    from xero_api_etl_utilities_spark.sources.writer import compact_store
 
     path = publish_absorb_replay(spark, sf_dir)
     compact_store(spark, path, subs=("catalog",))

@@ -1,5 +1,6 @@
-"""Source connectors: parquet star schema, Excel positional grid,
-binary files, and REST source/sink stubs."""
+"""Source connectors and sinks: parquet star schema, Excel workbook
+grids (xlsx + BIFF), the REST source/sink, and parquet/JSON writers
+with small-file compaction."""
 
 from xero_api_etl_utilities_spark.sources.parquet import TABLES, load_table, load_tables
 

@@ -272,10 +272,9 @@ def read_workbook_grids_with_quarantine(
     spark: SparkSession, drop_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Drop-dir ingestion with corrupt-workbook routing: returns
-    (grid, quarantine) — the (good, bad) convention of
-    ``sources/text_formats.py``.  ``quarantine`` has one row per
-    undecodable file with the diagnosable reason (legacy BIFF5, OLE2
-    noise, truncated zip…); ``grid`` is byte-identical to the strict
+    (grid, quarantine), a (good, bad) pair.  ``quarantine`` has one
+    row per undecodable file with the diagnosable reason (legacy BIFF5,
+    OLE2 noise, truncated zip…); ``grid`` is byte-identical to the strict
     reader's output for every file that decodes.
 
     One decode pass feeds both sides (the frame is cached so the two
@@ -292,7 +291,3 @@ def read_workbook_grids_with_quarantine(
     )
     return grid, quarantine
 
-
-def save_grid(df: DataFrame, path: str) -> None:
-    """Persist decoded grids as parquet (the replay/audit copy)."""
-    df.write.mode("overwrite").parquet(path)

@@ -1,4 +1,5 @@
-"""Sinks: partitioned/bucketed fact layout + JSON audit writer.
+"""Sinks: partitioned/bucketed fact layout, JSON audit writer and
+small-file compaction.
 
 The storage half of the 100 TB design: facts written
 date-partitioned (dynamic partition pruning reaches the §2 scans) and
@@ -9,6 +10,8 @@ probing (S12, src/helpers.ts:55-66).
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -89,67 +92,110 @@ def write_versioned_run(
     ) from last_exc
 
 
-def compact_dir(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ceil(total_bytes / target) files and atomically swap it in.
-    Returns the new file count.
-
-    The 100 TB housekeeping op: streaming sinks and per-batch MERGE
-    rewrites accrete kilobyte-scale files whose per-file open/footer
-    cost eventually dominates scans (and whose row groups are too
-    small for predicate skipping to bite). Repartition count comes
-    from the CURRENT on-disk bytes, so compaction is idempotent —
-    re-running on a compacted dir is a no-op rewrite to the same
-    count. coalesce() is deliberately NOT used: it would also narrow
-    the parallelism of the read stage to the target count; a real
-    shuffle keeps the read wide and only the write narrow.
-
-    Atomic publish mirrors streaming/cdc_sink.py: write to a sibling
-    tmp dir, rename away the old dir, rename the new one in — readers
-    see the old or new layout, never a partial MIX of files. The swap
-    is two renames, so there IS a sub-millisecond window where the
-    directory does not exist: a concurrent reader's listing can get
-    ENOENT and must treat it as transient (retry-on-missing is the
-    reader contract; each individual state is consistent). A crash
-    between the renames strands the data in ``.precompact`` — the
-    recovery preamble below restores it on the next invocation, so
-    compact_dir is also the repair tool for its own interrupted runs.
-    """
-    import math
-    import os
-    import shutil
-
-    tmp, old = f"{path}.compacting", f"{path}.precompact"
-    # startup recovery for a previous interrupted swap:
-    #  - .compacting left over → incomplete write, discard it
-    #  - .precompact present with path missing → crashed between the
-    #    two renames: restore the original directory
-    #  - .precompact present alongside path → crashed after publish,
-    #    before cleanup: the old copy is dead weight
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-    if os.path.isdir(old):
-        if not os.path.isdir(path):
-            os.rename(old, path)
-        else:
-            shutil.rmtree(old)
-
-    total = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, files in os.walk(path)
+def _part_parquet_files(d: str) -> list[str]:
+    return [
+        os.path.join(dp, f)
+        for dp, _, files in os.walk(d)
         for f in files
         if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    spark.read.parquet(path).repartition(n_files).write.mode("overwrite").parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return n_files
+    ]
+
+
+def compact_store(
+    spark,
+    store_dir: str,
+    target_file_bytes: int = 128 * 1024 * 1024,
+    subs: tuple[str, ...] = ("catalog", "docs"),
+) -> dict[str, int]:
+    """Small-file compaction of a partitioned store: every absorbed
+    batch appends one ``part=<batch>`` partition of kilobyte-scale
+    files to each sub-store (``<store>/catalog``, ``<store>/docs``),
+    and at crawl cadence per-file open/footer cost comes to dominate
+    every scan.  Each sub-store's live partitions are merged into ONE
+    new ``part=compact-<k>`` partition of ``ceil(total_bytes /
+    target_file_bytes)`` files, sized from the CURRENT on-disk bytes,
+    while every prior partition directory survives as an EMPTY marker
+    dir holding only an ``_ABSORBED`` flag file — a replay guard that
+    tests ``os.path.isdir`` on a batch's partition dir stays a no-op,
+    and Spark's file listing ignores both the empty dirs and the
+    underscore file, so readers see exactly the compacted rows.
+    ``repartition`` (a real shuffle) rather than ``coalesce`` keeps the
+    read wide and only the write narrow.
+
+    Crash safety: the new layout (compact parquet + marker dirs) is
+    assembled in a sibling ``.compacting`` tmp, then swapped in via two
+    renames with a ``.precompact`` fallback — readers see the old or
+    the new layout, never duplicates.  Between the renames there is a
+    sub-millisecond window where the sub-store does not exist, so a
+    concurrent reader's ENOENT is transient.  A crash there strands
+    the data in ``.precompact``; the recovery preamble restores it on
+    the next invocation, so compaction repairs its own interrupted
+    runs.  Re-compacting an already-compacted store merges the single
+    compact partition into the next-indexed one (a no-op rewrite, same
+    rows).
+
+    Run it quiesced: a batch absorbed mid-compaction could publish a
+    new partition into the pre-swap root and lose it.
+    Returns {sub-store: parquet file count after compaction}."""
+    import math
+    import re
+    import shutil
+
+    out: dict[str, int] = {}
+    for sub in subs:
+        root = os.path.join(store_dir, sub)
+        tmp, old = f"{root}.compacting", f"{root}.precompact"
+        # recovery preamble: discard a half-built tmp; restore a
+        # precompact stranded between the renames, or discard one left
+        # after publish
+        if os.path.isdir(tmp):
+            shutil.rmtree(tmp)
+        if os.path.isdir(old):
+            if not os.path.isdir(root):
+                os.rename(old, root)
+            else:
+                shutil.rmtree(old)
+        parts = sorted(
+            p for p in os.listdir(root) if p.startswith("part=")
+        )
+        live = [
+            p for p in parts if _part_parquet_files(os.path.join(root, p))
+        ]
+        if not live:
+            out[sub] = 0
+            continue
+        total = sum(
+            os.path.getsize(f)
+            for p in live
+            for f in _part_parquet_files(os.path.join(root, p))
+        )
+        n_files = max(1, math.ceil(total / target_file_bytes))
+        k = 1 + max(
+            (
+                int(m.group(1))
+                for p in parts
+                if (m := re.fullmatch(r"part=compact-(\d+)", p))
+            ),
+            default=0,
+        )
+        spark.read.parquet(
+            *(os.path.join(root, p) for p in live)
+        ).repartition(n_files).write.parquet(
+            os.path.join(tmp, f"part=compact-{k:06d}")
+        )
+        for p in parts:
+            marker = os.path.join(tmp, p)
+            os.makedirs(marker, exist_ok=True)
+            open(os.path.join(marker, "_ABSORBED"), "w").close()
+        os.rename(root, old)
+        os.rename(tmp, root)
+        shutil.rmtree(old)
+        out[sub] = len(
+            _part_parquet_files(
+                os.path.join(root, f"part=compact-{k:06d}")
+            )
+        )
+    return out
 
 
 def write_zorder_table(
