@@ -33,7 +33,7 @@ def test_every_package_module_is_reachable():
     """Every package module is imported, directly or transitively, by
     the catalog or by the EP1 job: a module only tests import is dead
     weight and must get a caller or be deleted. Package ``__init__``s
-    and ``session`` (the harness-owned session builder) are exempt.
+    and ``session`` (the SparkSession factory harnesses call) are exempt.
     The walk is static: ``import``/``from … import`` anywhere in a
     module's AST, with the ``__init__`` of every package on the way."""
     import ast

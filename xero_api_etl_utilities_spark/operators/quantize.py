@@ -163,10 +163,10 @@ def pq_codes(
     # Codebooks ride as ONE folded nested-array literal consumed by a
     # per-subspace ``transform``: an expression unrolled per code and
     # dimension would build ~2000 nodes through as many py4j calls —
-    # ~12 s of DRIVER plan-construction per index build.  The distance
-    # fold sums (v-c)² with FIXED left-to-right association (a leading
-    # 0.0 is exact: squares are never -0.0), so the oracle's
-    # identically-ordered sum is bit-equal.
+    # ~12 s of Python-side plan construction per index build.  The
+    # distance fold sums (v-c)² with FIXED left-to-right association
+    # (a leading 0.0 is exact: squares are never -0.0), so the
+    # oracle's identically-ordered sum is bit-equal.
     books = lit_doubles(
         [[[float(x) for x in c] for c in book] for book in codebooks]
     )

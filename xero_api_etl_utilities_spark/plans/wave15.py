@@ -97,7 +97,7 @@ def publish_absorb_replay(spark: SparkSession, sf_dir: str) -> str:
     100 TB shape: per batch the store contributes one scan of its band
     sidecar (~16 rows/doc, never the text outside verification) and
     the absorb is a map-only append — a continuous crawl's loop,
-    sequenced deterministically so the driver can hash the result.
+    sequenced deterministically so its result has a stable hash.
     """
     from xero_api_etl_utilities_spark.plans.wave10 import _prune_stale_runs
     from xero_api_etl_utilities_spark.plans.wave14 import _catalog_dir
