@@ -1,13 +1,10 @@
 """HttpJsonTransport against a real in-process HTTP server (stdlib
 http.server on a loopback port): pushed-filter GET, idempotent batched
-POST through the Spark sink, and the 5xx retry/backoff path; the same
-GET filters and POST idempotence through the file-backed
-LocalJsonTransport."""
+POST through the Spark sink, and the 5xx retry/backoff path."""
 
 from __future__ import annotations
 
 import json
-import os
 import threading
 import urllib.parse
 from functools import partial
@@ -18,7 +15,6 @@ from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.sources.rest import (
     HttpJsonTransport,
-    LocalJsonTransport,
     fetch_invoices,
     post_documents,
 )
@@ -141,35 +137,3 @@ def test_http_retry_after_http_date_not_a_crash(server):
     assert tr.post("invoices", [{"reference": "R-4"}]) == [
         {"reference": "R-4", "status": "OK"}
     ]
-
-
-def test_local_transport_get_filters(spark, tmp_path):
-    root = str(tmp_path / "rest")
-    os.makedirs(root)
-    with open(os.path.join(root, "invoices.json"), "w") as f:
-        json.dump(
-            [
-                {"invoice_id": "i1", "contact_name": "Day Dockets", "date_string": "2024-01-01", "status": "SUBMITTED", "reference": "T1/0001"},
-                {"invoice_id": "i2", "contact_name": "Day Dockets", "date_string": "2024-01-02", "status": "DRAFT", "reference": "T1/0002"},
-                {"invoice_id": "i3", "contact_name": "Other", "date_string": "2024-01-01", "status": "SUBMITTED", "reference": "T1/0003"},
-            ],
-            f,
-        )
-    t = LocalJsonTransport(root)
-    df = fetch_invoices(spark, t, date_string="2024-01-01")
-    rows = df.collect()
-    # S7 pushed filters: contact name + date + SUBMITTED status
-    assert [r["invoice_id"] for r in rows] == ["i1"]
-
-
-def test_post_documents_idempotent(spark, tmp_path):
-    root = str(tmp_path / "rest2")
-    docs = spark.createDataFrame(
-        [("ACCREC", "T1/0001", '{"a": 1}'), ("ACCREC", "T1/0002", '{"a": 2}')],
-        "doc_type string, reference string, payload string",
-    )
-    post_documents(docs, lambda: LocalJsonTransport(root))
-    post_documents(docs, lambda: LocalJsonTransport(root))  # retry: no dupes
-    with open(os.path.join(root, "invoices.out.jsonl")) as f:
-        lines = [json.loads(line) for line in f]
-    assert sorted(p["reference"] for p in lines) == ["T1/0001", "T1/0002"]

@@ -1,8 +1,9 @@
-"""Streaming incremental near-dedup (streaming/incremental_dedup.py,
-X173): per-batch verified (new × corpus) pairs against the frozen
-corpus band catalog must reproduce the batch form (X171) exactly, be
-exactly-once across checkpoint restarts, and never touch corpus text
-outside the candidate semi-join."""
+"""Small-file compaction of the incremental dedup store
+(sources/writer.compact_store, run by X181 ``dedup_catalog_compact``):
+a store of per-batch ``part=`` partitions under ``catalog`` and
+``docs`` must read back bit-identically after compaction, in fewer
+files, with every prior partition kept as a replay-guard marker, and
+an interrupted swap must repair itself on the next run."""
 
 from __future__ import annotations
 
@@ -10,265 +11,25 @@ import os
 
 from pyspark.sql import functions as F
 
-from xero_api_etl_utilities_spark.streaming.incremental_dedup import (
-    build_corpus_band_catalog,
-    stream_incremental_dedup_sink,
+from xero_api_etl_utilities_spark.operators.dedup import (
+    band_rows,
+    minhash_signatures,
 )
+from xero_api_etl_utilities_spark.sources.writer import compact_store
 
 SF = "/root/testdata/sf0.001"
 _DOCS_SCHEMA = "doc_id bigint, text string"
 
 
-def _drain(spark, drop, catalog_dir, corpus_path, pairs_dir, ckpt):
-    stream = (
-        spark.readStream.schema(_DOCS_SCHEMA).parquet(drop)
-    )
-    q = stream_incremental_dedup_sink(
-        stream, catalog_dir, corpus_path, pairs_dir, ckpt
-    )
-    q.awaitTermination()
-
-
-def _setup(spark, tmp_path):
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    corpus = docs.filter(F.col("doc_id") % 5 != 4)
-    new = docs.filter(F.col("doc_id") % 5 == 4)
-    corpus_path = str(tmp_path / "corpus")
-    corpus.write.parquet(corpus_path)
-    catalog_dir = str(tmp_path / "catalog")
-    build_corpus_band_catalog(
-        spark.read.parquet(corpus_path), catalog_dir
-    )
-    return corpus, new, corpus_path, catalog_dir
-
-
-def _batch_expected(spark):
-    from xero_api_etl_utilities_spark.plans.wave13 import (
-        dedup_incremental_pairs,
-    )
-
-    return {
-        (r["new_id"], r["corpus_id"], r["inter_size"], r["union_size"])
-        for r in dedup_incremental_pairs(spark, SF).collect()
-    }
-
-
-def _accumulated(spark, pairs_dir):
-    return {
-        (r["new_id"], r["corpus_id"], r["inter_size"], r["union_size"])
-        for r in spark.read.parquet(pairs_dir).collect()
-    }
-
-
-def test_single_batch_parity_with_batch_form(spark, tmp_path):
-    """All new docs in ONE batch: identical semantics to X171 — same
-    banding, same combined stop-bucket census, same verify rule."""
-    _, new, corpus_path, catalog_dir = _setup(spark, tmp_path)
-    drop = str(tmp_path / "drop")
-    pairs_dir = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "ckpt")
-    new.write.mode("append").parquet(drop)
-    _drain(spark, drop, catalog_dir, corpus_path, pairs_dir, ckpt)
-    expected = _batch_expected(spark)
-    assert len(expected) > 0
-    assert _accumulated(spark, pairs_dir) == expected
-
-
-def test_two_batches_restart_and_replay(spark, tmp_path):
-    """Two drops drained by RESTARTED availableNow queries on one
-    checkpoint: accumulated pairs equal the batch form (the bucket cap
-    never binds on this corpus, so the batch-local census matches the
-    global one — the module docstring's stated caveat), each pair
-    lands in the batch its new doc arrived in, and a replay with no
-    new files publishes nothing."""
-    _, new, corpus_path, catalog_dir = _setup(spark, tmp_path)
-    drop = str(tmp_path / "drop")
-    pairs_dir = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "ckpt")
-
-    first = new.filter(F.col("doc_id") % 2 == 0)
-    second = new.filter(F.col("doc_id") % 2 == 1)
-    first.write.mode("append").parquet(drop)
-    _drain(spark, drop, catalog_dir, corpus_path, pairs_dir, ckpt)
-    got_first = _accumulated(spark, pairs_dir)
-    first_ids = {r["doc_id"] for r in first.collect()}
-    assert got_first and all(p[0] in first_ids for p in got_first)
-
-    second.write.mode("append").parquet(drop)
-    _drain(spark, drop, catalog_dir, corpus_path, pairs_dir, ckpt)
-    assert _accumulated(spark, pairs_dir) == _batch_expected(spark)
-
-    # replay: no new files, same checkpoint -> no new batch dirs
-    n_dirs = len(os.listdir(pairs_dir))
-    _drain(spark, drop, catalog_dir, corpus_path, pairs_dir, ckpt)
-    assert len(os.listdir(pairs_dir)) == n_dirs
-
-
-def test_colliding_doc_id_fails_loudly(spark, tmp_path):
-    """A new-crawl doc_id that already exists in the frozen corpus
-    violates the module's disjoint-id precondition (ADVICE r13) —
-    verification would silently duplicate the id's rows in the
-    equi-joins and corrupt inter/union counts.  The guard must fail
-    the batch instead, and exactly-once publish means the failed
-    batch leaves no pairs behind."""
-    import pytest
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    corpus, new, corpus_path, catalog_dir = _setup(spark, tmp_path)
-    drop = str(tmp_path / "drop")
-    pairs_dir = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "ckpt")
-    # poison the drop with one corpus doc alongside the real new docs
-    new.unionByName(corpus.limit(1)).write.mode("append").parquet(drop)
-    with pytest.raises(StreamingQueryException, match="collide"):
-        _drain(spark, drop, catalog_dir, corpus_path, pairs_dir, ckpt)
-    assert not os.path.isdir(pairs_dir) or not [
-        d for d in os.listdir(pairs_dir) if d.startswith("batch=")
-    ]
-
-
-# ---------------------------------------------------------------------------
-# X178: the absorbing sink — the store grows with every accepted batch
-# ---------------------------------------------------------------------------
-
-
-def _replay_mixed_pairs(spark, store_docs, batch_docs):
-    """Independent replay of one batch's mixed-pair contract against a
-    given store: band the union, census store+batch buckets, keep
-    inner-joined buckets under the cap, verify candidates at 0.7 —
-    composed directly from the dedup operators, not the sink's code."""
-    from xero_api_etl_utilities_spark.operators.dedup import (
-        band_rows,
-        jaccard_verify,
-        minhash_signatures,
-    )
-
-    batch_ids = {r["doc_id"] for r in batch_docs.select("doc_id").collect()}
-    all_docs = store_docs.unionByName(batch_docs)
-    bands = band_rows(
-        minhash_signatures(all_docs, "doc_id", "text", n=1, num_hashes=64),
+def _absorb(docs, store_dir, part):
+    """Append one batch's partition to both sub-stores, several small
+    files each, the layout an absorbed batch leaves behind."""
+    band_rows(
+        minhash_signatures(docs, "doc_id", "text", n=1, num_hashes=64),
         16,
         4,
-    ).withColumn("is_new", F.col("doc").isin(batch_ids))
-    s = bands.filter(~F.col("is_new"))
-    b = bands.filter(F.col("is_new"))
-    kept = (
-        s.groupBy("band", "bh")
-        .agg(F.count(F.lit(1)).alias("n_store"))
-        .join(
-            b.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("n_new")),
-            ["band", "bh"],
-        )
-        .filter(F.col("n_store") + F.col("n_new") <= 500)
-        .select("band", "bh")
-    )
-    cands = (
-        b.join(kept, ["band", "bh"])
-        .select("band", "bh", F.col("doc").alias("doc_a"))
-        .join(
-            s.select("band", "bh", F.col("doc").alias("doc_b")),
-            ["band", "bh"],
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    verified = jaccard_verify(cands, all_docs, "doc_id", "text", n=1)
-    return {
-        (r["doc_a"], r["doc_b"], r["inter_size"], r["union_size"])
-        for r in verified.collect()
-    }
-
-
-def test_absorbing_sink_grows_the_store(spark, tmp_path):
-    """X178: batch 2 must dedup against batch 1's absorbed docs (a
-    planted near-dup guarantees a cross-arrival pair), the accumulated
-    pairs must equal the per-batch independent replays against the
-    store AS OF each arrival, the absorbed store must equal a
-    from-scratch build over all documents, and a drained checkpoint
-    replay must publish nothing."""
-    from xero_api_etl_utilities_spark.operators.dedup import (
-        band_rows,
-        minhash_signatures,
-    )
-    from xero_api_etl_utilities_spark.streaming.incremental_dedup import (
-        build_dedup_store,
-        stream_absorbing_dedup_sink,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    corpus = docs.filter(F.col("doc_id") % 5 != 4)
-    arrivals = docs.filter(F.col("doc_id") % 5 == 4)
-    b1 = arrivals.filter(F.col("doc_id") % 2 == 0)
-    planted_text = (
-        b1.orderBy("doc_id").limit(1).collect()[0]["text"]
-    )
-    planted = spark.createDataFrame(
-        [(10_000_019, planted_text)], _DOCS_SCHEMA
-    )
-    b2 = arrivals.filter(F.col("doc_id") % 2 == 1).unionByName(planted)
-
-    store_dir = str(tmp_path / "store")
-    pairs_dir = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "ckpt")
-    drop = str(tmp_path / "drop")
-    build_dedup_store(corpus, store_dir)
-
-    def _drain_absorbing():
-        stream = spark.readStream.schema(_DOCS_SCHEMA).parquet(drop)
-        q = stream_absorbing_dedup_sink(stream, store_dir, pairs_dir, ckpt)
-        q.awaitTermination()
-
-    b1.write.mode("append").parquet(drop)
-    _drain_absorbing()
-    got1 = {
-        (r["new_id"], r["store_id"], r["inter_size"], r["union_size"])
-        for r in spark.read.parquet(pairs_dir).collect()
-    }
-    assert got1 == _replay_mixed_pairs(spark, corpus, b1)
-
-    b2.write.mode("append").parquet(drop)
-    _drain_absorbing()
-    got_all = {
-        (r["new_id"], r["store_id"], r["inter_size"], r["union_size"])
-        for r in spark.read.parquet(pairs_dir).collect()
-    }
-    expected2 = _replay_mixed_pairs(spark, corpus.unionByName(b1), b2)
-    assert got_all == got1 | expected2
-    # the growth is live: the planted near-dup pairs against a BATCH-1
-    # document, which only an absorbed (non-frozen) store can see
-    b1_ids = {r["doc_id"] for r in b1.select("doc_id").collect()}
-    assert any(p[0] == 10_000_019 and p[1] in b1_ids for p in got_all)
-
-    # absorbed store == from-scratch build over every document
-    all_docs = corpus.unionByName(b1).unionByName(b2)
-    want_cat = {
-        (r["doc"], r["band"], r["bh"])
-        for r in band_rows(
-            minhash_signatures(all_docs, "doc_id", "text", n=1, num_hashes=64),
-            16,
-            4,
-        ).collect()
-    }
-    got_cat = {
-        (r["doc"], r["band"], r["bh"])
-        for r in spark.read.parquet(f"{store_dir}/catalog").collect()
-    }
-    assert got_cat == want_cat
-    got_docs = {
-        r["doc_id"] for r in spark.read.parquet(f"{store_dir}/docs").collect()
-    }
-    assert got_docs == {r["doc_id"] for r in all_docs.collect()}
-
-    # replay: no new files -> no new pair batches, no new store parts
-    n_pairs_dirs = len(os.listdir(pairs_dir))
-    n_cat_parts = len(os.listdir(f"{store_dir}/catalog"))
-    _drain_absorbing()
-    assert len(os.listdir(pairs_dir)) == n_pairs_dirs
-    assert len(os.listdir(f"{store_dir}/catalog")) == n_cat_parts
+    ).repartition(4).write.parquet(f"{store_dir}/catalog/part={part}")
+    docs.repartition(4).write.parquet(f"{store_dir}/docs/part={part}")
 
 
 def _store_sets(spark, store_dir):
@@ -292,20 +53,11 @@ def _store_parquet_count(store_dir):
 
 
 def test_compact_store_preserves_semantics(spark, tmp_path):
-    """X178's open scale edge (VERDICT r14 item 2): the absorbing
-    sink accretes one partition of ~32 small files per batch forever.
-    compact_store must (a) leave the store readback and the published
-    pairs bit-identical, (b) strictly reduce the parquet file count,
-    (c) keep every batch's replay guard alive (marker dirs), and (d)
-    let a subsequent batch — drained by a RESTARTED query on the same
-    checkpoint — dedup correctly against the compacted store,
-    including pairing with a pre-compaction absorbed document."""
-    from xero_api_etl_utilities_spark.streaming.incremental_dedup import (
-        build_dedup_store,
-        compact_store,
-        stream_absorbing_dedup_sink,
-    )
-
+    """compact_store must (a) leave the store readback bit-identical,
+    (b) strictly reduce the parquet file count, (c) keep every batch's
+    partition dir as a replay-guard marker beside the compact one, and
+    (d) fold a batch absorbed after compaction into the next-indexed
+    compact partition on a re-run, rows unchanged."""
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
         "doc_id", "text"
     )
@@ -314,32 +66,17 @@ def test_compact_store_preserves_semantics(spark, tmp_path):
     b1 = arrivals.filter(F.col("doc_id") % 3 == 0)
     b2 = arrivals.filter(F.col("doc_id") % 3 == 1)
     b3 = arrivals.filter(F.col("doc_id") % 3 == 2)
-    # batch 4 plants a near-dup of a BATCH-1 doc: post-compaction
-    # dedup must still see pre-compaction absorbed arrivals
+    # batch 4 arrives after compaction: a near-dup of a batch-1 doc
     planted_src = b1.orderBy("doc_id").limit(1).collect()[0]
     b4 = spark.createDataFrame(
         [(10_000_019, planted_src["text"])], _DOCS_SCHEMA
     )
 
     store_dir = str(tmp_path / "store")
-    pairs_dir = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "ckpt")
-    drop = str(tmp_path / "drop")
-    build_dedup_store(corpus, store_dir)
-
-    def _drain_absorbing():
-        stream = spark.readStream.schema(_DOCS_SCHEMA).parquet(drop)
-        q = stream_absorbing_dedup_sink(stream, store_dir, pairs_dir, ckpt)
-        q.awaitTermination()
-
-    for b in (b1, b2, b3):
-        b.write.mode("append").parquet(drop)
-        _drain_absorbing()
+    for part, b in (("corpus", corpus), ("b1", b1), ("b2", b2), ("b3", b3)):
+        _absorb(b, store_dir, part)
 
     pre_cat, pre_docs = _store_sets(spark, store_dir)
-    pre_pairs = {
-        tuple(r) for r in spark.read.parquet(pairs_dir).collect()
-    }
     pre_files = _store_parquet_count(store_dir)
     pre_parts = {
         sub: sorted(os.listdir(f"{store_dir}/{sub}"))
@@ -352,11 +89,8 @@ def test_compact_store_preserves_semantics(spark, tmp_path):
         v >= 1 for v in n_out.values()
     )
 
-    # (a) readback and pairs bit-identical
+    # (a) readback bit-identical
     assert _store_sets(spark, store_dir) == (pre_cat, pre_docs)
-    assert {
-        tuple(r) for r in spark.read.parquet(pairs_dir).collect()
-    } == pre_pairs
     # (b) file count strictly reduced: 4 partitions x many small
     # files -> one compact partition per sub-store
     post_files = _store_parquet_count(store_dir)
@@ -367,39 +101,13 @@ def test_compact_store_preserves_semantics(spark, tmp_path):
     for sub, parts in pre_parts.items():
         now = set(os.listdir(f"{store_dir}/{sub}"))
         assert set(parts) <= now
-        assert any(p.startswith("part=compact-") for p in now)
+        assert "part=compact-000001" in now
+        for p in parts:
+            assert os.listdir(f"{store_dir}/{sub}/{p}") == ["_ABSORBED"]
 
-    # replay with no new files: publishes nothing, absorbs nothing
-    n_pairs_dirs = len(os.listdir(pairs_dir))
-    _drain_absorbing()
-    assert len(os.listdir(pairs_dir)) == n_pairs_dirs
-    assert _store_sets(spark, store_dir) == (pre_cat, pre_docs)
-
-    # (d) batch 4 against the COMPACTED store, restarted checkpoint
-    b4.write.mode("append").parquet(drop)
-    _drain_absorbing()
-    got = {
-        (r["new_id"], r["store_id"], r["inter_size"], r["union_size"])
-        for r in spark.read.parquet(pairs_dir).collect()
-    }
-    new_pairs = got - {
-        (p[0], p[1], p[2], p[3]) for p in pre_pairs
-    }
-    store_before_b4 = corpus.unionByName(b1).unionByName(b2).unionByName(b3)
-    assert new_pairs == _replay_mixed_pairs(spark, store_before_b4, b4)
-    b1_ids = {r["doc_id"] for r in b1.select("doc_id").collect()}
-    assert any(
-        p[0] == 10_000_019 and p[1] in b1_ids for p in new_pairs
-    )
-    # b4's absorb landed as a fresh partition next to the compact one
+    # (d) batch 4 lands as a fresh partition next to the compact one
+    _absorb(b4, store_dir, "b4")
     assert _store_parquet_count(store_dir) > post_files
-
-    # idempotent re-compaction: same rows, next compact index
-    from xero_api_etl_utilities_spark.operators.dedup import (
-        band_rows,
-        minhash_signatures,
-    )
-
     want_cat = pre_cat | {
         (r["doc"], r["band"], r["bh"])
         for r in band_rows(
@@ -412,61 +120,46 @@ def test_compact_store_preserves_semantics(spark, tmp_path):
     got_cat, got_docs = _store_sets(spark, store_dir)
     assert got_cat == want_cat
     assert got_docs == pre_docs | {(10_000_019, planted_src["text"])}
+    for sub in ("catalog", "docs"):
+        now = set(os.listdir(f"{store_dir}/{sub}"))
+        assert {"part=compact-000001", "part=compact-000002", "part=b4"} <= now
+    assert _store_parquet_count(store_dir) == sum(
+        len(
+            [
+                f
+                for f in os.listdir(
+                    f"{store_dir}/{sub}/part=compact-000002"
+                )
+                if f.endswith(".parquet")
+            ]
+        )
+        for sub in ("catalog", "docs")
+    )
 
 
 def test_compact_store_recovers_interrupted_swap(spark, tmp_path):
     """A crash between compact_store's two renames strands the store
-    in ``.precompact``; the recovery preamble must restore it, exactly
-    like sources/writer.compact_dir's contract."""
-    from xero_api_etl_utilities_spark.streaming.incremental_dedup import (
-        build_dedup_store,
-        compact_store,
-    )
-
-    docs = (
-        spark.read.parquet(f"{SF}/documents.parquet")
-        .select("doc_id", "text")
-        .limit(50)
-    )
+    in ``.precompact``; the recovery preamble must restore it and the
+    run must then complete the compaction."""
     store_dir = str(tmp_path / "store")
-    build_dedup_store(docs, store_dir)
-    pre = _store_sets(spark, store_dir)
+    cat_dir = os.path.join(store_dir, "catalog")
+    for part, lo in (("part=a", 0), ("part=b", 500)):
+        spark.range(lo, lo + 500).repartition(8).write.parquet(
+            os.path.join(cat_dir, part)
+        )
+
+    def _rows():
+        return sorted(r["id"] for r in spark.read.parquet(cat_dir).collect())
+
+    pre = _rows()
     # simulate the crash window: root renamed away, new root not yet in
-    os.rename(f"{store_dir}/catalog", f"{store_dir}/catalog.precompact")
-    compact_store(spark, store_dir)
-    assert _store_sets(spark, store_dir) == pre
-
-
-def test_absorbing_sink_collision_with_absorbed_batch_fails(spark, tmp_path):
-    """The disjoint-id guard must also catch collisions with ALREADY
-    ABSORBED arrivals, not just the seed corpus."""
-    import pytest
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-    from xero_api_etl_utilities_spark.streaming.incremental_dedup import (
-        build_dedup_store,
-        stream_absorbing_dedup_sink,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    corpus = docs.filter(F.col("doc_id") % 5 != 4)
-    b1 = docs.filter(F.col("doc_id") % 5 == 4).limit(5)
-
-    store_dir = str(tmp_path / "store")
-    pairs_dir = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "ckpt")
-    drop = str(tmp_path / "drop")
-    build_dedup_store(corpus, store_dir)
-
-    def _drain_absorbing():
-        stream = spark.readStream.schema(_DOCS_SCHEMA).parquet(drop)
-        q = stream_absorbing_dedup_sink(stream, store_dir, pairs_dir, ckpt)
-        q.awaitTermination()
-
-    b1.write.mode("append").parquet(drop)
-    _drain_absorbing()
-    # second drop re-sends a batch-1 doc id: collides with the store
-    b1.limit(1).write.mode("append").parquet(drop)
-    with pytest.raises(StreamingQueryException, match="collide"):
-        _drain_absorbing()
+    os.rename(cat_dir, f"{cat_dir}.precompact")
+    n = compact_store(spark, store_dir, subs=("catalog",))
+    assert _rows() == pre
+    assert not os.path.isdir(f"{cat_dir}.precompact")
+    assert n == {"catalog": 1}
+    assert sorted(os.listdir(cat_dir)) == [
+        "part=a",
+        "part=b",
+        "part=compact-000001",
+    ]

@@ -1,14 +1,13 @@
-"""Streaming surface, REST transport, and multimodal plumbing tests."""
+"""REST transport and multimodal plumbing tests: pushed-filter GET and
+idempotent POST through the file-backed LocalJsonTransport, and the
+multimodal feature, frame-sampling and resize operators."""
 
 from __future__ import annotations
 
-import datetime
 import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from xero_api_etl_utilities_spark.operators.multimodal import (
     MEDIA_SCHEMA,
@@ -21,92 +20,6 @@ from xero_api_etl_utilities_spark.sources.rest import (
     fetch_invoices,
     post_documents,
 )
-from xero_api_etl_utilities_spark.streaming.filestream import (
-    dedup_within_watermark,
-    run_available_now,
-    stream_drop_dir,
-    windowed_event_counts,
-)
-
-EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-    ]
-)
-
-
-def _write_events(spark, path, rows):
-    spark.createDataFrame(rows, EVENT_SCHEMA).write.mode("append").parquet(path)
-
-
-def test_available_now_drains_drop_dir(spark, tmp_path):
-    drop = str(tmp_path / "drop")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    t0 = datetime.datetime(2024, 1, 1, 10, 0, 0)
-    _write_events(spark, drop, [(1, t0, 1, "view"), (2, t0, 2, "click")])
-
-    stream = stream_drop_dir(spark, drop, EVENT_SCHEMA)
-    assert stream.isStreaming
-    run_available_now(stream, ckpt, out)
-    assert spark.read.parquet(out).count() == 2
-
-    # second drop: only the NEW file is processed (checkpointed source)
-    _write_events(spark, drop, [(3, t0, 3, "view")])
-    run_available_now(stream_drop_dir(spark, drop, EVENT_SCHEMA), ckpt, out)
-    assert spark.read.parquet(out).count() == 3
-
-
-def test_windowed_counts_streaming(spark, tmp_path):
-    drop = str(tmp_path / "drop2")
-    t0 = datetime.datetime(2024, 1, 1, 10, 15, 0)
-    _write_events(
-        spark,
-        drop,
-        [
-            (1, t0, 1, "view"),
-            (2, t0 + datetime.timedelta(minutes=10), 2, "view"),
-            (3, t0 + datetime.timedelta(hours=2), 1, "click"),
-        ],
-    )
-    agg = windowed_event_counts(stream_drop_dir(spark, drop, EVENT_SCHEMA), "1 hour")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["window_start"].hour, r["event_type"]): r["n_events"]
-        for r in spark.sql("select * from win_counts").collect()
-    }
-    assert got == {(10, "view"): 2, (12, "click"): 1}
-
-
-def test_dedup_within_watermark_stream(spark, tmp_path):
-    drop = str(tmp_path / "drop3")
-    t0 = datetime.datetime(2024, 1, 1, 10, 0, 0)
-    _write_events(
-        spark,
-        drop,
-        [(1, t0, 1, "view"), (1, t0 + datetime.timedelta(seconds=5), 1, "view"), (2, t0, 2, "click")],
-    )
-    dd = dedup_within_watermark(stream_drop_dir(spark, drop, EVENT_SCHEMA), "1 hour")
-    q = (
-        dd.writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert spark.sql("select count(distinct event_id) c from dedup_stream").collect()[0]["c"] == 2
-    assert spark.sql("select count(*) c from dedup_stream").collect()[0]["c"] == 2
 
 
 def test_local_transport_get_filters(spark, tmp_path):
@@ -164,54 +77,6 @@ def test_frame_sample_plan(spark):
     assert [(r["frame_no"], r["frame_ts_ms"]) for r in frames] == [(0, 0), (1, 1000), (2, 2000)]
 
 
-def test_stream_exact_text_dedup(spark, tmp_path):
-    """Digest-keyed streaming dedup: duplicate texts within the
-    watermark horizon are dropped across micro-batches; distinct texts
-    survive; the digest column does not leak into the output."""
-    from xero_api_etl_utilities_spark.streaming.filestream import (
-        stream_exact_text_dedup,
-    )
-
-    doc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("ingest_ts", T.TimestampType()),
-        ]
-    )
-    drop = str(tmp_path / "drop")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    t0 = datetime.datetime(2024, 1, 1, 10, 0, 0)
-    rows = [
-        (1, "alpha beta", t0),
-        (2, "alpha beta", t0),               # dup of 1, same batch
-        (3, "gamma", t0),
-    ]
-    spark.createDataFrame(rows, doc_schema).write.mode("append").parquet(drop)
-
-    dd = stream_exact_text_dedup(
-        spark.readStream.schema(doc_schema).parquet(drop), watermark="1 hour"
-    )
-    run_available_now(dd, ckpt, out)
-    got = spark.read.parquet(out)
-    assert got.columns == ["doc_id", "text", "ingest_ts"]
-    texts = sorted(r["text"] for r in got.collect())
-    assert texts == ["alpha beta", "gamma"]
-
-    # next micro-batch: a dup within the horizon is still dropped,
-    # a new text passes
-    spark.createDataFrame(
-        [(4, "alpha beta", t0), (5, "delta", t0)], doc_schema
-    ).write.mode("append").parquet(drop)
-    dd2 = stream_exact_text_dedup(
-        spark.readStream.schema(doc_schema).parquet(drop), watermark="1 hour"
-    )
-    run_available_now(dd2, ckpt, out)
-    texts = sorted(r["text"] for r in spark.read.parquet(out).collect())
-    assert texts == ["alpha beta", "delta", "gamma"]
-
-
 def test_resize_media(spark):
     from xero_api_etl_utilities_spark.operators.multimodal import (
         fake_resize,
@@ -232,884 +97,3 @@ def test_resize_media(spark):
     # deterministic and content-dependent
     assert bytes(out[1]["content"]) == fake_resize(b"img-a", 64, 32)
     assert out[1]["content"] != out[2]["content"]
-
-
-def test_stream_corpus_hygiene(spark, tmp_path):
-    """The hygiene stream normalizes+masks text, applies the quality
-    and repetition gates, and dedups by digest - all in one
-    availableNow drain."""
-    from xero_api_etl_utilities_spark.streaming.filestream import (
-        run_available_now,
-        stream_corpus_hygiene,
-    )
-
-    doc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("ingest_ts", T.TimestampType()),
-        ]
-    )
-    drop = str(tmp_path / "drop")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    t0 = datetime.datetime(2024, 1, 1, 10, 0, 0)
-    good = "The quick brown fox jumps over the lazy dog and runs to the old barn"
-    rows = [
-        (1, good, t0),
-        (2, good, t0),  # exact dup after normalization -> dropped
-        (3, "tiny", t0),  # fails the length gate
-        (4, "the spam the spam the spam the spam the spam the spam", t0),  # repetitive
-        (5, good + " mail bob@example.com for details", t0),  # PII masked
-    ]
-    spark.createDataFrame(rows, doc_schema).write.mode("append").parquet(drop)
-
-    cleaned = stream_corpus_hygiene(
-        spark.readStream.schema(doc_schema).parquet(drop)
-    )
-    run_available_now(cleaned, ckpt, out)
-    got = {r["doc_id"]: r["text"] for r in spark.read.parquet(out).collect()}
-    # docs 1 and 2 are identical post-normalization: exactly one
-    # survives (which one is micro-batch arrival order, not contract)
-    assert len(got) == 2 and len(set(got) & {1, 2}) == 1 and 5 in got
-    surviving_dup = (set(got) & {1, 2}).pop()
-    assert got[surviving_dup] == good.lower()
-    assert "[EMAIL]" in got[5] and "bob@" not in got[5]
-
-
-def test_stream_static_dim_enrich(spark, tmp_path):
-    """Stream-static broadcast join: events stream enriched with a
-    static dim; unmatched keys survive with NULL attributes."""
-    import datetime
-
-    from pyspark.sql import types as T
-
-    from xero_api_etl_utilities_spark.streaming.filestream import (
-        enrich_stream_with_dim,
-        stream_drop_dir,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-        ]
-    )
-    drop, ckpt, out = (str(tmp_path / d) for d in ("drop", "ckpt", "out"))
-    t0 = datetime.datetime(2024, 1, 1, 10, 0, 0)
-    spark.createDataFrame(
-        [(1, t0, 10), (2, t0, 20), (3, t0, 99)], schema
-    ).write.parquet(drop)
-    dim = spark.createDataFrame(
-        [(10, "gold"), (20, "silver")], ["user_id", "tier"]
-    )
-    q = (
-        enrich_stream_with_dim(stream_drop_dir(spark, drop, schema), dim, on="user_id")
-        .writeStream.format("parquet")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .option("path", out)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = {r["event_id"]: r["tier"] for r in spark.read.parquet(out).collect()}
-    assert rows == {1: "gold", 2: "silver", 3: None}
-
-
-def test_streaming_cdc_apply(spark, tmp_path):
-    """foreachBatch MERGE sink: change batches fold into a latest-wins
-    parquet snapshot across two availableNow runs (upsert, update,
-    delete), snapshot dir swapped atomically."""
-    from pyspark.sql import types as T
-
-    from xero_api_etl_utilities_spark.streaming.cdc_sink import apply_cdc_stream
-
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("val", T.StringType()),
-            T.StructField("v", T.LongType()),
-            T.StructField("del", T.BooleanType()),
-        ]
-    )
-    drop, ckpt, snap = (str(tmp_path / d) for d in ("drop", "ckpt", "snap"))
-
-    def run():
-        src = spark.readStream.schema(schema).parquet(drop)
-        q = apply_cdc_stream(
-            src, snap, key_cols=["k"], version_col="v",
-            delete_col="del", checkpoint_dir=ckpt,
-        )
-        q.awaitTermination()
-        return {r["k"]: r["val"] for r in spark.read.parquet(snap).collect()}
-
-    # batch 1: three inserts
-    spark.createDataFrame(
-        [(1, "a", 1, False), (2, "b", 1, False), (3, "c", 1, False)], schema
-    ).write.mode("append").parquet(drop)
-    assert run() == {1: "a", 2: "b", 3: "c"}
-
-    # batch 2: update 2, delete 3, insert 4
-    spark.createDataFrame(
-        [(2, "B", 2, False), (3, "c", 2, True), (4, "d", 2, False)], schema
-    ).write.mode("append").parquet(drop)
-    assert run() == {1: "a", 2: "B", 4: "d"}
-
-
-def test_streaming_cdc_apply_partitioned(spark, tmp_path):
-    """Partitioned MERGE sink: only touched partition dirs rewritten
-    (untouched files byte-identical), emptied partitions removed."""
-    import glob
-    import os
-
-    from pyspark.sql import types as T
-
-    from xero_api_etl_utilities_spark.streaming.cdc_sink import apply_cdc_stream
-
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("part", T.StringType()),
-            T.StructField("val", T.StringType()),
-            T.StructField("v", T.LongType()),
-            T.StructField("del", T.BooleanType()),
-        ]
-    )
-    drop, ckpt, snap = (str(tmp_path / d) for d in ("drop", "ckpt", "snap"))
-
-    def run():
-        src = spark.readStream.schema(schema).parquet(drop)
-        q = apply_cdc_stream(
-            src, snap, key_cols=["k"], version_col="v",
-            delete_col="del", checkpoint_dir=ckpt, partition_col="part",
-        )
-        q.awaitTermination()
-        return {
-            r["k"]: (r["part"], r["val"])
-            for r in spark.read.parquet(snap).collect()
-        }
-
-    spark.createDataFrame(
-        [
-            (1, "p1", "a", 1, False),
-            (2, "p1", "b", 1, False),
-            (3, "p2", "c", 1, False),
-            (4, "p3", "d", 1, False),
-        ],
-        schema,
-    ).write.mode("append").parquet(drop)
-    assert run() == {1: ("p1", "a"), 2: ("p1", "b"), 3: ("p2", "c"), 4: ("p3", "d")}
-    p2_files = {
-        f: os.path.getmtime(f) for f in glob.glob(f"{snap}/part=p2/*.parquet")
-    }
-    assert p2_files
-
-    # batch 2: update in p1, delete ALL of p3 (partition must vanish);
-    # p2 untouched — its files must be byte-identical afterwards
-    spark.createDataFrame(
-        [(2, "p1", "B", 2, False), (4, "p3", "d", 2, True)], schema
-    ).write.mode("append").parquet(drop)
-    assert run() == {1: ("p1", "a"), 2: ("p1", "B"), 3: ("p2", "c")}
-    assert not os.path.isdir(f"{snap}/part=p3")
-    assert {
-        f: os.path.getmtime(f) for f in glob.glob(f"{snap}/part=p2/*.parquet")
-    } == p2_files
-
-
-def test_streaming_incremental_rollup(spark, tmp_path):
-    """Additive IVM: per-key sums/counts fold across availableNow runs
-    without a state store; totals equal the batch recomputation."""
-    import datetime
-
-    from pyspark.sql import types as T
-
-    from xero_api_etl_utilities_spark.streaming.cdc_sink import apply_rollup_stream
-
-    schema = T.StructType(
-        [
-            T.StructField("k", T.StringType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("v", T.LongType()),
-        ]
-    )
-    drop, ckpt, snap = (str(tmp_path / d) for d in ("drop", "ckpt", "snap"))
-    t0 = datetime.datetime(2024, 1, 1, 10, 0, 0)
-
-    def run():
-        src = spark.readStream.schema(schema).parquet(drop)
-        q = apply_rollup_stream(
-            src, snap, group_cols=["k"],
-            agg_exprs={"n": "count(*)", "total": "sum(v)"},
-            checkpoint_dir=ckpt,
-        )
-        q.awaitTermination()
-        return {
-            r["k"]: (r["n"], r["total"])
-            for r in spark.read.parquet(snap).collect()
-        }
-
-    spark.createDataFrame(
-        [("a", t0, 1), ("a", t0, 2), ("b", t0, 10)], schema
-    ).write.mode("append").parquet(drop)
-    assert run() == {"a": (2, 3), "b": (1, 10)}
-
-    spark.createDataFrame(
-        [("a", t0, 5), ("c", t0, 7)], schema
-    ).write.mode("append").parquet(drop)
-    assert run() == {"a": (3, 8), "b": (1, 10), "c": (1, 7)}
-
-
-def test_rollup_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: deleting the checkpoint's commit
-    marker for the last batch (the exact on-disk state after a crash
-    between snapshot publish and checkpoint commit) makes the restarted
-    query replay that batch. The (run, batch_id) marker in the snapshot
-    must keep the replay from double-counting the additive fold."""
-    import datetime
-    import os
-
-    from pyspark.sql import types as T
-
-    from xero_api_etl_utilities_spark.streaming.cdc_sink import apply_rollup_stream
-
-    schema = T.StructType(
-        [
-            T.StructField("k", T.StringType()),
-            T.StructField("v", T.LongType()),
-        ]
-    )
-    drop, ckpt, snap = (str(tmp_path / d) for d in ("drop", "ckpt", "snap"))
-
-    def run(ckpt_dir):
-        src = spark.readStream.schema(schema).parquet(drop)
-        q = apply_rollup_stream(
-            src, snap, group_cols=["k"],
-            agg_exprs={"n": "count(*)", "total": "sum(v)"},
-            checkpoint_dir=ckpt_dir,
-        )
-        q.awaitTermination()
-        return {
-            r["k"]: (r["n"], r["total"]) for r in spark.read.parquet(snap).collect()
-        }
-
-    spark.createDataFrame([("a", 1), ("a", 2), ("b", 10)], schema).write.mode(
-        "append"
-    ).parquet(drop)
-    assert run(ckpt) == {"a": (2, 3), "b": (1, 10)}
-
-    # crash simulation: batch 0 published to the snapshot but its
-    # checkpoint commit never landed. Restart from a restored copy of
-    # that pre-commit checkpoint state (fresh path so the same-JVM
-    # concurrent-use guard doesn't trip; the query id in `metadata` —
-    # the marker's run identity — is identical): Spark replays batch 0.
-    import shutil
-
-    ckpt_restored = str(tmp_path / "ckpt_restored")
-    shutil.copytree(ckpt, ckpt_restored)
-    os.remove(os.path.join(ckpt_restored, "commits", "0"))
-    # a real crash also never wrote the checksum twin; leaving it would
-    # make the commit re-write look like a concurrent writer
-    os.remove(os.path.join(ckpt_restored, "commits", ".0.crc"))
-    assert run(ckpt_restored) == {"a": (2, 3), "b": (1, 10)}  # not double-counted
-
-    # a genuinely new batch in the same run still folds
-    spark.createDataFrame([("a", 5)], schema).write.mode("append").parquet(drop)
-    assert run(ckpt_restored) == {"a": (3, 8), "b": (1, 10)}
-
-    # a FRESH checkpoint has a new query id and restarts batch ids at
-    # 0, re-ingesting the whole drop dir; its batch 0 must NOT be
-    # mistaken for a replay of the old run's batch 0 (the re-fold
-    # re-counts everything — that is fresh-checkpoint semantics, the
-    # marker only guards same-run replays)
-    ckpt_fresh = str(tmp_path / "ckpt_fresh")
-    spark.createDataFrame([("c", 7)], schema).write.mode("append").parquet(drop)
-    out = run(ckpt_fresh)
-    assert out["c"] == (1, 7)
-
-
-def test_inline_minhash_bands_match_batch_pipeline(spark):
-    """The in-row (streaming-safe) band values must be BIT-IDENTICAL
-    to the batch explode+groupBy signature pipeline's banding."""
-    from xero_api_etl_utilities_spark.functions.crosshash import h32
-    from xero_api_etl_utilities_spark.operators import dedup as dd
-    from xero_api_etl_utilities_spark.streaming.filestream import (
-        inline_minhash_bands,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "pack my box with five dozen liquor jugs"),
-            (3, "the quick brown fox jumps over the lazy dog again"),
-            (4, ""),  # zero tokens -> zero band rows
-        ],
-        "doc_id bigint, text string",
-    )
-    got = {
-        (r["doc_id"], r["band"]): r["bv"]
-        for r in inline_minhash_bands(docs, "text").collect()
-    }
-    sigs = dd.minhash_signatures(docs, "doc_id", "text", n=1, num_hashes=64)
-    expected = {}
-    for r in sigs.collect():
-        for b in range(16):
-            key = "|".join(str(r[f"mh_{b * 4 + q}"]) for q in range(4))
-            import hashlib
-
-            expected[(r["doc"], b)] = int(hashlib.md5(key.encode()).hexdigest()[:8], 16)
-    assert got == expected
-    assert not [k for k in got if k[0] == 4]
-
-    # inconsistent band layout must fail fast with a clear message,
-    # not die later on a nonexistent mh_* column
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="exceeds num_hashes"):
-        inline_minhash_bands(docs, "text", num_hashes=32)
-
-
-def test_stream_neardup_guard_quarantines_reference_neighbors(spark, tmp_path):
-    """End to end through a real availableNow stream: docs sharing an
-    LSH band with the static reference land in quarantine, the rest
-    pass clean, and suspects + clean partition the feed."""
-    from xero_api_etl_utilities_spark.streaming.filestream import (
-        run_available_now,
-        stream_neardup_guard,
-    )
-
-    doc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    ref_text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    reference = spark.createDataFrame([(100, ref_text)], doc_schema)
-    rows = [
-        (1, ref_text),                                   # identical -> suspect
-        (2, ref_text + " lambda"),                       # near-dup -> suspect
-        (3, "completely different words about spark engines and parquet files"),
-        (4, ""),                                         # tokenless -> clean
-    ]
-    drop = str(tmp_path / "drop")
-    spark.createDataFrame(rows, doc_schema).write.mode("append").parquet(drop)
-
-    outcomes = {}
-    for emit in ("suspects", "clean"):
-        out = str(tmp_path / f"out_{emit}")
-        ckpt = str(tmp_path / f"ckpt_{emit}")
-        guarded = stream_neardup_guard(
-            spark.readStream.schema(doc_schema).parquet(drop),
-            reference,
-            emit=emit,
-        )
-        run_available_now(guarded, ckpt, out)
-        outcomes[emit] = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert 1 in outcomes["suspects"] and 2 in outcomes["suspects"]
-    assert 3 in outcomes["clean"] and 4 in outcomes["clean"]
-    assert outcomes["suspects"] | outcomes["clean"] == {1, 2, 3, 4}
-    assert outcomes["suspects"] & outcomes["clean"] == set()
-
-    # batch parity: the same function on the same frames as plain batch
-    from xero_api_etl_utilities_spark.streaming.filestream import (
-        stream_neardup_guard as guard,
-    )
-
-    batch_susp = {
-        r["doc_id"]
-        for r in guard(
-            spark.createDataFrame(rows, doc_schema), reference, emit="suspects"
-        ).collect()
-    }
-    assert batch_susp == outcomes["suspects"]
-
-
-def test_stream_semdedup_guard_matches_numpy_and_batch(spark, tmp_path):
-    """The semantic guard through a real availableNow stream: verdicts
-    must equal a numpy recompute of the within-cell cosine rule, and
-    the batch invocation of the same function must agree."""
-    import numpy as np
-
-    from xero_api_etl_utilities_spark.operators.ivf import train_centroids
-    from xero_api_etl_utilities_spark.streaming.filestream import (
-        run_available_now,
-        stream_semdedup_guard,
-    )
-
-    rng = np.random.default_rng(7)
-    ref_rows = [
-        (100 + i, [float(x) for x in rng.normal(size=8)]) for i in range(20)
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    reference = spark.createDataFrame(ref_rows, schema)
-    cents = train_centroids(reference, "embedding", "vec_id", k=4, iters=3)
-
-    # stream: two near-copies of reference vectors (scaled — cosine
-    # invariant), the rest fresh noise
-    stream_rows = [
-        (1, [x * 2.0 for x in ref_rows[0][1]]),
-        (2, [x * 0.5 for x in ref_rows[7][1]]),
-    ] + [(3 + i, [float(x) for x in rng.normal(size=8)]) for i in range(10)]
-    drop = str(tmp_path / "vdrop")
-    spark.createDataFrame(stream_rows, schema).write.mode("append").parquet(drop)
-
-    tau = 0.85
-
-    def np_cell(v):
-        u = np.array(v) / (np.linalg.norm(v) or 1e-12)
-        scores = [(float(np.dot(u * np.linalg.norm(v), c)), i) for i, c in enumerate(map(np.array, cents))]
-        # replicate the plan's argmax over RAW-vector dots with the
-        # (d, cell) struct sort: max d, ties to larger cell index
-        return max(scores, key=lambda t: (t[0], t[1]))[1]
-
-    ref_cells = {}
-    for rid, v in ref_rows:
-        ref_cells.setdefault(np_cell(v), []).append(
-            np.array(v) / np.linalg.norm(v)
-        )
-    exp_susp = set()
-    for sid, v in stream_rows:
-        u = np.array(v) / np.linalg.norm(v)
-        for rv in ref_cells.get(np_cell(v), []):
-            if float(np.dot(u, rv)) >= tau:
-                exp_susp.add(sid)
-                break
-
-    outcomes = {}
-    for emit in ("suspects", "clean"):
-        out = str(tmp_path / f"vout_{emit}")
-        ckpt = str(tmp_path / f"vckpt_{emit}")
-        guarded = stream_semdedup_guard(
-            spark.readStream.schema(schema).parquet(drop),
-            reference,
-            cents,
-            tau=tau,
-            emit=emit,
-        )
-        run_available_now(guarded, ckpt, out)
-        outcomes[emit] = {r["vec_id"] for r in spark.read.parquet(out).collect()}
-
-    all_ids = {r[0] for r in stream_rows}
-    assert outcomes["suspects"] == exp_susp
-    assert {1, 2} <= exp_susp
-    assert outcomes["suspects"] | outcomes["clean"] == all_ids
-    assert outcomes["suspects"] & outcomes["clean"] == set()
-
-    batch_susp = {
-        r["vec_id"]
-        for r in stream_semdedup_guard(
-            spark.createDataFrame(stream_rows, schema),
-            reference,
-            cents,
-            tau=tau,
-            emit="suspects",
-        ).collect()
-    }
-    assert batch_susp == outcomes["suspects"]
-
-
-def test_stream_ingest_pipeline_composition(spark, tmp_path):
-    """The full INGEST pipeline as one streaming DAG — quality gate
-    (stateless filter) -> lexical band guard (vs a reference doc) ->
-    semantic cell guard (vs reference vectors), drained through a
-    real availableNow run.  Each stage must drop exactly its own
-    casualties and the surviving set must equal the same three
-    functions applied as plain batch — the streaming twin of
-    pipeline_corpus_clean's composition argument."""
-    import numpy as np
-
-    from xero_api_etl_utilities_spark.operators.ivf import train_centroids
-    from xero_api_etl_utilities_spark.operators.textstats import quality_flags
-    from xero_api_etl_utilities_spark.streaming.filestream import (
-        run_available_now,
-        stream_neardup_guard,
-        stream_semdedup_guard,
-    )
-
-    rng = np.random.default_rng(21)
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    good = (
-        "the quick brown fox jumps over a lazy dog and the crate of "
-        "spark executors hums along to the shuffle of parquet row groups"
-    )
-    ref_text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    ref_vecs = [
-        (900 + i, "ref doc " + str(i), [float(x) for x in rng.normal(size=8)])
-        for i in range(10)
-    ]
-    reference = spark.createDataFrame(ref_vecs, schema)
-    cents = train_centroids(reference, "embedding", "doc_id", k=3, iters=3)
-
-    fresh = [float(x) for x in rng.normal(size=8)]
-    rows = [
-        # 1: survives everything
-        (1, good, fresh),
-        # 2: too short -> quality gate drops it
-        (2, "tiny", [float(x) for x in rng.normal(size=8)]),
-        # 3: lexical near-dup of the reference doc -> band guard
-        (3, "the " + ref_text, [float(x) for x in rng.normal(size=8)]),
-        # 4: semantic twin of a reference vector -> semantic guard
-        (4, good + " but rephrased", [x * 3.0 for x in ref_vecs[2][2]]),
-    ]
-    drop = str(tmp_path / "ingest")
-    spark.createDataFrame(rows, schema).write.mode("append").parquet(drop)
-
-    def pipeline(df):
-        flags = quality_flags(F.col("text"))
-        gated = df.filter(flags["len_ok"] & flags["stopword_ok"])
-        lex_ok = stream_neardup_guard(
-            gated,
-            spark.createDataFrame([(999, ref_text)], "doc_id long, text string"),
-            emit="clean",
-        )
-        return stream_semdedup_guard(
-            lex_ok, reference, cents, id_col="doc_id", tau=0.85, emit="clean"
-        )
-
-    out, ckpt = str(tmp_path / "accepted"), str(tmp_path / "ickpt")
-    run_available_now(
-        pipeline(spark.readStream.schema(schema).parquet(drop)), ckpt, out
-    )
-    accepted = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert accepted == {1}
-
-    batch_accept = {
-        r["doc_id"]
-        for r in pipeline(spark.createDataFrame(rows, schema)).collect()
-    }
-    assert batch_accept == accepted
-
-
-def test_stream_exact_dedup_sink_unbounded_across_runs(spark, tmp_path):
-    """The checkpoint-backed dedup sink must drop duplicates across
-    SEPARATE availableNow runs (beyond any watermark horizon), keep
-    min-id within a batch, and add nothing when a fresh checkpoint
-    reprocesses the entire input against the accumulated seen set."""
-    from xero_api_etl_utilities_spark.streaming.cdc_sink import (
-        stream_exact_dedup_sink,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    drop = str(tmp_path / "ddrop")
-    out = str(tmp_path / "dout")
-    seen = str(tmp_path / "dseen")
-    ckpt = str(tmp_path / "dckpt")
-
-    def run():
-        q = stream_exact_dedup_sink(
-            spark.readStream.schema(schema).parquet(drop), out, seen, ckpt
-        )
-        q.awaitTermination()
-
-    spark.createDataFrame(
-        [(2, "alpha"), (1, "alpha"), (3, "beta")], schema
-    ).write.mode("append").parquet(drop)
-    run()
-    got = {(r["doc_id"], r["text"]) for r in spark.read.parquet(out).collect()}
-    assert got == {(1, "alpha"), (3, "beta")}  # min-id within batch
-
-    # a LATER run (new files, same checkpoint): cross-run duplicate
-    # "alpha" is dropped even though no watermark state survives runs
-    spark.createDataFrame(
-        [(10, "alpha"), (11, "gamma")], schema
-    ).write.mode("append").parquet(drop)
-    run()
-    got = {(r["doc_id"], r["text"]) for r in spark.read.parquet(out).collect()}
-    assert got == {(1, "alpha"), (3, "beta"), (11, "gamma")}
-
-    # disaster-recovery replay: a FRESH checkpoint reprocesses the
-    # ENTIRE input from scratch — every row's digest is already in the
-    # accumulated seen table, so the output set must not change (the
-    # unbounded-state property no watermark variant can offer)
-    ckpt2 = str(tmp_path / "dckpt2")
-    q = stream_exact_dedup_sink(
-        spark.readStream.schema(schema).parquet(drop), out, seen, ckpt2
-    )
-    q.awaitTermination()
-    rows = spark.read.parquet(out).collect()
-    got = {(r["doc_id"], r["text"]) for r in rows}
-    assert got == {(1, "alpha"), (3, "beta"), (11, "gamma")}
-    assert len(rows) == 3  # no physical duplicates either
-
-
-def test_jsonl_and_csv_quarantine_routing(spark, tmp_path):
-    """Raw-file ingestion: malformed lines land in the quarantine
-    side-output with the ORIGINAL bytes; well-formed lines parse to
-    the explicit schema; nothing is silently dropped."""
-    from xero_api_etl_utilities_spark.sources.text_formats import (
-        read_csv_with_quarantine,
-        read_jsonl_with_quarantine,
-    )
-
-    jl = tmp_path / "docs.jsonl"
-    jl.write_text(
-        '{"doc_id": 1, "text": "alpha"}\n'
-        "{broken json line\n"
-        '{"doc_id": 2, "text": "beta"}\n'
-    )
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    good, bad = read_jsonl_with_quarantine(spark, str(jl), schema)
-    assert {(r["doc_id"], r["text"]) for r in good.collect()} == {
-        (1, "alpha"),
-        (2, "beta"),
-    }
-    quarantined = [r["raw"] for r in bad.collect()]
-    assert quarantined == ["{broken json line"]
-    assert good.count() + bad.count() == 3
-
-    cv = tmp_path / "docs.csv"
-    cv.write_text(
-        "doc_id,text\n"
-        "1,alpha\n"
-        "not_a_number,beta\n"
-        "2,gamma\n"
-    )
-    cschema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    cgood, cbad = read_csv_with_quarantine(spark, str(cv), cschema)
-    assert {(r["doc_id"], r["text"]) for r in cgood.collect()} == {
-        (1, "alpha"),
-        (2, "gamma"),
-    }
-    assert [r["raw"] for r in cbad.collect()] == ["not_a_number,beta"]
-
-
-def test_quarantine_readers_do_not_mutate_caller_schema(spark, tmp_path):
-    """Regression (ADVICE r8 medium #1): the readers used
-    ``StructType.add`` on the CALLER'S schema object — ``add`` mutates
-    in place, so every call permanently grew the user's schema and a
-    second call with the same object produced a duplicate
-    ``_corrupt_record`` field.  Both readers must leave the caller's
-    schema untouched and give identical results on repeated calls."""
-    import pytest
-
-    from xero_api_etl_utilities_spark.sources.text_formats import (
-        read_csv_with_quarantine,
-        read_jsonl_with_quarantine,
-    )
-
-    jl = tmp_path / "docs.jsonl"
-    jl.write_text('{"doc_id": 1, "text": "alpha"}\n{broken\n')
-    cv = tmp_path / "docs.csv"
-    cv.write_text("doc_id,text\n1,alpha\nbad_id,beta\n")
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    before = [f.name for f in schema.fields]
-
-    for reader, path in (
-        (read_jsonl_with_quarantine, str(jl)),
-        (read_csv_with_quarantine, str(cv)),
-    ):
-        good1, bad1 = reader(spark, path, schema)
-        assert [f.name for f in schema.fields] == before  # not mutated
-        good2, bad2 = reader(spark, path, schema)  # same object, 2nd call
-        assert [f.name for f in schema.fields] == before
-        assert good1.schema == good2.schema
-        assert good1.schema.fieldNames() == before  # no corrupt col leak
-        assert sorted(map(tuple, good1.collect())) == sorted(
-            map(tuple, good2.collect())
-        )
-        assert bad1.count() == bad2.count() == 1
-
-    # a schema that already carries the corrupt column is a caller bug
-    # worth failing loudly, not silently duplicating
-    tainted = T.StructType(
-        list(schema.fields)
-        + [T.StructField("_corrupt_record", T.StringType(), True)]
-    )
-    with pytest.raises(ValueError, match="_corrupt_record"):
-        read_jsonl_with_quarantine(spark, str(jl), tainted)
-
-
-def test_stream_exact_dedup_sink_ignores_stale_inprogress(spark, tmp_path):
-    """Regression (ADVICE r8 medium #2): a crash between the seen-table
-    tmp write and its rename leaves ``batch=<tag>.inprogress`` in
-    ``seen_dir``; the prior-seen listing matched it via
-    ``startswith("batch=")`` and anti-joined the replayed batch against
-    its own partial digests — new docs vanished from the output.  The
-    sink must treat ``*.inprogress`` as garbage: delete it and exclude
-    it from the prior-seen read."""
-    from xero_api_etl_utilities_spark.streaming.cdc_sink import (
-        stream_exact_dedup_sink,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    drop = str(tmp_path / "drop")
-    out = str(tmp_path / "out")
-    seen = str(tmp_path / "seen")
-
-    spark.createDataFrame([(1, "alpha")], schema).write.mode(
-        "append"
-    ).parquet(drop)
-    q = stream_exact_dedup_sink(
-        spark.readStream.schema(schema).parquet(drop),
-        out,
-        seen,
-        str(tmp_path / "ckpt1"),
-    )
-    q.awaitTermination()
-    assert {r["text"] for r in spark.read.parquet(out).collect()} == {"alpha"}
-
-    # Fabricate the crash leftover: a partial seen write holding the
-    # digest of the NEXT batch's new doc ("gamma"), never renamed.
-    stale = os.path.join(seen, "batch=deadbeef-0.inprogress")
-    spark.range(1).select(
-        F.sha2(F.lit("gamma"), 256).alias("_h")
-    ).write.parquet(stale)
-
-    spark.createDataFrame([(2, "gamma")], schema).write.mode(
-        "append"
-    ).parquet(drop)
-    q = stream_exact_dedup_sink(
-        spark.readStream.schema(schema).parquet(drop),
-        out,
-        seen,
-        str(tmp_path / "ckpt2"),  # fresh checkpoint replays everything
-    )
-    q.awaitTermination()
-
-    # with the bug, gamma's digest in the stale dir suppressed gamma
-    got = {r["text"] for r in spark.read.parquet(out).collect()}
-    assert got == {"alpha", "gamma"}
-    assert not os.path.isdir(stale)  # stale temp dir cleaned up
-    # and nothing .inprogress ever survives a successful drain
-    assert not any(d.endswith(".inprogress") for d in os.listdir(seen))
-
-
-def test_stream_quality_metrics_sink(spark, tmp_path):
-    """Per-batch ingest metrics: counts match a batch recompute of the
-    quality gate; a second drain appends a second batch row; replays
-    do not duplicate rows."""
-    from xero_api_etl_utilities_spark.streaming.cdc_sink import (
-        stream_quality_metrics_sink,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    good = (
-        "the quick brown fox jumps over a lazy dog and the crate of spark "
-        "executors hums along to the shuffle of parquet row groups"
-    )
-    drop = str(tmp_path / "qdrop")
-    metrics = str(tmp_path / "qmetrics")
-    ckpt = str(tmp_path / "qckpt")
-    spark.createDataFrame(
-        [(1, good), (2, "tiny"), (3, good + " again")], schema
-    ).write.mode("append").parquet(drop)
-
-    def run():
-        q = stream_quality_metrics_sink(
-            spark.readStream.schema(schema).parquet(drop), metrics, ckpt
-        )
-        q.awaitTermination()
-
-    run()
-    rows = spark.read.parquet(metrics).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["n_rows"] == 3
-    assert r["n_len_fail"] == 1          # "tiny" < 50 chars
-    assert r["n_any_fail"] >= 1
-    assert r["fail_bp"] == r["n_any_fail"] * 10000 // 3
-
-    # second drop -> second batch row; no duplication of the first
-    spark.createDataFrame([(4, good)], schema).write.mode("append").parquet(drop)
-    run()
-    rows = spark.read.parquet(metrics).collect()
-    assert len(rows) == 2
-    assert sum(r["n_rows"] for r in rows) == 4
-
-
-def test_compact_seen_table_preserves_dedup(spark, tmp_path):
-    """Compacting the digest table must not change sink behavior: a
-    post-compaction run still drops all previously seen texts, and
-    compaction is idempotent."""
-    import os
-
-    from xero_api_etl_utilities_spark.streaming.cdc_sink import (
-        compact_seen_table,
-        stream_exact_dedup_sink,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    drop = str(tmp_path / "cdrop")
-    out = str(tmp_path / "cout")
-    seen = str(tmp_path / "cseen")
-    ckpt = str(tmp_path / "cckpt")
-
-    def run():
-        q = stream_exact_dedup_sink(
-            spark.readStream.schema(schema).parquet(drop), out, seen, ckpt
-        )
-        q.awaitTermination()
-
-    spark.createDataFrame([(1, "alpha"), (2, "beta")], schema).write.mode(
-        "append"
-    ).parquet(drop)
-    run()
-    spark.createDataFrame([(3, "gamma")], schema).write.mode("append").parquet(
-        drop
-    )
-    run()
-    assert len([d for d in os.listdir(seen) if d.startswith("batch=")]) == 2
-
-    folded = compact_seen_table(spark, seen)
-    assert folded == 2
-    remaining = [d for d in os.listdir(seen) if d.startswith("batch=")]
-    assert len(remaining) == 1 and remaining[0].startswith("batch=compact-")
-    # idempotent: nothing further to fold
-    assert compact_seen_table(spark, seen) == 0
-
-    # dedup behavior unchanged after compaction
-    spark.createDataFrame(
-        [(10, "alpha"), (11, "delta")], schema
-    ).write.mode("append").parquet(drop)
-    run()
-    got = {(r["doc_id"], r["text"]) for r in spark.read.parquet(out).collect()}
-    assert got == {(1, "alpha"), (2, "beta"), (3, "gamma"), (11, "delta")}

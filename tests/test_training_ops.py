@@ -1,7 +1,6 @@
 """Unit tests for the round-3 training-pipeline operators: containment
 verification, SQ8 quantization, exact-quota group sampling, mixture
-rebalancing, the inter-arrival plan's median convention, and the
-multimodal feature, frame-sampling and resize plumbing."""
+rebalancing, and the inter-arrival plan's median convention."""
 
 from __future__ import annotations
 
@@ -10,12 +9,6 @@ from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.functions.crosshash import py_h32
 from xero_api_etl_utilities_spark.operators.dedup import containment_verify
-from xero_api_etl_utilities_spark.operators.multimodal import (
-    MEDIA_SCHEMA,
-    extract_features,
-    fake_decode_features,
-    frame_sample_plan,
-)
 from xero_api_etl_utilities_spark.operators.quantize import sq8_codes
 from xero_api_etl_utilities_spark.operators.sampling import (
     mixture_rebalance,
@@ -458,48 +451,3 @@ def test_dedup_savings_census_matches_python_keep_rule(spark, sf_dir):
         for src in tot
     }
     assert got == want
-
-
-def test_multimodal_feature_extraction(spark):
-    media = spark.createDataFrame(
-        [
-            (1, b"fake-image-bytes", ("image", "image/png", None, None, None, None)),
-            (2, b"", ("audio", "audio/wav", None, None, 2500, 16000)),
-        ],
-        MEDIA_SCHEMA,
-    )
-    feats = {r["media_id"]: r for r in extract_features(media, dim=8).collect()}
-    assert feats[1]["n_bytes"] == 16
-    assert len(feats[1]["features"]) == 8
-    # deterministic: same bytes → same features, independent of executor
-    assert feats[1]["features"] == [pytest.approx(x) for x in fake_decode_features(b"fake-image-bytes", 8)]
-
-
-def test_frame_sample_plan(spark):
-    media = spark.createDataFrame(
-        [(1, None, ("video", "video/mp4", None, None, 3500, None))], MEDIA_SCHEMA
-    )
-    frames = frame_sample_plan(media, every_ms=1000).collect()
-    assert [(r["frame_no"], r["frame_ts_ms"]) for r in frames] == [(0, 0), (1, 1000), (2, 2000)]
-
-
-def test_resize_media(spark):
-    from xero_api_etl_utilities_spark.operators.multimodal import (
-        fake_resize,
-        resize_media,
-    )
-
-    media = spark.createDataFrame(
-        [
-            (1, b"img-a", ("image", "image/png", 640, 480, None, None)),
-            (2, b"img-b", ("image", "image/png", None, None, None, None)),
-        ],
-        MEDIA_SCHEMA,
-    )
-    out = {r["media_id"]: r for r in resize_media(media, 64, 32).collect()}
-    assert out[1]["meta"]["width"] == 64 and out[1]["meta"]["height"] == 32
-    assert out[1]["meta"]["media_type"] == "image"  # other meta preserved
-    assert len(out[1]["content"]) == (64 * 32) // 64
-    # deterministic and content-dependent
-    assert bytes(out[1]["content"]) == fake_resize(b"img-a", 64, 32)
-    assert out[1]["content"] != out[2]["content"]

@@ -6,9 +6,8 @@ cases pin the contracts themselves: the as-of store's relationship to
 the one-shot incremental form (corpus-side pairs identical, plus
 cross-arrival pairs only a growing store can emit), publish
 memoization and artifact layout, batch-1 isolation from batch-2
-arrivals, compaction of the store (X181) including recovery from an
-interrupted swap, and the swap policy's decision boundary on
-constructed censuses independent of the trained weights.
+arrivals, and the swap policy's decision boundary on constructed
+censuses independent of the trained weights.
 """
 
 from __future__ import annotations
@@ -195,36 +194,6 @@ def test_catalog_compact_census_and_files(spark, tmp_path):
     post_files = _files()
     compact_store(spark, path, subs=("catalog",))
     assert _rows() == pre_rows and _files() == post_files
-
-
-def test_compact_store_recovers_interrupted_swap(spark, tmp_path):
-    """A crash between compact_store's two renames strands the store
-    in ``.precompact``; the recovery preamble must restore it and the
-    run must then complete the compaction."""
-    from xero_api_etl_utilities_spark.sources.writer import compact_store
-
-    store_dir = str(tmp_path / "store")
-    cat_dir = os.path.join(store_dir, "catalog")
-    for part, lo in (("part=a", 0), ("part=b", 500)):
-        spark.range(lo, lo + 500).repartition(8).write.parquet(
-            os.path.join(cat_dir, part)
-        )
-
-    def _rows():
-        return sorted(r["id"] for r in spark.read.parquet(cat_dir).collect())
-
-    pre = _rows()
-    # simulate the crash window: root renamed away, new root not yet in
-    os.rename(cat_dir, f"{cat_dir}.precompact")
-    n = compact_store(spark, store_dir, subs=("catalog",))
-    assert _rows() == pre
-    assert not os.path.isdir(f"{cat_dir}.precompact")
-    assert n == {"catalog": 1}
-    assert sorted(os.listdir(cat_dir)) == [
-        "part=a",
-        "part=b",
-        "part=compact-000001",
-    ]
 
 
 def test_ivf_index_absorb_equals_full_assignment(spark):
