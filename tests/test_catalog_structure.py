@@ -15,7 +15,7 @@ def test_every_query_is_benched_or_documented():
     from xero_api_etl_utilities_spark.plans import catalog
 
     qs = list(catalog.queries())
-    bounded = list(bench.BOUNDED_SF)
+    bounded = list(catalog.bounded())
     assert set(bounded) <= set(qs), f"unknown bounded: {set(bounded) - set(qs)}"
     # each registered name exactly once: at the run sf or bounded
     assert sorted(bench.timed_names(qs) + bounded) == sorted(qs)

@@ -56,6 +56,30 @@ def frame_digest(pdf) -> tuple[str, list[str]]:
     return h, lines
 
 
+def compare(spdf, dpdf) -> list[str]:
+    """The gate's verdict on a Spark frame against its oracle frame
+    (both pandas): row count, sorted column names, then the value hash.
+    Returns the problems found; empty means equal."""
+    problems = []
+    if len(spdf) != len(dpdf):
+        problems.append(f"rowcount spark={len(spdf)} duckdb={len(dpdf)}")
+    if sorted(spdf.columns) != sorted(dpdf.columns):
+        problems.append(
+            f"cols spark={sorted(spdf.columns)} duckdb={sorted(dpdf.columns)}"
+        )
+    if problems:
+        return problems
+    try:
+        sh, slines = frame_digest(spdf)
+        dh, dlines = frame_digest(dpdf)
+    except TypeError as e:
+        return [f"DRIVER-ERR (unsortable cell): {e}"]
+    if sh != dh:
+        diff = [(a, b) for a, b in zip(slines, dlines) if a != b][:3]
+        return [f"hash spark={sh} duckdb={dh}; first diffs: {diff}"]
+    return []
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -116,27 +140,7 @@ def main() -> int:
             failures.append((name, f"DUCKDB ERROR: {e}"))
             print(f"FAIL  {name}: duckdb error: {e}")
             continue
-        problems = []
-        if len(spdf) != len(dpdf):
-            problems.append(f"rowcount spark={len(spdf)} duckdb={len(dpdf)}")
-        if sorted(spdf.columns) != sorted(dpdf.columns):
-            problems.append(
-                f"cols spark={sorted(spdf.columns)} duckdb={sorted(dpdf.columns)}"
-            )
-        if not problems:
-            try:
-                sh, slines = frame_digest(spdf)
-                dh, dlines = frame_digest(dpdf)
-            except TypeError as e:
-                problems.append(f"DRIVER-ERR (unsortable cell): {e}")
-            else:
-                if sh != dh:
-                    diff = [
-                        (a, b) for a, b in zip(slines, dlines) if a != b
-                    ][:3]
-                    problems.append(
-                        f"hash spark={sh} duckdb={dh}; first diffs: {diff}"
-                    )
+        problems = compare(spdf, dpdf)
         if problems:
             failures.append((name, "; ".join(problems)))
             print(f"FAIL  {name}: {'; '.join(problems)}")

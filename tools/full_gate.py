@@ -35,7 +35,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from check_oracle import TABLES, frame_digest  # noqa: E402
+from check_oracle import TABLES, compare  # noqa: E402
+from perfbench.probe import cpu_times  # noqa: E402
 
 
 def _commit() -> str:
@@ -96,8 +97,9 @@ def main() -> int:
     # Busy-box guard (VERDICT r13 item 3): the r13 gate journal's sec
     # values were inflated 5-10x by a concurrent 32-thread diagnostic
     # probe, making spark_sec/oracle_sec unusable as a perf record.
-    # bench.py self-calibrates; the gate now refuses to start timed
-    # rows on a box that is already busy instead.
+    # The gate refuses to start timed rows on a box that is already
+    # busy; contention from other machines on the host, which loadavg
+    # does not see, is journaled per row as its CPU steal share.
     if not args.allow_busy_box:
         load1 = os.getloadavg()[0]
         ncpu = os.cpu_count() or 1
@@ -155,26 +157,8 @@ def main() -> int:
     ]
     print(f"gate: {len(todo)} queries to run at {sf_dir} (commit {commit})")
 
-    # Per-session calibration (r14): the loadavg guard catches OUR
-    # concurrent work but not host-level contention (the r14 closing
-    # sweep's first batch ran 2-3x slow with loadavg clean).  At each
-    # session start, time bench.py's sched probe (min-of-2 x 20
-    # one-row jobs) and stamp it into every row the session journals,
-    # so a degraded batch self-flags in the record instead of needing
-    # manual cross-run forensics.  NOTE the band differs from bench's:
-    # this probe runs on a FRESH JVM (no warm-up materialize first),
-    # so quiet-box reads ~3-4 s here vs bench's warmed <2.5 s; treat
-    # rows whose calib_sched is well above ~4 s as contended.
-    def _calib_sched(spark) -> float:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            for _ in range(20):
-                spark.range(1).count()
-            best = min(best, time.time() - t0)
-        return round(best, 2)
-
-    def _run_row(spark, name, calib, retry=False) -> dict:
+    def _run_row(spark, name, retry=False) -> dict:
+        steal0 = cpu_times()
         t0 = time.time()
         status, detail, n_rows = "ok", "", -1
         spark_sec = oracle_sec = 0.0
@@ -188,26 +172,13 @@ def main() -> int:
                 t_orc = time.time()
                 dpdf = con.execute(oracles[name]).df()
                 oracle_sec = round(time.time() - t_orc, 1)
-                problems = []
-                if len(spdf) != len(dpdf):
-                    problems.append(
-                        f"rowcount spark={len(spdf)} duckdb={len(dpdf)}"
-                    )
-                if sorted(spdf.columns) != sorted(dpdf.columns):
-                    problems.append(
-                        f"cols spark={sorted(spdf.columns)}"
-                        f" duckdb={sorted(dpdf.columns)}"
-                    )
-                if not problems:
-                    sh, _ = frame_digest(spdf)
-                    dh, _ = frame_digest(dpdf)
-                    if sh != dh:
-                        problems.append(f"hash spark={sh} duckdb={dh}")
+                problems = compare(spdf, dpdf)
                 if problems:
                     status, detail = "fail", "; ".join(problems)
-        except Exception as e:  # spark, duckdb, or digest error
+        except Exception as e:  # spark or duckdb error
             status, detail = "fail", f"{type(e).__name__}: {e}"
         sec = round(time.time() - t0, 1)
+        steal1 = cpu_times()
         oracle_slow = oracle_sec > args.oracle_budget
         rec = {
             "name": name,
@@ -218,7 +189,10 @@ def main() -> int:
             "spark_sec": spark_sec,
             "oracle_sec": oracle_sec,
             "oracle_slow": oracle_slow,
-            "calib_sched": calib,
+            # host contention over this row: the machine's CPU steal share
+            "cpu_steal_share": round(
+                (steal1[0] - steal0[0]) / max(steal1[1] - steal0[1], 1), 4
+            ),
             "sf": sf_name,
             "commit": commit,
             "ts": round(time.time(), 1),
@@ -241,8 +215,6 @@ def main() -> int:
         return rec
 
     spark = _new_spark()
-    calib = _calib_sched(spark)
-    print(f"session calib_sched {calib}s", flush=True)
     journal = open(journal_path, "a")
     counts = {"ok": 0, "fail": 0, "rows-only": 0}
     over_budget: list[dict] = []
@@ -252,10 +224,8 @@ def main() -> int:
             spark.stop()
             spark = _new_spark()
             since_restart = 0
-            calib = _calib_sched(spark)
-            print(f"session calib_sched {calib}s", flush=True)
         since_restart += 1
-        rec = _run_row(spark, name, calib)
+        rec = _run_row(spark, name)
         counts[rec["status"]] += 1
         if rec["oracle_slow"] or rec["sec"] > args.oracle_budget:
             over_budget.append(rec)
@@ -276,10 +246,8 @@ def main() -> int:
         )
         spark.stop()
         spark = _new_spark()
-        calib = _calib_sched(spark)
-        print(f"session calib_sched {calib}s", flush=True)
         for first in over_budget:
-            rec = _run_row(spark, first["name"], calib, retry=True)
+            rec = _run_row(spark, first["name"], retry=True)
             if rec["status"] != first["status"]:
                 counts[first["status"]] -= 1
                 counts[rec["status"]] += 1

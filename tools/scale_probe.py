@@ -217,7 +217,6 @@ def main() -> int:
             f.write(f"factor={args.factor} base={BASE_SF}\n")
         print(f"probe dir built in {time.perf_counter() - t0:.1f}s", flush=True)
 
-    import bench  # BOUNDED_SF exclusions
     from explain_audit import formatted_plan
     from xero_api_etl_utilities_spark.operators.materialize import SESSION_MEMOS
     from xero_api_etl_utilities_spark.plans import catalog
@@ -225,7 +224,7 @@ def main() -> int:
     qs = catalog.queries()
     with open(os.path.join(REPO, "BENCH_DETAIL.json")) as f:
         detail = json.load(f)["queries"]
-    bounded = set(getattr(bench, "BOUNDED_SF", {}))
+    bounded = set(catalog.bounded())
     ranked = [
         n for n, _ in sorted(detail.items(), key=lambda x: -x[1])
         if n not in bounded

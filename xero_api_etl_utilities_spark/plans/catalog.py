@@ -18,6 +18,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str | Callable[[], str]] = {}
+_BOUNDED: set[str] = set()
 
 # The driver's correctness record covers only the FIRST 50 entries of
 # queries(), so these names, the r16 record's window, are emitted first;
@@ -90,18 +91,33 @@ def oracle_sf_dir() -> str:
 
 
 def register(
-    name: str, fn: QueryFn, oracle: str | Callable[[], str] | None = None
+    name: str,
+    fn: QueryFn,
+    oracle: str | Callable[[], str] | None = None,
+    bounded: bool = False,
 ) -> None:
     """``oracle`` may be a SQL string or a zero-arg callable returning
     one — callables defer data-dependent oracle generation (e.g. the
     IVF oracle inlines centroids trained from the sf0.01 parquet) to
     ``oracle_sql()`` time, keeping ``queries()`` import cheap for
-    consumers like bench that never read oracles."""
+    consumers like bench that never read oracles.
+
+    ``bounded`` marks an exactness baseline: a guarded exact shape that
+    exists to pin correctness, not to race the scale paths (brute-force
+    top-k, all-pairs Jaccard, a prefix filter that is near-dense on the
+    synthetic 31-word vocabulary, where every token's df is ~0.78 of
+    the documents).  Bench times these at the fixed sf0.01 next to the
+    run directory, apart from the headline sum, which stays a
+    like-for-like series over the run sf; the scale paths for the same
+    semantics (LSH / IVF top-k, MinHash LSH, tf-cosine pairs) are
+    headline entries."""
     if name in _QUERIES:
         raise ValueError(f"duplicate query name {name!r}")
     _QUERIES[name] = fn
     if oracle is not None:
         _ORACLES[name] = oracle
+    if bounded:
+        _BOUNDED.add(name)
 
 
 register("daily_pnl_rollup", flagship.daily_pnl_rollup, flagship.FLAGSHIP_ORACLE)
@@ -147,6 +163,13 @@ def _ensure_loaded() -> None:
 def queries() -> dict[str, QueryFn]:
     _ensure_loaded()
     return _window_ordered(_QUERIES)
+
+
+def bounded() -> tuple[str, ...]:
+    """The exactness baselines (``register(..., bounded=True)``), in
+    catalog order."""
+    _ensure_loaded()
+    return tuple(n for n in _window_ordered(_QUERIES) if n in _BOUNDED)
 
 
 def oracle_sql() -> dict[str, str]:

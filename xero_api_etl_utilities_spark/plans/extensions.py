@@ -87,6 +87,7 @@ JOIN sizes sa ON sa.doc = doc_a
 JOIN sizes sb ON sb.doc = doc_b
 WHERE 10 * inter_size >= 7 * (sa.sz + sb.sz - inter_size)
 """,
+    bounded=True,
 )
 
 
@@ -164,7 +165,7 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank
 FROM ranked WHERE rank <= 5
 """
 
-register("similarity_topk", similarity_topk, TOPK_EXACT_ORACLE)
+register("similarity_topk", similarity_topk, TOPK_EXACT_ORACLE, bounded=True)
 
 
 def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -458,6 +458,7 @@ JOIN sizes sb ON sb.doc = doc_b
 WHERE i * {_PP_DEN} >= (sa.sz + sb.sz - i) * {_PP_NUM}
 ORDER BY doc_a, doc_b
 """,
+    bounded=True,
 )
 
 

@@ -752,4 +752,5 @@ WITH q AS (
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank
 FROM ranked WHERE rank <= 5
 """,
+    bounded=True,
 )

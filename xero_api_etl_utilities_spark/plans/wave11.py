@@ -378,6 +378,7 @@ register(
     "similarity_truncation_recall",
     similarity_truncation_recall,
     _truncation_recall_oracle,
+    bounded=True,
 )
 
 
