@@ -1,5 +1,5 @@
 """Structural guarantees over the catalog itself — the meta-checks
-that keep the per-round contract honest:
+that keep the catalog contract honest:
 
 * every registered query has an oracle (zero rows-only entries);
 * bench times every registered query exactly once, either at the run
@@ -83,3 +83,24 @@ def test_every_package_module_is_reachable():
     }
     unreachable = sorted(every - seen - {f"{pkg}.session"})
     assert not unreachable, f"modules only tests import: {unreachable}"
+
+
+def test_only_materialize_reads_the_compute_width():
+    """The cluster's compute width (``defaultParallelism``) is read in
+    ``operators/materialize.py`` alone: every widening goes through
+    ``compute_width``, so a rule about when to widen has one function
+    to change.  The walk is static, over every package module's AST."""
+    import ast
+    from pathlib import Path
+
+    base = Path(__file__).resolve().parent.parent / "xero_api_etl_utilities_spark"
+    readers = sorted(
+        str(p.relative_to(base))
+        for p in base.rglob("*.py")
+        if any(
+            isinstance(node, ast.Attribute) and node.attr == "defaultParallelism"
+            for node in ast.walk(ast.parse(p.read_text()))
+        )
+    )
+    others = [r for r in readers if r != "operators/materialize.py"]
+    assert not others, f"modules reading defaultParallelism: {others}"

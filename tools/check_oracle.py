@@ -16,8 +16,8 @@ way the DRIVER computes it (verified against CORRECTNESS_r05.json):
 
 The previous revision of this tool canonicalized raw ``fetchall``
 values, where ``Decimal('9989')`` and ``9989`` both print ``9989`` —
-weaker than the driver on types, which let 14 perma-red rows pass
-locally (VERDICT r5, "What's wrong" #1).
+weaker than the driver on types, which let 14 rows the driver
+failed pass locally.
 
 Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
 """
@@ -86,8 +86,6 @@ def main() -> int:
 
     # Data-dependent oracle generators (IVF centroid literals) must
     # read the same parquet this check runs against.
-    import os
-
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
 
     import __spark_entry__ as entrymod
@@ -95,21 +93,16 @@ def main() -> int:
     # A PLAIN session, deliberately NOT the tuned get_spark(): the
     # driver runs queries() with its own default session (no pinned
     # timezone, default shuffle partitions), so the gate must pass
-    # under those conditions. Set ORACLE_TUNED=1 to use get_spark().
-    if os.environ.get("ORACLE_TUNED"):
-        from xero_api_etl_utilities_spark.session import get_spark
+    # under those conditions.
+    from pyspark.sql import SparkSession
 
-        spark = get_spark(app_name="oracle-check")
-    else:
-        from pyspark.sql import SparkSession
-
-        spark = (
-            SparkSession.builder.appName("oracle-check")
-            .master("local[*]")
-            .config("spark.ui.enabled", "false")
-            .config("spark.ui.showConsoleProgress", "false")
-            .getOrCreate()
-        )
+    spark = (
+        SparkSession.builder.appName("oracle-check")
+        .master("local[*]")
+        .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+        .getOrCreate()
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

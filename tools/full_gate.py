@@ -1,6 +1,6 @@
-"""Repeatable FULL-CATALOG oracle gate with resume (VERDICT r9 item 7).
+"""Repeatable FULL-CATALOG oracle gate with resume.
 
-The r9 sf0.1 sweep was four hand-driven batches (one JVM died to a
+An sf0.1 sweep by hand took four batches (one JVM died to a
 /tmp cleaner mid-run and the partial results had to be stitched by
 hand).  This tool makes the 10x-scale gate one command:
 
@@ -26,7 +26,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -37,19 +36,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from check_oracle import TABLES, compare  # noqa: E402
 from perfbench.probe import cpu_times  # noqa: E402
-
-
-def _commit() -> str:
-    try:
-        return subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
-            cwd=REPO,
-            capture_output=True,
-            text=True,
-            timeout=10,
-        ).stdout.strip()
-    except Exception:
-        return ""
+from perfbench.run import source_id  # noqa: E402
 
 
 def _new_spark():
@@ -59,7 +46,7 @@ def _new_spark():
         SparkSession.builder.appName("full-gate")
         .master("local[*]")
         # local-mode executors share the driver JVM; the stock 1g heap
-        # OOM-killed the r11 run when the rotation packed the whole
+        # OOM-killed a run when the rotation packed the whole
         # memoized dedup family (sigs+cands+pairs+containment local
         # checkpoints) into one 60-name session window
         .config(
@@ -81,7 +68,7 @@ def main() -> int:
         type=float,
         default=120.0,
         help="seconds of DuckDB time per oracle before the gate flags"
-        " it slow-oracle (VERDICT r12 item 3: an accidentally-quadratic"
+        " it slow-oracle (an accidentally-quadratic"
         " oracle SQL should fail loudly at gate time, not silently"
         " stretch the sweep by an hour)",
     )
@@ -94,9 +81,9 @@ def main() -> int:
     ap.add_argument("names", nargs="*", help="optional subset")
     args = ap.parse_args()
 
-    # Busy-box guard (VERDICT r13 item 3): the r13 gate journal's sec
-    # values were inflated 5-10x by a concurrent 32-thread diagnostic
-    # probe, making spark_sec/oracle_sec unusable as a perf record.
+    # Busy-box guard: one gate journal's sec values were inflated
+    # 5-10x by a concurrent 32-thread diagnostic probe, making
+    # spark_sec/oracle_sec unusable as a perf record.
     # The gate refuses to start timed rows on a box that is already
     # busy; contention from other machines on the host, which loadavg
     # does not see, is journaled per row as its CPU steal share.
@@ -116,7 +103,7 @@ def main() -> int:
     sf_dir = args.sf if os.sep in args.sf else f"/root/testdata/{args.sf}"
     sf_name = os.path.basename(sf_dir.rstrip("/"))
     journal_path = os.path.join(REPO, f"FULL_GATE_{sf_name}.jsonl")
-    commit = _commit()
+    commit = source_id()
 
     done_ok: set[str] = set()
     if args.resume and os.path.exists(journal_path):
@@ -230,9 +217,9 @@ def main() -> int:
         if rec["oracle_slow"] or rec["sec"] > args.oracle_budget:
             over_budget.append(rec)
 
-    # Auto-retry pass (VERDICT r14 item 5): the r14 sweep's first batch
-    # ran 2-3x slow on host contention and two rows breached the oracle
-    # budget until MANUAL same-commit re-runs were journaled by hand.
+    # Auto-retry pass: one sweep's first batch ran 2-3x slow on host
+    # contention and two rows breached the oracle budget until MANUAL
+    # same-commit re-runs were journaled by hand.
     # Any row whose oracle (or whole row) ran over budget gets ONE
     # automatic re-run on a fresh session at sweep end, so the journal
     # is self-contained: a genuinely slow oracle stays flagged twice, a

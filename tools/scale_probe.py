@@ -1,4 +1,4 @@
-"""10x-up scale probe for the heavy catalog family (VERDICT r10 item 4).
+"""10x-up scale probe for the heavy catalog family.
 
 Derives a ~sf1-equivalent dataset in the git-ignored warehouse dir by
 unioning the read-only sf0.1 tables FACTOR times with consistent key
@@ -31,12 +31,13 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from perfbench.run import source_id  # noqa: E402
 
 BASE_SF = "/root/testdata/sf0.1"
 # plan-shape reference: structural, so the cheap sf suffices and avoids
@@ -70,16 +71,6 @@ _KEY_BASE = {  # key column -> (table, source column) giving the max
     "doc_id": ("documents", "doc_id"),
     "vec_id": ("embeddings", "vec_id"),
 }
-
-
-def _commit() -> str:
-    try:
-        return subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
-            cwd=REPO, capture_output=True, text=True,
-        ).stdout.strip()
-    except OSError:
-        return "unknown"
 
 
 def build_probe_dir(spark, factor: int, out_dir: str) -> None:
@@ -205,7 +196,6 @@ def main() -> int:
 
     spark = get_spark(
         app_name="scale-probe",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
 
@@ -229,7 +219,7 @@ def main() -> int:
         n for n, _ in sorted(detail.items(), key=lambda x: -x[1])
         if n not in bounded
     ]
-    # catalog entries BENCH_DETAIL has never timed (fresh this-round
+    # catalog entries BENCH_DETAIL has never timed (new
     # registrations) still belong in a FULL-catalog probe — append
     # them after the ranked cost head so --top 9999 covers everything
     ranked += [n for n in qs if n not in detail and n not in bounded]
@@ -259,7 +249,7 @@ def main() -> int:
         ordered = named_builds + [n for n in ordered if n in wanted]
 
     done_at_commit = set()
-    cur_commit = _commit()
+    cur_commit = source_id()
     if os.path.exists(JOURNAL):
         with open(JOURNAL) as f:
             for line in f:

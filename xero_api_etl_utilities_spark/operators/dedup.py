@@ -25,7 +25,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.functions.crosshash import h32, h32_spark, h64
-from xero_api_etl_utilities_spark.operators.materialize import materialize
+from xero_api_etl_utilities_spark.operators.materialize import (
+    compute_width,
+    materialize,
+)
 
 # Mersenne prime 2^31-1: modulus for the universal-hash family.
 # 31-bit operands keep a*x+b under 2^63 — no long overflow (Spark runs
@@ -162,8 +165,6 @@ def jaccard_verify(
     min_sim_num: int = 7,
     min_sim_den: int = 10,
     checkpoint_dir: str | None = None,
-    parallelism: int | None = None,
-    cands_at_width: bool = False,
 ) -> DataFrame:
     """Exact-Jaccard verification of CANDIDATE pairs — the stage a
     production dedup pipeline runs between LSH candidate generation
@@ -183,18 +184,10 @@ def jaccard_verify(
     and measured ~3× slower at sf0.1.) Same integer (inter, union)
     output contract as :func:`jaccard_pairs`.
 
-    ``parallelism``: corpus-scale callers pass the cluster's compute
-    width (``sc.defaultParallelism``) to opt the shared substrate into
-    its materialized wide shape (see :func:`_pair_intersections`);
-    small/streaming callers leave it None and keep the lazy plan.
-    ``cands_at_width``: skip the candidate repartition+materialize when
-    the input is already checkpointed at compute width (see
-    :func:`_pair_intersections`).
+    ``cands`` is taken as given; see :func:`_pair_intersections` for
+    why it should arrive materialized.
     """
-    pairs = _pair_intersections(
-        cands, docs, id_col, text_col, n, checkpoint_dir, parallelism,
-        cands_at_width,
-    )
+    pairs = _pair_intersections(cands, docs, id_col, text_col, n, checkpoint_dir)
     return (
         pairs.withColumn(
             "union_size",
@@ -215,63 +208,33 @@ def _pair_intersections(
     text_col: str,
     n: int,
     checkpoint_dir: str | None,
-    parallelism: int | None = None,
-    cands_at_width: bool = False,
 ) -> DataFrame:
     """Shared verify substrate: each candidate pair with its exact
     per-pair (|A∩B|, |A|, |B|) integers attached — columns
-    (doc_a, doc_b, inter_size, size_a, size_b).
+    (doc_a, doc_b, inter_size, size_a, size_b), materialized.
 
     jaccard_verify and containment_verify are two THRESHOLD RULES over
     the same integers; the expensive part — semi-join shrink,
     shingle-set build, per-pair ``array_intersect`` — lives here once.
 
-    ``parallelism`` opts a CORPUS-SCALE caller into the wide
-    materialized shape (r15, guide §2.5 parallelism / §7.2 duplicated
-    expressions — both measured at sf0.1 on the 2.1 M-pair batch
-    substrate):
+    ``cands`` is read three times (both union sides of the pair-id
+    frame and the main join), so the caller passes a MATERIALIZED
+    frame: a lazy one re-runs the whole candidate generation per read
+    (measured ~40% of this operator's runtime at sf0.1).  Its
+    partitioning is the width of the CPU-bound intersect pass, so a
+    caller whose candidates come off an AQE-coalesced exchange widens
+    them first with ``materialize(compute_width(cands))`` (verify
+    4.3 → 1.2 s on the 2.1 M-pair batch substrate at sf0.1, where the
+    coalesced distinct left 10 partitions).  All verify columns are
+    integers (ids, md5-derived set sizes), so partitioning cannot
+    perturb any value.
 
-    - the pair-stats frame is materialized BEFORE the threshold
-      filters.  Returned as a plan, the filters collapse into the
-      attach join and each conjunct re-derives ``inter_size``, so
-      ``array_intersect`` evaluates up to 3× per pair (the before-plan
-      pinned the join condition carrying two copies); the narrow
-      integer barrier (5 ints/pair) makes it evaluate exactly once —
-      verify 6.6 → 4.3 s.
-    - the candidate frame is repartitioned to ``parallelism`` before
-      the CPU-bound intersect pass.  Candidates arrive from an
-      AQE-coalesced distinct (10 partitions at sf0.1 — a 34 MB shuffle
-      coalesces under the 64 MB advisory size), so the per-pair
-      set-intersection ran on a third of the cores; callers pass
-      ``sc.defaultParallelism``, the compute width on any cluster —
-      verify 4.3 → 1.2 s.  All verify columns are integers (ids,
-      md5-derived set sizes), so partition order cannot perturb any
-      value.
-
-    With ``parallelism=None`` (small batches, streaming micro-batches)
-    the frame comes back as a lazy plan on the input partitioning: for
-    a few-thousand-pair verify, the extra exchange + two checkpoint
-    jobs of the wide shape cost more than the duplicate intersect they
-    remove (measured on the wave15 store entries: +0.4–0.6 s each).
-
-    ``cands_at_width=True`` (r16, ADVICE r15): the caller asserts the
-    candidate frame is ALREADY lineage-truncated at compute width —
-    the memoized ``corpus_ops.lsh_candidates`` checkpoint (landed wide
-    by its pair-keyed exchange) or a narrow filter of it.  Both the
-    round-robin repartition and the defensive re-materialization are
-    skipped: re-checkpointing an already-checkpointed 2.1 M-pair frame
-    was one full copy job per verify call, and the repartition a
-    redundant full exchange on top (guide §2.4: remove shuffles the
-    data's existing layout already paid for)."""
-    if parallelism is not None and not cands_at_width:
-        cands = cands.repartition(parallelism)
-    # The candidate frame is consumed three times (both union sides of
-    # pair_ids and the main join): materialize it once or the whole
-    # upstream candidate generation re-executes per consumer —
-    # measured ~40% of this operator's runtime at sf0.1.  (Unless the
-    # caller vouches it is already materialized — see above.)
-    if not cands_at_width:
-        cands = materialize(cands, checkpoint_dir)
+    The pair-stats frame is materialized BEFORE the threshold filters.
+    Returned as a plan, the filters collapse into the attach join and
+    each conjunct re-derives ``inter_size``, so ``array_intersect``
+    evaluates up to 3× per pair; the narrow integer barrier (5
+    ints/pair) makes it evaluate exactly once (verify 6.6 → 4.3 s at
+    sf0.1)."""
     pair_ids = (
         cands.select(F.col("doc_a").alias("doc"))
         .union(cands.select(F.col("doc_b").alias("doc")))
@@ -281,8 +244,8 @@ def _pair_intersections(
     # doc_b side) and Spark has no cross-branch CSE, so without its
     # own materialization the semi-join + tokenize + array_distinct
     # subtree executes twice per verify — two full candidate-doc text
-    # scans where one suffices (r15, guide §2.4/§7.2: the before-plan
-    # showed the sets subtree duplicated under both BroadcastExchanges).
+    # scans where one suffices (the plan showed the sets subtree
+    # duplicated under both BroadcastExchanges).
     sets = materialize(
         docs.join(pair_ids, docs[id_col] == pair_ids["doc"], "left_semi").select(
             F.col(id_col).alias("doc"),
@@ -316,8 +279,6 @@ def _pair_intersections(
             "size_b",
         )
     )
-    if parallelism is None:
-        return stats
     return materialize(stats, checkpoint_dir)
 
 
@@ -330,8 +291,6 @@ def containment_verify(
     min_cont_num: int = 9,
     min_cont_den: int = 10,
     checkpoint_dir: str | None = None,
-    parallelism: int | None = None,
-    cands_at_width: bool = False,
 ) -> DataFrame:
     """Exact-CONTAINMENT verification of candidate pairs: keep (a, b)
     when |A∩B| ≥ τ·min(|A|, |B|) — i.e. the smaller document's shingle
@@ -341,17 +300,15 @@ def containment_verify(
     misses: a paragraph quoted whole inside a 100× longer page has
     J = |A|/|B| ≈ 0.01 but containment ≈ 1.0 — the standard reason
     corpus dedup runs BOTH rules (quotation/boilerplate inclusion vs
-    mutual near-identity). Same integer/cross-multiplied contract as
-    :func:`jaccard_verify`; shares its candidate substrate, so cost
-    stays O(candidates × shingles), never all-pairs.
+    mutual near-identity). Same integer/cross-multiplied contract and
+    the same ``cands`` contract as :func:`jaccard_verify`; shares its
+    candidate substrate, so cost stays O(candidates × shingles), never
+    all-pairs.
 
     Empty shingle sets never pass (min size 0 ⇒ the strict ``> 0``
     size guard filters the pair), mirroring jaccard's union_size > 0.
     """
-    pairs = _pair_intersections(
-        cands, docs, id_col, text_col, n, checkpoint_dir, parallelism,
-        cands_at_width,
-    )
+    pairs = _pair_intersections(cands, docs, id_col, text_col, n, checkpoint_dir)
     return (
         pairs.withColumn(
             "min_size", F.least(F.col("size_a"), F.col("size_b"))
@@ -386,7 +343,7 @@ def minhash_signatures(
         F.explode(F.array_distinct(token_ngrams(tokens(F.col(text_col)), n))).alias("sh"),
     )
     base = shingled.withColumn("hx", h32(F.col("sh")) % _P)
-    # each permutation as ONE parsed expression string (r15, litfold
+    # each permutation as ONE parsed expression string (the litfold
     # rationale): the Column-op form built ~6 py4j nodes per hash —
     # ~1.1 s of driver time per plan build for the 64-permutation loop
     mins = [
@@ -406,8 +363,8 @@ def band_rows(
     :func:`minhash_lsh_candidates` (h32 of the '|'-joined signature
     slots), kept separate so the batch self-join path keeps its
     bucket-explosion shape unchanged."""
-    # one parsed expression for the whole banding explode (r15,
-    # litfold rationale: the struct loop built ~10 py4j nodes per band
+    # one parsed expression for the whole banding explode (litfold
+    # rationale: the struct loop built ~10 py4j nodes per band
     # — ~0.5 s of driver time per plan build, paid per timed iteration
     # by every catalog-backed consumer)
     def _bh(b: int) -> str:
@@ -454,7 +411,7 @@ def minhash_lsh_candidates(
     combinations from one collect_list whose size ``max_bucket``
     bounds.
     """
-    # parsed expression strings (r15, litfold rationale — see band_rows)
+    # parsed expression strings (litfold rationale — see band_rows)
     def _bh(b: int) -> str:
         slots = ", ".join(
             f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)
@@ -487,19 +444,16 @@ def minhash_lsh_candidates(
     )
     # The pair-set dedup runs as an explicit pair-keyed repartition at
     # compute width + partition-local dropDuplicates instead of a bare
-    # .distinct() (r15, guide §2.4/§2.5): the aggregate reuses the
-    # explicit HashPartitioning, so this is ONE exchange — and the
-    # dedup runs at defaultParallelism instead of whatever AQE
-    # coalesces the 34 MB pair shuffle to (~10 partitions at sf0.1,
-    # which then under-parallelized every checkpoint consumer).
+    # .distinct(): the aggregate reuses the explicit HashPartitioning,
+    # so this is ONE exchange — and the dedup runs at compute width
+    # instead of whatever AQE coalesces the 34 MB pair shuffle to (~10
+    # partitions at sf0.1, which then under-parallelized every
+    # checkpoint consumer).
     # Cold build 7.7 → 5.6 s median at sf0.1; same distinct pair set.
-    par = sigs.sparkSession.sparkContext.defaultParallelism
-    return (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .repartition(par, "doc_a", "doc_b")
-        .dropDuplicates()
+    pairs = buckets.select(F.explode(pair_arr).alias("p")).select(
+        F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b")
     )
+    return compute_width(pairs, "doc_a", "doc_b").dropDuplicates()
 
 
 def simhash_near_dups(
@@ -543,7 +497,7 @@ def simhash_near_dups(
         ).alias("e"),
     ).select("doc", "fp", F.col("e.band").alias("band"), F.col("e.bv").alias("bv"))
     # Bucket members are grouped BY FINGERPRINT before pair explosion
-    # (r15, guide §2 "don't compute things you throw away"): a flat
+    # (don't compute things you throw away): a flat
     # member explosion evaluates xor+bit_count per DOC pair — on a
     # duplicate-heavy corpus (the operator's whole reason to exist) a
     # bucket of m docs holding g distinct fingerprints did m²/2 pair
@@ -642,7 +596,7 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ).withColumn("th", h64(F.col("tok")))
     # shiftleft wraps to the sign bit at j=63, which is exactly the
     # two's-complement bit mask we want on a signed long.  Both loops
-    # render as parsed expression strings (r15, litfold rationale):
+    # render as parsed expression strings (litfold rationale):
     # the Column-op form built ~14 py4j nodes per bit — ~1.6 s of
     # driver time per plan build, paid per timed iteration.
     bit_sums = [

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from xero_api_etl_utilities_spark.operators.materialize import compute_width
+
 
 def deletion_variants(col: str) -> F.Column:
     """Radius-1 deletion set: the string itself (i = length) plus every
@@ -59,11 +61,11 @@ def fuzzy_pairs_distance1(
     times through the join and each copy pays the levenshtein verify
     before the final ``distinct`` collapses it. Keys with long
     repeated runs (zero-padded codes — exactly the name shape here)
-    made that a quadratic duplicate fan-out (guide §2.3: shuffle and
-    compute fewer rows; measured 8.1 → 4.8 s at sf0.1 on the
+    made that a quadratic duplicate fan-out (shuffle and compute
+    fewer rows: measured 8.1 → 4.8 s at sf0.1 on the
     fuzzy_name_match catalog query, identical output).
 
-    Two r16 changes (guide §2.5 parallelism, §1.2 per-task work):
+    Two per-task-work choices:
 
     - the exploded variant frame is hash-repartitioned on the variant
       key at compute width BEFORE the self-join.  The small side
@@ -76,15 +78,13 @@ def fuzzy_pairs_distance1(
       the banded DP costs O(len·1) per pair instead of O(len²), and
       the return contract (distance if ≤ 1 else -1) makes the
       predicate exactly ≡ ``levenshtein(a, b) <= 1``."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    sides = (
+    sides = compute_width(
         df.select(
             F.col(id_col).alias("_id"),
             F.col(name_col).alias("_name"),
             F.explode(F.array_distinct(deletion_variants(name_col))).alias("_v"),
-        )
-        .select("_id", "_name", F.xxhash64("_v").alias("_variant"))
-        .repartition(par, "_variant")
+        ).select("_id", "_name", F.xxhash64("_v").alias("_variant")),
+        "_variant",
     )
     a = sides.select(
         F.col("_id").alias("id_a"), F.col("_name").alias("name_a"), "_variant"

@@ -16,11 +16,16 @@ semantics:
   (HDFS/S3): blocks are written to the DFS, so any executor can die
   and the frame re-loads. The cost is one DFS write + read per
   materialization — the price of surviving a multi-hour iterative
-  job. (VERDICT r2 flagged exactly this: a 100 TB connected-components
-  run must not lose 20 rounds of work to one preemption.)
+  job: a 100 TB connected-components run must not lose 20 rounds of
+  work to one preemption.
 
-Every operator that truncates lineage routes through
-:func:`materialize` and exposes ``checkpoint_dir``.
+Operators that expose ``checkpoint_dir`` (connected components,
+PageRank, label propagation, BPE training, the dedup verify substrate)
+truncate through :func:`materialize`; without a ``checkpoint_dir``,
+``pagerank_int`` and ``label_propagation`` call ``localCheckpoint()``
+directly every few rounds.  The session memos and a few query-local
+frames also call ``localCheckpoint()`` directly, so they are never
+fault-tolerant.
 
 A materialized frame that several catalog queries share is built once
 per session through :func:`session_memo`, which also keeps the build
@@ -42,9 +47,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 def compute_width(df: DataFrame, *keys: str) -> DataFrame:
     """Explicit exchange to the cluster compute width
-    (``sc.defaultParallelism``) — the r15/r16 lever for CPU-bound
-    per-row chains (tokenize / shingle / hash / explode) that sit
-    between a scan and the first shuffle (guide §2.5).
+    (``sc.defaultParallelism``) for CPU-bound per-row chains
+    (tokenize / shingle / hash / explode) that sit between a scan and
+    the first shuffle.  Every widening in the package goes through
+    here, so this is the one place that reads the width.
 
     On this engine's bench inputs every parquet table is a single row
     group, so every scan is ONE task and the whole pre-exchange chain

@@ -30,7 +30,6 @@ def reconcile(
     probe: DataFrame,
     build: DataFrame,
     on: list[str],
-    broadcast_probe: bool = True,
     persist_matched: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Split ``probe`` into (matched, unverified) against ``build``.
@@ -57,8 +56,7 @@ def reconcile(
     caller consuming BOTH halves (the EP1 pipeline) pays exactly one
     pass over the fact table; the caller owns ``unpersist()``.
     """
-    p = F.broadcast(probe) if broadcast_probe else probe
-    matched = p.join(build, on=on, how="inner")
+    matched = F.broadcast(probe).join(build, on=on, how="inner")
     if persist_matched:
         matched = matched.persist(StorageLevel.MEMORY_AND_DISK)
     hit_keys = matched.select(*on).distinct()

@@ -334,17 +334,10 @@ def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xero_api_etl_utilities_spark.operators import dedup as dd
 
     docs = load_table(spark, sf_dir, "documents")
+    # the memoized candidate checkpoint already sits at compute width
+    # (pair-keyed exchange in minhash_lsh_candidates)
     pairs = dd.jaccard_verify(
-        lsh_candidates(spark, sf_dir),
-        docs,
-        "doc_id",
-        "text",
-        n=1,
-        parallelism=spark.sparkContext.defaultParallelism,
-        # the memoized candidate checkpoint already sits at compute
-        # width (pair-keyed exchange in minhash_lsh_candidates) —
-        # skip the redundant re-exchange + re-checkpoint
-        cands_at_width=True,
+        lsh_candidates(spark, sf_dir), docs, "doc_id", "text", n=1
     )
     return pairs.localCheckpoint()
 
@@ -476,7 +469,7 @@ def text_bigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialize,
     )
 
-    # r16 (guide §2.5 + §2.4): the tokenize + bigram explode otherwise
+    # The tokenize + bigram explode otherwise
     # runs on the single-task scan — and grams feeds BOTH the vocab
     # aggregate and the scoring join (no cross-branch CSE), so it is
     # also materialized once instead of tokenizing the corpus twice
@@ -559,7 +552,7 @@ def text_posting_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # posting_head is published as a comma-joined STRING, not a raw
     # array: the driver's pandas row-sorter cannot hash list cells
-    # (TypeError: unhashable type — the r4/r5 "err" rows), and the
+    # (TypeError: unhashable type — the driver reports "err"), and the
     # CSV form is still the exact posting head, digit for digit.
     return (
         td.groupBy("term")
@@ -632,8 +625,8 @@ def text_hashing_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # parallel arrays (indices, weights) — the canonical sparse-vector
         # exchange format — published comma-joined as STRINGS: the
-        # driver's pandas sorter cannot hash raw list cells (the r4/r5
-        # "err" rows), and the CSV form is digit-exact either way.
+        # driver's pandas sorter cannot hash raw list cells (it reports
+        # "err"), and the CSV form is digit-exact either way.
         .select(
             "doc_id",
             F.array_join(
@@ -739,7 +732,7 @@ register("pipeline_training_corpus", pipeline_training_corpus, _training_corpus_
 
 
 def text_top_terms_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X70 (r5 seed): characteristic terms per document — tf-idf's
+    """X70: characteristic terms per document — tf-idf's
     rank-only skeleton: per doc, the 3 terms with highest term
     frequency, ties broken toward RARER terms (lower document
     frequency) then lexically. Rank-based instead of score-based, so
@@ -812,7 +805,7 @@ ORDER BY doc_id, rank
 
 
 # ---------------------------------------------------------------------------
-# X105: near-dup benchmark decontamination (r6)
+# X105: near-dup benchmark decontamination
 # ---------------------------------------------------------------------------
 
 _NDCONTAM_MOD, _NDCONTAM_RESIDUE = 13, 7
@@ -881,7 +874,7 @@ register("decontaminate_neardup", decontaminate_neardup, _neardup_contam_oracle)
 
 
 # ---------------------------------------------------------------------------
-# X106: duplicate-cluster representative selection (r6)
+# X106: duplicate-cluster representative selection
 # ---------------------------------------------------------------------------
 
 
@@ -961,7 +954,7 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# X108: combined contamination report (r6)
+# X108: combined contamination report
 # ---------------------------------------------------------------------------
 
 
@@ -1069,7 +1062,7 @@ register("decontaminate_report", decontaminate_report, _decontam_report_oracle)
 
 
 # ---------------------------------------------------------------------------
-# X112: near-dup provenance — within-source vs cross-source census (r6)
+# X112: near-dup provenance — within-source vs cross-source census
 # ---------------------------------------------------------------------------
 
 
@@ -1144,7 +1137,7 @@ register("dedup_pair_provenance", dedup_pair_provenance, _pair_provenance_oracle
 
 
 # ---------------------------------------------------------------------------
-# X114: dedup savings census (r6)
+# X114: dedup savings census
 # ---------------------------------------------------------------------------
 
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xero_api_etl_utilities_spark.operators.materialize import compute_width
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
 # Output money convention shared with every oracle: exact decimal math,
@@ -76,14 +77,14 @@ def daily_pnl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this shape also lets bucketed-by-orderkey storage elide the join
     # shuffle entirely.
     #
-    # r16 (guide §2.5 parallelism): the fact scan is one task on a
-    # single-row-group input, so the per-order partial aggregation —
-    # six decimal folds over every lineitem row — ran single-threaded.
+    # The fact scan is one task on a single-row-group input, so the
+    # per-order partial aggregation — six decimal folds over every
+    # lineitem row — ran single-threaded.
     # An explicit orderkey-keyed exchange at compute width moves the
     # heavy aggregation to full width, and the groupBy reuses the same
     # hash partitioning so no second exchange appears.  DECIMAL sums
     # are exact in any order, so the values cannot drift.
-    li = li.repartition(spark.sparkContext.defaultParallelism, "l_orderkey")
+    li = compute_width(li, "l_orderkey")
     per_order = li.groupBy("l_orderkey").agg(
         F.sum(gross).alias("_gross"),
         F.sum(net).alias("_net"),

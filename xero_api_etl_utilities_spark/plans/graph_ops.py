@@ -13,7 +13,10 @@ from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.functions.crosshash import h32_sql
 from xero_api_etl_utilities_spark.operators.graph import triangles
-from xero_api_etl_utilities_spark.operators.materialize import session_memo
+from xero_api_etl_utilities_spark.operators.materialize import (
+    compute_width,
+    session_memo,
+)
 from xero_api_etl_utilities_spark.operators.sketches import cms_build, cms_estimate
 from xero_api_etl_utilities_spark.plans.catalog import register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
@@ -34,24 +37,25 @@ def _co_edges(
     need not model it; at a scale where cells trip it, mirror the
     HAVING filter into the oracle."""
     ev = load_table(spark, sf_dir, "events")
-    # r16 (guide §2.4/§2.5): one explicit CELL-keyed exchange at
-    # compute width replaces the distinct's own exchange.  Hash
-    # partitioning on (d, t, h) — a subset of the dedup key — also
+    # One explicit CELL-keyed exchange at compute width replaces the
+    # distinct's own exchange.  Hash partitioning on (d, t, h) — a
+    # subset of the dedup key — also
     # satisfies the clustering requirement of the cell census groupBy,
     # the small-cell semi-join AND the pair self-join downstream, so
     # the whole build runs wide off ONE exchange instead of running
     # its partial aggregates on the single-task events scan (A/B at
     # sf0.1: warm 2.0 → 1.2 s, cold 5.9 → 2.8 s).
-    uc = (
+    uc = compute_width(
         ev.select(
             "user_id",
             F.col("ts").cast("date").alias("d"),
             F.col("event_type").alias("t"),
             F.hour("ts").alias("h"),
-        )
-        .repartition(spark.sparkContext.defaultParallelism, "d", "t", "h")
-        .dropDuplicates()
-    )
+        ),
+        "d",
+        "t",
+        "h",
+    ).dropDuplicates()
     small_cells = (
         uc.groupBy("d", "t", "h")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -377,15 +381,14 @@ def diag_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("k")
     )
-    # r16 (guide §2.5 parallelism): both the CMS build (posexplode ×d
-    # md5 buckets per row) and the exact per-key counts ran on the
-    # single-task scans.  One key-keyed exchange per side at compute
-    # width feeds BOTH branches — the per-key groupBy reuses the hash
-    # partitioning (no second exchange) and the sketch explode runs
-    # wide; every output is an integer count, partitioning-independent.
-    par = spark.sparkContext.defaultParallelism
-    od = od.repartition(par, "k")
-    li = li.repartition(par, "k")
+    # Both the CMS build (posexplode ×d md5 buckets per row) and the
+    # exact per-key counts ran on the single-task scans.  One key-keyed
+    # exchange per side at compute width feeds BOTH branches — the
+    # per-key groupBy reuses the hash partitioning (no second exchange)
+    # and the sketch explode runs wide; every output is an integer
+    # count, partitioning-independent.
+    od = compute_width(od, "k")
+    li = compute_width(li, "k")
     sa = cms_build(od, "k", d=_JS_D, w=_JS_W)
     sb = cms_build(li, "k", d=_JS_D, w=_JS_W)
     est = (
@@ -404,10 +407,10 @@ def diag_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("ca") * F.col("cb")).cast("bigint").alias("exact_join_size"))
     )
     # One tall union of the two 1-row aggregates instead of two
-    # sequential .collect() jobs + a driver-literal frame (guide §5:
-    # no driver round-trips on a query path; §2.6: the two subtrees
-    # are independent stages of ONE job, so they execute concurrently
-    # instead of back-to-back).  Still no 1-row cross join (the NLJ
+    # sequential .collect() jobs + a driver-literal frame (no driver
+    # round-trips on a query path; the two subtrees are independent
+    # stages of ONE job, so they execute concurrently instead of
+    # back-to-back).  Still no 1-row cross join (the NLJ
     # the audit bans) — the combine is a union + conditional max.
     tall = est.select(
         F.lit("e").alias("k"), F.col("est_join_size").alias("v")
@@ -698,7 +701,7 @@ register("graph_bfs_depth", graph_bfs_depth, _bfs_oracle)
 
 
 # ---------------------------------------------------------------------------
-# X103: connected components via Large-Star / Small-Star (r6)
+# X103: connected components via Large-Star / Small-Star
 # ---------------------------------------------------------------------------
 
 

@@ -1,7 +1,7 @@
-"""Round-3 training-pipeline catalog wave.
+"""Training-pipeline catalog wave.
 
 Five operators a 100 TB training-data pipeline runs daily, none of
-which the round-2 catalog covered:
+which the relational and corpus catalogs cover:
 
 - ``dedup_containment``   — sub/superset near-dup rule over the SAME
   LSH candidate substrate as the Jaccard path (quotation/boilerplate
@@ -49,16 +49,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     cands = corpus_ops.lsh_candidates(spark, sf_dir)
-    return dd.containment_verify(
-        cands,
-        docs,
-        "doc_id",
-        "text",
-        n=1,
-        parallelism=spark.sparkContext.defaultParallelism,
-        # memoized checkpoint, already at compute width (r16)
-        cands_at_width=True,
-    )
+    return dd.containment_verify(cands, docs, "doc_id", "text", n=1)
 
 
 def _containment_oracle() -> str:
@@ -295,8 +286,8 @@ FROM documents
 
 
 def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4's audio half made driver-visible (r4 — closes the last
-    decode gate): deterministic 16-bit PCM WAV bytes per doc_id
+    """X4's audio half made driver-visible (closes the last decode
+    gate): deterministic 16-bit PCM WAV bytes per doc_id
     (operators/multimodal.synth_wav_media; rate/channels/frames and
     every sample are closed-form in doc_id) pushed through the REAL
     stdlib RIFF decoder (functions/audiocodec.py) to per-channel
@@ -1011,9 +1002,9 @@ def similarity_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Engine stability: both sides are rank SETS already proven
     engine-stable (the exact truth is the similarity_label_purity
-    ranking; the approx side is similarity_topk_ivfpq_rerank, green
-    r6) — the census only counts their intersection.  Shape: the
-    two shortlists are (20 x 5)-row frames; everything after the
+    ranking; the approx side is similarity_topk_ivfpq_rerank, both
+    oracle-green) — the census only counts their intersection.  Shape:
+    the two shortlists are (20 x 5)-row frames; everything after the
     searches is dimension-sized."""
     from xero_api_etl_utilities_spark.operators import ivf
     from xero_api_etl_utilities_spark.operators import similarity as sim
@@ -1142,7 +1133,7 @@ FROM win
 
 
 def multimodal_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4's video half made driver-visible (r4): deterministic
+    """X4's video half made driver-visible: deterministic
     ISO-BMFF bytes per doc_id (operators/multimodal.synth_mp4_media —
     timescale/duration/tracks/dims closed-form in doc_id, mvhd/tkhd
     version alternating by parity so both 32- and 64-bit layouts are
@@ -1188,7 +1179,7 @@ _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 
 def events_pivot_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reshape completion (UNPIVOT landed r3; this is the PIVOT
+    """Reshape completion (UNPIVOT is ``unpivot_measures``; this is the PIVOT
     direction): the day × event-type count matrix, lowered by hand to
     conditional aggregates — ``sum(when(type = v, 1))`` per listed
     value — in ONE shuffle on the day key.
@@ -1523,7 +1514,7 @@ ORDER BY d
 
 
 # ---------------------------------------------------------------------------
-# X104: image average-hash near-dup pairs (r6)
+# X104: image average-hash near-dup pairs
 # ---------------------------------------------------------------------------
 
 

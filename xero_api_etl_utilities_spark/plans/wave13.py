@@ -1,5 +1,5 @@
-"""Round-13 wave (X170–X171): the two curation-stage gaps VERDICT r12
-ranked as the operator frontier.
+"""Catalog wave X170–X171: two curation-stage operators the corpus
+catalog lacked.
 
 - X170 ``text_quality_classifier`` — model-based quality scoring (the
   DCLM/fastText stage): a tiny integer perceptron trained driver-side
@@ -20,8 +20,7 @@ ranked as the operator frontier.
   incremental plan computes exactly the full answer's new slice.
 
 Reference provenance: the reference ETL (src/queries.ts) has neither
-tier; these extend the training-data-pipeline surface the brief
-requires (VERDICT r12 items 6 and 7).
+tier; these extend the training-data-pipeline surface.
 """
 
 from __future__ import annotations
@@ -31,6 +30,10 @@ from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.functions.crosshash import h32, h32_sql
 from xero_api_etl_utilities_spark.operators.litfold import lit_longs
+from xero_api_etl_utilities_spark.operators.materialize import (
+    compute_width,
+    materialize,
+)
 from xero_api_etl_utilities_spark.plans.catalog import oracle_sf_dir, register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
@@ -67,7 +70,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_arr = lit_longs([int(w) for w in weights])
     toks = tokens(F.col("text"))
     # coalesce: NULL text -> NULL fold, but the DuckDB oracle COALESCEs
-    # its list_sum to 0 — a NULL-text document scores 0 (ADVICE r14)
+    # its list_sum to 0 — a NULL-text document scores 0
     score = F.coalesce(
         F.aggregate(
             toks,
@@ -183,7 +186,7 @@ def dedup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded = dd.band_rows(
         minhash_sigs(spark, sf_dir), bands=_INC_BANDS, rows_per_band=_INC_ROWS
     )
-    # r15: within-bucket explosion, the minhash_lsh_candidates shape —
+    # Within-bucket explosion, the minhash_lsh_candidates shape —
     # the previous census + (kept ⋈ kept) self-join form instantiated
     # the banding projection (16 md5s/doc over the whole corpus) on
     # FOUR plan branches and the bucket census on two (Spark has no
@@ -228,13 +231,10 @@ def dedup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .distinct()
     )
+    # the distinct's exchange is AQE-coalesced: widen before the
+    # CPU-bound verify
     verified = dd.jaccard_verify(
-        cands,
-        docs,
-        "doc_id",
-        "text",
-        n=1,
-        parallelism=spark.sparkContext.defaultParallelism,
+        materialize(compute_width(cands)), docs, "doc_id", "text", n=1
     )
     is_a_new = F.col("doc_a") % 5 == 4
     return verified.select(
@@ -247,9 +247,9 @@ def dedup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inter_size",
         "union_size",
     )
-    # no publish-path orderBy (r15): the driver hash is
-    # order-insensitive and the pair output is fact-sized — the same
-    # range-shuffle removal VERDICT r14 item 6 applied to X174
+    # no publish-path orderBy: the driver hash is order-insensitive
+    # and the pair output is fact-sized — the same range-shuffle
+    # removal as X174
 
 
 def _incremental_pairs_oracle() -> str:
@@ -309,7 +309,7 @@ def text_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_arr = lit_longs([int(w) for w in weights])
     toks = tokens(F.col("text"))
     # coalesce: NULL text -> NULL fold, but the DuckDB oracle COALESCEs
-    # its list_sum to 0 — a NULL-text document scores 0 (ADVICE r14)
+    # its list_sum to 0 — a NULL-text document scores 0
     score = F.coalesce(
         F.aggregate(
             toks,

@@ -1,5 +1,5 @@
-"""Round-14 wave (X174–X177): make the dedup CATALOG a real on-disk
-artifact and close the classifier lifecycle (VERDICT r13 items 6–7).
+"""Catalog wave X174–X177: make the dedup CATALOG a real on-disk
+artifact and close the classifier lifecycle.
 
 - X174 ``dedup_catalog_persisted`` — X171's incremental near-dedup
   with the corpus side read from a PERSISTED parquet band catalog
@@ -29,8 +29,7 @@ artifact and close the classifier lifecycle (VERDICT r13 items 6–7).
   expire(tombstones) ≡ rebuild(corpus ∖ tombstones).
 
 Reference provenance: the reference ETL (src/queries.ts) has no dedup
-or model tier; these extend the training-data-pipeline surface the
-brief requires (VERDICT r13 items 6 and 7).
+or model tier; these extend the training-data-pipeline surface.
 """
 
 from __future__ import annotations
@@ -42,7 +41,11 @@ from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.functions.crosshash import h32, h32_sql
 from xero_api_etl_utilities_spark.operators.litfold import lit_longs
-from xero_api_etl_utilities_spark.operators.materialize import session_memo
+from xero_api_etl_utilities_spark.operators.materialize import (
+    compute_width,
+    materialize,
+    session_memo,
+)
 from xero_api_etl_utilities_spark.plans.catalog import oracle_sf_dir, register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
@@ -177,14 +180,10 @@ def dedup_catalog_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     cands = incremental_cands_from_disk(spark, sf_dir)
-    verified = dd.jaccard_verify(
-        cands,
-        docs,
-        "doc_id",
-        "text",
-        n=1,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
+    # the distinct's exchange is AQE-coalesced: widen before the
+    # CPU-bound verify
+    cands = materialize(compute_width(cands))
+    verified = dd.jaccard_verify(cands, docs, "doc_id", "text", n=1)
     is_a_new = F.col("doc_a") % 5 == 4
     return (
         verified.select(
@@ -200,7 +199,7 @@ def dedup_catalog_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         # no publish-path orderBy: the driver hash is order-insensitive
         # and this is the one fact-sized catalog output — a global sort
         # here would plan a full range shuffle at 100 TB pair volume
-        # for nothing (VERDICT r14 "What's wrong" note 1)
+        # for nothing
     )
 
 
@@ -299,7 +298,7 @@ def text_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict flips each way (the documents a swap would newly admit /
     newly reject), exact-integer agreement in bp ((20000a+n) div 2n),
     and the exact score drift sum.  This is the table a curation team
-    reads before replacing the quality model (VERDICT r13 item 7).
+    reads before replacing the quality model.
 
     Lowering: both weight vectors are broadcast integer literals; each
     document's two scores are two in-row F.aggregate folds over the

@@ -1,6 +1,5 @@
-"""Round-15 wave (X179–X180): give the GROWING store a driver-hash
-gate and make the model-swap decision itself an oracled operator
-(VERDICT r14 items 3 and 7).
+"""Catalog wave X179–X180: give the GROWING store a driver-hash
+gate and make the model-swap decision itself an oracled operator.
 
 - X179 ``dedup_store_asof`` — the absorbing-store semantics as a
   DuckDB-hash catalog row: the X171 arrival set (doc_id % 5 == 4)
@@ -44,8 +43,8 @@ gate and make the model-swap decision itself an oracled operator
   sources.writer.compact_store).
 
 Reference provenance: the reference ETL (src/queries.ts) has no
-dedup or model tier; these extend the training-data-pipeline surface
-the brief requires (VERDICT r14 items 2, 3 and 7).
+dedup or model tier; these extend the training-data-pipeline
+surface.
 """
 
 from __future__ import annotations
@@ -55,7 +54,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xero_api_etl_utilities_spark.operators.materialize import session_memo
+from xero_api_etl_utilities_spark.operators.materialize import (
+    materialize,
+    session_memo,
+)
 from xero_api_etl_utilities_spark.plans.catalog import oracle_sf_dir, register
 
 _BANDS = 16
@@ -165,7 +167,9 @@ def build_absorb_replay(spark: SparkSession, sf_dir: str, path: str) -> None:
             .select("doc_a", "doc_b")
             .distinct()
         )
-        verified = jaccard_verify(cands, docs, "doc_id", "text", n=1)
+        verified = jaccard_verify(
+            materialize(cands), docs, "doc_id", "text", n=1
+        )
         verified.select(
             F.col("doc_a").alias("new_id"),
             F.col("doc_b").alias("store_id"),
@@ -253,11 +257,11 @@ _FLIP_CAP_BP = 800  # and no source may flip > 8.00% of its documents
 
 def quality_swap_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X180: the model-swap policy as a deterministic integer verdict
-    (VERDICT r14 item 7) — X175 produces the drift census a curation
-    team READS; this is the decision a curation run EXECUTES.  Swap to
-    the epoch-B model iff (a) global agreement between the two models'
-    verdicts is at least ``_AGREE_MIN_BP`` (computed from the exact
-    un-rounded agreement counts, not the per-source rounded bp) and
+    — X175 produces the drift census a curation team READS; this is
+    the decision a curation run EXECUTES.  Swap to the epoch-B model
+    iff (a) global agreement between the two models' verdicts is at
+    least ``_AGREE_MIN_BP`` (computed from the exact un-rounded
+    agreement counts, not the per-source rounded bp) and
     (b) no single source's flip mass (newly admitted + newly rejected,
     as a rounded share of the source's documents) exceeds
     ``_FLIP_CAP_BP`` — the per-source cap catches a model that agrees

@@ -1,4 +1,4 @@
-"""Round-9 wave (SURVEY §2.12 X146–X150).
+"""Catalog wave X146–X150 (SURVEY §2.12).
 
 No reference counterpart (``src/queries.ts`` is a bookkeeping ETL);
 this wave closes the last measured-but-not-actionable gaps:
@@ -82,7 +82,7 @@ def span_dedup_frame(spark: SparkSession, sf_dir: str, k: int = 6) -> DataFrame:
     wdocs = docs.select(
         "doc_id", "source", F.split(F.col("text"), " ").alias("_w")
     )
-    # r15 (guide §2.4): spans feeds BOTH the canonical-occurrence
+    # spans feeds BOTH the canonical-occurrence
     # aggregate and the removal join, and the branches shuffle
     # different payloads, so the corpus-wide posexplode + md5-64
     # projection executed twice per run — materialize it once
@@ -152,8 +152,8 @@ def span_dedup_frame(spark: SparkSession, sf_dir: str, k: int = 6) -> DataFrame:
     # kept text = the GAPS between the sorted disjoint removal
     # intervals, sliced out of the token array — O(tokens + intervals)
     # per row (the previous array_contains-per-token rebuild was
-    # O(tokens x removed), quadratic on heavily-duplicated docs —
-    # ADVICE r9).  Gap i runs from (interval i-1).e + 1 (or 0) up to
+    # O(tokens x removed), quadratic on heavily-duplicated docs).
+    # Gap i runs from (interval i-1).e + 1 (or 0) up to
     # (interval i).s - 1, plus a tail gap after the last interval.
     gaps = F.concat(
         F.transform(
@@ -572,9 +572,9 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = lsh_candidates(spark, sf_dir).filter(
         h32(F.concat_ws(":", F.col("doc_a"), F.col("doc_b"))) % 8 == 0
     )
-    # the memoized once-per-session sketch (r11) — zero re-shingling
+    # the memoized once-per-session sketch — zero re-shingling
     sigs = minhash_sigs(spark, sf_dir)
-    # selectExpr strings + one parsed 64-term sum (r15, litfold
+    # selectExpr strings + one parsed 64-term sum (litfold
     # rationale): the Column-op loops built ~450 py4j nodes — ~0.8 s
     # of driver time per plan build
     sa = sigs.selectExpr(
@@ -593,19 +593,11 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(sb, "doc_b")
         .select("doc_a", "doc_b", match.alias("_m"))
     )
+    # cands is a narrow filter of the memoized compute-width
+    # checkpoint: partitioning is inherited, and re-running the 1/8
+    # hash-slice filter per consumer is cheaper than re-checkpointing
     exact = dd.jaccard_verify(
-        cands,
-        docs,
-        "doc_id",
-        "text",
-        n=1,
-        min_sim_num=0,
-        min_sim_den=1,
-        parallelism=spark.sparkContext.defaultParallelism,
-        # a narrow filter of the memoized compute-width checkpoint:
-        # partitioning is inherited, and re-running the 1/8 hash-slice
-        # filter per consumer is cheaper than re-checkpointing (r16)
-        cands_at_width=True,
+        cands, docs, "doc_id", "text", n=1, min_sim_num=0, min_sim_den=1
     ).filter(
         # zero-overlap band collisions: the array-set verify keeps
         # them, the oracle's shingle-inner-join form drops them —
