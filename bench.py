@@ -10,7 +10,8 @@ exactness baselines (``register(..., bounded=True)``) run at the sf0.01
 directory next to the run directory, apart from the headline.  A shared
 memo (``operators.materialize.session_memo``) is timed once, as its own
 ``<memo>_build`` entry before the query that first needs it, and that
-query is timed at marginal cost.  Host contention is recorded, not
+query is timed at marginal cost; the counts of its building first call
+are kept as the entry's ``first_call``.  Host contention is recorded, not
 waited out: ``cpu_steal_share`` is the machine's CPU steal over the
 timed part of the run.
 
@@ -139,18 +140,21 @@ def main() -> None:
     best: dict[str, float] = {}
     entries: dict[str, dict] = {}
 
+    def _counts(call) -> dict:
+        return {
+            "cpu_s": round(call.cpu_s, 3),
+            "jobs": call.jobs,
+            "stages": call.stages,
+            "tasks": call.tasks,
+        }
+
     def _record(name: str, calls: list, suffix: str = "") -> tuple[float, float]:
         """(median, best) wall time of the runs — the median absorbs one
         CPU-steal stall per query in either direction.  The CPU time and
         counts recorded are the median run's."""
         calls = sorted(calls, key=lambda c: c.wall_s)
         mid = calls[len(calls) // 2]
-        entries[name] = {
-            "cpu_s": round(mid.cpu_s, 3),
-            "jobs": mid.jobs,
-            "stages": mid.stages,
-            "tasks": mid.tasks,
-        }
+        entries[name] = _counts(mid)
         med = round(mid.wall_s, 3)
         print(f"bench {name}{suffix}: {med}s", file=sys.stderr, flush=True)
         return med, round(calls[0].wall_s, 3)
@@ -162,16 +166,20 @@ def main() -> None:
         # A first run that built shared memos is not this entry's cost:
         # each build becomes its own single-run `<memo>_build` entry,
         # placed before this one, and the entry is re-timed at marginal
-        # cost.
+        # cost.  The building call's counts are kept as the entry's
+        # `first_call`, so a change in build work shows in the record.
         builds = SESSION_MEMOS.builds[mark:]
         for b in builds:
             timings[f"{b.name}_build"] = best[f"{b.name}_build"] = round(b.seconds, 3)
             print(f"bench {b.name}_build: {round(b.seconds, 3)}s", file=sys.stderr, flush=True)
+        first = None
         if builds:
-            calls = []
+            first, calls = calls[0], []
         while len(calls) < 3:
             calls.append(_run(name, sf_dir))
         timings[name], best[name] = _record(name, calls)
+        if first is not None:
+            entries[name]["first_call"] = _counts(first)
         state["since"] += 1
 
     # bounded-sf exactness baselines: every full run; subset runs only

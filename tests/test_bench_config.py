@@ -58,15 +58,24 @@ def test_unknown_names_exit_before_spark_starts(tmp_path, sf_dir):
 def test_subset_record_has_contract_and_probe_counts(tmp_path, sf_dir):
     bench = _bench_copy(tmp_path)
     done = subprocess.run(
-        [sys.executable, str(bench), "scan_project_filter", "similarity_topk"],
+        [sys.executable, str(bench), "scan_project_filter", "similarity_topk",
+         "graph_triangle_counts"],
         env=_env(sf_dir), capture_output=True, text=True, timeout=600,
     )
     assert done.returncode == 0, done.stderr[-4000:]
     line = json.loads(done.stdout.strip().splitlines()[-1])
     assert CONTRACT <= set(line)
-    assert line["n_queries"] == 1 and line["n_bounded_baselines"] == 1
+    # graph_triangle_counts and the graph_edges memo build it triggers
+    assert line["n_queries"] == 3 and line["n_bounded_baselines"] == 1
     assert "cpu_steal_share" in line
     assert not [k for k in line if k.startswith("calib_")]
     detail = json.loads((tmp_path / "BENCH_SUBSET.json").read_text())
     entry = detail["entries"]["scan_project_filter"]
     assert entry["jobs"] >= 1 and entry["cpu_s"] > 0
+    assert "first_call" not in entry
+    # the memo consumer's first call carries the build's work
+    consumer = detail["entries"]["graph_triangle_counts"]
+    assert "graph_edges_build" in detail["queries"]
+    first = consumer["first_call"]
+    assert set(first) == {"cpu_s", "jobs", "stages", "tasks"}
+    assert first["jobs"] > consumer["jobs"] and first["cpu_s"] > 0

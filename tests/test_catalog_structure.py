@@ -104,3 +104,81 @@ def test_only_materialize_reads_the_compute_width():
     )
     others = [r for r in readers if r != "operators/materialize.py"]
     assert not others, f"modules reading defaultParallelism: {others}"
+
+
+def test_every_defaulted_parameter_has_a_caller():
+    """A defaulted parameter of an operator, function or source that no
+    call passes is a constant in disguise: every module-level function
+    in ``operators/``, ``functions/`` and ``sources/`` must have each
+    defaulted parameter passed, by keyword or by position, at one or
+    more call sites in the package, ``tools/``, ``bench.py``,
+    ``perfbench/`` or ``tests/``.  The walk is static and matches a
+    call by the callee's bare name; a call with ``*args`` or
+    ``**kwargs`` counts as passing everything it could reach.
+
+    Exempt: ``sources/rest.py``, whose endpoints, headers and timeouts
+    are deployment settings; and ``checkpoint_dir``, the reliable-
+    storage path of the fault-recovery route (see
+    ``operators/materialize.py``) — a long cluster run passes it, and
+    no local test or catalog query can."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    base = root / "xero_api_etl_utilities_spark"
+    defaulted: dict[str, list[tuple[str, int | None, str]]] = {}
+    for sub in ("operators", "functions", "sources"):
+        for p in sorted((base / sub).rglob("*.py")):
+            rel = str(p.relative_to(base))
+            if rel == "sources/rest.py":
+                continue
+            for fn in ast.parse(p.read_text()).body:
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                a = fn.args
+                pos = a.posonlyargs + a.args
+                first = len(pos) - len(a.defaults)
+                params = [(i, x.arg) for i, x in enumerate(pos) if i >= first]
+                params += [
+                    (None, x.arg)
+                    for x, d in zip(a.kwonlyargs, a.kw_defaults)
+                    if d is not None
+                ]
+                defaulted.setdefault(fn.name, []).extend(
+                    (rel, i, arg) for i, arg in params if arg != "checkpoint_dir"
+                )
+
+    sources = [root / "bench.py"]
+    for d in ("xero_api_etl_utilities_spark", "tools", "perfbench", "tests"):
+        sources += sorted((root / d).rglob("*.py"))
+    keywords: dict[str, set[str]] = {}
+    max_pos: dict[str, int] = {}
+    for p in sources:
+        for node in ast.walk(ast.parse(p.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            if name not in defaulted:
+                continue
+            kws = keywords.setdefault(name, set())
+            kws.update(k.arg or "**" for k in node.keywords)
+            n = len(node.args)
+            if any(isinstance(x, ast.Starred) for x in node.args):
+                n = 1 << 30
+            max_pos[name] = max(max_pos.get(name, 0), n)
+
+    unpassed = sorted(
+        f"{rel}:{name}({arg})"
+        for name, params in defaulted.items()
+        for rel, i, arg in params
+        if not (
+            arg in keywords.get(name, ())
+            or "**" in keywords.get(name, ())
+            or (i is not None and i < max_pos.get(name, 0))
+        )
+    )
+    assert not unpassed, (
+        f"{len(unpassed)} defaulted parameters no call passes — make each a "
+        f"constant or give it a caller: {unpassed}"
+    )

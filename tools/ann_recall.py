@@ -4,8 +4,8 @@ actually tunes — ``nprobe`` (cells probed per query) for IVF, and
 ``nprobe × m`` (subspace count — the compression/accuracy trade) for
 IVF-PQ — so index parameters are chosen from a curve, not folklore.
 Companion to tools/lsh_sweep.py, which swept the MinHash/hyperplane
-knobs (and caught a silent 4× recall loss in round 1 — same risk
-here).
+knobs (and caught a silent 4× recall loss there — the same risk
+applies here).
 
 Methodology: recall@k = |approx top-k ∩ exact top-k| / k, averaged
 over queries (self-matches excluded on both sides). Two corpora:
@@ -55,15 +55,16 @@ def _recall(exact: dict, approx: dict) -> float:
     return tot / len(exact)
 
 
-def clustered_corpus(spark, n_clusters: int = 8, per: int = 40, dim: int = 64):
-    """Tight unit-norm clusters (σ=0.02 noise) — deterministic."""
+def clustered_corpus(spark):
+    """8 tight unit-norm clusters of 40 64-dim vectors (σ=0.02 noise)
+    — deterministic."""
     rng = random.Random(7)
     rows = []
-    for c in range(n_clusters):
-        center = [rng.gauss(0, 1) for _ in range(dim)]
+    for c in range(8):
+        center = [rng.gauss(0, 1) for _ in range(64)]
         nrm = math.sqrt(sum(x * x for x in center))
         center = [x / nrm for x in center]
-        for i in range(per):
+        for i in range(40):
             rows.append((c * 1000 + i, [x + rng.gauss(0, 0.02) for x in center]))
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 

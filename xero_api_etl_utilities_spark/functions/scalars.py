@@ -64,13 +64,13 @@ def iso_date(col: Column | str) -> Column:
     return F.date_format(c, "yyyy-MM-dd")
 
 
-def local_ts(col: Column | str, fmt: str = "dd/MM/yyyy, HH:mm:ss") -> Column:
+def local_ts(col: Column | str) -> Column:
     """F11+F13: `toLocaleString("en-AU", {hour12:false})` after the
     hand-rolled TZ shift (src/queries.ts:130-139, src/helpers.ts:262).
     With the session timezone pinned to Australia/Brisbane, a plain
     date_format is the whole computation."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, fmt)
+    return F.date_format(c, "dd/MM/yyyy, HH:mm:ss")
 
 
 def weekday_upper(col: Column | str) -> Column:

@@ -143,14 +143,13 @@ def encode_mp4_meta(
     duration: int,
     tracks: list[tuple[int, int, int]],
     version: int = 0,
-    brand: bytes = b"isom",
 ) -> bytes:
-    """Minimal valid ISO-BMFF bytes: ftyp + moov(mvhd + trak(tkhd)*)
-    + an 8-byte mdat. ``tracks`` is [(track_id, width_px, height_px)].
+    """Minimal valid ISO-BMFF bytes: ftyp (brand ``isom``) +
+    moov(mvhd + trak(tkhd)*) + an 8-byte mdat. ``tracks`` is [(track_id, width_px, height_px)].
     ``version`` selects mvhd/tkhd v0 (32-bit times) or v1 (64-bit)."""
     if version not in (0, 1):
         raise ValueError(f"mvhd version must be 0 or 1, got {version}")
-    ftyp = _box(b"ftyp", brand + struct.pack(">I", 0))
+    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 0))
     t = ">II" if version == 0 else ">QQ"
     mvhd = _full_box(
         b"mvhd",

@@ -29,7 +29,6 @@ def asof_join_backward(
     left_ts: str = "ts",
     right_ts: str = "ts",
     right_cols: list[str] | None = None,
-    suffix: str = "_right",
 ) -> DataFrame:
     """Backward as-of join (latest right row at-or-before each left row).
 
@@ -84,10 +83,10 @@ def asof_join_backward(
     return filled.select(
         F.col("_lrow.*"),
         *[
-            F.col(f"_rrow.{c}").alias(f"{c}{suffix}" if c in left.columns else c)
+            F.col(f"_rrow.{c}").alias(f"{c}_right" if c in left.columns else c)
             for c in right_cols
         ],
-        F.col("_rrow._r_ts").alias(f"{right_ts}{suffix}"),
+        F.col("_rrow._r_ts").alias(f"{right_ts}_right"),
     )
 
 
@@ -98,7 +97,6 @@ def asof_join_nearest(
     left_ts: str = "ts",
     right_ts: str = "ts",
     right_cols: list[str] | None = None,
-    suffix: str = "_right",
 ) -> DataFrame:
     """NEAREST as-of join (pandas ``merge_asof(direction='nearest')``):
     for each left row, the same-key right row with the smallest
@@ -189,8 +187,8 @@ def asof_join_nearest(
     return picked.select(
         F.col("_lrow.*"),
         *[
-            F.col(f"_rrow.{c}").alias(f"{c}{suffix}" if c in left.columns else c)
+            F.col(f"_rrow.{c}").alias(f"{c}_right" if c in left.columns else c)
             for c in right_cols
         ],
-        F.col("_rrow._r_ts").alias(f"{right_ts}{suffix}"),
+        F.col("_rrow._r_ts").alias(f"{right_ts}_right"),
     )

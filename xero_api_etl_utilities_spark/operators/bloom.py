@@ -36,27 +36,25 @@ from xero_api_etl_utilities_spark.functions.crosshash import h32
 from xero_api_etl_utilities_spark.operators.litfold import lit_longs
 
 M_BITS_DEFAULT = 8192
-K_HASHES_DEFAULT = 4
+K_HASHES = 4
 
 
-def _positions(key: Column, k: int, m: int) -> list[Column]:
+def _positions(key: Column, m: int) -> list[Column]:
     return [
         (h32(F.concat(F.lit(f"{i}:"), key.cast("string"))) % m).cast("long")
-        for i in range(k)
+        for i in range(K_HASHES)
     ]
 
 
-def bloom_build(
-    keys: DataFrame, key_col: str, m: int = M_BITS_DEFAULT, k: int = K_HASHES_DEFAULT
-) -> list[int]:
+def bloom_build(keys: DataFrame, key_col: str, m: int = M_BITS_DEFAULT) -> list[int]:
     """The filter as ``m/64`` bigint words (python list, driver-side).
 
     One bounded aggregate over the build side: explode each key into
-    its k bit positions, map to (word, bit), bit_or the shifted bits
-    per word. Output <= m/64 rows by construction — a documented
+    its ``K_HASHES`` bit positions, map to (word, bit), bit_or the
+    shifted bits per word. Output <= m/64 rows by construction — a documented
     driver-side scalar in the same sense as the IVF training samples.
     """
-    pos = F.explode(F.array(*_positions(F.col(key_col), k, m))).alias("pos")
+    pos = F.explode(F.array(*_positions(F.col(key_col), m))).alias("pos")
     words = (
         keys.select(pos)
         .select(
@@ -74,16 +72,17 @@ def bloom_build(
 
 
 def bloom_might_contain(
-    key: Column, words: list[int], m: int = M_BITS_DEFAULT, k: int = K_HASHES_DEFAULT
+    key: Column, words: list[int], m: int = M_BITS_DEFAULT
 ) -> Column:
     """Membership-test expression over the literal word array: true iff
-    ALL k bits are set. Pure codegen — no join, no shuffle, no python."""
+    ALL ``K_HASHES`` bits are set. Pure codegen — no join, no shuffle,
+    no python."""
     # one-parser-call literal (operators/litfold.py): at the 2^17-bit
     # cap this is 2048 longs — element-wise F.lit cost ~1.5 s of
     # driver time per plan build
     lit_words = lit_longs(words)
     cond = None
-    for p in _positions(key, k, m):
+    for p in _positions(key, m):
         word = F.element_at(lit_words, (p / 64).cast("int") + 1)
         # getbit takes the shift distance as an EXPRESSION (the python
         # shiftright wrappers accept only literal distances)
@@ -92,13 +91,13 @@ def bloom_might_contain(
     return cond
 
 
-def auto_bits(n_keys: int, k: int = K_HASHES_DEFAULT) -> int:
-    """Filter size for ~0.2% FP at ``k`` hashes: m = 16·n rounded up
-    to a power of two (word-aligned shifts), floored at the 8192-bit
+def auto_bits(n_keys: int) -> int:
+    """Filter size for ~0.2% FP at ``K_HASHES`` hashes: m = 16·n
+    rounded up to a power of two (word-aligned shifts), floored at the 8192-bit
     default and capped at 2^17 — 2048 literal longs, well under the
     literal-tree cliff PLANS.md measured (~100k constants). Sizing
     matters: the fixed default measured 36% FP once the build side
-    grew to 3k keys at sf0.1 (PLANS.md round-4 findings)."""
+    grew to 3k keys at sf0.1 (PLANS.md)."""
     m = M_BITS_DEFAULT
     while m < 16 * n_keys and m < (1 << 17):
         m <<= 1
@@ -110,21 +109,18 @@ def bloom_pruned_semi_join(
     build: DataFrame,
     probe_key: str,
     build_key: str,
-    m: int | None = None,
-    k: int = K_HASHES_DEFAULT,
 ) -> DataFrame:
     """``probe LEFT SEMI JOIN build`` with the bloom prefilter pushed
     into the probe scan. Row-identical to the plain semi join.
 
-    ``m=None`` sizes the filter from the build-side key count (one
-    extra 1-row aggregate on the SMALL side — the documented
-    driver-scalar pattern): a fixed m silently degrades to
-    near-pass-through as the build side grows."""
+    The filter is sized from the build-side key count (one extra
+    1-row aggregate on the SMALL side — the documented driver-scalar
+    pattern): a fixed m silently degrades to near-pass-through as the
+    build side grows."""
     keys = build.select(build_key).distinct()
-    if m is None:
-        m = auto_bits(keys.count(), k)
-    words = bloom_build(keys, build_key, m, k)
-    pruned = probe.filter(bloom_might_contain(F.col(probe_key), words, m, k))
+    m = auto_bits(keys.count())
+    words = bloom_build(keys, build_key, m)
+    pruned = probe.filter(bloom_might_contain(F.col(probe_key), words, m))
     return pruned.join(
         keys,
         pruned[probe_key] == F.col(build_key),

@@ -40,14 +40,14 @@ from pyspark.sql import functions as F
 from xero_api_etl_utilities_spark.operators.materialize import materialize
 
 
-def word_symbol_frame(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_symbol_frame(docs: DataFrame) -> DataFrame:
     """(word, freq, syms) — corpus collapsed to its vocabulary with
     per-word frequencies and initial character-level symbol arrays."""
     words = (
         docs.select(
             F.explode(
                 F.regexp_extract_all(
-                    F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), 0
+                    F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0
                 )
             ).alias("w")
         )
@@ -97,7 +97,6 @@ def _apply_merge(frame: DataFrame, left: str, right: str) -> DataFrame:
 def bpe_merges(
     docs: DataFrame,
     rounds: int,
-    text_col: str = "text",
     checkpoint_dir: str | None = None,
 ) -> list[tuple[int, str, str, int]]:
     """Train ``rounds`` BPE merges; returns
@@ -108,7 +107,7 @@ def bpe_merges(
     like IVF's trained centroids); everything else stays distributed.
     Lineage is truncated per round via :func:`materialize` so round k
     does not replay rounds 1..k-1's folds."""
-    frame = materialize(word_symbol_frame(docs, text_col), checkpoint_dir)
+    frame = materialize(word_symbol_frame(docs), checkpoint_dir)
     out: list[tuple[int, str, str, int]] = []
     for k in range(1, rounds + 1):
         top = (

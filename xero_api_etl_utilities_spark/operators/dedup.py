@@ -47,9 +47,9 @@ def minhash_coeffs(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     return [(rng.randrange(1, _P) | 1, rng.randrange(1, _P)) for _ in range(num_hashes)]
 
 
-def tokens(text, pattern: str = "[a-z0-9]+"):
+def tokens(text):
     """Lowercased word tokens as an array column."""
-    return F.regexp_extract_all(F.lower(text), F.lit(pattern), 0)
+    return F.regexp_extract_all(F.lower(text), F.lit("[a-z0-9]+"), 0)
 
 
 def token_ngrams(tok_col, n: int):
@@ -288,13 +288,11 @@ def containment_verify(
     id_col: str,
     text_col: str,
     n: int = 1,
-    min_cont_num: int = 9,
-    min_cont_den: int = 10,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact-CONTAINMENT verification of candidate pairs: keep (a, b)
-    when |A∩B| ≥ τ·min(|A|, |B|) — i.e. the smaller document's shingle
-    set is ≥τ contained in the other.
+    when |A∩B| ≥ 0.9·min(|A|, |B|) — i.e. the smaller document's
+    shingle set is ≥90% contained in the other.
 
     This is the sub/superset near-dup rule Jaccard structurally
     misses: a paragraph quoted whole inside a 100× longer page has
@@ -314,7 +312,7 @@ def containment_verify(
             "min_size", F.least(F.col("size_a"), F.col("size_b"))
         )
         .filter(F.col("min_size") > 0)
-        .filter(min_cont_den * F.col("inter_size") >= min_cont_num * F.col("min_size"))
+        .filter(10 * F.col("inter_size") >= 9 * F.col("min_size"))
         .select("doc_a", "doc_b", "inter_size", "min_size")
     )
 
@@ -325,7 +323,6 @@ def minhash_signatures(
     text_col: str,
     n: int = 3,
     num_hashes: int = 64,
-    seed: int = 42,
 ) -> DataFrame:
     """MinHash signature per document: for each of ``num_hashes``
     universal-hash permutations h_i(x) = (a_i*x + b_i) mod P over the
@@ -336,7 +333,7 @@ def minhash_signatures(
     (not xxhash64) so the ENTIRE signature pipeline has a DuckDB twin:
     the driver oracle re-runs the same algorithm in SQL.
     """
-    coeffs = minhash_coeffs(num_hashes, seed)
+    coeffs = minhash_coeffs(num_hashes, 42)
 
     shingled = df.select(
         F.col(id_col).alias("doc"),
@@ -461,7 +458,6 @@ def simhash_near_dups(
     max_hamming: int = 3,
     doc_col: str = "doc",
     fp_col: str = "simhash",
-    max_bucket: int | None = 2000,
 ) -> DataFrame:
     """Near-dup pairs from SimHash fingerprints via 16-bit banding.
 
@@ -475,8 +471,8 @@ def simhash_near_dups(
 
     Like ``minhash_lsh_candidates``: one groupBy, not a banded
     self-join (which would compute the 64-sum fingerprint aggregation
-    twice), and ``max_bucket`` stop-buckets bound the quadratic pair
-    output under band-value skew.
+    twice), and buckets of more than 2000 docs are dropped as stop-
+    buckets, bounding the quadratic pair output under band-value skew.
     """
     bands = 4
     exploded = fps.select(
@@ -520,9 +516,8 @@ def simhash_near_dups(
             F.sum(F.size("docs")).alias("_m"),
         )
         .filter(F.col("_m") >= 2)
+        .filter(F.col("_m") <= 2000)
     )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.col("_m") <= max_bucket)
     groups = F.col("groups")
     same_arr = F.flatten(
         F.transform(

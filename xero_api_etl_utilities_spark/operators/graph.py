@@ -25,7 +25,7 @@ Scale design:
   per-round execution anyway, and lazy rounds would re-execute prior
   rounds' subtrees.  FIXED-ROUND operators (pagerank_int,
   label_propagation) keep the whole recurrence as ONE lazy plan
-  (r15, guide §5 — no per-round checkpoint job or driver round-trip);
+  (no per-round checkpoint job or driver round-trip);
   per-round truncation there is OPT-IN via ``checkpoint_dir`` (the
   fault-tolerance knob), with a periodic localCheckpoint guard for
   large ``iters`` so a deep recurrence cannot blow up Catalyst
@@ -50,6 +50,10 @@ from xero_api_etl_utilities_spark.operators.materialize import materialize
 # catalog round counts (5 / 4) stay strictly below the guard, so their
 # plans are untouched.
 _LAZY_ROUNDS_MAX = 8
+
+# Endpoint columns of the co-occurrence edge lists plans/ builds
+# (``u1 < u2``, one row per undirected edge).
+_U1, _U2 = "u1", "u2"
 
 
 def connected_components(
@@ -115,16 +119,12 @@ def connected_components(
     )
 
 
-def triangles(
-    edges: DataFrame,
-    a_col: str = "u1",
-    b_col: str = "u2",
-) -> DataFrame:
+def triangles(edges: DataFrame) -> DataFrame:
     """All triangles in an undirected simple graph, one row per
     triangle as the id-sorted triple ``(t1, t2, t3)``, t1 < t2 < t3.
 
-    ``edges`` must hold each undirected edge ONCE with ``a_col <
-    b_col`` (the co-occurrence builders in plans/ emit exactly that).
+    ``edges`` must hold each undirected edge ONCE with ``u1 < u2``
+    (the co-occurrence builders in plans/ emit exactly that).
 
     Scale design — degree-ordered orientation, the standard
     distributed-triangle trick: a naive wedge join fans out
@@ -147,7 +147,7 @@ def triangles(
     four times.
     """
     edges = materialize(edges)
-    a, b = F.col(a_col), F.col(b_col)
+    a, b = F.col(_U1), F.col(_U2)
     # degree per vertex (each edge touches two vertices)
     verts = edges.select(a.alias("v")).unionAll(edges.select(b.alias("v")))
     deg = verts.groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
@@ -182,7 +182,7 @@ def triangles(
     # wedge join guarantees x < y, so (x, y) IS already the canonical
     # (lo, hi) pair: probing on the plain columns instead of computed
     # least/greatest keys keeps the equi-join keys attribute-only
-    # (r16, guide §2.4 — measured ~0.3 s at sf0.1; identical pair set).
+    # (measured ~0.3 s at sf0.1; identical pair set).
     closing = edges.select(a.alias("cx"), b.alias("cy"))
     tri = wedges.join(
         closing,
@@ -198,11 +198,8 @@ def triangles(
 
 def pagerank_int(
     edges: DataFrame,
-    a_col: str = "u1",
-    b_col: str = "u2",
     iters: int = 5,
     scale: int = 10**12,
-    damping_pct: int = 85,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """PageRank over an UNDIRECTED graph in pure integer arithmetic —
@@ -216,7 +213,7 @@ def pagerank_int(
 
         contrib(e) = rank[src] div deg[src]
         rank'[v]   = (15 * (scale div n)) div 100
-                     + (damping_pct * sum_in(v)) div 100
+                     + (85 * sum_in(v)) div 100
 
     Scale shape: per round ONE equi-join (edges × ranks on src) and
     ONE groupBy-sum — the same bounded pattern as
@@ -233,7 +230,7 @@ def pagerank_int(
     directions, so every vertex has degree >= 1 — no dangling-mass
     term needed.
     """
-    a, b = F.col(a_col), F.col(b_col)
+    a, b = F.col(_U1), F.col(_U2)
     # edges feeds both union branches: materialize so the upstream
     # builder runs once (aggregate-diamond policy, PLANS.md)
     edges = materialize(edges, checkpoint_dir)
@@ -259,20 +256,20 @@ def pagerank_int(
                 F.col("dst").alias("v"),
                 (
                     F.lit(base)
-                    + F.expr(f"{damping_pct} * in_sum div 100").cast("long")
+                    + F.expr("85 * in_sum div 100").cast("long")
                 ).alias("rank"),
             )
         )
         # FIXED round count and no driver-side convergence check, so
         # the whole recurrence stays ONE lazy plan — per-round
         # materialization spent a checkpoint job + driver round-trip
-        # per iteration for a 5-deep lineage (r15, guide §5: measured
-        # 4.6 → 2.5 s at sf0.1).  With a reliable checkpoint_dir the
-        # per-round truncation is kept: that knob exists exactly so a
-        # multi-hour 100 TB run survives executor loss mid-recurrence.
-        # With checkpoint_dir=None, deep fixed round counts still
-        # truncate every _LAZY_ROUNDS_MAX rounds (ADVICE r15: Catalyst
-        # analysis of the nested recurrence grows super-linearly).
+        # per iteration for a 5-deep lineage (measured 4.6 → 2.5 s at
+        # sf0.1).  With a reliable checkpoint_dir the per-round
+        # truncation is kept: that knob exists exactly so a multi-hour
+        # 100 TB run survives executor loss mid-recurrence.  With
+        # checkpoint_dir=None, deep fixed round counts still truncate
+        # every _LAZY_ROUNDS_MAX rounds (Catalyst analysis of the
+        # nested recurrence grows super-linearly).
         if checkpoint_dir is not None:
             ranks = materialize(ranks, checkpoint_dir)
         elif (it + 1) % _LAZY_ROUNDS_MAX == 0 and (it + 1) < iters:
@@ -282,8 +279,6 @@ def pagerank_int(
 
 def label_propagation(
     edges: DataFrame,
-    a_col: str = "u1",
-    b_col: str = "u2",
     iters: int = 4,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -307,7 +302,7 @@ def label_propagation(
     the same laziness contract: fixed rounds, one lazy plan, per-round
     truncation opt-in via ``checkpoint_dir``, periodic localCheckpoint
     guard for large ``iters``.  Returns ``(v, label)``."""
-    a, b = F.col(a_col), F.col(b_col)
+    a, b = F.col(_U1), F.col(_U2)
     edges = materialize(edges, checkpoint_dir)
     directed = edges.select(a.alias("src"), b.alias("dst")).unionAll(
         edges.select(b.alias("src"), a.alias("dst"))
@@ -341,8 +336,6 @@ def label_propagation(
 def bfs_depths(
     edges: DataFrame,
     seed: int,
-    a_col: str = "u1",
-    b_col: str = "u2",
     max_depth: int = 4,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -355,7 +348,7 @@ def bfs_depths(
     for vertices within ``max_depth`` hops; unreached vertices are
     absent (callers count them against the vertex set).  Purely
     set-algebraic — no tie-breaks, so any engine replays it exactly."""
-    a, b = F.col(a_col), F.col(b_col)
+    a, b = F.col(_U1), F.col(_U2)
     edges = materialize(edges, checkpoint_dir)
     directed = edges.select(a.alias("src"), b.alias("dst")).unionAll(
         edges.select(b.alias("src"), a.alias("dst"))
@@ -376,8 +369,8 @@ def bfs_depths(
         # accumulator, so it must materialize (lazy would double-execute
         # every prior round's subtree — exponential in depth); visited
         # itself is just a union of already-materialized frontiers, so
-        # its own per-round checkpoint bought nothing (r15, guide §5:
-        # one checkpoint job per round instead of two)
+        # its own per-round checkpoint bought nothing (one checkpoint
+        # job per round instead of two)
         nxt = materialize(nxt.select("v", F.lit(k).alias("depth")), checkpoint_dir)
         visited = visited.unionAll(nxt)
         frontier = nxt.select("v")
@@ -387,9 +380,6 @@ def bfs_depths(
 def kcore(
     edges: DataFrame,
     k: int,
-    a_col: str = "u1",
-    b_col: str = "u2",
-    max_iters: int = 25,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The k-core: the maximal subgraph where every vertex keeps
@@ -398,18 +388,18 @@ def kcore(
     to fixpoint; each round is one groupBy-count plus two semi-joins
     (both endpoints must survive), lineage truncated per round like
     the other iterative operators. Converges in peel-depth rounds
-    (4 on the co-occurrence fixture); ``max_iters`` bounds the
+    (4 on the co-occurrence fixture); a 25-round cap bounds the
     pathological chain. Returns ``(v, core_degree)`` for the
     surviving vertices. Deterministic: peeling is order-independent
     (the fixpoint is unique), so a fixed-unroll SQL oracle matches
     whenever its round count >= the true peel depth (asserted by the
     convergence loop here)."""
-    a, b = F.col(a_col), F.col(b_col)
+    a, b = F.col(_U1), F.col(_U2)
     cur = materialize(
         edges.select(a.alias("x"), b.alias("y")), checkpoint_dir
     )
     n_prev = -1
-    for _ in range(max_iters):
+    for _ in range(25):
         deg = (
             cur.select(F.col("x").alias("v"))
             .unionAll(cur.select(F.col("y").alias("v")))
@@ -432,7 +422,7 @@ def kcore(
             checkpoint_dir,
         )
     raise RuntimeError(
-        f"kcore did not converge in {max_iters} rounds — raise max_iters"
+        "kcore did not converge in 25 rounds — the peel depth exceeds the cap"
     )
 
 

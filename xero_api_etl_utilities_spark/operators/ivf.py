@@ -32,7 +32,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.operators.litfold import lit_doubles
-from xero_api_etl_utilities_spark.operators.similarity import _dot, _norm, cosine
+from xero_api_etl_utilities_spark.operators.similarity import (
+    _ID_COL,
+    _VEC_COL,
+    _dot,
+    _norm,
+    cosine,
+)
 
 
 def _kmeans_unit(
@@ -61,18 +67,16 @@ def _kmeans_unit(
 
 def train_centroids(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 16,
     iters: int = 5,
     sample: int = 2000,
     seed: int = 11,
 ) -> list[list[float]]:
-    """Driver-side k-means over the first ``sample`` rows by ``id_col``
+    """Driver-side k-means over the first ``sample`` rows by ``vec_id``
     (deterministic regardless of scan/partition order — a bounded
     TakeOrdered, the FAISS-style IVF training recipe). Returns k unit
     centroids."""
-    rows = df.select(id_col, vec_col).orderBy(id_col).limit(sample).collect()
+    rows = df.select(_ID_COL, _VEC_COL).orderBy(_ID_COL).limit(sample).collect()
     vecs = [[float(v) for v in r[1]] for r in rows]
     return _kmeans_unit(vecs, k, iters, seed)
 
@@ -80,35 +84,29 @@ def train_centroids(
 def train_centroids_prefix_widths(
     df: DataFrame,
     widths: tuple[int, ...],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 16,
     iters: int = 5,
     sample: int = 2000,
-    seed: int = 11,
 ) -> dict[int, list[list[float]]]:
     """Per-prefix-width centroids from ONE ordered-sample collect.
 
     Bit-identical to calling :func:`train_centroids` on
     ``df.select(slice(vec, 1, d))`` per width — the sample rows are
-    chosen by ``id_col`` alone, and slicing the collected doubles
+    chosen by ``vec_id`` alone, and slicing the collected doubles
     driver-side is the same bytes as slicing in the plan — but pays a
-    single TakeOrdered job instead of ``len(widths)`` (r15, guide
-    §1.2: the matryoshka census re-collected the SAME sample rows once
-    per width).  The DuckDB oracle twin
-    (wave12._trunc_cents_from_parquet) already uses exactly this
-    collect-once-slice-per-width recipe."""
-    rows = df.select(id_col, vec_col).orderBy(id_col).limit(sample).collect()
+    single TakeOrdered job instead of ``len(widths)`` (the matryoshka
+    census re-collected the SAME sample rows once per width).  The
+    DuckDB oracle twin (wave12._trunc_cents_from_parquet) already uses
+    exactly this collect-once-slice-per-width recipe."""
+    rows = df.select(_ID_COL, _VEC_COL).orderBy(_ID_COL).limit(sample).collect()
     base = [[float(v) for v in r[1]] for r in rows]
     return {
-        d: _kmeans_unit([v[:d] for v in base], k, iters, seed) for d in widths
+        d: _kmeans_unit([v[:d] for v in base], k, iters, 11) for d in widths
     }
 
 
 def train_centroids_from_parquet(
     path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 16,
     iters: int = 5,
     sample: int = 2000,
@@ -119,9 +117,9 @@ def train_centroids_from_parquet(
     generator to inline the exact centroid literals the plan uses."""
     import pyarrow.parquet as pq
 
-    tb = pq.read_table(path, columns=[id_col, vec_col])
-    ids = tb.column(id_col).to_pylist()
-    raw = tb.column(vec_col).to_pylist()
+    tb = pq.read_table(path, columns=[_ID_COL, _VEC_COL])
+    ids = tb.column(_ID_COL).to_pylist()
+    raw = tb.column(_VEC_COL).to_pylist()
     order = sorted(range(len(ids)), key=lambda i: ids[i])[:sample]
     vecs = [[float(v) for v in raw[i]] for i in order]
     return _kmeans_unit(vecs, k, iters, seed)
@@ -130,7 +128,6 @@ def train_centroids_from_parquet(
 def refine_centroids_ml(
     df: DataFrame,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
     iters: int = 10,
 ) -> list[list[float]]:
     """Full-corpus refinement: distributed pyspark.ml KMeans seeded
@@ -142,7 +139,7 @@ def refine_centroids_ml(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    feats = df.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("f"))
+    feats = df.select(array_to_vector(F.col(_VEC_COL).cast("array<double>")).alias("f"))
     km = KMeans(k=len(centroids), maxIter=iters, seed=11, featuresCol="f")
     model = km.fit(feats)
     out = []
@@ -157,7 +154,7 @@ def _centroid_scores(vec_col, centroids: list[list[float]]):
     """Array of (dot, cell_id) structs against each centroid.
 
     Centroids ride as ONE folded array-of-arrays literal consumed by a
-    ``transform`` (r15): the original per-centroid ``F.array(64 ×
+    ``transform``: the original per-centroid ``F.array(64 ×
     F.lit)`` unrolling built a ~1100-node expression tree through
     ~1100 py4j calls — ~2 s of DRIVER time per call, and every IVF
     query builds this expression several times (both join sides, every
@@ -201,8 +198,6 @@ def topk_ivf(
     queries: DataFrame,
     corpus: DataFrame,
     centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 2,
 ) -> DataFrame:
@@ -212,16 +207,16 @@ def topk_ivf(
     # topk_bruteforce note): cosine() per candidate re-folds both
     # norms per PAIR; hoisting them into each side's projection is
     # bit-identical (same expressions, same guard, same association)
-    cq = assign_cells(queries, centroids, vec_col, nprobe).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
+    cq = assign_cells(queries, centroids, _VEC_COL, nprobe).select(
+        F.col(_ID_COL).alias("query_id"),
+        F.col(_VEC_COL).alias("qv"),
+        _norm(F.col(_VEC_COL)).alias("_qn"),
         "cell",
     )
-    cc = assign_cells(corpus, centroids, vec_col, 1).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("_cn"),
+    cc = assign_cells(corpus, centroids, _VEC_COL, 1).select(
+        F.col(_ID_COL).alias("neighbor_id"),
+        F.col(_VEC_COL).alias("cv"),
+        _norm(F.col(_VEC_COL)).alias("_cn"),
         "cell",
     )
     den = F.col("_qn") * F.col("_cn")
@@ -247,8 +242,6 @@ def range_search_ivf(
     queries: DataFrame,
     corpus: DataFrame,
     centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     tau: float = 0.30,
     nprobe: int = 2,
 ) -> DataFrame:
@@ -262,16 +255,16 @@ def range_search_ivf(
     keeps a margin above cross-engine float noise (measured
     >= 2.2e-5 at 0.30 on every test sf)."""
     # per-row norm precompute (see topk_ivf) — bit-identical scores
-    cq = assign_cells(queries, centroids, vec_col, nprobe).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
+    cq = assign_cells(queries, centroids, _VEC_COL, nprobe).select(
+        F.col(_ID_COL).alias("query_id"),
+        F.col(_VEC_COL).alias("qv"),
+        _norm(F.col(_VEC_COL)).alias("_qn"),
         "cell",
     )
-    cc = assign_cells(corpus, centroids, vec_col, 1).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("_cn"),
+    cc = assign_cells(corpus, centroids, _VEC_COL, 1).select(
+        F.col(_ID_COL).alias("neighbor_id"),
+        F.col(_VEC_COL).alias("cv"),
+        _norm(F.col(_VEC_COL)).alias("_cn"),
         "cell",
     )
     den = F.col("_qn") * F.col("_cn")
@@ -374,8 +367,6 @@ def encode_ivfpq_residual(
     corpus: DataFrame,
     centroids: list[list[float]],
     codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Residual-encoded IVF-PQ index rows (id, cell, code_0..m−1):
     assign the nearest cell, subtract its centroid element-wise, and
@@ -389,24 +380,22 @@ def encode_ivfpq_residual(
     shuffle beyond the id join of cells to codes."""
     from xero_api_etl_utilities_spark.operators.quantize import pq_codes
 
-    assigned = assign_cells(corpus, centroids, vec_col, 1)
+    assigned = assign_cells(corpus, centroids, _VEC_COL, 1)
     # one folded nested-array literal (see _centroid_scores) — same
     # doubles, constant-size plan, one-call construction
     cent_arr = lit_doubles([[float(x) for x in c] for c in centroids])
     rv = F.zip_with(
-        F.col(vec_col).cast("array<double>"),
+        F.col(_VEC_COL).cast("array<double>"),
         F.element_at(cent_arr, F.col("cell") + 1),
         lambda a, b: a - b,
     )
     with_res = assigned.withColumn("_rv", rv)
-    codes = pq_codes(with_res, id_col, "_rv", codebooks)
-    return with_res.select(id_col, "cell").join(codes, id_col)
+    codes = pq_codes(with_res, _ID_COL, "_rv", codebooks)
+    return with_res.select(_ID_COL, "cell").join(codes, _ID_COL)
 
 
 def _query_tables_distributed(
     queries: DataFrame,
-    id_col: str,
-    vec_col: str,
     centroids: list[list[float]],
     codebooks: list[list[list[float]]],
     nprobe: int,
@@ -425,7 +414,7 @@ def _query_tables_distributed(
 
     m = len(codebooks)
     ds = len(codebooks[0][0])
-    id_type = queries.schema[id_col].dataType
+    id_type = queries.schema[_ID_COL].dataType
     schema = T.StructType(
         [
             T.StructField("query_id", id_type, False),
@@ -442,7 +431,7 @@ def _query_tables_distributed(
 
         for pdf in batches:
             rows = []
-            for qid, vec in zip(pdf[id_col], pdf[vec_col]):
+            for qid, vec in zip(pdf[_ID_COL], pdf[_VEC_COL]):
                 qv = [float(x) for x in vec]
                 if residual:
                     for cell, tables in _probe_tables_residual(
@@ -459,7 +448,7 @@ def _query_tables_distributed(
                 rows, columns=["query_id", "cell", *[f"_t{s}" for s in range(m)]]
             )
 
-    return queries.select(id_col, vec_col).mapInPandas(_gen, schema)
+    return queries.select(_ID_COL, _VEC_COL).mapInPandas(_gen, schema)
 
 
 def topk_ivf_pq(
@@ -467,11 +456,8 @@ def topk_ivf_pq(
     corpus: DataFrame,
     centroids: list[list[float]],
     codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 4,
-    corpus_codes: DataFrame | None = None,
     corpus_index: DataFrame | None = None,
     force_distributed: bool = False,
     rerank: int | None = None,
@@ -511,26 +497,22 @@ def topk_ivf_pq(
         # production deployment shape.  With ``residual`` the caller
         # must hand a RESIDUAL-encoded index (encode_ivfpq_residual);
         # codes and tables must agree on the encoding space.
-        index = corpus_index.withColumnRenamed(id_col, "neighbor_id")
+        index = corpus_index.withColumnRenamed(_ID_COL, "neighbor_id")
     elif residual:
         index = encode_ivfpq_residual(
-            corpus, centroids, codebooks, id_col, vec_col
-        ).withColumnRenamed(id_col, "neighbor_id")
+            corpus, centroids, codebooks
+        ).withColumnRenamed(_ID_COL, "neighbor_id")
     else:
-        cells = assign_cells(corpus, centroids, vec_col, 1).select(id_col, "cell")
-        codes = (
-            corpus_codes
-            if corpus_codes is not None
-            else pq_codes(corpus, id_col, vec_col, codebooks)
-        )
-        index = cells.join(codes, id_col).withColumnRenamed(id_col, "neighbor_id")
+        cells = assign_cells(corpus, centroids, _VEC_COL, 1).select(_ID_COL, "cell")
+        codes = pq_codes(corpus, _ID_COL, _VEC_COL, codebooks)
+        index = cells.join(codes, _ID_COL).withColumnRenamed(_ID_COL, "neighbor_id")
 
     # size probe: counts a 10k-limited id projection (no vectors move).
     # force_distributed skips the probe and takes the executor-side
     # table-build path regardless of size — used to keep the >10k path
     # continuously oracle-verified on small fixtures.
     n_queries = (
-        0 if force_distributed else queries.select(id_col).limit(10_001).count()
+        0 if force_distributed else queries.select(_ID_COL).limit(10_001).count()
     )
     spark = queries.sparkSession
     if force_distributed or n_queries > 10_000:
@@ -540,11 +522,11 @@ def topk_ivf_pq(
         # than the index side; the cell equi-join shuffles it instead,
         # and AQE still broadcasts when it turns out small).
         cq = _query_tables_distributed(
-            queries, id_col, vec_col, centroids, codebooks, nprobe, residual
+            queries, centroids, codebooks, nprobe, residual
         )
         broadcast_tables = False
     else:
-        qrows = queries.select(id_col, vec_col).orderBy(id_col).collect()
+        qrows = queries.select(_ID_COL, _VEC_COL).orderBy(_ID_COL).collect()
         table_rows = []
         for r in qrows:
             qid, qv = r[0], [float(x) for x in r[1]]
@@ -595,10 +577,10 @@ def topk_ivf_pq(
     # those by exact cosine. Search still never scans corpus floats.
     cand = adc_ranked.select("query_id", "neighbor_id")
     qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
+        F.col(_ID_COL).alias("query_id"), F.col(_VEC_COL).alias("_qv")
     )
     nv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nv")
+        F.col(_ID_COL).alias("neighbor_id"), F.col(_VEC_COL).alias("_nv")
     )
     w2 = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("neighbor_id"))
     return (

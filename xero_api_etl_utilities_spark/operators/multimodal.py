@@ -301,16 +301,14 @@ AUDIO_VAD_SCHEMA = T.StructType(
 )
 
 
-def decode_audio_vad(
-    media: DataFrame, win_ms: int = 20, threshold: int = 1000
-) -> DataFrame:
+def decode_audio_vad(media: DataFrame) -> DataFrame:
     """Energy-based voice-activity detection through the FULL RIFF
-    decoder: the int16 stream is framed into ``win_ms`` windows
-    (win_frames = rate * win_ms // 1000 — rate-dependent, so a window
+    decoder: the int16 stream is framed into 20 ms windows
+    (win_frames = rate * 20 // 1000 — rate-dependent, so a window
     always means the same wall-clock span); a window is ACTIVE when
-    its mean absolute amplitude across all channels reaches
-    ``threshold`` (integer cross-multiplied: sum|v| >= threshold *
-    n_samples — no division).  Output per media: window count, active
+    its mean absolute amplitude across all channels reaches 1000
+    (integer cross-multiplied: sum|v| >= 1000 * n_samples — no
+    division).  Output per media: window count, active
     count, active share in bp — the speech-density number an audio
     curation pipeline uses to drop silence-heavy clips before they
     reach an ASR labeler.
@@ -322,7 +320,7 @@ def decode_audio_vad(
     fairly.  Window energies are numpy-vectorized (int64-exact: |v|
     <= 2^15 summed over channels × window samples stays far below
     2^63) — per-sample Python inside the Arrow batch is the
-    row-at-a-time anti-pattern one level down (ADVICE r7)."""
+    row-at-a-time anti-pattern one level down."""
     from xero_api_etl_utilities_spark.functions.audiocodec import decode_wav
 
     def _vad(batches) -> Iterator:
@@ -333,7 +331,7 @@ def decode_audio_vad(
             rows = []
             for d, c in zip(pdf["media_id"], pdf["content"]):
                 rate, n_ch, n_fr, channels = decode_wav(bytes(c))
-                win = max(rate * win_ms // 1000, 1)
+                win = max(rate * 20 // 1000, 1)
                 if n_fr:
                     # per-frame |amplitude| summed across channels,
                     # then one reduceat per window boundary
@@ -345,9 +343,7 @@ def decode_audio_vad(
                     wsum = np.add.reduceat(tot, starts)
                     sizes = np.minimum(starts + win, n_fr) - starts
                     n_windows = int(starts.size)
-                    n_active = int(
-                        (wsum >= threshold * sizes * n_ch).sum()
-                    )
+                    n_active = int((wsum >= 1000 * sizes * n_ch).sum())
                 else:
                     n_windows = n_active = 0
                 bp = n_active * 10000 // n_windows if n_windows else 0
@@ -524,18 +520,16 @@ def external_frame_decode(
     )
 
 
-def fake_frame_decode(
-    content: bytes, ts_ms: int, width: int, height: int, thumb=(8, 6)
-) -> bytes:
+def fake_frame_decode(content: bytes, ts_ms: int, width: int, height: int) -> bytes:
     """Deterministic closed-form stand-in for a keyframe-extract +
-    thumbnail step: a REAL P6 PPM thumbnail whose pixel byte ``i`` is
+    thumbnail step: a REAL 8×6 P6 PPM thumbnail whose pixel byte ``i`` is
     ``(ts_ms * 7 + i) % 256`` — downstream image operators decode it
     with the real stdlib codec, and a SQL oracle predicts every
     derived integer without decoding anything (the synth_ppm_media
     rule applied to the time axis)."""
     from xero_api_etl_utilities_spark.functions.imagecodec import encode_ppm
 
-    tw, th = thumb
+    tw, th = 8, 6
     n = tw * th * 3
     return encode_ppm(tw, th, bytes((ts_ms * 7 + i) % 256 for i in range(n)))
 
@@ -569,8 +563,8 @@ def sample_video_frames(
             rows = []
             for d, c in zip(pdf["media_id"], pdf["content"]):
                 # one blob copy per VIDEO, not per planned frame
-                # (ADVICE r9: bytes(c) in the frame loop was
-                # O(frames x file_size) memory churn)
+                # (bytes(c) in the frame loop was O(frames x file_size)
+                # memory churn)
                 cb = bytes(c)
                 meta = video_meta(cb)
                 w = int(meta["width"] or 0)

@@ -2,7 +2,7 @@
 decimal formulation.
 
 The reference has no percentile surface; this is an analytics-user
-staple (round-1 deferred item). The hazard is cross-engine float
+staple. The hazard is cross-engine float
 interpolation: Spark ``percentile`` and DuckDB ``quantile_cont`` both
 interpolate linearly, but through different double arithmetic, so the
 hashed result can drift in the last ulp. This operator removes the
@@ -36,7 +36,6 @@ def exact_percentiles(
     value_col: str,
     group_cols: list[str],
     ps: list[tuple[str, int, int]],
-    scale: int = 2,
 ) -> DataFrame:
     """Per-group exact percentiles.
 
@@ -44,7 +43,7 @@ def exact_percentiles(
     e.g. ``[("p25", 1, 4), ("median", 1, 2)]``. Output: group cols,
     ``n_values``, and one DOUBLE column per alias.
     """
-    mult = 10**scale
+    mult = 100  # values rank as exact integer cents
     gw = Window.partitionBy(*group_cols)
     # NULLs must not occupy rank positions: Spark sorts NULLS FIRST,
     # DuckDB's row_number NULLS LAST, so a NULL shifts every quantile by
@@ -54,7 +53,7 @@ def exact_percentiles(
     ranked = (
         df.select(
             *group_cols,
-            (F.col(value_col).cast(f"decimal(12,{scale})") * mult)
+            (F.col(value_col).cast("decimal(12,2)") * mult)
             .cast("long")
             .alias("_vc"),
         )
@@ -88,7 +87,6 @@ def approx_percentiles(
     value_col: str,
     group_cols: list[str],
     ps: list[tuple[str, float]],
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Scale path: ``percentile_approx`` (map-side-combinable sketch,
     no per-group sort) — for 100 TB corpora where a bounded error
@@ -96,7 +94,7 @@ def approx_percentiles(
     engine-specific by nature); pinned by tests against the exact
     form's tolerance."""
     aggs = [
-        F.percentile_approx(F.col(value_col), p, accuracy).alias(alias)
+        F.percentile_approx(F.col(value_col), p, 10_000).alias(alias)
         for alias, p in ps
     ]
     return df.groupBy(*group_cols).agg(*aggs)

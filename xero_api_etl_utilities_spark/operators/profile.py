@@ -32,18 +32,17 @@ def profile_columns(
     df: DataFrame,
     cols: list[str],
     distinct_mode: str = "exact",
-    rsd: float = 0.02,
-    tol_pct: int = 5,
 ) -> DataFrame:
     """One row per profiled column: (column, n_nulls, n_distinct,
     min_value, max_value) with min/max rendered as strings so mixed
     column types share one output schema. ``distinct_mode``:
 
     - ``"exact"``  — count_distinct (small-data truth).
-    - ``"approx"`` — approx_count_distinct(rsd); the scale plan.
+    - ``"approx"`` — approx_count_distinct at 2% relative
+      standard deviation; the scale plan.
     - ``"checked"`` — BOTH: n_distinct stays exact and an extra
       ``approx_ok`` column asserts the sketch landed within
-      ``tol_pct`` percent of it (integer×100 math, no float compare).
+      5 percent of it (integer×100 math, no float compare).
     """
     if distinct_mode not in ("exact", "approx", "checked"):
         raise ValueError(f"unknown distinct_mode {distinct_mode!r}")
@@ -58,7 +57,7 @@ def profile_columns(
             aggs.append(F.count_distinct(F.col(c)).alias(f"{c}__distinct"))
         if distinct_mode in ("approx", "checked"):
             aggs.append(
-                F.approx_count_distinct(F.col(c), rsd).alias(f"{c}__approx")
+                F.approx_count_distinct(F.col(c), 0.02).alias(f"{c}__approx")
             )
     wide = df.agg(*aggs)
     if distinct_mode == "checked":
@@ -90,7 +89,7 @@ def profile_columns(
             fields.append(
                 (
                     F.abs(F.col(f"{c}__approx") - F.col(f"{c}__distinct")) * 100
-                    <= tol_pct * F.col(f"{c}__distinct")
+                    <= 5 * F.col(f"{c}__distinct")
                 ).alias("approx_ok")
             )
         per_col.append(F.struct(*fields))

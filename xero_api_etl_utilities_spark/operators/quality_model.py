@@ -29,8 +29,7 @@ model stage, built for exact cross-engine reproducibility:
   (broadcast weight literal + one in-row F.aggregate per document).
 
 Reference provenance: the reference ETL (src/queries.ts) has no model
-tier; this extends the training-data-pipeline surface the brief
-requires (VERDICT r12 item 6).
+tier; this extends the engine's training-data-pipeline surface.
 """
 
 from __future__ import annotations
@@ -73,12 +72,12 @@ def rule_label(text: str) -> int:
     )
 
 
-def hashed_features(text: str, dim: int = DIM) -> dict[int, int]:
+def hashed_features(text: str) -> dict[int, int]:
     """Python twin of X60's signed hashing-trick vector: sparse
-    {index: signed count} over a fixed ``dim``-slot space."""
+    {index: signed count} over a fixed ``DIM``-slot space."""
     feats: dict[int, int] = {}
     for t in _TOKEN_RE.findall(text.lower()):
-        idx = py_h32("f:" + t) % dim
+        idx = py_h32("f:" + t) % DIM
         sgn = 1 if py_h32("s:" + t) % 2 == 0 else -1
         feats[idx] = feats.get(idx, 0) + sgn
         if feats[idx] == 0:
@@ -86,18 +85,14 @@ def hashed_features(text: str, dim: int = DIM) -> dict[int, int]:
     return feats
 
 
-def train_perceptron(
-    examples: list[tuple[dict[int, int], int]],
-    dim: int = DIM,
-    epochs: int = EPOCHS,
-) -> list[int]:
+def train_perceptron(examples: list[tuple[dict[int, int], int]]) -> list[int]:
     """Deterministic integer perceptron: examples in the given order,
-    ``epochs`` passes, unit learning rate.  predict = 1 iff the
+    ``EPOCHS`` passes, unit learning rate.  predict = 1 iff the
     margin is strictly positive; on a miss the feature vector is
     added/subtracted whole (all-integer — the weights ARE the model,
     no float ever appears)."""
-    w = [0] * dim
-    for _ in range(epochs):
+    w = [0] * DIM
+    for _ in range(EPOCHS):
         for feats, label in examples:
             margin = sum(w[i] * v for i, v in feats.items())
             pred = 1 if margin > 0 else 0
@@ -108,15 +103,13 @@ def train_perceptron(
     return w
 
 
-_WEIGHTS_CACHE: dict[tuple[str, int, int, int, int], list[int]] = {}
+_WEIGHTS_CACHE: dict[tuple[str, int, int], list[int]] = {}
 
 
 def weights_from_parquet_slice(
     sf_dir: str,
     lo: int,
     hi: int,
-    dim: int = DIM,
-    epochs: int = EPOCHS,
 ) -> list[int]:
     """Train the classifier from the ``lo <= doc_id < hi`` slice of
     ``<sf_dir>/documents.parquet`` — the bounded driver-side seed,
@@ -125,10 +118,10 @@ def weights_from_parquet_slice(
     inline the identical weights.  The filter is the literal id
     predicate (not "first n rows after sort") so held-out framings —
     every doc_id outside [lo, hi) is unseen — hold on corpora with
-    gapped or non-zero-based ids too (ADVICE r13).  The lo bound
+    gapped or non-zero-based ids too.  The lo bound
     exists for the X175 lifecycle census: a later curation epoch
     re-trains on the NEXT id slice and diffs the verdicts."""
-    key = (os.path.abspath(sf_dir), dim, lo, hi, epochs)
+    key = (os.path.abspath(sf_dir), lo, hi)
     if key not in _WEIGHTS_CACHE:
         import pyarrow.parquet as pq
 
@@ -144,19 +137,14 @@ def weights_from_parquet_slice(
             if lo <= did < hi
         )
         examples = [
-            (hashed_features(text or "", dim), rule_label(text or ""))
+            (hashed_features(text or ""), rule_label(text or ""))
             for _, text in rows
         ]
-        _WEIGHTS_CACHE[key] = train_perceptron(examples, dim, epochs)
+        _WEIGHTS_CACHE[key] = train_perceptron(examples)
     return _WEIGHTS_CACHE[key]
 
 
-def weights_from_parquet(
-    sf_dir: str,
-    dim: int = DIM,
-    n_train: int = N_TRAIN,
-    epochs: int = EPOCHS,
-) -> list[int]:
-    """The X170/X172 trainer: the ``doc_id < n_train`` seed slice —
+def weights_from_parquet(sf_dir: str) -> list[int]:
+    """The X170/X172 trainer: the ``doc_id < N_TRAIN`` seed slice —
     :func:`weights_from_parquet_slice` with lo = 0."""
-    return weights_from_parquet_slice(sf_dir, 0, n_train, dim, epochs)
+    return weights_from_parquet_slice(sf_dir, 0, N_TRAIN)

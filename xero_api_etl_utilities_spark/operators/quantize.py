@@ -88,19 +88,15 @@ def _kmeans_l2(vecs, k: int, iters: int, seed: int):
 
 def train_pq_codebooks_from_parquet(
     path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     m: int = 4,
-    k: int = 16,
-    iters: int = 4,
     sample: int = 1000,
-    seed: int = 7,
     residual_centroids: list[list[float]] | None = None,
 ) -> list[list[list[float]]]:
-    """Train ``m`` per-subspace codebooks of ``k`` centroids each from
-    the first ``sample`` rows ordered by id (same determinism contract
-    as ivf.train_centroids_from_parquet): codebooks are tiny
-    (m·k·(dim/m) floats), training is driver-side on a bounded sample
+    """Train ``m`` per-subspace codebooks of 16 centroids each (4
+    k-means rounds, seed 7 + subspace) from the first ``sample`` rows
+    ordered by ``vec_id`` (same determinism contract as
+    ivf.train_centroids_from_parquet): codebooks are tiny
+    (m·16·(dim/m) floats), training is driver-side on a bounded sample
     — the standard PQ recipe; encoding is the distributed part.
 
     ``residual_centroids`` switches to RESIDUAL training (the FAISS
@@ -113,9 +109,9 @@ def train_pq_codebooks_from_parquet(
     left-to-right float64 dot the probe-table builders use."""
     import pyarrow.parquet as pq
 
-    tb = pq.read_table(path, columns=[id_col, vec_col])
-    ids = tb.column(id_col).to_pylist()
-    raw = tb.column(vec_col).to_pylist()
+    tb = pq.read_table(path, columns=["vec_id", "embedding"])
+    ids = tb.column("vec_id").to_pylist()
+    raw = tb.column("embedding").to_pylist()
     order = sorted(range(len(ids)), key=lambda i: ids[i])[:sample]
     vecs = [[float(v) for v in raw[i]] for i in order]
     if residual_centroids is not None:
@@ -138,7 +134,7 @@ def train_pq_codebooks_from_parquet(
     books = []
     for s in range(m):
         sub = [v[s * ds : (s + 1) * ds] for v in vecs]
-        books.append(_kmeans_l2(sub, k, iters, seed + s))
+        books.append(_kmeans_l2(sub, 16, 4, 7 + s))
     return books
 
 

@@ -38,14 +38,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 TOKEN_PATTERN = "[a-z0-9]+"
+# The standard BM25 term-saturation and length-normalisation constants.
+_K1, _B = 1.2, 0.75
 
 
 def bm25_constants(
     docs: DataFrame,
     query_terms: list[str],
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> dict:
     """The bounded corpus-stats pass: N, avgdl, per-term df → idf.
 
@@ -55,7 +54,7 @@ def bm25_constants(
     idf uses the standard non-negative Robertson form
     ln(1 + (N - df + 0.5)/(df + 0.5)).
     """
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TOKEN_PATTERN), 0)
+    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_PATTERN), 0)
     row = docs.select(toks.alias("_toks")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.size("_toks")).alias("sum_dl"),
@@ -73,34 +72,28 @@ def bm25_constants(
         "n": n,
         "avgdl": sum_dl / n,
         "idf": idf,
-        "c_tf": k1 + 1.0,
-        "c_fixed": k1 * (1.0 - b),
-        "c_len": k1 * b,
+        "c_tf": _K1 + 1.0,
+        "c_fixed": _K1 * (1.0 - _B),
+        "c_len": _K1 * _B,
     }
 
 
 def bm25_topk(
     docs: DataFrame,
     query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    constants: dict | None = None,
 ) -> DataFrame:
     """Top-k documents for a fixed query term set by BM25.
 
-    Score(D) = Σ_t idf_t · (tf_t·(k1+1)) / (tf_t + k1·(1−b) + k1·b·dl/avgdl),
+    Score(D) = Σ_t idf_t · (tf_t·(k1+1)) / (tf_t + k1·(1−b) + k1·b·dl/avgdl)
+    with k1 = 1.2 and b = 0.75,
     summed left-to-right over the listed terms (fixed association —
     the oracle mirrors the exact tree). Documents matching no term are
     excluded before ranking.
     """
-    cs = constants if constants is not None else bm25_constants(
-        docs, query_terms, text_col, k1, b
-    )
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TOKEN_PATTERN), 0)
-    base = docs.select(F.col(id_col), toks.alias("_toks"))
+    cs = bm25_constants(docs, query_terms)
+    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_PATTERN), 0)
+    base = docs.select(F.col("doc_id"), toks.alias("_toks"))
     dl = F.size("_toks").cast("double")
     denom_len = F.lit(cs["c_fixed"]) + F.lit(cs["c_len"]) * (dl / F.lit(cs["avgdl"]))
     score = None
@@ -111,12 +104,12 @@ def bm25_topk(
         score = term if score is None else score + term
         tf_total = tf if tf_total is None else tf_total + tf
     scored = base.select(
-        id_col, score.alias("_score"), tf_total.alias("_tf_total")
+        "doc_id", score.alias("_score"), tf_total.alias("_tf_total")
     ).filter(F.col("_tf_total") > 0)
-    topk = scored.orderBy(F.desc("_score"), F.asc(id_col)).limit(k).repartition(1)
-    w = Window.orderBy(F.desc("_score"), F.asc(id_col))
+    topk = scored.orderBy(F.desc("_score"), F.asc("doc_id")).limit(k).repartition(1)
+    w = Window.orderBy(F.desc("_score"), F.asc("doc_id"))
     return topk.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.round("_score", 6).alias("score"),
         F.row_number().over(w).cast("int").alias("rank"),
     )

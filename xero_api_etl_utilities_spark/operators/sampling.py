@@ -11,9 +11,9 @@ shuffle, pushes into the row filter).
 - ``systematic_sample``: keep rows whose key hashes into the first
   ``num/den`` fraction of hash space.
 - ``assign_split``: label each row train/val/test by hash bucket —
-  a disjoint, exhaustive, stable partition of the corpus. ``salt``
-  decorrelates split assignment from any other hash use of the key
-  (and from other experiments).
+  a disjoint, exhaustive, stable partition of the corpus. Its fixed
+  salt ``"split"`` decorrelates split assignment from any other hash
+  use of the key.
 """
 
 from __future__ import annotations
@@ -44,7 +44,6 @@ def stratified_sample(
     key_col: str,
     stratum_col: str,
     rates: dict[str, tuple[int, int]],
-    salt: str = "stratified",
     default: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Per-stratum deterministic sampling: each stratum value gets its
@@ -73,7 +72,7 @@ def stratified_sample(
             h32(
                 F.concat_ws(
                     "|",
-                    F.lit(salt),
+                    F.lit("stratified"),
                     F.col(stratum_col).cast("string"),
                     F.col(key_col).cast("string"),
                 )
@@ -101,14 +100,13 @@ def assign_split(
     key_col: str,
     train_pct: int = 80,
     val_pct: int = 10,
-    salt: str = "split",
 ) -> DataFrame:
     """Attach a ``split`` column (train/val/test) by hash bucket out of
     100; test gets the remainder. Disjoint and exhaustive by
     construction."""
     if not (0 <= train_pct and 0 <= val_pct and train_pct + val_pct <= 100):
         raise ValueError("train_pct/val_pct must be >=0 and sum to <=100")
-    b = _bucket(key_col, salt, 100)
+    b = _bucket(key_col, "split", 100)
     return df.withColumn(
         "split",
         F.when(b < train_pct, "train")
@@ -117,9 +115,7 @@ def assign_split(
     )
 
 
-def per_group_topk(
-    df: DataFrame, key_col: str, group_col: str, k: int, salt: str = "grouptopk"
-) -> DataFrame:
+def per_group_topk(df: DataFrame, key_col: str, group_col: str, k: int) -> DataFrame:
     """Deterministic k-row sample PER GROUP: rank rows inside each
     group by their salted content hash (doc_id tiebreak) and keep the
     first ``k`` — the reproducible, engine-portable replacement for
@@ -140,7 +136,10 @@ def per_group_topk(
 
     h = h32(
         F.concat_ws(
-            "|", F.lit(salt), F.col(group_col).cast("string"), F.col(key_col).cast("string")
+            "|",
+            F.lit("grouptopk"),
+            F.col(group_col).cast("string"),
+            F.col(key_col).cast("string"),
         )
     )
     w = Window.partitionBy(group_col).orderBy(F.col("_h").asc(), F.col(key_col).asc())
@@ -157,7 +156,6 @@ def mixture_rebalance(
     key_col: str,
     group_col: str,
     targets_ppm: dict[str, int],
-    salt: str = "mixture",
 ) -> DataFrame:
     """Deterministic downsampling toward a TARGET MIXTURE: each listed
     group is kept at rate ``min(1, target_share · N_total / n_g)`` so
@@ -203,7 +201,10 @@ def mixture_rebalance(
     )
     b = h32(
         F.concat_ws(
-            "|", F.lit(salt), F.col(group_col).cast("string"), F.col(key_col).cast("string")
+            "|",
+            F.lit("mixture"),
+            F.col(group_col).cast("string"),
+            F.col(key_col).cast("string"),
         )
     ) % 1_000_000
     return (

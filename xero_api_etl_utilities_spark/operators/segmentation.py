@@ -28,9 +28,8 @@ def segment_by_marker(
     is_marker: Column,
     order_by: list[str],
     partition_by: list[str] | None = None,
-    section_col: str = "section",
 ) -> DataFrame:
-    """Tag each row with its running marker-section number.
+    """Tag each row with its running marker-section number (``section``).
 
     Marker rows themselves belong to the section they open (matching
     the reference's increment-then-route loop); filter them out
@@ -38,4 +37,4 @@ def segment_by_marker(
     """
     w = Window.partitionBy(*(partition_by or [])).orderBy(*order_by)
     running = F.sum(F.when(is_marker, 1).otherwise(0)).over(w)
-    return df.withColumn(section_col, running.cast("int"))
+    return df.withColumn("section", running.cast("int"))

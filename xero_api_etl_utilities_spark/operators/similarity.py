@@ -24,6 +24,9 @@ from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.operators.litfold import lit_doubles
 
+# The id and vector columns of the embedding tables every search runs on.
+_ID_COL, _VEC_COL = "vec_id", "embedding"
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -59,7 +62,6 @@ def topk_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     max_queries: int | None = 100,
     corpus_norm_col: str | None = None,
@@ -74,8 +76,8 @@ def topk_bruteforce(
     When the caller knows the norm analytically (e.g. the MIPS
     norm-augmentation reduction makes every corpus vector's norm the
     SAME constant M), recomputing it per vector in floating point
-    introduces ~1-ulp per-vector noise that can flip raw-dot ties
-    (ADVICE r10); supplying the exact constant keeps per-query ranking
+    introduces ~1-ulp per-vector noise that can flip raw-dot ties;
+    supplying the exact constant keeps per-query ranking
     exactly monotonic in the raw inner product. Also the realistic
     100 TB shape — corpus norms are precomputed once, not re-reduced
     per query batch.
@@ -97,22 +99,22 @@ def topk_bruteforce(
                 " (the scale paths), or pass max_queries=None to opt out."
             )
     # Norms are precomputed ONCE PER ROW in each side's projection
-    # (guide §2.2/§4: the cosine-inside-the-join form re-folds both
+    # (the cosine-inside-the-join form re-folds both
     # 64-element norm aggregates per PAIR — Q×N times instead of Q+N).
     # Bit-identical to the inline form: same _norm expression over the
     # same values, same den==0 guard, same division association.
     q = F.broadcast(
         queries.select(
             F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("_qn"),
+            F.col(_VEC_COL).alias("qv"),
+            _norm(F.col(_VEC_COL)).alias("_qn"),
         )
     )
-    c_cols = [F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")]
+    c_cols = [F.col(id_col).alias("neighbor_id"), F.col(_VEC_COL).alias("cv")]
     if corpus_norm_col is not None:
         c_cols.append(F.col(corpus_norm_col).alias("_cn"))
     else:
-        c_cols.append(_norm(F.col(vec_col)).alias("_cn"))
+        c_cols.append(_norm(F.col(_VEC_COL)).alias("_cn"))
     c = corpus.select(*c_cols)
     den = F.col("_qn") * F.col("_cn")
     sim = _dot(F.col("qv"), F.col("cv")) / F.when(
@@ -134,8 +136,6 @@ def topk_bruteforce(
 def topk_bruteforce_pandas(
     queries: DataFrame,
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     max_queries: int | None = 100,
 ) -> DataFrame:
@@ -167,7 +167,7 @@ def topk_bruteforce_pandas(
             )
     import numpy as np
 
-    qrows = queries.select(id_col, vec_col).collect()  # bounded by the guard above
+    qrows = queries.select(_ID_COL, _VEC_COL).collect()  # bounded by the guard above
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qmat = np.array([list(r[1]) for r in qrows], dtype=np.float64)
     # Zero vectors must score 0 against everything (the built-in
@@ -201,7 +201,7 @@ def topk_bruteforce_pandas(
             )
 
     cands = corpus.select(
-        F.col(id_col).alias("_nid"), F.col(vec_col).alias("_vec")
+        F.col(_ID_COL).alias("_nid"), F.col(_VEC_COL).alias("_vec")
     ).mapInPandas(score, "query_id long, neighbor_id long, sim double")
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
@@ -252,8 +252,6 @@ def _plane_bucket(vec_col, planes_lit, n_planes: int):
 def topk_lsh(
     queries: DataFrame,
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_planes: int = 4,
     n_tables: int = 4,
@@ -289,11 +287,11 @@ def topk_lsh(
             tables_lit,
             lambda tp, t: F.struct(
                 t.alias("tbl"),
-                _plane_bucket(F.col(vec_col), tp, n_planes).alias("bkt"),
+                _plane_bucket(F.col(_VEC_COL), tp, n_planes).alias("bkt"),
             ),
         )
         return df.select(
-            F.col(id_col).alias(out_id), F.explode(entries).alias("e")
+            F.col(_ID_COL).alias(out_id), F.explode(entries).alias("e")
         ).select(out_id, F.col("e.tbl").alias("tbl"), F.col("e.bkt").alias("bkt"))
 
     qb = bucketed(queries, "query_id")
@@ -309,14 +307,14 @@ def topk_lsh(
     # per-row norm precompute before the candidate join (see
     # topk_bruteforce) — bit-identical to cosine() per pair
     qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("_qn"),
+        F.col(_ID_COL).alias("query_id"),
+        F.col(_VEC_COL).alias("qv"),
+        _norm(F.col(_VEC_COL)).alias("_qn"),
     )
     cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("_cn"),
+        F.col(_ID_COL).alias("neighbor_id"),
+        F.col(_VEC_COL).alias("cv"),
+        _norm(F.col(_VEC_COL)).alias("_cn"),
     )
     den = F.col("_qn") * F.col("_cn")
     sim_expr = _dot(F.col("qv"), F.col("cv")) / F.when(

@@ -30,9 +30,9 @@ LANG_MARKERS: dict[str, list[str]] = {
 STOPWORDS_EN = ["the", "a", "and", "of", "to", "in", "is", "it", "for", "on"]
 
 
-def token_count(text: Column, pattern: str = BPE_ISH_PATTERN) -> Column:
+def token_count(text: Column) -> Column:
     """Number of BPE-ish tokens (letter runs, digit runs, symbols)."""
-    return F.size(F.regexp_extract_all(text, F.lit(pattern), 0)).cast("bigint")
+    return F.size(F.regexp_extract_all(text, F.lit(BPE_ISH_PATTERN), 0)).cast("bigint")
 
 
 def whitespace_token_count(text: Column) -> Column:
@@ -56,14 +56,10 @@ def stopword_hits(tok_array: Column, stopwords: list[str]) -> Column:
     return F.size(F.filter(tok_array, lambda t: F.array_contains(sw, t))).cast("bigint")
 
 
-def quality_flags(
-    text: Column,
-    min_chars: int = 50,
-    max_punct_per_100: int = 20,
-    min_stop_per_100: int = 1,
-) -> dict[str, Column]:
-    """Quality gate booleans via integer cross-multiplication
-    (100*punct <= max*chars etc.) — no float ratios."""
+def quality_flags(text: Column) -> dict[str, Column]:
+    """Quality gate booleans via integer cross-multiplication — no
+    float ratios: at least 50 chars, at most 20 punctuation marks per
+    100 chars, at least 1 stopword per 100 tokens."""
     cc = char_class_counts(text)
     toks = F.regexp_extract_all(F.lower(text), F.lit("[a-z0-9]+"), 0)
     n_tok = F.size(toks).cast("bigint")
@@ -72,9 +68,9 @@ def quality_flags(
         "n_tokens": n_tok,
         "n_stopwords": stops,
         **cc,
-        "len_ok": cc["n_chars"] >= min_chars,
-        "punct_ok": 100 * cc["n_punct"] <= max_punct_per_100 * cc["n_chars"],
-        "stopword_ok": 100 * stops >= min_stop_per_100 * F.greatest(n_tok, F.lit(1).cast("bigint")),
+        "len_ok": cc["n_chars"] >= 50,
+        "punct_ok": 100 * cc["n_punct"] <= 20 * cc["n_chars"],
+        "stopword_ok": 100 * stops >= 1 * F.greatest(n_tok, F.lit(1).cast("bigint")),
     }
 
 
@@ -108,16 +104,7 @@ def fingerprint(text: Column) -> Column:
     """
     return F.md5(text)
 
-def gopher_rules(
-    text: Column,
-    min_words: int = 30,
-    max_words: int = 500,
-    min_mean_word_len: int = 3,
-    max_mean_word_len: int = 10,
-    max_symbol_per_10_words: int = 1,
-    min_alpha_words_per_5: int = 4,
-    min_distinct_stopwords: int = 2,
-) -> dict[str, Column]:
+def gopher_rules(text: Column) -> dict[str, Column]:
     """Gopher-style document-quality rule pack (Rae et al. 2021 §A1.1
     "quality filtering" heuristics, thresholds adapted to the synthetic
     corpus scale): each rule is an independent boolean so a pipeline
@@ -127,9 +114,9 @@ def gopher_rules(
     etc.), so no float ever reaches a hashed comparison, and the whole
     pack is one zero-shuffle scan projection.
 
-    Rules: word count bounds; mean word length bounds; symbol-to-word
-    ratio (# and ellipsis); fraction of words containing an alphabetic
-    char; at least N distinct stopwords present.
+    Rules: 30 to 500 words; mean word length 3 to 10 chars; at most 1
+    symbol (# and ellipsis) per 10 words; at least 4 in 5 words contain
+    an alphabetic char; at least 2 distinct stopwords present.
     """
     toks = F.regexp_extract_all(F.lower(text), F.lit("[a-z0-9]+"), 0)
     n_words = F.size(toks).cast("bigint")
@@ -152,10 +139,9 @@ def gopher_rules(
     return {
         "n_words": n_words,
         "n_stop_distinct": n_stop_distinct,
-        "rule_word_count": (n_words >= min_words) & (n_words <= max_words),
-        "rule_mean_word_len": (min_mean_word_len * w <= n_word_chars)
-        & (n_word_chars <= max_mean_word_len * w),
-        "rule_symbol_ratio": 10 * n_symbols <= max_symbol_per_10_words * w,
-        "rule_alpha_words": 5 * n_alpha_words >= min_alpha_words_per_5 * n_words,
-        "rule_stopwords": n_stop_distinct >= min_distinct_stopwords,
+        "rule_word_count": (n_words >= 30) & (n_words <= 500),
+        "rule_mean_word_len": (3 * w <= n_word_chars) & (n_word_chars <= 10 * w),
+        "rule_symbol_ratio": 10 * n_symbols <= 1 * w,
+        "rule_alpha_words": 5 * n_alpha_words >= 4 * n_words,
+        "rule_stopwords": n_stop_distinct >= 2,
     }

@@ -21,8 +21,8 @@ _ORACLES: dict[str, str | Callable[[], str]] = {}
 _BOUNDED: set[str] = set()
 
 # The driver's correctness record covers only the FIRST 50 entries of
-# queries(), so these names, the r16 record's window, are emitted first;
-# every other query follows in registration order.
+# queries(); these 50 names are emitted first so they fall inside it.
+# Every other query follows in registration order.
 _WINDOW_PRIORITY: list[str] = [
     "dedup_store_asof",
     "quality_swap_gate",

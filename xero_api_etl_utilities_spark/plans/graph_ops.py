@@ -22,14 +22,12 @@ from xero_api_etl_utilities_spark.plans.catalog import register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
 
-def _co_edges(
-    spark: SparkSession, sf_dir: str, min_shared: int = 3, max_cell: int = 1000
-) -> DataFrame:
-    """Co-occurrence edges: user pairs sharing >= ``min_shared``
-    distinct (day, event_type, hour) activity cells. The self-join is
-    keyed on the CELL, so it is quadratic only within one cell's user
-    list, linear in cells globally — and ``max_cell`` makes that bound
-    a GUARANTEE, not an observation: cells with more users are dropped
+def _co_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Co-occurrence edges: user pairs sharing >= 3 distinct (day,
+    event_type, hour) activity cells. The self-join is keyed on the
+    CELL, so it is quadratic only within one cell's user list, linear
+    in cells globally — and a 1000-user cell cap makes that bound a
+    GUARANTEE, not an observation: cells with more users are dropped
     before the join (the LSH stop-bucket pattern — a viral cell shared
     by millions contributes co-presence evidence about nothing and
     would alone go quadratic at 100 TB). This corpus' largest cell is
@@ -59,7 +57,7 @@ def _co_edges(
     small_cells = (
         uc.groupBy("d", "t", "h")
         .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") <= max_cell)
+        .filter(F.col("_n") <= 1000)
         .select("d", "t", "h")
     )
     uc = uc.join(small_cells, ["d", "t", "h"], "left_semi")
@@ -77,7 +75,7 @@ def _co_edges(
         )
         .groupBy("u1", "u2")
         .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= min_shared)
+        .filter(F.col("shared") >= 3)
         .select("u1", "u2")
     )
 

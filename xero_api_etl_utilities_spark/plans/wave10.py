@@ -35,8 +35,8 @@ Spark plan bit-for-bit against the naive nested-subquery semantics
   supplier keys, semi-join.
 
 X155 ``pipeline_corpus_publish`` (registered from this module, built
-on sources/writer.py + operators/packing.py + wave9's X146) closes
-VERDICT r9 item 2 — see ``pipeline_corpus_publish`` below.
+on sources/writer.py + operators/packing.py + wave9's X146) gates
+the curated corpus end to end — see ``pipeline_corpus_publish`` below.
 
 No reference counterpart (src/queries.ts is a bookkeeping ETL); these
 are engine-capability proofs in the catalog's TPC-H dialect.
@@ -53,8 +53,9 @@ from xero_api_etl_utilities_spark.sources.parquet import load_table
 _CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
 
-def _cents(col: str = "o_totalprice") -> F.Column:
-    return F.round(F.col(col) * 100).cast("long")
+def _cents() -> F.Column:
+    """``o_totalprice`` in integer cents — the Spark twin of ``_CENTS``."""
+    return F.round(F.col("o_totalprice") * 100).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -323,13 +324,13 @@ def _publish_dir(sf_dir: str, run_suffix: str | None = None) -> str:
     or any machine-absolute data path).  ``run_suffix`` (the Spark
     applicationId in :func:`publish_corpus`) isolates concurrent runs
     against the same base dir — two parallel gate sessions otherwise
-    race on one artifact path (VERDICT r10 "What's wrong" #3)."""
+    race on one artifact path."""
     import os
 
     base = os.environ.get("XERO_SPARK_PUBLISH_DIR")
     if base is None:
         # plans/wave10.py -> plans -> package dir -> repo root (three
-        # dirnames; a fourth would escape the repo — ADVICE r10).
+        # dirnames; a fourth would escape the repo).
         import xero_api_etl_utilities_spark as _pkg
 
         pkg_dir = os.path.dirname(os.path.abspath(_pkg.__file__))
@@ -346,7 +347,7 @@ def _prune_stale_runs(path: str, sf_dir: str) -> None:
     this run's artifact, delete sibling dirs for the SAME sf whose
     run suffix differs (prior gate/bench sessions).  Without this the
     applicationId suffix accumulates one full-corpus artifact per
-    session, unbounded (ADVICE r11).  Other-sf siblings are kept —
+    session, unbounded.  Other-sf siblings are kept —
     they are different datasets, not stale runs."""
     import os
     import shutil
@@ -392,9 +393,9 @@ def publish_corpus(spark: SparkSession, sf_dir: str) -> str:
 
 
 def pipeline_corpus_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X155: the end-to-end curated-corpus PUBLISH gate (VERDICT r9
-    item 2) — the composition the pieces individually proved but the
-    catalog never gated: X146's span-deduplicated emit, packed into
+    """X155: the end-to-end curated-corpus PUBLISH gate — the
+    composition the pieces individually proved but the catalog never
+    gated: X146's span-deduplicated emit, packed into
     fixed-token-budget training packs (X14's sharded next-fit), written
     as source-partitioned parquet shards, READ BACK FROM DISK, and
     censused per pack.  The returned frame derives entirely from the
@@ -686,7 +687,7 @@ def similarity_topk_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT broadcast constant M as the corpus-side norm
     (``corpus_norm_col``), so per-query cosine order is strictly
     monotonic in the raw inner product — a per-vector recomputed
-    norm would inject ~1-ulp noise into raw-dot ties (ADVICE r10).
+    norm would inject ~1-ulp noise into raw-dot ties.
 
     Shape: a 2-row aggregate for M^2 broadcast onto one corpus
     projection; the reduction adds one dimension and zero shuffles."""
@@ -717,7 +718,7 @@ def similarity_topk_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("embedding"),
             # Every augmented vector's norm is EXACTLY M by
             # construction; recomputing it per vector costs ~1 ulp of
-            # noise that can flip raw-dot ties (ADVICE r10), so the
+            # noise that can flip raw-dot ties, so the
             # exact broadcast constant rides along as the corpus norm.
             F.sqrt("_m2").alias("aug_norm"),
         )

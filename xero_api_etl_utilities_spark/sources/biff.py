@@ -5,7 +5,7 @@ The filename contract deliberately accepts both extensions
 ``sources/excel_grid.py``) and the reference's ``xlsx`` library reads
 BIFF transparently, but the repo's zip+XML decoder only understood
 zip-XML ``.xlsx``: a real drop-dir with an old-format ``DD 07.xls``
-threw inside an executor task (VERDICT r10, "What's missing" #2).
+threw inside an executor task.
 This module is the fuller fix — a minimal BIFF8 string/number cell
 reader so legacy workbooks decode to the SAME grid contract, with the
 loud-quarantine route (``excel_grid.read_workbook_grids_with_
@@ -24,7 +24,7 @@ Two layers, both stdlib-only (struct + bytes):
 
 Scope (deliberate): cached FORMULA results, 1904 date mode, and
 charts are out — day-docket grids are literal strings and numbers
-(src/parse.ts:61-146).  Out-of-scope is LOUD, never silent (r12): a
+(src/parse.ts:61-146).  Out-of-scope is LOUD, never silent: a
 1904-flagged workbook raises before any cell is emitted (its serial
 dates would decode 1462 days shifted) and a FORMULA record fails the
 sheet (skipping it would emit a grid with holes) — both land in the
@@ -107,9 +107,9 @@ def _ole2_stream(blob: bytes, name: str) -> bytes:
     per = sec_size // 4 - 1
     # the header's n_difat is attacker-controlled (up to 2^32-1) and a
     # self-pointing DIFAT sector would otherwise spin ~4B cheap
-    # iterations inside an executor task instead of raising (ADVICE
-    # r11): clamp to the file's physical sector count AND track
-    # visited ids like _chain's cycle guard
+    # iterations inside an executor task instead of raising: clamp to
+    # the file's physical sector count AND track visited ids like
+    # _chain's cycle guard
     seen_difat: set[int] = set()
     for _ in range(min(n_difat, len(blob) // sec_size + 1)):
         if sec in (_ENDOFCHAIN, _FREESECT):
@@ -182,6 +182,10 @@ _MULRK = 0x00BD
 _BOOLERR = 0x0205
 _DATEMODE = 0x0022
 _FORMULA = 0x0006
+
+# Grid width: columns A..G, the day-docket contract of
+# excel_grid.GRID_COLUMNS.
+_GRID_WIDTH = 7
 
 
 def _records(stream: bytes, pos: int):
@@ -271,7 +275,6 @@ class _Segments:
                     # leftover byte here is a malformed split — falling
                     # through would misread it as the continuation
                     # option byte and silently decode garbage
-                    # (ADVICE r11)
                     raise ValueError("odd UTF-16 split in SST string")
                 # boundary crossed: next segment starts with an option byte
                 self._advance_if_exhausted()
@@ -327,7 +330,7 @@ def _num_text(v: float) -> str:
 
 
 def decode_xls_grid(
-    content: bytes, sheet_name: str, max_col: int = 7
+    content: bytes, sheet_name: str
 ) -> list[tuple[int, list[str | None]]]:
     """Decode one worksheet of a BIFF8 ``.xls`` blob to (row_idx,
     cells) — the same grid contract as ``decode_xlsx_grid``.
@@ -343,13 +346,13 @@ def decode_xls_grid(
         # differ, so route those to quarantine loudly
         raise ValueError("OLE2 container has no BIFF8 'Workbook' stream")
     try:
-        return _decode_workbook_stream(stream, sheet_name, max_col)
+        return _decode_workbook_stream(stream, sheet_name)
     except (struct.error, IndexError, OverflowError, UnicodeDecodeError) as e:
         raise ValueError(f"malformed BIFF8 stream: {e}") from e
 
 
 def _decode_workbook_stream(
-    stream: bytes, sheet_name: str, max_col: int
+    stream: bytes, sheet_name: str
 ) -> list[tuple[int, list[str | None]]]:
     sst: list[str] = []
     sheet_pos: int | None = None
@@ -362,7 +365,7 @@ def _decode_workbook_stream(
                 # 1904 date mode shifts every serial date by 1462 days;
                 # decoding it silently would hand downstream date logic
                 # plausible-but-wrong values — route to quarantine
-                # loudly instead (VERDICT r11 missing #4)
+                # loudly instead
                 raise ValueError(
                     "BIFF8 1904 date mode not supported"
                     " (serial dates would decode shifted)"
@@ -394,7 +397,7 @@ def _decode_workbook_stream(
     cells: dict[int, dict[int, str]] = {}
 
     def put(r: int, c: int, v: str) -> None:
-        if 0 <= c < max_col:
+        if 0 <= c < _GRID_WIDTH:
             cells.setdefault(r + 1, {})[c] = v
 
     for op, data, _nxt in _records(stream, sheet_pos):
@@ -403,7 +406,7 @@ def _decode_workbook_stream(
             # are literal cells): decoding the rest of the sheet while
             # skipping formula cells would silently emit a grid with
             # holes — fail the workbook loudly so the quarantine route
-            # reports it instead (VERDICT r11 missing #4)
+            # reports it instead
             raise ValueError(
                 "BIFF8 FORMULA cells not supported (cached results"
                 " out of scope)"
@@ -440,5 +443,5 @@ def _decode_workbook_stream(
     out: list[tuple[int, list[str | None]]] = []
     for r in range(1, max(cells) + 1):
         row = cells.get(r, {})
-        out.append((r, [row.get(c) for c in range(max_col)]))
+        out.append((r, [row.get(c) for c in range(_GRID_WIDTH)]))
     return out

@@ -83,7 +83,7 @@ def _col_index(ref: str) -> int:
 
 
 def decode_xlsx_grid(
-    content: bytes, sheet_name: str, max_col: int = len(GRID_COLUMNS)
+    content: bytes, sheet_name: str
 ) -> list[tuple[int, list[str | None]]]:
     """Decode one worksheet of an xlsx byte blob to (row_idx, cells).
 
@@ -141,12 +141,12 @@ def decode_xlsx_grid(
     r_seq = 0
     for row in ET.fromstring(zf.read(target)).iterfind(".//{*}row"):
         r_seq = int(row.get("r", r_seq + 1))
-        vals: list[str | None] = [None] * max_col
+        vals: list[str | None] = [None] * len(GRID_COLUMNS)
         c_seq = 0
         for c in row.iterfind(".//{*}c"):
             ref = c.get("r")
             c_seq = _col_index(ref) if ref else c_seq + 1
-            if not 1 <= c_seq <= max_col:
+            if not 1 <= c_seq <= len(GRID_COLUMNS):
                 continue
             t = c.get("t", "n")
             if t == "inlineStr":
@@ -166,25 +166,24 @@ def decode_xlsx_grid(
         rows[r_seq] = vals
     if not rows:
         return []
-    empty: list[str | None] = [None] * max_col
+    empty: list[str | None] = [None] * len(GRID_COLUMNS)
     return [(r, rows.get(r, empty)) for r in range(1, max(rows) + 1)]
 
 
 def decode_workbook_grid(
-    content: bytes, sheet_name: str, max_col: int = len(GRID_COLUMNS)
+    content: bytes, sheet_name: str
 ) -> list[tuple[int, list[str | None]]]:
     """Container-sniffing decode: zip-XML ``.xlsx`` and legacy OLE2
     BIFF8 ``.xls`` both land on the same grid contract (the filename
     contract accepts both — ``DD \\d\\d.xls[x]?``, src/parse.ts:49).
     Anything with neither magic raises a diagnosable ``ValueError``
-    instead of a ``BadZipFile`` from deep inside the zip module
-    (VERDICT r10 "What's missing" #2)."""
+    instead of a ``BadZipFile`` from deep inside the zip module."""
     from xero_api_etl_utilities_spark.sources.biff import OLE2_MAGIC, decode_xls_grid
 
     if content[:4] == b"PK\x03\x04":
-        return decode_xlsx_grid(content, sheet_name, max_col)
+        return decode_xlsx_grid(content, sheet_name)
     if content[:8] == OLE2_MAGIC:
-        return decode_xls_grid(content, sheet_name, max_col)
+        return decode_xls_grid(content, sheet_name)
     head = content[:8].hex()
     raise ValueError(
         f"unrecognized workbook container (magic {head!r}): neither "

@@ -33,22 +33,21 @@ def write_bucketed_table(
     bucket_by: list[str],
     num_buckets: int = 64,
     sort_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Bucketed managed table: joins/aggregations on the bucket key
-    skip their shuffle (the orderkey co-location the flagship plan
-    notes). Requires saveAsTable (bucketing metadata lives in the
+    """Bucketed managed table, overwritten: joins/aggregations on the
+    bucket key skip their shuffle (the orderkey co-location the
+    flagship plan notes). Requires saveAsTable (bucketing metadata lives in the
     catalog, not the files)."""
-    w = df.write.mode(mode).bucketBy(num_buckets, *bucket_by)
+    w = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_by)
     if sort_by:
         w = w.sortBy(*sort_by)
     w.saveAsTable(table)
 
 
-def write_json_audit(df: DataFrame, path: str, mode: str = "errorifexists") -> None:
+def write_json_audit(df: DataFrame, path: str) -> None:
     """S11: JSON audit sink; `errorifexists` replaces the reference's
     a/b/c suffix collision probing with an atomic write-mode contract."""
-    df.write.mode(mode).json(path)
+    df.write.mode("errorifexists").json(path)
 
 
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
@@ -104,7 +103,6 @@ def _part_parquet_files(d: str) -> list[str]:
 def compact_store(
     spark,
     store_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
     subs: tuple[str, ...] = ("catalog", "docs"),
 ) -> dict[str, int]:
     """Small-file compaction of a partitioned store: every absorbed
@@ -113,7 +111,7 @@ def compact_store(
     and at crawl cadence per-file open/footer cost comes to dominate
     every scan.  Each sub-store's live partitions are merged into ONE
     new ``part=compact-<k>`` partition of ``ceil(total_bytes /
-    target_file_bytes)`` files, sized from the CURRENT on-disk bytes,
+    128 MiB)`` files, sized from the CURRENT on-disk bytes,
     while every prior partition directory survives as an EMPTY marker
     dir holding only an ``_ABSORBED`` flag file — a replay guard that
     tests ``os.path.isdir`` on a batch's partition dir stays a no-op,
@@ -169,7 +167,7 @@ def compact_store(
             for p in live
             for f in _part_parquet_files(os.path.join(root, p))
         )
-        n_files = max(1, math.ceil(total / target_file_bytes))
+        n_files = max(1, math.ceil(total / (128 * 1024 * 1024)))
         k = 1 + max(
             (
                 int(m.group(1))
@@ -204,10 +202,9 @@ def write_zorder_table(
     x_col: str,
     y_col: str,
     n_files: int = 16,
-    mode: str = "overwrite",
 ) -> None:
-    """Write ``df`` Z-ORDER clustered on two integer dimension columns
-    (functions/zorder.py) — the OPTIMIZE ZORDER layout: rows land in
+    """Overwrite ``path`` with ``df`` Z-ORDER clustered on two integer
+    dimension columns (functions/zorder.py) — the OPTIMIZE ZORDER layout: rows land in
     files by Morton-key range, so every file covers a narrow rectangle
     in BOTH dimensions and engine min/max skipping prunes on either
     predicate column (a plain sort gives pruning on the leading column
@@ -231,6 +228,6 @@ def write_zorder_table(
         .repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
