@@ -71,7 +71,7 @@ def ann_fixture(spark, tmp_path_factory):
     path = os.path.join(str(tmp_path_factory.mktemp("ann")), "vecs.parquet")
     vecs.toPandas().to_parquet(path)
     cents = ivf.train_centroids(vecs, k=5, iters=5, sample=200, seed=2)
-    books = train_pq_codebooks_from_parquet(path, m=4, sample=200)
+    books = train_pq_codebooks_from_parquet(path, m=4)
     index = (
         ivf.assign_cells(vecs, cents, "embedding", 1)
         .select("vec_id", "cell")

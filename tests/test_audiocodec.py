@@ -84,13 +84,3 @@ def test_audio_stats_integer_exact():
     assert st["n_frames"] == 4 and st["duration_ms"] == 1  # floor(4*1000/4000)
     [ch] = st["channels"]
     assert (ch["s_sum"], ch["s_sumsq"], ch["s_min"], ch["s_max"]) == (6, 54, -3, 6)
-
-
-def test_real_decode_features_sniffs_audio_and_rejects_unknown():
-    from xero_api_etl_utilities_spark.operators.multimodal import real_decode_features
-
-    wav = ac.encode_wav(8000, [[100] * 8000])  # 1s of DC -> RMS 100
-    feats = real_decode_features(wav, dim=4)
-    assert feats == [1.0, 8.0, 1.0, 100.0]
-    with pytest.raises(ValueError, match="unrecognized media"):
-        real_decode_features(b"\x00\x01\x02\x03 definitely not media")

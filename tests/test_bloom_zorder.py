@@ -99,7 +99,7 @@ class TestZOrderWrite:
             (F.col("id") % 1024).alias("x"), ((F.col("id") * 13) % 1024).alias("y")
         )
         path = str(tmp_path / "ztab")
-        write_zorder_table(df, path, "x", "y", n_files=16)
+        write_zorder_table(df, path, "x", "y")
         # read back with file lineage: every FILE (the skipping unit)
         # must span far less than the global 0..1023 range in BOTH dims
         got = (
@@ -135,7 +135,7 @@ class TestZOrderWrite:
             (F.col("id") % 700).alias("x"), ((F.col("id") * 31) % 900).alias("y")
         )
         path = str(tmp_path / "zt2")
-        write_zorder_table(df, path, "x", "y", n_files=8)
+        write_zorder_table(df, path, "x", "y")
         back = spark.read.parquet(path)
         assert back.count() == 5000
         assert sorted(back.columns) == ["x", "y"]

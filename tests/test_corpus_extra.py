@@ -159,7 +159,7 @@ def test_epoch_shuffle_is_total_order_per_epoch(spark, sf_dir):
     # the bucket-decomposed rank must reconstruct the single global
     # row_number over (h, doc_id): positions are a 1..N permutation per
     # epoch and agree with the directly sorted hash order.
-    rows = sample_epoch_shuffle(spark, sf_dir, epochs=2, shards=8).collect()
+    rows = sample_epoch_shuffle(spark, sf_dir).collect()
     by_epoch: dict[int, list] = {}
     for r in rows:
         by_epoch.setdefault(r["epoch"], []).append(r)
@@ -195,9 +195,7 @@ def test_semdedup_census_matches_bruteforce(spark, sf_dir):
     ids = [r[0] for r in rows]
     V = np.array([r[1] for r in rows], dtype=np.float64)
     C = np.array(
-        train_centroids_from_parquet(
-            f"{sf_dir}/embeddings.parquet", k=16, iters=4, sample=1000
-        )
+        train_centroids_from_parquet(f"{sf_dir}/embeddings.parquet")
     )
     cells = (V @ C.T).argmax(axis=1)
     U = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
@@ -360,7 +358,7 @@ def test_quality_deciles_dist_is_bitwise_equal_to_exact(spark, sf_dir):
 
 
 def test_dup_span_coverage_matches_python_union(spark, sf_dir):
-    # X110: recompute per-source duplicated-span token coverage in pure
+    # recompute per-source duplicated-span token coverage in pure
     # python with a set-of-positions union (no interval algebra at all)
     # — if the window's running-max union miscounts an overlap, the two
     # disagree.
@@ -403,7 +401,7 @@ def test_dup_span_coverage_matches_python_union(spark, sf_dir):
             r["covered_tokens"],
             r["covered_bp"],
         )
-        for r in text_dup_span_coverage(spark, sf_dir, k=k).collect()
+        for r in text_dup_span_coverage(spark, sf_dir).collect()
     }
     want = {
         src: (d, dd, t, c, c * 10000 // t)

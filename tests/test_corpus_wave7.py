@@ -487,7 +487,7 @@ def test_chunk_overlap_census_matches_python(spark, sf_dir):
 
 
 def test_ivfpq_recall_census_consistency(spark, sf_dir):
-    # X132: census invariants + agreement with a direct set compare of
+    # census invariants + agreement with a direct set compare of
     # the two catalog shortlists it is built from.
     from xero_api_etl_utilities_spark.plans.training_ops import (
         similarity_ivfpq_recall,
@@ -507,7 +507,7 @@ def test_ivfpq_recall_census_consistency(spark, sf_dir):
     qs = emb.filter(F.col("vec_id") < 20)
     truth = {
         (r["query_id"], r["neighbor_id"])
-        for r in sim.topk_bruteforce(qs, emb, k=5, max_queries=100).collect()
+        for r in sim.topk_bruteforce(qs, emb, k=5).collect()
     }
     approx = {
         (r["query_id"], r["neighbor_id"])
@@ -550,7 +550,7 @@ def test_audio_vad_matches_python_decode(spark, sf_dir):
 
 
 def test_range_search_matches_numpy_within_cells(spark, sf_dir):
-    # X136: the pair set must equal a numpy replay of cell assignment
+    # the pair set must equal a numpy replay of cell assignment
     # (argmax centroid dot, ties to larger cell) + cosine radius.
     import numpy as np
 
@@ -561,7 +561,7 @@ def test_range_search_matches_numpy_within_cells(spark, sf_dir):
     from xero_api_etl_utilities_spark.sources.parquet import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = [np.array(c) for c in train_centroids(emb, k=16, iters=4, sample=1000)]
+    cents = [np.array(c) for c in train_centroids(emb)]
     raw = _rows(sf_dir, "SELECT vec_id, embedding FROM embeddings")
     V = {r[0]: np.array(r[1], dtype=np.float64) for r in raw}
 

@@ -74,9 +74,7 @@ def test_frame_sample_chain_with_real_ffmpeg(spark, tmp_path):
         [(1, bytearray(blob))], "media_id bigint, content binary"
     )
 
-    frames = mm.sample_video_frames(
-        media, fps_out=2, decode_fn=ffmpeg_frame_extract
-    ).collect()
+    frames = mm.sample_video_frames(media, decode_fn=ffmpeg_frame_extract).collect()
 
     # grid planned from the REAL container metadata: ~3 s at 2 fps
     assert 4 <= len(frames) <= 8, [r["ts_ms"] for r in frames]

@@ -139,39 +139,3 @@ def test_resize_nearest_upsample():
 def test_ppm_roundtrip():
     data = ic.encode_ppm(2, 2, FLAT)
     assert ic.decode_image(data) == (2, 2, 3, FLAT)
-
-
-def test_image_features_deterministic_means():
-    feats = ic.image_features(make_ppm(), dim=8)
-    assert feats[0] == 2.0 and feats[1] == 2.0  # dims
-    assert feats[3] == pytest.approx((255 + 0 + 0 + 255) / 4)  # mean R
-    assert feats[7] == 4.0  # pixel count
-
-
-def test_spark_extract_and_resize_real_codec(spark):
-    """End-to-end through the Arrow mapInPandas stages with REAL
-    decoding: PNG in → features out; PNG in → resized PPM out whose
-    bytes re-decode to the expected nearest-neighbor pixels."""
-    from xero_api_etl_utilities_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        image_decode_features,
-        image_resize,
-        resize_media,
-    )
-
-    png = make_png_rgb()
-    meta = {
-        "media_type": "image", "mime_type": "image/png",
-        "width": None, "height": None, "duration_ms": None, "sample_rate": None,
-    }
-    media = spark.createDataFrame([(1, bytearray(png), meta)], MEDIA_SCHEMA)
-
-    feats = extract_features(media, dim=8, decode_fn=image_decode_features).collect()
-    assert feats[0]["features"][0] == 2.0 and feats[0]["features"][1] == 2.0
-
-    out = resize_media(media, 4, 4, resize_fn=image_resize).collect()
-    w, h, _c, px = ic.decode_image(bytes(out[0]["content"]))
-    assert (w, h) == (4, 4)
-    assert px == ic.resize_nearest(2, 2, FLAT, 4, 4)
-    assert out[0]["meta"]["width"] == 4 and out[0]["meta"]["height"] == 4

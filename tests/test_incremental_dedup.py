@@ -25,7 +25,7 @@ def _absorb(docs, store_dir, part):
     """Append one batch's partition to both sub-stores, several small
     files each, the layout an absorbed batch leaves behind."""
     band_rows(
-        minhash_signatures(docs, "doc_id", "text", n=1, num_hashes=64),
+        minhash_signatures(docs, "doc_id", "text"),
         16,
         4,
     ).repartition(4).write.parquet(f"{store_dir}/catalog/part={part}")
@@ -111,7 +111,7 @@ def test_compact_store_preserves_semantics(spark, tmp_path):
     want_cat = pre_cat | {
         (r["doc"], r["band"], r["bh"])
         for r in band_rows(
-            minhash_signatures(b4, "doc_id", "text", n=1, num_hashes=64),
+            minhash_signatures(b4, "doc_id", "text"),
             16,
             4,
         ).collect()

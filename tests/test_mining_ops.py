@@ -130,7 +130,7 @@ def test_lpa_separates_bridged_cliques(spark):
     edges += [(a, b) for a, b in combinations([11, 12, 13, 14], 2)]
     edges += [(4, 11)]  # bridge
     df = spark.createDataFrame(edges, "u1 bigint, u2 bigint")
-    labels = {r["v"]: r["label"] for r in label_propagation(df, iters=4).collect()}
+    labels = {r["v"]: r["label"] for r in label_propagation(df).collect()}
     left = {labels[v] for v in (1, 2, 3)}
     right = {labels[v] for v in (12, 13, 14)}
     assert len(left) == 1 and len(right) == 1
@@ -200,17 +200,17 @@ def test_abc_classes_partition_the_parts(spark, sf_dir):
 
 
 def test_bfs_depths_on_path_graph(spark):
-    # path 1-2-3-4-5 seeded at 1: depths are exactly the hop counts,
-    # and max_depth truncates (5 unreached at depth cap 3)
+    # path 1-2-3-4-5-6 seeded at 1: depths are exactly the hop counts,
+    # and the 4-hop cap truncates (6 unreached)
     from xero_api_etl_utilities_spark.operators.graph import bfs_depths
 
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5)], "u1 bigint, u2 bigint"
+        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)], "u1 bigint, u2 bigint"
     )
-    got = {r["v"]: r["depth"] for r in bfs_depths(edges, 1, max_depth=3).collect()}
-    assert got == {1: 0, 2: 1, 3: 2, 4: 3}
-    full = {r["v"]: r["depth"] for r in bfs_depths(edges, 3, max_depth=3).collect()}
-    assert full == {3: 0, 2: 1, 4: 1, 1: 2, 5: 2}
+    got = {r["v"]: r["depth"] for r in bfs_depths(edges, 1).collect()}
+    assert got == {1: 0, 2: 1, 3: 2, 4: 3, 5: 4}
+    full = {r["v"]: r["depth"] for r in bfs_depths(edges, 3).collect()}
+    assert full == {3: 0, 2: 1, 4: 1, 1: 2, 5: 2, 6: 3}
 
 
 def test_rfm_segments_census_sums_to_customers(spark, sf_dir):

@@ -282,11 +282,8 @@ def test_merge_latest_property(spark, data):
             model[k] = (v, d, p)
     expect = {k: p for k, (v, d, p) in model.items() if not d}
 
-    df = spark.createDataFrame(flat, ["k", "v", "del", "p"])
-    got = {
-        r["k"]: r["p"]
-        for r in merge_latest(df, ["k"], "v", "del").collect()
-    }
+    df = spark.createDataFrame(flat, ["k", "v", "_del", "p"])
+    got = {r["k"]: r["p"] for r in merge_latest(df, ["k"], "v").collect()}
     assert got == expect
 
 
@@ -354,7 +351,7 @@ def test_cc_star_equals_label_propagation_property(spark, data):
     df = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
     star = {
         (r["doc"], r["cluster_id"])
-        for r in cc_large_star_small_star(df, max_iters=20).collect()
+        for r in cc_large_star_small_star(df.toDF("u1", "u2"), max_iters=20).collect()
     }
     lp = {
         (r["doc"], r["cluster_id"])
@@ -389,7 +386,7 @@ def test_decomposed_rank_and_ntile_property(spark, data):
     df = spark.createDataFrame(rows, "score long, id long")
     banded = df.withColumn("bucket", F.shiftright(F.col("score"), 2))
     ranked = global_rank_decomposed(
-        banded, "bucket", [F.asc("score"), F.asc("id")], rank_name="r"
+        banded, "bucket", [F.asc("score"), F.asc("id")]
     )
     total = df.count()
     w = W.orderBy(F.asc("score"), F.asc("id"))
@@ -441,7 +438,6 @@ def test_decomposed_rank_descending_bands_property(spark, data):
         banded,
         "bucket",
         [F.desc("cnt"), F.asc("id")],
-        rank_name="r",
         descending_bands=True,
     )
     w = W.orderBy(F.desc("cnt"), F.asc("id"))

@@ -28,7 +28,7 @@ def test_containment_catches_subset_jaccard_misses(spark):
     )
     got = {
         (r["doc_a"], r["doc_b"]): (r["inter_size"], r["min_size"])
-        for r in containment_verify(cands, docs, "doc_id", "text", n=1).collect()
+        for r in containment_verify(cands, docs, "doc_id", "text").collect()
     }
     assert got == {(1, 2): (3, 3)}  # (1,3): inter 0, fails; subset passes
 
@@ -38,7 +38,7 @@ def test_containment_empty_doc_never_pairs(spark):
         [(1, "a b"), (2, "")], "doc_id bigint, text string"
     )
     cands = spark.createDataFrame([(1, 2)], "doc_a bigint, doc_b bigint")
-    assert containment_verify(cands, docs, "doc_id", "text", n=1).count() == 0
+    assert containment_verify(cands, docs, "doc_id", "text").count() == 0
 
 
 def test_sq8_codes_bounds_and_constant_dim(spark):
@@ -117,7 +117,7 @@ def test_decode_gray_blocks_pins_full_codec_chain(spark):
     media = spark.createDataFrame(
         [(d, bytearray(encode_ppm(4, 4, raw)))], "media_id bigint, content binary"
     )
-    row = decode_gray_blocks(media, resize_to=(2, 2)).collect()[0]
+    row = decode_gray_blocks(media).collect()[0]
     gray = [(raw[3 * p] + raw[3 * p + 1] + raw[3 * p + 2]) // 3 for p in range(16)]
     for j in range(8):
         assert row[f"f{j}"] == gray[2 * j] + gray[2 * j + 1]
@@ -151,7 +151,7 @@ def test_synth_media_roundtrips_through_any_supported_format(spark):
         [(1, bytearray(encode_ppm(2, 2, pix))), (2, bytearray(bmp_2x2(pix)))],
         "media_id bigint, content binary",
     )
-    rows = {r["media_id"]: r for r in decode_gray_blocks(media, (2, 2)).collect()}
+    rows = {r["media_id"]: r for r in decode_gray_blocks(media).collect()}
     a, b = rows[1], rows[2]
     assert [a[f] for f in a.asDict() if f != "media_id"] == [
         b[f] for f in b.asDict() if f != "media_id"
@@ -202,9 +202,7 @@ def test_ahash_identical_period_images_pair_at_hamming_zero(spark):
     fps = ahash64(synth_ppm_media(ids, "doc_id", width=8, height=8))
     pairs = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in simhash_near_dups(
-            fps, max_hamming=3, doc_col="media_id", fp_col="ahash"
-        ).collect()
+        for r in simhash_near_dups(fps, doc_col="media_id", fp_col="ahash").collect()
     }
     for d in range(5):
         assert pairs.get((d, d + 256)) == 0
@@ -294,7 +292,7 @@ def test_decontam_report_merges_both_detectors(spark, sf_dir):
     train = docs.filter(F.col("doc_id") % 20 != 0)
     exact = {
         r["doc_id"]: r["n_shared"]
-        for r in ngram_overlap(train, bench, "doc_id", "text", n=3).collect()
+        for r in ngram_overlap(train, bench, "doc_id", "text").collect()
     }
     near: dict[int, int] = {}
     for r in _verified_pairs(spark, sf_dir).collect():

@@ -115,8 +115,7 @@ def test_frame_sampling_grid_and_real_thumb_roundtrip(spark):
 
     ids = spark.range(4).withColumnRenamed("id", "doc_id")
     frames = mm.sample_video_frames(
-        mm.synth_mp4_media(ids, "doc_id"), fps_out=2,
-        decode_fn=mm.fake_frame_decode,
+        mm.synth_mp4_media(ids, "doc_id"), decode_fn=mm.fake_frame_decode
     ).collect()
     by_media = {}
     for r in frames:

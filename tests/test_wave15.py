@@ -197,7 +197,7 @@ def test_catalog_compact_census_and_files(spark, tmp_path):
 
 
 def test_ivf_index_absorb_equals_full_assignment(spark):
-    """X182: the combined persisted index (corpus partition + the
+    """The combined persisted index (corpus partition + the
     arrivals absorbed under the frozen quantizer) must equal a
     one-shot assignment of every vector — cell assignment is a pure
     per-vector function of the frozen centroids — and the publish is
@@ -215,7 +215,7 @@ def test_ivf_index_absorb_equals_full_assignment(spark):
         "part=corpus",
     ]
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cents = ivf.train_centroids(emb, k=16, iters=4, sample=1000)
+    cents = ivf.train_centroids(emb)
     want = {
         (r["vec_id"], r["cell"])
         for r in ivf.assign_cells(emb, cents)

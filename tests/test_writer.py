@@ -57,14 +57,8 @@ def test_bucketed_join_elides_shuffle(spark, sf_dir, tmp_path):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed_table(
-            orders, "bdemo.o_b", ["o_orderkey"], num_buckets=8,
-            sort_by=["o_orderkey"],
-        )
-        write_bucketed_table(
-            li, "bdemo.l_b", ["l_orderkey"], num_buckets=8,
-            sort_by=["l_orderkey"],
-        )
+        write_bucketed_table(orders, "bdemo.o_b", ["o_orderkey"])
+        write_bucketed_table(li, "bdemo.l_b", ["l_orderkey"])
         a, b = spark.table("bdemo.o_b"), spark.table("bdemo.l_b")
         joined = a.join(b, a["o_orderkey"] == b["l_orderkey"])
         buf = io.StringIO()
@@ -105,15 +99,16 @@ def test_versioned_run_exhaustion_raises(spark, tmp_path):
 
 
 def test_versioned_run_reraises_non_collision_errors(spark, tmp_path):
-    """An AnalysisException that is NOT a path collision (here: CSV
-    cannot serialize an array column) must surface immediately instead
-    of burning every probe and reporting 'no free version'."""
+    """An AnalysisException that is NOT a path collision (here: two
+    columns named alike, whose COLUMN_ALREADY_EXISTS message also says
+    "already exists") must surface immediately instead of burning
+    every probe and reporting 'no free version'."""
     from pyspark.errors import AnalysisException
 
     from xero_api_etl_utilities_spark.sources.writer import write_versioned_run
 
-    df = spark.createDataFrame([(1, [1, 2])], "id long, xs array<long>")
+    df = spark.range(1).select(F.lit(1).alias("a"), F.lit(2).alias("a"))
     with pytest.raises(AnalysisException):
-        write_versioned_run(df, str(tmp_path / "bad"), fmt="csv")
+        write_versioned_run(df, str(tmp_path / "bad"))
     # no version directories were probed into existence
     assert not (tmp_path / "bad").exists()

@@ -83,7 +83,7 @@ def sweep(spark, emb, parquet_path: str, label: str, query_pred) -> list[dict]:
     queries = emb.filter(query_pred(F.col("vec_id")))
     n_q = queries.count()
     exact = _per_query_sets(sim.topk_bruteforce(queries, emb, k=K).collect())
-    cents = ivf.train_centroids(emb, k=16, iters=4, sample=1000)
+    cents = ivf.train_centroids(emb)
     results = []
 
     print(f"\n== {label}: {emb.count()} vectors, {n_q} queries, recall@{K} ==")

@@ -996,10 +996,7 @@ def check_bucketed_snapshot_diff(spark, sf_dir: str) -> int:
             .otherwise(F.col("o_totalprice")),
         ).filter(F.col("o_orderkey") % 97 != 0)
         for tbl, df in (("snap_old", base), ("snap_new", nxt)):
-            write_bucketed_table(
-                df, f"audit_b.{tbl}", ["o_orderkey"], num_buckets=8,
-                sort_by=["o_orderkey"],
-            )
+            write_bucketed_table(df, f"audit_b.{tbl}", ["o_orderkey"])
         # null_safe=False: the key is non-null by construction, and
         # file-backed tables read back nullable regardless — this is
         # the caller contract that unlocks bucket co-location

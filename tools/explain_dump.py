@@ -8,16 +8,105 @@ _after.txt). Memoized-substrate parents are built first when a
 consumer is requested, so the dumped plan is the one the bench
 actually times (post-checkpoint subtrees show as Scan ExistingRDD,
 exactly as they execute).
+
+The text is normalised (see :func:`normalise`), so two dumps of the
+same plans compare equal byte for byte.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from explain_audit import formatted_plan  # noqa: E402
+
+# Counters that differ from one session to the next for the same plan:
+# expression ids, exchange plan ids, RDD ids (a ``localCheckpoint`` scan
+# names the RDD it reads), the application id in per-run paths, and the
+# ids of common subexpressions.
+_IDS = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"\blocal-\d+"), "local-N"),
+    (re.compile(r"_common_expr_\d+"), "_common_expr_N"),
+]
+
+
+def _split_list(s: str) -> tuple[list[str], str]:
+    """The comma-separated items of the bracketed (or parenthesised)
+    list that opens ``s``, and the text after its closing bracket."""
+    items, depth, start = [], 0, 1
+    for i, ch in enumerate(s):
+        depth += ch in "[("
+        depth -= ch in "])"
+        if (ch == "," and depth == 1) or depth == 0:
+            items.append(s[start:i].strip())
+            start = i + 1
+        if depth == 0:
+            return items, s[i + 1 :]
+    return items, ""
+
+
+def _expand_arguments(body: str) -> str:
+    """An Expand's projections as ``output=value`` sets without the
+    ``gid`` literal, sorted, then its sorted output list."""
+    projections, rest = _split_list(body)
+    outputs, rest = _split_list(rest.lstrip(", "))
+    rows = []
+    for p in projections:
+        pairs = zip(outputs, _split_list(p)[0])
+        rows.append(sorted(f"{o}={v}" for o, v in pairs if not o.startswith("gid#")))
+    rows = ", ".join("[" + ", ".join(r) + "]" for r in sorted(rows))
+    return f"[{rows}], [{', '.join(sorted(outputs))}]{rest}"
+
+
+def _sorted_list(line: str, head: str) -> str:
+    """``line`` with the items of the list that ``head`` opens sorted
+    (a hash partitioning keeps its partition count last)."""
+    items, rest = _split_list(line[len(head) - 1 :])
+    if head.endswith("hashpartitioning("):
+        items = sorted(items[:-1]) + items[-1:]
+    else:
+        items = sorted(items)
+    close = ")" if head.endswith("(") else "]"
+    return head + ", ".join(items) + close + rest
+
+
+def _canonical_distinct_groups(text: str) -> str:
+    """A plan with an Expand (Spark's rewrite of several DISTINCT
+    aggregates) orders the distinct groups by a hash set that differs
+    from run to run: the group columns come out permuted in every
+    attribute list below the Expand, and each group's ``gid`` number
+    with them.  Sort those lists and drop the gid numbers."""
+    out = []
+    for line in text.split("\n"):
+        m = re.match(r"(?:Input|Keys|Results|Output|Aggregate Attributes) \[\d+\]: \[", line)
+        if line.startswith("Arguments: [[") and "gid#" in line:
+            line = "Arguments: " + _expand_arguments(line[len("Arguments: ") :])
+        elif m:
+            line = _sorted_list(line, m.group(0))
+        elif line.startswith("Arguments: hashpartitioning("):
+            line = _sorted_list(line, "Arguments: hashpartitioning(")
+        elif line.startswith("Arguments: ["):
+            line = _sorted_list(line, "Arguments: [")
+        out.append(re.sub(r"gid#N = \d+", "gid#N = G", line))
+    return "\n".join(out)
+
+
+def normalise(text: str, root: str) -> str:
+    """``text`` with run-to-run counters replaced by ``N`` and the
+    checkout path ``root`` by ``.``; a plan with an Expand also gets
+    its distinct-group order made canonical."""
+    text = text.replace(f"file:{root.rstrip('/')}/", "file:./")
+    for pattern, repl in _IDS:
+        text = pattern.sub(repl, text)
+    if re.search(r"\bExpand \(\d+\)$", text, re.M):
+        text = _canonical_distinct_groups(text)
+    return text
 
 
 def main() -> int:
@@ -42,7 +131,7 @@ def main() -> int:
         df = qs[name](spark, sf_dir)
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(formatted_plan(df))
+            f.write(normalise(formatted_plan(df), os.getcwd()))
         print(f"wrote {path}", file=sys.stderr)
     return 0
 

@@ -41,19 +41,17 @@ def main() -> int:
     docs = load_table(spark, sf_dir, "documents")
     truth = {
         (r["doc_a"], r["doc_b"])
-        for r in dd.jaccard_pairs(
-            docs, "doc_id", "text", n=1, min_sim_num=7, min_sim_den=10, max_rows=None
-        ).collect()
+        for r in dd.jaccard_pairs(docs, "doc_id", "text", max_rows=None).collect()
     }
     print(f"exact Jaccard>=0.7 pairs: {len(truth)}")
     print(f"{'bands':>5} {'rows':>5} {'cands':>8} {'recall':>7} {'precision':>9} {'sec':>6}")
     for bands, rows in [(4, 16), (8, 8), (16, 4), (32, 2)]:
         t0 = time.perf_counter()
-        sigs = dd.minhash_signatures(docs, "doc_id", "text", n=1, num_hashes=bands * rows)
+        sigs = dd.minhash_signatures(docs, "doc_id", "text", num_hashes=bands * rows)
         cands = {
             (r["doc_a"], r["doc_b"])
             for r in dd.minhash_lsh_candidates(
-                sigs, bands=bands, rows_per_band=rows, max_bucket=500
+                sigs, bands=bands, rows_per_band=rows
             ).collect()
         }
         dt = time.perf_counter() - t0
@@ -75,7 +73,7 @@ def main() -> int:
         approx = {
             (r["query_id"], r["neighbor_id"])
             for r in sim.topk_lsh(
-                queries, emb, k=5, n_planes=planes, n_tables=tables
+                queries, emb, n_planes=planes, n_tables=tables
             ).collect()
         }
         dt = time.perf_counter() - t0
@@ -85,7 +83,7 @@ def main() -> int:
 
     from xero_api_etl_utilities_spark.operators import ivf
 
-    centroids = ivf.train_centroids(emb, k=16, iters=4, sample=1000)
+    centroids = ivf.train_centroids(emb)
     print(f"\n{'nprobe':>6} {'overlap@5':>9} {'sec':>6}")
     for nprobe in [1, 2, 4, 8, 16]:
         t0 = time.perf_counter()

@@ -1,8 +1,7 @@
-"""Pure-stdlib WAV (PCM) decoding for the multimodal (X4) pipeline.
+"""Pure-stdlib WAV (PCM) decoding for the multimodal operators.
 
-Closes the audio half of the decode slot the same way imagecodec.py
-closed images (r3) and the S2 xlsx decoder closed workbooks (r1): a
-real, spec-level decoder over the standard library only — ``struct``
+A spec-level decoder over the standard library only, like
+imagecodec.py for images and the S2 xlsx decoder for workbooks — ``struct``
 byte math over the RIFF container, no ``wave`` module on the read
 path (the point is decoding the bytes, not trusting a parser).
 
@@ -27,14 +26,13 @@ fixtures round-trip bit-exactly across runs and executors. Everything
 here runs INSIDE Arrow batches on executors (mapInPandas) — pure
 functions of bytes, no filesystem, no network.
 
-Video remains a plug-in slot (``decode_fn=`` on the multimodal
-operators): frame containers genuinely need an external codec, and a
-fake would be a stub pretending otherwise.
+Video frames remain a plug-in slot
+(``operators/multimodal.sample_video_frames(decode_fn=)``): they need
+an external codec.
 """
 
 from __future__ import annotations
 
-import math
 import struct
 
 RIFF_MAGIC = b"RIFF"
@@ -116,21 +114,3 @@ def audio_stats(data: bytes) -> dict:
             for c, ch in enumerate(samples)
         ],
     }
-
-
-def audio_features(data: bytes, dim: int = 8) -> list[float]:
-    """Float feature vector for the generic decode slot
-    (real_decode_features): duration_s, kHz, channel count, then
-    per-channel RMS (integer isqrt of mean square, so the value is
-    still deterministic) padded/truncated to ``dim``."""
-    st = audio_stats(data)
-    feats = [
-        st["n_frames"] / st["sample_rate"] if st["sample_rate"] else 0.0,
-        st["sample_rate"] / 1000.0,
-        float(st["n_channels"]),
-    ]
-    for ch in st["channels"]:
-        n = max(1, st["n_frames"])
-        feats.append(float(math.isqrt(ch["s_sumsq"] // n)))
-    feats = feats[:dim]
-    return feats + [0.0] * (dim - len(feats))

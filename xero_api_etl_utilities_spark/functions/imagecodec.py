@@ -222,35 +222,3 @@ def resize_nearest(
             dst = (y * new_w + x) * 3
             out[dst : dst + 3] = pixels[src : src + 3]
     return bytes(out)
-
-
-def image_features(data: bytes, dim: int = 8) -> list[float]:
-    """Decoded-image feature vector (first 8 slots): width, height,
-    aspect*1000//1, mean R, mean G, mean B, mean luminance, pixel
-    count — integer-derived floats, deterministic everywhere. ``dim``
-    beyond 8 pads with per-channel max values then zeros."""
-    w, h, _c, px = decode_image(data)
-    n = w * h
-    sums = [0, 0, 0]
-    maxs = [0, 0, 0]
-    for i in range(n):
-        for c in range(3):
-            v = px[3 * i + c]
-            sums[c] += v
-            if v > maxs[c]:
-                maxs[c] = v
-    mean = [s / n for s in sums]
-    lum = (2126 * sums[0] + 7152 * sums[1] + 722 * sums[2]) / (10000 * n)
-    feats = [
-        float(w),
-        float(h),
-        float(w * 1000 // h),
-        mean[0],
-        mean[1],
-        mean[2],
-        lum,
-        float(n),
-    ]
-    feats += [float(m) for m in maxs]
-    feats += [0.0] * max(0, dim - len(feats))
-    return feats[:dim]

@@ -1,13 +1,11 @@
 """Pure-stdlib ISO-BMFF (MP4/MOV) container METADATA codec.
 
-Closes the video half of the X4 decode gate the honest way the brief
-allows: FRAME decode genuinely requires an external codec (ffmpeg is
-not in this container by design — that slot stays a documented
-plug-in, operators/multimodal.real_decode_features), but the container
-METADATA a pipeline actually plans with — duration, timescale, track
-count, display dimensions — is plain big-endian box structure that a
-few dozen lines of `struct` parse for real, exactly like
-imagecodec.py (PNG) and audiocodec.py (WAV) made their formats real.
+Frame decode needs an external codec (ffmpeg is not in this container,
+so it stays a plug-in: operators/multimodal.sample_video_frames'
+``decode_fn``), but the container METADATA a pipeline plans with —
+duration, timescale, track count, display dimensions — is plain
+big-endian box structure that a few dozen lines of ``struct`` parse,
+like imagecodec.py (PNG) and audiocodec.py (WAV) for their formats.
 
 Format (ISO/IEC 14496-12): a file is a sequence of boxes
 ``[u32 size][4cc type][payload]``; size==1 means a u64 "largesize"

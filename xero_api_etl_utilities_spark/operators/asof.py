@@ -94,16 +94,14 @@ def asof_join_nearest(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_cols: list[str] | None = None,
 ) -> DataFrame:
     """NEAREST as-of join (pandas ``merge_asof(direction='nearest')``):
-    for each left row, the same-key right row with the smallest
-    |Δts| in EITHER direction, ties preferring the backward (at-or-
-    before) candidate — sensor alignment and nearest-reading lookups,
-    where backward-only would discard a reading 1 s in the future in
-    favor of one an hour old.
+    for each left row (time axis ``pts``), the same-key right row (time
+    axis ``ts``) with the smallest |Δts| in EITHER direction, ties
+    preferring the backward (at-or-before) candidate — sensor alignment
+    and nearest-reading lookups, where backward-only would discard a
+    reading 1 s in the future in favor of one an hour old.  Each left
+    row gains the match's ``r_event_id`` and ``ts_right``.
 
     Lowering: the SAME single union-sort pass as
     :func:`asof_join_backward`, with TWO frames over one window order
@@ -116,11 +114,8 @@ def asof_join_nearest(
     Determinism contract: right rows must be unique per (key, ts) —
     duplicate-ts right rows make ANY as-of fill order-dependent;
     dedup the right side first (the catalog query keeps max id)."""
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in (on, right_ts)]
-
     ts_is_timestamp = isinstance(
-        left.schema[left_ts].dataType, (T.TimestampType, T.TimestampNTZType)
+        left.schema["pts"].dataType, (T.TimestampType, T.TimestampNTZType)
     )
 
     def _n(col):
@@ -137,25 +132,24 @@ def asof_join_nearest(
         [T.StructField(c, left.schema[c].dataType, True) for c in left.columns]
     )
     rrow_type = T.StructType(
-        [T.StructField(c, right.schema[c].dataType, True) for c in right_cols]
-        + [T.StructField("_r_ts", right.schema[right_ts].dataType, True)]
+        [
+            T.StructField("r_event_id", right.schema["r_event_id"].dataType, True),
+            T.StructField("_r_ts", right.schema["ts"].dataType, True),
+        ]
     )
     lt = left.select(
         F.col(on).alias("_k"),
-        F.col(left_ts).alias("_ts"),
+        F.col("pts").alias("_ts"),
         F.lit(1).alias("_side"),
         F.struct(*[F.col(c) for c in left.columns]).alias("_lrow"),
         F.lit(None).cast(rrow_type).alias("_rrow"),
     )
     rt = right.select(
         F.col(on).alias("_k"),
-        F.col(right_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(0).alias("_side"),
         F.lit(None).cast(lrow_type).alias("_lrow"),
-        F.struct(
-            *[F.col(c) for c in right_cols],
-            F.col(right_ts).alias("_r_ts"),
-        ).alias("_rrow"),
+        F.struct(F.col("r_event_id"), F.col("ts").alias("_r_ts")).alias("_rrow"),
     )
     merged = lt.unionByName(rt)
     base = Window.partitionBy("_k").orderBy("_ts", "_side")
@@ -186,9 +180,6 @@ def asof_join_nearest(
     )
     return picked.select(
         F.col("_lrow.*"),
-        *[
-            F.col(f"_rrow.{c}").alias(f"{c}_right" if c in left.columns else c)
-            for c in right_cols
-        ],
-        F.col("_rrow._r_ts").alias(f"{right_ts}_right"),
+        F.col("_rrow.r_event_id").alias("r_event_id"),
+        F.col("_rrow._r_ts").alias("ts_right"),
     )

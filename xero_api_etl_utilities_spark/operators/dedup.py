@@ -9,7 +9,7 @@ whole-stage codegen; no Python UDFs anywhere.
 Scale design:
 - exact dedup: hash-shuffle groupBy on the text digest, not the text
   itself (100 TB of text never shuffles raw).
-- n-gram Jaccard: pairwise only within LSH/blocking buckets — the
+- token Jaccard: pairwise only within LSH buckets — the
   all-pairs form exists for oracle-checking on small slices.
 - MinHash: k independent permutations via the (a*x+b) mod p trick over
   a 32-bit murmur base hash; LSH bands turn near-dup detection into an
@@ -97,50 +97,40 @@ def jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    min_sim_num: int = 5,
-    min_sim_den: int = 10,
-    block_col: str | None = None,
     max_rows: int | None = 10_000,
 ) -> DataFrame:
-    """All-pairs n-gram Jaccard similarity (exact, for small slices /
+    """All-pairs token Jaccard >= 0.7 (exact, for small slices /
     oracle checks — the scale path is ``minhash_lsh_candidates``).
 
     Jaccard is kept as exact integers (intersection, union sizes);
-    the threshold test is cross-multiplied (den*inter >= num*union) so
+    the threshold test is cross-multiplied (10*inter >= 7*union) so
     no float division enters the hashed result.
 
     Guard (mirrors ``max_bucket`` on the LSH path): the shingle
     self-join is quadratic per shared shingle, so full-corpus input
-    must be refused, not silently accepted. Either pass ``block_col``
-    (a blocking key added to the join, bounding pair generation to
-    within-block) or stay under ``max_rows`` input rows (counted
-    eagerly — one cheap job on an op that is small-slice by contract).
-    ``max_rows=None`` with no ``block_col`` is an explicit opt-out.
+    must be refused, not silently accepted: the input must stay under
+    ``max_rows`` rows (counted eagerly — one cheap job on an op that
+    is small-slice by contract).  ``max_rows=None`` is an explicit
+    opt-out.
     """
-    if block_col is None and max_rows is not None:
+    if max_rows is not None:
         n_rows = df.count()
         if n_rows > max_rows:
             raise ValueError(
-                f"jaccard_pairs got {n_rows} rows (> max_rows={max_rows}) with no"
-                " block_col: the all-pairs shingle self-join is quadratic and must"
-                " not run on a full corpus — pass block_col, raise max_rows, or"
-                " use minhash_lsh_candidates (the scale path)."
+                f"jaccard_pairs got {n_rows} rows (> max_rows={max_rows}): the"
+                " all-pairs shingle self-join is quadratic and must not run on a"
+                " full corpus — raise max_rows or use minhash_lsh_candidates (the"
+                " scale path)."
             )
-    block = [F.col(block_col).alias("blk")] if block_col is not None else []
     shingled = df.select(
         F.col(id_col).alias("doc"),
-        *block,
-        F.explode(F.array_distinct(token_ngrams(tokens(F.col(text_col)), n))).alias("sh"),
+        F.explode(F.array_distinct(token_ngrams(tokens(F.col(text_col)), 1))).alias("sh"),
     )
     sizes = shingled.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     a = shingled.alias("a")
     b = shingled.alias("b")
-    join_cond = F.col("a.sh") == F.col("b.sh")
-    if block_col is not None:
-        join_cond = join_cond & (F.col("a.blk") == F.col("b.blk"))
     inter = (
-        a.join(b, join_cond)
+        a.join(b, F.col("a.sh") == F.col("b.sh"))
         .filter(F.col("a.doc") < F.col("b.doc"))
         .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("inter_size"))
@@ -151,7 +141,7 @@ def jaccard_pairs(
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn("union_size", F.col("sz_a") + F.col("sz_b") - F.col("inter_size"))
-        .filter(min_sim_den * F.col("inter_size") >= min_sim_num * F.col("union_size"))
+        .filter(10 * F.col("inter_size") >= 7 * F.col("union_size"))
         .select("doc_a", "doc_b", "inter_size", "union_size")
     )
 
@@ -161,12 +151,11 @@ def jaccard_verify(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 1,
     min_sim_num: int = 7,
     min_sim_den: int = 10,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """Exact-Jaccard verification of CANDIDATE pairs — the stage a
+    """Exact token-Jaccard verification of CANDIDATE pairs — the stage a
     production dedup pipeline runs between LSH candidate generation
     and any destructive action (pruning, clustering). LSH banding is
     recall-tuned, so its candidate set contains false positives by
@@ -187,7 +176,7 @@ def jaccard_verify(
     ``cands`` is taken as given; see :func:`_pair_intersections` for
     why it should arrive materialized.
     """
-    pairs = _pair_intersections(cands, docs, id_col, text_col, n, checkpoint_dir)
+    pairs = _pair_intersections(cands, docs, id_col, text_col, checkpoint_dir)
     return (
         pairs.withColumn(
             "union_size",
@@ -206,7 +195,6 @@ def _pair_intersections(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    n: int,
     checkpoint_dir: str | None,
 ) -> DataFrame:
     """Shared verify substrate: each candidate pair with its exact
@@ -249,7 +237,7 @@ def _pair_intersections(
     sets = materialize(
         docs.join(pair_ids, docs[id_col] == pair_ids["doc"], "left_semi").select(
             F.col(id_col).alias("doc"),
-            F.array_distinct(token_ngrams(tokens(F.col(text_col)), n)).alias(
+            F.array_distinct(token_ngrams(tokens(F.col(text_col)), 1)).alias(
                 "shset"
             ),
         ),
@@ -287,12 +275,11 @@ def containment_verify(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 1,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact-CONTAINMENT verification of candidate pairs: keep (a, b)
     when |A∩B| ≥ 0.9·min(|A|, |B|) — i.e. the smaller document's
-    shingle set is ≥90% contained in the other.
+    token set is ≥90% contained in the other.
 
     This is the sub/superset near-dup rule Jaccard structurally
     misses: a paragraph quoted whole inside a 100× longer page has
@@ -306,7 +293,7 @@ def containment_verify(
     Empty shingle sets never pass (min size 0 ⇒ the strict ``> 0``
     size guard filters the pair), mirroring jaccard's union_size > 0.
     """
-    pairs = _pair_intersections(cands, docs, id_col, text_col, n, checkpoint_dir)
+    pairs = _pair_intersections(cands, docs, id_col, text_col, checkpoint_dir)
     return (
         pairs.withColumn(
             "min_size", F.least(F.col("size_a"), F.col("size_b"))
@@ -321,12 +308,11 @@ def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
     num_hashes: int = 64,
 ) -> DataFrame:
     """MinHash signature per document: for each of ``num_hashes``
     universal-hash permutations h_i(x) = (a_i*x + b_i) mod P over the
-    md5-derived 32-bit hash of each shingle, keep the minimum.
+    md5-derived 32-bit hash of each distinct token, keep the minimum.
 
     One explode + one groupBy — the signature computation is a single
     map-side-combinable aggregation. The base hash is crosshash.h32
@@ -337,7 +323,7 @@ def minhash_signatures(
 
     shingled = df.select(
         F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(token_ngrams(tokens(F.col(text_col)), n))).alias("sh"),
+        F.explode(F.array_distinct(token_ngrams(tokens(F.col(text_col)), 1))).alias("sh"),
     )
     base = shingled.withColumn("hx", h32(F.col("sh")) % _P)
     # each permutation as ONE parsed expression string (the litfold
@@ -382,7 +368,6 @@ def minhash_lsh_candidates(
     sigs: DataFrame,
     bands: int = 16,
     rows_per_band: int = 4,
-    max_bucket: int = 2000,
 ) -> DataFrame:
     """LSH banding over a MinHash signature DataFrame → candidate pairs.
 
@@ -390,14 +375,12 @@ def minhash_lsh_candidates(
     agreeing on any band become a candidate pair. Shuffle cost is one
     groupBy on (band, band_hash): O(docs*bands) rows.
 
-    ``max_bucket`` is the degenerate-bucket guard: a bucket of B docs
-    contributes B² pair output, so a handful of stop-buckets (boiler-
-    plate, near-empty docs, tiny shared vocab) can turn candidate
-    generation quadratic. Buckets above the cap are dropped — the
-    standard stop-bucket practice in corpus dedup — which bounds pair
-    output at O(buckets × max_bucket²) no matter how skewed the
-    corpus. Pass ``max_bucket=None`` to disable (unbounded
-    collect_list — only for corpora known to be skew-free).
+    Buckets of more than 500 docs are dropped, the degenerate-bucket
+    guard: a bucket of B docs contributes B² pair output, so a handful
+    of stop-buckets (boilerplate, near-empty docs, tiny shared vocab)
+    can turn candidate generation quadratic.  Dropping them — the
+    standard stop-bucket practice in corpus dedup — bounds pair output
+    at O(buckets × 500²) no matter how skewed the corpus.
 
     Pair generation is WITHIN-BUCKET EXPLOSION, not a banded
     self-join: a self-join would instantiate the whole
@@ -405,8 +388,7 @@ def minhash_lsh_candidates(
     common-subexpression reuse — at 100 TB that is 2× the entire
     sketch computation), whereas grouping to (band, bh) buckets
     computes signatures once and emits each bucket's sorted-id pair
-    combinations from one collect_list whose size ``max_bucket``
-    bounds.
+    combinations from one collect_list whose size the guard bounds.
     """
     # parsed expression strings (litfold rationale — see band_rows)
     def _bh(b: int) -> str:
@@ -427,9 +409,8 @@ def minhash_lsh_candidates(
         pairs.groupBy("band", "bh")
         .agg(F.array_sort(F.collect_list("doc")).alias("docs"))
         .filter(F.size("docs") >= 2)
+        .filter(F.size("docs") <= 500)
     )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("docs") <= max_bucket)
     pair_arr = F.flatten(
         F.transform(
             F.col("docs"),
@@ -455,7 +436,6 @@ def minhash_lsh_candidates(
 
 def simhash_near_dups(
     fps: DataFrame,
-    max_hamming: int = 3,
     doc_col: str = "doc",
     fp_col: str = "simhash",
 ) -> DataFrame:
@@ -465,9 +445,9 @@ def simhash_near_dups(
     least one of four 16-bit bands, so candidates come from within-
     bucket pair explosion on (band, band_value) — O(docs×4) shuffle,
     never all-pairs — then the exact Hamming filter (xor + bit_count)
-    keeps true near-dups. (For ``max_hamming`` ≥ 4 the 4-band
-    pigeonhole no longer guarantees full recall; callers wanting
-    larger radii should band narrower.)
+    keeps true near-dups. (For a radius ≥ 4 the 4-band pigeonhole no
+    longer guarantees full recall; a larger radius needs narrower
+    bands.)
 
     Like ``minhash_lsh_candidates``: one groupBy, not a banded
     self-join (which would compute the 64-sum fingerprint aggregation
@@ -547,7 +527,7 @@ def simhash_near_dups(
                     F.filter(
                         F.slice(groups, i + 2, F.size(groups)),
                         lambda gy: F.bit_count(gx["fp"].bitwiseXOR(gy["fp"]))
-                        <= max_hamming,
+                        <= 3,
                     ),
                     lambda gy: F.flatten(
                         F.transform(
@@ -572,7 +552,7 @@ def simhash_near_dups(
         buckets.select(F.explode(F.concat(same_arr, cross_arr)).alias("p"))
         .select("p.doc_a", "p.doc_b", "p.hamming")
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
     )
 
 

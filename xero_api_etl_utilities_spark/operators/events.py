@@ -1,6 +1,6 @@
-"""X5 — event-stream operators, batch form.
+"""Event-stream operators, batch form.
 
-Tumbling/hopping window aggregation, gap-based sessionization, and
+Hourly tumbling-window aggregation, gap-based sessionization, and
 keep-latest dedup over the `events` table.
 
 Scale design: every operator shuffles once on its natural key
@@ -15,20 +15,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def tumbling_agg(events: DataFrame, duration: str = "1 hour") -> DataFrame:
-    """Per (window, event_type) counts and value sums.
+def tumbling_agg(events: DataFrame) -> DataFrame:
+    """Per (hour window, event_type) event and distinct-user counts.
 
-    Uses date_trunc for hour/day durations so the result is a plain
-    timestamp column (oracle-friendly); F.window produces the same
-    bucketing for these durations.
+    The window start is a plain timestamp column (oracle-friendly);
+    F.window produces the same bucketing.
     """
-    unit = {"1 hour": "hour", "1 day": "day"}[duration]
     # NOT date_trunc: that casts TIMESTAMP_NTZ through the session
     # timezone (NTZ→LTZ→NTZ round trip shifts the value). Field
     # extraction + make_timestamp_ntz is timezone-free.
     trunc = F.make_timestamp_ntz(
         F.year("ts"), F.month("ts"), F.dayofmonth("ts"),
-        F.hour("ts") if unit == "hour" else F.lit(0), F.lit(0), F.lit(0),
+        F.hour("ts"), F.lit(0), F.lit(0),
     )
     return (
         events.groupBy(
@@ -42,9 +40,9 @@ def tumbling_agg(events: DataFrame, duration: str = "1 hour") -> DataFrame:
     )
 
 
-def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Assign gap-based session ids per user (new session when the gap
-    since the previous event exceeds ``gap_minutes``).
+    since the previous event exceeds 30 minutes).
 
     Classic gaps-and-islands: lag → boundary flag → running sum.
     Deterministic ordering tie-break on event_id.
@@ -55,16 +53,16 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     # TIMESTAMP_NTZ alike, no epoch/timezone conversion involved
     gap = F.col("ts") - prev_ts
     is_new = F.when(
-        prev_ts.isNull() | (gap > F.expr(f"INTERVAL {gap_minutes * 60} SECONDS")), 1
+        prev_ts.isNull() | (gap > F.expr("INTERVAL 1800 SECONDS")), 1
     ).otherwise(0)
     return events.withColumn(
         "session_seq", F.sum(is_new).over(w).cast("bigint")
     )
 
 
-def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def session_stats(events: DataFrame) -> DataFrame:
     """Per-session roll-up: bounds, event count, distinct types."""
-    s = sessionize(events, gap_minutes)
+    s = sessionize(events)
     return s.groupBy("user_id", "session_seq").agg(
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),

@@ -27,9 +27,8 @@ Scale design:
   label_propagation) keep the whole recurrence as ONE lazy plan
   (no per-round checkpoint job or driver round-trip);
   per-round truncation there is OPT-IN via ``checkpoint_dir`` (the
-  fault-tolerance knob), with a periodic localCheckpoint guard for
-  large ``iters`` so a deep recurrence cannot blow up Catalyst
-  analysis time;
+  fault-tolerance knob); their round counts (5 and 4) keep the nested
+  plan shallow;
 - convergence is detected by the label-sum invariant: labels only
   ever decrease, so an unchanged sum ⇔ fixpoint. The sum runs in
   DECIMAL(38,0) — a corpus of 10¹² documents with 64-bit ids would
@@ -43,14 +42,6 @@ from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.operators.materialize import materialize
 
-# Lazy-recurrence depth guard for the fixed-round operators: with
-# checkpoint_dir=None the plan nests one self-join per round and
-# Catalyst analysis cost grows super-linearly with depth, so every
-# _LAZY_ROUNDS_MAX-th intermediate round localCheckpoints.  The
-# catalog round counts (5 / 4) stay strictly below the guard, so their
-# plans are untouched.
-_LAZY_ROUNDS_MAX = 8
-
 # Endpoint columns of the co-occurrence edge lists plans/ builds
 # (``u1 < u2``, one row per undirected edge).
 _U1, _U2 = "u1", "u2"
@@ -58,13 +49,12 @@ _U1, _U2 = "u1", "u2"
 
 def connected_components(
     edges: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
     max_iters: int = 25,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """(doc, cluster_id) for every vertex appearing in ``edges``;
-    cluster_id = min vertex id of the connected component.
+    """(doc, cluster_id) for every vertex appearing in the
+    ``(doc_a, doc_b)`` pairs ``edges``; cluster_id = min vertex id of
+    the connected component.
 
     Vertices not mentioned in any edge are absent — callers wanting
     singleton rows left-join this result against their corpus and
@@ -83,8 +73,8 @@ def connected_components(
     # MinHash+LSH candidate generation feeding a dedup clustering)
     # would re-execute per round.
     sym = materialize(
-        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .union(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .distinct(),
         checkpoint_dir,
     )
@@ -198,12 +188,11 @@ def triangles(edges: DataFrame) -> DataFrame:
 
 def pagerank_int(
     edges: DataFrame,
-    iters: int = 5,
-    scale: int = 10**12,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """PageRank over an UNDIRECTED graph in pure integer arithmetic —
-    every rank is a bigint in units of ``1/scale``, so the result is
+    """Five rounds of PageRank over an UNDIRECTED graph in pure integer
+    arithmetic — every rank is a bigint in units of ``1/scale``
+    (scale = 10^12), so the result is
     deterministic, order-independent (integer sums commute exactly,
     float sums do not) and bit-reproducible in any engine: the catalog
     oracle replays the identical recurrence in DuckDB.
@@ -222,10 +211,7 @@ def pagerank_int(
     convergence probe), so the whole recurrence stays ONE lazy plan;
     per-round truncation is OPT-IN via ``checkpoint_dir`` (reliable
     storage — the knob a multi-hour 100 TB run uses to survive
-    executor loss mid-recurrence). With ``checkpoint_dir=None`` a
-    periodic localCheckpoint every ``_LAZY_ROUNDS_MAX`` rounds bounds
-    Catalyst analysis time for large ``iters`` (the nested self-join
-    plan otherwise deepens per round). ``n`` is a 1-row driver scalar
+    executor loss mid-recurrence). ``n`` is a 1-row driver scalar
     (documented pattern). Undirected edges are expanded to both
     directions, so every vertex has degree >= 1 — no dangling-mass
     term needed.
@@ -240,12 +226,13 @@ def pagerank_int(
     directed = materialize(directed, checkpoint_dir)
     deg = directed.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     n = deg.count()  # vertex count: 1-row driver scalar
+    scale = 10**12
     base = (15 * (scale // n)) // 100
     ranks = deg.select(
         F.col("src").alias("v"), F.lit(scale // n).cast("long").alias("rank")
     )
     withdeg = directed.join(deg, "src")
-    for it in range(iters):
+    for _ in range(5):
         contrib = withdeg.join(ranks, withdeg.src == ranks.v).select(
             F.col("dst"), F.expr("rank div deg").alias("c")
         )
@@ -266,14 +253,9 @@ def pagerank_int(
         # per iteration for a 5-deep lineage (measured 4.6 → 2.5 s at
         # sf0.1).  With a reliable checkpoint_dir the per-round
         # truncation is kept: that knob exists exactly so a multi-hour
-        # 100 TB run survives executor loss mid-recurrence.  With
-        # checkpoint_dir=None, deep fixed round counts still truncate
-        # every _LAZY_ROUNDS_MAX rounds (Catalyst analysis of the
-        # nested recurrence grows super-linearly).
+        # 100 TB run survives executor loss mid-recurrence.
         if checkpoint_dir is not None:
             ranks = materialize(ranks, checkpoint_dir)
-        elif (it + 1) % _LAZY_ROUNDS_MAX == 0 and (it + 1) < iters:
-            ranks = ranks.localCheckpoint()
     return ranks
 
 
@@ -300,8 +282,9 @@ def label_propagation(
     (dst, label) count aggregate + ONE per-dst argmax via ``max_by``
     — the same bounded shuffle pattern as :func:`pagerank_int`, and
     the same laziness contract: fixed rounds, one lazy plan, per-round
-    truncation opt-in via ``checkpoint_dir``, periodic localCheckpoint
-    guard for large ``iters``.  Returns ``(v, label)``."""
+    truncation opt-in via ``checkpoint_dir``.  The catalog runs 4
+    rounds; a test runs 1 to see the tie-break.  Returns
+    ``(v, label)``."""
     a, b = F.col(_U1), F.col(_U2)
     edges = materialize(edges, checkpoint_dir)
     directed = edges.select(a.alias("src"), b.alias("dst")).unionAll(
@@ -311,7 +294,7 @@ def label_propagation(
     labels = directed.select(F.col("src").alias("v")).distinct().select(
         "v", F.col("v").alias("label")
     )
-    for it in range(iters):
+    for _ in range(iters):
         msgs = directed.join(labels, directed.src == labels.v).select(
             F.col("dst"), F.col("label")
         )
@@ -324,19 +307,15 @@ def label_propagation(
         )
         # fixed rounds, no driver convergence check → lazy recurrence,
         # same rationale (and the same checkpoint_dir escape hatch for
-        # fault tolerance, plus the same large-iters analysis guard)
-        # as pagerank_int above
+        # fault tolerance) as pagerank_int above
         if checkpoint_dir is not None:
             labels = materialize(labels, checkpoint_dir)
-        elif (it + 1) % _LAZY_ROUNDS_MAX == 0 and (it + 1) < iters:
-            labels = labels.localCheckpoint()
     return labels
 
 
 def bfs_depths(
     edges: DataFrame,
     seed: int,
-    max_depth: int = 4,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Breadth-first hop distance from ``seed`` over an UNDIRECTED
@@ -345,7 +324,7 @@ def bfs_depths(
     (neighbors of the current frontier) and ONE anti-join (drop
     already-visited vertices) — both broadcast-sized once frontiers
     stabilize, lineage truncated per round.  Returns ``(v, depth)``
-    for vertices within ``max_depth`` hops; unreached vertices are
+    for vertices within 4 hops; unreached vertices are
     absent (callers count them against the vertex set).  Purely
     set-algebraic — no tie-breaks, so any engine replays it exactly."""
     a, b = F.col(_U1), F.col(_U2)
@@ -358,7 +337,7 @@ def bfs_depths(
         [(seed, 0)], "v bigint, depth int"
     )
     frontier = visited.select("v")
-    for k in range(1, max_depth + 1):
+    for k in range(1, 5):
         nxt = (
             directed.join(frontier, directed.src == frontier.v, "left_semi")
             .select(F.col("dst").alias("v"))
@@ -428,12 +407,11 @@ def kcore(
 
 def cc_large_star_small_star(
     edges: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
     max_iters: int = 15,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """Connected components by alternating Large-Star / Small-Star
+    """Connected components of the ``(u1, u2)`` edge list ``edges`` by
+    alternating Large-Star / Small-Star
     (Kiveris et al. 2014, "Connected Components in MapReduce and
     Beyond") — the O(log n)-round algorithm, vs
     :func:`connected_components`' min-label propagation which needs
@@ -466,8 +444,8 @@ def cc_large_star_small_star(
     bridged cliques, and the corpus graph)."""
     e = materialize(
         edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("lo"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("hi"),
+            F.least(F.col(_U1), F.col(_U2)).alias("lo"),
+            F.greatest(F.col(_U1), F.col(_U2)).alias("hi"),
         )
         .filter(F.col("lo") != F.col("hi"))
         .distinct(),

@@ -1,4 +1,4 @@
-"""X2 — IVF (inverted-file) approximate nearest neighbor search.
+"""IVF (inverted-file) approximate nearest neighbor search.
 
 The second scale path next to hyperplane LSH (operators/similarity.py):
 partition the corpus into k centroid cells, search only the query's
@@ -7,8 +7,7 @@ partition the corpus into k centroid cells, search only the query's
 Division of labor at 100 TB:
 - centroid TRAINING is a driver-side k-means over a bounded sample
   (centroids are tiny — k×dim floats — and k-means over a sample is
-  the standard IVF recipe; ``refine_centroids_ml`` upgrades them with
-  a full-corpus distributed pyspark.ml KMeans pass when wanted);
+  the standard IVF recipe);
 - cell ASSIGNMENT is pure column math (dot products against inlined
   centroid literals — JVM-side, codegen'd, no Python);
 - SEARCH is an equi-join on cell id: corpus cells are the shuffle
@@ -68,25 +67,22 @@ def _kmeans_unit(
 def train_centroids(
     df: DataFrame,
     k: int = 16,
-    iters: int = 5,
-    sample: int = 2000,
+    iters: int = 4,
+    sample: int = 1000,
     seed: int = 11,
 ) -> list[list[float]]:
     """Driver-side k-means over the first ``sample`` rows by ``vec_id``
     (deterministic regardless of scan/partition order — a bounded
     TakeOrdered, the FAISS-style IVF training recipe). Returns k unit
-    centroids."""
+    centroids.  The defaults are the catalog's index; tests train
+    smaller ones on small clustered fixtures."""
     rows = df.select(_ID_COL, _VEC_COL).orderBy(_ID_COL).limit(sample).collect()
     vecs = [[float(v) for v in r[1]] for r in rows]
     return _kmeans_unit(vecs, k, iters, seed)
 
 
 def train_centroids_prefix_widths(
-    df: DataFrame,
-    widths: tuple[int, ...],
-    k: int = 16,
-    iters: int = 5,
-    sample: int = 2000,
+    df: DataFrame, widths: tuple[int, ...]
 ) -> dict[int, list[list[float]]]:
     """Per-prefix-width centroids from ONE ordered-sample collect.
 
@@ -94,60 +90,28 @@ def train_centroids_prefix_widths(
     ``df.select(slice(vec, 1, d))`` per width — the sample rows are
     chosen by ``vec_id`` alone, and slicing the collected doubles
     driver-side is the same bytes as slicing in the plan — but pays a
-    single TakeOrdered job instead of ``len(widths)`` (the matryoshka
-    census re-collected the SAME sample rows once per width).  The
-    DuckDB oracle twin (wave12._trunc_cents_from_parquet) already uses
-    exactly this collect-once-slice-per-width recipe."""
-    rows = df.select(_ID_COL, _VEC_COL).orderBy(_ID_COL).limit(sample).collect()
+    single TakeOrdered job instead of ``len(widths)`` (a per-width
+    collect would read the SAME sample rows once per width).  The
+    DuckDB oracle twin (wave12._trunc_cents_from_parquet) uses exactly
+    this collect-once-slice-per-width recipe."""
+    rows = df.select(_ID_COL, _VEC_COL).orderBy(_ID_COL).limit(1000).collect()
     base = [[float(v) for v in r[1]] for r in rows]
-    return {
-        d: _kmeans_unit([v[:d] for v in base], k, iters, 11) for d in widths
-    }
+    return {d: _kmeans_unit([v[:d] for v in base], 16, 4, 11) for d in widths}
 
 
-def train_centroids_from_parquet(
-    path: str,
-    k: int = 16,
-    iters: int = 5,
-    sample: int = 2000,
-    seed: int = 11,
-) -> list[list[float]]:
-    """Sparkless twin of :func:`train_centroids` (pyarrow read, same
-    ordered sample, same k-means core) — used by the DuckDB oracle
-    generator to inline the exact centroid literals the plan uses."""
+def train_centroids_from_parquet(path: str) -> list[list[float]]:
+    """Sparkless twin of :func:`train_centroids` with its defaults
+    (pyarrow read, same ordered sample, same k-means core) — used by
+    the DuckDB oracle generators to inline the exact centroid literals
+    the plan uses."""
     import pyarrow.parquet as pq
 
     tb = pq.read_table(path, columns=[_ID_COL, _VEC_COL])
     ids = tb.column(_ID_COL).to_pylist()
     raw = tb.column(_VEC_COL).to_pylist()
-    order = sorted(range(len(ids)), key=lambda i: ids[i])[:sample]
+    order = sorted(range(len(ids)), key=lambda i: ids[i])[:1000]
     vecs = [[float(v) for v in raw[i]] for i in order]
-    return _kmeans_unit(vecs, k, iters, seed)
-
-
-def refine_centroids_ml(
-    df: DataFrame,
-    centroids: list[list[float]],
-    iters: int = 10,
-) -> list[list[float]]:
-    """Full-corpus refinement: distributed pyspark.ml KMeans seeded
-    with the sample-trained centroids (initial model via one Lloyd
-    sweep is not exposed by the API, so we pass the sample centroids'
-    k and let maxIter converge over the WHOLE corpus — the scale
-    upgrade path when the sample under-represents the distribution).
-    Output centroids are re-unit-normalized for cosine-space search."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = df.select(array_to_vector(F.col(_VEC_COL).cast("array<double>")).alias("f"))
-    km = KMeans(k=len(centroids), maxIter=iters, seed=11, featuresCol="f")
-    model = km.fit(feats)
-    out = []
-    for c in model.clusterCenters():
-        v = np.asarray(c, dtype=np.float64)
-        n = np.linalg.norm(v) or 1.0
-        out.append([float(x) for x in v / n])
-    return out
+    return _kmeans_unit(vecs, 16, 4, 11)
 
 
 def _centroid_scores(vec_col, centroids: list[list[float]]):
@@ -242,20 +206,18 @@ def range_search_ivf(
     queries: DataFrame,
     corpus: DataFrame,
     centroids: list[list[float]],
-    tau: float = 0.30,
-    nprobe: int = 2,
 ) -> DataFrame:
     """IVF RANGE search (FAISS ``range_search``): ALL candidates in
-    the query's nprobe cells with exact cosine >= ``tau`` — the
+    the query's 4 nearest cells with exact cosine >= 0.3 — the
     radius twin of :func:`topk_ivf` for callers who want "everything
     this similar", not "the 5 most similar" (dedup sweeps, recall-
     oriented retrieval).  Same candidate shape (broadcast probe
     frame -> cell equi-join, never all-pairs); the output is the
-    (query_id, neighbor_id) pair SET, engine-stable when ``tau``
-    keeps a margin above cross-engine float noise (measured
-    >= 2.2e-5 at 0.30 on every test sf)."""
+    (query_id, neighbor_id) pair SET, engine-stable because 0.3
+    keeps a margin above cross-engine float noise (measured >= 2.2e-5
+    on every test sf)."""
     # per-row norm precompute (see topk_ivf) — bit-identical scores
-    cq = assign_cells(queries, centroids, _VEC_COL, nprobe).select(
+    cq = assign_cells(queries, centroids, _VEC_COL, 4).select(
         F.col(_ID_COL).alias("query_id"),
         F.col(_VEC_COL).alias("qv"),
         _norm(F.col(_VEC_COL)).alias("_qn"),
@@ -280,7 +242,7 @@ def range_search_ivf(
             "neighbor_id",
             sim_expr.alias("sim"),
         )
-        .filter(F.col("sim") >= tau)
+        .filter(F.col("sim") >= 0.3)
         .select("query_id", "neighbor_id")
         .distinct()
         .orderBy("query_id", "neighbor_id")

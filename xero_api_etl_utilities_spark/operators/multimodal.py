@@ -1,209 +1,28 @@
-"""X4 — multimodal columns: opaque binary media + typed metadata.
+"""Multimodal columns: media as opaque ``binary`` columns.
 
-Media (image/audio/video) are opaque ``binary`` columns with a typed
-metadata struct, following the binaryFile-source pattern the reference
-uses for workbook attachments (S10, /root/reference/src/helpers.ts:74-80).
-Decode / feature-extract / resize / frame-sample run as Arrow-batched
-``mapInPandas`` stages — the Spark-side plumbing (schemas, batch
-shapes, partitioning) is real and tested. Three formats decode FOR
-REAL through pure-stdlib codecs, golden-byte tested end-to-end like
-the S2 xlsx decoder: images (PNG via zlib inflate + full filter
-reconstruction, 24-bit BMP, P6 PPM — functions/imagecodec.py), audio
-(16-bit PCM WAV RIFF walk — functions/audiocodec.py), and video
-CONTAINER METADATA (ISO-BMFF/MP4 box parse: mvhd duration/timescale,
-tkhd track dims — functions/videometa.py). Video FRAME decode is the
-one genuinely codec-bound slot (ffmpeg is not in this container by
-design): it stays a documented plug-in via ``decode_fn=``, with
-``fake_decode_features`` as the deterministic stand-in for testing
-the distributed shape with arbitrary bytes.
+Images, audio and video are carried as ``binary`` columns, following
+the binaryFile-source pattern the reference uses for workbook
+attachments (S10, src/helpers.ts:74-80), and decoded in Arrow-batched
+``mapInPandas`` stages.  Three formats decode through pure-stdlib
+codecs, golden-byte tested like the xlsx decoder: images (PNG via zlib
+inflate and full filter reconstruction, 24-bit BMP, P6 PPM —
+functions/imagecodec.py), audio (16-bit PCM WAV RIFF walk —
+functions/audiocodec.py), and video container metadata (ISO-BMFF/MP4
+box parse: mvhd duration/timescale, tkhd track dims —
+functions/videometa.py).  Video frame decode needs an external codec
+(ffmpeg), so it is a plug-in: ``sample_video_frames(decode_fn=)``.
 
-Scale notes: media rows are large — the operators avoid shuffling
-content bytes (metadata-only projections for planning; binary column
-carried only through map stages), and `maxRecordsPerBatch` bounds
-Arrow batch memory.
+Scale notes: media rows are large — the operators never shuffle
+content bytes (each stage is a projection of the media scan), and
+``maxRecordsPerBatch`` bounds Arrow batch memory.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_META = T.StructType(
-    [
-        T.StructField("media_type", T.StringType(), False),  # image|audio|video
-        T.StructField("mime_type", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-    ]
-)
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("meta", MEDIA_META, True),
-    ]
-)
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("content_sha", T.StringType(), True),
-        T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("features", T.ArrayType(T.FloatType()), True),
-    ]
-)
-
-
-def fake_decode_features(content: bytes, dim: int = 8) -> list[float]:
-    """Deterministic stand-in decoder: features derived from a sha256
-    digest of the bytes — stable across runs/executors, so the
-    distributed plumbing is fully testable without codec libraries."""
-    digest = hashlib.sha256(content or b"").digest()
-    return [int.from_bytes(digest[4 * i : 4 * i + 4], "big") / 2**32 for i in range(dim)]
-
-
-def image_decode_features(content: bytes, dim: int = 8) -> list[float]:
-    """REAL image decode path — pure-stdlib PNG (zlib inflate + full
-    filter reconstruction), 24-bit BMP, and P6 PPM decoders
-    (functions/imagecodec.py), no external imaging library. Features
-    are integer-derived (dims, channel means, luminance) so they are
-    deterministic across runs and executors. Raises ValueError on
-    bytes that aren't a supported image."""
-    from xero_api_etl_utilities_spark.functions.imagecodec import image_features
-
-    return image_features(content, dim)
-
-
-def audio_decode_features(content: bytes, dim: int = 8) -> list[float]:
-    """REAL audio decode path — pure-stdlib 16-bit PCM WAV decoder
-    (RIFF chunk walk, functions/audiocodec.py). Features are
-    integer-derived (duration, rate, per-channel RMS via isqrt) so
-    they are deterministic across runs and executors. Raises
-    ValueError on bytes that aren't a supported WAV."""
-    from xero_api_etl_utilities_spark.functions.audiocodec import audio_features
-
-    return audio_features(content, dim)
-
-
-def real_decode_features(content: bytes, dim: int = 8) -> list[float]:
-    """Decode slot for arbitrary media, sniffed from magic bytes:
-    images (PNG/BMP/PPM) and audio (PCM WAV) decode for real via the
-    stdlib codecs. Video containers genuinely require an external
-    codec (ffmpeg — not in this container by design): pass
-    ``decode_fn=<your decoder>`` to the operators for those; bytes no
-    decoder recognizes raise ValueError like any other malformed
-    input."""
-    try:
-        return image_decode_features(content, dim)
-    except ValueError:
-        pass  # not an image — try the audio decoder
-    try:
-        return audio_decode_features(content, dim)
-    except ValueError:
-        pass
-    raise ValueError(
-        "unrecognized media bytes: not a PNG/BMP/PPM image or 16-bit PCM "
-        "WAV; video (or other codecs) plug in via decode_fn=<your decoder>"
-    )
-
-
-def extract_features(media: DataFrame, dim: int = 8, decode_fn=fake_decode_features) -> DataFrame:
-    """Arrow-batched feature extraction over the binary column."""
-
-    def _extract(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content_sha": [
-                        hashlib.sha256(c or b"").hexdigest() for c in pdf["content"]
-                    ],
-                    "n_bytes": [len(c or b"") for c in pdf["content"]],
-                    "features": [decode_fn(c, dim) for c in pdf["content"]],
-                }
-            )
-            yield out
-
-    return media.mapInPandas(_extract, schema=FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("meta", MEDIA_META, True),
-    ]
-)
-
-
-def image_resize(content: bytes, width: int, height: int) -> bytes:
-    """REAL resize: stdlib decode (PNG/BMP/PPM) → nearest-neighbor
-    resample → deterministic P6 PPM re-encode (no compressor whose
-    output could drift across environments)."""
-    from xero_api_etl_utilities_spark.functions import imagecodec as ic
-
-    w, h, _c, px = ic.decode_image(content)
-    return ic.encode_ppm(width, height, ic.resize_nearest(w, h, px, width, height))
-
-
-def fake_resize(content: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in resizer: a real codec would decode,
-    scale, re-encode; the fake derives a reproducible byte payload of
-    plausible size from (bytes, target dims) so batch shapes, schema
-    and idempotence are fully testable without image libraries."""
-    digest = hashlib.sha256((content or b"") + f"{width}x{height}".encode()).digest()
-    n = max(1, (width * height) // 64)
-    return (digest * (n // len(digest) + 1))[:n]
-
-
-def resize_media(
-    media: DataFrame, width: int, height: int, resize_fn=fake_resize
-) -> DataFrame:
-    """X4 resize stage: Arrow-batched mapInPandas over the binary
-    column — content is transformed in place, metadata dims updated.
-    Same distributed shape as a real PIL/ffmpeg resize (plug one in
-    via ``resize_fn``); media rows never shuffle."""
-
-    def _resize(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": [resize_fn(c, width, height) for c in pdf["content"]],
-                    "meta": [
-                        {**(m or {}), "width": width, "height": height}
-                        for m in pdf["meta"]
-                    ],
-                }
-            )
-            yield out
-
-    return media.mapInPandas(_resize, schema=RESIZED_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling PLAN: explodes per-media sample timestamps
-    from metadata (pure column math; the frame decode itself would ride
-    the same mapInPandas slot as extract_features)."""
-    n = (F.coalesce(F.col("meta.duration_ms"), F.lit(0)) / every_ms).cast("int")
-    return media.select(
-        "media_id",
-        F.explode(F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)))).alias("frame_no"),
-    ).select(
-        "media_id", "frame_no", (F.col("frame_no") * every_ms).alias("frame_ts_ms")
-    )
-
 
 AUDIO_STATS_SCHEMA = T.StructType(
     [
@@ -396,12 +215,12 @@ def synth_ppm_media(ids: DataFrame, id_col: str, width: int = 4, height: int = 4
     return ids.mapInPandas(_gen, schema="media_id bigint, content binary")
 
 
-def decode_gray_blocks(media: DataFrame, resize_to: tuple[int, int] = (2, 2)) -> DataFrame:
+def decode_gray_blocks(media: DataFrame) -> DataFrame:
     """Integer image features through the FULL codec path: decode the
     binary column (PNG/BMP/PPM sniffed from magic bytes) → per-pixel
     integer gray ((r+g+b) div 3) → 8 contiguous-block gray sums; then
-    nearest-neighbor resize → P6 re-encode → SECOND real decode → the
-    resized pixels' grays. Every output is integer math over decoded
+    nearest-neighbor resize to 2×2 → P6 re-encode → SECOND real decode
+    → the resized pixels' grays. Every output is integer math over decoded
     bytes, so an oracle that knows the source bytes can check the
     whole decode→resize→re-encode→decode chain value-exactly.
 
@@ -412,8 +231,6 @@ def decode_gray_blocks(media: DataFrame, resize_to: tuple[int, int] = (2, 2)) ->
         encode_ppm,
         resize_nearest,
     )
-
-    new_w, new_h = resize_to
 
     def _feats(batches) -> Iterator:
         import pandas as pd
@@ -428,8 +245,8 @@ def decode_gray_blocks(media: DataFrame, resize_to: tuple[int, int] = (2, 2)) ->
                 ]
                 step = npx // 8
                 f = [sum(gray[j * step : (j + 1) * step]) for j in range(8)]
-                rpx = resize_nearest(w, h, px, new_w, new_h)
-                w2, h2, _c2, px2 = decode_image(encode_ppm(new_w, new_h, rpx))
+                rpx = resize_nearest(w, h, px, 2, 2)
+                w2, h2, _c2, px2 = decode_image(encode_ppm(2, 2, rpx))
                 g2 = [
                     (px2[3 * p] + px2[3 * p + 1] + px2[3 * p + 2]) // 3
                     for p in range(w2 * h2)
@@ -504,8 +321,7 @@ def external_frame_decode(
 ) -> bytes:
     """The honest plug-in point for REAL video frame extraction: a
     pixel decode genuinely requires an external codec (ffmpeg — not
-    in this container by design, the same boundary
-    ``real_decode_features`` documents).  Production passes
+    in this container by design).  Production passes
     ``decode_fn=<ffmpeg-backed extractor>`` to
     :func:`sample_video_frames`; everything AROUND this call —
     container parse, frame grid, batch shape, output schema — is real
@@ -534,16 +350,12 @@ def fake_frame_decode(content: bytes, ts_ms: int, width: int, height: int) -> by
     return encode_ppm(tw, th, bytes((ts_ms * 7 + i) % 256 for i in range(n)))
 
 
-def sample_video_frames(
-    media: DataFrame,
-    fps_out: int = 2,
-    decode_fn=external_frame_decode,
-) -> DataFrame:
-    """Video frame SAMPLING plumbing (X147): plan the frame grid from
-    REAL container metadata (duration/timescale/dims via the stdlib
+def sample_video_frames(media: DataFrame, decode_fn=external_frame_decode) -> DataFrame:
+    """Video frame SAMPLING plumbing: plan the frame grid from REAL
+    container metadata (duration/timescale/dims via the stdlib
     ISO-BMFF parser — the part that is honestly parseable without a
-    codec), emit one row per planned frame at ``fps_out`` frames/sec
-    (integer-ms stride), and extract each frame through the pluggable
+    codec), emit one row per planned frame at 2 frames/sec (a 500 ms
+    stride), and extract each frame through the pluggable
     ``decode_fn`` slot (default raises — see
     :func:`external_frame_decode`).
 
@@ -554,22 +366,19 @@ def sample_video_frames(
     the corpus.  Downstream ops shuffle only the (small) frame rows."""
     from xero_api_etl_utilities_spark.functions.videometa import video_meta
 
-    step = max(1000 // max(fps_out, 1), 1)
-
     def _sample(batches) -> Iterator:
         import pandas as pd
 
         for pdf in batches:
             rows = []
             for d, c in zip(pdf["media_id"], pdf["content"]):
-                # one blob copy per VIDEO, not per planned frame
-                # (bytes(c) in the frame loop was O(frames x file_size)
-                # memory churn)
+                # one blob copy per VIDEO, not per planned frame (a copy
+                # in the frame loop is O(frames x file_size) churn)
                 cb = bytes(c)
                 meta = video_meta(cb)
                 w = int(meta["width"] or 0)
                 h = int(meta["height"] or 0)
-                for idx, ts in enumerate(range(0, meta["duration_ms"], step)):
+                for idx, ts in enumerate(range(0, meta["duration_ms"], 500)):
                     rows.append(
                         [
                             int(d),

@@ -19,10 +19,7 @@ float path entirely:
 
 Scale: exact percentiles need rank-within-group, i.e. one shuffle on
 the group key and a per-group sort — the right plan for grouped
-percentiles (Spark sorts within partitions, no global sort). For
-corpus-wide percentiles at 100 TB, the scale path is
-``approx_percentiles`` (t-digest style ``percentile_approx``,
-map-side combinable); the exact form is the oracle baseline.
+percentiles (Spark sorts within partitions, no global sort).
 """
 
 from __future__ import annotations
@@ -80,21 +77,3 @@ def exact_percentiles(
             (scaled.cast("double") / F.lit(float(den * mult))).alias(alias)
         )
     return agg.select(*group_cols, *outs)
-
-
-def approx_percentiles(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str],
-    ps: list[tuple[str, float]],
-) -> DataFrame:
-    """Scale path: ``percentile_approx`` (map-side-combinable sketch,
-    no per-group sort) — for 100 TB corpora where a bounded error
-    beats a full rank shuffle. Not oracle-hashed (sketch results are
-    engine-specific by nature); pinned by tests against the exact
-    form's tolerance."""
-    aggs = [
-        F.percentile_approx(F.col(value_col), p, 10_000).alias(alias)
-        for alias, p in ps
-    ]
-    return df.groupBy(*group_cols).agg(*aggs)

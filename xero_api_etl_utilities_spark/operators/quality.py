@@ -47,12 +47,12 @@ def split_exactly_one(df: DataFrame, keys: list[str]) -> tuple[DataFrame, DataFr
     return unique, violations
 
 
-def enforce_empty(df: DataFrame, name: str = "violations") -> None:
-    """Q3 hard gate: raise if the violation set is non-empty
-    (the unverified-charges abort, src/helpers.ts:212-214)."""
+def enforce_empty(df: DataFrame) -> None:
+    """Q3 hard gate: raise if the unverified charges are non-empty
+    (the abort of src/helpers.ts:212-214)."""
     n = df.limit(1).count()
     if n > 0:
-        raise QualityGateError(f"quality gate: {name} is non-empty")
+        raise QualityGateError("quality gate: unverified charges is non-empty")
 
 
 def observed_gate(df: DataFrame, name: str, **metric_exprs):

@@ -89,11 +89,10 @@ def _kmeans_l2(vecs, k: int, iters: int, seed: int):
 def train_pq_codebooks_from_parquet(
     path: str,
     m: int = 4,
-    sample: int = 1000,
     residual_centroids: list[list[float]] | None = None,
 ) -> list[list[list[float]]]:
     """Train ``m`` per-subspace codebooks of 16 centroids each (4
-    k-means rounds, seed 7 + subspace) from the first ``sample`` rows
+    k-means rounds, seed 7 + subspace) from the first 1000 rows
     ordered by ``vec_id`` (same determinism contract as
     ivf.train_centroids_from_parquet): codebooks are tiny
     (m·16·(dim/m) floats), training is driver-side on a bounded sample
@@ -112,7 +111,7 @@ def train_pq_codebooks_from_parquet(
     tb = pq.read_table(path, columns=["vec_id", "embedding"])
     ids = tb.column("vec_id").to_pylist()
     raw = tb.column("embedding").to_pylist()
-    order = sorted(range(len(ids)), key=lambda i: ids[i])[:sample]
+    order = sorted(range(len(ids)), key=lambda i: ids[i])[:1000]
     vecs = [[float(v) for v in raw[i]] for i in order]
     if residual_centroids is not None:
         cents = residual_centroids

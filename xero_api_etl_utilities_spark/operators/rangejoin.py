@@ -9,7 +9,7 @@ trick behind Databricks' range-join hint) makes it an equi-join:
 2. each point lands in bucket ``p div W``;
 3. each interval explodes to every bucket it overlaps
    (``s div W .. e div W`` — cost O(I × span/W));
-4. equi-join on bucket (plus any caller keys), then apply the exact
+4. equi-join on bucket, then apply the exact
    ``s <= p <= e`` residual filter.
 
 Each matching (point, interval) pair meets in EXACTLY ONE bucket (the
@@ -38,15 +38,12 @@ def range_join_bucketed(
     start_col: str,
     end_col: str,
     bucket: int,
-    keys: list[str] | None = None,
 ) -> DataFrame:
     """Inner-join each point row to every interval row with
-    ``start <= point <= end`` (and equal ``keys``, if given), without
-    a nested-loop join. Output: all point columns + all interval
-    columns (keys deduplicated)."""
+    ``start <= point <= end``, without a nested-loop join. Output: all
+    point columns + all interval columns."""
     if bucket <= 0:
         raise ValueError("bucket width must be a positive integer")
-    keys = keys or []
     p = points.withColumn("_bkt", F.expr(f"{point_col} div {bucket}"))
     i = intervals.withColumn(
         "_bkt",
@@ -57,7 +54,7 @@ def range_join_bucketed(
             )
         ),
     )
-    joined = p.join(i, on=["_bkt", *keys], how="inner").filter(
+    joined = p.join(i, on=["_bkt"], how="inner").filter(
         (F.col(start_col) <= F.col(point_col))
         & (F.col(point_col) <= F.col(end_col))
     )
@@ -72,14 +69,13 @@ def interval_overlap_join_bucketed(
     right_start: str,
     right_end: str,
     bucket: int,
-    keys: list[str] | None = None,
-    extra_cond=None,
 ) -> DataFrame:
-    """Interval x interval OVERLAP join: every (l, r) pair with
-    ``[l_start, l_end] ∩ [r_start, r_end] != ∅`` (and equal ``keys``,
-    if given) — the second member of the range-join family (the first
-    joins points to intervals).  Sessions x promotions, shift x
-    outage, delivery-window collision analysis all reduce to this.
+    """Interval x interval OVERLAP SELF-join within a supplier: every
+    (l, r) pair with ``[l_start, l_end] ∩ [r_start, r_end] != ∅``, equal
+    ``supp`` and ``rid_a < rid_b`` — the second member of the range-join
+    family (the first joins points to intervals).  Sessions x
+    promotions, shift x outage, delivery-window collision analysis all
+    reduce to this.
 
     Same bucketed equi-join trick, plus the CLAIM-BUCKET dedup rule:
     both sides explode to the buckets they span, so an overlapping
@@ -90,14 +86,12 @@ def interval_overlap_join_bucketed(
     (``greatest(ls, rs) div W``): exactly-once by construction, zero
     extra shuffle.
 
-    ``extra_cond`` (a Column, optional) is applied WITH the residual
-    overlap filter — pass the caller's pair-ordering predicate (e.g.
-    ``a.rowid < b.rowid`` for a self-join) here rather than after, so
-    it prunes before anything else materializes.  Column name
-    collisions are the caller's to avoid (alias the sides)."""
+    The pair-ordering predicate ``rid_a < rid_b`` is applied WITH the
+    residual overlap filter, so it prunes before anything else
+    materializes.  Column name collisions are the caller's to avoid
+    (alias the sides)."""
     if bucket <= 0:
         raise ValueError("bucket width must be a positive integer")
-    keys = keys or []
     l = left.withColumn(
         "_bkt",
         F.explode(
@@ -123,7 +117,6 @@ def interval_overlap_join_bucketed(
             F.col("_bkt")
             == F.expr(f"greatest({left_start}, {right_start}) div {bucket}")
         )
+        & (F.col("rid_a") < F.col("rid_b"))
     )
-    if extra_cond is not None:
-        cond = cond & extra_cond
-    return l.join(r, on=["_bkt", *keys], how="inner").filter(cond).drop("_bkt")
+    return l.join(r, on=["_bkt", "supp"], how="inner").filter(cond).drop("_bkt")

@@ -110,10 +110,9 @@ def global_rank_decomposed(
     df: DataFrame,
     band_col: str,
     order_cols: list,
-    rank_name: str = "r",
     descending_bands: bool = False,
 ) -> DataFrame:
-    """Attach the global ``row_number`` rank of the total order
+    """Attach the global ``row_number`` rank ``r`` of the total order
     ``order_cols`` (list of Columns or names; must totally order the
     frame — include a unique id) WITHOUT a global window.
 
@@ -149,7 +148,7 @@ def global_rank_decomposed(
     )
     return (
         _nsjoin(local, offsets, [band_col])
-        .withColumn(rank_name, F.col("_offset") + F.col("_local_pos"))
+        .withColumn("r", F.col("_offset") + F.col("_local_pos"))
         .drop("_local_pos", "_offset")
     )
 

@@ -29,14 +29,13 @@ def _bucket(key_col, salt: str, den: int):
     return h32(F.concat_ws("|", F.lit(salt), F.col(key_col).cast("string"))) % den
 
 
-def systematic_sample(
-    df: DataFrame, key_col: str, num: int, den: int, salt: str = "sample"
-) -> DataFrame:
-    """Keep ~num/den of rows, chosen by salted key hash — deterministic
-    across engines, reruns and repartitioning."""
+def systematic_sample(df: DataFrame, key_col: str, num: int, den: int) -> DataFrame:
+    """Keep ~num/den of rows, chosen by the key hash salted with
+    ``"sample"`` — deterministic across engines, reruns and
+    repartitioning."""
     if not 0 < num <= den:
         raise ValueError(f"need 0 < num <= den, got {num}/{den}")
-    return df.filter(_bucket(key_col, salt, den) < num)
+    return df.filter(_bucket(key_col, "sample", den) < num)
 
 
 def stratified_sample(
@@ -44,7 +43,6 @@ def stratified_sample(
     key_col: str,
     stratum_col: str,
     rates: dict[str, tuple[int, int]],
-    default: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Per-stratum deterministic sampling: each stratum value gets its
     own (num, den) keep-rate — the reproducible twin of
@@ -53,17 +51,14 @@ def stratified_sample(
     rerun-instability of RNG sampling; membership stays a pure scan
     predicate.
 
-    Strata not listed in ``rates`` are dropped unless ``default`` is
-    given. The salt includes the stratum so the same key draws
-    independently in different strata.
+    Strata not listed in ``rates`` keep 1 row in 4. The salt includes
+    the stratum so the same key draws independently in different
+    strata.
     """
-    if not rates and default is None:
-        raise ValueError("stratified_sample needs at least one rate or a default")
     for stratum, (num, den) in rates.items():
         if not 0 < num <= den:
             raise ValueError(f"need 0 < num <= den for {stratum!r}, got {num}/{den}")
-    if default is not None and not 0 < default[0] <= default[1]:
-        raise ValueError(f"need 0 < num <= den for default, got {default}")
+
     def b(den: int):
         # the stratum value joins the salt, so the same key draws an
         # independent coin in each stratum (and rebalancing one
@@ -84,34 +79,23 @@ def stratified_sample(
     for stratum, (num, den) in rates.items():
         this = (F.col(stratum_col) == stratum) & (b(den) < num)
         cond = this if cond is None else cond | this
-    if default is not None:
-        num, den = default
-        if rates:
-            listed = [F.lit(s) for s in rates]
-            dcond = ~F.col(stratum_col).isin(*listed) & (b(den) < num)
-        else:
-            dcond = b(den) < num
-        cond = dcond if cond is None else cond | dcond
+    if rates:
+        listed = [F.lit(s) for s in rates]
+        dcond = ~F.col(stratum_col).isin(*listed) & (b(4) < 1)
+    else:
+        dcond = b(4) < 1
+    cond = dcond if cond is None else cond | dcond
     return df.filter(cond)
 
 
-def assign_split(
-    df: DataFrame,
-    key_col: str,
-    train_pct: int = 80,
-    val_pct: int = 10,
-) -> DataFrame:
-    """Attach a ``split`` column (train/val/test) by hash bucket out of
-    100; test gets the remainder. Disjoint and exhaustive by
+def assign_split(df: DataFrame, key_col: str) -> DataFrame:
+    """Attach a ``split`` column by hash bucket out of 100: 80 train,
+    10 val, the remaining 10 test. Disjoint and exhaustive by
     construction."""
-    if not (0 <= train_pct and 0 <= val_pct and train_pct + val_pct <= 100):
-        raise ValueError("train_pct/val_pct must be >=0 and sum to <=100")
     b = _bucket(key_col, "split", 100)
     return df.withColumn(
         "split",
-        F.when(b < train_pct, "train")
-        .when(b < train_pct + val_pct, "val")
-        .otherwise("test"),
+        F.when(b < 80, "train").when(b < 90, "val").otherwise("test"),
     )
 
 
@@ -219,7 +203,6 @@ def weighted_sample(
     key_col: str,
     weight_num,
     weight_den: int,
-    salt: str = "weighted",
 ) -> DataFrame:
     """Per-row importance sampling: keep a row with probability
     weight_num/weight_den (clamped to 1), where ``weight_num`` is a
@@ -230,10 +213,10 @@ def weighted_sample(
     decision is a pure scan predicate on the salted content hash, so
     membership survives reruns, repartitioning and engine changes.
 
-    Exact integer form: keep ⟺ h32(salt‖key) · den < num · 2³²
+    Exact integer form: keep ⟺ h32("wlen"‖key) · den < num · 2³²
     (h32 uniform on [0, 2³²); both products fit a bigint for
     den ≤ ~2²⁰), so no float rounding can disagree across engines."""
-    h = h32(F.concat_ws("|", F.lit(salt), F.col(key_col).cast("string")))
+    h = h32(F.concat_ws("|", F.lit("wlen"), F.col(key_col).cast("string")))
     return df.filter(
         h * F.lit(weight_den) < weight_num.cast("long") * F.lit(2**32)
     )

@@ -61,9 +61,7 @@ def cosine(a, b):
 def topk_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
-    id_col: str = "vec_id",
     k: int = 5,
-    max_queries: int | None = 100,
     corpus_norm_col: str | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
@@ -83,21 +81,18 @@ def topk_bruteforce(
     per query batch.
 
     Guard: this is the EXACTNESS BASELINE — a broadcast nested-loop
-    scoring every query against the whole corpus, O(Q×N). The API
-    refuses query sets above ``max_queries`` (eagerly counted — one
-    cheap job) so the cartesian shape can't silently become a default
-    route at scale; large query sets belong on ``topk_lsh`` /
-    ``topk_ivf``. ``max_queries=None`` is an explicit opt-out.
+    scoring every query against the whole corpus, O(Q×N). It refuses
+    more than 100 query vectors (eagerly counted — one cheap job) so
+    the cartesian shape can't silently become a default route at
+    scale; large query sets belong on ``topk_lsh`` / ``topk_ivf``.
     """
-    if max_queries is not None:
-        n_q = queries.count()
-        if n_q > max_queries:
-            raise ValueError(
-                f"topk_bruteforce got {n_q} query vectors (> max_queries="
-                f"{max_queries}): the exact form scores O(queries x corpus) and"
-                " must not run on a large query set — use topk_lsh/topk_ivf"
-                " (the scale paths), or pass max_queries=None to opt out."
-            )
+    n_q = queries.count()
+    if n_q > 100:
+        raise ValueError(
+            f"topk_bruteforce got {n_q} query vectors (> max_queries=100):"
+            " the exact form scores O(queries x corpus) and must not run on"
+            " a large query set — use topk_lsh/topk_ivf (the scale paths)."
+        )
     # Norms are precomputed ONCE PER ROW in each side's projection
     # (the cosine-inside-the-join form re-folds both
     # 64-element norm aggregates per PAIR — Q×N times instead of Q+N).
@@ -105,12 +100,12 @@ def topk_bruteforce(
     # same values, same den==0 guard, same division association.
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias("query_id"),
+            F.col(_ID_COL).alias("query_id"),
             F.col(_VEC_COL).alias("qv"),
             _norm(F.col(_VEC_COL)).alias("_qn"),
         )
     )
-    c_cols = [F.col(id_col).alias("neighbor_id"), F.col(_VEC_COL).alias("cv")]
+    c_cols = [F.col(_ID_COL).alias("neighbor_id"), F.col(_VEC_COL).alias("cv")]
     if corpus_norm_col is not None:
         c_cols.append(F.col(corpus_norm_col).alias("_cn"))
     else:
@@ -133,13 +128,8 @@ def topk_bruteforce(
     )
 
 
-def topk_bruteforce_pandas(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    max_queries: int | None = 100,
-) -> DataFrame:
-    """Exact top-k cosine neighbors via an Arrow-batched numpy matmul —
+def topk_bruteforce_pandas(queries: DataFrame, corpus: DataFrame) -> DataFrame:
+    """Exact top-5 cosine neighbors via an Arrow-batched numpy matmul —
     the high-dimensionality twin of :func:`topk_bruteforce`.
 
     Same contract and same results as the built-in-expression form
@@ -152,19 +142,18 @@ def topk_bruteforce_pandas(
     matmul wins by an order of magnitude — this variant exists so the
     engine has that path ready and benchmarked.
 
-    Exactness: each batch emits its own per-query top-k (global
-    top-k ⊆ union of per-batch top-k), then one window rank over the
-    ~k × batches × Q survivors picks the global answer. The corpus
-    never shuffles; the final shuffle carries only candidates.
+    Exactness: each batch emits its own per-query top-5 (global
+    top-5 ⊆ union of per-batch top-5), then one window rank over the
+    ~5 × batches × Q survivors picks the global answer. The corpus
+    never shuffles; the final shuffle carries only candidates.  The
+    same 100-query guard as :func:`topk_bruteforce` applies.
     """
-    if max_queries is not None:
-        n_q = queries.count()
-        if n_q > max_queries:
-            raise ValueError(
-                f"topk_bruteforce_pandas got {n_q} query vectors (> max_queries="
-                f"{max_queries}): the exact form scores O(queries x corpus) —"
-                " use topk_lsh/topk_ivf, or pass max_queries=None to opt out."
-            )
+    n_q = queries.count()
+    if n_q > 100:
+        raise ValueError(
+            f"topk_bruteforce_pandas got {n_q} query vectors (> max_queries=100):"
+            " the exact form scores O(queries x corpus) — use topk_lsh/topk_ivf."
+        )
     import numpy as np
 
     qrows = queries.select(_ID_COL, _VEC_COL).collect()  # bounded by the guard above
@@ -189,7 +178,7 @@ def topk_bruteforce_pandas(
             for j in range(len(qids)):
                 # top-k within the batch, ties broken by smaller id
                 # (lexsort: last key is primary)
-                order = np.lexsort((ids, -sims[:, j]))[:k]
+                order = np.lexsort((ids, -sims[:, j]))[:5]
                 keep = order[np.isfinite(sims[order, j])]
                 out_q.extend([qids[j]] * len(keep))
                 out_n.extend(ids[keep])
@@ -206,7 +195,7 @@ def topk_bruteforce_pandas(
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
     )
 
@@ -252,13 +241,12 @@ def _plane_bucket(vec_col, planes_lit, n_planes: int):
 def topk_lsh(
     queries: DataFrame,
     corpus: DataFrame,
-    k: int = 5,
     n_planes: int = 4,
     n_tables: int = 4,
-    dim: int = 64,
 ) -> DataFrame:
-    """Approximate top-k: multi-table hyperplane LSH candidate
-    generation, then exact cosine rank within the candidate union.
+    """Approximate top-5 over 64-dim vectors: multi-table hyperplane
+    LSH candidate generation, then exact cosine rank within the
+    candidate union.
 
     Single-table sign-LSH recall is (1-θ/π)^n_planes per neighbor —
     poor for moderate similarities — so candidates are unioned across
@@ -273,7 +261,7 @@ def topk_lsh(
     join never happens. Candidate SET is identical to the union of
     per-table joins, so the algorithmic oracle is unaffected.
     """
-    all_planes = [hyperplanes(n_planes, dim, seed=7 + t) for t in range(n_tables)]
+    all_planes = [hyperplanes(n_planes, 64, seed=7 + t) for t in range(n_tables)]
     # all tables' planes as ONE folded 3-level literal; per-table
     # bucket via the same left-to-right sign-bit fold as the unrolled
     # form (see _plane_bucket) — identical bucket ids, constant-size
@@ -328,6 +316,6 @@ def topk_lsh(
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
     )

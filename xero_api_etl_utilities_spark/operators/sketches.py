@@ -64,16 +64,15 @@ def cms_build(df: DataFrame, key: str, d: int = 4, w: int = 64) -> DataFrame:
     )
 
 
-def cms_estimate(
-    candidates: DataFrame, sketch: DataFrame, key: str, d: int = 4, w: int = 64
-) -> DataFrame:
+def cms_estimate(candidates: DataFrame, sketch: DataFrame, key: str) -> DataFrame:
     """Attach ``est_count`` (the CMS upper-bound estimate) to every row
-    of ``candidates``. The sketch side is broadcast (<= d·w rows by
+    of ``candidates``, read from a ``cms_build`` sketch of the default
+    4×64 shape. The sketch side is broadcast (<= 256 rows by
     construction); missing cells read as 0 via the left join."""
     keyed = candidates.select(
         F.col(key),
         F.posexplode(
-            F.array(*[_bucket(F.col(key), i, w) for i in range(d)])
+            F.array(*[_bucket(F.col(key), i, 64) for i in range(4)])
         ).alias("cms_row", "cms_bucket"),
     )
     return (

@@ -5,8 +5,8 @@ runtime, but a join against a dimension-ish right side with a handful
 of degenerate hot keys (the classic null-key/default-key hotspots —
 e.g. the "10528" store-account that dominates the reference's charge
 table) benefits from deterministic salting: the left side's hot keys
-are sharded across N salt values, the right side replicated N ways, so
-one hot key spreads over N tasks instead of pinning one.
+are sharded across 8 salt values, the right side replicated 8 ways, so
+one hot key spreads over 8 tasks instead of pinning one.
 
 Result is row-identical to a plain inner equi-join (unit-tested).
 """
@@ -21,11 +21,10 @@ def salted_inner_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    salt: int = 16,
 ) -> DataFrame:
-    """Inner equi-join on ``on`` with ``salt``-way sharding.
+    """Inner equi-join on ``on`` with 8-way sharding.
 
-    left  gets a uniform pseudo-random salt in [0, salt) derived from
+    left  gets a uniform pseudo-random salt in [0, 8) derived from
           its other columns' hash (deterministic, no rand());
     right is replicated once per salt value via explode.
 
@@ -33,12 +32,12 @@ def salted_inner_join(
     """
     left_cols = [c for c in left.columns if c != on]
     salt_expr = (
-        F.pmod(F.xxhash64(*[F.col(c) for c in left_cols]), F.lit(salt))
+        F.pmod(F.xxhash64(*[F.col(c) for c in left_cols]), F.lit(8))
         if left_cols
-        else F.pmod(F.monotonically_increasing_id(), F.lit(salt))
+        else F.pmod(F.monotonically_increasing_id(), F.lit(8))
     )
     l_salted = left.withColumn("_salt", salt_expr.cast("int"))
     r_replicated = right.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(7)))
     )
     return l_salted.join(r_replicated, on=[on, "_salt"], how="inner").drop("_salt")

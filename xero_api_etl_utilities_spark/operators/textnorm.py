@@ -80,12 +80,12 @@ def mask_pii(text: Column) -> Column:
     return F.regexp_replace(s, PHONE_PATTERN, "[PHONE]")
 
 
-def repetition_stats(text: Column, n: int = 2) -> dict[str, Column]:
-    """Within-document n-gram repetition measures.
+def repetition_stats(text: Column) -> dict[str, Column]:
+    """Within-document word-bigram repetition measures.
 
     Returns integer columns (no float ratios in hashed outputs):
-    total n-grams, distinct n-grams, the max occurrence count of any
-    single n-gram, and a ``repetitive`` gate via integer
+    total bigrams, distinct bigrams, the max occurrence count of any
+    single bigram, and a ``repetitive`` gate via integer
     cross-multiplication (duplicated fraction ≥ 30%).
 
     All higher-order array functions over the per-row token array —
@@ -95,7 +95,7 @@ def repetition_stats(text: Column, n: int = 2) -> dict[str, Column]:
     O(distinct × total) — on a small-vocabulary corpus where every
     possible n-gram occurs, that shape measured ~100× slower.)"""
     tok = tokens(text)
-    ng = token_ngrams(tok, n)
+    ng = token_ngrams(tok, 2)
     total = F.size(ng).cast("bigint")
     distinct = F.size(F.array_distinct(ng)).cast("bigint")
     zero = F.lit(0).cast("bigint")
@@ -131,10 +131,9 @@ def ngram_overlap(
     benchmark: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 8,
 ) -> DataFrame:
     """Benchmark decontamination sweep: for each training document,
-    how many distinct n-grams it shares with the benchmark set.
+    how many distinct word trigrams it shares with the benchmark set.
 
     Returns (id_col, n_shared) for documents with ≥1 shared n-gram —
     the rows a real pipeline would quarantine. The benchmark n-gram
@@ -143,21 +142,21 @@ def ngram_overlap(
     broadcast semi-join → partial count: the only shuffle carries
     (doc_id, partial_count) pairs.
 
-    ``n`` defaults to 8 (GPT-3-style 8-gram collision rule); callers
-    on small-vocabulary corpora should lower it — at 30 distinct
-    words, 8-gram collisions essentially never occur by chance.
+    Trigrams, not the GPT-3-style 8-gram collision rule: at this
+    corpus's 30 distinct words, 8-gram collisions essentially never
+    occur by chance.
     """
     bench_ngrams = (
         benchmark.select(
             F.explode(
-                F.array_distinct(token_ngrams(tokens(F.col(text_col)), n))
+                F.array_distinct(token_ngrams(tokens(F.col(text_col)), 3))
             ).alias("ng")
         )
         .distinct()
     )
     train_ngrams = train.select(
         F.col(id_col),
-        F.explode(F.array_distinct(token_ngrams(tokens(F.col(text_col)), n))).alias(
+        F.explode(F.array_distinct(token_ngrams(tokens(F.col(text_col)), 3))).alias(
             "ng"
         ),
     )

@@ -370,7 +370,7 @@ def events_first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     whole query is ONE exchange on user_id plus a final channel
     aggregation; no join — the attribution travels as a window column."""
     e = load_table(spark, sf_dir, "events")
-    s = ev.sessionize(e, gap_minutes=30)
+    s = ev.sessionize(e)
     w = Window.partitionBy("user_id", "session_seq").orderBy("ts", "event_id")
     attributed = s.withColumn("channel", F.first("event_type").over(w))
     return (
@@ -426,7 +426,7 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     the path string aggregates like any other key. Top-20 by
     (count, path) total order."""
     e = load_table(spark, sf_dir, "events")
-    s = ev.sessionize(e, gap_minutes=30)
+    s = ev.sessionize(e)
     paths = (
         s.groupBy("user_id", "session_seq")
         .agg(

@@ -285,7 +285,7 @@ def text_tf_cosine_pairs(
     max_df_bp: int = 500,
     max_df_floor: int = 256,
 ) -> DataFrame:
-    """X98: document pairs whose term-frequency vectors have cosine
+    """Document pairs whose term-frequency vectors have cosine
     >= 0.95, computed over the SPARSE vocabulary representation — the
     inverted-index twin of ``dedup_embedding_cosine`` (dense floats)
     and ``dedup_ngram_jaccard`` (sets).
@@ -298,13 +298,13 @@ def text_tf_cosine_pairs(
     Shape: tf build is one (doc, token) aggregate; the dot product is
     a posting-list self-join keyed on the TOKEN, quadratic only within
     one token's posting list.  The df guard makes that bound a
-    guarantee (the LSH stop-bucket pattern), and since r7 it is
-    RELATIVE: tokens in more than max(``max_df_floor``,
-    ``max_df_bp``/10000 of the corpus) docs are dropped before the
-    join.  An absolute cap bounds nothing as n_docs grows past it and
-    prunes nothing on a saturated vocabulary below it (r6's 100k cap
-    left this corpus's Σdf² ≈ 4.5e8 near-dense join, 128.7 s at
-    sf0.1); a relative cap bounds the join at Σdf² <= V·(5%·n)² on ANY
+    guarantee (the LSH stop-bucket pattern), and it is RELATIVE:
+    tokens in more than max(``max_df_floor``, ``max_df_bp``/10000 of
+    the corpus) docs are dropped before the join.  An absolute cap
+    bounds nothing as n_docs grows past it and prunes nothing on a
+    saturated vocabulary below it (a 100k cap left this corpus's
+    Σdf² ≈ 4.5e8 near-dense join, 128.7 s at sf0.1); a relative cap
+    bounds the join at Σdf² <= V·(5%·n)² on ANY
     vocabulary — a token present in >5% of documents carries ~no
     cosine signal per pair (it is a stopword by definition).  The
     corpus-size threshold rides a 1-row broadcast, and the guard is
@@ -314,9 +314,9 @@ def text_tf_cosine_pairs(
 
     Measured: on this corpus the cap drops the 31 saturated filler
     words (df ~ 0.78·n_docs each) and keeps the long tail of rare
-    content tokens — sf0.1 went from the r6 near-dense 128.7 s
-    (bench-excluded) to 7.4 s with 31k genuine high-cosine pairs
-    surviving; the query is now in the bench headline.  Overflow: with
+    content tokens — 7.4 s at sf0.1 with 31k genuine high-cosine pairs
+    surviving.  The two parameters exist so a test can force the cap
+    to one document and see the guard act.  Overflow: with
     near-distinct words tf ~ 1, so dot <= n2 ~ L and the hashed
     predicate 10^4·dot² stays under 2^63 until L ~ 3e7 tokens per
     document; repetitive docs (tf ~ L) trip it around L ~ 5e3 —
@@ -369,7 +369,7 @@ def text_tf_cosine_pairs(
     )
 
 
-def _tf_cosine_oracle(max_df_bp: int = 500, max_df_floor: int = 256) -> str:
+def _tf_cosine_oracle() -> str:
     # the RELATIVE df guard appears HERE too — both engines drop the
     # same hot tokens before norms/dots, so they agree at any scale
     return f"""
@@ -380,8 +380,8 @@ WITH tf0 AS (
   GROUP BY 1, 2
 ), live AS (
   SELECT tok FROM tf0 GROUP BY tok
-  HAVING count(*) <= greatest({max_df_floor},
-    (SELECT count(*) FROM documents) * {max_df_bp} // 10000)
+  HAVING count(*) <= greatest(256,
+    (SELECT count(*) FROM documents) * 500 // 10000)
 ), tf AS (
   SELECT tf0.* FROM tf0 JOIN live USING (tok)
 ), norms AS (
@@ -408,14 +408,12 @@ register("text_tf_cosine_pairs", text_tf_cosine_pairs, _tf_cosine_oracle)
 # ---------------------------------------------------------------------------
 
 
-def text_boilerplate_shingles(
-    spark: SparkSession, sf_dir: str, n: int = 3, min_df: int = 5
-) -> DataFrame:
-    """X99: per-source share of "boilerplate" shingle mass, in bp.
+def text_boilerplate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source share of "boilerplate" shingle mass, in bp.
 
     CCNet removes lines repeated across documents; this corpus has no
     line structure (single-line word streams), so the unit is the word
-    3-gram shingle: a shingle OCCURRING in >= ``min_df`` DISTINCT
+    3-gram shingle: a shingle OCCURRING in >= 5 DISTINCT
     documents is boilerplate (headers, footers, nav chrome at web
     scale).  Per source we publish total shingle occurrences, how many
     of them are boilerplate, and the share in bp — the "how much of
@@ -433,9 +431,8 @@ def text_boilerplate_shingles(
     docs = load_table(spark, sf_dir, "documents")
     # the words ARRAY must be materialized as a column BEFORE the
     # transform: an inline split() referenced from the lambda is
-    # re-evaluated per element_at — 3 regex splits per shingle, the
-    # layout_shard_moves lambda-CSE trap again (measured 7.9 s -> 1.9 s
-    # warm at sf0.1 for this one projection)
+    # re-evaluated per element_at — 3 regex splits per shingle
+    # (measured 7.9 s -> 1.9 s warm at sf0.1 for this one projection)
     wdocs = docs.select(
         "doc_id", "source", F.split(F.col("text"), " ").alias("_w")
     )
@@ -444,15 +441,15 @@ def text_boilerplate_shingles(
     def shingle(i):
         # string concatenation must be concat_ws, not `+` (Spark lowers
         # `+` to numeric Add -> DATATYPE_MISMATCH on strings)
-        return F.concat_ws(" ", *[F.element_at(words, i + k) for k in range(n)])
+        return F.concat_ws(" ", *[F.element_at(words, i + k) for k in range(3)])
 
-    # docs shorter than n words contribute ZERO shingles: the guard must
+    # docs shorter than 3 words contribute ZERO shingles: the guard must
     # be on the sequence itself — sequence(1, 0) yields the DESCENDING
     # [1, 0] (element_at(words, 0) then errors), so short docs take the
     # empty-array branch and explode() drops them, matching the oracle's
     # empty range(1, 1).
     idx = F.when(
-        F.size(words) >= n, F.sequence(F.lit(1), F.size(words) - n + 1)
+        F.size(words) >= 3, F.sequence(F.lit(1), F.size(words) - 3 + 1)
     ).otherwise(F.array().cast("array<int>"))
     occ = wdocs.select(
         "doc_id",
@@ -464,7 +461,7 @@ def text_boilerplate_shingles(
         .distinct()
         .groupBy("s")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") >= min_df)
+        .filter(F.col("df") >= 5)
         .select("s")
     )
     flagged = occ.join(
@@ -486,17 +483,17 @@ def text_boilerplate_shingles(
     )
 
 
-def _boiler_oracle(n: int = 3, min_df: int = 5) -> str:
+def _boiler_oracle() -> str:
     return f"""
 WITH toks AS (
   SELECT doc_id, source, string_split(text, ' ') AS w FROM documents
 ), occ AS (
   SELECT doc_id, source,
          w[i] || ' ' || w[i + 1] || ' ' || w[i + 2] AS s
-  FROM toks, unnest(range(1, greatest(len(w) - {n - 1}, 0) + 1)) AS t(i)
+  FROM toks, unnest(range(1, greatest(len(w) - 2, 0) + 1)) AS t(i)
 ), boiler AS (
   SELECT s FROM (SELECT DISTINCT doc_id, s FROM occ)
-  GROUP BY s HAVING count(*) >= {min_df}
+  GROUP BY s HAVING count(*) >= 5
 )
 SELECT source, count(*)::BIGINT AS n_shingles,
        count(*) FILTER (s IN (SELECT s FROM boiler))::BIGINT AS n_boiler,
@@ -516,13 +513,11 @@ register(
 # ---------------------------------------------------------------------------
 
 
-def sample_epoch_shuffle(
-    spark: SparkSession, sf_dir: str, epochs: int = 2, shards: int = 8
-) -> DataFrame:
-    """X100: reproducible training-order shuffle.  Each epoch permutes
-    the corpus by the salted content hash h = H32(epoch || ':' ||
-    doc_id); position is the rank of (h, doc_id) and shard is
-    position mod ``shards`` — the same document lands at the same
+def sample_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reproducible training-order shuffle over 2 epochs and 8 shards.
+    Each epoch permutes the corpus by the salted content hash h =
+    H32(epoch || ':' || doc_id); position is the rank of (h, doc_id)
+    and shard is position mod 8 — the same document lands at the same
     step of the same shard on any engine, any partitioning, any rerun
     (the ``operators/sampling.py`` determinism contract, extended
     from membership to ORDER).
@@ -539,7 +534,7 @@ def sample_epoch_shuffle(
     with it PROVES the decomposition reconstructs the global order.
     At 100 TB widen the bucket shift; nothing else changes."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    ep = spark.range(epochs).select(F.col("id").cast("int").alias("epoch"))
+    ep = spark.range(2).select(F.col("id").cast("int").alias("epoch"))
     base = docs.crossJoin(F.broadcast(ep)).select(
         "epoch",
         "doc_id",
@@ -576,24 +571,24 @@ def sample_epoch_shuffle(
             "epoch",
             "doc_id",
             (F.col("offset") + F.col("local_pos")).alias("pos"),
-            ((F.col("offset") + F.col("local_pos")) % shards).alias("shard"),
+            ((F.col("offset") + F.col("local_pos")) % 8).alias("shard"),
         )
         .orderBy("epoch", "pos")
     )
 
 
-def _epoch_shuffle_oracle(epochs: int = 2, shards: int = 8) -> str:
+def _epoch_shuffle_oracle() -> str:
     h = h32_sql("e.epoch || ':' || d.doc_id")
     return f"""
 WITH hashed AS (
   SELECT e.epoch, d.doc_id, {h} AS h
-  FROM documents d, (SELECT unnest(range({epochs}))::INT AS epoch) e
+  FROM documents d, (SELECT unnest(range(2))::INT AS epoch) e
 ), ranked AS (
   SELECT epoch, doc_id,
          row_number() OVER (PARTITION BY epoch ORDER BY h, doc_id) AS pos
   FROM hashed
 )
-SELECT epoch, doc_id, pos::BIGINT AS pos, (pos % {shards})::BIGINT AS shard
+SELECT epoch, doc_id, pos::BIGINT AS pos, (pos % 8)::BIGINT AS shard
 FROM ranked ORDER BY epoch, pos
 """
 
@@ -609,7 +604,7 @@ _SEMDEDUP_TAU = 0.4  # see margin note in the docstring
 
 
 def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X101: SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — the
+    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — the
     embedding-space member of the dedup family: k-means-cluster the
     corpus embeddings, then drop, WITHIN each cluster only, every
     vector that has a lower-id neighbor with cosine >= tau.  MinHash
@@ -643,7 +638,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xero_api_etl_utilities_spark.operators.similarity import _dot, _norm
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = ivf.train_centroids(emb, k=16, iters=4, sample=1000)
+    cents = ivf.train_centroids(emb)
     cellv = ivf.assign_cells(emb, cents, "embedding", 1).select(
         "vec_id", "embedding", F.col("cell").cast("int").alias("cell")
     )
@@ -713,9 +708,7 @@ def _semdedup_oracle() -> str:
     from xero_api_etl_utilities_spark.plans.sketch_oracles import _vec_lit
 
     sf_dir = oracle_sf_dir()
-    cents = train_centroids_from_parquet(
-        os.path.join(sf_dir, "embeddings.parquet"), k=16, iters=4, sample=1000
-    )
+    cents = train_centroids_from_parquet(os.path.join(sf_dir, "embeddings.parquet"))
     structs = ", ".join(
         f"{{'d': list_dot_product(v, {_vec_lit(c)}), 'cell': {i}}}"
         for i, c in enumerate(cents)
@@ -1060,7 +1053,7 @@ register("diag_quality_deciles", diag_quality_deciles, _quality_deciles_oracle)
 
 
 def diag_quality_deciles_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X109b: the 100 TB lowering of ``diag_quality_deciles`` — the
+    """The 100 TB lowering of ``diag_quality_deciles`` — the
     SAME census (hash-identical to the same oracle) with the global
     doc-grain NTILE window replaced by a distributed rank
     decomposition, the ``sample_epoch_shuffle`` pattern applied to the
@@ -1119,7 +1112,7 @@ def diag_quality_deciles_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ranked = global_rank_decomposed(
-        scored, "bucket", [F.asc("q_score"), F.asc("doc_id")], rank_name="r"
+        scored, "bucket", [F.asc("q_score"), F.asc("doc_id")]
     )
     total = scored.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     decile = ntile_closed_form(F.col("r"), F.col("n"), 10)
@@ -1143,19 +1136,17 @@ register(
 # ---------------------------------------------------------------------------
 
 
-def text_dup_span_coverage(
-    spark: SparkSession, sf_dir: str, k: int = 6
-) -> DataFrame:
-    """X110: per-source token mass covered by LONG duplicated spans.
+def text_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source token mass covered by LONG duplicated spans.
 
     "Deduplicating Training Data Makes Language Models Better" (Lee et
     al. 2022) removes exact substrings of >= 50 BPE tokens that recur
     anywhere in the corpus; the census that motivates the pass is this
     query: for each source, how many documents contain at least one
     duplicated long span, and what fraction of the source's TOKEN MASS
-    those spans cover.  Word ``k``-grams (k=6 here) stand in for the
+    those spans cover.  Word 6-grams stand in for the
     50-token threshold at toy scale.  Distinct from
-    ``text_boilerplate_shingles`` (X99 counts df>=5 3-gram
+    ``text_boilerplate_shingles`` (which counts df>=5 3-gram
     *occurrences*) in both unit and semantics: a span is duplicated
     iff it occurs in >= 2 DISTINCT documents (min(doc_id) <>
     max(doc_id) — cheaper than a count-distinct and exact for the
@@ -1187,16 +1178,16 @@ def text_dup_span_coverage(
     wdocs = docs.select(
         "doc_id", "source", F.split(F.col("text"), " ").alias("_w")
     )
-    # r15 (guide §2.4): spans feeds BOTH the dup aggregate and the
-    # semi-join — the corpus-wide posexplode + md5-64 projection
-    # executed twice per run; materialize it once
+    # spans feeds BOTH the dup aggregate and the semi-join — without
+    # a materialize the corpus-wide posexplode + md5-64 projection
+    # runs twice per query
     from xero_api_etl_utilities_spark.operators.materialize import materialize
 
     spans = materialize(
         wdocs.select(
             "doc_id",
             "source",
-            F.posexplode(token_ngrams(F.col("_w"), k)).alias("pos", "_s"),
+            F.posexplode(token_ngrams(F.col("_w"), 6)).alias("pos", "_s"),
         ).select("doc_id", "source", "pos", h64(F.col("_s")).alias("h"))
     )
     dup = (
@@ -1211,10 +1202,10 @@ def text_dup_span_coverage(
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    run_end = F.max(F.col("pos") + (k - 1)).over(prev)
+    run_end = F.max(F.col("pos") + 5).over(prev)
     newly = F.greatest(
         F.lit(0),
-        (F.col("pos") + (k - 1))
+        (F.col("pos") + 5)
         - F.greatest(F.coalesce(run_end, F.lit(-1)), F.col("pos") - 1),
     )
     per_doc = (
@@ -1250,7 +1241,7 @@ def text_dup_span_coverage(
     )
 
 
-def _dup_span_oracle(k: int = 6) -> str:
+def _dup_span_oracle() -> str:
     from xero_api_etl_utilities_spark.functions.crosshash import (
         h64_hi_sql,
         h64_lo_sql,
@@ -1263,15 +1254,15 @@ WITH toks AS (
   SELECT doc_id, source, string_split(text, ' ') AS w FROM documents
 ), raw AS (
   SELECT doc_id, source, i - 1 AS pos,
-         array_to_string(w[i:i + {k - 1}], ' ') AS s
-  FROM toks, unnest(range(1, greatest(len(w) - {k - 1}, 0) + 1)) AS t(i)
+         array_to_string(w[i:i + 5], ' ') AS s
+  FROM toks, unnest(range(1, greatest(len(w) - 5, 0) + 1)) AS t(i)
 ), spans AS (
   SELECT doc_id, source, pos, {h} AS h FROM raw
 ), dup AS (
   SELECT h FROM spans GROUP BY h HAVING min(doc_id) <> max(doc_id)
 ), cov AS (
   SELECT doc_id, source,
-    greatest(0, pos + {k - 1} - greatest(coalesce(max(pos + {k - 1}) OVER (
+    greatest(0, pos + 5 - greatest(coalesce(max(pos + 5) OVER (
       PARTITION BY doc_id ORDER BY pos
       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1),
       pos - 1)) AS c
@@ -1375,7 +1366,7 @@ def probe_knn_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 80)
-    nn = sim.topk_bruteforce(queries, emb, k=10, max_queries=100)
+    nn = sim.topk_bruteforce(queries, emb, k=10)
     return nn.localCheckpoint()
 
 

@@ -105,11 +105,11 @@ FROM d
 # --------------------------------------------------------------------------
 
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3b: within-document bigram repetition stats — the standard
+    """Within-document bigram repetition stats — the standard
     boilerplate/low-quality signal. Higher-order array functions per
     row; integer outputs only."""
     docs = load_table(spark, sf_dir, "documents")
-    st = tn.repetition_stats(F.col("text"), n=2)
+    st = tn.repetition_stats(F.col("text"))
     return docs.select(
         "doc_id",
         st["n_ngrams"].alias("n_ngrams"),
@@ -155,18 +155,17 @@ FROM documents d LEFT JOIN per p ON d.doc_id = p.doc_id
 
 
 def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3b: benchmark-contamination sweep — every 20th document plays
+    """Benchmark-contamination sweep — every 20th document plays
     the benchmark set, the rest are the training corpus; report
     training docs sharing ≥1 distinct word-trigram with the benchmark
-    and how many. Real pipelines use 8-grams (the operator's
-    default), but this corpus draws from a ~30-word vocabulary where
+    and how many. Real pipelines use 8-grams, but this corpus draws from a ~30-word vocabulary where
     8-gram collisions never occur by chance — trigrams give the
     oracle a meaningful count distribution. Benchmark n-grams are
     broadcast; the corpus side never shuffles bodies."""
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 20 == 0)
     train = docs.filter(F.col("doc_id") % 20 != 0)
-    return tn.ngram_overlap(train, bench, "doc_id", "text", n=3)
+    return tn.ngram_overlap(train, bench, "doc_id", "text")
 
 
 register(
@@ -233,7 +232,7 @@ FROM c
 
 
 def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X6 continuation: per-language deterministic rebalancing — the
+    """Per-language deterministic rebalancing — the
     dominant language downsampled (en 1/2), mid languages kept (de,
     fr 1/1), the rest defaulted to 1/4. Pure hash predicate pushed to
     the scan; same content-hash determinism story as
@@ -246,7 +245,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         rates={"en": (1, 2), "de": (1, 1), "fr": (1, 1)},
-        default=(1, 4),
     ).select("doc_id", "lang")
 
 
@@ -306,7 +304,7 @@ def minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # JIT+run than the single-row-group scan task saves at this corpus
     # size: 8.0 → 10.7 s cold A/B), so it stays on the scan's natural
     # partitioning.
-    sigs = dd.minhash_signatures(docs, "doc_id", "text", n=1, num_hashes=64)
+    sigs = dd.minhash_signatures(docs, "doc_id", "text")
     return sigs.localCheckpoint()
 
 
@@ -319,7 +317,7 @@ def lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xero_api_etl_utilities_spark.operators import dedup as dd
 
     cands = dd.minhash_lsh_candidates(
-        minhash_sigs(spark, sf_dir), bands=16, rows_per_band=4, max_bucket=500
+        minhash_sigs(spark, sf_dir), bands=16, rows_per_band=4
     )
     # The operator's pair-keyed dedup already lands the frame at
     # compute width (see minhash_lsh_candidates), so the memo
@@ -337,7 +335,7 @@ def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the memoized candidate checkpoint already sits at compute width
     # (pair-keyed exchange in minhash_lsh_candidates)
     pairs = dd.jaccard_verify(
-        lsh_candidates(spark, sf_dir), docs, "doc_id", "text", n=1
+        lsh_candidates(spark, sf_dir), docs, "doc_id", "text"
     )
     return pairs.localCheckpoint()
 
@@ -387,7 +385,7 @@ def _build_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = _verified_pairs(spark, sf_dir)  # shared, materialized once
-    comp = connected_components(pairs, "doc_a", "doc_b")
+    comp = connected_components(pairs)
     return docs.join(comp, docs["doc_id"] == comp["doc"], "left").select(
         docs["doc_id"],
         F.coalesce(comp["cluster_id"], docs["doc_id"]).alias("cluster_id"),
@@ -434,13 +432,13 @@ register("split_leakage_safe", split_leakage_safe, _split_leakage_oracle)
 # --------------------------------------------------------------------------
 
 def similarity_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2: the exact brute-force top-k again, but through the
+    """The exact brute-force top-k again, but through the
     Arrow-batched numpy-matmul path (mapInPandas) — the
     high-dimensionality strategy, verified against the same oracle as
     the built-in-expression form."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
-    return sim.topk_bruteforce_pandas(queries, emb, k=5)
+    return sim.topk_bruteforce_pandas(queries, emb)
 
 
 register("similarity_topk_pandas", similarity_topk_pandas, TOPK_EXACT_ORACLE)
@@ -855,7 +853,7 @@ def _neardup_contam_oracle() -> str:
     m, r = _NDCONTAM_MOD, _NDCONTAM_RESIDUE
     return (
         "WITH "
-        + sk.minhash_cand_ctes(bands=16, rows_per_band=4, max_bucket=500)
+        + sk.minhash_cand_ctes()
         + ",\n"
         + sk.jaccard_verify_ctes()
         + f"""
@@ -918,7 +916,7 @@ def _cluster_reps_oracle() -> str:
 
     return (
         "WITH RECURSIVE "
-        + sk.minhash_cand_ctes(bands=16, rows_per_band=4, max_bucket=500)
+        + sk.minhash_cand_ctes()
         + ",\n"
         + sk.jaccard_verify_ctes()
         + ",\n"
@@ -959,7 +957,7 @@ register(
 
 
 def decontaminate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X108: the per-document contamination VERDICT table — exact
+    """The per-document contamination VERDICT table — exact
     n-gram evidence and near-dup evidence against the SAME benchmark
     set (the doc_id % 20 == 0 slice `decontaminate_ngrams` uses),
     merged into one row per flagged training document:
@@ -977,7 +975,7 @@ def decontaminate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 20 == 0)
     train = docs.filter(F.col("doc_id") % 20 != 0)
-    exact = tn.ngram_overlap(train, bench, "doc_id", "text", n=3).select(
+    exact = tn.ngram_overlap(train, bench, "doc_id", "text").select(
         "doc_id", F.col("n_shared").alias("n_shared_ngrams")
     )
     v = _verified_pairs(spark, sf_dir)
@@ -1019,7 +1017,7 @@ def _decontam_report_oracle() -> str:
 
     return (
         "WITH "
-        + sk.minhash_cand_ctes(bands=16, rows_per_band=4, max_bucket=500)
+        + sk.minhash_cand_ctes()
         + ",\n"
         + sk.jaccard_verify_ctes()
         + """,
@@ -1115,7 +1113,7 @@ def _pair_provenance_oracle() -> str:
 
     return (
         "WITH "
-        + sk.minhash_cand_ctes(bands=16, rows_per_band=4, max_bucket=500)
+        + sk.minhash_cand_ctes()
         + ",\n"
         + sk.jaccard_verify_ctes()
         + """
@@ -1200,7 +1198,7 @@ def _savings_census_oracle() -> str:
 
     return (
         "WITH RECURSIVE "
-        + sk.minhash_cand_ctes(bands=16, rows_per_band=4, max_bucket=500)
+        + sk.minhash_cand_ctes()
         + ",\n"
         + sk.jaccard_verify_ctes()
         + ",\n"

@@ -349,7 +349,7 @@ def _self_similarity_oracle() -> str:
 
     return (
         "WITH "
-        + minhash_cand_ctes(64, 42, 16, 4, 500, "documents")
+        + minhash_cand_ctes()
         + """, occ AS (
   SELECT DISTINCT d.source, bd.band, bd.bh
   FROM banded bd JOIN documents d ON bd.doc = d.doc_id
@@ -456,7 +456,7 @@ register("split_balance_report", split_balance_report, _SPLIT_BALANCE_ORACLE)
 
 
 def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X124: the Zipf diagnostic — OLS fit of y = ilog2(freq) on
+    """The Zipf diagnostic — OLS fit of y = ilog2(freq) on
     x = ilog2(rank) over the whole token frequency table; a healthy
     natural-language corpus fits slope ~ -1, while machine-generated
     or template text bends the curve (this synthetic corpus's 31
@@ -464,16 +464,16 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     the diagnostic working as intended).
 
     Exactness: both logs are the integer ilog2 (binary-string length
-    - 1 — digit-exact on both engines, like X120), so all five OLS
+    - 1 — digit-exact on both engines), so all five OLS
     sums (n, Σx, Σy, Σxy, Σx²) are exact BIGINTs and the slope is
     published as an exact RATIONAL (slope_num, slope_den) with
     slope = slope_num/slope_den — no integer-division-of-negatives
     semantics to match across engines, no float anywhere.
 
     Scale: the frequency RANK (order by count desc, token asc) is the
-    one global total order — computed with the X109b band
-    decomposition (bucket = ilog2(cnt), within-bucket partitioned
-    row_number, broadcast prefix offsets from an inequality self-join
+    one global total order — computed with the band decomposition of
+    ``diag_quality_deciles_dist`` (bucket = ilog2(cnt), within-bucket
+    partitioned row_number, broadcast prefix offsets from an inequality self-join
     on the <= 64-row bucket histogram), so no single-partition window
     touches the vocabulary grain; the oracle uses the plain global
     row_number, proving the decomposition reconstructs the order."""
@@ -498,7 +498,6 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         vocab,
         "bucket",
         [F.desc("cnt"), F.asc("tok")],
-        rank_name="r",
         descending_bands=True,
     ).select(
         (F.length(F.bin(F.col("r"))) - 1).cast("bigint").alias("x"),

@@ -53,14 +53,14 @@ FROM documents GROUP BY sha256(text)
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X1 near-dup: exact token-set (1-gram) Jaccard pairs at
+    """Near-dup: exact token-set (1-gram) Jaccard pairs at
     threshold 0.7 over a deterministic 1-in-5 document slice (the
     all-pairs exact form exists for oracle checking; the corpus-scale
     path is dedup_minhash_lsh). The synthetic corpus shares a small
     vocabulary, so token-set Jaccard is the discriminative shingle
     choice (word-3-grams max out at 0.04 similarity here)."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    return dd.jaccard_pairs(docs, "doc_id", "text", n=1, min_sim_num=7, min_sim_den=10)
+    return dd.jaccard_pairs(docs, "doc_id", "text")
 
 
 register(
@@ -114,11 +114,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_candidates(spark, sf_dir)
 
 
-def _minhash_lsh_oracle_16x4() -> str:
-    return sk.minhash_lsh_oracle(bands=16, rows_per_band=4)
-
-
-register("dedup_minhash_lsh", dedup_minhash_lsh, _minhash_lsh_oracle_16x4)
+register("dedup_minhash_lsh", dedup_minhash_lsh, sk.minhash_lsh_oracle)
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -169,13 +165,13 @@ register("similarity_topk", similarity_topk, TOPK_EXACT_ORACLE, bounded=True)
 
 
 def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2 scale path: multi-table random-hyperplane LSH candidate
+    """Scale path: multi-table random-hyperplane LSH candidate
     generation then exact rank within candidates. Oracle re-runs the
     algorithm with the same inlined planes (margin-checked signs);
     recall vs similarity_topk is also unit-tested."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
-    return sim.topk_lsh(queries, emb, k=5, n_planes=4, n_tables=4)
+    return sim.topk_lsh(queries, emb, n_planes=4, n_tables=4)
 
 
 register("similarity_topk_lsh", similarity_topk_lsh, sk.topk_lsh_oracle)
@@ -411,7 +407,7 @@ WHERE a.vec_id % 5 = 0 AND b.vec_id % 5 = 0
 
 
 def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2 scale path #2: IVF — driver-trained centroids (bounded
+    """Scale path #2: IVF — driver-trained centroids (bounded
     ordered sample, deterministic), JVM-side cell assignment, equi-join
     candidate search. Oracle re-trains bit-identical centroids via the
     Sparkless twin and re-runs the search in SQL; recall is also
@@ -419,7 +415,7 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xero_api_etl_utilities_spark.operators import ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids = ivf.train_centroids(emb, k=16, iters=4, sample=1000)
+    centroids = ivf.train_centroids(emb)
     queries = emb.filter(F.col("vec_id") < 20)
     return ivf.topk_ivf(queries, emb, centroids, k=5, nprobe=4)
 
@@ -428,7 +424,7 @@ register("similarity_topk_ivf", similarity_topk_ivf, sk.topk_ivf_oracle)
 
 
 def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X136: radius similarity search (FAISS range_search) — every
+    """Radius similarity search (FAISS range_search) — every
     corpus vector within cosine >= 0.30 of each probe, candidates
     from nprobe=4 IVF cells: the "give me ALL near matches" member of
     the similarity family (top-k answers a different question; dedup
@@ -440,39 +436,35 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xero_api_etl_utilities_spark.operators import ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids = ivf.train_centroids(emb, k=16, iters=4, sample=1000)
+    centroids = ivf.train_centroids(emb)
     queries = emb.filter(F.col("vec_id") < 20)
-    return ivf.range_search_ivf(queries, emb, centroids, tau=0.30, nprobe=4)
+    return ivf.range_search_ivf(queries, emb, centroids)
 
 
-def _range_search_oracle() -> str:
-    return sk.range_search_ivf_oracle(tau=0.30, nprobe=4)
-
-
-register("similarity_range_search", similarity_range_search, _range_search_oracle)
+register("similarity_range_search", similarity_range_search, sk.range_search_ivf_oracle)
 
 
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X1: SimHash near-dup pairs (Hamming <= 3) via 16-bit banding —
+    """SimHash near-dup pairs (Hamming <= 3) via 16-bit banding —
     completes the SimHash path from fingerprint to pair set (oracle
     re-runs fingerprint + banding + Hamming filter in SQL)."""
     docs = load_table(spark, sf_dir, "documents")
     fps = dd.simhash64(docs, "doc_id", "text")
-    return dd.simhash_near_dups(fps, max_hamming=3)
+    return dd.simhash_near_dups(fps)
 
 
 register("dedup_simhash_pairs", dedup_simhash_pairs, sk.simhash_pairs_oracle)
 
 
 def cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2/X1 adjunct: k-means cluster id per embedding (the corpus
+    """K-means cluster id per embedding (the corpus
     side of IVF indexing, exposed as a first-class clustering query —
     partitioning a 100 TB corpus into semantic shards is pure column
     math against inlined centroids, embarrassingly parallel)."""
     from xero_api_etl_utilities_spark.operators import ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids = ivf.train_centroids(emb, k=16, iters=4, sample=1000)
+    centroids = ivf.train_centroids(emb)
     return ivf.assign_cells(emb, centroids, "embedding", nprobe=1).select(
         "vec_id", F.col("cell").cast("int").alias("cell")
     )
@@ -626,8 +618,8 @@ def pipeline_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _curation_report_oracle() -> str:
     # full-corpus candidate chain + both-survivor restriction — the
-    # r12 shared-substrate composition (see corpus_clean_oracle)
-    chain = sk.minhash_cand_ctes(bands=16, rows_per_band=4)
+    # Spark side's shared-substrate composition (see corpus_clean_oracle)
+    chain = sk.minhash_cand_ctes()
     return f"""
 WITH qdocs AS (
   SELECT doc_id, text, lang,
@@ -712,12 +704,12 @@ FROM sampled
 
 
 # ---------------------------------------------------------------------------
-# X113: IVF cell-balance diagnostic (r6)
+# IVF cell-balance diagnostic
 # ---------------------------------------------------------------------------
 
 
 def similarity_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X113: the IVF index-health census — every corpus vector assigned
+    """The IVF index-health census — every corpus vector assigned
     to its nearest cell (the same driver-trained deterministic
     centroids the search queries use), counted per cell, INCLUDING
     empty cells.  A dead cell wastes a probe; a hot cell makes every
@@ -730,17 +722,16 @@ def similarity_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: assignment is the JVM-side in-row argmax projection
     (operators/ivf.assign_cells, centroids inlined as literals — no
     join), the census is one 16-cell aggregate, and the empty-cell
-    completion joins against a k-row range frame.  Corpus-linear, one
+    completion joins against a 16-row range frame.  Corpus-linear, one
     tiny shuffle."""
     from xero_api_etl_utilities_spark.operators import ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
-    k_cells = 16
-    centroids = ivf.train_centroids(emb, k=k_cells, iters=4, sample=1000)
+    centroids = ivf.train_centroids(emb)
     assigned = ivf.assign_cells(emb, centroids, nprobe=1)
     census = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n_vecs"))
     total = emb.select(F.count(F.lit(1)).alias("_tot"))
-    cells = spark.range(k_cells).select(F.col("id").cast("int").alias("cell"))
+    cells = spark.range(16).select(F.col("id").cast("int").alias("cell"))
     return (
         cells.join(F.broadcast(census), "cell", "left")
         .crossJoin(F.broadcast(total))
@@ -750,7 +741,7 @@ def similarity_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("coalesce(n_vecs, 0) * 10000 div _tot")
             .cast("bigint")
             .alias("share_bp"),
-            F.expr(f"coalesce(n_vecs, 0) * 100 * {k_cells} div _tot")
+            F.expr("coalesce(n_vecs, 0) * 100 * 16 div _tot")
             .cast("bigint")
             .alias("load_x100"),
         )
@@ -758,7 +749,7 @@ def similarity_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_cell_balance_oracle(k_cells: int = 16) -> str:
+def _ivf_cell_balance_oracle() -> str:
     import os as _os
 
     from xero_api_etl_utilities_spark.operators.ivf import (
@@ -767,12 +758,7 @@ def _ivf_cell_balance_oracle(k_cells: int = 16) -> str:
     from xero_api_etl_utilities_spark.plans.sketch_oracles import _vec_lit
 
     sf_dir = oracle_sf_dir()
-    cents = train_centroids_from_parquet(
-        _os.path.join(sf_dir, "embeddings.parquet"),
-        k=k_cells,
-        iters=4,
-        sample=1000,
-    )
+    cents = train_centroids_from_parquet(_os.path.join(sf_dir, "embeddings.parquet"))
     structs = ", ".join(
         f"{{'d': list_dot_product(v, {_vec_lit(c)}), 'cell': {i}}}"
         for i, c in enumerate(cents)
@@ -789,8 +775,8 @@ WITH e AS (
 SELECT CAST(r.range AS INT) AS cell,
   coalesce(c.n_vecs, 0)::BIGINT AS n_vecs,
   CAST(coalesce(c.n_vecs, 0) * 10000 // t AS BIGINT) AS share_bp,
-  CAST(coalesce(c.n_vecs, 0) * 100 * {k_cells} // t AS BIGINT) AS load_x100
-FROM range({k_cells}) r LEFT JOIN census c ON c.cell = r.range
+  CAST(coalesce(c.n_vecs, 0) * 100 * 16 // t AS BIGINT) AS load_x100
+FROM range(16) r LEFT JOIN census c ON c.cell = r.range
 CROSS JOIN tot ORDER BY cell
 """
 

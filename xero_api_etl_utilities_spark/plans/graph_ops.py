@@ -243,7 +243,7 @@ def events_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     sketch = cms_build(ev, "user_id", d=_CMS_D, w=_CMS_W)
     exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_count"))
-    est = cms_estimate(exact, sketch, "user_id", d=_CMS_D, w=_CMS_W)
+    est = cms_estimate(exact, sketch, "user_id")
     return (
         exact.join(est, "user_id")
         .select("user_id", "est_count", "exact_count")
@@ -291,7 +291,7 @@ _PR_ITERS = 5
 
 
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X50: top-20 users by integer-exact PageRank over the same
+    """Top-20 users by integer-exact PageRank over the same
     co-occurrence graph as the triangle query. Five rounds of the
     equi-join + groupBy-sum recurrence (operators/graph.py:
     pagerank_int) with per-round lineage truncation — the second
@@ -301,9 +301,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical integral division, so every rank digit matches."""
     from xero_api_etl_utilities_spark.operators.graph import pagerank_int
 
-    ranks = pagerank_int(
-        co_edges(spark, sf_dir), iters=_PR_ITERS, scale=_PR_SCALE
-    )
+    ranks = pagerank_int(co_edges(spark, sf_dir))
     return (
         ranks.select(F.col("v").alias("user_id"), "rank")
         .orderBy(F.desc("rank"), F.asc("user_id"))
@@ -543,7 +541,7 @@ _LPA_ITERS = 4
 
 
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X82: top-20 communities (by size, ties to smallest label) from
+    """Top-20 communities (by size, ties to smallest label) from
     deterministic synchronous label propagation over the same
     co-occurrence graph as the triangle/pagerank/k-core family — the
     fourth iterative graph operator, and unlike connected components
@@ -555,7 +553,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-verified, not just "looks clustered"."""
     from xero_api_etl_utilities_spark.operators.graph import label_propagation
 
-    labels = label_propagation(co_edges(spark, sf_dir), iters=_LPA_ITERS)
+    labels = label_propagation(co_edges(spark, sf_dir))
     return (
         labels.groupBy(F.col("label").alias("community"))
         .agg(F.count(F.lit(1)).alias("size"))
@@ -618,7 +616,7 @@ _BFS_DEPTH = 4
 
 
 def graph_bfs_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X92: how much of the co-occurrence graph is within k hops of
+    """How much of the co-occurrence graph is within k hops of
     its best-connected user — the reachability probe (small-world
     check, blast-radius estimate) beside the other iterative graph
     operators.  Seed = the max-degree vertex, smallest id on ties (a
@@ -638,7 +636,7 @@ def graph_bfs_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed_row = (
         deg.orderBy(F.desc("deg"), F.asc("s")).limit(1).collect()[0]
     )
-    depths = bfs_depths(edges, int(seed_row["s"]), max_depth=_BFS_DEPTH)
+    depths = bfs_depths(edges, int(seed_row["s"]))
     census = depths.groupBy("depth").agg(F.count(F.lit(1)).alias("n_vertices"))
     unreached = (
         deg.select(F.col("s").alias("v"))
@@ -704,7 +702,7 @@ register("graph_bfs_depth", graph_bfs_depth, _bfs_oracle)
 
 
 def graph_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X103: component census of the user co-occurrence graph,
+    """Component census of the user co-occurrence graph,
     computed by the Large-Star / Small-Star alternation
     (operators/graph.py:cc_large_star_small_star — O(log n) rounds,
     the web-scale CC algorithm) instead of diameter-bound label
@@ -717,9 +715,7 @@ def graph_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         cc_large_star_small_star,
     )
 
-    labels = cc_large_star_small_star(
-        co_edges(spark, sf_dir), a_col="u1", b_col="u2"
-    )
+    labels = cc_large_star_small_star(co_edges(spark, sf_dir))
     return (
         labels.groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("size"))

@@ -554,23 +554,23 @@ _LSH_Q_CAP = 1000
 
 
 def dedup_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X94: recall/precision of the production MinHash-LSH
+    """Recall/precision of the production MinHash-LSH
     candidate generator against exact-Jaccard ground truth, AS A
     QUERY — "measure, don't guess" promoted from offline tooling
     (tools/lsh_sweep.py) into the hash-verified catalog, so the
     0.998-recall claim the dedup docstrings cite is re-proven by the
-    driver every round it is windowed.  Ground truth = the quadratic
+    driver every run that covers it.  Ground truth = the quadratic
     token-set Jaccard ≥ 0.7 pairs on a deterministic hash slice whose
     SIZE is capped (≤ ~_LSH_Q_CAP docs: modulus = ceil(n_docs / cap),
-    slice = doc_id % modulus == 0) — the r5 1-in-5 slice kept the
-    quadratic truth term PROPORTIONAL to the corpus (10k docs → 5·10⁷
-    pairs at sf0.1, 9.2 s; unbounded at 100 TB), while the absolute
+    slice = doc_id % modulus == 0) — a fixed 1-in-5 slice would keep
+    the quadratic truth term PROPORTIONAL to the corpus (10k docs →
+    5·10⁷ pairs at sf0.1, 9.2 s; unbounded at 100 TB), while the absolute
     cap keeps the audit O(cap²) at ANY sf.  The modulus is a 1-row
     driver scalar off a parquet count (the q11 / decay-anchor
     pattern); candidates = the SAME (16, 4) banding as
     dedup_minhash_lsh on the same slice.  The one-row verdict is
     assembled from ONE full-outer join of the two pair sets (truth /
-    candidates each computed once — r15) and conditional-summing —
+    candidates each computed once) and conditional-summing —
     never a 1-row cross join (the NLJ the audit bans).  All counts
     and bp integers."""
     from xero_api_etl_utilities_spark.operators import dedup as dd
@@ -579,17 +579,15 @@ def dedup_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = full.count()  # parquet-metadata count, not a data scan
     modulus = max(1, -(-n_docs // _LSH_Q_CAP))
     docs = full.filter(F.col("doc_id") % modulus == 0)
-    truth = dd.jaccard_pairs(
-        docs, "doc_id", "text", n=1, min_sim_num=7, min_sim_den=10
-    ).select("doc_a", "doc_b")
+    truth = dd.jaccard_pairs(docs, "doc_id", "text").select("doc_a", "doc_b")
     # slice signatures = the memoized full-corpus sketch filtered by
     # the same id predicate (per-doc pure function — identical to
-    # recomputing on the slice, with zero re-shingling; r11)
+    # recomputing on the slice, with zero re-shingling)
     from xero_api_etl_utilities_spark.plans.corpus_ops import minhash_sigs
 
     sigs = minhash_sigs(spark, sf_dir).filter(F.col("doc") % modulus == 0)
     cand = dd.minhash_lsh_candidates(
-        sigs, bands=16, rows_per_band=4, max_bucket=500
+        sigs, bands=16, rows_per_band=4
     )
     # One full-outer join on the pair key instead of the tagged union
     # + left-semi probe (guide §2.4: Spark has no cross-branch CSE, so
@@ -639,7 +637,7 @@ def _lsh_quality_oracle() -> str:
 WITH sliced AS (
   SELECT doc_id, text FROM documents WHERE doc_id % {modulus} = 0
 ),
-{minhash_cand_ctes(bands=16, rows_per_band=4, max_bucket=500, source="sliced")},
+{minhash_cand_ctes("sliced")},
 ttoks AS (
   SELECT DISTINCT doc_id AS doc, t.sh AS sh
   FROM sliced, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS t(sh)

@@ -144,7 +144,7 @@ def run_daily_import(
         # buffers are not loaded yet, back onto a fresh decode.  The
         # hard gate loads them all (it broadcasts the keys of matched).
         if strict:
-            enforce_empty(unverified, "unverified charges")  # hard gate Q3
+            enforce_empty(unverified)  # hard gate Q3
         else:
             matched.count()
     except BaseException:

@@ -795,10 +795,10 @@ FROM lineitem
 # --------------------------------------------------------------------------
 
 def events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X5: tumbling 1-hour window aggregation over the event stream
+    """Tumbling 1-hour window aggregation over the event stream
     (batch form)."""
     e = load_table(spark, sf_dir, "events")
-    return ev.tumbling_agg(e, "1 hour")
+    return ev.tumbling_agg(e)
 
 
 register(
@@ -814,10 +814,10 @@ FROM events GROUP BY 1, 2
 
 
 def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X5: gap-based sessionization (30-min inactivity gap) — per-user
+    """Gap-based sessionization (30-min inactivity gap) — per-user
     session roll-up with interval-exact gap comparison."""
     e = load_table(spark, sf_dir, "events")
-    return ev.session_stats(e, gap_minutes=30)
+    return ev.session_stats(e)
 
 
 register(

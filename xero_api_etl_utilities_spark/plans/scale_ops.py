@@ -23,10 +23,6 @@ from xero_api_etl_utilities_spark.operators.skew import salted_inner_join
 from xero_api_etl_utilities_spark.plans.catalog import register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
-# one visible knob: how many shards the hot key spreads over
-SKEW_SALT = 8
-
-
 def skewed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events slice with a deliberate degenerate hot key: ~30% of rows
     map to default uid 0 (mirroring the reference's 10528 default
@@ -40,9 +36,9 @@ def skewed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def join_skewed_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-key join, salted: the left side's degenerate key is sharded
-    ``SKEW_SALT`` ways (deterministic hash of its payload columns, no
-    rand()) and the dimension replicated once per shard, so the hot
-    key occupies SKEW_SALT tasks instead of one. The post-join rollup
+    8 ways (deterministic hash of its payload columns, no rand()) and
+    the dimension replicated once per shard, so the hot key occupies 8
+    tasks instead of one. The post-join rollup
     groups on the dimension attribute — map-side partial aggregation
     absorbs the re-concentration, so no stage sees the hot key whole.
     """
@@ -50,7 +46,7 @@ def join_skewed_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("uid"), "c_mktsegment"
     )
-    joined = salted_inner_join(left, dim, on="uid", salt=SKEW_SALT)
+    joined = salted_inner_join(left, dim, on="uid")
     return joined.groupBy(F.col("c_mktsegment").alias("segment")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
         F.countDistinct("uid").cast("bigint").alias("n_users"),

@@ -42,42 +42,23 @@ def _mask(j: int) -> str:
 
 # ---------------------------------------------------------------- minhash
 
-def minhash_lsh_oracle(
-    n_hashes: int = 64,
-    seed: int = 42,
-    bands: int = 8,
-    rows_per_band: int = 8,
-    max_bucket: int = 500,
-    source: str = "documents",
-) -> str:
+def minhash_lsh_oracle() -> str:
     """Twin of dedup_minhash_lsh: token (1-gram) shingles → md5-based
     32-bit hash mod P → 64 universal-hash minima → per-band h32 of the
-    '|'-joined slots → stop-bucket filter → candidate equi-join.
-    ``source`` is the doc relation (table or CTE name with
-    doc_id/text columns) — lets composed pipelines reuse the twin over
-    a filtered corpus."""
-    return (
-        "WITH "
-        + minhash_cand_ctes(n_hashes, seed, bands, rows_per_band, max_bucket, source)
-        + "\nSELECT doc_a, doc_b FROM cand"
-    )
+    '|'-joined slots → stop-bucket filter → candidate equi-join."""
+    return "WITH " + minhash_cand_ctes() + "\nSELECT doc_a, doc_b FROM cand"
 
 
-def band_catalog_ctes(
-    n_hashes: int = 64,
-    seed: int = 42,
-    bands: int = 8,
-    rows_per_band: int = 8,
-    source: str = "documents",
-) -> str:
+def band_catalog_ctes(source: str = "documents") -> str:
     """The MinHash → banding CTE prefix ending in
     ``banded(doc, band, bh)`` — the full-corpus band CATALOG before any
-    stop-bucket policy.  Extracted from :func:`minhash_cand_ctes` (which
+    stop-bucket policy: 64 hashes (seed 42) in 16 bands of 4 rows.
+    ``source`` is the doc relation (a table or CTE with doc_id/text
+    columns).  Kept apart from :func:`minhash_cand_ctes` (which
     composes it with the bucket guard and candidate join) so catalog-
-    maintenance oracles (wave14 X176 absorb-vs-rebuild) can census the
-    catalog itself without dragging an unreferenced ``cand`` self-join
-    into the statement."""
-    coeffs = minhash_coeffs(n_hashes, seed)
+    maintenance oracles can census the catalog itself without dragging
+    an unreferenced ``cand`` self-join into the statement."""
+    coeffs = minhash_coeffs(64, 42)
     mins = ",\n    ".join(
         f"MIN((hx * {a} + {b}) % {_P}) AS mh_{i}" for i, (a, b) in enumerate(coeffs)
     )
@@ -87,20 +68,19 @@ def band_catalog_ctes(
             h=h32_sql(
                 "concat_ws('|', "
                 + ", ".join(
-                    f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)
+                    f"mh_{b * 4 + r}" for r in range(4)
                 )
                 + ")"
             ),
         )
-        for b in range(bands)
+        for b in range(16)
     )
-    # AS MATERIALIZED (VERDICT r12 item 3): DuckDB 1.0 inlines CTEs at
-    # every reference site — ``sigs`` is referenced once PER BAND in
-    # the UNION ALL below ({bands}x), and ``toks`` again by the verify
-    # CTEs, so without the hint a composed oracle re-runs the corpus
-    # minhash pass per band per outer reference (the r12 full gate
-    # measured pipeline_curation_report at ~55 min of pure DuckDB time
-    # from exactly this).  Results are byte-identical; only the
+    # AS MATERIALIZED: DuckDB 1.0 inlines CTEs at every reference site —
+    # ``sigs`` is referenced once PER BAND in the UNION ALL below, and
+    # ``toks`` again by the verify CTEs, so without the hint a composed
+    # oracle re-runs the corpus minhash pass per band per outer
+    # reference (about 55 min of DuckDB time for
+    # pipeline_curation_report).  Results are byte-identical; only the
     # evaluation count changes.
     return f"""toks AS MATERIALIZED (
   SELECT DISTINCT doc_id AS doc, t.sh AS sh
@@ -117,19 +97,13 @@ def band_catalog_ctes(
 )"""
 
 
-def minhash_cand_ctes(
-    n_hashes: int = 64,
-    seed: int = 42,
-    bands: int = 8,
-    rows_per_band: int = 8,
-    max_bucket: int = 500,
-    source: str = "documents",
-) -> str:
+def minhash_cand_ctes(source: str = "documents") -> str:
     """The MinHash+LSH CTE chain ending in ``cand(doc_a, doc_b)`` —
+    :func:`band_catalog_ctes`, buckets over 500 docs dropped —
     composable into larger oracle statements."""
-    return f"""{band_catalog_ctes(n_hashes, seed, bands, rows_per_band, source)}, lshkept AS MATERIALIZED (
+    return f"""{band_catalog_ctes(source)}, lshkept AS MATERIALIZED (
   SELECT doc, band, bh FROM banded
-  QUALIFY COUNT(*) OVER (PARTITION BY band, bh) <= {max_bucket}
+  QUALIFY COUNT(*) OVER (PARTITION BY band, bh) <= 500
 ), cand AS MATERIALIZED (
   SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
   FROM lshkept a
@@ -161,9 +135,9 @@ def jaccard_verify_ctes(min_sim_num: int = 7, min_sim_den: int = 10) -> str:
 )"""
 
 
-def containment_verify_ctes(min_cont_num: int = 9, min_cont_den: int = 10) -> str:
+def containment_verify_ctes() -> str:
     """Exact-containment verification of the ``cand`` pairs — the
-    sub/superset near-dup rule: |A∩B| ≥ τ·min(|A|,|B|). Reuses the
+    sub/superset near-dup rule: |A∩B| ≥ 0.9·min(|A|,|B|). Reuses the
     chain's ``toks`` CTE; ends in
     ``contained(doc_a, doc_b, inter_size, min_size)``. Twin of
     operators/dedup.containment_verify."""
@@ -183,35 +157,31 @@ def containment_verify_ctes(min_cont_num: int = 9, min_cont_den: int = 10) -> st
   JOIN csz sa ON sa.doc = v.doc_a
   JOIN csz sb ON sb.doc = v.doc_b
   WHERE LEAST(sa.sz, sb.sz) > 0
-    AND {min_cont_den} * v.inter_size >= {min_cont_num} * LEAST(sa.sz, sb.sz)
+    AND 10 * v.inter_size >= 9 * LEAST(sa.sz, sb.sz)
 )"""
 
 
-def containment_pairs_oracle(
-    bands: int = 16, rows_per_band: int = 4, max_bucket: int = 500
-) -> str:
+def containment_pairs_oracle() -> str:
     """Twin of dedup_containment: the same recall-tuned LSH candidate
     chain as dedup_verified_pairs, closed with the containment rule
     instead of Jaccard."""
     return (
         "WITH "
-        + minhash_cand_ctes(bands=bands, rows_per_band=rows_per_band, max_bucket=max_bucket)
+        + minhash_cand_ctes()
         + ",\n"
         + containment_verify_ctes()
         + "\nSELECT doc_a, doc_b, inter_size, min_size FROM contained"
     )
 
 
-def verified_pairs_oracle(
-    bands: int = 16, rows_per_band: int = 4, max_bucket: int = 500
-) -> str:
+def verified_pairs_oracle() -> str:
     """Twin of dedup_verified_pairs: recall-tuned LSH candidates
     ((1/16)^(1/4) = 0.5 band threshold, measured 0.998 recall at the
     0.7 dedup target — tools/lsh_sweep.py) then exact-Jaccard
     verification."""
     return (
         "WITH "
-        + minhash_cand_ctes(bands=bands, rows_per_band=rows_per_band, max_bucket=max_bucket)
+        + minhash_cand_ctes()
         + ",\n"
         + jaccard_verify_ctes()
         + "\nSELECT doc_a, doc_b, inter_size, union_size FROM verified"
@@ -220,7 +190,7 @@ def verified_pairs_oracle(
 
 # ---------------------------------------------------------------- simhash
 
-def _simhash_ctes(table: str = "documents") -> str:
+def _simhash_ctes() -> str:
     """Shared CTE chain ending in fps(doc, fp): md5-derived 64-bit
     token hash (signed, via HUGEINT two's complement), 64 conditional
     bit sums, fingerprint assembly by OR of per-bit masks."""
@@ -234,7 +204,7 @@ def _simhash_ctes(table: str = "documents") -> str:
     return f"""
 WITH toks AS (
   SELECT DISTINCT doc_id AS doc, t.tok AS tok
-  FROM {table}, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS t(tok)
+  FROM documents, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS t(tok)
 ), hpair AS (
   SELECT doc,
     CAST('0x' || substr(md5(tok), 1, 8) AS UBIGINT) AS hi,
@@ -262,7 +232,7 @@ def simhash_oracle() -> str:
     return _simhash_ctes() + "\nSELECT doc, fp AS simhash FROM fps"
 
 
-def simhash_pairs_oracle(max_hamming: int = 3, max_bucket: int = 2000) -> str:
+def simhash_pairs_oracle() -> str:
     """Twin of dedup_simhash_pairs: 16-bit banding (logical shift +
     mask — identical low bits whether the engine's >> sign-extends or
     not), stop-bucket guard, pair equi-join per band, exact
@@ -273,14 +243,14 @@ def simhash_pairs_oracle(max_hamming: int = 3, max_bucket: int = 2000) -> str:
 banded AS (
   SELECT doc, fp, b.band AS band, (fp >> (16 * b.band)) & 65535 AS bv
   FROM fps, (VALUES (0), (1), (2), (3)) b(band)
-  QUALIFY COUNT(*) OVER (PARTITION BY b.band, (fp >> (16 * b.band)) & 65535) <= {max_bucket}
+  QUALIFY COUNT(*) OVER (PARTITION BY b.band, (fp >> (16 * b.band)) & 65535) <= 2000
 )
 SELECT doc_a, doc_b, hamming FROM (
   SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b,
          CAST(bit_count(xor(a.fp, b.fp)) AS INT) AS hamming
   FROM banded a
   JOIN banded b ON a.band = b.band AND a.bv = b.bv AND a.doc < b.doc
-) WHERE hamming <= {max_hamming}
+) WHERE hamming <= 3
 """
     )
 
@@ -291,15 +261,13 @@ def _vec_lit(v: list[float]) -> str:
     return "[" + ", ".join(repr(x) for x in v) + "]"
 
 
-def topk_lsh_oracle(
-    k: int = 5, n_planes: int = 4, n_tables: int = 4, dim: int = 64
-) -> str:
+def topk_lsh_oracle() -> str:
     """Twin of similarity_topk_lsh: per-table sign-bit bucket ids from
     the SAME inlined hyperplanes, candidate equi-joins unioned across
     tables, exact cosine rank within the candidate set."""
     table_selects = []
-    for t in range(n_tables):
-        planes = hyperplanes(n_planes, dim, seed=7 + t)
+    for t in range(4):
+        planes = hyperplanes(4, 64, seed=7 + t)
         bucket = " + ".join(
             f"(CASE WHEN list_dot_product(v, {_vec_lit(p)}) >= 0"
             f" THEN {1 << i} ELSE 0 END)"
@@ -331,11 +299,11 @@ WITH e AS (
   FROM scored
 )
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {k}
+FROM ranked WHERE rank <= 5
 """
 
 
-def topk_ivf_oracle(k: int = 5, nprobe: int = 4) -> str:
+def topk_ivf_oracle() -> str:
     """Twin of similarity_topk_ivf. Centroids are re-trained by the
     Sparkless twin (pyarrow read ordered by vec_id + the same numpy
     k-means core) from the parquet the driver's gate runs against
@@ -346,9 +314,7 @@ def topk_ivf_oracle(k: int = 5, nprobe: int = 4) -> str:
     from xero_api_etl_utilities_spark.operators.ivf import train_centroids_from_parquet
 
     sf_dir = oracle_sf_dir()
-    cents = train_centroids_from_parquet(
-        os.path.join(sf_dir, "embeddings.parquet"), k=16, iters=4, sample=1000
-    )
+    cents = train_centroids_from_parquet(os.path.join(sf_dir, "embeddings.parquet"))
     structs = ", ".join(
         f"{{'d': list_dot_product(v, {_vec_lit(c)}), 'cell': {i}}}"
         for i, c in enumerate(cents)
@@ -360,7 +326,7 @@ WITH e AS (
 ), corpus AS (
   SELECT vec_id, v, ({cells})[1] AS cell FROM e
 ), probes AS (
-  SELECT vec_id, UNNEST(({cells})[1:{nprobe}]) AS cell
+  SELECT vec_id, UNNEST(({cells})[1:4]) AS cell
   FROM e WHERE vec_id < 20
 ), scored AS (
   SELECT DISTINCT p.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -375,21 +341,19 @@ WITH e AS (
   FROM scored
 )
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {k}
+FROM ranked WHERE rank <= 5
 """
 
 
-def range_search_ivf_oracle(tau: float = 0.30, nprobe: int = 4) -> str:
+def range_search_ivf_oracle() -> str:
     """Twin of similarity_range_search: same bit-identical centroid
     literals and cell chain as :func:`topk_ivf_oracle`, but the
-    verdict is the cosine-radius SET (s >= tau) instead of a rank cut
-    — tau margin measured >= 2.2e-5 on every test sf."""
+    verdict is the cosine-radius SET (s >= 0.3) instead of a rank cut
+    — the 0.3 margin measured >= 2.2e-5 on every test sf."""
     from xero_api_etl_utilities_spark.operators.ivf import train_centroids_from_parquet
 
     sf_dir = oracle_sf_dir()
-    cents = train_centroids_from_parquet(
-        os.path.join(sf_dir, "embeddings.parquet"), k=16, iters=4, sample=1000
-    )
+    cents = train_centroids_from_parquet(os.path.join(sf_dir, "embeddings.parquet"))
     structs = ", ".join(
         f"{{'d': list_dot_product(v, {_vec_lit(c)}), 'cell': {i}}}"
         for i, c in enumerate(cents)
@@ -401,14 +365,14 @@ WITH e AS (
 ), corpus AS (
   SELECT vec_id, v, ({cells})[1] AS cell FROM e
 ), probes AS (
-  SELECT vec_id, UNNEST(({cells})[1:{nprobe}]) AS cell
+  SELECT vec_id, UNNEST(({cells})[1:4]) AS cell
   FROM e WHERE vec_id < 20
 )
 SELECT DISTINCT p.vec_id AS query_id, c.vec_id AS neighbor_id
 FROM probes p
 JOIN corpus c ON c.cell = p.cell AND c.vec_id <> p.vec_id
 JOIN e eq ON eq.vec_id = p.vec_id
-WHERE list_cosine_similarity(eq.v, c.v) >= {tau!r}
+WHERE list_cosine_similarity(eq.v, c.v) >= 0.3
 ORDER BY query_id, neighbor_id
 """
 
@@ -419,9 +383,7 @@ def cluster_assign_oracle() -> str:
     from xero_api_etl_utilities_spark.operators.ivf import train_centroids_from_parquet
 
     sf_dir = oracle_sf_dir()
-    cents = train_centroids_from_parquet(
-        os.path.join(sf_dir, "embeddings.parquet"), k=16, iters=4, sample=1000
-    )
+    cents = train_centroids_from_parquet(os.path.join(sf_dir, "embeddings.parquet"))
     structs = ", ".join(
         f"{{'d': list_dot_product(v, {_vec_lit(c)}), 'cell': {i}}}"
         for i, c in enumerate(cents)
@@ -447,12 +409,12 @@ def corpus_clean_oracle() -> str:
     raw candidates — pruning on candidates would drop ~45% false
     positives' worth of good documents.
 
-    r12: the pair set is the FULL-CORPUS verified-pair chain
-    restricted to both-survivor pairs — the exact composition the
-    Spark side runs now that the pipeline rides the shared
-    _verified_pairs substrate (one LSH+verify per session) instead of
-    rebuilding candidates over survivor signatures."""
-    chain = minhash_cand_ctes(bands=16, rows_per_band=4)
+    The pair set is the FULL-CORPUS verified-pair chain restricted to
+    both-survivor pairs — the exact composition the Spark side runs,
+    where the pipeline rides the shared _verified_pairs substrate (one
+    LSH+verify per session) instead of rebuilding candidates over
+    survivor signatures."""
+    chain = minhash_cand_ctes()
     return f"""
 WITH qdocs AS (
   SELECT doc_id, text, lang,
@@ -485,12 +447,11 @@ WHERE d.doc_b IS NULL
 """
 
 
-def cc_ctes(pairs: str = "verified") -> str:
-    """Connected components over ``{pairs}(doc_a, doc_b)`` — the
-    shared CTE chain every dedup-cluster oracle composes (VERDICT r13
-    item 1: six oracles each replayed min-label propagation as a bare
-    recursive CTE; on sf0.1's ~900k verified pairs the recursion's
-    working-set x edges join exploded to 500-1500 s PER ORACLE).
+def cc_ctes() -> str:
+    """Connected components over ``verified(doc_a, doc_b)`` — the
+    shared CTE chain every dedup-cluster oracle composes (a bare
+    recursive min-label CTE over sf0.1's ~900k verified pairs blows
+    its working-set x edges join up to 500-1500 s per oracle).
 
     Shape: two unrolled star-contraction rounds, then the recursive
     min-label fixpoint on the tiny residual graph.  Each contraction
@@ -511,9 +472,9 @@ def cc_ctes(pairs: str = "verified") -> str:
     COALESCE(cluster_id, doc_id) to label singletons.  Must be
     spliced into a ``WITH RECURSIVE`` statement."""
     return f"""cc_e0 AS MATERIALIZED (
-  SELECT doc_a AS src, doc_b AS dst FROM {pairs}
+  SELECT doc_a AS src, doc_b AS dst FROM verified
   UNION
-  SELECT doc_b AS src, doc_a AS dst FROM {pairs}
+  SELECT doc_b AS src, doc_a AS dst FROM verified
 ), cc_m1 AS MATERIALIZED (
   SELECT src AS doc, LEAST(src, MIN(dst)) AS lbl FROM cc_e0 GROUP BY src
 ), cc_e1 AS MATERIALIZED (
@@ -556,9 +517,7 @@ def dedup_clusters_oracle() -> str:
     chain (star contraction + residual recursive min-label fixpoint —
     the same minimum the Spark operator's label propagation reaches).
     Singletons keep their own id via the documents LEFT JOIN."""
-    chain = minhash_cand_ctes(
-        n_hashes=64, seed=42, bands=16, rows_per_band=4, max_bucket=500
-    )
+    chain = minhash_cand_ctes()
     return f"""
 WITH RECURSIVE {chain},
 {jaccard_verify_ctes()},
@@ -573,9 +532,7 @@ def split_leakage_safe_oracle() -> str:
     the same crosshash-h32 md5 form as sample_split_assign's oracle,
     keyed by cluster so every member of a near-dup component lands in
     the same split."""
-    chain = minhash_cand_ctes(
-        n_hashes=64, seed=42, bands=16, rows_per_band=4, max_bucket=500
-    )
+    chain = minhash_cand_ctes()
     return f"""
 WITH RECURSIVE {chain},
 {jaccard_verify_ctes()},

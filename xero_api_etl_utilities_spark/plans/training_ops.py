@@ -38,7 +38,7 @@ from xero_api_etl_utilities_spark.sources.parquet import load_table
 # --------------------------------------------------------------- containment
 
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X1 completion: containment-verified near-dup pairs — keep
+    """Containment-verified near-dup pairs — keep
     (a, b) when the smaller shingle set is ≥90% inside the other.
     Shares the materialized LSH candidate frame with
     dedup_verified_pairs / dedup_clusters (corpus_ops.lsh_candidates):
@@ -49,7 +49,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     cands = corpus_ops.lsh_candidates(spark, sf_dir)
-    return dd.containment_verify(cands, docs, "doc_id", "text", n=1)
+    return dd.containment_verify(cands, docs, "doc_id", "text")
 
 
 def _containment_oracle() -> str:
@@ -242,7 +242,7 @@ FROM a JOIN m USING (user_id)
 # ------------------------------------------------------ multimodal decode
 
 def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4 made driver-visible: deterministic 4×4 P6 PPM bytes per
+    """Image decode made driver-visible: deterministic 4×4 P6 PPM bytes per
     doc_id (operators/multimodal.synth_ppm_media — the binary-source
     stand-in, since the driver testdata ships no media column) pushed
     through the REAL stdlib codec chain: decode → integer gray block
@@ -254,7 +254,7 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     media = mm.synth_ppm_media(docs, "doc_id", width=4, height=4)
-    return mm.decode_gray_blocks(media, resize_to=(2, 2))
+    return mm.decode_gray_blocks(media)
 
 
 def _gray_sql(p: int) -> str:
@@ -631,7 +631,6 @@ def sample_weighted_by_length(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_col="doc_id",
         weight_num=F.least(F.col("n_chars"), F.lit(800)),
         weight_den=1600,
-        salt="wlen",
     )
     return kept.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_kept"),
@@ -668,7 +667,7 @@ def _pq_index(spark: SparkSession, sf_dir: str):
     from xero_api_etl_utilities_spark.operators import ivf
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = ivf.train_centroids(emb, k=16, iters=4, sample=1000)
+    cents = ivf.train_centroids(emb)
     books = train_pq_codebooks_from_parquet(
         _os.path.join(sf_dir, "embeddings.parquet")
     )
@@ -781,9 +780,7 @@ def _ivfpq_oracle_sql(rerank: int | None) -> str:
     from xero_api_etl_utilities_spark.plans.sketch_oracles import _vec_lit
 
     sf_dir = oracle_sf_dir()
-    cents = train_centroids_from_parquet(
-        _os.path.join(sf_dir, "embeddings.parquet"), k=16, iters=4, sample=1000
-    )
+    cents = train_centroids_from_parquet(_os.path.join(sf_dir, "embeddings.parquet"))
     books = train_pq_codebooks_from_parquet(
         _os.path.join(sf_dir, "embeddings.parquet")
     )
@@ -992,9 +989,9 @@ register("multimodal_audio_vad", multimodal_audio_vad, _AUDIO_VAD_ORACLE)
 
 
 def similarity_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X132: ANN quality AS A QUERY — recall@5 of the production
+    """ANN quality AS A QUERY — recall@5 of the production
     IVF-PQ + exact-rerank search against the brute-force cosine truth
-    over the same probe set, driver-hash-verified: the X94 pattern
+    over the same probe set, driver-hash-verified: the dedup_lsh_quality pattern
     (LSH recall/precision promoted into the catalog) applied to the
     similarity family, so the index's headline quality number is
     continuously verified instead of living only in
@@ -1016,7 +1013,7 @@ def similarity_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries, emb, centroids, books, k=5, nprobe=4, corpus_index=index,
         rerank=50,
     ).select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
-    truth = sim.topk_bruteforce(queries, emb, k=5, max_queries=100).select(
+    truth = sim.topk_bruteforce(queries, emb, k=5).select(
         "query_id", "neighbor_id"
     )
     return (
@@ -1519,7 +1516,7 @@ ORDER BY d
 
 
 def multimodal_ahash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X104: IMAGE near-dup pairs — the multimodal member of the dedup
+    """IMAGE near-dup pairs — the multimodal member of the dedup
     family: deterministic 8x8 P6 PPM bytes per doc_id (the same
     synth-media stand-in as multimodal_decode_features, pixel byte i
     of image d = (d*31 + i) % 256) pushed through the REAL stdlib
@@ -1541,9 +1538,7 @@ def multimodal_ahash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = mm.synth_ppm_media(docs, "doc_id", width=8, height=8)
     fps = mm.ahash64(media)
     return (
-        dd.simhash_near_dups(
-            fps, max_hamming=3, doc_col="media_id", fp_col="ahash"
-        )
+        dd.simhash_near_dups(fps, doc_col="media_id", fp_col="ahash")
         .orderBy("doc_a", "doc_b")
     )
 

@@ -363,8 +363,8 @@ def _prune_stale_runs(path: str, sf_dir: str) -> None:
 
 
 def publish_corpus(spark: SparkSession, sf_dir: str) -> str:
-    """X155 write half: span-dedup emit (X146) → drop fully-removed
-    docs → fixed-budget pack per source shard (X14) → source-
+    """Write half of the corpus publish: span-dedup emit → drop
+    fully-removed docs → fixed-budget pack per source shard → source-
     partitioned parquet shards (sources/writer.py).  Returns the
     artifact path.
 
@@ -388,7 +388,7 @@ def publish_corpus(spark: SparkSession, sf_dir: str) -> str:
         sf_dir, run_suffix=spark.sparkContext.applicationId
     )
     _prune_stale_runs(path, sf_dir)
-    write_partitioned(artifact, path, ["source"], mode="overwrite")
+    write_partitioned(artifact, path, ["source"])
     return path
 
 

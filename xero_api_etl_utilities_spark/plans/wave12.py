@@ -75,13 +75,13 @@ def _trunc_cents_from_parquet(sf_dir: str, d: int) -> list[list[float]]:
 def similarity_truncation_recall_ivf(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """X164: matryoshka truncation recall measured on the SCALE PATH —
+    """Matryoshka truncation recall measured on the SCALE PATH —
     for each prefix width d' in ``_TRUNC_DIMS``, an IVF index is
     trained and searched entirely under the truncated vectors
     (centroids, cell assignment, candidate generation, exact-cosine
     rank within candidates all at d'), and its top-5 is scored against
-    the full-dimension exact ground truth.  Where X162 answers "what
-    does truncation alone cost" with guard-caged brute force, this
+    the full-dimension exact ground truth.  Where the brute-force
+    truncation census answers "what does truncation alone cost", this
     answers the production question: "what recall does the index I
     would actually DEPLOY at width d' deliver" — truncation loss and
     IVF probe loss priced together (the d'=64 row isolates the latter).
@@ -101,7 +101,7 @@ def similarity_truncation_recall_ivf(
     from xero_api_etl_utilities_spark.operators import similarity as sim
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # truth stays a plan subtree on purpose (measured r15): its five
+    # truth stays a plan subtree on purpose (measured): its five
     # references share one physical exchange via ReuseExchange, and
     # its stages overlap the per-width assignment stages inside the
     # one union job — a localCheckpoint here measured SLOWER (12.98 s
@@ -114,9 +114,7 @@ def similarity_truncation_recall_ivf(
     truth = sim.topk_bruteforce(
         emb.filter(F.col("vec_id") < 20), emb, k=5
     ).select("query_id", "neighbor_id")
-    cents_by_width = ivf.train_centroids_prefix_widths(
-        emb, _TRUNC_DIMS, k=_K_CELLS, iters=_IVF_ITERS, sample=_IVF_SAMPLE
-    )
+    cents_by_width = ivf.train_centroids_prefix_widths(emb, _TRUNC_DIMS)
 
     tagged = None
     for d in _TRUNC_DIMS:
@@ -231,7 +229,7 @@ _DRIFT_HOT_X100 = 300
 
 
 def similarity_ivf_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X165: the index-maintenance decision table.  The embeddings
+    """The index-maintenance decision table.  The embeddings
     table splits into the INDEXED corpus (vec_id % 5 != 4)
     and NEW ARRIVALS (vec_id % 5 == 4); centroids train on the corpus
     only and are then FROZEN — exactly the state of a deployed index
@@ -240,7 +238,8 @@ def similarity_ivf_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-multiplied), and the hot flag (arrival load factor past
     ``_DRIFT_HOT_X100``) that tells the scheduler this cell is
     absorbing disproportionate new mass — the "re-train k or
-    re-balance" signal, X113's rule applied to the arrival stream.
+    re-balance" signal, ``similarity_ivf_cell_balance``'s rule
+    applied to the arrival stream.
 
     Shape: two zero-shuffle assignment projections (inlined centroid
     literals), two 16-cell aggregates, a k-row range completion, two
@@ -251,13 +250,11 @@ def similarity_ivf_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 5 != 4)
     arrivals = emb.filter(F.col("vec_id") % 5 == 4)
-    cents = ivf.train_centroids(
-        corpus, k=_K_CELLS, iters=_IVF_ITERS, sample=_IVF_SAMPLE
-    )
+    cents = ivf.train_centroids(corpus)
 
-    # r15 (guide §1.2/§2.4): the corpus census, arrival census and the
-    # two 1-row totals each re-scanned and re-assigned the table — four
-    # passes where one suffices.  One tagged assignment pass feeds a
+    # the corpus census, arrival census and the two 1-row totals would
+    # each re-scan and re-assign the table — four passes where one
+    # suffices.  One tagged assignment pass feeds a
     # single per-cell aggregate; the totals are the column sums of
     # that ≤k-row frame (every vector gets exactly one nprobe=1 cell,
     # so the sums equal the global counts), which is checkpointed so
@@ -369,9 +366,7 @@ def _rpq_index(spark: SparkSession, sf_dir: str):
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = ivf.train_centroids(
-        emb, k=_K_CELLS, iters=_IVF_ITERS, sample=_IVF_SAMPLE
-    )
+    cents = ivf.train_centroids(emb)
     books = train_pq_codebooks_from_parquet(
         os.path.join(sf_dir, "embeddings.parquet"),
         residual_centroids=cents,
@@ -431,12 +426,7 @@ def _ivfpq_residual_oracle() -> str:
     from xero_api_etl_utilities_spark.plans.sketch_oracles import _vec_lit
 
     sf_dir = oracle_sf_dir()
-    cents = train_centroids_from_parquet(
-        os.path.join(sf_dir, "embeddings.parquet"),
-        k=_K_CELLS,
-        iters=_IVF_ITERS,
-        sample=_IVF_SAMPLE,
-    )
+    cents = train_centroids_from_parquet(os.path.join(sf_dir, "embeddings.parquet"))
     books = train_pq_codebooks_from_parquet(
         os.path.join(sf_dir, "embeddings.parquet"), residual_centroids=cents
     )
@@ -549,8 +539,9 @@ def _split_cents_from_parquet(sf_dir: str, corpus_only: bool) -> list[list[float
 
 
 def similarity_ivf_retrain_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X167: the retrain DELTA census — the third act of the ANN
-    lifecycle wave.  X165 flags drift under the frozen geometry; this
+    """The retrain DELTA census — the third act of the ANN lifecycle.
+    ``similarity_ivf_drift_census`` flags drift under the frozen
+    geometry; this
     query prices the retrain the flag asks for: centroids re-trained
     on the full table (indexed corpus + arrivals, same sample recipe)
     against the OLD corpus-only geometry, and per OLD cell: how many
@@ -559,8 +550,8 @@ def similarity_ivf_retrain_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     different cell (moved_out), and the churn rate in rounded bp.
     Reassignment churn is the real cost of acting on the drift flag —
     every moved vector is an index-build write at 100 TB — so the
-    scheduler weighs churn_bp against the hot-cell imbalance X165
-    reported.
+    scheduler weighs churn_bp against the hot-cell imbalance the drift
+    census reported.
 
     Shape: both assignments ride ONE zero-shuffle scan projection
     (two inlined-literal argmax expressions per row, no join between
@@ -574,12 +565,8 @@ def similarity_ivf_retrain_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 5 != 4)
-    old = ivf.train_centroids(
-        corpus, k=_K_CELLS, iters=_IVF_ITERS, sample=_IVF_SAMPLE
-    )
-    new = ivf.train_centroids(
-        emb, k=_K_CELLS, iters=_IVF_ITERS, sample=_IVF_SAMPLE
-    )
+    old = ivf.train_centroids(corpus)
+    new = ivf.train_centroids(emb)
 
     def top1(cents):
         scored = F.reverse(F.array_sort(_centroid_scores(F.col("embedding"), cents)))
@@ -588,8 +575,8 @@ def similarity_ivf_retrain_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     both = emb.select(
         top1(old).alias("old_cell"), top1(new).alias("new_cell")
     )
-    # r15 (guide §2.4): before/after aggregate the SAME scan projection
-    # on two branches — each branch re-evaluated both 16-centroid
+    # before/after would aggregate the SAME scan projection on two
+    # branches — each branch re-evaluating both 16-centroid
     # argmax expressions over the whole table.  Pre-aggregate to the
     # k×k transition grid in one pass (map-side combinable), checkpoint
     # the ≤256-row grid, and derive both census sides from it — counts
@@ -812,16 +799,16 @@ _RETRAIN_NPROBE = 2
 
 
 def similarity_ivf_retrain_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X169: what the retrain BUYS — top-5 recall of the deployed IVF
+    """What the retrain BUYS — top-5 recall of the deployed IVF
     index under the FROZEN corpus-only geometry vs the RETRAINED
     full-table geometry, both searching the full vector set (arrivals
     included, as the maintenance sink leaves it), both scored against
-    the same 20-query full-dimension exact truth.  Together with X165
-    (the drift flag) and X167 (the reassignment churn the retrain
-    costs), this closes the index-lifecycle decision table: retrain
+    the same 20-query full-dimension exact truth.  Together with the
+    drift census (the drift flag) and the retrain delta (the
+    reassignment churn the retrain costs), this closes the index-lifecycle decision table: retrain
     when recall_bp(retrained) − recall_bp(frozen) justifies churn_bp.
 
-    Shape: X164's per-geometry search loop at full width — ONE
+    Shape: the truncation-recall per-geometry search loop at full width — ONE
     guard-caged brute-force truth pass, one ``ivf.topk_ivf`` per
     geometry (broadcast probe frame → cell equi-join, never
     all-pairs), membership semi-joins, the audited 1-row broadcast
@@ -834,10 +821,8 @@ def similarity_ivf_retrain_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 5 != 4)
     geoms = [
-        ("frozen", ivf.train_centroids(
-            corpus, k=_K_CELLS, iters=_IVF_ITERS, sample=_IVF_SAMPLE)),
-        ("retrained", ivf.train_centroids(
-            emb, k=_K_CELLS, iters=_IVF_ITERS, sample=_IVF_SAMPLE)),
+        ("frozen", ivf.train_centroids(corpus)),
+        ("retrained", ivf.train_centroids(emb)),
     ]
     truth = sim.topk_bruteforce(
         emb.filter(F.col("vec_id") < 20), emb, k=5
@@ -858,7 +843,7 @@ def similarity_ivf_retrain_recall(spark: SparkSession, sf_dir: str) -> DataFrame
         tagged = m if tagged is None else tagged.unionByName(m)
 
     total = truth.agg(F.count(F.lit(1)).alias("total"))
-    # ADVICE r12: a geometry whose semi-join matches ZERO truth pairs
+    # a geometry whose semi-join matches ZERO truth pairs
     # would vanish from the groupBy while the oracle's UNION ALL
     # always emits both geometry rows with matched=0 — anchor the
     # census on a literal two-row geometry frame so both engines emit

@@ -155,7 +155,7 @@ _INC_MAX_BUCKET = 500
 
 
 def dedup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X171: verified near-dup pairs of the NEW batch (doc_id %% 5 == 4,
+    """Verified near-dup pairs of the NEW batch (doc_id %% 5 == 4,
     the repo's arrivals convention) against the EXISTING corpus — the
     100 TB dedup operation that must NOT recompute the corpus side.
 
@@ -234,7 +234,7 @@ def dedup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the distinct's exchange is AQE-coalesced: widen before the
     # CPU-bound verify
     verified = dd.jaccard_verify(
-        materialize(compute_width(cands)), docs, "doc_id", "text", n=1
+        materialize(compute_width(cands)), docs, "doc_id", "text"
     )
     is_a_new = F.col("doc_a") % 5 == 4
     return verified.select(
@@ -257,11 +257,7 @@ def _incremental_pairs_oracle() -> str:
 
     return (
         "WITH "
-        + sk.minhash_cand_ctes(
-            bands=_INC_BANDS,
-            rows_per_band=_INC_ROWS,
-            max_bucket=_INC_MAX_BUCKET,
-        )
+        + sk.minhash_cand_ctes()
         + ",\n"
         + sk.jaccard_verify_ctes()
         + """

@@ -164,16 +164,16 @@ def incremental_cands_from_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_catalog_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X174: X171's incremental near-dedup with the corpus side read
+    """``dedup_incremental_pairs``' near-dedup with the corpus side read
     from the PERSISTED catalog — every corpus-derived input (band rows
     AND bucket census) comes off parquet; the corpus documents are
     touched only by the candidate-restricted verify, exactly as a
     100 TB store would run it.  Bucket sizes are the STORED census
     incremented by the new batch's counts (full-outer join, coalesced
-    sums) — the combined-count semantics X171 pinned, now computed the
+    sums) — the combined-count semantics the in-memory form pinned, computed the
     way a production catalog actually computes them.
 
-    The oracle is X171's: the full-recompute verified-pairs chain
+    The oracle is the in-memory form's: the full-recompute verified-pairs chain
     restricted to mixed (new × corpus) pairs.  Hash-equality therefore
     proves disk-backed ≡ in-memory ≡ full recompute."""
     from xero_api_etl_utilities_spark.operators import dedup as dd
@@ -183,7 +183,7 @@ def dedup_catalog_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the distinct's exchange is AQE-coalesced: widen before the
     # CPU-bound verify
     cands = materialize(compute_width(cands))
-    verified = dd.jaccard_verify(cands, docs, "doc_id", "text", n=1)
+    verified = dd.jaccard_verify(cands, docs, "doc_id", "text")
     is_a_new = F.col("doc_a") % 5 == 4
     return (
         verified.select(
@@ -426,7 +426,7 @@ def _catalog_absorb_oracle() -> str:
 
     return (
         "WITH "
-        + sk.band_catalog_ctes(bands=_BANDS, rows_per_band=_ROWS)
+        + sk.band_catalog_ctes()
         + f"""
 SELECT band,
   CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -501,7 +501,7 @@ def _catalog_expire_oracle() -> str:
         "WITH survivors AS MATERIALIZED (\n"
         f"  SELECT * FROM documents WHERE doc_id % {_TOMBSTONE_MOD} <> 3\n"
         "), "
-        + sk.band_catalog_ctes(bands=_BANDS, rows_per_band=_ROWS, source="survivors")
+        + sk.band_catalog_ctes("survivors")
         + f"""
 SELECT band,
   CAST(COUNT(*) AS BIGINT) AS n_rows,

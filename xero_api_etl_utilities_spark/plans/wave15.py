@@ -122,7 +122,8 @@ def build_absorb_replay(spark: SparkSession, sf_dir: str, path: str) -> None:
     for the operation): writes the seeded store, runs both sequenced
     batches, publishes pairs and absorbs band rows under ``path``.
     Factored out so tests can build a PRIVATE store in a tmp dir —
-    catalog entries mutate the session-shared one (X181 compacts it),
+    catalog entries mutate the session-shared one (``dedup_catalog_compact``
+    compacts it),
     so layout-sensitive assertions need their own copy."""
     from xero_api_etl_utilities_spark.operators.dedup import (
         band_rows,
@@ -168,7 +169,7 @@ def build_absorb_replay(spark: SparkSession, sf_dir: str, path: str) -> None:
             .distinct()
         )
         verified = jaccard_verify(
-            materialize(cands), docs, "doc_id", "text", n=1
+            materialize(cands), docs, "doc_id", "text"
         )
         verified.select(
             F.col("doc_a").alias("new_id"),
@@ -207,7 +208,7 @@ def _store_asof_oracle() -> str:
 
     return (
         "WITH "
-        + sk.band_catalog_ctes(bands=_BANDS, rows_per_band=_ROWS)
+        + sk.band_catalog_ctes()
         + f""", tagged AS MATERIALIZED (
   SELECT doc, band, bh,
     CASE WHEN doc % 10 = 4 THEN 1
@@ -409,7 +410,7 @@ def dedup_catalog_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _catalog_compact_oracle() -> str:
-    # X176's absorb-vs-rebuild oracle verbatim: the X179 store holds
+    # the absorb-vs-rebuild oracle verbatim: the replay store holds
     # band rows for EVERY document (corpus + both absorbed batches),
     # so the compacted census is held to the same full-rebuild
     # standard as the absorb census.
@@ -417,7 +418,7 @@ def _catalog_compact_oracle() -> str:
 
     return (
         "WITH "
-        + sk.band_catalog_ctes(bands=_BANDS, rows_per_band=_ROWS)
+        + sk.band_catalog_ctes()
         + f"""
 SELECT band,
   CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -450,7 +451,7 @@ def publish_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     100 TB shape: the index is the ~8 B/vector (vec_id, cell) sidecar
     an ANN store keeps; absorbing a crawl costs one scan of the batch
     against 16 inlined centroids, and the quantizer retrain decision
-    is a separate drift-gated operation (X163's retrain lifecycle)."""
+    is a separate drift-gated operation (the retrain lifecycle)."""
     from xero_api_etl_utilities_spark.operators import ivf
     from xero_api_etl_utilities_spark.plans.wave10 import _prune_stale_runs
     from xero_api_etl_utilities_spark.plans.wave14 import _catalog_dir
@@ -467,7 +468,7 @@ def publish_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     )
     _prune_stale_runs(path, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = ivf.train_centroids(emb, k=16, iters=4, sample=1000)
+    cents = ivf.train_centroids(emb)
     for part, pred in (
         ("corpus", F.col("vec_id") % 5 != 4),
         ("arrivals", F.col("vec_id") % 5 == 4),
@@ -510,12 +511,7 @@ def _index_absorb_oracle() -> str:
     )
     from xero_api_etl_utilities_spark.plans.sketch_oracles import _vec_lit
 
-    cents = train_centroids_from_parquet(
-        os.path.join(oracle_sf_dir(), "embeddings.parquet"),
-        k=16,
-        iters=4,
-        sample=1000,
-    )
+    cents = train_centroids_from_parquet(os.path.join(oracle_sf_dir(), "embeddings.parquet"))
     structs = ", ".join(
         f"{{'d': list_dot_product(v, {_vec_lit(c)}), 'cell': {i}}}"
         for i, c in enumerate(cents)
@@ -591,12 +587,7 @@ def _index_expire_oracle() -> str:
     )
     from xero_api_etl_utilities_spark.plans.sketch_oracles import _vec_lit
 
-    cents = train_centroids_from_parquet(
-        os.path.join(oracle_sf_dir(), "embeddings.parquet"),
-        k=16,
-        iters=4,
-        sample=1000,
-    )
+    cents = train_centroids_from_parquet(os.path.join(oracle_sf_dir(), "embeddings.parquet"))
     structs = ", ".join(
         f"{{'d': list_dot_product(v, {_vec_lit(c)}), 'cell': {i}}}"
         for i, c in enumerate(cents)

@@ -47,21 +47,22 @@ from xero_api_etl_utilities_spark.sources.parquet import load_table
 # ---------------------------------------------------------------------------
 
 
-def span_dedup_frame(spark: SparkSession, sf_dir: str, k: int = 6) -> DataFrame:
-    """X146 core, UNSORTED (the catalog query adds the presentation
-    order; composition consumers like X155's publish pipeline take the
-    frame as-is so no dead global sort sits under their shuffles).
+def span_dedup_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Span dedup, UNSORTED (the catalog query adds the presentation
+    order; composition consumers like the corpus publish pipeline take
+    the frame as-is so no dead global sort sits under their shuffles).
 
     Pipeline (all grains bounded at 100 TB):
 
-    1. word ``k``-gram spans per doc as 8-byte cross-engine md5-64
-       hashes (X110's substrate — text never shuffles);
+    1. word 6-gram spans per doc as 8-byte cross-engine md5-64
+       hashes (``text_dup_span_coverage``'s substrate — text never
+       shuffles);
     2. per hash, ONE aggregate finds both the cross-document
        duplication predicate (min(doc) <> max(doc) — within-doc
-       repetition is ``text_repetition``'s business, X110's rule) and
-       the canonical occurrence (min (doc_id, pos) struct);
+       repetition is ``text_repetition``'s business) and the
+       canonical occurrence (min (doc_id, pos) struct);
     3. every non-canonical occurrence of a duplicated hash becomes a
-       removal interval [pos, pos + k - 1], union-merged per document
+       removal interval [pos, pos + 5], union-merged per document
        by the ``window_interval_coalesce`` sweep (doc-partitioned
        windows — never global);
     4. the kept text re-assembles from the token array by filtering
@@ -71,7 +72,7 @@ def span_dedup_frame(spark: SparkSession, sf_dir: str, k: int = 6) -> DataFrame:
     Output per document: token counts (total / removed / kept) and
     the deduplicated text.  ``kept_tokens + removed_tokens ==
     n_tokens`` by construction, and per-source ``sum(removed_tokens)``
-    is <= X110's ``covered_tokens`` (the canonical occurrences stay)
+    is <= ``text_dup_span_coverage``'s ``covered_tokens`` (the canonical occurrences stay)
     — both pinned by the reconciliation pytest."""
     from xero_api_etl_utilities_spark.functions.crosshash import h64
     from xero_api_etl_utilities_spark.operators.dedup import token_ngrams
@@ -91,7 +92,7 @@ def span_dedup_frame(spark: SparkSession, sf_dir: str, k: int = 6) -> DataFrame:
     spans = materialize(
         wdocs.select(
             "doc_id",
-            F.posexplode(token_ngrams(F.col("_w"), k)).alias("pos", "_s"),
+            F.posexplode(token_ngrams(F.col("_w"), 6)).alias("pos", "_s"),
         ).select("doc_id", "pos", h64(F.col("_s")).alias("h"))
     )
     canon = (
@@ -119,7 +120,7 @@ def span_dedup_frame(spark: SparkSession, sf_dir: str, k: int = 6) -> DataFrame:
         .select(
             "doc_id",
             F.col("pos").alias("s"),
-            (F.col("pos") + (k - 1)).alias("e"),
+            (F.col("pos") + 5).alias("e"),
         )
     )
     # union-merge per doc (s is unique per doc — one k-gram per pos)
@@ -204,14 +205,12 @@ def span_dedup_frame(spark: SparkSession, sf_dir: str, k: int = 6) -> DataFrame:
     )
 
 
-def text_span_dedup_emit(
-    spark: SparkSession, sf_dir: str, k: int = 6
-) -> DataFrame:
-    """X146 catalog entry: :func:`span_dedup_frame` in doc order."""
-    return span_dedup_frame(spark, sf_dir, k).orderBy("doc_id")
+def text_span_dedup_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The catalog entry: :func:`span_dedup_frame` in doc order."""
+    return span_dedup_frame(spark, sf_dir).orderBy("doc_id")
 
 
-def _span_dedup_emit_oracle(k: int = 6) -> str:
+def _span_dedup_emit_oracle() -> str:
     from xero_api_etl_utilities_spark.functions.crosshash import (
         h64_hi_sql,
         h64_lo_sql,
@@ -224,8 +223,8 @@ WITH toks AS (
   SELECT doc_id, source, string_split(text, ' ') AS w FROM documents
 ), raw AS (
   SELECT doc_id, i - 1 AS pos,
-         array_to_string(w[i:i + {k - 1}], ' ') AS s
-  FROM toks, unnest(range(1, greatest(len(w) - {k - 1}, 0) + 1)) AS t(i)
+         array_to_string(w[i:i + 5], ' ') AS s
+  FROM toks, unnest(range(1, greatest(len(w) - 5, 0) + 1)) AS t(i)
 ), spans AS (
   SELECT doc_id, pos, {h} AS h FROM raw
 ), occ AS (
@@ -235,7 +234,7 @@ WITH toks AS (
     max(doc_id) OVER (PARTITION BY h) AS mx
   FROM spans
 ), removal AS (
-  SELECT doc_id, pos AS sp, pos + {k - 1} AS ep
+  SELECT doc_id, pos AS sp, pos + 5 AS ep
   FROM occ WHERE mn <> mx AND rn > 1
 ), flagged AS (
   SELECT doc_id, sp, ep,
@@ -286,7 +285,7 @@ register("text_span_dedup_emit", text_span_dedup_emit, _span_dedup_emit_oracle)
 
 
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X147: the video half of the multimodal pipeline made
+    """The video half of the multimodal pipeline made
     END-TO-END driver-visible — deterministic ISO-BMFF bytes per doc
     (synth_mp4_media's closed-form rule) → REAL container parse plans
     the 2 fps frame grid (operators/multimodal.sample_video_frames) →
@@ -313,9 +312,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") < 80)
     )
     media = mm.synth_mp4_media(docs, "doc_id")
-    frames = mm.sample_video_frames(
-        media, fps_out=2, decode_fn=mm.fake_frame_decode
-    )
+    frames = mm.sample_video_frames(media, decode_fn=mm.fake_frame_decode)
 
     def _gray(batches):
         from xero_api_etl_utilities_spark.functions.imagecodec import (
@@ -536,12 +533,12 @@ FROM islands GROUP BY doc_id ORDER BY doc_id
 
 
 def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X149: how good is the 64-hash MinHash Jaccard ESTIMATOR on
+    """How good is the 64-hash MinHash Jaccard ESTIMATOR on
     this corpus?  For every LSH candidate pair: the estimate
     (matching signature slots / 64, in bp) vs the EXACT shingle
     Jaccard, censused by exact-similarity decile — mean absolute
-    error and signed bias per decile.  ``dedup_lsh_quality`` (X94)
-    grades the BANDING (recall/precision of candidate generation);
+    error and signed bias per decile.  ``dedup_lsh_quality`` grades
+    the BANDING (recall/precision of candidate generation);
     this grades the SKETCH itself — the number that tells you whether
     64 hashes is enough before you trust estimate-ranked pruning, and
     the standard-error sanity check (sqrt(J(1-J)/64) ~ 600 bp at
@@ -597,7 +594,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint: partitioning is inherited, and re-running the 1/8
     # hash-slice filter per consumer is cheaper than re-checkpointing
     exact = dd.jaccard_verify(
-        cands, docs, "doc_id", "text", n=1, min_sim_num=0, min_sim_den=1
+        cands, docs, "doc_id", "text", min_sim_num=0, min_sim_den=1
     ).filter(
         # zero-overlap band collisions: the array-set verify keeps
         # them, the oracle's shingle-inner-join form drops them —
@@ -629,10 +626,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_calibration_oracle() -> str:
     from xero_api_etl_utilities_spark.plans import sketch_oracles as sk
 
-    chain = sk.minhash_cand_ctes(
-        n_hashes=64, seed=42, bands=16, rows_per_band=4, max_bucket=500,
-        source="documents",
-    )
+    chain = sk.minhash_cand_ctes()
     from xero_api_etl_utilities_spark.functions.crosshash import h32_sql
 
     terms = " + ".join(

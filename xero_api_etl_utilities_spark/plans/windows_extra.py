@@ -390,7 +390,7 @@ GROUP BY on_date
 
 
 def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X127: interval x interval OVERLAP join — the second member of
+    """Interval x interval OVERLAP join — the second member of
     the range-join family (``join_range_intransit`` joins points to
     intervals; this joins intervals to intervals): per supplier,
     count the pairs of its shipments whose delivery windows
@@ -444,8 +444,6 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sb",
         "eb",
         bucket=32,
-        keys=["supp"],
-        extra_cond=F.col("rid_a") < F.col("rid_b"),
     )
     return (
         pairs.groupBy("supp")
@@ -854,8 +852,8 @@ ORDER BY user_id, session_start
 
 
 def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X141: NEAREST as-of join — completing the as-of family
-    (backward X..., tolerance, point-in-time) with the
+    """NEAREST as-of join — completing the as-of family
+    (backward, tolerance, point-in-time) with the
     pandas ``direction='nearest'`` member via
     ``operators/asof.asof_join_nearest``: even-id events probe (their
     ts shifted +37 minutes so neither direction trivially wins) for
@@ -878,14 +876,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "ts")
         .agg(F.max("event_id").alias("r_event_id"))
     )
-    nearest = asof_join_nearest(
-        probes,
-        right,
-        on="user_id",
-        left_ts="pts",
-        right_ts="ts",
-        right_cols=["r_event_id"],
-    )
+    nearest = asof_join_nearest(probes, right, on="user_id")
     return (
         nearest.filter(F.col("r_event_id").isNotNull())
         .select(

@@ -20,28 +20,25 @@ def write_partitioned(
     df: DataFrame,
     path: str,
     partition_by: list[str],
-    mode: str = "overwrite",
 ) -> None:
-    """Date/key-partitioned parquet: partition pruning makes the §2.1
-    filtered scans touch only matching directories."""
-    df.write.mode(mode).partitionBy(*partition_by).parquet(path)
+    """Date/key-partitioned parquet, overwritten: partition pruning
+    makes the §2.1 filtered scans touch only matching directories."""
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
 
 
 def write_bucketed_table(
     df: DataFrame,
     table: str,
     bucket_by: list[str],
-    num_buckets: int = 64,
-    sort_by: list[str] | None = None,
 ) -> None:
-    """Bucketed managed table, overwritten: joins/aggregations on the
-    bucket key skip their shuffle (the orderkey co-location the
-    flagship plan notes). Requires saveAsTable (bucketing metadata lives in the
-    catalog, not the files)."""
-    w = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_by)
-    if sort_by:
-        w = w.sortBy(*sort_by)
-    w.saveAsTable(table)
+    """Bucketed managed table in 8 buckets, sorted by the bucket key,
+    overwritten: joins/aggregations on the bucket key skip their
+    shuffle (the orderkey co-location the flagship plan notes).
+    Requires saveAsTable (bucketing metadata lives in the catalog, not
+    the files)."""
+    df.write.mode("overwrite").bucketBy(8, *bucket_by).sortBy(*bucket_by).saveAsTable(
+        table
+    )
 
 
 def write_json_audit(df: DataFrame, path: str) -> None:
@@ -57,7 +54,6 @@ def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
 def write_versioned_run(
     df: DataFrame,
     base_path: str,
-    fmt: str = "json",
     max_versions: int = 100,
 ) -> str:
     """S12 parity (src/helpers.ts:55-66): the reference probes
@@ -74,15 +70,21 @@ def write_versioned_run(
     for v in range(1, max_versions + 1):
         path = base_path if v == 1 else f"{base_path}_v{v}"
         try:
-            df.write.mode("errorifexists").format(fmt).save(path)
+            df.write.mode("errorifexists").json(path)
             return path
         except AnalysisException as exc:
             # Only a genuine path collision advances the probe; any other
-            # analysis failure (bad schema, unsupported type for the
-            # format) would otherwise burn all max_versions probes and
-            # surface as a misleading "no free version" error.
+            # analysis failure (bad schema, duplicate columns) would
+            # otherwise burn all max_versions probes and surface as a
+            # misleading "no free version" error.  The message test is
+            # only a fallback for an exception without an error class:
+            # COLUMN_ALREADY_EXISTS says "already exists" too.
             err_class = getattr(exc, "getErrorClass", lambda: None)()
-            if err_class != "PATH_ALREADY_EXISTS" and "already exists" not in str(exc):
+            if err_class:
+                collision = err_class == "PATH_ALREADY_EXISTS"
+            else:
+                collision = "already exists" in str(exc)
+            if not collision:
                 raise
             last_exc = exc
     raise RuntimeError(
@@ -201,11 +203,11 @@ def write_zorder_table(
     path: str,
     x_col: str,
     y_col: str,
-    n_files: int = 16,
 ) -> None:
     """Overwrite ``path`` with ``df`` Z-ORDER clustered on two integer
-    dimension columns (functions/zorder.py) — the OPTIMIZE ZORDER layout: rows land in
-    files by Morton-key range, so every file covers a narrow rectangle
+    dimension columns (functions/zorder.py) in 16 files — the OPTIMIZE
+    ZORDER layout: rows land in files by Morton-key range, so every
+    file covers a narrow rectangle
     in BOTH dimensions and engine min/max skipping prunes on either
     predicate column (a plain sort gives pruning on the leading column
     only). Lowering: repartitionByRange(z) assigns contiguous z-ranges
@@ -225,7 +227,7 @@ def write_zorder_table(
     )
     (
         df.withColumn("_z", z)
-        .repartitionByRange(n_files, "_z")
+        .repartitionByRange(16, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
         .write.mode("overwrite")
