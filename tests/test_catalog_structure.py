@@ -158,11 +158,6 @@ KEPT: dict[str, tuple[str, str]] = {
         "seam",
         "a test exhausts the probe after 2 versions instead of 100",
     ),
-    "compact_store(subs)": (
-        "deployment",
-        "a crawl deployment compacts the docs sub-store with the band "
-        "catalog; the catalog query measures the band catalog alone",
-    ),
     "text_tf_cosine_pairs(max_df_bp)": (
         "seam",
         "a test forces the df cap to one document to see the guard act",

@@ -15,10 +15,12 @@ ROOT = "/work/checkout"
 
 # Two sessions' dumps of one plan with two DISTINCT aggregates: every
 # counter differs, and the second session ordered the distinct groups
-# (doc, bh) the other way round, renumbering their gid.
+# (doc, bh) the other way round, renumbering their gid; the planner's
+# sort on the groups (4a) follows that order, the query's Sort (6) not.
 RUN_A = f"""== Physical Plan ==
-* HashAggregate (5)
-+- Exchange (4)
+* Sort (6)
++- * HashAggregate (5)
+   +- Exchange (4)
    +- Expand (3)
       +- Scan ExistingRDD (1)
 
@@ -38,14 +40,23 @@ Arguments: [[doc#5L, null, 1], [null, bh#6L, 2]], [doc#17L, bh#18L, gid#16]
 Input [3]: [doc#17L, bh#18L, gid#16]
 Arguments: hashpartitioning(doc#17L, bh#18L, gid#16, 4), ENSURE_REQUIREMENTS, [plan_id=56]
 
+(4a) Sort
+Input [3]: [doc#17L, bh#18L, gid#16]
+Arguments: [doc#17L ASC NULLS FIRST, bh#18L ASC NULLS FIRST, gid#16 ASC NULLS FIRST], false, 0
+
 (5) HashAggregate
 Keys [3]: [doc#17L, bh#18L, gid#16]
 Functions [2]: [count(doc#17L) FILTER (WHERE (gid#16 = 1)), count(if (NOT _common_expr_3#20) null else bh#18L) FILTER (WHERE (gid#16 = 2))]
+
+(6) Sort
+Input [2]: [doc#17L, bh#18L]
+Arguments: [doc#17L DESC NULLS LAST, bh#18L ASC NULLS FIRST], true, 0
 """
 
 RUN_B = f"""== Physical Plan ==
-* HashAggregate (5)
-+- Exchange (4)
+* Sort (6)
++- * HashAggregate (5)
+   +- Exchange (4)
    +- Expand (3)
       +- Scan ExistingRDD (1)
 
@@ -65,9 +76,17 @@ Arguments: [[bh#1206L, null, 1], [null, doc#1205L, 2]], [bh#1218L, doc#1217L, gi
 Input [3]: [bh#1218L, doc#1217L, gid#1216]
 Arguments: hashpartitioning(bh#1218L, doc#1217L, gid#1216, 4), ENSURE_REQUIREMENTS, [plan_id=1911]
 
+(4a) Sort
+Input [3]: [bh#1218L, doc#1217L, gid#1216]
+Arguments: [bh#1218L ASC NULLS FIRST, doc#1217L ASC NULLS FIRST, gid#1216 ASC NULLS FIRST], false, 0
+
 (5) HashAggregate
 Keys [3]: [bh#1218L, doc#1217L, gid#1216]
 Functions [2]: [count(doc#1217L) FILTER (WHERE (gid#1216 = 2)), count(if (NOT _common_expr_0#1220) null else bh#1218L) FILTER (WHERE (gid#1216 = 1))]
+
+(6) Sort
+Input [2]: [bh#1218L, doc#1217L]
+Arguments: [doc#1217L DESC NULLS LAST, bh#1218L ASC NULLS FIRST], true, 0
 """
 
 
@@ -77,7 +96,7 @@ def test_normalise_replaces_counters_and_orders_distinct_groups():
     for raw in ("#5L", "plan_id=56", "RDD[8]", "local-179", "_common_expr_3", ROOT):
         assert raw not in a
     for seen in (
-        "Output [2]: [bh#NL, doc#NL]",
+        "Output [2]: [doc#NL, bh#NL]",
         "plan_id=N",
         "MapPartitionsRDD[N] at localCheckpoint",
         "sf0.01-local-N/corpus",
@@ -86,9 +105,26 @@ def test_normalise_replaces_counters_and_orders_distinct_groups():
         "Arguments: [[bh#NL=bh#NL, doc#NL=null], [bh#NL=null, doc#NL=doc#NL]], "
         "[bh#NL, doc#NL, gid#N]",
         "hashpartitioning(bh#NL, doc#NL, gid#N, 4)",
+        "Arguments: [bh#NL ASC NULLS FIRST, doc#NL ASC NULLS FIRST, gid#N ASC NULLS FIRST]",
         "FILTER (WHERE (gid#N = G))",
+        "Input [2]: [bh#NL, doc#NL]\nArguments: [doc#NL DESC NULLS LAST, bh#NL ASC NULLS FIRST]",
     ):
         assert seen in a, seen
+
+
+def test_normalise_keeps_sort_order_in_an_expand_plan():
+    """Only the lists that hold an Expand's outputs are sorted: a
+    changed sort-key order, or a reordered input column list, still
+    shows after normalisation."""
+    swapped = RUN_A.replace(
+        "[doc#17L DESC NULLS LAST, bh#18L ASC NULLS FIRST]",
+        "[bh#18L ASC NULLS FIRST, doc#17L DESC NULLS LAST]",
+    )
+    assert normalise(swapped, ROOT) != normalise(RUN_A, ROOT)
+    reordered = RUN_A.replace(
+        "Output [2]: [doc#5L, bh#6L]", "Output [2]: [bh#6L, doc#5L]"
+    )
+    assert normalise(reordered, ROOT) != normalise(RUN_A, ROOT)
 
 
 def test_normalise_keeps_list_order_without_an_expand():

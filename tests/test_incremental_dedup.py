@@ -1,5 +1,5 @@
 """Small-file compaction of the incremental dedup store
-(sources/writer.compact_store, run by X181 ``dedup_catalog_compact``):
+(sources/writer.compact_store, run by ``dedup_catalog_compact``):
 a store of per-batch ``part=`` partitions under ``catalog`` and
 ``docs`` must read back bit-identically after compaction, in fewer
 files, with every prior partition kept as a replay-guard marker, and
@@ -19,6 +19,8 @@ from xero_api_etl_utilities_spark.sources.writer import compact_store
 
 SF = "/root/testdata/sf0.001"
 _DOCS_SCHEMA = "doc_id bigint, text string"
+# the band catalog and the document text, one partition per batch each
+SUBS = ("catalog", "docs")
 
 
 def _absorb(docs, store_dir, part):
@@ -80,14 +82,12 @@ def test_compact_store_preserves_semantics(spark, tmp_path):
     pre_files = _store_parquet_count(store_dir)
     pre_parts = {
         sub: sorted(os.listdir(f"{store_dir}/{sub}"))
-        for sub in ("catalog", "docs")
+        for sub in SUBS
     }
     assert all(len(v) == 4 for v in pre_parts.values())  # corpus + 3
 
-    n_out = compact_store(spark, store_dir)
-    assert set(n_out) == {"catalog", "docs"} and all(
-        v >= 1 for v in n_out.values()
-    )
+    n_out = {sub: compact_store(spark, f"{store_dir}/{sub}") for sub in SUBS}
+    assert all(v >= 1 for v in n_out.values())
 
     # (a) readback bit-identical
     assert _store_sets(spark, store_dir) == (pre_cat, pre_docs)
@@ -116,11 +116,12 @@ def test_compact_store_preserves_semantics(spark, tmp_path):
             4,
         ).collect()
     }
-    compact_store(spark, store_dir)
+    for sub in SUBS:
+        compact_store(spark, f"{store_dir}/{sub}")
     got_cat, got_docs = _store_sets(spark, store_dir)
     assert got_cat == want_cat
     assert got_docs == pre_docs | {(10_000_019, planted_src["text"])}
-    for sub in ("catalog", "docs"):
+    for sub in SUBS:
         now = set(os.listdir(f"{store_dir}/{sub}"))
         assert {"part=compact-000001", "part=compact-000002", "part=b4"} <= now
     assert _store_parquet_count(store_dir) == sum(
@@ -133,7 +134,7 @@ def test_compact_store_preserves_semantics(spark, tmp_path):
                 if f.endswith(".parquet")
             ]
         )
-        for sub in ("catalog", "docs")
+        for sub in SUBS
     )
 
 
@@ -154,10 +155,10 @@ def test_compact_store_recovers_interrupted_swap(spark, tmp_path):
     pre = _rows()
     # simulate the crash window: root renamed away, new root not yet in
     os.rename(cat_dir, f"{cat_dir}.precompact")
-    n = compact_store(spark, store_dir, subs=("catalog",))
+    n = compact_store(spark, cat_dir)
     assert _rows() == pre
     assert not os.path.isdir(f"{cat_dir}.precompact")
-    assert n == {"catalog": 1}
+    assert n == 1
     assert sorted(os.listdir(cat_dir)) == [
         "part=a",
         "part=b",

@@ -246,7 +246,7 @@ def test_interval_overlap_join_claim_bucket_exactly_once(spark):
     for i in range(120):
         s = rng.randrange(0, 300)
         rows.append((rng.choice(["x", "y"]), i, s, s + rng.randrange(0, 40)))
-    df = spark.createDataFrame(rows, "supp string, rid long, s long, e long")
+    df = spark.createDataFrame(rows, "k string, rid long, s long, e long")
 
     expected = set()
     for ka, ra, sa, ea in rows:
@@ -254,19 +254,19 @@ def test_interval_overlap_join_claim_bucket_exactly_once(spark):
             if ka == kb and ra < rb and sb <= ea and sa <= eb:
                 expected.add((ka, ra, rb))
 
-    a = df.select("supp", F.col("rid").alias("rid_a"), F.col("s").alias("sa"), F.col("e").alias("ea"))
-    b = df.select("supp", F.col("rid").alias("rid_b"), F.col("s").alias("sb"), F.col("e").alias("eb"))
+    a = df.select("k", F.col("rid").alias("ra"), F.col("s").alias("sa"), F.col("e").alias("ea"))
+    b = df.select("k", F.col("rid").alias("rb"), F.col("s").alias("sb"), F.col("e").alias("eb"))
     for bucket in (1, 7, 32, 1000):
         got = [
-            (r["supp"], r["rid_a"], r["rid_b"])
+            (r["k"], r["ra"], r["rb"])
             for r in interval_overlap_join_bucketed(
-                a, b, "sa", "ea", "sb", "eb", bucket
+                a, b, "k", "ra", "sa", "ea", "rb", "sb", "eb", bucket
             ).collect()
         ]
         assert len(got) == len(set(got)), f"duplicates at bucket={bucket}"
         assert set(got) == expected, f"mismatch at bucket={bucket}"
     with pytest.raises(ValueError, match="positive"):
-        interval_overlap_join_bucketed(a, b, "sa", "ea", "sb", "eb", 0)
+        interval_overlap_join_bucketed(a, b, "k", "ra", "sa", "ea", "rb", "sb", "eb", 0)
 
 
 def test_snapshot_diff_null_keys(spark):
@@ -336,15 +336,15 @@ def test_asof_nearest_matches_bruteforce(spark):
 
     left = spark.createDataFrame(
         [("a", 1, 10), ("a", 2, 15), ("a", 3, 20), ("b", 4, 7), ("c", 5, 1)],
-        "k string, lid long, pts long",
+        "k string, lid long, lts long",
     )
     right = spark.createDataFrame(
         [("a", 101, 8), ("a", 102, 12), ("a", 103, 20), ("b", 104, 100)],
-        "k string, r_event_id long, ts long",
+        "k string, rid long, rts long",
     )
     got = {
-        r["lid"]: r["r_event_id"]
-        for r in asof_join_nearest(left, right, on="k").collect()
+        r["lid"]: r["rid"]
+        for r in asof_join_nearest(left, right, "k", "lts", "rts").collect()
     }
     # lid=1 (ts10): candidates 8 (d2, back) / 12 (d2, fwd) -> tie -> 8
     # lid=2 (ts15): 12 (d3) vs 20 (d5) -> 12
@@ -367,13 +367,13 @@ def test_interval_overlap_join_hot_bucket_exactly_once(spark):
 
     n = 500
     df = spark.createDataFrame(
-        [("k", i, 100, 140) for i in range(n)], "supp string, rid long, s long, e long"
+        [("k", i, 100, 140) for i in range(n)], "k string, rid long, s long, e long"
     )
-    a = df.select("supp", F.col("rid").alias("rid_a"), F.col("s").alias("sa"), F.col("e").alias("ea"))
-    b = df.select("supp", F.col("rid").alias("rid_b"), F.col("s").alias("sb"), F.col("e").alias("eb"))
+    a = df.select("k", F.col("rid").alias("ra"), F.col("s").alias("sa"), F.col("e").alias("ea"))
+    b = df.select("k", F.col("rid").alias("rb"), F.col("s").alias("sb"), F.col("e").alias("eb"))
     out = interval_overlap_join_bucketed(
-        a, b, "sa", "ea", "sb", "eb", bucket=16
-    ).select("rid_a", "rid_b")
+        a, b, "k", "ra", "sa", "ea", "rb", "sb", "eb", bucket=16
+    ).select("ra", "rb")
     rows = out.collect()
     assert len(rows) == n * (n - 1) // 2
-    assert len({(r["rid_a"], r["rid_b"]) for r in rows}) == len(rows)
+    assert len({(r["ra"], r["rb"]) for r in rows}) == len(rows)

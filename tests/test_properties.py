@@ -282,8 +282,8 @@ def test_merge_latest_property(spark, data):
             model[k] = (v, d, p)
     expect = {k: p for k, (v, d, p) in model.items() if not d}
 
-    df = spark.createDataFrame(flat, ["k", "v", "_del", "p"])
-    got = {r["k"]: r["p"] for r in merge_latest(df, ["k"], "v").collect()}
+    df = spark.createDataFrame(flat, ["k", "v", "tomb", "p"])
+    got = {r["k"]: r["p"] for r in merge_latest(df, ["k"], "v", "tomb").collect()}
     assert got == expect
 
 
@@ -348,10 +348,10 @@ def test_cc_star_equals_label_propagation_property(spark, data):
     ]
     if not edges:
         return
-    df = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
+    df = spark.createDataFrame(edges, "u1 bigint, u2 bigint")
     star = {
         (r["doc"], r["cluster_id"])
-        for r in cc_large_star_small_star(df.toDF("u1", "u2"), max_iters=20).collect()
+        for r in cc_large_star_small_star(df, max_iters=20).collect()
     }
     lp = {
         (r["doc"], r["cluster_id"])

@@ -168,7 +168,7 @@ def test_connected_components(spark):
         # component {1,2,3}, component {5,6}, and a descending chain
         # 10-11-12-13 whose min enters at one end (forces >1 round)
         [(1, 2), (2, 3), (5, 6), (13, 12), (12, 11), (11, 10)],
-        ["doc_a", "doc_b"],
+        ["u1", "u2"],
     )
     out = {
         r["doc"]: r["cluster_id"]
@@ -184,7 +184,7 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     from xero_api_etl_utilities_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6)], ["doc_a", "doc_b"]
+        [(1, 2), (2, 3), (5, 6)], ["u1", "u2"]
     )
     ckpt = str(tmp_path / "ckpt")
     out = {
@@ -204,7 +204,7 @@ def test_connected_components_nonconvergence_raises(spark):
     from xero_api_etl_utilities_spark.operators.graph import connected_components
 
     chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(20)], ["doc_a", "doc_b"]
+        [(i, i + 1) for i in range(20)], ["u1", "u2"]
     )
     with pytest.raises(RuntimeError, match="converge"):
         connected_components(chain, max_iters=2)

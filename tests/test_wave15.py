@@ -185,14 +185,14 @@ def test_catalog_compact_census_and_files(spark, tmp_path):
         )
 
     pre_rows, pre_files = _rows(), _files()
-    compact_store(spark, path, subs=("catalog",))
+    compact_store(spark, cat_dir)
     assert _rows() == pre_rows
     assert _files() < pre_files
     now = set(os.listdir(cat_dir))
     assert {"part=corpus", "part=batch-1", "part=batch-2"} <= now
     assert any(p.startswith("part=compact-") for p in now)
     post_files = _files()
-    compact_store(spark, path, subs=("catalog",))
+    compact_store(spark, cat_dir)
     assert _rows() == pre_rows and _files() == post_files
 
 

@@ -76,37 +76,68 @@ def _sorted_list(line: str, head: str) -> str:
     return head + ", ".join(items) + close + rest
 
 
-def _canonical_distinct_groups(text: str) -> str:
-    """A plan with an Expand (Spark's rewrite of several DISTINCT
-    aggregates) orders the distinct groups by a hash set that differs
-    from run to run: the group columns come out permuted in every
-    attribute list below the Expand, and each group's ``gid`` number
-    with them.  Sort those lists and drop the gid numbers."""
-    out = []
-    for line in text.split("\n"):
-        m = re.match(r"(?:Input|Keys|Results|Output|Aggregate Attributes) \[\d+\]: \[", line)
-        if line.startswith("Arguments: [[") and "gid#" in line:
-            line = "Arguments: " + _expand_arguments(line[len("Arguments: ") :])
-        elif m:
-            line = _sorted_list(line, m.group(0))
-        elif line.startswith("Arguments: hashpartitioning("):
-            line = _sorted_list(line, "Arguments: hashpartitioning(")
-        elif line.startswith("Arguments: ["):
-            line = _sorted_list(line, "Arguments: [")
-        out.append(re.sub(r"gid#N = \d+", "gid#N = G", line))
-    return "\n".join(out)
+_EXPAND = re.compile(r"^Arguments: \[\[.*gid#\d+.*$", re.M)
+_ATTR_LIST = re.compile(
+    r"(?:Input|Keys|Results|Output|Aggregate Attributes) \[\d+\]: \[|Arguments: hashpartitioning\("
+)
+_ORDERING = re.compile(r"Arguments: \[")
+
+
+def _expand_outputs(text: str) -> set[str]:
+    """The expression ids (``#NNN``) of every Expand's output
+    attributes, the group columns and ``gid``."""
+    ids = set()
+    for m in _EXPAND.finditer(text):
+        _, rest = _split_list(m.group(0)[len("Arguments: ") :])
+        outputs, _ = _split_list(rest.lstrip(", "))
+        ids |= {i for o in outputs for i in re.findall(r"#(\d+)", o)}
+    return ids
+
+
+def _permuted_list_head(line: str, expand_ids: set[str]) -> str | None:
+    """The head of ``line``'s list when the distinct-group permutation
+    reorders it: an attribute list or hash partitioning that holds an
+    Expand output, or an ordering on the Expand's ``gid`` (the sort the
+    planner puts under an aggregate of the groups; a query's own Sort
+    never sees ``gid``)."""
+    m = _ATTR_LIST.match(line) or _ORDERING.match(line)
+    if not m:
+        return None
+    items, _ = _split_list(line[m.end() - 1 :])
+    pattern = r"^gid#(\d+)" if m.re is _ORDERING else r"#(\d+)"
+    ids = {i for x in items for i in re.findall(pattern, x)}
+    return m.group(0) if ids & expand_ids else None
 
 
 def normalise(text: str, root: str) -> str:
     """``text`` with run-to-run counters replaced by ``N`` and the
-    checkout path ``root`` by ``.``; a plan with an Expand also gets
-    its distinct-group order made canonical."""
+    checkout path ``root`` by ``.``.
+
+    A plan with an Expand (Spark's rewrite of several DISTINCT
+    aggregates) orders the distinct groups by a hash set that differs
+    from run to run: the group columns come out permuted in the
+    Expand's projections and in every attribute list or hash
+    partitioning that holds its outputs, and each group's ``gid``
+    number with them.  Those lists are sorted, the projections become
+    sorted ``output=value`` sets, and the gid numbers are dropped;
+    every other list (a Sort's ordering, a Project's output) keeps its
+    order."""
     text = text.replace(f"file:{root.rstrip('/')}/", "file:./")
-    for pattern, repl in _IDS:
-        text = pattern.sub(repl, text)
-    if re.search(r"\bExpand \(\d+\)$", text, re.M):
-        text = _canonical_distinct_groups(text)
-    return text
+    expand_ids = _expand_outputs(text)
+    out = []
+    for line in text.split("\n"):
+        head = _permuted_list_head(line, expand_ids)
+        expand = _EXPAND.match(line) is not None
+        for pattern, repl in _IDS:
+            line = pattern.sub(repl, line)
+        if expand:
+            line = "Arguments: " + _expand_arguments(line[len("Arguments: ") :])
+        elif head:
+            line = _sorted_list(line, head)
+        if expand_ids:
+            line = re.sub(r"gid#N = \d+", "gid#N = G", line)
+        out.append(line)
+    return "\n".join(out)
 
 
 def main() -> int:

@@ -94,14 +94,17 @@ def asof_join_nearest(
     left: DataFrame,
     right: DataFrame,
     on: str,
+    left_ts: str,
+    right_ts: str,
 ) -> DataFrame:
     """NEAREST as-of join (pandas ``merge_asof(direction='nearest')``):
-    for each left row (time axis ``pts``), the same-key right row (time
-    axis ``ts``) with the smallest |Δts| in EITHER direction, ties
-    preferring the backward (at-or-before) candidate — sensor alignment
-    and nearest-reading lookups, where backward-only would discard a
+    for each left row, the same-key right row with the smallest
+    |``left_ts`` - ``right_ts``| in EITHER direction, ties preferring
+    the backward (at-or-before) candidate — sensor alignment and
+    nearest-reading lookups, where backward-only would discard a
     reading 1 s in the future in favor of one an hour old.  Each left
-    row gains the match's ``r_event_id`` and ``ts_right``.
+    row gains the match's other right columns (suffixed ``_right``
+    where the left has the name) and its ``<right_ts>_right``.
 
     Lowering: the SAME single union-sort pass as
     :func:`asof_join_backward`, with TWO frames over one window order
@@ -115,7 +118,7 @@ def asof_join_nearest(
     duplicate-ts right rows make ANY as-of fill order-dependent;
     dedup the right side first (the catalog query keeps max id)."""
     ts_is_timestamp = isinstance(
-        left.schema["pts"].dataType, (T.TimestampType, T.TimestampNTZType)
+        left.schema[left_ts].dataType, (T.TimestampType, T.TimestampNTZType)
     )
 
     def _n(col):
@@ -128,28 +131,29 @@ def asof_join_nearest(
             return F.unix_micros(col.cast("timestamp"))
         return col.cast("bigint")
 
+    right_cols = [c for c in right.columns if c not in (on, right_ts)]
     lrow_type = T.StructType(
         [T.StructField(c, left.schema[c].dataType, True) for c in left.columns]
     )
     rrow_type = T.StructType(
-        [
-            T.StructField("r_event_id", right.schema["r_event_id"].dataType, True),
-            T.StructField("_r_ts", right.schema["ts"].dataType, True),
-        ]
+        [T.StructField(c, right.schema[c].dataType, True) for c in right_cols]
+        + [T.StructField("_r_ts", right.schema[right_ts].dataType, True)]
     )
     lt = left.select(
         F.col(on).alias("_k"),
-        F.col("pts").alias("_ts"),
+        F.col(left_ts).alias("_ts"),
         F.lit(1).alias("_side"),
         F.struct(*[F.col(c) for c in left.columns]).alias("_lrow"),
         F.lit(None).cast(rrow_type).alias("_rrow"),
     )
     rt = right.select(
         F.col(on).alias("_k"),
-        F.col("ts").alias("_ts"),
+        F.col(right_ts).alias("_ts"),
         F.lit(0).alias("_side"),
         F.lit(None).cast(lrow_type).alias("_lrow"),
-        F.struct(F.col("r_event_id"), F.col("ts").alias("_r_ts")).alias("_rrow"),
+        F.struct(
+            *[F.col(c) for c in right_cols], F.col(right_ts).alias("_r_ts")
+        ).alias("_rrow"),
     )
     merged = lt.unionByName(rt)
     base = Window.partitionBy("_k").orderBy("_ts", "_side")
@@ -180,6 +184,9 @@ def asof_join_nearest(
     )
     return picked.select(
         F.col("_lrow.*"),
-        F.col("_rrow.r_event_id").alias("r_event_id"),
-        F.col("_rrow._r_ts").alias("ts_right"),
+        *[
+            F.col(f"_rrow.{c}").alias(f"{c}_right" if c in left.columns else c)
+            for c in right_cols
+        ],
+        F.col("_rrow._r_ts").alias(f"{right_ts}_right"),
     )

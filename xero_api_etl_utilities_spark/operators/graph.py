@@ -42,8 +42,9 @@ from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.operators.materialize import materialize
 
-# Endpoint columns of the co-occurrence edge lists plans/ builds
-# (``u1 < u2``, one row per undirected edge).
+# Endpoint columns of every edge list the operators here read (the
+# co-occurrence builders in plans/ emit ``u1 < u2``, one row per
+# undirected edge).
 _U1, _U2 = "u1", "u2"
 
 
@@ -52,9 +53,9 @@ def connected_components(
     max_iters: int = 25,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """(doc, cluster_id) for every vertex appearing in the
-    ``(doc_a, doc_b)`` pairs ``edges``; cluster_id = min vertex id of
-    the connected component.
+    """(doc, cluster_id) for every vertex appearing in the ``(u1, u2)``
+    edges ``edges``; cluster_id = min vertex id of the connected
+    component.
 
     Vertices not mentioned in any edge are absent — callers wanting
     singleton rows left-join this result against their corpus and
@@ -73,8 +74,8 @@ def connected_components(
     # MinHash+LSH candidate generation feeding a dedup clustering)
     # would re-execute per round.
     sym = materialize(
-        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+        edges.select(F.col(_U1).alias("src"), F.col(_U2).alias("dst"))
+        .union(edges.select(F.col(_U2).alias("src"), F.col(_U1).alias("dst")))
         .distinct(),
         checkpoint_dir,
     )

@@ -26,10 +26,11 @@ def merge_latest(
     changes: DataFrame,
     key_cols: list[str],
     version_col: str,
+    delete_col: str,
 ) -> DataFrame:
     """Collapse ``changes`` (base ∪ deltas, one row per key-version) to
     the highest-version row per key; rows whose winning version has the
-    boolean ``_del`` true are dropped from the snapshot.
+    boolean ``delete_col`` true are dropped from the snapshot.
 
     ``version_col`` must be totally ordered within a key (ties would
     make the winner nondeterministic — callers supply e.g. a batch
@@ -40,7 +41,7 @@ def merge_latest(
         F.max_by(F.struct(*payload), F.col(version_col)).alias("_w")
     )
     out = collapsed.select(*key_cols, "_w.*")
-    return out.filter(~F.col("_del")).drop("_del").drop(version_col)
+    return out.filter(~F.col(delete_col)).drop(delete_col).drop(version_col)
 
 
 def snapshot_diff(

@@ -64,18 +64,23 @@ def range_join_bucketed(
 def interval_overlap_join_bucketed(
     left: DataFrame,
     right: DataFrame,
+    key: str,
+    left_id: str,
     left_start: str,
     left_end: str,
+    right_id: str,
     right_start: str,
     right_end: str,
     bucket: int,
 ) -> DataFrame:
-    """Interval x interval OVERLAP SELF-join within a supplier: every
-    (l, r) pair with ``[l_start, l_end] ∩ [r_start, r_end] != ∅``, equal
-    ``supp`` and ``rid_a < rid_b`` — the second member of the range-join
-    family (the first joins points to intervals).  Sessions x
-    promotions, shift x outage, delivery-window collision analysis all
-    reduce to this.
+    """Interval x interval OVERLAP SELF-join: every (l, r) pair with
+    equal ``key``, ``[l_start, l_end] ∩ [r_start, r_end] != ∅`` and
+    ``l_id < r_id``, so each unordered pair of one input comes out once
+    — the second member of the range-join family (the first joins
+    points to intervals).  Sessions x promotions, shift x outage,
+    delivery-window collision analysis all reduce to this.  Output:
+    all left columns + all right columns (``key`` once); the sides must
+    name their other columns apart.
 
     Same bucketed equi-join trick, plus the CLAIM-BUCKET dedup rule:
     both sides explode to the buckets they span, so an overlapping
@@ -86,10 +91,9 @@ def interval_overlap_join_bucketed(
     (``greatest(ls, rs) div W``): exactly-once by construction, zero
     extra shuffle.
 
-    The pair-ordering predicate ``rid_a < rid_b`` is applied WITH the
+    The pair-ordering predicate ``l_id < r_id`` is applied WITH the
     residual overlap filter, so it prunes before anything else
-    materializes.  Column name collisions are the caller's to avoid
-    (alias the sides)."""
+    materializes."""
     if bucket <= 0:
         raise ValueError("bucket width must be a positive integer")
     l = left.withColumn(
@@ -117,6 +121,6 @@ def interval_overlap_join_bucketed(
             F.col("_bkt")
             == F.expr(f"greatest({left_start}, {right_start}) div {bucket}")
         )
-        & (F.col("rid_a") < F.col("rid_b"))
+        & (F.col(left_id) < F.col(right_id))
     )
-    return l.join(r, on=["_bkt", "supp"], how="inner").filter(cond).drop("_bkt")
+    return l.join(r, on=["_bkt", key], how="inner").filter(cond).drop("_bkt")

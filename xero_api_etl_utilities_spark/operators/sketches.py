@@ -38,7 +38,7 @@ def _bucket(key_col, i: int, w: int):
     )
 
 
-def cms_pairs(df: DataFrame, key: str, d: int = 4, w: int = 64) -> DataFrame:
+def cms_pairs(df: DataFrame, key: str, d: int, w: int) -> DataFrame:
     """The stateless projection under the sketch: each row exploded to
     its ``d`` ``(cms_row, cms_bucket)`` cells; :func:`cms_build`
     counts them."""
@@ -53,7 +53,7 @@ def cms_pairs(df: DataFrame, key: str, d: int = 4, w: int = 64) -> DataFrame:
     )
 
 
-def cms_build(df: DataFrame, key: str, d: int = 4, w: int = 64) -> DataFrame:
+def cms_build(df: DataFrame, key: str, d: int, w: int) -> DataFrame:
     """The d×w sketch as rows ``(cms_row, cms_bucket, cms_count)``.
 
     One scan of ``df``; at most ``d·w`` output rows (absent cells are
@@ -64,15 +64,18 @@ def cms_build(df: DataFrame, key: str, d: int = 4, w: int = 64) -> DataFrame:
     )
 
 
-def cms_estimate(candidates: DataFrame, sketch: DataFrame, key: str) -> DataFrame:
+def cms_estimate(
+    candidates: DataFrame, sketch: DataFrame, key: str, d: int, w: int
+) -> DataFrame:
     """Attach ``est_count`` (the CMS upper-bound estimate) to every row
-    of ``candidates``, read from a ``cms_build`` sketch of the default
-    4×64 shape. The sketch side is broadcast (<= 256 rows by
-    construction); missing cells read as 0 via the left join."""
+    of ``candidates``, read from a ``cms_build`` sketch of the same
+    ``d × w`` shape: another shape hashes keys into the wrong cells.
+    The sketch side is broadcast (<= d·w rows by construction); missing
+    cells read as 0 via the left join."""
     keyed = candidates.select(
         F.col(key),
         F.posexplode(
-            F.array(*[_bucket(F.col(key), i, 64) for i in range(4)])
+            F.array(*[_bucket(F.col(key), i, w) for i in range(d)])
         ).alias("cms_row", "cms_bucket"),
     )
     return (

@@ -54,6 +54,7 @@ def merge_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.unionByName(updates).unionByName(deletes),
         key_cols=["o_orderkey"],
         version_col="_v",
+        delete_col="_del",
     )
     # summarize so the hashed result is small and stable: per surviving
     # priority, how many orders and how much money

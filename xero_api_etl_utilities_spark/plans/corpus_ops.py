@@ -385,7 +385,9 @@ def _build_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = _verified_pairs(spark, sf_dir)  # shared, materialized once
-    comp = connected_components(pairs)
+    comp = connected_components(
+        pairs.select(F.col("doc_a").alias("u1"), F.col("doc_b").alias("u2"))
+    )
     return docs.join(comp, docs["doc_id"] == comp["doc"], "left").select(
         docs["doc_id"],
         F.coalesce(comp["cluster_id"], docs["doc_id"]).alias("cluster_id"),

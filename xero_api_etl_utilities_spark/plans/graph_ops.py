@@ -243,7 +243,7 @@ def events_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     sketch = cms_build(ev, "user_id", d=_CMS_D, w=_CMS_W)
     exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_count"))
-    est = cms_estimate(exact, sketch, "user_id")
+    est = cms_estimate(exact, sketch, "user_id", d=_CMS_D, w=_CMS_W)
     return (
         exact.join(est, "user_id")
         .select("user_id", "est_count", "exact_count")

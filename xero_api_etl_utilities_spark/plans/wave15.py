@@ -392,9 +392,9 @@ def dedup_catalog_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch until file-open cost dominates every scan."""
     from xero_api_etl_utilities_spark.sources.writer import compact_store
 
-    path = publish_absorb_replay(spark, sf_dir)
-    compact_store(spark, path, subs=("catalog",))
-    compacted = spark.read.parquet(os.path.join(path, "catalog")).select(
+    catalog = os.path.join(publish_absorb_replay(spark, sf_dir), "catalog")
+    compact_store(spark, catalog)
+    compacted = spark.read.parquet(catalog).select(
         "doc", F.col("band").cast("int").alias("band"), "bh"
     )
     return (

@@ -437,13 +437,7 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e_day").alias("eb"),
     )
     pairs = interval_overlap_join_bucketed(
-        a,
-        b,
-        "sa",
-        "ea",
-        "sb",
-        "eb",
-        bucket=32,
+        a, b, "supp", "rid_a", "sa", "ea", "rid_b", "sb", "eb", bucket=32
     )
     return (
         pairs.groupBy("supp")
@@ -876,7 +870,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "ts")
         .agg(F.max("event_id").alias("r_event_id"))
     )
-    nearest = asof_join_nearest(probes, right, on="user_id")
+    nearest = asof_join_nearest(probes, right, "user_id", "pts", "ts")
     return (
         nearest.filter(F.col("r_event_id").isNotNull())
         .select(

@@ -102,25 +102,20 @@ def _part_parquet_files(d: str) -> list[str]:
     ]
 
 
-def compact_store(
-    spark,
-    store_dir: str,
-    subs: tuple[str, ...] = ("catalog", "docs"),
-) -> dict[str, int]:
-    """Small-file compaction of a partitioned store: every absorbed
-    batch appends one ``part=<batch>`` partition of kilobyte-scale
-    files to each sub-store (``<store>/catalog``, ``<store>/docs``),
-    and at crawl cadence per-file open/footer cost comes to dominate
-    every scan.  Each sub-store's live partitions are merged into ONE
-    new ``part=compact-<k>`` partition of ``ceil(total_bytes /
-    128 MiB)`` files, sized from the CURRENT on-disk bytes,
-    while every prior partition directory survives as an EMPTY marker
-    dir holding only an ``_ABSORBED`` flag file — a replay guard that
-    tests ``os.path.isdir`` on a batch's partition dir stays a no-op,
-    and Spark's file listing ignores both the empty dirs and the
-    underscore file, so readers see exactly the compacted rows.
-    ``repartition`` (a real shuffle) rather than ``coalesce`` keeps the
-    read wide and only the write narrow.
+def compact_store(spark, root: str) -> int:
+    """Small-file compaction of one partitioned sub-store ``root``
+    (e.g. ``<store>/catalog``): every absorbed batch appends one
+    ``part=<batch>`` partition of kilobyte-scale files, and at crawl
+    cadence per-file open/footer cost comes to dominate every scan.
+    The live partitions are merged into ONE new ``part=compact-<k>``
+    partition of ``ceil(total_bytes / 128 MiB)`` files, sized from the
+    CURRENT on-disk bytes, while every prior partition directory
+    survives as an EMPTY marker dir holding only an ``_ABSORBED`` flag
+    file — a replay guard that tests ``os.path.isdir`` on a batch's
+    partition dir stays a no-op, and Spark's file listing ignores both
+    the empty dirs and the underscore file, so readers see exactly the
+    compacted rows.  ``repartition`` (a real shuffle) rather than
+    ``coalesce`` keeps the read wide and only the write narrow.
 
     Crash safety: the new layout (compact parquet + marker dirs) is
     assembled in a sibling ``.compacting`` tmp, then swapped in via two
@@ -136,66 +131,52 @@ def compact_store(
 
     Run it quiesced: a batch absorbed mid-compaction could publish a
     new partition into the pre-swap root and lose it.
-    Returns {sub-store: parquet file count after compaction}."""
+    Returns the parquet file count after compaction."""
     import math
     import re
     import shutil
 
-    out: dict[str, int] = {}
-    for sub in subs:
-        root = os.path.join(store_dir, sub)
-        tmp, old = f"{root}.compacting", f"{root}.precompact"
-        # recovery preamble: discard a half-built tmp; restore a
-        # precompact stranded between the renames, or discard one left
-        # after publish
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        if os.path.isdir(old):
-            if not os.path.isdir(root):
-                os.rename(old, root)
-            else:
-                shutil.rmtree(old)
-        parts = sorted(
-            p for p in os.listdir(root) if p.startswith("part=")
-        )
-        live = [
-            p for p in parts if _part_parquet_files(os.path.join(root, p))
-        ]
-        if not live:
-            out[sub] = 0
-            continue
-        total = sum(
-            os.path.getsize(f)
-            for p in live
-            for f in _part_parquet_files(os.path.join(root, p))
-        )
-        n_files = max(1, math.ceil(total / (128 * 1024 * 1024)))
-        k = 1 + max(
-            (
-                int(m.group(1))
-                for p in parts
-                if (m := re.fullmatch(r"part=compact-(\d+)", p))
-            ),
-            default=0,
-        )
-        spark.read.parquet(
-            *(os.path.join(root, p) for p in live)
-        ).repartition(n_files).write.parquet(
-            os.path.join(tmp, f"part=compact-{k:06d}")
-        )
-        for p in parts:
-            marker = os.path.join(tmp, p)
-            os.makedirs(marker, exist_ok=True)
-            open(os.path.join(marker, "_ABSORBED"), "w").close()
-        os.rename(root, old)
-        os.rename(tmp, root)
-        shutil.rmtree(old)
-        out[sub] = len(
-            _part_parquet_files(
-                os.path.join(root, f"part=compact-{k:06d}")
-            )
-        )
-    return out
+    tmp, old = f"{root}.compacting", f"{root}.precompact"
+    # recovery preamble: discard a half-built tmp; restore a precompact
+    # stranded between the renames, or discard one left after publish
+    if os.path.isdir(tmp):
+        shutil.rmtree(tmp)
+    if os.path.isdir(old):
+        if not os.path.isdir(root):
+            os.rename(old, root)
+        else:
+            shutil.rmtree(old)
+    parts = sorted(p for p in os.listdir(root) if p.startswith("part="))
+    live = [p for p in parts if _part_parquet_files(os.path.join(root, p))]
+    if not live:
+        return 0
+    total = sum(
+        os.path.getsize(f)
+        for p in live
+        for f in _part_parquet_files(os.path.join(root, p))
+    )
+    n_files = max(1, math.ceil(total / (128 * 1024 * 1024)))
+    k = 1 + max(
+        (
+            int(m.group(1))
+            for p in parts
+            if (m := re.fullmatch(r"part=compact-(\d+)", p))
+        ),
+        default=0,
+    )
+    spark.read.parquet(
+        *(os.path.join(root, p) for p in live)
+    ).repartition(n_files).write.parquet(
+        os.path.join(tmp, f"part=compact-{k:06d}")
+    )
+    for p in parts:
+        marker = os.path.join(tmp, p)
+        os.makedirs(marker, exist_ok=True)
+        open(os.path.join(marker, "_ABSORBED"), "w").close()
+    os.rename(root, old)
+    os.rename(tmp, root)
+    shutil.rmtree(old)
+    return len(_part_parquet_files(os.path.join(root, f"part=compact-{k:06d}")))
 
 
 def write_zorder_table(
