@@ -155,13 +155,14 @@ def test_swap_policy_decision_boundary(spark):
 
 
 def test_catalog_compact_census_and_files(spark, tmp_path):
-    """X181: compacting the replay store's catalog must preserve the
-    band rows exactly (set equality of the read-back), strictly reduce
-    the parquet file count, keep the absorbed partitions' dirs alive
-    as markers, and be idempotent on a second invocation.  Built as a
+    """Compacting the replay store's catalog must preserve the band
+    rows exactly (set equality of the read-back), strictly reduce the
+    parquet file count, keep the absorbed partitions' dirs alive as
+    markers, and be idempotent on a second invocation.  Built as a
     PRIVATE store in tmp_path — the session-shared memoized store may
-    already be compacted by the X181 catalog entry running earlier in
-    the same session, which would void the file-count baseline."""
+    already be compacted by the ``dedup_catalog_compact`` entry running
+    earlier in the same session, which would void the file-count
+    baseline."""
     from xero_api_etl_utilities_spark.plans.wave15 import (
         build_absorb_replay,
     )

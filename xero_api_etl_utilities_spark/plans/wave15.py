@@ -373,11 +373,12 @@ _HASH_P = 1_000_000_007
 
 
 def dedup_catalog_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X181: prove the small-files housekeeping preserves the store
-    bit-for-bit — the X179 replay store's catalog partitions (corpus +
-    two absorbed batches) are merged by ``compact_store`` into one
+    """Prove the small-files housekeeping preserves the store
+    bit-for-bit — the absorb replay store's catalog partitions (corpus
+    + two absorbed batches) are merged by ``compact_store`` into one
     size-targeted partition (replay-guard marker dirs preserved), and
-    the compacted read-back is censused per band exactly like X176:
+    the compacted read-back is censused per band exactly like
+    ``dedup_catalog_absorb``:
     row count, distinct documents, distinct buckets, Σ bh mod p.  The
     oracle REBUILDS the banding from the raw text of every document,
     so hash-equality extends the absorb identity through compaction:
