@@ -22,6 +22,19 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def ckpt_dir(spark, tmp_path):
+    """Give the shared session a checkpoint directory for one test, so
+    every lineage cut checkpoints reliably into it, and take it away
+    afterwards: a later test must not checkpoint into a deleted
+    ``tmp_path``."""
+    sc = spark.sparkContext
+    ckpt = str(tmp_path / "ckpt")
+    sc.setCheckpointDir(ckpt)
+    yield ckpt
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"

@@ -86,24 +86,32 @@ def test_every_package_module_is_reachable():
 
 
 def test_only_materialize_reads_the_compute_width():
-    """The cluster's compute width (``defaultParallelism``) is read in
-    ``operators/materialize.py`` alone: every widening goes through
-    ``compute_width``, so a rule about when to widen has one function
-    to change.  The walk is static, over every package module's AST."""
+    """The cluster's compute width (``defaultParallelism``) is read, and
+    lineage is cut (``localCheckpoint``/``checkpoint``) or the checkpoint
+    directory read or set, in ``operators/materialize.py`` alone: every
+    widening goes through ``compute_width`` and every cut through
+    ``materialize``, so a rule about when to widen or where a cut is
+    written has one function to change.  The walk is static, over every
+    package module's AST."""
     import ast
     from pathlib import Path
 
+    attrs = {
+        "defaultParallelism",
+        "localCheckpoint",
+        "checkpoint",
+        "setCheckpointDir",
+        "getCheckpointDir",
+    }
     base = Path(__file__).resolve().parent.parent / "xero_api_etl_utilities_spark"
     readers = sorted(
-        str(p.relative_to(base))
+        f"{p.relative_to(base)}:{node.lineno} {node.attr}"
         for p in base.rglob("*.py")
-        if any(
-            isinstance(node, ast.Attribute) and node.attr == "defaultParallelism"
-            for node in ast.walk(ast.parse(p.read_text()))
-        )
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr in attrs
     )
-    others = [r for r in readers if r != "operators/materialize.py"]
-    assert not others, f"modules reading defaultParallelism: {others}"
+    others = [r for r in readers if not r.startswith("operators/materialize.py:")]
+    assert not others, f"outside operators/materialize.py: {others}"
 
 
 # Defaulted parameters kept although one value reaches each of them from
@@ -119,11 +127,6 @@ KEPT: dict[str, tuple[str, str]] = {
     "sources/rest.py": (
         "deployment",
         "endpoints, headers and timeouts of the accounting API",
-    ),
-    "checkpoint_dir": (
-        "deployment",
-        "reliable-storage path of the fault-recovery route "
-        "(operators/materialize.py), which a long cluster run passes",
     ),
     "get_spark(shuffle_partitions)": (
         "seam",

@@ -319,6 +319,21 @@ def test_ivf_centroid_twins_bit_identical(spark):
     assert a == b  # exact float equality, not approx
 
 
+def test_minhash_coefficients_are_a_universal_family():
+    """The MinHash table that both the Spark plan and its DuckDB oracle
+    read: ``(a*x + b) mod P`` is a permutation family only when every
+    ``a`` is a non-zero residue and ``b`` a residue; distinct ``a`` keep
+    the 64 hashes from collapsing into fewer.  The oracle replays this
+    table, so only this test checks it."""
+    from xero_api_etl_utilities_spark.operators.dedup import _P, minhash_coeffs
+
+    coeffs = minhash_coeffs(64, 42)
+    assert len(coeffs) == 64
+    assert all(a % 2 == 1 and 1 <= a < _P for a, _ in coeffs)
+    assert all(0 <= b < _P for _, b in coeffs)
+    assert len({a for a, _ in coeffs}) == 64
+
+
 def test_sampling_deterministic_and_disjoint(spark):
     """Systematic sample is rerun/partitioning-stable; split is
     disjoint+exhaustive with roughly the 80/10/10 proportions; the two

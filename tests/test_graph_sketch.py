@@ -6,6 +6,7 @@ the two-level sweep-line prefix decomposition (cross-midnight carry).
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from pyspark.sql import functions as F
 
@@ -147,7 +148,7 @@ class TestPageRankInt:
         # integer truncation loses a bounded amount of mass, never gains
         assert scale * 0.99 < total <= scale
 
-    def test_lazy_rounds_match_materialized_rounds(self, spark):
+    def test_lazy_rounds_match_materialized_rounds(self, spark, request):
         """The fixed-round recurrences run as one lazy plan; the value
         must equal the per-round-materialized form byte for byte."""
         from xero_api_etl_utilities_spark.operators.graph import (
@@ -163,21 +164,18 @@ class TestPageRankInt:
         lpa_lazy = {
             r["v"]: r["label"] for r in label_propagation(edges).collect()
         }
-        # reference: the checkpoint_dir path materializes every round
-        # (a completely different physical plan, same recurrence)
-        import tempfile
-
-        with tempfile.TemporaryDirectory() as ck:
-            pr_ck = {
-                r["v"]: r["rank"]
-                for r in pagerank_int(edges, checkpoint_dir=ck).collect()
-            }
-            lpa_ck = {
-                r["v"]: r["label"]
-                for r in label_propagation(edges, checkpoint_dir=ck).collect()
-            }
+        # reference: under a session checkpoint directory every round is
+        # materialized (a completely different physical plan, same
+        # recurrence)
+        ckpt = request.getfixturevalue("ckpt_dir")
+        pr_ck = {r["v"]: r["rank"] for r in pagerank_int(edges).collect()}
+        lpa_ck = {r["v"]: r["label"] for r in label_propagation(edges).collect()}
         assert lazy == pr_ck
         assert lpa_lazy == lpa_ck
+        # one checkpoint per materialize: the edge list and its directed
+        # form, then one per round (5 PageRank, 4 LPA)
+        (run,) = os.listdir(ckpt)
+        assert len(os.listdir(os.path.join(ckpt, run))) == 2 * 2 + 5 + 4
 
 
 class TestKCore:

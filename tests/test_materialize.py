@@ -1,4 +1,4 @@
-"""Reliable checkpointing and the session memo registry in
+"""Where lineage cuts are written, and the session memo registry, in
 ``operators.materialize``."""
 
 from __future__ import annotations
@@ -20,29 +20,29 @@ def _session(app_id: str):
     return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
 
 
-def test_checkpoint_dir_is_set_only_when_it_changes(spark, tmp_path):
-    """Two calls with one directory share its checkpoint subdirectory; a
-    call with a different directory, or after the context was re-pointed
-    elsewhere, points the context at the requested one."""
-    sc = spark.sparkContext
-    first, second = str(tmp_path / "a"), str(tmp_path / "b")
-    df = spark.range(10)
+def _checkpoint_file(df) -> str | None:
+    """Where a materialized frame's rows were written, or None when they
+    live in executor storage only."""
+    f = df._jdf.queryExecution().analyzed().rdd().getCheckpointFile()
+    return f.get() if f.isDefined() else None
 
-    assert materialize(df, first).count() == 10
-    set_first = sc.getCheckpointDir()
-    assert materialize(df, first).count() == 10
-    assert sc.getCheckpointDir() == set_first
-    assert len(os.listdir(first)) == 1  # one UUID subdirectory for both calls
 
-    assert materialize(df, second).count() == 10
-    assert sc.getCheckpointDir() != set_first
-    assert os.path.dirname(sc.getCheckpointDir()).endswith(second)
-    assert len(os.listdir(second)) == 1
-    assert len(os.listdir(first)) == 1
+def test_materialize_checkpoints_under_the_session_directory(spark, ckpt_dir):
+    out = materialize(spark.range(10))
+    written = _checkpoint_file(out)
+    assert written is not None
+    assert written.startswith(f"file:{ckpt_dir}/")
+    assert os.listdir(written.removeprefix("file:"))
+    assert sorted(r.id for r in out.collect()) == list(range(10))
 
-    sc.setCheckpointDir(first)  # re-pointed outside materialize
-    assert materialize(df, second).count() == 10
-    assert os.path.dirname(sc.getCheckpointDir()).endswith(second)
+
+def test_materialize_writes_no_file_without_a_session_directory(spark):
+    # runs after a test that used the ``ckpt_dir`` fixture, so this
+    # also sees the fixture leave the session without a directory
+    assert spark.sparkContext.getCheckpointDir() is None
+    out = materialize(spark.range(10))
+    assert _checkpoint_file(out) is None
+    assert sorted(r.id for r in out.collect()) == list(range(10))
 
 
 def test_memo_builds_once_per_session_and_path(tmp_path):

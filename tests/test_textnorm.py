@@ -177,25 +177,24 @@ def test_connected_components(spark):
     assert out == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 10: 10, 11: 10, 12: 10, 13: 10}
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    # checkpoint_dir switches per-round materialization from
-    # executor-local blocks to reliable DFS checkpoints (the
+def test_connected_components_reliable_checkpoint(spark, ckpt_dir):
+    # a session checkpoint directory switches per-round materialization
+    # from executor-local blocks to reliable checkpoints (the
     # fault-tolerance mode for long cluster runs); results identical
+    import os
+
     from xero_api_etl_utilities_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6)], ["u1", "u2"]
     )
-    ckpt = str(tmp_path / "ckpt")
     out = {
         r["doc"]: r["cluster_id"]
-        for r in connected_components(edges, checkpoint_dir=ckpt).collect()
+        for r in connected_components(edges).collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
-    # the reliable checkpoint actually wrote to the requested dir
-    import os
-
-    assert any(os.scandir(ckpt))
+    # the reliable checkpoints went into the session's directory
+    assert os.listdir(ckpt_dir)
 
 
 def test_connected_components_nonconvergence_raises(spark):

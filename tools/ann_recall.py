@@ -74,12 +74,13 @@ def sweep(spark, emb, parquet_path: str, label: str, query_pred) -> list[dict]:
 
     from xero_api_etl_utilities_spark.operators import ivf
     from xero_api_etl_utilities_spark.operators import similarity as sim
+    from xero_api_etl_utilities_spark.operators.materialize import materialize
     from xero_api_etl_utilities_spark.operators.quantize import (
         pq_codes,
         train_pq_codebooks_from_parquet,
     )
 
-    emb = emb.localCheckpoint()
+    emb = materialize(emb)
     queries = emb.filter(query_pred(F.col("vec_id")))
     n_q = queries.count()
     exact = _per_query_sets(sim.topk_bruteforce(queries, emb, k=K).collect())
@@ -101,9 +102,8 @@ def sweep(spark, emb, parquet_path: str, label: str, query_pred) -> list[dict]:
     for m in MS:
         books = train_pq_codebooks_from_parquet(parquet_path, m=m)
         cells = ivf.assign_cells(emb, cents, "embedding", 1).select("vec_id", "cell")
-        index = (
+        index = materialize(
             cells.join(pq_codes(emb, "vec_id", "embedding", books), "vec_id")
-            .localCheckpoint()
         )
         for nprobe in NPROBES:
             t0 = time.perf_counter()

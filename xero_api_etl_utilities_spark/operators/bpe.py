@@ -94,11 +94,7 @@ def _apply_merge(frame: DataFrame, left: str, right: str) -> DataFrame:
     return frame.withColumn("syms", F.expr(fold))
 
 
-def bpe_merges(
-    docs: DataFrame,
-    rounds: int,
-    checkpoint_dir: str | None = None,
-) -> list[tuple[int, str, str, int]]:
+def bpe_merges(docs: DataFrame, rounds: int) -> list[tuple[int, str, str, int]]:
     """Train ``rounds`` BPE merges; returns
     [(round, left_sym, right_sym, pair_count), ...].
 
@@ -107,7 +103,7 @@ def bpe_merges(
     like IVF's trained centroids); everything else stays distributed.
     Lineage is truncated per round via :func:`materialize` so round k
     does not replay rounds 1..k-1's folds."""
-    frame = materialize(word_symbol_frame(docs), checkpoint_dir)
+    frame = materialize(word_symbol_frame(docs))
     out: list[tuple[int, str, str, int]] = []
     for k in range(1, rounds + 1):
         top = (
@@ -120,5 +116,5 @@ def bpe_merges(
             break
         l, r, cnt = top[0]["l"], top[0]["r"], int(top[0]["cnt"])
         out.append((k, l, r, cnt))
-        frame = materialize(_apply_merge(frame, l, r), checkpoint_dir)
+        frame = materialize(_apply_merge(frame, l, r))
     return out

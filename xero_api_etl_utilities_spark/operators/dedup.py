@@ -153,7 +153,6 @@ def jaccard_verify(
     text_col: str,
     min_sim_num: int = 7,
     min_sim_den: int = 10,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact token-Jaccard verification of CANDIDATE pairs — the stage a
     production dedup pipeline runs between LSH candidate generation
@@ -176,7 +175,7 @@ def jaccard_verify(
     ``cands`` is taken as given; see :func:`_pair_intersections` for
     why it should arrive materialized.
     """
-    pairs = _pair_intersections(cands, docs, id_col, text_col, checkpoint_dir)
+    pairs = _pair_intersections(cands, docs, id_col, text_col)
     return (
         pairs.withColumn(
             "union_size",
@@ -191,11 +190,7 @@ def jaccard_verify(
 
 
 def _pair_intersections(
-    cands: DataFrame,
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    checkpoint_dir: str | None,
+    cands: DataFrame, docs: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Shared verify substrate: each candidate pair with its exact
     per-pair (|A∩B|, |A|, |B|) integers attached — columns
@@ -240,8 +235,7 @@ def _pair_intersections(
             F.array_distinct(token_ngrams(tokens(F.col(text_col)), 1)).alias(
                 "shset"
             ),
-        ),
-        checkpoint_dir,
+        )
     )
     a = sets.select(
         F.col("doc").alias("doc_a"),
@@ -267,7 +261,7 @@ def _pair_intersections(
             "size_b",
         )
     )
-    return materialize(stats, checkpoint_dir)
+    return materialize(stats)
 
 
 def containment_verify(
@@ -275,7 +269,6 @@ def containment_verify(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Exact-CONTAINMENT verification of candidate pairs: keep (a, b)
     when |A∩B| ≥ 0.9·min(|A|, |B|) — i.e. the smaller document's
@@ -293,7 +286,7 @@ def containment_verify(
     Empty shingle sets never pass (min size 0 ⇒ the strict ``> 0``
     size guard filters the pair), mirroring jaccard's union_size > 0.
     """
-    pairs = _pair_intersections(cands, docs, id_col, text_col, checkpoint_dir)
+    pairs = _pair_intersections(cands, docs, id_col, text_col)
     return (
         pairs.withColumn(
             "min_size", F.least(F.col("size_a"), F.col("size_b"))

@@ -25,9 +25,9 @@ Scale design:
   per-round execution anyway, and lazy rounds would re-execute prior
   rounds' subtrees.  FIXED-ROUND operators (pagerank_int,
   label_propagation) keep the whole recurrence as ONE lazy plan
-  (no per-round checkpoint job or driver round-trip);
-  per-round truncation there is OPT-IN via ``checkpoint_dir`` (the
-  fault-tolerance knob); their round counts (5 and 4) keep the nested
+  (no per-round checkpoint job or driver round-trip) and cut it every
+  round only when the session checkpoints to reliable storage (see
+  :mod:`materialize`); their round counts (5 and 4) keep the nested
   plan shallow;
 - convergence is detected by the label-sum invariant: labels only
   ever decrease, so an unchanged sum ⇔ fixpoint. The sum runs in
@@ -40,7 +40,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xero_api_etl_utilities_spark.operators.materialize import materialize
+from xero_api_etl_utilities_spark.operators.materialize import (
+    materialize,
+    reliable_checkpoints,
+)
 
 # Endpoint columns of every edge list the operators here read (the
 # co-occurrence builders in plans/ emit ``u1 < u2``, one row per
@@ -48,11 +51,7 @@ from xero_api_etl_utilities_spark.operators.materialize import materialize
 _U1, _U2 = "u1", "u2"
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iters: int = 25,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iters: int = 25) -> DataFrame:
     """(doc, cluster_id) for every vertex appearing in the ``(u1, u2)``
     edges ``edges``; cluster_id = min vertex id of the connected
     component.
@@ -64,10 +63,6 @@ def connected_components(
     Raises RuntimeError if ``max_iters`` rounds pass without reaching
     the fixpoint (component diameter > max_iters): returning a
     half-propagated labeling would silently split clusters.
-
-    ``checkpoint_dir``: per-round materialization is executor-local by
-    default (fast, single-JVM-safe); pass a reliable-storage path for
-    long cluster runs — see :mod:`materialize` for the trade.
     """
     # Materialize the symmetric edge list ONCE: it is joined every
     # round, and without this the whole upstream pipeline (e.g. the
@@ -76,14 +71,12 @@ def connected_components(
     sym = materialize(
         edges.select(F.col(_U1).alias("src"), F.col(_U2).alias("dst"))
         .union(edges.select(F.col(_U2).alias("src"), F.col(_U1).alias("dst")))
-        .distinct(),
-        checkpoint_dir,
+        .distinct()
     )
     labels = materialize(
         sym.select(F.col("src").alias("doc"))
         .distinct()
-        .select("doc", F.col("doc").alias("lbl")),
-        checkpoint_dir,
+        .select("doc", F.col("doc").alias("lbl"))
     )
     prev_sum = labels.agg(F.sum(F.col("lbl").cast("decimal(38,0)"))).collect()[0][0]
     for _ in range(max_iters):
@@ -97,8 +90,7 @@ def connected_components(
             labels.join(nbr, "doc", "left").select(
                 "doc",
                 F.least(F.col("lbl"), F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
-            ),
-            checkpoint_dir,
+            )
         )
         cur_sum = labels.agg(F.sum(F.col("lbl").cast("decimal(38,0)"))).collect()[0][0]
         if cur_sum == prev_sum:
@@ -187,10 +179,7 @@ def triangles(edges: DataFrame) -> DataFrame:
     )
 
 
-def pagerank_int(
-    edges: DataFrame,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def pagerank_int(edges: DataFrame) -> DataFrame:
     """Five rounds of PageRank over an UNDIRECTED graph in pure integer
     arithmetic — every rank is a bigint in units of ``1/scale``
     (scale = 10^12), so the result is
@@ -209,10 +198,10 @@ def pagerank_int(
     ONE groupBy-sum — the same bounded pattern as
     :func:`connected_components`, with partial aggregation absorbing
     hub skew map-side. The round count is FIXED (no driver-side
-    convergence probe), so the whole recurrence stays ONE lazy plan;
-    per-round truncation is OPT-IN via ``checkpoint_dir`` (reliable
-    storage — the knob a multi-hour 100 TB run uses to survive
-    executor loss mid-recurrence). ``n`` is a 1-row driver scalar
+    convergence probe), so the whole recurrence stays ONE lazy plan,
+    cut every round only when the session checkpoints to reliable
+    storage, so that a multi-hour run survives executor loss
+    mid-recurrence. ``n`` is a 1-row driver scalar
     (documented pattern). Undirected edges are expanded to both
     directions, so every vertex has degree >= 1 — no dangling-mass
     term needed.
@@ -220,11 +209,11 @@ def pagerank_int(
     a, b = F.col(_U1), F.col(_U2)
     # edges feeds both union branches: materialize so the upstream
     # builder runs once (aggregate-diamond policy, PLANS.md)
-    edges = materialize(edges, checkpoint_dir)
+    edges = materialize(edges)
     directed = edges.select(a.alias("src"), b.alias("dst")).unionAll(
         edges.select(b.alias("src"), a.alias("dst"))
     )
-    directed = materialize(directed, checkpoint_dir)
+    directed = materialize(directed)
     deg = directed.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     n = deg.count()  # vertex count: 1-row driver scalar
     scale = 10**12
@@ -233,6 +222,7 @@ def pagerank_int(
         F.col("src").alias("v"), F.lit(scale // n).cast("long").alias("rank")
     )
     withdeg = directed.join(deg, "src")
+    per_round = reliable_checkpoints(edges)
     for _ in range(5):
         contrib = withdeg.join(ranks, withdeg.src == ranks.v).select(
             F.col("dst"), F.expr("rank div deg").alias("c")
@@ -252,19 +242,15 @@ def pagerank_int(
         # the whole recurrence stays ONE lazy plan — per-round
         # materialization spent a checkpoint job + driver round-trip
         # per iteration for a 5-deep lineage (measured 4.6 → 2.5 s at
-        # sf0.1).  With a reliable checkpoint_dir the per-round
-        # truncation is kept: that knob exists exactly so a multi-hour
-        # 100 TB run survives executor loss mid-recurrence.
-        if checkpoint_dir is not None:
-            ranks = materialize(ranks, checkpoint_dir)
+        # sf0.1).  Under reliable storage the per-round truncation is
+        # kept, so a multi-hour run survives executor loss
+        # mid-recurrence.
+        if per_round:
+            ranks = materialize(ranks)
     return ranks
 
 
-def label_propagation(
-    edges: DataFrame,
-    iters: int = 4,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iters: int = 4) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan's
     LPA) over an UNDIRECTED graph, made fully deterministic: every
     vertex starts labeled with its own id, and each round adopts the
@@ -283,18 +269,19 @@ def label_propagation(
     (dst, label) count aggregate + ONE per-dst argmax via ``max_by``
     — the same bounded shuffle pattern as :func:`pagerank_int`, and
     the same laziness contract: fixed rounds, one lazy plan, per-round
-    truncation opt-in via ``checkpoint_dir``.  The catalog runs 4
+    truncation only under reliable storage.  The catalog runs 4
     rounds; a test runs 1 to see the tie-break.  Returns
     ``(v, label)``."""
     a, b = F.col(_U1), F.col(_U2)
-    edges = materialize(edges, checkpoint_dir)
+    edges = materialize(edges)
     directed = edges.select(a.alias("src"), b.alias("dst")).unionAll(
         edges.select(b.alias("src"), a.alias("dst"))
     )
-    directed = materialize(directed, checkpoint_dir)
+    directed = materialize(directed)
     labels = directed.select(F.col("src").alias("v")).distinct().select(
         "v", F.col("v").alias("label")
     )
+    per_round = reliable_checkpoints(edges)
     for _ in range(iters):
         msgs = directed.join(labels, directed.src == labels.v).select(
             F.col("dst"), F.col("label")
@@ -307,18 +294,13 @@ def label_propagation(
             .select(F.col("dst").alias("v"), "label")
         )
         # fixed rounds, no driver convergence check → lazy recurrence,
-        # same rationale (and the same checkpoint_dir escape hatch for
-        # fault tolerance) as pagerank_int above
-        if checkpoint_dir is not None:
-            labels = materialize(labels, checkpoint_dir)
+        # cut per round under reliable storage, as in pagerank_int above
+        if per_round:
+            labels = materialize(labels)
     return labels
 
 
-def bfs_depths(
-    edges: DataFrame,
-    seed: int,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def bfs_depths(edges: DataFrame, seed: int) -> DataFrame:
     """Breadth-first hop distance from ``seed`` over an UNDIRECTED
     graph — the reachability/diameter probe beside the other iterative
     operators (CC, PageRank, LPA, k-core).  Per round: ONE semi-join
@@ -329,11 +311,11 @@ def bfs_depths(
     absent (callers count them against the vertex set).  Purely
     set-algebraic — no tie-breaks, so any engine replays it exactly."""
     a, b = F.col(_U1), F.col(_U2)
-    edges = materialize(edges, checkpoint_dir)
+    edges = materialize(edges)
     directed = edges.select(a.alias("src"), b.alias("dst")).unionAll(
         edges.select(b.alias("src"), a.alias("dst"))
     )
-    directed = materialize(directed, checkpoint_dir)
+    directed = materialize(directed)
     visited = directed.sparkSession.createDataFrame(
         [(seed, 0)], "v bigint, depth int"
     )
@@ -351,17 +333,13 @@ def bfs_depths(
         # itself is just a union of already-materialized frontiers, so
         # its own per-round checkpoint bought nothing (one checkpoint
         # job per round instead of two)
-        nxt = materialize(nxt.select("v", F.lit(k).alias("depth")), checkpoint_dir)
+        nxt = materialize(nxt.select("v", F.lit(k).alias("depth")))
         visited = visited.unionAll(nxt)
         frontier = nxt.select("v")
     return visited
 
 
-def kcore(
-    edges: DataFrame,
-    k: int,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def kcore(edges: DataFrame, k: int) -> DataFrame:
     """The k-core: the maximal subgraph where every vertex keeps
     degree >= k — the standard dense-community / spam-ring extractor.
     Iterative peeling: drop sub-k vertices, re-derive degrees, repeat
@@ -375,9 +353,7 @@ def kcore(
     whenever its round count >= the true peel depth (asserted by the
     convergence loop here)."""
     a, b = F.col(_U1), F.col(_U2)
-    cur = materialize(
-        edges.select(a.alias("x"), b.alias("y")), checkpoint_dir
-    )
+    cur = materialize(edges.select(a.alias("x"), b.alias("y")))
     n_prev = -1
     for _ in range(25):
         deg = (
@@ -386,9 +362,7 @@ def kcore(
             .groupBy("v")
             .agg(F.count(F.lit(1)).alias("deg"))
         )
-        keep = materialize(
-            deg.filter(F.col("deg") >= k).select("v"), checkpoint_dir
-        )
+        keep = materialize(deg.filter(F.col("deg") >= k).select("v"))
         n = keep.count()
         if n == n_prev:
             return deg.filter(F.col("deg") >= k).select(
@@ -398,19 +372,14 @@ def kcore(
         cur = materialize(
             cur.join(keep, cur.x == keep.v, "left_semi").join(
                 keep, cur.y == keep.v, "left_semi"
-            ),
-            checkpoint_dir,
+            )
         )
     raise RuntimeError(
         "kcore did not converge in 25 rounds — the peel depth exceeds the cap"
     )
 
 
-def cc_large_star_small_star(
-    edges: DataFrame,
-    max_iters: int = 15,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def cc_large_star_small_star(edges: DataFrame, max_iters: int = 15) -> DataFrame:
     """Connected components of the ``(u1, u2)`` edge list ``edges`` by
     alternating Large-Star / Small-Star
     (Kiveris et al. 2014, "Connected Components in MapReduce and
@@ -449,8 +418,7 @@ def cc_large_star_small_star(
             F.greatest(F.col(_U1), F.col(_U2)).alias("hi"),
         )
         .filter(F.col("lo") != F.col("hi"))
-        .distinct(),
-        checkpoint_dir,
+        .distinct()
     )
 
     def edge_probe(frame: DataFrame):
@@ -490,7 +458,7 @@ def cc_large_star_small_star(
             .filter(F.col("lo") != F.col("hi"))
             .distinct()
         )
-        e1 = materialize(large, checkpoint_dir)
+        e1 = materialize(large)
         # ---- small star ----
         smins = e1.groupBy("hi").agg(F.min("lo").alias("m"))
         attached = e1.join(smins, "hi")
@@ -505,7 +473,7 @@ def cc_large_star_small_star(
             .distinct()
         )
         prev = e
-        e = materialize(small, checkpoint_dir)
+        e = materialize(small)
         cur = edge_probe(e)
         # cheap (count, checksum) probe first: a mismatch proves the
         # edge set changed with no extra job; a match is CONFIRMED by

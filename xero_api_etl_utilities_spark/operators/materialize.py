@@ -1,31 +1,28 @@
-"""Lineage truncation with a fault-tolerance knob.
+"""Lineage truncation, fault-tolerant when the session says so.
 
 Iterative operators (connected components) and multiply-consumed
 frames (candidate pairs feeding three joins) must be materialized or
 their upstream plan re-executes per round/consumer and the lineage
-grows without bound. Two ways to do that, with different failure
-semantics:
+grows without bound.  Every lineage cut in the package goes through
+:func:`materialize`, which picks one of two ways from the session:
 
-- ``localCheckpoint`` (default): blocks live in executor storage.
-  Fast — no DFS round-trip — and exactly right on local[n], but an
-  executor loss discards the block and Spark CANNOT recompute it
-  (lineage was truncated), killing the job. Acceptable when the
-  cluster is one JVM; not for a 100 TB run on 1000 preemptible
-  executors.
-- ``checkpoint`` with a ``checkpoint_dir`` on reliable storage
-  (HDFS/S3): blocks are written to the DFS, so any executor can die
-  and the frame re-loads. The cost is one DFS write + read per
-  materialization — the price of surviving a multi-hour iterative
-  job: a 100 TB connected-components run must not lose 20 rounds of
-  work to one preemption.
+- no checkpoint directory → ``localCheckpoint()``: blocks live in
+  executor storage.  Fast (no DFS round-trip) and exactly right on
+  local[n], but an executor loss discards the block and Spark CANNOT
+  recompute it (lineage was truncated), killing the job.
+- a checkpoint directory on reliable storage (HDFS/S3) →
+  ``checkpoint()``: blocks are written to the DFS, so any executor can
+  die and the frame re-loads.  The cost is one DFS write + read per
+  materialization, the price of surviving a multi-hour iterative job
+  on preemptible executors.
 
-Operators that expose ``checkpoint_dir`` (connected components,
-PageRank, label propagation, BPE training, the dedup verify substrate)
-truncate through :func:`materialize`; without a ``checkpoint_dir``,
-``pagerank_int`` and ``label_propagation`` call ``localCheckpoint()``
-directly every few rounds.  The session memos and a few query-local
-frames also call ``localCheckpoint()`` directly, so they are never
-fault-tolerant.
+The directory is a deployment setting, Spark's own
+``spark.checkpoint.dir`` (``get_spark(extra_conf=...)`` or
+spark-submit), so one setting decides fault tolerance for every
+operator, memo and query-local frame.  The fixed-round operators
+(``pagerank_int``, ``label_propagation``) keep their recurrence as one
+lazy plan and cut it every round only under reliable storage; they ask
+:func:`reliable_checkpoints`, so this module alone reads the directory.
 
 A materialized frame that several catalog queries share is built once
 per session through :func:`session_memo`, which also keeps the build
@@ -71,27 +68,17 @@ def compute_width(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(par, *keys) if keys else df.repartition(par)
 
 
-def materialize(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
-    """Materialize ``df`` and truncate its lineage.
+def reliable_checkpoints(df: DataFrame) -> bool:
+    """Whether ``df``'s session has a checkpoint directory, i.e. whether
+    :func:`materialize` writes to reliable storage."""
+    return df.sparkSession.sparkContext.getCheckpointDir() is not None
 
-    ``checkpoint_dir=None`` → ``localCheckpoint()`` (executor-local,
-    fast, not fault-tolerant). A path → reliable ``checkpoint()``
-    into that directory.  ``setCheckpointDir`` creates a fresh UUID
-    subdirectory on every call, so it runs only when the requested
-    directory differs from the last one this function set on the
-    SparkContext, or when something else re-pointed the context since:
-    the rounds of one iterative operator share one subdirectory, and a
-    caller asking for a different directory never checkpoints into the
-    previous caller's.
-    """
-    if checkpoint_dir is None:
-        return df.localCheckpoint()
-    sc = df.sparkSession.sparkContext
-    last = getattr(sc, "_materialize_checkpoint_dir", None)
-    if last != (checkpoint_dir, sc.getCheckpointDir()):
-        sc.setCheckpointDir(checkpoint_dir)
-        sc._materialize_checkpoint_dir = (checkpoint_dir, sc.getCheckpointDir())
-    return df.checkpoint()
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` and truncate its lineage: a reliable
+    ``checkpoint()`` into the session's checkpoint directory when it has
+    one, else an executor-local ``localCheckpoint()``."""
+    return df.checkpoint() if reliable_checkpoints(df) else df.localCheckpoint()
 
 
 @dataclass(frozen=True)

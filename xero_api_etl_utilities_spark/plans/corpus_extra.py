@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.functions.crosshash import h32, h32_sql
-from xero_api_etl_utilities_spark.operators.materialize import session_memo
+from xero_api_etl_utilities_spark.operators.materialize import materialize, session_memo
 from xero_api_etl_utilities_spark.plans.catalog import oracle_sf_dir, register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
@@ -659,13 +659,15 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark has no cross-branch CSE, so the un-materialized form
     # re-ran it 3x per query.  Values are unchanged; only how many
     # times they are computed.
-    unit = normed.select(
-        "vec_id",
-        "cell",
-        F.transform(
-            F.col("embedding"), lambda x: x.cast("double") / F.col("_nrm")
-        ).alias("u"),
-    ).localCheckpoint()
+    unit = materialize(
+        normed.select(
+            "vec_id",
+            "cell",
+            F.transform(
+                F.col("embedding"), lambda x: x.cast("double") / F.col("_nrm")
+            ).alias("u"),
+        )
+    )
     a = unit.select(
         F.col("cell").alias("ca"), F.col("vec_id").alias("id_a"), F.col("u").alias("ua")
     )
@@ -1181,8 +1183,6 @@ def text_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spans feeds BOTH the dup aggregate and the semi-join — without
     # a materialize the corpus-wide posexplode + md5-64 projection
     # runs twice per query
-    from xero_api_etl_utilities_spark.operators.materialize import materialize
-
     spans = materialize(
         wdocs.select(
             "doc_id",
@@ -1367,7 +1367,7 @@ def probe_knn_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 80)
     nn = sim.topk_bruteforce(queries, emb, k=10)
-    return nn.localCheckpoint()
+    return materialize(nn)
 
 
 def similarity_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:

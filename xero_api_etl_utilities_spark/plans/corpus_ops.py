@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.operators import packing as pk
-from xero_api_etl_utilities_spark.operators.materialize import session_memo
+from xero_api_etl_utilities_spark.operators.materialize import materialize, session_memo
 from xero_api_etl_utilities_spark.operators import similarity as sim
 from xero_api_etl_utilities_spark.operators import textnorm as tn
 from xero_api_etl_utilities_spark.operators import textstats as tx
@@ -305,7 +305,7 @@ def minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size: 8.0 → 10.7 s cold A/B), so it stays on the scan's natural
     # partitioning.
     sigs = dd.minhash_signatures(docs, "doc_id", "text")
-    return sigs.localCheckpoint()
+    return materialize(sigs)
 
 
 @session_memo("dedup_candidates")
@@ -324,7 +324,7 @@ def lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoints it as-is and every CPU-bound consumer (exact
     # verify, calibration's sampled-intersect census) inherits the
     # parallelism.
-    return cands.localCheckpoint()
+    return materialize(cands)
 
 
 @session_memo("dedup_substrate")
@@ -337,7 +337,7 @@ def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dd.jaccard_verify(
         lsh_candidates(spark, sf_dir), docs, "doc_id", "text"
     )
-    return pairs.localCheckpoint()
+    return materialize(pairs)
 
 
 def dedup_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -365,7 +365,7 @@ def doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     session: connected components iterate driver-side jobs at BUILD
     time, so the two consumers (dedup_clusters, the cluster-size
     histogram) must share one run, not re-propagate."""
-    return _build_clusters(spark, sf_dir).localCheckpoint()
+    return materialize(_build_clusters(spark, sf_dir))
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -464,10 +464,7 @@ def text_bigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py:tokens/token_ngrams — the zip_with form, see
     PLANS.md lambda-CSE finding)."""
     from xero_api_etl_utilities_spark.operators.dedup import token_ngrams, tokens
-    from xero_api_etl_utilities_spark.operators.materialize import (
-        compute_width,
-        materialize,
-    )
+    from xero_api_etl_utilities_spark.operators.materialize import compute_width
 
     # The tokenize + bigram explode otherwise
     # runs on the single-task scan — and grams feeds BOTH the vocab

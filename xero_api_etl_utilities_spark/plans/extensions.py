@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.operators import dedup as dd
-from xero_api_etl_utilities_spark.operators.materialize import session_memo
+from xero_api_etl_utilities_spark.operators.materialize import materialize, session_memo
 from xero_api_etl_utilities_spark.operators import similarity as sim
 from xero_api_etl_utilities_spark.operators import textstats as tx
 from xero_api_etl_utilities_spark.plans import sketch_oracles as sk
@@ -509,7 +509,7 @@ def _pipeline_stages(spark: SparkSession, sf_dir: str):
     # surv feeds two consumers (the pair restriction and the final
     # anti-join): materialize once instead of re-running the
     # quality gate + digest dedup per branch
-    surv = q.join(surv_ids, "doc_id").localCheckpoint()
+    surv = materialize(q.join(surv_ids, "doc_id"))
     # Near-dup pruning = the FULL-CORPUS verified-pair substrate
     # (corpus_ops._verified_pairs — LSH candidates + exact-Jaccard
     # verify, built ONCE per session for the whole dedup family)
@@ -541,9 +541,7 @@ def _pipeline_stages(spark: SparkSession, sf_dir: str):
             "left_semi",
         )
     )
-    near_dups = (
-        pairs.select(F.col("doc_b").alias("doc_id")).distinct().localCheckpoint()
-    )
+    near_dups = materialize(pairs.select(F.col("doc_b").alias("doc_id")).distinct())
     return surv, near_dups
 
 

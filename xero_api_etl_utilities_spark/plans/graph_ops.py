@@ -15,6 +15,7 @@ from xero_api_etl_utilities_spark.functions.crosshash import h32_sql
 from xero_api_etl_utilities_spark.operators.graph import triangles
 from xero_api_etl_utilities_spark.operators.materialize import (
     compute_width,
+    materialize,
     session_memo,
 )
 from xero_api_etl_utilities_spark.operators.sketches import cms_build, cms_estimate
@@ -87,7 +88,7 @@ def _co_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # marginal cost.
 @session_memo("graph_edges")
 def co_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _co_edges(spark, sf_dir).localCheckpoint()
+    return materialize(_co_edges(spark, sf_dir))
 
 
 def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,10 +1,9 @@
 """DuckDB oracle SQL generators for the sketch/ANN catalog queries.
 
-Round 1 left five queries rows-only ("xxhash64 has no DuckDB twin").
-Round 2 removed the excuse: the sketch operators now hash with
-crosshash (md5-derived — bit-identical in Spark, DuckDB and python),
-so each oracle below RE-RUNS THE FULL ALGORITHM in DuckDB SQL — a
-strictly stronger check than the set-containment fallback:
+The sketch operators hash with crosshash (md5-derived — bit-identical
+in Spark, DuckDB and python), so each oracle below RE-RUNS THE FULL
+ALGORITHM in DuckDB SQL — a strictly stronger check than a
+set-containment fallback:
 
 - MinHash signatures, LSH banding, the stop-bucket guard and the
   candidate self-join are pure integer math → exactly reproducible.
@@ -19,7 +18,14 @@ strictly stronger check than the set-containment fallback:
 
 The SQL strings are long (64 minhash permutations, 64 simhash bit
 sums) but machine-generated from the same parameters the Spark plans
-use — single source of truth for coefficients, planes, centroids.
+use.  The MinHash coefficients (``minhash_coeffs``, ``_P``), the
+hyperplanes (``hyperplanes``) and the IVF centroids
+(``train_centroids_from_parquet``) are SHARED INPUTS of both sides: the
+oracles import them from the operators, so a hash-match checks the
+algorithm run over those tables, not the tables themselves.  Their own
+tests do that: the coefficients form a valid universal family, and the
+pyarrow centroid path is bit-identical to the Spark one
+(``tests/test_extensions.py``).
 """
 
 from __future__ import annotations

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.functions.crosshash import h32_sql
-from xero_api_etl_utilities_spark.operators.materialize import session_memo
+from xero_api_etl_utilities_spark.operators.materialize import materialize, session_memo
 from xero_api_etl_utilities_spark.plans.catalog import oracle_sf_dir, register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
@@ -673,7 +673,7 @@ def _pq_index(spark: SparkSession, sf_dir: str):
     )
     cells = ivf.assign_cells(emb, cents, "embedding", 1).select("vec_id", "cell")
     codes = pq_codes(emb, "vec_id", "embedding", books)
-    index = cells.join(codes, "vec_id").localCheckpoint()
+    index = materialize(cells.join(codes, "vec_id"))
     return cents, books, index
 
 
@@ -1393,8 +1393,6 @@ def diag_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs). Reading the output: top1_share_bp >> 10000/n_keys means a
     degenerate hot key → route the join through salted_inner_join
     (operators/skew.py) or let AQE split it."""
-    from xero_api_etl_utilities_spark.operators.materialize import materialize
-
     ev = load_table(spark, sf_dir, "events")
     # the only fact-sized pass; materialized because BOTH the totals
     # and the hot-key census read it (agg diamonds re-scan the fact

@@ -35,7 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xero_api_etl_utilities_spark.operators.materialize import session_memo
+from xero_api_etl_utilities_spark.operators.materialize import materialize, session_memo
 from xero_api_etl_utilities_spark.plans.catalog import oracle_sf_dir, register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
@@ -259,8 +259,6 @@ def similarity_ivf_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that ≤k-row frame (every vector gets exactly one nprobe=1 cell,
     # so the sums equal the global counts), which is checkpointed so
     # its two consumers don't re-run the scan.
-    from xero_api_etl_utilities_spark.operators.materialize import materialize
-
     counts = materialize(
         ivf.assign_cells(
             emb.withColumn("_new", F.col("vec_id") % 5 == 4), cents, nprobe=1
@@ -371,7 +369,7 @@ def _rpq_index(spark: SparkSession, sf_dir: str):
         os.path.join(sf_dir, "embeddings.parquet"),
         residual_centroids=cents,
     )
-    index = ivf.encode_ivfpq_residual(emb, cents, books).localCheckpoint()
+    index = materialize(ivf.encode_ivfpq_residual(emb, cents, books))
     return cents, books, index
 
 
@@ -581,8 +579,6 @@ def similarity_ivf_retrain_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # k×k transition grid in one pass (map-side combinable), checkpoint
     # the ≤256-row grid, and derive both census sides from it — counts
     # are identical by associativity of the grouped sums.
-    from xero_api_etl_utilities_spark.operators.materialize import materialize
-
     grid = materialize(
         both.groupBy("old_cell", "new_cell").agg(F.count(F.lit(1)).alias("n"))
     )

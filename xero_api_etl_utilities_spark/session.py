@@ -32,6 +32,12 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back to
     ``local[*]``). On a real cluster, pass ``master=None`` after setting
     the usual submit-time configuration; every conf here is cluster-safe.
+
+    Fault tolerance has one setting, Spark's own ``spark.checkpoint.dir``
+    (in ``extra_conf`` or at submit time).  With it set to reliable
+    storage, every lineage cut (:func:`operators.materialize.materialize`)
+    checkpoints there and survives executor loss; without it the cuts
+    are executor-local.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
