@@ -90,57 +90,6 @@ class TestZOrder:
         assert max(r["yspan"] for r in stats) <= 63
 
 
-class TestZOrderWrite:
-    def test_files_cover_narrow_rectangles(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-        from xero_api_etl_utilities_spark.sources.writer import write_zorder_table
-
-        df = spark.range(0, 40000).select(
-            (F.col("id") % 1024).alias("x"), ((F.col("id") * 13) % 1024).alias("y")
-        )
-        path = str(tmp_path / "ztab")
-        write_zorder_table(df, path, "x", "y")
-        # read back with file lineage: every FILE (the skipping unit)
-        # must span far less than the global 0..1023 range in BOTH dims
-        got = (
-            spark.read.parquet(path)
-            .withColumn("f", F.input_file_name())
-            .groupBy("f")
-            .agg(
-                (F.max("x") - F.min("x")).alias("xspan"),
-                (F.max("y") - F.min("y")).alias("yspan"),
-            )
-            .collect()
-        )
-        assert len(got) >= 8
-        # 16 z-range files over a 20-bit z-space → typical files cover
-        # ~2^8 per dimension; a contiguous z-range CAN cross a quadrant
-        # seam (the known z-curve worst case), so the guarantee is on
-        # the aggregate: average spans far below the 1023 global range,
-        # and most files within a quadrant-sized rectangle
-        xs = sorted(r["xspan"] for r in got)
-        ys = sorted(r["yspan"] for r in got)
-        assert sum(xs) / len(xs) <= 450
-        assert sum(ys) / len(ys) <= 450
-        n_tight = sum(
-            1 for r in got if r["xspan"] <= 512 and r["yspan"] <= 512
-        )
-        assert n_tight >= len(got) * 3 // 4
-
-    def test_roundtrip_preserves_rows(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-        from xero_api_etl_utilities_spark.sources.writer import write_zorder_table
-
-        df = spark.range(0, 5000).select(
-            (F.col("id") % 700).alias("x"), ((F.col("id") * 31) % 900).alias("y")
-        )
-        path = str(tmp_path / "zt2")
-        write_zorder_table(df, path, "x", "y")
-        back = spark.read.parquet(path)
-        assert back.count() == 5000
-        assert sorted(back.columns) == ["x", "y"]
-
-
 class TestZOrderProperties:
     def test_roundtrip_hypothesis(self):
         from hypothesis import given, strategies as st

@@ -29,60 +29,155 @@ def test_every_query_has_an_oracle():
     assert qs == os_, f"rows-only entries: {sorted(qs - os_)}"
 
 
+# Package definitions that only tests name, kept on purpose.  A key is
+# ``module path:name``; the value is (kind, reason).  Kinds, and when an
+# entry is stale (it is also stale once a program names the definition):
+#   "reference"  a Python implementation that tests compare the Spark and
+#                SQL forms against — stale when no test names it.
+TEST_ONLY: dict[str, tuple[str, str]] = {
+    "functions/crosshash.py:py_h64": (
+        "reference",
+        "the SimHash and cross-engine hash tests recompute the token hash in Python",
+    ),
+    **{
+        f"functions/zorder.py:{name}": (
+            "reference",
+            "the z-order tests check the Spark interleave against it",
+        )
+        for name in ("py_z_interleave16", "py_z_deinterleave16")
+    },
+}
+
+
 def test_every_package_module_is_reachable():
-    """Every package module is imported, directly or transitively, by
-    the catalog or by the EP1 job: a module only tests import is dead
-    weight and must get a caller or be deleted. Package ``__init__``s
-    and ``session`` (the SparkSession factory harnesses call) are exempt.
-    The walk is static: ``import``/``from … import`` anywhere in a
-    module's AST, with the ``__init__`` of every package on the way."""
+    """Every package module, and every module-level function, class and
+    assigned name in it (dunder names aside), is reached from a program:
+    ``bench.py``, ``__spark_entry__.py``, ``tools/`` or ``perfbench/``
+    (its tests too).  A definition is live when a live unit names it —
+    bare name, import alias or attribute — and a module's top-level code
+    (its ``register(...)`` calls) runs when a live unit reaches the
+    module.  An import at module level only binds a name, so a package
+    ``__init__`` re-export is no use, and a helper that only a dead
+    definition calls is dead too.  Tests never count: a definition only
+    tests name must get a caller or be deleted.  ``TEST_ONLY`` lists the
+    exceptions, each with its reason, and the test fails on one that no
+    longer holds.  The walk is static, over each file's AST; an
+    attribute matches every definition of that name."""
     import ast
     from pathlib import Path
 
-    pkg = "xero_api_etl_utilities_spark"
-    base = Path(__file__).resolve().parent.parent / pkg
+    root = Path(__file__).resolve().parent.parent
+    base = root / "xero_api_etl_utilities_spark"
 
-    def path_of(mod: str) -> Path | None:
-        rel = Path(*mod.split(".")[1:])
-        for p in (base / rel).with_suffix(".py"), base / rel / "__init__.py":
-            if p.is_file():
-                return p
-        return None
+    def mod_of(p):
+        parts = p.relative_to(root).with_suffix("").parts
+        return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
 
-    def imports(mod: str):
-        tree = ast.parse(path_of(mod).read_text())
+    paths = {mod_of(p): p for p in base.rglob("*.py")}
+    trees = {m: ast.parse(p.read_text()) for m, p in paths.items()}
+    # a unit is (module, name); (module, None) is the module's top-level
+    # code other than definitions and imports
+    units: dict[tuple[str, str | None], list[ast.AST]] = {}
+    binds: dict[str, dict[str, tuple[str, str | None]]] = {}
+
+    def bind(mod, tree):
+        """The names ``mod``'s imports bind, anywhere in its AST:
+        ``alias -> (module, name)``, with name None for a module."""
+        b = binds[mod] = {}
         for node in ast.walk(tree):
-            if isinstance(node, ast.Import):
-                yield from (a.name for a in node.names)
-            elif isinstance(node, ast.ImportFrom) and node.module:
-                yield node.module
-                yield from (f"{node.module}.{a.name}" for a in node.names)
+            if isinstance(node, ast.ImportFrom) and node.module:
+                b |= {a.asname or a.name: (node.module, a.name) for a in node.names}
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    top = a.name.partition(".")[0]
+                    b[a.asname or top] = (a.name if a.asname else top, None)
 
-    roots = [
-        "plans.catalog",
-        "plans.flagship",
-        "plans.pipeline",
-        "sources.excel_grid",
-        "sources.rest",
-    ]
-    seen: set[str] = set()
-    todo = [f"{pkg}.{r}" for r in roots]
+    for mod, tree in trees.items():
+        bind(mod, tree)
+        for node in tree.body:
+            if isinstance(node, ast.Import | ast.ImportFrom):
+                continue
+            if isinstance(node, ast.FunctionDef | ast.AsyncFunctionDef | ast.ClassDef):
+                names = [node.name]
+            elif isinstance(node, ast.Assign | ast.AnnAssign):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+            else:
+                names = [None]
+            for name in names:
+                units.setdefault((mod, name), []).append(node)
+
+    def module(m):
+        """A module's top-level code and its packages' run on import."""
+        parts = m.split(".")
+        return {(".".join(parts[:i]), None) for i in range(1, len(parts) + 1)} & units.keys()
+
+    def resolve(mod, name, seen=()):
+        """The units that ``name`` in ``mod``'s code reaches, following
+        imports (and re-exports) to the defining module."""
+        if (mod, name) in units:
+            return {(mod, name)} | module(mod)
+        src, attr = binds.get(mod, {}).get(name, (None, None))
+        if src is None or (src, attr) in seen:
+            return set()
+        if attr is None or f"{src}.{attr}" in trees:
+            return module(src if attr is None else f"{src}.{attr}")
+        return resolve(src, attr, (*seen, (src, attr)))
+
+    def reached(mod, nodes):
+        """The units that the code ``nodes`` of ``mod`` names; an import
+        inside that code runs, so it reaches the imported modules."""
+        out = set()
+        for node in nodes:
+            for n in ast.walk(node):
+                if isinstance(n, ast.Name):
+                    out |= resolve(mod, n.id)
+                elif isinstance(n, ast.Attribute):
+                    for u in [u for u in units if u[1] == n.attr]:
+                        out |= {u} | module(u[0])
+                elif isinstance(n, ast.ImportFrom) and n.module:
+                    out |= module(n.module)
+                    out |= {u for a in n.names for u in resolve(n.module, a.name)}
+                    out |= {u for a in n.names for u in module(f"{n.module}.{a.name}")}
+                elif isinstance(n, ast.Import):
+                    out |= {u for a in n.names for u in module(a.name)}
+        return out
+
+    programs = [root / "bench.py", root / "__spark_entry__.py"]
+    programs += sorted((root / "tools").rglob("*.py")) + sorted((root / "perfbench").rglob("*.py"))
+    live: set = set()
+    for p in programs:
+        tree = ast.parse(p.read_text())
+        bind(str(p), tree)
+        live |= reached(str(p), [tree])
+    todo = list(live)
     while todo:
-        mod = todo.pop()
-        parts = mod.split(".")
-        for i in range(1, len(parts) + 1):
-            m = ".".join(parts[:i])
-            if m not in seen and m.split(".")[0] == pkg and path_of(m):
-                seen.add(m)
-                todo.extend(imports(m))
+        mod, name = todo.pop()
+        for u in reached(mod, units[(mod, name)]) - live:
+            live.add(u)
+            todo.append(u)
 
-    every = {
-        ".".join((pkg, *p.relative_to(base).with_suffix("").parts))
-        for p in base.rglob("*.py")
-        if p.name != "__init__.py"
+    def key(u):
+        rel = paths[u[0]].relative_to(base)
+        return str(rel) if u[1] is None else f"{rel}:{u[1]}"
+
+    dead = {key(u) for u in units.keys() - live if not (u[1] or "").startswith("__")}
+    flagged = sorted(dead - TEST_ONLY.keys())
+    assert not flagged, f"package definitions only tests name: {flagged}"
+
+    tested = {
+        getattr(n, "id", None) or getattr(n, "attr", None) or getattr(n, "name", None)
+        for p in (root / "tests").rglob("*.py")
+        for n in ast.walk(ast.parse(p.read_text()))
     }
-    unreachable = sorted(every - seen - {f"{pkg}.session"})
-    assert not unreachable, f"modules only tests import: {unreachable}"
+    stale = []
+    for k, (kind, reason) in TEST_ONLY.items():
+        assert kind == "reference" and reason, k
+        if k not in dead:
+            stale.append(f"{k}: a program names it, or it is gone")
+        elif k.partition(":")[2] not in tested:
+            stale.append(f"{k}: no test names it")
+    assert not stale, f"stale exemptions: {stale}"
 
 
 def test_only_materialize_reads_the_compute_width():
@@ -115,18 +210,23 @@ def test_only_materialize_reads_the_compute_width():
 
 
 # Defaulted parameters kept although one value reaches each of them from
-# every non-test caller.  A key is ``function(param)``, a bare parameter
-# name (every function in scope that has it) or a module path; the value
-# is (kind, reason).  Kinds, and when an entry is stale:
+# every non-test caller.  A key is ``function(param)`` or a bare parameter
+# name (every function in scope that has it); the value is (kind,
+# reason).  Every entry is stale once it keeps no one-value parameter.
+# Kinds, and when an entry is stale besides:
 #   "seam"        tests pass a fake or a small value — stale when no test
 #                 passes a value other than the default;
 #   "perfbench"   ``perfbench/`` calls the signature — stale when
 #                 ``perfbench/`` does not pass the parameter;
 #   "deployment"  a cluster deployment sets it, which no local caller can.
 KEPT: dict[str, tuple[str, str]] = {
-    "sources/rest.py": (
+    "post_documents(resource)": (
         "deployment",
-        "endpoints, headers and timeouts of the accounting API",
+        "the accounting API resource a deployment posts to",
+    ),
+    "post_documents(batch_size)": (
+        "deployment",
+        "the accounting API's per-request document limit",
     ),
     "get_spark(shuffle_partitions)": (
         "seam",
@@ -156,10 +256,6 @@ KEPT: dict[str, tuple[str, str]] = {
         "seam",
         "the frame decoder: the catalog passes a closed-form fake, an ffmpeg "
         "test passes a real extractor, another test sees the default raise",
-    ),
-    "write_versioned_run(max_versions)": (
-        "seam",
-        "a test exhausts the probe after 2 versions instead of 100",
     ),
     "text_tf_cosine_pairs(max_df_bp)": (
         "seam",
@@ -347,7 +443,7 @@ def test_every_defaulted_parameter_has_a_caller():
             vals = values((name, p))
             if _VARIES in vals or len(vals) > 1:
                 continue
-            key = next((k for k in (f"{name}({p})", p, rel) if k in KEPT), None)
+            key = next((k for k in (f"{name}({p})", p) if k in KEPT), None)
             used.add(key)
             if key is None:
                 shown = vals.pop()[1] if vals else "no caller"

@@ -334,6 +334,33 @@ def test_minhash_coefficients_are_a_universal_family():
     assert len({a for a, _ in coeffs}) == 64
 
 
+@pytest.mark.parametrize("sf", ["sf0.01", "sf0.1"])
+def test_hyperplane_and_centroid_margins_clear_float_noise(sf_dir, sf):
+    """The hyperplanes and IVF centroids are shared inputs of the Spark
+    plans and their DuckDB oracles, so a hash-match cannot check that
+    they leave the discrete outputs engine-stable.  This does, without
+    Spark: every embedding's dot product with each catalog plane
+    (``hyperplanes(4, 64, seed=7+t)``, t < 4) is clear of zero, and its
+    best centroid score (as ``ivf.assign_cells`` scores) is clear of the
+    second best, by far more than cross-engine double-summation noise
+    (~1e-14).  Measured minima: planes 1.28e-4 at sf0.01 and 6.5e-5 at
+    sf0.1; centroid gap 3.5e-4 and 1.1e-5."""
+    from pathlib import Path
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from xero_api_etl_utilities_spark.operators.ivf import train_centroids_from_parquet
+
+    path = str(Path(sf_dir).with_name(sf) / "embeddings.parquet")
+    emb = pq.read_table(path, columns=["embedding"]).column(0).to_pylist()
+    vecs = np.asarray(emb, dtype=np.float64)
+    planes = np.asarray([p for t in range(4) for p in sim.hyperplanes(4, 64, seed=7 + t)])
+    assert np.abs(vecs @ planes.T).min() > 1e-9
+    scores = np.sort(vecs @ np.asarray(train_centroids_from_parquet(path)).T, axis=1)
+    assert (scores[:, -1] - scores[:, -2]).min() > 1e-9
+
+
 def test_sampling_deterministic_and_disjoint(spark):
     """Systematic sample is rerun/partitioning-stable; split is
     disjoint+exhaustive with roughly the 80/10/10 proportions; the two

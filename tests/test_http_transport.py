@@ -1,38 +1,26 @@
 """HttpJsonTransport against a real in-process HTTP server (stdlib
-http.server on a loopback port): pushed-filter GET, idempotent batched
-POST through the Spark sink, and the 5xx retry/backoff path."""
+http.server on a loopback port): idempotent batched POST through the
+Spark sink, a per-document rejection inside a 200 response, and the
+5xx retry/backoff path."""
 
 from __future__ import annotations
 
 import json
 import threading
-import urllib.parse
 from functools import partial
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 from pyspark.sql import functions as F
 
-from xero_api_etl_utilities_spark.sources.rest import (
-    HttpJsonTransport,
-    fetch_invoices,
-    post_documents,
-)
-
-INVOICES = [
-    {"invoice_id": "a", "contact_name": "Day Dockets", "date_string": "2024-01-01",
-     "status": "SUBMITTED", "reference": "DD-1"},
-    {"invoice_id": "b", "contact_name": "Day Dockets", "date_string": "2024-01-02",
-     "status": "AUTHORISED", "reference": "DD-2"},
-    {"invoice_id": "c", "contact_name": "Other", "date_string": "2024-01-01",
-     "status": "SUBMITTED", "reference": "X-1"},
-]
+from xero_api_etl_utilities_spark.sources.rest import HttpJsonTransport, post_documents
 
 
 class _Handler(BaseHTTPRequestHandler):
     # class-level shared state (one server per test)
     posted: dict[str, dict] = {}
-    statuses: list[str] = []
+    rejected: set[str] = set()  # answered ERROR, as under summarizeErrors=false
+    unanswered: set[str] = set()  # left out of the answer
     fail_next: int = 0
     retry_after: str | None = None
 
@@ -49,15 +37,6 @@ class _Handler(BaseHTTPRequestHandler):
         self.end_headers()
         self.wfile.write(body)
 
-    def do_GET(self):
-        url = urllib.parse.urlparse(self.path)
-        params = dict(urllib.parse.parse_qsl(url.query))
-        rows = [
-            r for r in INVOICES
-            if all(r.get(k) == v for k, v in params.items())
-        ]
-        self._send(rows)
-
     def do_POST(self):
         if _Handler.fail_next > 0:
             _Handler.fail_next -= 1
@@ -68,7 +47,11 @@ class _Handler(BaseHTTPRequestHandler):
         out = []
         for p in payloads:
             ref = p.get("reference")
-            if ref in _Handler.posted:
+            if ref in _Handler.unanswered:
+                continue
+            if ref in _Handler.rejected:
+                out.append({"reference": ref, "status": "ERROR"})
+            elif ref in _Handler.posted:
                 out.append({"reference": ref, "status": "SKIPPED"})
             else:
                 _Handler.posted[ref] = p
@@ -79,6 +62,8 @@ class _Handler(BaseHTTPRequestHandler):
 @pytest.fixture()
 def server():
     _Handler.posted = {}
+    _Handler.rejected = set()
+    _Handler.unanswered = set()
     _Handler.fail_next = 0
     _Handler.retry_after = None
     srv = ThreadingHTTPServer(("127.0.0.1", 0), _Handler)
@@ -86,14 +71,6 @@ def server():
     t.start()
     yield f"http://127.0.0.1:{srv.server_address[1]}"
     srv.shutdown()
-
-
-def test_http_get_pushed_filters(spark, server):
-    tr = HttpJsonTransport(server)
-    df = fetch_invoices(spark, tr, contact_name="Day Dockets",
-                        date_string="2024-01-01")
-    rows = df.collect()
-    assert [r["invoice_id"] for r in rows] == ["a"]  # filters + status gate
 
 
 def test_http_post_idempotent_through_spark_sink(spark, server):
@@ -107,6 +84,25 @@ def test_http_post_idempotent_through_spark_sink(spark, server):
     # re-running the sink (a "retry") double-posts nothing
     post_documents(docs, factory)
     assert len(_Handler.posted) == 2
+
+
+def test_a_rejected_document_fails_the_sink(spark, server):
+    """The endpoint answers 200 with a per-document ERROR status (the
+    reference posts with summarizeErrors=false), and leaves another
+    document out of its answer: the Spark job fails naming both
+    references, and not the accepted one."""
+    _Handler.rejected = {"DD-BAD"}
+    _Handler.unanswered = {"DD-GONE"}
+    docs = spark.createDataFrame(
+        [(ref, json.dumps({"total": 1.0})) for ref in ("DD-OK", "DD-BAD", "DD-GONE")],
+        "reference string, payload string",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="rejected 2 document") as exc:
+        post_documents(docs, partial(HttpJsonTransport, server))
+    msg = str(exc.value)
+    assert "DD-BAD: ERROR" in msg and "DD-GONE: None" in msg
+    assert "DD-OK" not in msg
+    assert set(_Handler.posted) == {"DD-OK"}
 
 
 def test_http_post_retries_on_503(server):

@@ -36,6 +36,25 @@ def test_materialize_checkpoints_under_the_session_directory(spark, ckpt_dir):
     assert sorted(r.id for r in out.collect()) == list(range(10))
 
 
+def test_checkpoint_files_go_with_their_frame(spark, ckpt_dir):
+    """The session removes a reliable checkpoint once nothing references
+    its frame (``spark.cleaner.referenceTracking.cleanCheckpoints``):
+    drop the frame, collect garbage on both sides of py4j, and its
+    ``rdd-N`` directory goes within seconds."""
+    import gc
+
+    out = materialize(spark.range(10))
+    written = _checkpoint_file(out).removeprefix("file:")
+    assert os.path.basename(written).startswith("rdd-") and os.path.isdir(written)
+    del out
+    deadline = time.monotonic() + 20
+    while os.path.exists(written) and time.monotonic() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.2)
+    assert not os.path.exists(written)
+
+
 def test_materialize_writes_no_file_without_a_session_directory(spark):
     # runs after a test that used the ``ckpt_dir`` fixture, so this
     # also sees the fixture leave the session without a directory

@@ -4,7 +4,6 @@
 from __future__ import annotations
 
 import datetime
-import json
 import os
 from decimal import Decimal
 
@@ -14,10 +13,10 @@ from xero_api_etl_utilities_spark.operators.asof import asof_join_backward
 from xero_api_etl_utilities_spark.operators.quality import QualityGateError
 from xero_api_etl_utilities_spark.plans.pipeline import (
     EntityConfig,
-    deliver,
     run_daily_import,
 )
 from xero_api_etl_utilities_spark.sources.excel_grid import grid_from_rows
+from xero_api_etl_utilities_spark.sources.rest import HttpJsonTransport, post_documents
 
 
 def _cell_row(src, idx, **cells):
@@ -64,28 +63,36 @@ def fixtures(spark):
     return grid, charge_table, customer_dim
 
 
-def test_daily_import_end_to_end(spark, fixtures, tmp_path):
+def test_daily_import_end_to_end(spark, fixtures):
+    from perfbench.sink import SinkServer
+
     grid, charge_table, customer_dim = fixtures
-    cfg = EntityConfig(entity="pw", transport_root=str(tmp_path / "xero"))
-    out = run_daily_import(grid, charge_table, customer_dim, cfg)
+    with SinkServer() as server:
+        url = server.url
+        cfg = EntityConfig(entity="pw", transport_root=url)
+        out = run_daily_import(grid, charge_table, customer_dim, cfg)
 
-    assert out["unverified"].count() == 0
-    assert out["matched"].count() == 3
-    assert out["all_balanced"] is True
+        assert out["unverified"].count() == 0
+        assert out["matched"].count() == 3
+        assert out["all_balanced"] is True
 
-    docs = {r["reference"]: r for r in out["documents"].collect()}
-    assert docs["T1/0012"]["doc_type"] == "ACCREC"
-    assert docs["T1/0012"]["contact_id"] == "xero-10643"
-    assert docs["T1/0012"]["doc_due_date"] == "2024-01-15"
-    assert docs["T2/0007"]["doc_type"] == "ACCRECCREDIT"  # negative amount
-    assert docs["T1/0013"]["line_items"][0]["account_code"] == "42010"  # 45678 routing
+        docs = {r["reference"]: r for r in out["documents"].collect()}
+        assert docs["T1/0012"]["doc_type"] == "ACCREC"
+        assert docs["T1/0012"]["contact_id"] == "xero-10643"
+        assert docs["T1/0012"]["doc_due_date"] == "2024-01-15"
+        assert docs["T2/0007"]["doc_type"] == "ACCRECCREDIT"  # negative amount
+        assert docs["T1/0013"]["line_items"][0]["account_code"] == "42010"  # 45678 routing
 
-    # delivery is idempotent across retries (S8 discipline)
-    deliver(out["payloads"], cfg)
-    deliver(out["payloads"], cfg)
-    with open(os.path.join(cfg.transport_root, "invoices.out.jsonl")) as f:
-        refs = sorted(json.loads(line)["reference"] for line in f)
-    assert refs == ["T1/0012", "T1/0013", "T2/0007"]
+        # delivery is idempotent across retries (S8 discipline): a
+        # second delivery comes back all SKIPPED
+        for key in ("deliver", "redeliver"):
+            server.begin(key)
+            post_documents(out["payloads"], lambda: HttpJsonTransport(url))
+        first, again = server.round_statuses("deliver"), server.round_statuses("redeliver")
+    out["matched"].unpersist()
+    refs = ["T1/0012", "T1/0013", "T2/0007"]
+    assert sorted(first.get("OK", [])) == refs and not first.get("SKIPPED")
+    assert sorted(again.get("SKIPPED", [])) == refs and not again.get("OK")
 
 
 def test_daily_import_unverified_aborts(spark, fixtures):

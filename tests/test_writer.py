@@ -1,16 +1,14 @@
-"""Storage-layout sinks: partition pruning and audit write modes."""
+"""Storage-layout sinks: partition pruning and bucketed joins."""
 
 from __future__ import annotations
 
 import contextlib
 import io
 
-import pytest
 from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.sources.writer import (
     read_partitioned,
-    write_json_audit,
     write_partitioned,
 )
 
@@ -30,16 +28,6 @@ def test_partitioned_write_prunes(spark, tmp_path):
         back.explain("formatted")
     plan = buf.getvalue()
     assert "PartitionFilters" in plan and "2024-01-01" in plan
-
-
-def test_json_audit_write_modes(spark, tmp_path):
-    path = str(tmp_path / "audit")
-    df = spark.createDataFrame([(1, "ok")], "id long, status string")
-    write_json_audit(df, path)
-    assert spark.read.json(path).count() == 1
-    # second write to the same path must refuse, not silently suffix
-    with pytest.raises(Exception, match="already exists|LOCATION_ALREADY_EXISTS"):
-        write_json_audit(df, path)
 
 
 def test_bucketed_join_elides_shuffle(spark, sf_dir, tmp_path):
@@ -74,41 +62,3 @@ def test_bucketed_join_elides_shuffle(spark, sf_dir, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP DATABASE IF EXISTS bdemo CASCADE")
 
-
-def test_versioned_run_probes_next_free_dir(spark, tmp_path):
-    from xero_api_etl_utilities_spark.sources.writer import write_versioned_run
-
-    base = str(tmp_path / "audit")
-    df = spark.createDataFrame([(1, "x")], "id long, note string")
-    assert write_versioned_run(df, base) == base
-    assert write_versioned_run(df, base) == f"{base}_v2"
-    assert write_versioned_run(df, base) == f"{base}_v3"
-    # each version holds a full copy
-    assert spark.read.json(f"{base}_v2").count() == 1
-
-
-def test_versioned_run_exhaustion_raises(spark, tmp_path):
-    from xero_api_etl_utilities_spark.sources.writer import write_versioned_run
-
-    base = str(tmp_path / "audit")
-    df = spark.createDataFrame([(1,)], "id long")
-    write_versioned_run(df, base)
-    write_versioned_run(df, base)
-    with pytest.raises(RuntimeError, match="no free version"):
-        write_versioned_run(df, base, max_versions=2)
-
-
-def test_versioned_run_reraises_non_collision_errors(spark, tmp_path):
-    """An AnalysisException that is NOT a path collision (here: two
-    columns named alike, whose COLUMN_ALREADY_EXISTS message also says
-    "already exists") must surface immediately instead of burning
-    every probe and reporting 'no free version'."""
-    from pyspark.errors import AnalysisException
-
-    from xero_api_etl_utilities_spark.sources.writer import write_versioned_run
-
-    df = spark.range(1).select(F.lit(1).alias("a"), F.lit(2).alias("a"))
-    with pytest.raises(AnalysisException):
-        write_versioned_run(df, str(tmp_path / "bad"))
-    # no version directories were probed into existence
-    assert not (tmp_path / "bad").exists()

@@ -320,35 +320,48 @@ class TestFuzzXls:
             pass
 
 
+def _strict_read_fails(spark, drop_dir, match):
+    """``read_workbook_grids`` over ``drop_dir`` fails its job with an
+    error matching ``match`` (the file name and the decoder's reason)."""
+    import pytest
+
+    from xero_api_etl_utilities_spark.sources.excel_grid import read_workbook_grids
+
+    with pytest.raises(Exception, match=match):
+        read_workbook_grids(spark, str(drop_dir)).collect()
+
+
 def test_quarantine_routing_end_to_end(spark, tmp_path):
-    """The r10 'done' criterion: a drop-dir with a legacy .xls twin, an
-    OLE2-magic garbage file, and plain junk — the good files decode to
-    byte-identical grids, the bad files each land in quarantine with a
-    diagnosable reason, and ZERO tasks fail."""
+    """A drop dir with an xlsx and its legacy .xls twin decodes to
+    identical grids; add an OLE2-magic garbage file or plain junk and
+    the strict reader fails the run, naming that file and why.  There
+    is no quarantine side output: a bad workbook stops the day."""
     from tests.test_xlsx_decode import _xlsx_bytes
-    from xero_api_etl_utilities_spark.sources.excel_grid import (
-        read_workbook_grids_with_quarantine,
-    )
+    from xero_api_etl_utilities_spark.sources.excel_grid import read_workbook_grids
 
-    (tmp_path / "DD 01.xlsx").write_bytes(_xlsx_bytes(_DD01_ROWS_XLSX))
-    (tmp_path / "DD 02.xls").write_bytes(_xls_bytes(_DD01_ROWS))
-    (tmp_path / "DD 03.xls").write_bytes(OLE2_MAGIC + b"\x00" * 600)
-    (tmp_path / "DD 04.xls").write_bytes(b"not a workbook at all")
-
-    grid, quarantine = read_workbook_grids_with_quarantine(spark, str(tmp_path))
-    rows = grid.collect()
+    good = tmp_path / "good"
+    good.mkdir()
+    (good / "DD 01.xlsx").write_bytes(_xlsx_bytes(_DD01_ROWS_XLSX))
+    (good / "DD 02.xls").write_bytes(_xls_bytes(_DD01_ROWS))
     by_file: dict[str, dict] = {}
-    for r in rows:
+    for r in read_workbook_grids(spark, str(good)).collect():
         by_file.setdefault(r["src_file"], {})[r["row_idx"]] = tuple(
             r[c] for c in "ABCDEFG"
         )
     assert set(by_file) == {"DD 01.xlsx", "DD 02.xls"}
     assert by_file["DD 01.xlsx"] == by_file["DD 02.xls"]  # decoder parity
 
-    q = {r["src_file"]: r["reason"] for r in quarantine.collect()}
-    assert set(q) == {"DD 03.xls", "DD 04.xls"}
-    assert "OLE2" in q["DD 03.xls"] or "Workbook" in q["DD 03.xls"]
-    assert "unrecognized workbook container" in q["DD 04.xls"]
+    bad = {
+        "DD 03.xls": (OLE2_MAGIC + b"\x00" * 600, "(OLE2|Workbook)"),
+        "DD 04.xls": (b"not a workbook at all", "unrecognized workbook container"),
+    }
+    for name, (blob, reason) in bad.items():
+        drop = tmp_path / name.split(".")[0]
+        drop.mkdir()
+        for f in good.iterdir():
+            (drop / f.name).write_bytes(f.read_bytes())
+        (drop / name).write_bytes(blob)
+        _strict_read_fails(spark, drop, f"{name}: .*{reason}")
 
 
 # ---------------------------------------------------------------------------
@@ -396,37 +409,36 @@ def test_formula_cell_fails_the_sheet():
 
 
 def test_1904_and_formula_route_to_quarantine(spark, tmp_path):
-    """End-to-end: the two out-of-scope workbooks land in quarantine
-    with diagnosable reasons; a plain sibling still decodes; zero
-    tasks fail."""
-    from xero_api_etl_utilities_spark.sources.excel_grid import (
-        read_workbook_grids_with_quarantine,
-    )
+    """End-to-end: the strict reader fails on each out-of-scope
+    workbook, naming the file and the reason (1904 date mode, FORMULA
+    cells), while the plain sibling alone decodes."""
+    from xero_api_etl_utilities_spark.sources.excel_grid import read_workbook_grids
 
     rows = {3: {"B": 45292}, 22: {"C": 100.5}}
-    (tmp_path / "DD 01.xls").write_bytes(ole2_bytes(xls_workbook_stream(rows)))
-    (tmp_path / "DD 02.xls").write_bytes(
-        ole2_bytes(
-            xls_workbook_stream(
-                rows, extra_globals=_rec(0x0022, struct.pack("<H", 1))
-            )
-        )
-    )
-    (tmp_path / "DD 03.xls").write_bytes(
-        ole2_bytes(
+    plain = ole2_bytes(xls_workbook_stream(rows))
+    (tmp_path / "DD 01.xls").write_bytes(plain)
+    got = read_workbook_grids(spark, str(tmp_path)).collect()
+    assert {r["src_file"] for r in got} == {"DD 01.xls"}
+
+    bad = {
+        "DD 02.xls": (
+            xls_workbook_stream(rows, extra_globals=_rec(0x0022, struct.pack("<H", 1))),
+            "1904",
+        ),
+        "DD 03.xls": (
             xls_workbook_stream(
                 rows,
                 extra_sheet=_rec(0x0006, struct.pack("<HHH", 21, 2, 0) + bytes(16)),
-            )
-        )
-    )
-
-    grid, quarantine = read_workbook_grids_with_quarantine(spark, str(tmp_path))
-    assert {r["src_file"] for r in grid.collect()} == {"DD 01.xls"}
-    q = {r["src_file"]: r["reason"] for r in quarantine.collect()}
-    assert set(q) == {"DD 02.xls", "DD 03.xls"}
-    assert "1904" in q["DD 02.xls"]
-    assert "FORMULA" in q["DD 03.xls"]
+            ),
+            "FORMULA",
+        ),
+    }
+    for name, (stream, reason) in bad.items():
+        drop = tmp_path / name.split(".")[0]
+        drop.mkdir()
+        (drop / "DD 01.xls").write_bytes(plain)
+        (drop / name).write_bytes(ole2_bytes(stream))
+        _strict_read_fails(spark, drop, f"{name}: .*{reason}")
 
 
 def test_difat_self_cycle_raises_not_spins():

@@ -11,7 +11,7 @@ Layout
 ------
 - ``session``    : tuned SparkSession builder
 - ``sources``    : parquet star schema, Excel workbook grids (xlsx + BIFF),
-                   REST source/sink, parquet/JSON sinks and compaction
+                   the REST sink, parquet sinks and compaction
 - ``functions``  : scalar column-expression pack (SURVEY.md §2.8 F1–F24)
 - ``operators``  : reconciliation join, marker segmentation, quality gates,
                    dedup, similarity search, text analysis, event windows

@@ -11,7 +11,6 @@ from xero_api_etl_utilities_spark.functions.scalars import (
     iso_date,
     local_ts,
     lpad4,
-    money,
     receipt_ref,
     strip_dashes,
     strip_non_digits,
@@ -25,7 +24,6 @@ __all__ = [
     "iso_date",
     "local_ts",
     "lpad4",
-    "money",
     "receipt_ref",
     "strip_dashes",
     "strip_non_digits",

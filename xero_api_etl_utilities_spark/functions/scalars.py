@@ -18,13 +18,6 @@ from pyspark.sql.types import DecimalType
 MONEY = DecimalType(12, 2)
 
 
-def money(col: Column | str) -> Column:
-    """F22: numeric coercion (`+x` on Prisma Decimal, src/DataObject.ts:23)
-    done once, properly, as a decimal cast."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(MONEY)
-
-
 def receipt_ref(terminal_id: Column, seq_no: Column) -> Column:
     """F1: `${terminalId}/${seqNo}` (src/DataObject.ts:28,
     src/queries.ts:129) — the invoice idempotency key."""

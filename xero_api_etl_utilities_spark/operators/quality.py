@@ -12,7 +12,7 @@ The reference audits itself at runtime instead of being tested:
 Engine form: each gate is a pure DataFrame split — (passed, violations)
 — plus a driver-side ``enforce`` that raises after ONE aggregate
 action. Violations are a side-output DataFrame the caller can persist
-(the S11 JSON audit-log semantics) rather than stringly-typed throws.
+rather than stringly-typed throws.
 EP1 answers Q1 and the Q3 soft warn together in one action
 (``operators/daydocket.day_gates``, read by ``plans/pipeline.py``).
 
@@ -54,32 +54,3 @@ def enforce_empty(df: DataFrame) -> None:
     if n > 0:
         raise QualityGateError("quality gate: unverified charges is non-empty")
 
-
-def observed_gate(df: DataFrame, name: str, **metric_exprs):
-    """Zero-extra-pass gate metrics via ``DataFrame.observe``.
-
-    The gates above each cost one extra (cheap) job; when the frame is
-    about to be fully materialized anyway — a cache fill, a sink
-    write — even that probe is wasted work at 100 TB. Spark's
-    observation API attaches named aggregates that are computed DURING
-    whatever action materializes the frame: the metrics ride the
-    existing pass, touching every row exactly once, for free.
-
-    Usage::
-
-        gated, obs = observed_gate(df, "invoices",
-                                   n=F.count(F.lit(1)),
-                                   n_null=F.sum(F.isnull("ref").cast("int")))
-        gated.write...                  # any full action
-        obs.get["n"], obs.get["n_null"] # available after the action
-
-    Returns ``(df_with_observation, Observation)``. ``Observation.get``
-    blocks until an action has run — call it AFTER materializing, and
-    raise QualityGateError at the call site if a metric violates its
-    bound (the enforce step stays driver-side and one row, like every
-    other gate here).
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    return df.observe(obs, *[expr.alias(k) for k, expr in metric_exprs.items()]), obs

@@ -203,8 +203,8 @@ def topk_bruteforce_pandas(queries: DataFrame, corpus: DataFrame) -> DataFrame:
 def hyperplanes(n_planes: int, dim: int, seed: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplane vectors — exported so the
     DuckDB oracle generator inlines the SAME plane literals the Spark
-    plan uses (sign margins on this corpus are ~1e-4, far above the
-    ~1e-14 cross-engine double-summation noise, so bucket ids are
+    plan uses (sign margins on the test corpora are ≥6.5e-5, far above
+    the ~1e-14 cross-engine double-summation noise, so bucket ids are
     engine-stable)."""
     import random
 

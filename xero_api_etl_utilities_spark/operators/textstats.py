@@ -10,10 +10,9 @@ hashed comparison.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-TOKEN_PATTERN = "[A-Za-z0-9]+"
 # BPE-ish segmentation: word pieces, numbers, or single non-space symbols.
 BPE_ISH_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 

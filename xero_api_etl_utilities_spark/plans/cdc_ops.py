@@ -590,8 +590,8 @@ def diag_data_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     date range, null-ness) counted over ONE fact scan as conditional
     sums, published as (rule, n_checked, n_violations). Adding a rule
     is adding a column expression — no extra pass ever. A violation
-    row here is the thing observed_gate would abort on in the
-    pipeline; the catalog form makes the census itself verifiable."""
+    row here is the thing a pipeline gate would abort on; the catalog
+    form makes the census itself verifiable."""
     od = load_table(spark, sf_dir, "orders")
     rules = {
         "o_orderstatus in (F,O,P)": ~F.col("o_orderstatus").isin("F", "O", "P"),

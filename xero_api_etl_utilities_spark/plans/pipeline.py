@@ -9,7 +9,10 @@ Spark DAG over one cached parse of the day:
          → unverified gate (Q3-hard)
          → customer join (J2), document assembly
            (P9/P12/F6/F15/D2, P10 side-output)
-         → idempotent REST sink + JSON audit (S8/S11)
+         → JSON payloads (S11)
+
+The caller delivers the payloads with ``sources/rest.post_documents``
+(S8: batched, idempotent on the document reference).
 
 The reference's entity routing (`pw`/`wb` selecting log path, DB URL
 and tenant — src/helpers.ts:20-46, src/server.ts:7) becomes the
@@ -44,7 +47,6 @@ from xero_api_etl_utilities_spark.plans.documents_out import (
     documents_to_json,
     validate_required,
 )
-from xero_api_etl_utilities_spark.sources.rest import post_documents
 
 
 @dataclass(frozen=True)
@@ -170,10 +172,3 @@ def run_daily_import(
         "all_balanced": balanced,  # type: ignore[dict-item]
     }
 
-
-def deliver(payloads: DataFrame, config: EntityConfig) -> None:
-    """S8: idempotent batched POST via the entity's transport root."""
-    from xero_api_etl_utilities_spark.sources.rest import LocalJsonTransport
-
-    root = config.transport_root
-    post_documents(payloads, lambda: LocalJsonTransport(root))

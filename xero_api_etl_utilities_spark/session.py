@@ -37,7 +37,9 @@ def get_spark(
     (in ``extra_conf`` or at submit time).  With it set to reliable
     storage, every lineage cut (:func:`operators.materialize.materialize`)
     checkpoints there and survives executor loss; without it the cuts
-    are executor-local.
+    are executor-local.  A reliable checkpoint is removed once its frame
+    is garbage-collected, so memos and iterative rounds do not pile up
+    in that directory over a long run.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -72,6 +74,8 @@ def get_spark(
         # parquet row-group sweet spot.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # Remove a checkpoint's files once its RDD is unreachable.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

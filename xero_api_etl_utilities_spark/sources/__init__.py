@@ -1,7 +1,7 @@
 """Source connectors and sinks: parquet star schema, Excel workbook
-grids (xlsx + BIFF), the REST source/sink, and parquet/JSON writers
-with small-file compaction."""
+grids (xlsx + BIFF), the REST sink, and parquet writers with small-file
+compaction."""
 
-from xero_api_etl_utilities_spark.sources.parquet import TABLES, load_table, load_tables
+from xero_api_etl_utilities_spark.sources.parquet import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_tables"]
+__all__ = ["TABLES", "load_table"]

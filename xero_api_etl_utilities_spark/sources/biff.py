@@ -7,9 +7,9 @@ BIFF transparently, but the repo's zip+XML decoder only understood
 zip-XML ``.xlsx``: a real drop-dir with an old-format ``DD 07.xls``
 threw inside an executor task.
 This module is the fuller fix — a minimal BIFF8 string/number cell
-reader so legacy workbooks decode to the SAME grid contract, with the
-loud-quarantine route (``excel_grid.read_workbook_grids_with_
-quarantine``) covering everything neither decoder understands.
+reader so legacy workbooks decode to the SAME grid contract; a
+workbook neither decoder understands fails the read, naming the file
+(``excel_grid.read_workbook_grids``).
 
 Two layers, both stdlib-only (struct + bytes):
 
@@ -27,11 +27,11 @@ charts are out — day-docket grids are literal strings and numbers
 (src/parse.ts:61-146).  Out-of-scope is LOUD, never silent: a
 1904-flagged workbook raises before any cell is emitted (its serial
 dates would decode 1462 days shifted) and a FORMULA record fails the
-sheet (skipping it would emit a grid with holes) — both land in the
-quarantine with a diagnosable reason via
-``read_workbook_grids_with_quarantine``.  Numbers are emitted in the same textual form
-the xlsx path yields from ``<v>`` (integers without a trailing
-``.0``), so downstream positional parsing is decoder-agnostic.
+sheet (skipping it would emit a grid with holes) — either way the
+read fails with the file name and the reason.  Numbers are emitted in
+the same textual form the xlsx path yields from ``<v>`` (integers
+without a trailing ``.0``), so downstream positional parsing is
+decoder-agnostic.
 
 Error contract: every malformed input raises ``ValueError`` (the
 repo-wide byte-decoder rule, tests/test_codec_fuzz.py) — struct
@@ -169,7 +169,6 @@ def _ole2_stream(blob: bytes, name: str) -> bytes:
 # BIFF8 records
 # ---------------------------------------------------------------------------
 
-_BOF = 0x0809
 _EOF = 0x000A
 _BOUNDSHEET = 0x0085
 _SST = 0x00FC
@@ -343,7 +342,7 @@ def decode_xls_grid(
         stream = ole2_stream(content, "Workbook")
     except KeyError:
         # pre-BIFF8 files name the stream "Book" — BIFF5 cell records
-        # differ, so route those to quarantine loudly
+        # differ, so fail the workbook loudly
         raise ValueError("OLE2 container has no BIFF8 'Workbook' stream")
     try:
         return _decode_workbook_stream(stream, sheet_name)
@@ -364,8 +363,7 @@ def _decode_workbook_stream(
             if flag == 1:
                 # 1904 date mode shifts every serial date by 1462 days;
                 # decoding it silently would hand downstream date logic
-                # plausible-but-wrong values — route to quarantine
-                # loudly instead
+                # plausible-but-wrong values — fail loudly instead
                 raise ValueError(
                     "BIFF8 1904 date mode not supported"
                     " (serial dates would decode shifted)"
@@ -405,8 +403,7 @@ def _decode_workbook_stream(
             # cached FORMULA results are out of scope (day-docket grids
             # are literal cells): decoding the rest of the sheet while
             # skipping formula cells would silently emit a grid with
-            # holes — fail the workbook loudly so the quarantine route
-            # reports it instead
+            # holes — fail the workbook loudly instead
             raise ValueError(
                 "BIFF8 FORMULA cells not supported (cached results"
                 " out of scope)"

@@ -13,13 +13,14 @@ marker segmentation is a running-sum window (W1), cell lookups are
 filters, the balance check is an aggregate. This keeps the positional
 logic testable on in-memory fixtures with no Excel library present.
 
-Physical ingestion paths:
-- ``grid_from_rows``      : build the grid from fixture tuples (tests).
-- ``read_workbook_grids`` : binaryFile source + mapInPandas decode —
-  partition-parallel workbook decode for many files. The byte decode
-  is ``decode_xlsx_grid``: an xlsx is a zip of XML parts, so the
-  decoder is pure stdlib (zipfile + ElementTree) — no Excel library
-  required, runs end-to-end in this container, golden-workbook tested.
+Physical ingestion: ``read_workbook_grids`` is a binaryFile source +
+mapInPandas decode — partition-parallel workbook decode for many files,
+strict: an undecodable workbook fails the run, naming the file.  The
+byte decode is ``decode_workbook_grid``: an xlsx is a zip of XML parts
+(``decode_xlsx_grid``) and a legacy xls an OLE2 BIFF8 stream
+(``sources/biff.py``), both decoded with the stdlib alone — no Excel
+library required, golden-workbook tested.  ``grid_from_rows`` builds
+the same grid from (src_file, row_idx, A..G) tuples for fixtures.
 """
 
 from __future__ import annotations
@@ -194,14 +195,20 @@ def decode_workbook_grid(
 def _decode_workbook_batches(batches):
     """mapInPandas worker: binaryFile rows → grid rows via the stdlib
     xlsx/xls decoders (one workbook may span pandas chunks; each input
-    row is one whole workbook blob, so per-row decode is safe)."""
+    row is one whole workbook blob, so per-row decode is safe).  A
+    decode error is re-raised as a ``ValueError`` that starts with the
+    workbook's file name."""
     import pandas as pd
 
     for pdf in batches:
         out: list[dict] = []
         for _, row in pdf.iterrows():
-            # fixed sheet name, src/parse.ts:63
-            for r_idx, cells in decode_workbook_grid(row["content"], "A4 Summary"):
+            try:
+                # fixed sheet name, src/parse.ts:63
+                decoded = decode_workbook_grid(row["content"], "A4 Summary")
+            except (ValueError, KeyError) as e:
+                raise ValueError(f"{row['file_name']}: {e}") from e
+            for r_idx, cells in decoded:
                 rec = {"src_file": row["file_name"], "row_idx": r_idx}
                 for c_idx, col in enumerate(GRID_COLUMNS):
                     rec[col] = cells[c_idx]
@@ -224,69 +231,9 @@ def read_workbook_grids(spark: SparkSession, drop_dir: str) -> DataFrame:
     one decode task.  Workbooks are independent decode units: how they
     share a split does not change the grid.
 
-    STRICT mode: one undecodable workbook fails its task loudly.  The
-    drop-dir production route is
-    :func:`read_workbook_grids_with_quarantine`, which keeps the batch
-    alive and routes bad blobs to a reviewable side output."""
+    One undecodable workbook fails its task, and with it the run, with
+    the workbook's file name and the decoder's reason in the error: a
+    day is imported whole or not at all."""
     return list_day_docket_files(spark, drop_dir).mapInPandas(
         _decode_workbook_batches, schema=GRID_SCHEMA
     )
-
-
-_QUARANTINE_SCHEMA = T.StructType(
-    list(GRID_SCHEMA.fields)
-    + [T.StructField("_decode_error", T.StringType(), True)]
-)
-
-
-def _decode_workbook_batches_permissive(batches):
-    """Quarantining twin of ``_decode_workbook_batches``: a workbook
-    that fails to decode becomes ONE error row (row_idx = -1, cells
-    null, ``_decode_error`` = the diagnosable reason) instead of a
-    task failure — the P10 side-output rule applied to the Excel hop."""
-    import pandas as pd
-
-    cols = ["src_file", "row_idx", *GRID_COLUMNS, "_decode_error"]
-    for pdf in batches:
-        out: list[dict] = []
-        for _, row in pdf.iterrows():
-            try:
-                decoded = decode_workbook_grid(row["content"], "A4 Summary")
-            except (ValueError, KeyError) as e:
-                out.append(
-                    {"src_file": row["file_name"], "row_idx": -1,
-                     "_decode_error": f"{type(e).__name__}: {e}"}
-                )
-                continue
-            for r_idx, cells in decoded:
-                rec = {"src_file": row["file_name"], "row_idx": r_idx,
-                       "_decode_error": None}
-                for c_idx, col in enumerate(GRID_COLUMNS):
-                    rec[col] = cells[c_idx]
-                out.append(rec)
-        yield pd.DataFrame(out, columns=cols)
-
-
-def read_workbook_grids_with_quarantine(
-    spark: SparkSession, drop_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Drop-dir ingestion with corrupt-workbook routing: returns
-    (grid, quarantine), a (good, bad) pair.  ``quarantine`` has one
-    row per undecodable file with the diagnosable reason (legacy BIFF5,
-    OLE2 noise, truncated zip…); ``grid`` is byte-identical to the strict
-    reader's output for every file that decodes.
-
-    One decode pass feeds both sides (the frame is cached so the two
-    filtered views don't re-decode the drop-dir).  The decode runs on
-    the scan's splits exactly as in :func:`read_workbook_grids`."""
-    decoded = (
-        list_day_docket_files(spark, drop_dir)
-        .mapInPandas(_decode_workbook_batches_permissive, schema=_QUARANTINE_SCHEMA)
-        .cache()
-    )
-    grid = decoded.filter(F.col("_decode_error").isNull()).drop("_decode_error")
-    quarantine = decoded.filter(F.col("_decode_error").isNotNull()).select(
-        "src_file", F.col("_decode_error").alias("reason")
-    )
-    return grid, quarantine
-

@@ -27,8 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one star-schema table as a DataFrame (lazy parquet scan).
@@ -92,7 +90,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         )
     return spark.read.parquet(path)
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every table; values are lazy scans so unused ones cost nothing."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}

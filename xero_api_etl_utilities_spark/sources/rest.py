@@ -1,143 +1,46 @@
-"""S7/S8/S9 — REST source and sink (transport-pluggable, local fake).
+"""S8 — the REST sink that delivers the day's documents to Xero.
 
-The reference talks to the Xero REST API: a filtered invoice fetch
-(`where Contact.Name=="Day Dockets" && DateString=="…"`, statuses
-SUBMITTED — /root/reference/src/apiFunctions.ts:130-147), a batched
-create-invoices/credit-notes POST (summarizeErrors=false, unitdp=2,
-empty batches skipped — src/apiFunctions.ts:58-80), and per-invoice
-attachment uploads (src/apiFunctions.ts:90-119; the reference's
-`return`-in-loop bug uploads only the first attachment — the engine
-uploads all, per the SURVEY.md §0 intent table).
+The reference POSTs batches of invoices/credit notes to the Xero REST
+API with ``summarizeErrors=false`` and ``unitdp=2``, skipping empty
+batches (reference src/apiFunctions.ts:58-80).  Under
+``summarizeErrors=false`` a rejected document does not fail the
+request: the response is a 200 carrying a per-document status, so the
+sink reads every status and raises on a rejected document.
 
-Engine design:
-- a ``Transport`` protocol (get/post) so correctness runs use the
-  ``LocalJsonTransport`` fake (filesystem-backed, idempotent,
-  audit-logged — the S11 JSON log semantics) and production would plug
-  an HTTP transport with the same interface;
-- source: driver-side fetch → ``spark.createDataFrame`` for small
-  filtered result sets; at scale the fetch shards by date range via
-  ``mapInPandas`` so partitions pull their own slices;
-- sink: ``foreachPartition`` batched POSTs, idempotent on the document
-  ``reference`` key (src/DataObject.ts:28,57,84) so task retries never
-  double-post — the exactly-once-ish discipline §4 calls for.
+Engine design: ``post_documents`` is a ``foreachPartition`` sink of
+batched POSTs through ``HttpJsonTransport`` (stdlib urllib), idempotent
+on the document ``reference`` key (src/DataObject.ts:28,57,84) — the
+endpoint answers SKIPPED for a reference it already accepted, so a task
+retry or a rerun never double-posts.
+
+Not built: the reference's filtered invoice fetch
+(src/apiFunctions.ts:130-147) and its attachment upload
+(src/apiFunctions.ts:90-119).  The fetch only feeds the attachment
+upload, and no EP1 stage uploads attachments.
 """
 
 from __future__ import annotations
 
 import datetime
 import email.utils
-import hashlib
 import json
-import os
 from collections.abc import Iterator
-from typing import Protocol
 
-from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import types as T
-
-INVOICE_SCHEMA = T.StructType(
-    [
-        T.StructField("invoice_id", T.StringType(), False),
-        T.StructField("contact_name", T.StringType(), True),
-        T.StructField("date_string", T.StringType(), True),
-        T.StructField("status", T.StringType(), True),
-        T.StructField("reference", T.StringType(), True),
-    ]
-)
-
-
-class Transport(Protocol):
-    def get(self, resource: str, params: dict) -> list[dict]: ...
-
-    def post(self, resource: str, payloads: list[dict]) -> list[dict]: ...
-
-
-class LocalJsonTransport:
-    """Filesystem fake of the REST endpoint.
-
-    GET reads `<root>/<resource>.json` (a JSON array) and applies
-    equality filters; POST appends to `<root>/<resource>.out.jsonl`,
-    skipping payloads whose `reference` was already posted (idempotent
-    upsert-or-skip). Mirrors the request/response JSON audit logs the
-    reference writes (src/helpers.ts:90-167) with proper write modes
-    instead of the suffix-probing S12 hack.
-    """
-
-    def __init__(self, root: str):
-        self.root = root
-        os.makedirs(root, exist_ok=True)
-
-    def get(self, resource: str, params: dict) -> list[dict]:
-        path = os.path.join(self.root, f"{resource}.json")
-        if not os.path.exists(path):
-            return []
-        with open(path) as f:
-            rows = json.load(f)
-        return [
-            r for r in rows if all(r.get(k) == v for k, v in (params or {}).items())
-        ]
-
-    def post(self, resource: str, payloads: list[dict]) -> list[dict]:
-        """Idempotent batched POST, safe under CONCURRENT writers AND
-        mid-write crashes.
-
-        Claim-with-content: the payload is written durably (fsync) to a
-        private temp file, then ``os.link``-ed to the per-reference
-        marker path — link is atomic on POSIX and fails with
-        FileExistsError for losers, so exactly one of N racing tasks
-        (foreachPartition parallelism, or a retry racing its original)
-        wins each reference. Because the marker *contains* the payload
-        before it becomes visible, a crash can never strand a claimed
-        reference with no durable record (the r2 ADVICE finding against
-        the earlier claim-then-write ordering): either the marker does
-        not exist (retry re-posts) or it exists with the full payload.
-        The refs dir is therefore the durability + dedup source of
-        truth; ``<resource>.out.jsonl`` is an append-ordered
-        convenience view written after the claim commits.
-        """
-        path = os.path.join(self.root, f"{resource}.out.jsonl")
-        refs_dir = os.path.join(self.root, f"{resource}.refs")
-        os.makedirs(refs_dir, exist_ok=True)
-        results = []
-        with open(path, "a") as f:
-            for p in payloads:
-                ref = p.get("reference")
-                line = json.dumps(p, sort_keys=True) + "\n"
-                marker = os.path.join(
-                    refs_dir, hashlib.sha256(str(ref).encode()).hexdigest()
-                )
-                tmp = f"{marker}.tmp.{os.getpid()}"
-                with open(tmp, "w") as tf:
-                    tf.write(line)
-                    tf.flush()
-                    os.fsync(tf.fileno())
-                try:
-                    os.link(tmp, marker)  # atomic claim, content included
-                except FileExistsError:
-                    results.append({"reference": ref, "status": "SKIPPED"})
-                    continue
-                finally:
-                    os.unlink(tmp)
-                f.write(line)
-                f.flush()
-                results.append({"reference": ref, "status": "OK"})
-        return results
+from pyspark.sql import DataFrame, Row
 
 
 class HttpJsonTransport:
-    """Real HTTP transport (stdlib urllib — no extra dependency), same
-    protocol as the local fake, mirroring the reference client's shape
-    (/root/reference/src/apiFunctions.ts:58-147): GET with query-string
-    filters returning a JSON array, POST of a JSON payload batch
-    returning a JSON array of per-item statuses.
+    """HTTP transport (stdlib urllib — no extra dependency), in the
+    reference client's shape (src/apiFunctions.ts:58-80):
+    a POST of a JSON payload batch returns a JSON array of per-item
+    statuses.
 
-    Retry discipline: idempotent GETs retry on 429/5xx/connection
-    errors with exponential backoff (honoring Retry-After when
-    present). POSTs retry on the same conditions — safe because the
-    sink contract is idempotent on each payload's ``reference`` key
-    (the server, like ``LocalJsonTransport``, answers SKIPPED for a
-    reference it already accepted), so a retry after an ambiguous
-    failure cannot double-apply.
+    Retry discipline: POSTs retry on 429/5xx/connection errors with
+    exponential backoff (honoring Retry-After when present) — safe
+    because the sink contract is idempotent on each payload's
+    ``reference`` key (the server answers SKIPPED for a reference it
+    already accepted), so a retry after an ambiguous failure cannot
+    double-apply.
     """
 
     def __init__(
@@ -154,7 +57,7 @@ class HttpJsonTransport:
         self.backoff_s = backoff_s
         self.headers = {"Accept": "application/json", **(headers or {})}
 
-    def _request(self, url: str, data: bytes | None = None) -> list[dict]:
+    def _request(self, url: str, data: bytes) -> list[dict]:
         import time
         import urllib.error
         import urllib.request
@@ -162,8 +65,7 @@ class HttpJsonTransport:
         last_exc: Exception | None = None
         for attempt in range(self.max_retries + 1):
             req = urllib.request.Request(url, data=data, headers=self.headers)
-            if data is not None:
-                req.add_header("Content-Type", "application/json")
+            req.add_header("Content-Type", "application/json")
             try:
                 with urllib.request.urlopen(req, timeout=self.timeout) as resp:
                     body = resp.read()
@@ -205,43 +107,9 @@ class HttpJsonTransport:
             time.sleep(delay)
         raise last_exc  # pragma: no cover - loop always returns/raises
 
-    def get(self, resource: str, params: dict) -> list[dict]:
-        import urllib.parse
-
-        qs = urllib.parse.urlencode(params or {})
-        url = f"{self.base_url}/{resource}" + (f"?{qs}" if qs else "")
-        return self._request(url)
-
     def post(self, resource: str, payloads: list[dict]) -> list[dict]:
-        if not payloads:  # empty batches skipped, src/apiFunctions.ts:68
-            return []
         body = json.dumps(payloads, sort_keys=True).encode()
-        return self._request(f"{self.base_url}/{resource}", data=body)
-
-
-def fetch_invoices(
-    spark: SparkSession,
-    transport: Transport,
-    contact_name: str = "Day Dockets",
-    date_string: str | None = None,
-    statuses: tuple[str, ...] = ("SUBMITTED",),
-) -> DataFrame:
-    """S7: the pushed-filter invoice fetch. Filters are applied at the
-    source (the `where` string the reference builds), then the small
-    result set becomes a broadcastable DataFrame for the J5 lookup."""
-    params = {"contact_name": contact_name}
-    if date_string is not None:
-        params["date_string"] = date_string
-    rows = [
-        r
-        for r in transport.get("invoices", params)
-        if r.get("status") in statuses
-    ]
-    return spark.createDataFrame(
-        [Row(**{f.name: r.get(f.name) for f in INVOICE_SCHEMA.fields}) for r in rows]
-        or spark.sparkContext.emptyRDD(),  # type: ignore[arg-type]
-        schema=INVOICE_SCHEMA,
-    )
+        return self._request(f"{self.base_url}/{resource}", body)
 
 
 def post_documents(
@@ -253,9 +121,23 @@ def post_documents(
     """S8: batched idempotent REST sink via foreachPartition.
 
     ``transport_factory`` is a zero-arg callable built ON THE EXECUTOR
-    (a Transport is not assumed picklable). Empty partitions post
+    (a transport is not assumed picklable). Empty partitions post
     nothing (the reference skips empty batches, src/apiFunctions.ts:68).
-    """
+
+    Every posted reference must come back ``OK`` or ``SKIPPED``: a
+    document the endpoint rejects, or one it answers no status for,
+    fails the task with the references named, instead of being lost
+    inside a 200 response."""
+
+    def _send(transport, batch: list[dict]) -> None:
+        status = {r.get("reference"): r.get("status") for r in transport.post(resource, batch)}
+        bad = [
+            f"{p['reference']}: {status.get(p['reference'])}"
+            for p in batch
+            if status.get(p["reference"]) not in ("OK", "SKIPPED")
+        ]
+        if bad:
+            raise RuntimeError(f"POST {resource} rejected {len(bad)} document(s): {bad}")
 
     def _post(rows: Iterator[Row]) -> None:
         transport = transport_factory()
@@ -263,9 +145,9 @@ def post_documents(
         for row in rows:
             batch.append(json.loads(row["payload"]) | {"reference": row["reference"]})
             if len(batch) >= batch_size:
-                transport.post(resource, batch)
+                _send(transport, batch)
                 batch = []
         if batch:
-            transport.post(resource, batch)
+            _send(transport, batch)
 
     docs.foreachPartition(_post)

@@ -1,12 +1,9 @@
-"""Sinks: partitioned/bucketed fact layout, JSON audit writer and
-small-file compaction.
+"""Sinks: partitioned/bucketed fact layout and small-file compaction.
 
 The storage half of the 100 TB design: facts written
 date-partitioned (dynamic partition pruning reaches the §2 scans) and
 optionally bucketed by join key (elides the shuffle in orderkey-shaped
-joins like the flagship's). The JSON audit writer is the S11 log sink
-with proper write modes instead of the reference's versioned-filename
-probing (S12, src/helpers.ts:55-66).
+joins like the flagship's).
 """
 
 from __future__ import annotations
@@ -41,56 +38,8 @@ def write_bucketed_table(
     )
 
 
-def write_json_audit(df: DataFrame, path: str) -> None:
-    """S11: JSON audit sink; `errorifexists` replaces the reference's
-    a/b/c suffix collision probing with an atomic write-mode contract."""
-    df.write.mode("errorifexists").json(path)
-
-
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def write_versioned_run(
-    df: DataFrame,
-    base_path: str,
-    max_versions: int = 100,
-) -> str:
-    """S12 parity (src/helpers.ts:55-66): the reference probes
-    ``log.json``, ``log-a.json``, ``log-b.json``… until a free name
-    appears — a read-then-write race under concurrency. The
-    Spark-shaped equivalent versions RUN DIRECTORIES
-    (``base``, ``base_v2``, …) and lets ``errorifexists`` + the task
-    commit protocol arbitrate collisions atomically: two concurrent
-    writers can both probe, but only one commit wins a given version;
-    the loser just advances to the next. Returns the path written."""
-    from pyspark.errors import AnalysisException
-
-    last_exc: Exception | None = None
-    for v in range(1, max_versions + 1):
-        path = base_path if v == 1 else f"{base_path}_v{v}"
-        try:
-            df.write.mode("errorifexists").json(path)
-            return path
-        except AnalysisException as exc:
-            # Only a genuine path collision advances the probe; any other
-            # analysis failure (bad schema, duplicate columns) would
-            # otherwise burn all max_versions probes and surface as a
-            # misleading "no free version" error.  The message test is
-            # only a fallback for an exception without an error class:
-            # COLUMN_ALREADY_EXISTS says "already exists" too.
-            err_class = getattr(exc, "getErrorClass", lambda: None)()
-            if err_class:
-                collision = err_class == "PATH_ALREADY_EXISTS"
-            else:
-                collision = "already exists" in str(exc)
-            if not collision:
-                raise
-            last_exc = exc
-    raise RuntimeError(
-        f"write_versioned_run: no free version under {base_path!r} after"
-        f" {max_versions} probes"
-    ) from last_exc
 
 
 def _part_parquet_files(d: str) -> list[str]:
@@ -178,39 +127,3 @@ def compact_store(spark, root: str) -> int:
     shutil.rmtree(old)
     return len(_part_parquet_files(os.path.join(root, f"part=compact-{k:06d}")))
 
-
-def write_zorder_table(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-) -> None:
-    """Overwrite ``path`` with ``df`` Z-ORDER clustered on two integer
-    dimension columns (functions/zorder.py) in 16 files — the OPTIMIZE
-    ZORDER layout: rows land in files by Morton-key range, so every
-    file covers a narrow rectangle
-    in BOTH dimensions and engine min/max skipping prunes on either
-    predicate column (a plain sort gives pruning on the leading column
-    only). Lowering: repartitionByRange(z) assigns contiguous z-ranges
-    to files (one skew-aware range exchange — Spark samples the key),
-    sortWithinPartitions(z) makes each file internally ordered for
-    row-group stats. Dimensions are masked to 16 bits; callers bucket
-    wider domains first. The locality guarantee is pinned by
-    tests/test_bloom_zorder.py against the per-file min/max spans the
-    skipping engine would read."""
-    from pyspark.sql import functions as F
-
-    from xero_api_etl_utilities_spark.functions.zorder import z_interleave16
-
-    z = z_interleave16(
-        F.col(x_col).bitwiseAND(F.lit(65535)),
-        F.col(y_col).bitwiseAND(F.lit(65535)),
-    )
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(16, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
