@@ -4,7 +4,9 @@ that keep the catalog contract honest:
 * every registered query has an oracle (zero rows-only entries);
 * bench times every registered query exactly once, either at the run
   sf or as a bounded-sf baseline, so a new registration can never
-  silently skip the bench.
+  silently skip the bench;
+* each query family (the name's prefix) lives in one ``plans/`` module,
+  and ``plans/`` modules share helpers only by public names.
 """
 
 from __future__ import annotations
@@ -180,6 +182,51 @@ def test_every_package_module_is_reachable():
     assert not stale, f"stale exemptions: {stale}"
 
 
+def _package_nodes(sub=""):
+    """``(path relative to the package, node)`` for every AST node of
+    every package module under ``sub``."""
+    import ast
+    from pathlib import Path
+
+    base = Path(__file__).resolve().parent.parent / "xero_api_etl_utilities_spark"
+    for p in sorted((base / sub).rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text())):
+            yield str(p.relative_to(base)), node
+
+
+def test_each_query_prefix_lives_in_one_module():
+    """A query family is the first ``_``-separated token of its name
+    (``q<N>`` counts as ``q``), and all of a family's queries are defined
+    in one module, so the family has one place to read and to sample."""
+    import re
+    from collections import defaultdict
+
+    from xero_api_etl_utilities_spark.plans import catalog
+
+    homes = defaultdict(set)
+    for name, fn in catalog.queries().items():
+        homes[re.sub(r"^q\d+$", "q", name.split("_")[0])].add(fn.__module__)
+    split = {p: sorted(ms) for p, ms in sorted(homes.items()) if len(ms) > 1}
+    assert not split, f"query prefixes defined in more than one module: {split}"
+
+
+def test_plans_modules_share_only_public_names():
+    """No ``plans/`` module imports an ``_``-prefixed name from another
+    ``plans/`` module: a helper two modules share is public and owned by
+    one of them."""
+    import ast
+
+    pkg = "xero_api_etl_utilities_spark.plans."
+    private = sorted(
+        f"{rel}:{n.lineno} imports {a.name} from {n.module}"
+        for rel, n in _package_nodes("plans")
+        if isinstance(n, ast.ImportFrom) and (n.module or "").startswith(pkg)
+        for a in n.names
+        if a.name.startswith("_")
+    )
+    assert not private, f"private names shared between plans modules: {private}"
+
+
 def test_only_materialize_reads_the_compute_width():
     """The cluster's compute width (``defaultParallelism``) is read, and
     lineage is cut (``localCheckpoint``/``checkpoint``) or the checkpoint
@@ -189,7 +236,6 @@ def test_only_materialize_reads_the_compute_width():
     written has one function to change.  The walk is static, over every
     package module's AST."""
     import ast
-    from pathlib import Path
 
     attrs = {
         "defaultParallelism",
@@ -198,11 +244,9 @@ def test_only_materialize_reads_the_compute_width():
         "setCheckpointDir",
         "getCheckpointDir",
     }
-    base = Path(__file__).resolve().parent.parent / "xero_api_etl_utilities_spark"
     readers = sorted(
-        f"{p.relative_to(base)}:{node.lineno} {node.attr}"
-        for p in base.rglob("*.py")
-        for node in ast.walk(ast.parse(p.read_text()))
+        f"{rel}:{node.lineno} {node.attr}"
+        for rel, node in _package_nodes()
         if isinstance(node, ast.Attribute) and node.attr in attrs
     )
     others = [r for r in readers if not r.startswith("operators/materialize.py:")]

@@ -9,10 +9,10 @@ from __future__ import annotations
 import duckdb
 
 from xero_api_etl_utilities_spark.functions.crosshash import py_h32
-from xero_api_etl_utilities_spark.plans.corpus_extra import (
-    diag_distribution_drift,
-    events_seq_pairs,
-    sample_epoch_shuffle,
+from xero_api_etl_utilities_spark.plans.curation_ops import sample_epoch_shuffle
+from xero_api_etl_utilities_spark.plans.diagnostics_ops import diag_distribution_drift
+from xero_api_etl_utilities_spark.plans.event_ops import events_seq_pairs
+from xero_api_etl_utilities_spark.plans.text_ops import (
     text_boilerplate_shingles,
     text_tf_cosine_pairs,
 )
@@ -186,10 +186,7 @@ def test_semdedup_census_matches_bruteforce(spark, sf_dir):
     from xero_api_etl_utilities_spark.operators.ivf import (
         train_centroids_from_parquet,
     )
-    from xero_api_etl_utilities_spark.plans.corpus_extra import (
-        _SEMDEDUP_TAU,
-        dedup_semantic_clusters,
-    )
+    from xero_api_etl_utilities_spark.plans.dedup_ops import _SEMDEDUP_TAU, dedup_semantic_clusters
 
     rows = _rows(sf_dir, "SELECT vec_id, embedding FROM embeddings ORDER BY vec_id")
     ids = [r[0] for r in rows]
@@ -229,10 +226,7 @@ def test_token_budget_plan_matches_python_recompute(spark, sf_dir):
     # targets <= budget with per-source shortfall < w_sum.
     import re
 
-    from xero_api_etl_utilities_spark.plans.corpus_extra import (
-        _BUDGET_X,
-        sample_token_budget_plan,
-    )
+    from xero_api_etl_utilities_spark.plans.curation_ops import _BUDGET_X, sample_token_budget_plan
 
     raw = _rows(sf_dir, "SELECT source, text FROM documents")
     inv: dict[str, list[int]] = {}
@@ -265,7 +259,7 @@ def test_ks_drift_matches_python_recompute(spark, sf_dir):
     # smallest length) with digit-exact cross-multiplied values.
     import re
 
-    from xero_api_etl_utilities_spark.plans.corpus_extra import diag_ks_drift
+    from xero_api_etl_utilities_spark.plans.diagnostics_ops import diag_ks_drift
 
     raw = _rows(sf_dir, "SELECT source, n_chars FROM documents")
     a, b = {}, {}
@@ -297,9 +291,7 @@ def test_quality_deciles_census_is_complete_and_balanced(spark, sf_dir):
     # decile total within the NTILE +/-1 balance), and per-source rows
     # must match a python recompute of the integer score + decile cut.
     from xero_api_etl_utilities_spark.operators.textstats import STOPWORDS_EN
-    from xero_api_etl_utilities_spark.plans.corpus_extra import (
-        diag_quality_deciles,
-    )
+    from xero_api_etl_utilities_spark.plans.diagnostics_ops import diag_quality_deciles
     import re as _re
     import string
 
@@ -345,7 +337,7 @@ def test_quality_deciles_dist_is_bitwise_equal_to_exact(spark, sf_dir):
     # broadcast prefix offsets + closed-form NTILE) must reproduce the
     # global-window census row for row — equality PROVES the
     # decomposition reconstructs the (q_score, doc_id) total order.
-    from xero_api_etl_utilities_spark.plans.corpus_extra import (
+    from xero_api_etl_utilities_spark.plans.diagnostics_ops import (
         diag_quality_deciles,
         diag_quality_deciles_dist,
     )
@@ -364,9 +356,7 @@ def test_dup_span_coverage_matches_python_union(spark, sf_dir):
     # disagree.
     from collections import defaultdict
 
-    from xero_api_etl_utilities_spark.plans.corpus_extra import (
-        text_dup_span_coverage,
-    )
+    from xero_api_etl_utilities_spark.plans.text_ops import text_dup_span_coverage
 
     k = 6
     raw = _rows(sf_dir, "SELECT doc_id, source, text FROM documents")
@@ -418,9 +408,7 @@ def test_corpus_mix_census_matches_python(spark, sf_dir):
     # shares; cells must sum to the corpus and shares must floor-div.
     from collections import defaultdict
 
-    from xero_api_etl_utilities_spark.plans.corpus_extra import (
-        corpus_mix_census,
-    )
+    from xero_api_etl_utilities_spark.plans.curation_ops import corpus_mix_census
 
     rows = _rows(sf_dir, "SELECT lang, source, text FROM documents")
     cells = defaultdict(lambda: [0, 0])
@@ -446,9 +434,7 @@ def test_label_purity_matches_python_knn(spark, sf_dir):
     import math
     from collections import defaultdict
 
-    from xero_api_etl_utilities_spark.plans.corpus_extra import (
-        similarity_label_purity,
-    )
+    from xero_api_etl_utilities_spark.plans.retrieval_ops import similarity_label_purity
 
     rows = _rows(sf_dir, "SELECT vec_id, embedding, label FROM embeddings")
     vecs = {r[0]: r[1] for r in rows}
@@ -491,9 +477,7 @@ def test_head_coverage_matches_python(spark, sf_dir):
     # and per-source shares must floor-div against that exact set.
     from collections import Counter, defaultdict
 
-    from xero_api_etl_utilities_spark.plans.corpus_extra import (
-        text_head_coverage,
-    )
+    from xero_api_etl_utilities_spark.plans.text_ops import text_head_coverage
 
     rows = _rows(sf_dir, "SELECT source, text FROM documents")
     global_c = Counter()
@@ -522,9 +506,7 @@ def test_pack_waste_matches_python(spark, sf_dir):
     # the packing lower bound can never exceed the naive chunk count.
     from collections import defaultdict
 
-    from xero_api_etl_utilities_spark.plans.corpus_extra import (
-        sample_pack_waste,
-    )
+    from xero_api_etl_utilities_spark.plans.curation_ops import sample_pack_waste
 
     L = 128
     rows = _rows(sf_dir, "SELECT source, text FROM documents")

@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 def _artifact_frames(spark, sf_dir, tmp_path, monkeypatch):
     monkeypatch.setenv("XERO_SPARK_PUBLISH_DIR", str(tmp_path))
     from xero_api_etl_utilities_spark.operators.packing import pack_fixed_budget
-    from xero_api_etl_utilities_spark.plans import wave10
-    from xero_api_etl_utilities_spark.plans.wave9 import span_dedup_frame
+    from xero_api_etl_utilities_spark.plans import curation_ops as wave10
+    from xero_api_etl_utilities_spark.plans.text_ops import span_dedup_frame
     from xero_api_etl_utilities_spark.sources.writer import read_partitioned
 
     path = wave10.publish_corpus(spark, sf_dir)
@@ -47,7 +47,7 @@ def test_publish_pack_budget_contract(spark, sf_dir, tmp_path, monkeypatch):
     sit at fixed multiples of the budget along the token stream, so
     prefix mass through pack p is > p * budget whenever pack p+1 has
     rows)."""
-    from xero_api_etl_utilities_spark.plans import wave10
+    from xero_api_etl_utilities_spark.plans import curation_ops as wave10
 
     _, rb = _artifact_frames(spark, sf_dir, tmp_path, monkeypatch)
     budget = wave10._PACK_BUDGET
@@ -86,7 +86,7 @@ def test_publish_default_dir_inside_repo(monkeypatch):
     import os
 
     import xero_api_etl_utilities_spark as pkg
-    from xero_api_etl_utilities_spark.plans.wave10 import _publish_dir
+    from xero_api_etl_utilities_spark.plans.curation_ops import _publish_dir
 
     monkeypatch.delenv("XERO_SPARK_PUBLISH_DIR", raising=False)
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
@@ -103,7 +103,7 @@ def test_stale_run_dirs_pruned(tmp_path):
     (ADVICE r11)."""
     import os
 
-    from xero_api_etl_utilities_spark.plans.wave10 import _prune_stale_runs
+    from xero_api_etl_utilities_spark.plans.dedup_ops import prune_stale_runs as _prune_stale_runs
 
     base = tmp_path / "corpus_publish"
     for d in ("sf0.01-oldapp", "sf0.01-curapp", "sf0.1-otherapp", "sf0.01"):

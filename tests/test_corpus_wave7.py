@@ -59,9 +59,7 @@ def test_feature_pit_scd2_rollup_matches_python(spark, sf_dir):
 def test_unigram_logprob_census_matches_python(spark, sf_dir):
     # X120: ilog2 surprisal = (N // cnt).bit_length() - 1, doc score in
     # integer milli-bits, per-source census.
-    from xero_api_etl_utilities_spark.plans.corpus_wave7 import (
-        text_unigram_logprob,
-    )
+    from xero_api_etl_utilities_spark.plans.text_ops import text_unigram_logprob
     import re as _re
 
     raw = _rows(sf_dir, "SELECT doc_id, source, text FROM documents")
@@ -98,7 +96,7 @@ def test_unigram_logprob_census_matches_python(spark, sf_dir):
 def test_winnow_fingerprints_match_python(spark, sf_dir):
     # X121: python winnowing with the packed (hash, pos) key; census
     # per source must match exactly.
-    from xero_api_etl_utilities_spark.plans.corpus_wave7 import (
+    from xero_api_etl_utilities_spark.plans.text_ops import (
         _WINNOW_K,
         _WINNOW_W,
         text_winnow_fingerprints,
@@ -134,10 +132,7 @@ def test_winnow_fingerprints_match_python(spark, sf_dir):
 def test_winnow_density_is_near_two_over_w_plus_one(spark, sf_dir):
     # the paper's expected density for random hashes is 2/(w+1); this
     # corpus should land in a loose band around it (sanity, not pin)
-    from xero_api_etl_utilities_spark.plans.corpus_wave7 import (
-        _WINNOW_W,
-        text_winnow_fingerprints,
-    )
+    from xero_api_etl_utilities_spark.plans.text_ops import _WINNOW_W, text_winnow_fingerprints
 
     rows = text_winnow_fingerprints(spark, sf_dir).collect()
     expected_bp = 2 * 10000 // (_WINNOW_W + 1)
@@ -150,9 +145,7 @@ def test_self_similarity_invariants_and_symmetric_coverage(spark, sf_dir):
     # X122: bucket-set Jaccard invariants — shared <= min(a, b), bp in
     # range, pairs unique and ordered; per-source bucket counts match
     # an independent DuckDB-free lower bound (>= 1 per non-empty src).
-    from xero_api_etl_utilities_spark.plans.corpus_wave7 import (
-        corpus_self_similarity,
-    )
+    from xero_api_etl_utilities_spark.plans.curation_ops import corpus_self_similarity
 
     rows = corpus_self_similarity(spark, sf_dir).collect()
     assert rows, "sources sharing filler vocabulary must collide somewhere"
@@ -168,9 +161,7 @@ def test_self_similarity_invariants_and_symmetric_coverage(spark, sf_dir):
 
 def test_split_balance_report_matches_python(spark, sf_dir):
     # X123: replay the md5 split + shares in python.
-    from xero_api_etl_utilities_spark.plans.corpus_wave7 import (
-        split_balance_report,
-    )
+    from xero_api_etl_utilities_spark.plans.curation_ops import split_balance_report
 
     raw = _rows(sf_dir, "SELECT doc_id, lang FROM documents")
     cell: Counter = Counter()
@@ -204,7 +195,7 @@ def test_split_balance_report_matches_python(spark, sf_dir):
 def test_zipf_slope_matches_python_and_is_negative(spark, sf_dir):
     # X124: exact integer OLS recompute; slope must be negative
     # (frequency falls with rank) and den positive.
-    from xero_api_etl_utilities_spark.plans.corpus_wave7 import text_zipf_slope
+    from xero_api_etl_utilities_spark.plans.text_ops import text_zipf_slope
     import re as _re
 
     raw = _rows(sf_dir, "SELECT text FROM documents")
@@ -233,7 +224,7 @@ def test_centroid_sim_matches_numpy_with_margin(spark, sf_dir):
     # 1e-4 away from the threshold (the engine-stability precondition).
     import numpy as np
 
-    from xero_api_etl_utilities_spark.plans.corpus_wave7 import (
+    from xero_api_etl_utilities_spark.plans.retrieval_ops import (
         _CENTROID_COS_T,
         embedding_label_centroid_sim,
     )
@@ -264,9 +255,7 @@ def test_centroid_sim_matches_numpy_with_margin(spark, sf_dir):
 def test_curriculum_phases_partition_corpus(spark, sf_dir):
     # X126: phases must partition the docs; cumulative tokens per
     # source must be monotone and end at the source's token total.
-    from xero_api_etl_utilities_spark.plans.corpus_wave7 import (
-        sample_curriculum_order,
-    )
+    from xero_api_etl_utilities_spark.plans.curation_ops import sample_curriculum_order
 
     raw = _rows(
         sf_dir,
@@ -292,9 +281,7 @@ def test_label_noise_kappa_matches_numpy(spark, sf_dir):
     # numpy cosines (ties to smaller label, like the plan).
     import numpy as np
 
-    from xero_api_etl_utilities_spark.plans.corpus_wave7 import (
-        label_noise_kappa,
-    )
+    from xero_api_etl_utilities_spark.plans.curation_ops import label_noise_kappa
 
     raw = _rows(sf_dir, "SELECT vec_id, embedding, label FROM embeddings")
     ids = [r[0] for r in raw]
@@ -333,10 +320,7 @@ def test_tokenizer_oov_census_matches_python(spark, sf_dir):
     # X130: top-V vocab by (cnt desc, tok asc); per-source OOV mass.
     import re as _re
 
-    from xero_api_etl_utilities_spark.plans.corpus_wave7 import (
-        _OOV_VOCAB_SIZE,
-        tokenizer_oov_census,
-    )
+    from xero_api_etl_utilities_spark.plans.text_ops import _OOV_VOCAB_SIZE, tokenizer_oov_census
 
     raw = _rows(sf_dir, "SELECT source, text FROM documents")
     occ: dict[str, Counter] = defaultdict(Counter)
@@ -371,9 +355,7 @@ def test_tokenizer_oov_census_matches_python(spark, sf_dir):
 
 def test_char_entropy_census_matches_python(spark, sf_dir):
     # X131: per-doc ilog2 entropy in milli-bits, per-source census.
-    from xero_api_etl_utilities_spark.plans.corpus_wave7 import (
-        text_char_entropy,
-    )
+    from xero_api_etl_utilities_spark.plans.text_ops import text_char_entropy
 
     raw = _rows(sf_dir, "SELECT source, text FROM documents")
     per_src: dict[str, list[int]] = defaultdict(list)
@@ -401,7 +383,7 @@ def test_rake_keywords_match_python(spark, sf_dir):
     import re as _re
 
     from xero_api_etl_utilities_spark.operators.textstats import STOPWORDS_EN
-    from xero_api_etl_utilities_spark.plans.corpus_wave7 import (
+    from xero_api_etl_utilities_spark.plans.text_ops import (
         _RAKE_MAX_LEN,
         _RAKE_TOP,
         text_rake_keywords,
@@ -446,7 +428,7 @@ def test_rake_keywords_match_python(spark, sf_dir):
 def test_chunk_overlap_census_matches_python(spark, sf_dir):
     # X134: closed-form chunk math vs an EXPLICIT python chunker that
     # actually materializes the chunks — proving the closed form.
-    from xero_api_etl_utilities_spark.plans.corpus_wave7 import (
+    from xero_api_etl_utilities_spark.plans.curation_ops import (
         _CHUNK_S,
         _CHUNK_W,
         doc_chunk_overlap_census,
@@ -489,7 +471,7 @@ def test_chunk_overlap_census_matches_python(spark, sf_dir):
 def test_ivfpq_recall_census_consistency(spark, sf_dir):
     # census invariants + agreement with a direct set compare of
     # the two catalog shortlists it is built from.
-    from xero_api_etl_utilities_spark.plans.training_ops import (
+    from xero_api_etl_utilities_spark.plans.retrieval_ops import (
         similarity_ivfpq_recall,
         similarity_topk_ivfpq_rerank,
     )
@@ -519,9 +501,7 @@ def test_ivfpq_recall_census_consistency(spark, sf_dir):
 def test_audio_vad_matches_python_decode(spark, sf_dir):
     # X135: recompute the window energies from the closed-form sample
     # rule (doc_id*37 + i*13 + c*7 mod 4001 - 2000) in python.
-    from xero_api_etl_utilities_spark.plans.training_ops import (
-        multimodal_audio_vad,
-    )
+    from xero_api_etl_utilities_spark.plans.multimodal_ops import multimodal_audio_vad
 
     raw = _rows(sf_dir, "SELECT doc_id FROM documents WHERE doc_id % 10 = 0")
     exp = {}
@@ -555,9 +535,7 @@ def test_range_search_matches_numpy_within_cells(spark, sf_dir):
     import numpy as np
 
     from xero_api_etl_utilities_spark.operators.ivf import train_centroids
-    from xero_api_etl_utilities_spark.plans.extensions import (
-        similarity_range_search,
-    )
+    from xero_api_etl_utilities_spark.plans.retrieval_ops import similarity_range_search
     from xero_api_etl_utilities_spark.sources.parquet import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -592,9 +570,7 @@ def test_range_search_matches_numpy_within_cells(spark, sf_dir):
 
 def test_partition_advisor_matches_python(spark, sf_dir):
     # X137: recompute the advisory table from raw counts.
-    from xero_api_etl_utilities_spark.plans.scale_ops import (
-        layout_partition_advisor,
-    )
+    from xero_api_etl_utilities_spark.plans.diagnostics_ops import layout_partition_advisor
 
     raw = _rows(
         sf_dir,
@@ -637,9 +613,7 @@ def test_partition_advisor_matches_python(spark, sf_dir):
 def test_langid_confusion_cells_partition_each_language(spark, sf_dir):
     # X138: per-declared shares must sum to ~10000 bp (integer floors)
     # and cell counts must sum to the corpus.
-    from xero_api_etl_utilities_spark.plans.extensions import (
-        diag_langid_confusion,
-    )
+    from xero_api_etl_utilities_spark.plans.diagnostics_ops import diag_langid_confusion
 
     rows = diag_langid_confusion(spark, sf_dir).collect()
     (n_docs,) = _rows(sf_dir, "SELECT count(*) FROM documents")[0]
@@ -660,10 +634,7 @@ def test_rfm_migration_matches_python(spark, sf_dir):
     # migration census in python (ntile over (cents, custkey)).
     import datetime
 
-    from xero_api_etl_utilities_spark.plans.mining_ops import (
-        _RFM_SPLIT_DATE,
-        orders_rfm_migration,
-    )
+    from xero_api_etl_utilities_spark.plans.tpch_ops import _RFM_SPLIT_DATE, orders_rfm_migration
 
     raw = _rows(
         sf_dir,
@@ -703,7 +674,7 @@ def test_rfm_migration_matches_python(spark, sf_dir):
 
 def test_benford_census_matches_python(spark, sf_dir):
     # X140: first-digit counts + fixed expectation table.
-    from xero_api_etl_utilities_spark.plans.mining_ops import (
+    from xero_api_etl_utilities_spark.plans.diagnostics_ops import (
         _BENFORD_BP,
         diag_benford_firstdigit,
     )
@@ -737,7 +708,7 @@ def test_benford_census_matches_python(spark, sf_dir):
 
 def test_functional_deps_match_python(spark, sf_dir):
     # X142: recompute distinct counts per candidate pair.
-    from xero_api_etl_utilities_spark.plans.analytics_extra import (
+    from xero_api_etl_utilities_spark.plans.diagnostics_ops import (
         _FD_CANDIDATES,
         diag_functional_deps,
     )
@@ -775,9 +746,7 @@ def test_functional_deps_match_python(spark, sf_dir):
 
 def test_bigram_surprisal_matches_python(spark, sf_dir):
     # X143: conditional ilog2 surprisal with prefix counts.
-    from xero_api_etl_utilities_spark.plans.corpus_wave7 import (
-        text_bigram_surprisal,
-    )
+    from xero_api_etl_utilities_spark.plans.text_ops import text_bigram_surprisal
 
     raw = _rows(sf_dir, "SELECT doc_id, source, text FROM documents")
     tfs: dict[tuple[int, str], Counter] = {}
@@ -814,9 +783,7 @@ def test_bigram_surprisal_matches_python(spark, sf_dir):
 
 def test_yoy_growth_matches_python(spark, sf_dir):
     # X144: month rollup + adjacent-prior-year lag in python.
-    from xero_api_etl_utilities_spark.plans.analytics_extra import (
-        orders_yoy_growth,
-    )
+    from xero_api_etl_utilities_spark.plans.tpch_ops import orders_yoy_growth
 
     raw = _rows(
         sf_dir,
@@ -854,9 +821,7 @@ def test_source_tvd_matrix_matches_python(spark, sf_dir):
     import re as _re
     from fractions import Fraction
 
-    from xero_api_etl_utilities_spark.plans.corpus_wave7 import (
-        text_source_tvd_matrix,
-    )
+    from xero_api_etl_utilities_spark.plans.text_ops import text_source_tvd_matrix
 
     raw = _rows(sf_dir, "SELECT source, text FROM documents")
     dists: dict[str, Counter] = defaultdict(Counter)

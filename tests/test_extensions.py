@@ -481,9 +481,7 @@ def test_ivf_cell_balance_matches_numpy_assignment(spark, sf_dir):
     from xero_api_etl_utilities_spark.operators.ivf import (
         train_centroids_from_parquet,
     )
-    from xero_api_etl_utilities_spark.plans.extensions import (
-        similarity_ivf_cell_balance,
-    )
+    from xero_api_etl_utilities_spark.plans.retrieval_ops import similarity_ivf_cell_balance
 
     k_cells = 16
     cents = np.array(

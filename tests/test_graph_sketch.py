@@ -85,9 +85,7 @@ class TestSweepLineDecomposition:
 
         rows = [ev(1, 0), ev(2, 5), ev(3, 15), ev(4, 60)]
         events = spark.createDataFrame(rows, "event_id long, ts timestamp")
-        from xero_api_etl_utilities_spark.plans.graph_ops import (
-            events_max_concurrency,
-        )
+        from xero_api_etl_utilities_spark.plans.event_ops import events_max_concurrency
         import tempfile, os
 
         with tempfile.TemporaryDirectory() as d:

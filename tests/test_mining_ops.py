@@ -5,19 +5,19 @@ invariants."""
 from __future__ import annotations
 
 from xero_api_etl_utilities_spark.functions.crosshash import py_h32
-from xero_api_etl_utilities_spark.plans.mining_ops import (
+from xero_api_etl_utilities_spark.plans.dedup_ops import dedup_prefix_filter_pairs
+from xero_api_etl_utilities_spark.plans.diagnostics_ops import (
     _N_NEW,
     _N_OLD,
     _SNM_MAXDIST,
     _SNM_WINDOW,
     _VNODES,
     _ring,
-    basket_brand_triples,
-    dedup_prefix_filter_pairs,
-    events_daily_trend,
     fuzzy_sorted_neighborhood,
     layout_shard_moves,
 )
+from xero_api_etl_utilities_spark.plans.event_ops import events_daily_trend
+from xero_api_etl_utilities_spark.plans.tpch_ops import basket_brand_triples
 
 
 def test_trend_sign_matches_handfit_series(spark, sf_dir):
@@ -152,7 +152,7 @@ def test_lpa_min_tie_break_is_deterministic(spark):
 
 
 def test_simpson_index_bounds(spark, sf_dir):
-    from xero_api_etl_utilities_spark.plans.mining_ops import events_user_diversity
+    from xero_api_etl_utilities_spark.plans.event_ops import events_user_diversity
 
     rows = events_user_diversity(spark, sf_dir).collect()
     assert rows
@@ -169,7 +169,7 @@ def test_simpson_index_bounds(spark, sf_dir):
 def test_lsh_quality_recall_floor(spark, sf_dir):
     # the production (16,4) banding claims ~0.998 recall at J>=0.7;
     # pin a 0.98 floor and the basic identities.
-    from xero_api_etl_utilities_spark.plans.mining_ops import dedup_lsh_quality
+    from xero_api_etl_utilities_spark.plans.dedup_ops import dedup_lsh_quality
 
     r = dedup_lsh_quality(spark, sf_dir).collect()[0]
     assert r["true_positives"] <= min(r["n_truth"], r["n_cand"])
@@ -178,9 +178,7 @@ def test_lsh_quality_recall_floor(spark, sf_dir):
 
 
 def test_abc_classes_partition_the_parts(spark, sf_dir):
-    from xero_api_etl_utilities_spark.plans.mining_ops import (
-        part_abc_classification,
-    )
+    from xero_api_etl_utilities_spark.plans.tpch_ops import part_abc_classification
 
     rows = {r["abc_class"]: r for r in part_abc_classification(spark, sf_dir).collect()}
     assert set(rows) == {"A", "B", "C"}
@@ -214,7 +212,7 @@ def test_bfs_depths_on_path_graph(spark):
 
 
 def test_rfm_segments_census_sums_to_customers(spark, sf_dir):
-    from xero_api_etl_utilities_spark.plans.mining_ops import orders_rfm_segments
+    from xero_api_etl_utilities_spark.plans.tpch_ops import orders_rfm_segments
 
     rows = orders_rfm_segments(spark, sf_dir).collect()
     n_cust = (
@@ -231,9 +229,7 @@ def test_rfm_segments_census_sums_to_customers(spark, sf_dir):
 
 
 def test_interval_coalesce_identities(spark, sf_dir):
-    from xero_api_etl_utilities_spark.plans.mining_ops import (
-        window_interval_coalesce,
-    )
+    from xero_api_etl_utilities_spark.plans.aggregate_ops import window_interval_coalesce
 
     rows = window_interval_coalesce(spark, sf_dir).collect()
     assert rows
@@ -282,7 +278,7 @@ def test_clamped_balance_pins_handfit_ledger(spark):
     # flows +5, -9, +3, -1 (cents 500/-900/300/-100): balances
     # 500 -> 0 (clamp) -> 300 -> 200; one clamp hit. Window running
     # sums CANNOT produce this (they'd give -100 at the end).
-    from xero_api_etl_utilities_spark.plans.mining_ops import _CLAMP_ENC
+    from xero_api_etl_utilities_spark.plans.event_ops import _CLAMP_ENC
 
     import datetime as dt
 
@@ -298,7 +294,7 @@ def test_clamped_balance_pins_handfit_ledger(spark):
     )
     df.createOrReplaceTempView("_ledger_fixture")
     from pyspark.sql import functions as F
-    from xero_api_etl_utilities_spark.plans import mining_ops as mo
+    from xero_api_etl_utilities_spark.plans import event_ops as mo
 
     signed = F.when(
         F.col("event_type").isin("purchase", "signup"),
@@ -324,7 +320,7 @@ def test_clamped_balance_pins_handfit_ledger(spark):
 
 
 def test_bounce_rate_bounds(spark, sf_dir):
-    from xero_api_etl_utilities_spark.plans.mining_ops import events_bounce_rate
+    from xero_api_etl_utilities_spark.plans.event_ops import events_bounce_rate
 
     rows = events_bounce_rate(spark, sf_dir).collect()
     assert rows
@@ -334,7 +330,7 @@ def test_bounce_rate_bounds(spark, sf_dir):
 
 
 def test_mad_outliers_are_robust_minority(spark, sf_dir):
-    from xero_api_etl_utilities_spark.plans.mining_ops import agg_mad_outliers
+    from xero_api_etl_utilities_spark.plans.aggregate_ops import agg_mad_outliers
 
     rows = agg_mad_outliers(spark, sf_dir).collect()
     assert rows
@@ -348,9 +344,7 @@ def test_mad_outliers_are_robust_minority(spark, sf_dir):
 
 
 def test_decayed_scores_are_shift_exact(spark, sf_dir):
-    from xero_api_etl_utilities_spark.plans.mining_ops import (
-        events_decayed_type_scores,
-    )
+    from xero_api_etl_utilities_spark.plans.event_ops import events_decayed_type_scores
 
     rows = events_decayed_type_scores(spark, sf_dir).collect()
     assert rows
@@ -363,7 +357,7 @@ def test_decayed_scores_are_shift_exact(spark, sf_dir):
 
 
 def test_rules_metrics_satisfy_identities(spark, sf_dir):
-    from xero_api_etl_utilities_spark.plans.mining_ops import basket_brand_rules
+    from xero_api_etl_utilities_spark.plans.tpch_ops import basket_brand_rules
 
     rows = basket_brand_rules(spark, sf_dir).collect()
     assert rows
@@ -379,7 +373,7 @@ def test_rules_metrics_satisfy_identities(spark, sf_dir):
 
 
 def test_zonemap_prune_story(spark, sf_dir):
-    from xero_api_etl_utilities_spark.plans.mining_ops import layout_zonemap_prune
+    from xero_api_etl_utilities_spark.plans.diagnostics_ops import layout_zonemap_prune
 
     rows = {r["layout"]: r for r in layout_zonemap_prune(spark, sf_dir).collect()}
     arr, dat = rows["arrival_order"], rows["date_clustered"]

@@ -248,14 +248,18 @@ def test_validate_entity_config():
     from xero_api_etl_utilities_spark.plans.pipeline import (
         ConfigError,
         EntityConfig,
+        run_daily_import,
         validate_entity_config,
     )
 
     ok = EntityConfig(entity="pw", transport_root="/tmp/x")
     assert validate_entity_config(ok) is ok
+    bad = EntityConfig(entity="zz", transport_root=" ")
     with pytest.raises(ConfigError) as exc:
-        validate_entity_config(
-            EntityConfig(entity="zz", transport_root=" ", expense_gl_code="abc")
-        )
+        validate_entity_config(bad)
     msg = str(exc.value)  # every problem reported at once
-    assert "entity" in msg and "transport_root" in msg and "expense_gl_code" in msg
+    assert "entity" in msg and "transport_root" in msg
+    # the import checks its config before it touches a frame: no grid,
+    # charge table or customer dim is needed to see the error
+    with pytest.raises(ConfigError, match="entity"):
+        run_daily_import(None, None, None, bad)

@@ -177,24 +177,38 @@ def test_connected_components(spark):
     assert out == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 10: 10, 11: 10, 12: 10, 13: 10}
 
 
-def test_connected_components_reliable_checkpoint(spark, ckpt_dir):
+def test_connected_components_reliable_checkpoint(spark, ckpt_dir, monkeypatch):
     # a session checkpoint directory switches per-round materialization
     # from executor-local blocks to reliable checkpoints (the
     # fault-tolerance mode for long cluster runs); results identical
-    import os
-
     from xero_api_etl_utilities_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6)], ["u1", "u2"]
     )
+    # the directory exists as soon as it is set, and the session removes
+    # a round's checkpoint once the round is unreachable, so count the
+    # checkpoints as they are written
+    written = []
+    frame = type(edges)
+    checkpoint = frame.checkpoint
+
+    def spy(df, *args):
+        out = checkpoint(df, *args)
+        written.append(out._jdf.queryExecution().analyzed().rdd().getCheckpointFile().get())
+        return out
+
+    monkeypatch.setattr(frame, "checkpoint", spy)
     out = {
         r["doc"]: r["cluster_id"]
         for r in connected_components(edges).collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
-    # the reliable checkpoints went into the session's directory
-    assert os.listdir(ckpt_dir)
+    # one reliable checkpoint per materialize, in the session's directory:
+    # the symmetric edges, the first labels, then one per round (two
+    # rounds move a label, the third finds the fixpoint)
+    assert len(written) == len(set(written)) == 2 + 3
+    assert all(w.startswith(f"file:{ckpt_dir}/") for w in written)
 
 
 def test_connected_components_nonconvergence_raises(spark):
@@ -270,7 +284,7 @@ def test_events_funnel_ordering_edges(spark, monkeypatch):
     events don't advance, and pre-view clicks are ignored."""
     import datetime as dt
 
-    from xero_api_etl_utilities_spark.plans import analytics_extra as ax
+    from xero_api_etl_utilities_spark.plans import event_ops as ax
 
     t = lambda m: dt.datetime(2024, 1, 1, 10, m)  # noqa: E731
     rows = [
@@ -290,7 +304,7 @@ def test_events_funnel_ordering_edges(spark, monkeypatch):
         "ts", F.col("ts").cast("timestamp_ntz")
     )
     monkeypatch.setattr(
-        "xero_api_etl_utilities_spark.plans.analytics_extra.load_table",
+        "xero_api_etl_utilities_spark.plans.event_ops.load_table",
         lambda spark, sf_dir, name: df,
     )
     out = {r["user_id"]: r["stage"] for r in ax.events_funnel(spark, "x").collect()}

@@ -224,10 +224,10 @@ def test_neardup_decontam_orientation_and_threshold(spark, sf_dir):
     # every flagged pair must be corpus-side first, benchmark-side
     # second, meet the 0.7 verified-Jaccard threshold, and appear in
     # the underlying verified-pairs frame.
-    from xero_api_etl_utilities_spark.plans.corpus_ops import (
+    from xero_api_etl_utilities_spark.plans.dedup_ops import (
         _NDCONTAM_MOD,
         _NDCONTAM_RESIDUE,
-        _verified_pairs,
+        verified_pairs as _verified_pairs,
         decontaminate_neardup,
     )
 
@@ -249,7 +249,7 @@ def test_cluster_representatives_keep_rule(spark, sf_dir):
     # the kept doc must be the (max n_chars, min doc_id) member of its
     # cluster, size must match the cluster census, and only clusters
     # with >= 2 members may appear.
-    from xero_api_etl_utilities_spark.plans.corpus_ops import (
+    from xero_api_etl_utilities_spark.plans.dedup_ops import (
         dedup_cluster_representatives,
         doc_clusters,
     )
@@ -282,8 +282,8 @@ def test_decontam_report_merges_both_detectors(spark, sf_dir):
     # the report must be the full-outer merge of the two stage
     # detectors under the shared %20 benchmark, with coherent verdicts.
     from xero_api_etl_utilities_spark.operators.textnorm import ngram_overlap
-    from xero_api_etl_utilities_spark.plans.corpus_ops import (
-        _verified_pairs,
+    from xero_api_etl_utilities_spark.plans.dedup_ops import (
+        verified_pairs as _verified_pairs,
         decontaminate_report,
     )
 
@@ -321,9 +321,7 @@ def test_dim_health_census_matches_numpy(spark, sf_dir):
     import numpy as np
     import pyarrow.parquet as pq
 
-    from xero_api_etl_utilities_spark.plans.training_ops import (
-        embedding_dim_health,
-    )
+    from xero_api_etl_utilities_spark.plans.retrieval_ops import embedding_dim_health
 
     vecs = np.array(
         pq.read_table(f"{sf_dir}/embeddings.parquet")
@@ -372,7 +370,7 @@ def test_pair_provenance_census_matches_pair_listing(spark, sf_dir):
     # (src_lo, src_hi) cells in python from the two upstream queries.
     from collections import Counter
 
-    from xero_api_etl_utilities_spark.plans.corpus_ops import (
+    from xero_api_etl_utilities_spark.plans.dedup_ops import (
         dedup_pair_provenance,
         dedup_verified_pairs,
     )
@@ -403,10 +401,7 @@ def test_dedup_savings_census_matches_python_keep_rule(spark, sf_dir):
     # cluster substrate and recompute per-source droppable mass.
     from collections import defaultdict
 
-    from xero_api_etl_utilities_spark.plans.corpus_ops import (
-        dedup_savings_census,
-        doc_clusters,
-    )
+    from xero_api_etl_utilities_spark.plans.dedup_ops import dedup_savings_census, doc_clusters
 
     meta = {
         r["doc_id"]: (r["source"], r["n_chars"])

@@ -13,7 +13,7 @@ import datetime as dt
 import os
 import tempfile
 
-from xero_api_etl_utilities_spark.plans.wave12 import events_funnel_exclusion
+from xero_api_etl_utilities_spark.plans.event_ops import events_funnel_exclusion
 
 _SCHEMA = (
     "event_id bigint, ts timestamp_ntz, user_id bigint, "

@@ -53,9 +53,7 @@ def test_inrow_scoring_matches_python_rescore(spark):
     """The Spark F.aggregate dot product must equal a naive python
     re-score with the same weights — pins the element_at indexing,
     sign convention, and empty-token init."""
-    from xero_api_etl_utilities_spark.plans.wave13 import (
-        text_quality_classifier,
-    )
+    from xero_api_etl_utilities_spark.plans.text_ops import text_quality_classifier
 
     w = qm.weights_from_parquet(SF)
     docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
@@ -82,8 +80,8 @@ def test_incremental_equals_full_recompute_mixed_slice(spark):
     proves it cross-engine): incremental band-join pairs == the full batch
     candidates->verify chain restricted to (new x corpus) pairs."""
     from xero_api_etl_utilities_spark.operators import dedup as dd
-    from xero_api_etl_utilities_spark.plans.corpus_ops import minhash_sigs
-    from xero_api_etl_utilities_spark.plans.wave13 import (
+    from xero_api_etl_utilities_spark.plans.dedup_ops import minhash_sigs
+    from xero_api_etl_utilities_spark.plans.dedup_ops import (
         _INC_BANDS,
         _INC_ROWS,
         dedup_incremental_pairs,

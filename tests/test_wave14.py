@@ -17,7 +17,8 @@ import os
 from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.operators import quality_model as qm
-from xero_api_etl_utilities_spark.plans import wave14
+from xero_api_etl_utilities_spark.plans import dedup_ops as wave14
+from xero_api_etl_utilities_spark.plans.text_ops import text_quality_drift
 
 SF = "/root/testdata/sf0.001"
 
@@ -33,7 +34,7 @@ def test_persisted_catalog_matches_in_memory_incremental(spark):
     """X174 from the parquet catalog must equal X171 from the memoized
     in-memory substrate, pair-for-pair — the disk roundtrip adds or
     loses nothing."""
-    from xero_api_etl_utilities_spark.plans.wave13 import dedup_incremental_pairs
+    from xero_api_etl_utilities_spark.plans.dedup_ops import dedup_incremental_pairs
 
     disk = _pairs(wave14.dedup_catalog_persisted(spark, SF))
     mem = _pairs(dedup_incremental_pairs(spark, SF))
@@ -76,7 +77,7 @@ def test_absorb_equals_full_rebuild(spark):
     """X176's combined read-back census must equal the same census
     computed on a from-scratch full-corpus band_rows build."""
     from xero_api_etl_utilities_spark.operators.dedup import band_rows
-    from xero_api_etl_utilities_spark.plans.corpus_ops import minhash_sigs
+    from xero_api_etl_utilities_spark.plans.dedup_ops import minhash_sigs
 
     got = {
         r["band"]: (r["n_rows"], r["n_docs"], r["n_buckets"], r["bucket_hash_sum"])
@@ -127,7 +128,7 @@ def test_expire_equals_rebuild_on_shrunk_corpus(spark):
     computed on a from-scratch banding of the shrunk corpus — and the
     tombstoned docs must actually be gone."""
     from xero_api_etl_utilities_spark.operators.dedup import band_rows
-    from xero_api_etl_utilities_spark.plans.corpus_ops import minhash_sigs
+    from xero_api_etl_utilities_spark.plans.dedup_ops import minhash_sigs
 
     got = {
         r["band"]: (r["n_rows"], r["n_docs"], r["n_buckets"], r["bucket_hash_sum"])
@@ -200,7 +201,7 @@ def test_drift_census_arithmetic(spark):
         sa = sum(wa[i] * v for i, v in feats.items())
         sb = sum(wb[i] * v for i, v in feats.items())
         by_source.setdefault(r["source"], []).append((sa, sb))
-    got = {r["source"]: r for r in wave14.text_quality_drift(spark, SF).collect()}
+    got = {r["source"]: r for r in text_quality_drift(spark, SF).collect()}
     assert set(got) == set(by_source)
     for src, scores in by_source.items():
         row = got[src]

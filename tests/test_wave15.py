@@ -28,10 +28,8 @@ def test_store_asof_corpus_side_equals_one_shot_incremental(spark):
     caveat).  Cross-arrival pairs (store side in the arrival set) are
     the growing store's additional output: they exist, and only in
     batch 2 (batch 1's store is the pure corpus)."""
-    from xero_api_etl_utilities_spark.plans.wave13 import (
-        dedup_incremental_pairs,
-    )
-    from xero_api_etl_utilities_spark.plans.wave15 import dedup_store_asof
+    from xero_api_etl_utilities_spark.plans.dedup_ops import dedup_incremental_pairs
+    from xero_api_etl_utilities_spark.plans.dedup_ops import dedup_store_asof
 
     asof = dedup_store_asof(spark, SF).collect()
     one_shot = {
@@ -60,9 +58,7 @@ def test_store_asof_publish_layout_and_memoization(spark):
     """The replay store is a real on-disk artifact: catalog parts for
     the corpus and each absorbed batch, pairs partitioned by batch —
     and the publish runs once per session (memoized path)."""
-    from xero_api_etl_utilities_spark.plans.wave15 import (
-        publish_absorb_replay,
-    )
+    from xero_api_etl_utilities_spark.plans.dedup_ops import publish_absorb_replay
 
     p1 = publish_absorb_replay(spark, SF)
     p2 = publish_absorb_replay(spark, SF)
@@ -87,7 +83,7 @@ def test_store_asof_publish_layout_and_memoization(spark):
 
 
 def _verdict_row(spark, rows):
-    from xero_api_etl_utilities_spark.plans.wave15 import swap_verdict
+    from xero_api_etl_utilities_spark.plans.curation_ops import swap_verdict
 
     counted = spark.createDataFrame(
         rows,
@@ -163,9 +159,7 @@ def test_catalog_compact_census_and_files(spark, tmp_path):
     already be compacted by the ``dedup_catalog_compact`` entry running
     earlier in the same session, which would void the file-count
     baseline."""
-    from xero_api_etl_utilities_spark.plans.wave15 import (
-        build_absorb_replay,
-    )
+    from xero_api_etl_utilities_spark.plans.dedup_ops import build_absorb_replay
     from xero_api_etl_utilities_spark.sources.writer import compact_store
 
     path = str(tmp_path / "store")
@@ -204,7 +198,7 @@ def test_ivf_index_absorb_equals_full_assignment(spark):
     per-vector function of the frozen centroids — and the publish is
     session-memoized."""
     from xero_api_etl_utilities_spark.operators import ivf
-    from xero_api_etl_utilities_spark.plans.wave15 import (
+    from xero_api_etl_utilities_spark.plans.retrieval_ops import (
         publish_ivf_index,
         similarity_index_absorb,
     )
@@ -241,7 +235,7 @@ def test_ivf_index_expire_drops_exactly_the_tombstones(spark):
     persisted index — survivors keep their original cells (no
     re-assignment), and the census totals shrink by the tombstone
     count."""
-    from xero_api_etl_utilities_spark.plans.wave15 import (
+    from xero_api_etl_utilities_spark.plans.retrieval_ops import (
         _VEC_TOMBSTONE_MOD,
         publish_ivf_index,
         similarity_index_absorb,
@@ -273,11 +267,8 @@ def test_swap_gate_consistent_with_drift_census(spark):
     """The catalog entry's verdict must be arithmetically consistent
     with X175's published drift table on the same corpus: flip caps
     recomputed from the census columns, totals matching."""
-    from xero_api_etl_utilities_spark.plans.wave14 import text_quality_drift
-    from xero_api_etl_utilities_spark.plans.wave15 import (
-        _FLIP_CAP_BP,
-        quality_swap_gate,
-    )
+    from xero_api_etl_utilities_spark.plans.text_ops import text_quality_drift
+    from xero_api_etl_utilities_spark.plans.curation_ops import _FLIP_CAP_BP, quality_swap_gate
 
     census = text_quality_drift(spark, SF).collect()
     got = quality_swap_gate(spark, SF).collect()[0]

@@ -13,10 +13,8 @@ def test_span_dedup_emit_reconciles_with_coverage(spark, sf_dir):
     this corpus (the testdata contains cross-doc duplicated 6-grams).
     The kept text must also be a subsequence re-join: token count of
     the emitted string equals kept_tokens."""
-    from xero_api_etl_utilities_spark.plans.corpus_extra import (
-        text_dup_span_coverage,
-    )
-    from xero_api_etl_utilities_spark.plans.wave9 import text_span_dedup_emit
+    from xero_api_etl_utilities_spark.plans.text_ops import text_dup_span_coverage
+    from xero_api_etl_utilities_spark.plans.text_ops import text_span_dedup_emit
 
     emit = text_span_dedup_emit(spark, sf_dir).collect()
     assert emit, "emit produced no rows"
@@ -54,7 +52,7 @@ def test_span_dedup_emit_first_occurrence_wins(spark):
     """Hand-built corpus: an identical 6-token run in three docs —
     only the minimum (doc_id, pos) occurrence survives; a doc with no
     duplicated span is emitted verbatim."""
-    from xero_api_etl_utilities_spark.plans.wave9 import text_span_dedup_emit
+    from xero_api_etl_utilities_spark.plans.text_ops import text_span_dedup_emit
     import os
     import tempfile
 

@@ -424,7 +424,7 @@ CHECKS = {
     "text_bigram_novelty": [
         ("vocab broadcast; bodies never shuffle", lambda p: "BroadcastHashJoin" in p and "CartesianProduct" not in p),
     ],
-    # graph/sketch wave (X40-X42)
+    # graph and stream sketches (plans/graph_ops.py, plans/event_ops.py)
     "graph_triangle_counts": [
         ("oriented wedge joins are hash equi-joins", lambda p: "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p),
     ],
@@ -435,7 +435,7 @@ CHECKS = {
     "events_heavy_hitters_cms": [
         ("bounded sketch broadcast for the estimate join", lambda p: "BroadcastHashJoin" in p and "BroadcastNestedLoopJoin" not in p),
     ],
-    # TPC-H completion wave: q2/q11/q16/q20
+    # TPC-H completion: q2/q11/q16/q20 (plans/tpch_ops.py)
     "q2_min_cost_supplier": [
         ("offers materialized: min+argmin read the checkpoint", lambda p: "Scan ExistingRDD" in p),
         ("min+argmin equi-joins, dims broadcast", lambda p: "BroadcastHashJoin" in p and "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p),
@@ -461,7 +461,8 @@ CHECKS = {
         ("query tables built executor-side via Arrow batch", lambda p: "MapInPandas" in p),
         ("no cartesian / nested-loop scoring", lambda p: "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p),
     ],
-    # r6 wave: X96-X100 (plans/corpus_extra.py)
+    # sequence patterns, TF-cosine pairs, boilerplate shingles, epoch
+    # shuffle (plans/event_ops.py, plans/text_ops.py, plans/curation_ops.py)
     "events_seq_pairs": [
         ("pair support via sequence-keyed equi-join, no cartesian", lambda p: "CartesianProduct" not in p),
         ("total rides a 1-row broadcast, not a driver collect", lambda p: "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p),

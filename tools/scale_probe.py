@@ -231,9 +231,9 @@ def main() -> int:
     targets = ranked[: args.top]
 
     # `<memo>_build` names run a session memo (operators.materialize)
-    # eagerly and time it, so a memo build — the wave15 store and index
-    # publishes happen at plan-construction time — is journaled as its
-    # own row and a consumer row's sec stays marginal cost.  The
+    # eagerly and time it, so a memo build — the dedup store and vector
+    # index publishes happen at plan-construction time — is journaled as
+    # its own row and a consumer row's sec stays marginal cost.  The
     # signature memo feeds most dedup targets, so it is built first.
     def _memo_build(name):
         if name.endswith("_build"):

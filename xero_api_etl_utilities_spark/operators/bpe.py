@@ -26,7 +26,7 @@ Scale shape — the same split real trainers use:
   and the incoming symbol its right, replace the tail with the merged
   symbol — non-overlapping by construction ("aaa" + (a,a) → [aa, a]),
   byte-identical to the reference implementation and to the oracle's
-  positional gaps-and-islands replay (plans/mining_ops.py).
+  positional gaps-and-islands replay (plans/text_ops.py).
 
 Determinism: ties break (count DESC, left ASC, right ASC) — no RNG,
 no order-dependence, so DuckDB replays every round exactly.

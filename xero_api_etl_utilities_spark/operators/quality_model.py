@@ -39,7 +39,7 @@ import re
 
 from xero_api_etl_utilities_spark.functions.crosshash import py_h32
 
-DIM = 256  # == plans.corpus_ops._FH_DIM — the X60 feature space
+DIM = 256  # == plans.text_ops._FH_DIM — the X60 feature space
 N_TRAIN = 400
 EPOCHS = 3
 

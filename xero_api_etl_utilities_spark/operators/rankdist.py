@@ -4,7 +4,7 @@
 the classic scale-killer: Spark moves the ENTIRE frame to one
 partition.  This module provides the band-decomposed equivalent used
 by ``diag_quality_deciles_dist`` and ``text_zipf_slope``
-(plans/corpus_extra.py, plans/corpus_wave7.py) as a reusable
+(plans/diagnostics_ops.py, plans/text_ops.py) as a reusable
 operator:
 
 1. the caller supplies a BAND column whose order is a coarsening of

@@ -50,7 +50,7 @@ def bm25_constants(
 
     Returns python floats ready to inline as literals on BOTH the
     Spark side and the oracle side (tools generate the DuckDB twin
-    from the same numbers via duckdb — see plans/retrieval_quality).
+    from the same numbers via duckdb — see plans/text_ops).
     idf uses the standard non-negative Robertson form
     ln(1 + (N - df + 0.5)/(df + 0.5)).
     """

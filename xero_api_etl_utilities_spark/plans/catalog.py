@@ -124,29 +124,22 @@ register("daily_pnl_rollup", flagship.daily_pnl_rollup, flagship.FLAGSHIP_ORACLE
 
 
 def _load_extra_modules() -> None:
-    """Import catalog-contributing modules (they call register())."""
+    """Import the query families (they call register()).  Queries after
+    the priority window follow in this order, each family's in its
+    module's order."""
     from xero_api_etl_utilities_spark.plans import (  # noqa: F401
-        relational,
-        extensions,
-        windows_extra,
-        tpch_like,
-        corpus_ops,
-        analytics_extra,
-        scale_ops,
-        training_ops,
+        relational_ops,
+        aggregate_ops,
+        tpch_ops,
+        event_ops,
         cdc_ops,
-        retrieval_quality,
+        text_ops,
+        dedup_ops,
+        retrieval_ops,
+        curation_ops,
         graph_ops,
-        mining_ops,
-        corpus_extra,
-        corpus_wave7,
-        wave9,
-        wave10,
-        wave11,
-        wave12,
-        wave13,
-        wave14,
-        wave15,
+        multimodal_ops,
+        diagnostics_ops,
     )
 
 

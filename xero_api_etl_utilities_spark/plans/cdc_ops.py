@@ -1,6 +1,10 @@
-"""CDC merge catalog queries: latest-wins snapshot assembly over a
-base table plus deterministic synthetic change batches derived from
-the same parquet (so the oracle sees identical inputs).
+"""Change-data-capture catalog queries: the ``merge_``, ``snapshot_``,
+``replica_`` and ``feature_`` families.
+
+Latest-wins snapshot assembly, snapshot diffs, replica anti-entropy,
+SCD2 history and the point-in-time feature fetch, over a base table
+plus deterministic synthetic change batches derived from the same
+parquet (so the oracle sees identical inputs).
 """
 
 from __future__ import annotations
@@ -10,7 +14,7 @@ from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.operators.merge import merge_latest
 from xero_api_etl_utilities_spark.plans.catalog import register
-from xero_api_etl_utilities_spark.plans.flagship import _money, _out
+from xero_api_etl_utilities_spark.plans.flagship import money, money_out
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
 
@@ -60,7 +64,7 @@ def merge_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # priority, how many orders and how much money
     return snapshot.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        _out(F.sum(_money(F.col("o_totalprice")))).alias("total_price"),
+        money_out(F.sum(money(F.col("o_totalprice")))).alias("total_price"),
     )
 
 
@@ -163,7 +167,7 @@ GROUP BY change_type
 
 
 def replica_bucket_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X56: anti-entropy replica verification — find which of 256
+    """Anti-entropy replica verification — find which of 256
     buckets diverge between two copies of a table WITHOUT comparing
     rows: each side folds to one COMMUTATIVE checksum per bucket
     (sum of md5-derived row hashes — order/partitioning independent
@@ -253,7 +257,7 @@ register("replica_bucket_diff", replica_bucket_diff, _replica_diff_oracle)
 
 
 def merge_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X64 (r5 seed): slowly-changing-dimension TYPE 2 — instead of
+    """Slowly-changing-dimension TYPE 2 — instead of
     collapsing the change stream to latest-wins (merge_cdc_snapshot),
     KEEP history as validity intervals: each key's versions ordered by
     change time, valid_from = its timestamp, valid_to = the NEXT
@@ -313,180 +317,11 @@ ORDER BY o_orderkey, valid_from_v
 )
 
 
-def diag_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X69 (r5 seed): the FK audit a warehouse runs after every load —
-    one row per relationship with child row/key counts and ORPHANED
-    child keys. Fully distributed and SINGLE-JOB: every (child key,
-    relationship) pair left-joins its parent's distinct key set tagged
-    with a presence marker, the six relationships union into one tall
-    frame, and one groupBy derives rows / distinct keys / distinct
-    orphan keys per relationship — no driver collects, no per-check
-    jobs. A healthy star schema audits to zero orphans, so the driver
-    row doubles as a testdata invariant."""
-    li = load_table(spark, sf_dir, "lineitem")
-    od = load_table(spark, sf_dir, "orders")
-    cu = load_table(spark, sf_dir, "customer")
-    su = load_table(spark, sf_dir, "supplier")
-    pa = load_table(spark, sf_dir, "part")
-    na = load_table(spark, sf_dir, "nation")
-
-    def tagged(name, child, ckey, parent, pkey):
-        pk = (
-            parent.select(F.col(pkey).cast("long").alias("k"))
-            .distinct()
-            .withColumn("_present", F.lit(1))
-        )
-        return child.select(
-            F.lit(name).alias("relationship"), F.col(ckey).cast("long").alias("k")
-        ).join(pk, "k", "left")
-
-    tall = (
-        tagged("lineitem.l_orderkey->orders", li, "l_orderkey", od, "o_orderkey")
-        .unionByName(tagged("lineitem.l_partkey->part", li, "l_partkey", pa, "p_partkey"))
-        .unionByName(
-            tagged("lineitem.l_suppkey->supplier", li, "l_suppkey", su, "s_suppkey")
-        )
-        .unionByName(tagged("orders.o_custkey->customer", od, "o_custkey", cu, "c_custkey"))
-        .unionByName(
-            tagged("customer.c_nationkey->nation", cu, "c_nationkey", na, "n_nationkey")
-        )
-        .unionByName(
-            tagged("supplier.s_nationkey->nation", su, "s_nationkey", na, "n_nationkey")
-        )
-    )
-    return (
-        tall.groupBy("relationship")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_child_rows"),
-            F.countDistinct("k").cast("bigint").alias("n_child_keys"),
-            F.countDistinct(F.when(F.col("_present").isNull(), F.col("k")))
-            .cast("bigint")
-            .alias("n_orphan_keys"),
-        )
-        .orderBy("relationship")
-    )
-
-
-register(
-    "diag_referential_integrity",
-    diag_referential_integrity,
-    """
-WITH checks AS (
-  SELECT 'lineitem.l_orderkey->orders' AS relationship,
-    (SELECT COUNT(*) FROM lineitem) AS n_child_rows,
-    (SELECT COUNT(DISTINCT l_orderkey) FROM lineitem) AS n_child_keys,
-    (SELECT COUNT(*) FROM (SELECT DISTINCT l_orderkey FROM lineitem
-      WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders))) AS n_orphan_keys
-  UNION ALL SELECT 'lineitem.l_partkey->part',
-    (SELECT COUNT(*) FROM lineitem),
-    (SELECT COUNT(DISTINCT l_partkey) FROM lineitem),
-    (SELECT COUNT(*) FROM (SELECT DISTINCT l_partkey FROM lineitem
-      WHERE l_partkey NOT IN (SELECT p_partkey FROM part)))
-  UNION ALL SELECT 'lineitem.l_suppkey->supplier',
-    (SELECT COUNT(*) FROM lineitem),
-    (SELECT COUNT(DISTINCT l_suppkey) FROM lineitem),
-    (SELECT COUNT(*) FROM (SELECT DISTINCT l_suppkey FROM lineitem
-      WHERE l_suppkey NOT IN (SELECT s_suppkey FROM supplier)))
-  UNION ALL SELECT 'orders.o_custkey->customer',
-    (SELECT COUNT(*) FROM orders),
-    (SELECT COUNT(DISTINCT o_custkey) FROM orders),
-    (SELECT COUNT(*) FROM (SELECT DISTINCT o_custkey FROM orders
-      WHERE o_custkey NOT IN (SELECT c_custkey FROM customer)))
-  UNION ALL SELECT 'customer.c_nationkey->nation',
-    (SELECT COUNT(*) FROM customer),
-    (SELECT COUNT(DISTINCT c_nationkey) FROM customer),
-    (SELECT COUNT(*) FROM (SELECT DISTINCT c_nationkey FROM customer
-      WHERE c_nationkey NOT IN (SELECT n_nationkey FROM nation)))
-  UNION ALL SELECT 'supplier.s_nationkey->nation',
-    (SELECT COUNT(*) FROM supplier),
-    (SELECT COUNT(DISTINCT s_nationkey) FROM supplier),
-    (SELECT COUNT(*) FROM (SELECT DISTINCT s_nationkey FROM supplier
-      WHERE s_nationkey NOT IN (SELECT n_nationkey FROM nation)))
-)
-SELECT relationship, CAST(n_child_rows AS BIGINT) AS n_child_rows,
-  CAST(n_child_keys AS BIGINT) AS n_child_keys,
-  CAST(n_orphan_keys AS BIGINT) AS n_orphan_keys
-FROM checks
-ORDER BY relationship
-""",
-)
-
-
-def join_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X73 (r5 seed): the feature-store POINT-IN-TIME join — fetch,
-    for each (entity, as-of version) probe, the attribute version that
-    was valid THEN: the op that keeps training data leakage-free
-    (training rows must see features as they were, never later
-    rewrites). History is the X64 SCD2 frame (v1 rows everywhere, v2
-    re-writes on every 7th order); probes ask half the orders at
-    as-of=1 and half at as-of=2. Lowering: the asof operator's
-    union-sort-window on (key, version) — proving it generalizes
-    beyond timestamps to any ordered version axis — one shuffle, no
-    range join. Oracle: the correlated max-version subquery."""
-    od = load_table(spark, sf_dir, "orders")
-    history = (
-        od.select(
-            "o_orderkey",
-            F.col("o_orderpriority").alias("prio"),
-            F.lit(1).alias("version"),
-        )
-        .unionByName(
-            od.filter(F.col("o_orderkey") % 7 == 0).select(
-                "o_orderkey",
-                F.lit("0-REPRIORITIZED").alias("prio"),
-                F.lit(2).alias("version"),
-            )
-        )
-    )
-    probes = od.select(
-        "o_orderkey",
-        (F.when(F.col("o_orderkey") % 2 == 0, 1).otherwise(2)).alias("as_of_v"),
-    )
-    from xero_api_etl_utilities_spark.operators.asof import asof_join_backward
-
-    joined = asof_join_backward(
-        probes,
-        history,
-        on="o_orderkey",
-        left_ts="as_of_v",
-        right_ts="version",
-        right_cols=["prio"],
-    )
-    return joined.select(
-        "o_orderkey",
-        "as_of_v",
-        F.col("prio").alias("prio_at_time"),
-    ).orderBy("o_orderkey", "as_of_v")
-
-
-register(
-    "join_point_in_time",
-    join_point_in_time,
-    """
-WITH history AS (
-  SELECT o_orderkey, o_orderpriority AS prio, 1 AS version FROM orders
-  UNION ALL
-  SELECT o_orderkey, '0-REPRIORITIZED', 2 FROM orders WHERE o_orderkey % 7 = 0
-),
-probes AS (
-  SELECT o_orderkey, CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 2 END AS as_of_v
-  FROM orders
-)
-SELECT p.o_orderkey, p.as_of_v,
-  (SELECT h.prio FROM history h
-   WHERE h.o_orderkey = p.o_orderkey AND h.version <= p.as_of_v
-   ORDER BY h.version DESC LIMIT 1) AS prio_at_time
-FROM probes p
-ORDER BY p.o_orderkey, p.as_of_v
-""",
-)
-
-
 def feature_pit_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X119: the feature-store CAPSTONE — SCD2 history build composed
+    """The feature-store CAPSTONE — SCD2 history build composed
     with a point-in-time feature fetch and a training-feature rollup,
-    oracled END TO END (VERDICT r6 next-round item 6: integration
-    layers are where stage oracles can't see).
+    oracled END TO END (integration layers are where stage
+    oracles can't see).
 
     The pipeline a leakage-free training set needs:
 
@@ -580,70 +415,5 @@ SELECT prio_at_time, CAST(as_of_v AS INT) AS as_of_v,
 FROM fetched
 GROUP BY 1, 2
 ORDER BY prio_at_time, as_of_v
-""",
-)
-
-
-def diag_data_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X74 (r5 seed): value-level data-contract validation — the
-    companion to the FK audit: each rule (enum domain, positivity,
-    date range, null-ness) counted over ONE fact scan as conditional
-    sums, published as (rule, n_checked, n_violations). Adding a rule
-    is adding a column expression — no extra pass ever. A violation
-    row here is the thing a pipeline gate would abort on; the catalog
-    form makes the census itself verifiable."""
-    od = load_table(spark, sf_dir, "orders")
-    rules = {
-        "o_orderstatus in (F,O,P)": ~F.col("o_orderstatus").isin("F", "O", "P"),
-        "o_totalprice > 0": ~(F.col("o_totalprice") > 0),
-        "o_orderdate in 1995..2003": ~F.col("o_orderdate")
-        .cast("date")
-        .between(F.lit("1995-01-01"), F.lit("2003-12-31")),
-        "o_custkey not null": F.col("o_custkey").isNull(),
-        "o_orderpriority not null": F.col("o_orderpriority").isNull(),
-    }
-    wide = od.agg(
-        F.count(F.lit(1)).alias("_n"),
-        *[
-            F.sum(F.when(cond, 1).otherwise(0)).alias(f"_v{i}")
-            for i, cond in enumerate(rules.values())
-        ],
-    )
-    # unpivot the 1-row wide result driver-side (bounded; same pattern
-    # as profile_orders)
-    row = wide.collect()[0]
-    out = [
-        (name, int(row["_n"]), int(row[f"_v{i}"]))
-        for i, name in enumerate(rules.keys())
-    ]
-    return spark.createDataFrame(
-        out, "rule string, n_checked bigint, n_violations bigint"
-    ).orderBy("rule")
-
-
-register(
-    "diag_data_contract",
-    diag_data_contract,
-    """
-WITH agg AS (
-  SELECT COUNT(*) AS n,
-    CAST(SUM(CASE WHEN o_orderstatus NOT IN ('F','O','P') THEN 1 ELSE 0 END)
-         AS BIGINT) AS v0,
-    CAST(SUM(CASE WHEN NOT (o_totalprice > 0) THEN 1 ELSE 0 END)
-         AS BIGINT) AS v1,
-    CAST(SUM(CASE WHEN CAST(o_orderdate AS DATE) NOT BETWEEN DATE '1995-01-01'
-             AND DATE '2003-12-31' THEN 1 ELSE 0 END) AS BIGINT) AS v2,
-    CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v3,
-    CAST(SUM(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v4
-  FROM orders
-)
-SELECT * FROM (
-  SELECT 'o_orderstatus in (F,O,P)' AS rule, n AS n_checked, v0 AS n_violations FROM agg
-  UNION ALL SELECT 'o_totalprice > 0', n, v1 FROM agg
-  UNION ALL SELECT 'o_orderdate in 1995..2003', n, v2 FROM agg
-  UNION ALL SELECT 'o_custkey not null', n, v3 FROM agg
-  UNION ALL SELECT 'o_orderpriority not null', n, v4 FROM agg
-)
-ORDER BY rule
 """,
 )

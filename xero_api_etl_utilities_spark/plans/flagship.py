@@ -33,11 +33,11 @@ from xero_api_etl_utilities_spark.sources.parquet import load_table
 DEC = "decimal(12,2)"
 
 
-def _money(c):
+def money(c):
     return c.cast(DEC)
 
 
-def _out(c):
+def money_out(c):
     return F.round(c, 2).cast("double")
 
 
@@ -52,9 +52,9 @@ def daily_pnl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = lineitem.select(
         "l_orderkey",
-        _money(F.col("l_extendedprice")).alias("price"),
-        _money(F.col("l_discount")).alias("disc"),
-        _money(F.col("l_tax")).alias("tax"),
+        money(F.col("l_extendedprice")).alias("price"),
+        money(F.col("l_discount")).alias("disc"),
+        money(F.col("l_tax")).alias("tax"),
         "l_returnflag",
         "l_quantity",
     )
@@ -112,11 +112,11 @@ def daily_pnl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "order_date",
             "customer_count",
             "order_count",
-            _out(F.col("_gross")).alias("total_sales"),
-            _out(F.col("_net")).alias("net_sales"),
-            _out(F.col("_tax")).alias("total_tax"),
-            _out(F.col("_returns")).alias("returned_sales"),
-            _out(F.col("_accepted")).alias("accepted_sales"),
+            money_out(F.col("_gross")).alias("total_sales"),
+            money_out(F.col("_net")).alias("net_sales"),
+            money_out(F.col("_tax")).alias("total_tax"),
+            money_out(F.col("_returns")).alias("returned_sales"),
+            money_out(F.col("_accepted")).alias("accepted_sales"),
             "total_qty",
             # avg basket: totalSales / customerCount (src/queries.ts:146).
             # Ratio computed in exact integer cents with half-up rounding
@@ -130,9 +130,9 @@ def daily_pnl_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(100.0)
             ).alias("avg_basket"),
             # GST-inclusive taxable sales: totalGst * 11 (src/DataObject.ts:113)
-            _out(F.col("_tax") * 11).alias("gst_sales"),
+            money_out(F.col("_tax") * 11).alias("gst_sales"),
             # residual derivation à la freSales (src/DataObject.ts:133-138)
-            _out(F.col("_gross") - F.col("_returns") - F.col("_tax")).alias("fre_sales"),
+            money_out(F.col("_gross") - F.col("_returns") - F.col("_tax")).alias("fre_sales"),
         )
         .orderBy("order_date")
     )

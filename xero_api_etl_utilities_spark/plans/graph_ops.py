@@ -1,24 +1,23 @@
-"""Graph + frequency-sketch analytics over the events stream
-(SURVEY §2.12 X40–X42): triangle counting with degree-ordered
-orientation, distributed sweep-line max-concurrency, and count-min
-heavy hitters. No reference counterpart (src/queries.ts is a
-bookkeeping ETL); these are the network/stream diagnostics a
-training-data or product-analytics pipeline runs at 100 TB.
+"""Graph catalog queries: the ``graph_`` family.
+
+Triangle counts, PageRank, k-core, label propagation, BFS depth and
+connected components (large-star/small-star) over the user
+co-occurrence graph built from the ``events`` table.  No reference
+counterpart (``src/queries.ts`` is a bookkeeping ETL).  The iterative
+rounds cut their lineage through ``operators/materialize``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xero_api_etl_utilities_spark.functions.crosshash import h32_sql
 from xero_api_etl_utilities_spark.operators.graph import triangles
 from xero_api_etl_utilities_spark.operators.materialize import (
     compute_width,
     materialize,
     session_memo,
 )
-from xero_api_etl_utilities_spark.operators.sketches import cms_build, cms_estimate
 from xero_api_etl_utilities_spark.plans.catalog import register
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
@@ -143,150 +142,6 @@ LIMIT 20
 )
 
 
-def events_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peak concurrent 30-minute activity windows per day — the
-    sweep-line (+1 at start, −1 at end) with its running sum computed
-    the DISTRIBUTED way: a global ORDER BY prefix sum would drag every
-    boundary to one partition, so the prefix is split into (a) a
-    within-day running sum (day-partitioned window — each day's
-    boundaries stay on one task, the natural parallel grain) plus
-    (b) an exclusive cross-day offset from the per-day delta totals
-    (a #days-row aggregate; ITS global window runs over that tiny
-    frame only — same 25-row precedent as window_share_of_total).
-    Boundary order is total: (ts, delta, event_id) with ends before
-    starts at the same instant, i.e. half-open [ts, ts+30m)
-    intervals. Every number is an integer; the oracle replays the
-    identical two-level decomposition."""
-    ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
-    starts = ev.select(
-        F.col("ts").alias("bts"), F.lit(1).alias("delta"), "event_id"
-    )
-    ends = ev.select(
-        (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("bts"),
-        F.lit(-1).alias("delta"),
-        "event_id",
-    )
-    b = starts.unionAll(ends).withColumn("day", F.col("bts").cast("date"))
-    run_w = (
-        Window.partitionBy("day")
-        .orderBy("bts", "delta", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    within = b.withColumn("run", F.sum("delta").over(run_w))
-    day_tot = b.groupBy("day").agg(F.sum("delta").alias("day_delta"))
-    off_w = (
-        Window.orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    offsets = day_tot.withColumn(
-        "offset", F.sum("day_delta").over(off_w) - F.col("day_delta")
-    ).select("day", "offset")
-    # the day's peak must also consider the level CARRIED INTO the day
-    # (offset alone): sessions opened yesterday and still all open at
-    # 00:00 dominate until the first boundary of the day fires
-    return (
-        within.join(F.broadcast(offsets), "day")
-        .groupBy("day")
-        .agg(
-            F.greatest(
-                F.max(F.col("offset") + F.col("run")), F.min("offset")
-            )
-            .cast("bigint")
-            .alias("max_concurrency")
-        )
-        .orderBy("day")
-    )
-
-
-register(
-    "events_max_concurrency",
-    events_max_concurrency,
-    """
-WITH b AS (
-  SELECT ts AS bts, 1 AS delta, event_id FROM events
-  UNION ALL
-  SELECT ts + INTERVAL 30 MINUTE, -1, event_id FROM events
-),
-bb AS (SELECT *, CAST(bts AS DATE) AS day FROM b),
-within AS (
-  SELECT day, bts,
-    SUM(delta) OVER (PARTITION BY day ORDER BY bts, delta, event_id
-                     ROWS UNBOUNDED PRECEDING) AS run
-  FROM bb
-),
-offsets AS (
-  SELECT day,
-    SUM(day_delta) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) - day_delta
-      AS off
-  FROM (SELECT day, SUM(delta) AS day_delta FROM bb GROUP BY day)
-)
-SELECT w.day,
-  CAST(GREATEST(MAX(o.off + w.run), MIN(o.off)) AS BIGINT) AS max_concurrency
-FROM within w JOIN offsets o ON w.day = o.day
-GROUP BY w.day
-ORDER BY w.day
-""",
-)
-
-
-_CMS_D, _CMS_W = 4, 64
-
-
-def events_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 heaviest users by count-min ESTIMATE, with the exact
-    count beside it — the fixed-memory frequency sketch
-    (operators/sketches.py) read back for a candidate set. At 100 TB
-    the sketch build shuffles <= d·w counters per task however many
-    distinct keys exist; the exact column here is the audit trail
-    (est >= exact always; equality when no bucket collision). The
-    oracle re-runs the identical md5-bucketed sketch in SQL, so the
-    ESTIMATES are hash-verified, not just bounded."""
-    ev = load_table(spark, sf_dir, "events")
-    sketch = cms_build(ev, "user_id", d=_CMS_D, w=_CMS_W)
-    exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_count"))
-    est = cms_estimate(exact, sketch, "user_id", d=_CMS_D, w=_CMS_W)
-    return (
-        exact.join(est, "user_id")
-        .select("user_id", "est_count", "exact_count")
-        .orderBy(F.desc("est_count"), F.asc("user_id"))
-        .limit(10)
-    )
-
-
-def _cms_oracle() -> str:
-    rows = ", ".join(str(i) for i in range(_CMS_D))
-    hashed = h32_sql("i || ':' || CAST(user_id AS VARCHAR)")
-    bucket = f"CAST({hashed} AS BIGINT) % {_CMS_W}"
-    return f"""
-WITH keyed AS (
-  SELECT user_id, i, {bucket} AS b
-  FROM events CROSS JOIN (SELECT UNNEST([{rows}]) AS i)
-),
-sketch AS (
-  SELECT i, b, COUNT(*) AS c FROM keyed GROUP BY i, b
-),
-cand AS (
-  SELECT DISTINCT user_id, i, b FROM keyed
-),
-est AS (
-  SELECT cand.user_id, MIN(sketch.c) AS est_count
-  FROM cand JOIN sketch ON sketch.i = cand.i AND sketch.b = cand.b
-  GROUP BY cand.user_id
-),
-exact AS (
-  SELECT user_id, COUNT(*) AS exact_count FROM events GROUP BY user_id
-)
-SELECT exact.user_id AS user_id, CAST(est_count AS BIGINT) AS est_count,
-  CAST(exact_count AS BIGINT) AS exact_count
-FROM exact JOIN est ON est.user_id = exact.user_id
-ORDER BY est_count DESC, exact.user_id ASC
-LIMIT 10
-"""
-
-
-register("events_heavy_hitters_cms", events_heavy_hitters_cms, _cms_oracle)
-
-
 _PR_SCALE = 10**12
 _PR_ITERS = 5
 
@@ -355,124 +210,12 @@ LIMIT 20
 register("graph_pagerank", graph_pagerank, _pagerank_oracle)
 
 
-_JS_D, _JS_W = 4, 512
-
-
-def diag_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X59: sketch-based join-size estimation — the planner pre-flight
-    that predicts |A ⋈ B| BEFORE paying the shuffle. Classic
-    AMS/count-min algebra: build a d×w counter sketch of each side's
-    join key, estimate = min over rows of Σ_buckets cmsA·cmsB (the
-    dot product upper-bounds the true size, tightest row wins;
-    overestimate only, like the point estimate). Both sketches are
-    bounded aggregates; the 'join' that produces the estimate touches
-    2·d·w counters, never a data row. The exact size rides along
-    (Σ per-key cntA·cntB) with the honesty boolean, and — because the
-    buckets are the repo's md5 hashes — the DuckDB oracle replays the
-    ESTIMATE itself digit-for-digit, not just the bound."""
-    from xero_api_etl_utilities_spark.operators.sketches import cms_build
-
-    od = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("k")
-    )
-    # Both the CMS build (posexplode ×d md5 buckets per row) and the
-    # exact per-key counts ran on the single-task scans.  One key-keyed
-    # exchange per side at compute width feeds BOTH branches — the
-    # per-key groupBy reuses the hash partitioning (no second exchange)
-    # and the sketch explode runs wide; every output is an integer
-    # count, partitioning-independent.
-    od = compute_width(od, "k")
-    li = compute_width(li, "k")
-    sa = cms_build(od, "k", d=_JS_D, w=_JS_W)
-    sb = cms_build(li, "k", d=_JS_D, w=_JS_W)
-    est = (
-        sa.join(
-            sb.withColumnRenamed("cms_count", "cnt_b"),
-            ["cms_row", "cms_bucket"],
-        )
-        .groupBy("cms_row")
-        .agg(F.sum(F.col("cms_count") * F.col("cnt_b")).alias("dot"))
-        .agg(F.min("dot").cast("bigint").alias("est_join_size"))
-    )
-    ka = od.groupBy("k").agg(F.count(F.lit(1)).alias("ca"))
-    kb = li.groupBy("k").agg(F.count(F.lit(1)).alias("cb"))
-    exact = (
-        ka.join(kb, "k")
-        .agg(F.sum(F.col("ca") * F.col("cb")).cast("bigint").alias("exact_join_size"))
-    )
-    # One tall union of the two 1-row aggregates instead of two
-    # sequential .collect() jobs + a driver-literal frame (no driver
-    # round-trips on a query path; the two subtrees are independent
-    # stages of ONE job, so they execute concurrently instead of
-    # back-to-back).  Still no 1-row cross join (the NLJ
-    # the audit bans) — the combine is a union + conditional max.
-    tall = est.select(
-        F.lit("e").alias("k"), F.col("est_join_size").alias("v")
-    ).unionAll(
-        exact.select(F.lit("x").alias("k"), F.col("exact_join_size").alias("v"))
-    )
-    return (
-        tall.agg(
-            F.max(F.when(F.col("k") == "x", F.col("v"))).alias("exact_join_size"),
-            F.max(F.when(F.col("k") == "e", F.col("v"))).alias("est_join_size"),
-        )
-        .select(
-            "exact_join_size",
-            "est_join_size",
-            (F.col("est_join_size") >= F.col("exact_join_size")).alias(
-                "never_under"
-            ),
-            (F.col("est_join_size") * 100 <= 130 * F.col("exact_join_size")).alias(
-                "within_30pct"
-            ),
-        )
-    )
-
-
-def _join_size_oracle() -> str:
-    hashed = h32_sql("i || ':' || CAST(k AS VARCHAR)")
-    bucket = f"CAST({hashed} AS BIGINT) % {_JS_W}"
-    rows = ", ".join(str(i) for i in range(_JS_D))
-    return f"""
-WITH ka AS (SELECT o_orderkey AS k FROM orders),
-kb AS (SELECT l_orderkey AS k FROM lineitem),
-sa AS (
-  SELECT i, {bucket} AS b, COUNT(*) AS c
-  FROM ka CROSS JOIN (SELECT UNNEST([{rows}]) AS i) GROUP BY 1, 2
-),
-sb AS (
-  SELECT i, {bucket} AS b, COUNT(*) AS c
-  FROM kb CROSS JOIN (SELECT UNNEST([{rows}]) AS i) GROUP BY 1, 2
-),
-est AS (
-  SELECT MIN(dot) AS e FROM (
-    SELECT sa.i, SUM(sa.c * sb.c) AS dot
-    FROM sa JOIN sb ON sa.i = sb.i AND sa.b = sb.b
-    GROUP BY sa.i)
-),
-exact AS (
-  SELECT SUM(ca * cb) AS x FROM
-    (SELECT k, COUNT(*) AS ca FROM ka GROUP BY k) a
-    JOIN (SELECT k, COUNT(*) AS cb FROM kb GROUP BY k) b USING (k)
-)
-SELECT CAST(x AS BIGINT) AS exact_join_size, CAST(e AS BIGINT) AS est_join_size,
-  e >= x AS never_under, e * 100 <= 130 * x AS within_30pct
-FROM est CROSS JOIN exact
-"""
-
-
-register("diag_join_size_estimate", diag_join_size_estimate, _join_size_oracle)
-
-
 _KCORE_K = 10
 _KCORE_ROUNDS = 12  # oracle unroll depth; true peel depth is 4 here
 
 
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X63: the 10-core of the co-occurrence graph — each surviving
+    """The 10-core of the co-occurrence graph — each surviving
     user with their in-core degree. The Spark side peels to the
     FIXPOINT (operators/graph.py:kcore, convergence-checked); the
     oracle unrolls 12 peel rounds, which equals the fixpoint whenever
@@ -535,7 +278,7 @@ register("graph_kcore", graph_kcore, _kcore_oracle)
 
 
 # --------------------------------------------------------------------------
-# X82: label-propagation communities
+# label-propagation communities
 # --------------------------------------------------------------------------
 
 _LPA_ITERS = 4
@@ -610,7 +353,7 @@ register("graph_label_propagation", graph_label_propagation, _lpa_oracle)
 
 
 # --------------------------------------------------------------------------
-# X92: BFS hop-depth census
+# BFS hop-depth census
 # --------------------------------------------------------------------------
 
 _BFS_DEPTH = 4
@@ -698,7 +441,7 @@ register("graph_bfs_depth", graph_bfs_depth, _bfs_oracle)
 
 
 # ---------------------------------------------------------------------------
-# X103: connected components via Large-Star / Small-Star
+# connected components via Large-Star / Small-Star
 # ---------------------------------------------------------------------------
 
 

@@ -56,7 +56,6 @@ class EntityConfig:
 
     entity: str  # "pw" | "wb"
     transport_root: str
-    expense_gl_code: str = "6000"
 
 
 class ConfigError(ValueError):
@@ -73,10 +72,6 @@ def validate_entity_config(config: EntityConfig) -> EntityConfig:
         problems.append(f"entity must be 'pw' or 'wb', got {config.entity!r}")
     if not config.transport_root or not str(config.transport_root).strip():
         problems.append("transport_root must be a non-empty path/URL")
-    if not (config.expense_gl_code.isdigit() and len(config.expense_gl_code) == 4):
-        problems.append(
-            f"expense_gl_code must be a 4-digit GL code, got {config.expense_gl_code!r}"
-        )
     if problems:
         raise ConfigError("; ".join(problems))
     return config
@@ -90,9 +85,11 @@ def run_daily_import(
     strict: bool = True,
 ) -> dict[str, DataFrame]:
     """Execute the EP1 flow; returns every intermediate DataFrame for
-    auditing (the S11 log surface). Raises QualityGateError when the
-    workbooks parse to no charge, and when the unverified gate trips
-    (strict) — the src/helpers.ts:212-214 abort.
+    auditing (the S11 log surface). Raises ConfigError for a bad
+    ``config`` before any Spark work, as the reference checks its entity
+    switch at startup (src/helpers.ts:20-46).  Raises QualityGateError
+    when the workbooks parse to no charge, and when the unverified gate
+    trips (strict) — the src/helpers.ts:212-214 abort.
 
     ``charge_table`` columns: date, amount, customer_id, seq_no,
     terminal_id, tran_timestamp. ``customer_dim``: customer_id,
@@ -110,6 +107,7 @@ def run_daily_import(
     decodes the workbook again.  When a gate raises, nothing this
     function cached stays cached.
     """
+    validate_entity_config(config)
     tagged = tag_day_rows(grid).persist(StorageLevel.MEMORY_AND_DISK)
     matched = None
     try:

@@ -266,7 +266,7 @@ SELECT doc_a, doc_b, hamming FROM (
 
 # ---------------------------------------------------------------- ANN
 
-def _vec_lit(v: list[float]) -> str:
+def vec_lit(v: list[float]) -> str:
     return "[" + ", ".join(repr(x) for x in v) + "]"
 
 
@@ -278,7 +278,7 @@ def topk_lsh_oracle() -> str:
     for t in range(4):
         planes = hyperplanes(4, 64, seed=7 + t)
         bucket = " + ".join(
-            f"(CASE WHEN list_dot_product(v, {_vec_lit(p)}) >= 0"
+            f"(CASE WHEN list_dot_product(v, {vec_lit(p)}) >= 0"
             f" THEN {1 << i} ELSE 0 END)"
             for i, p in enumerate(planes)
         )
@@ -325,7 +325,7 @@ def topk_ivf_oracle() -> str:
     sf_dir = oracle_sf_dir()
     cents = train_centroids_from_parquet(os.path.join(sf_dir, "embeddings.parquet"))
     structs = ", ".join(
-        f"{{'d': list_dot_product(v, {_vec_lit(c)}), 'cell': {i}}}"
+        f"{{'d': list_dot_product(v, {vec_lit(c)}), 'cell': {i}}}"
         for i, c in enumerate(cents)
     )
     cells = f"list_transform(list_reverse(list_sort([{structs}])), s -> s.cell)"
@@ -364,7 +364,7 @@ def range_search_ivf_oracle() -> str:
     sf_dir = oracle_sf_dir()
     cents = train_centroids_from_parquet(os.path.join(sf_dir, "embeddings.parquet"))
     structs = ", ".join(
-        f"{{'d': list_dot_product(v, {_vec_lit(c)}), 'cell': {i}}}"
+        f"{{'d': list_dot_product(v, {vec_lit(c)}), 'cell': {i}}}"
         for i, c in enumerate(cents)
     )
     cells = f"list_transform(list_reverse(list_sort([{structs}])), s -> s.cell)"
@@ -394,7 +394,7 @@ def cluster_assign_oracle() -> str:
     sf_dir = oracle_sf_dir()
     cents = train_centroids_from_parquet(os.path.join(sf_dir, "embeddings.parquet"))
     structs = ", ".join(
-        f"{{'d': list_dot_product(v, {_vec_lit(c)}), 'cell': {i}}}"
+        f"{{'d': list_dot_product(v, {vec_lit(c)}), 'cell': {i}}}"
         for i, c in enumerate(cents)
     )
     return f"""

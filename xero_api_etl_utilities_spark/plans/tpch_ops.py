@@ -1,17 +1,22 @@
-"""TPC-H-shaped analytical queries over the full star schema —
-exercising the remaining dimension tables (part, supplier) with the
-classic scan→join→agg→top-k shapes a reference user would expect from
-a general query engine. Same money/ratio oracle conventions as the
-rest of the catalog.
+"""TPC-H-shaped catalog queries: the ``q<N>``, ``parts_``, ``orders_``,
+``basket_`` and ``part_`` families.
+
+The classic scan → join → aggregate → top-k shapes over the full star
+schema (part, supplier, nation and region included), with the TPC-H
+subquery decorrelations, plus order and basket analytics on the same
+tables: market-basket pairs, triples and rules, RFM segments, cohort
+lifetime value, Pareto and ABC classes.  No reference counterpart
+(``src/queries.ts`` reads only the charge tables); the money and ratio
+oracle conventions are those of ``plans/flagship.py``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from xero_api_etl_utilities_spark.plans.catalog import register
-from xero_api_etl_utilities_spark.plans.flagship import DEC, _money, _out
+from xero_api_etl_utilities_spark.plans.flagship import DEC, money, money_out
 from xero_api_etl_utilities_spark.sources.parquet import load_table
 
 
@@ -19,18 +24,18 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: pricing summary by returnflag/linestatus with
     shipped-before cutoff. Single scan, one groupBy, all decimal."""
     li = load_table(spark, sf_dir, "lineitem")
-    price = _money(F.col("l_extendedprice"))
-    disc = _money(F.col("l_discount"))
-    tax = _money(F.col("l_tax"))
+    price = money(F.col("l_extendedprice"))
+    disc = money(F.col("l_discount"))
+    tax = money(F.col("l_tax"))
     one = F.lit(1).cast(DEC)
     return (
         li.filter(F.col("l_shipdate").cast("date") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.sum("l_quantity").cast("bigint").alias("sum_qty"),
-            _out(F.sum(price)).alias("sum_base_price"),
-            _out(F.sum(price * (one - disc))).alias("sum_disc_price"),
-            _out(F.sum(price * (one - disc) * (one + tax))).alias("sum_charge"),
+            money_out(F.sum(price)).alias("sum_base_price"),
+            money_out(F.sum(price * (one - disc))).alias("sum_disc_price"),
+            money_out(F.sum(price * (one - disc) * (one + tax))).alias("sum_charge"),
             F.count(F.lit(1)).alias("count_order"),
         )
         .orderBy("l_returnflag", "l_linestatus")
@@ -70,8 +75,8 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate").cast("date") > F.lit("1997-01-01")
     )
-    revenue = _money(F.col("l_extendedprice")) * (
-        F.lit(1).cast(DEC) - _money(F.col("l_discount"))
+    revenue = money(F.col("l_extendedprice")) * (
+        F.lit(1).cast(DEC) - money(F.col("l_discount"))
     )
     return (
         li.join(od, li.l_orderkey == od.o_orderkey)
@@ -81,7 +86,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate").cast("date").alias("order_date"),
             "o_orderpriority",
         )
-        .agg(_out(F.sum(revenue)).alias("revenue"))
+        .agg(money_out(F.sum(revenue)).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
         .limit(10)
     )
@@ -116,8 +121,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     su = load_table(spark, sf_dir, "supplier")
     na = load_table(spark, sf_dir, "nation")
     re = load_table(spark, sf_dir, "region")
-    revenue = _money(F.col("l_extendedprice")) * (
-        F.lit(1).cast(DEC) - _money(F.col("l_discount"))
+    revenue = money(F.col("l_extendedprice")) * (
+        F.lit(1).cast(DEC) - money(F.col("l_discount"))
     )
     return (
         li.join(od, li.l_orderkey == od.o_orderkey)
@@ -129,7 +134,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("r_name") == "ASIA")
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
-            _out(F.sum(revenue)).alias("revenue"),
+            money_out(F.sum(revenue)).alias("revenue"),
             F.count(F.lit(1)).alias("n_lineitems"),
         )
     )
@@ -168,7 +173,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            _out(F.sum(_money(F.col("l_extendedprice")) * _money(F.col("l_discount")))).alias(
+            money_out(F.sum(money(F.col("l_extendedprice")) * money(F.col("l_discount")))).alias(
                 "revenue"
             ),
             F.count(F.lit(1)).alias("n_rows"),
@@ -198,15 +203,15 @@ def parts_brand_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     retail-vs-sale delta (exercises the part table; broadcast dim)."""
     li = load_table(spark, sf_dir, "lineitem")
     pa = load_table(spark, sf_dir, "part")
-    revenue = _money(F.col("l_extendedprice"))
-    retail = _money(F.col("p_retailprice")) * _money(F.col("l_quantity"))
+    revenue = money(F.col("l_extendedprice"))
+    retail = money(F.col("p_retailprice")) * money(F.col("l_quantity"))
     return (
         li.join(F.broadcast(pa), li.l_partkey == pa.p_partkey)
         .groupBy("p_brand")
         .agg(
             F.sum("l_quantity").cast("bigint").alias("total_qty"),
-            _out(F.sum(revenue)).alias("total_revenue"),
-            _out(F.sum(retail - revenue)).alias("retail_delta"),
+            money_out(F.sum(revenue)).alias("total_revenue"),
+            money_out(F.sum(retail - revenue)).alias("retail_delta"),
             F.count_distinct("p_partkey").alias("n_parts"),
         )
     )
@@ -238,15 +243,15 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate").cast("date") < F.lit("1996-01-01"))
     )
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    revenue = _money(F.col("l_extendedprice")) * (
-        F.lit(1).cast(DEC) - _money(F.col("l_discount"))
+    revenue = money(F.col("l_extendedprice")) * (
+        F.lit(1).cast(DEC) - money(F.col("l_discount"))
     )
     return (
         li.join(od, li.l_orderkey == od.o_orderkey)
         .join(F.broadcast(cu), od.o_custkey == cu.c_custkey)
         .groupBy("c_custkey", "c_name", "c_mktsegment")
         .agg(
-            _out(F.sum(revenue)).alias("revenue"),
+            money_out(F.sum(revenue)).alias("revenue"),
             F.count(F.lit(1)).cast("bigint").alias("n_lineitems"),
         )
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
@@ -284,16 +289,16 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate").cast("date") < F.lit("1995-10-01"))
     )
     pa = load_table(spark, sf_dir, "part")
-    revenue = _money(F.col("l_extendedprice")) * (
-        F.lit(1).cast(DEC) - _money(F.col("l_discount"))
+    revenue = money(F.col("l_extendedprice")) * (
+        F.lit(1).cast(DEC) - money(F.col("l_discount"))
     )
     promo = F.when(F.col("p_type") == "PROMO", revenue).otherwise(F.lit(0).cast(DEC))
     return (
         li.join(F.broadcast(pa), li.l_partkey == pa.p_partkey)
         .agg(F.sum(promo).alias("_promo"), F.sum(revenue).alias("_total"))
         .select(
-            _out(F.col("_promo")).alias("promo_revenue"),
-            _out(F.col("_total")).alias("total_revenue"),
+            money_out(F.col("_promo")).alias("promo_revenue"),
+            money_out(F.col("_total")).alias("total_revenue"),
             F.expr(
                 "(2 * cast(_promo * 100 as bigint) * 10000 + cast(_total * 100 as bigint))"
                 " div (2 * cast(_total * 100 as bigint))"
@@ -347,7 +352,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_name",
             F.col("o_orderkey").alias("orderkey"),
             F.col("o_orderdate").cast("date").alias("order_date"),
-            _out(_money(F.col("o_totalprice"))).alias("total_price"),
+            money_out(money(F.col("o_totalprice"))).alias("total_price"),
             "total_qty",
         )
         .orderBy(F.desc("total_price"), F.asc("orderkey"))
@@ -382,8 +387,8 @@ def q19_bracketed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     it one fact scan."""
     li = load_table(spark, sf_dir, "lineitem")
     pa = load_table(spark, sf_dir, "part")
-    revenue = _money(F.col("l_extendedprice")) * (
-        F.lit(1).cast(DEC) - _money(F.col("l_discount"))
+    revenue = money(F.col("l_extendedprice")) * (
+        F.lit(1).cast(DEC) - money(F.col("l_discount"))
     )
     brackets = (
         (
@@ -406,7 +411,7 @@ def q19_bracketed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(pa), li.l_partkey == pa.p_partkey)
         .filter(brackets)
         .agg(
-            _out(F.sum(revenue)).alias("revenue"),
+            money_out(F.sum(revenue)).alias("revenue"),
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         )
     )
@@ -481,8 +486,8 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     n2 = na.select(
         F.col("n_nationkey").alias("_c_nk"), F.col("n_name").alias("cust_nation")
     )
-    revenue = _money(F.col("l_extendedprice")) * (
-        F.lit(1).cast(DEC) - _money(F.col("l_discount"))
+    revenue = money(F.col("l_extendedprice")) * (
+        F.lit(1).cast(DEC) - money(F.col("l_discount"))
     )
     return (
         li.join(od, li.l_orderkey == od.o_orderkey)
@@ -496,7 +501,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_nation",
             F.year(F.col("l_shipdate").cast("date")).alias("l_year"),
         )
-        .agg(_out(F.sum(revenue)).alias("revenue"))
+        .agg(money_out(F.sum(revenue)).alias("revenue"))
     )
 
 
@@ -537,8 +542,8 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     cna = na.join(F.broadcast(re), na.n_regionkey == re.r_regionkey).select(
         F.col("n_nationkey").alias("_c_nk")
     )
-    revenue = _money(F.col("l_extendedprice")) * (
-        F.lit(1).cast(DEC) - _money(F.col("l_discount"))
+    revenue = money(F.col("l_extendedprice")) * (
+        F.lit(1).cast(DEC) - money(F.col("l_discount"))
     )
     sna = na.select(
         F.col("n_nationkey").alias("_s_nk"), F.col("n_name").alias("_s_nation")
@@ -557,8 +562,8 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(nation_rev).alias("_nat"), F.sum(revenue).alias("_tot"))
         .select(
             "o_year",
-            _out(F.col("_nat")).alias("nation_revenue"),
-            _out(F.col("_tot")).alias("total_revenue"),
+            money_out(F.col("_nat")).alias("nation_revenue"),
+            money_out(F.col("_tot")).alias("total_revenue"),
             F.expr(
                 "(2 * cast(_nat * 100 as bigint) * 10000 + cast(_tot * 100 as bigint))"
                 " div (2 * cast(_tot * 100 as bigint))"
@@ -610,10 +615,10 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     su = load_table(spark, sf_dir, "supplier")
     na = load_table(spark, sf_dir, "nation")
     pa = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("widget"))
-    cost = _money(F.col("p_retailprice")) * F.expr("CAST(0.8 AS DECIMAL(2,1))")
-    profit = _money(F.col("l_extendedprice")) * (
-        F.lit(1).cast(DEC) - _money(F.col("l_discount"))
-    ) - _money(F.col("l_quantity")) * cost
+    cost = money(F.col("p_retailprice")) * F.expr("CAST(0.8 AS DECIMAL(2,1))")
+    profit = money(F.col("l_extendedprice")) * (
+        F.lit(1).cast(DEC) - money(F.col("l_discount"))
+    ) - money(F.col("l_quantity")) * cost
     return (
         li.join(F.broadcast(pa), li.l_partkey == pa.p_partkey)
         .join(od, li.l_orderkey == od.o_orderkey)
@@ -623,7 +628,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year(F.col("o_orderdate").cast("date")).alias("o_year"),
         )
-        .agg(_out(F.sum(profit)).alias("sum_profit"))
+        .agg(money_out(F.sum(profit)).alias("sum_profit"))
     )
 
 
@@ -700,8 +705,8 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate").cast("date") < F.lit("1997-04-01"))
     )
     su = load_table(spark, sf_dir, "supplier")
-    revenue = _money(F.col("l_extendedprice")) * (
-        F.lit(1).cast(DEC) - _money(F.col("l_discount"))
+    revenue = money(F.col("l_extendedprice")) * (
+        F.lit(1).cast(DEC) - money(F.col("l_discount"))
     )
     rev = li.groupBy("l_suppkey").agg(F.sum(revenue).alias("_total"))
     mx = rev.agg(F.max("_total").alias("_mx"))
@@ -711,7 +716,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "s_suppkey",
             "s_name",
-            _out(F.col("_total")).alias("total_revenue"),
+            money_out(F.col("_total")).alias("total_revenue"),
         )
     )
 
@@ -761,7 +766,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             < F.col("_sq")
         )
         .agg(
-            _out(F.sum(_money(F.col("l_extendedprice")))).alias("small_qty_revenue"),
+            money_out(F.sum(money(F.col("l_extendedprice")))).alias("small_qty_revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -797,7 +802,7 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cu = load_table(spark, sf_dir, "customer")
     od = load_table(spark, sf_dir, "orders")
     stats = cu.filter(F.col("c_acctbal") > 0).agg(
-        F.sum(_money(F.col("c_acctbal"))).alias("_s"),
+        F.sum(money(F.col("c_acctbal"))).alias("_s"),
         F.count(F.lit(1)).alias("_n"),
     )
     recent = od.filter(F.col("o_orderdate").cast("date") >= F.lit("2000-01-01")).select(
@@ -805,12 +810,12 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         cu.crossJoin(F.broadcast(stats))
-        .filter(_money(F.col("c_acctbal")) * F.col("_n") > F.col("_s"))
+        .filter(money(F.col("c_acctbal")) * F.col("_n") > F.col("_s"))
         .join(recent, cu.c_custkey == recent.o_custkey, "left_anti")
         .groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            _out(F.sum(_money(F.col("c_acctbal")))).alias("totacctbal"),
+            money_out(F.sum(money(F.col("c_acctbal")))).alias("totacctbal"),
         )
     )
 
@@ -906,7 +911,7 @@ def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlated re-scans. "Late" is ship-lag > 90 days (schema has no
     l_commitdate/l_receiptdate). The supplier→nation probe side is a
     broadcast dim chain, as in q7."""
-    # r16 negative result (guide §1): an explicit orderkey exchange at
+    # Negative result: an explicit orderkey exchange at
     # compute width ahead of this chain measured SLOWER (warm A/B at
     # sf0.1: 1.34 → 1.7 s) — the two countDistinct aggregates already
     # exchange on the orderkey, and the extra stage outweighs the wide
@@ -1014,7 +1019,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(pa.select("p_partkey")), li.l_partkey == F.col("p_partkey"))
         .join(F.broadcast(dim), li.l_suppkey == dim.s_suppkey)
         .groupBy("l_partkey", "s_suppkey", "s_name", "s_acctbal", "n_name")
-        .agg(F.min(_money(F.col("l_extendedprice"))).alias("cost"))
+        .agg(F.min(money(F.col("l_extendedprice"))).alias("cost"))
     )
     best = (
         offers.groupBy("l_partkey")
@@ -1032,7 +1037,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_name",
             "n_name",
             offers.l_partkey.alias("p_partkey"),
-            _out(F.col("cost")).alias("min_cost"),
+            money_out(F.col("cost")).alias("min_cost"),
         )
         .orderBy(F.desc("s_acctbal"), "n_name", "s_name", "p_partkey")
         .limit(100)
@@ -1100,7 +1105,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_part = materialize(
         li.join(F.broadcast(su.select("s_suppkey")), li.l_suppkey == F.col("s_suppkey"))
         .groupBy("l_partkey")
-        .agg(F.sum(_money(F.col("l_extendedprice"))).alias("val"))
+        .agg(F.sum(money(F.col("l_extendedprice"))).alias("val"))
     )
     # 1-row driver-side scalar over the ALREADY-materialized aggregate
     # (exact Decimal survives the round-trip into the literal)
@@ -1109,7 +1114,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_part.filter(F.col("val") * 1000 > F.lit(total))
         .select(
             F.col("l_partkey").alias("p_partkey"),
-            _out(F.col("val")).alias("part_value"),
+            money_out(F.col("val")).alias("part_value"),
         )
         .orderBy(F.desc("part_value"), "p_partkey")
     )
@@ -1239,5 +1244,911 @@ WHERE s_nationkey = 7
            > CAST(SUM(l_quantity) AS BIGINT)
   )
 ORDER BY s_name
+""",
+)
+
+
+def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Market-basket co-occurrence: the top-20 part PAIRS appearing in
+    the same order. The pair join is a self equi-join ON THE ORDER KEY
+    — quadratic only within one order (baskets are bounded, ~7 line
+    items, so per-key fan-out is ≤ ~21 pairs regardless of table
+    size; the global shape stays linear). Dedup to distinct
+    (order, pair) first so a part appearing twice in an order cannot
+    double-count support."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    # an orderkey-keyed exchange at compute
+    # width replaces the distinct's own exchange and is reused by the
+    # pair self-join on the same key (the co_edges pattern) — the
+    # dedup and the within-order pair fan-out run wide off ONE
+    # exchange instead of the single-task scan (warm A/B at sf0.1:
+    # ~1.9-2.0 → ~1.55 s).  Integer support counts only.
+    from xero_api_etl_utilities_spark.operators.materialize import (
+        compute_width,
+    )
+
+    items = compute_width(li, "l_orderkey").dropDuplicates()
+    a = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a"))
+    b = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_b"))
+    return (
+        a.join(b, "ok")
+        .filter(F.col("part_a") < F.col("part_b"))
+        .groupBy("part_a", "part_b")
+        .agg(F.count(F.lit(1)).alias("support"))
+        .orderBy(F.desc("support"), F.asc("part_a"), F.asc("part_b"))
+        .limit(20)
+    )
+
+
+register(
+    "basket_part_pairs",
+    basket_part_pairs,
+    """
+WITH items AS (
+  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+)
+SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
+  CAST(COUNT(*) AS BIGINT) AS support
+FROM items a JOIN items b
+  ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+GROUP BY a.l_partkey, b.l_partkey
+ORDER BY support DESC, part_a ASC, part_b ASC LIMIT 20
+""",
+)
+
+
+def part_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 2-D SKYLINE operator (Borzsony/Kossmann's
+    classic, absent from every SQL dialect): parts no other part
+    dominates — cheaper AND bigger. Lowering: sort by (price asc,
+    size desc), a point is on the frontier iff its size strictly
+    exceeds every EARLIER point's size = running max over the ordered
+    window (ties on price resolved toward the larger size; equal
+    (price,size) duplicates keep the lowest partkey via the
+    three-key total order). Integer cents/sizes only.
+
+    100 TB shape: the running max was a global window over the
+    part dimension — parts scale linearly with the corpus, the same
+    single-partition class as the customer/part-grain rank windows
+    killed this round.  Now the decomposed global EXCLUSIVE prefix
+    max (rankdist.global_prefix_agg_decomposed2: band = price >> 8
+    ascending, sub = the low 8 price bits — monotone within a band —
+    with (size desc, partkey) ties handled by the (band, sub)-local
+    window); NULL prefix marks the global first row exactly as the
+    window form did."""
+    from xero_api_etl_utilities_spark.operators.rankdist import (
+        global_prefix_agg_decomposed2,
+    )
+
+    pa = load_table(spark, sf_dir, "part").select(
+        "p_partkey",
+        F.round(F.col("p_retailprice") * 100).cast("long").alias("price_cents"),
+        F.col("p_size").cast("long").alias("size"),
+    )
+    banded = pa.withColumn(
+        "_band", F.shiftright(F.col("price_cents"), 8)
+    ).withColumn("_sub", F.col("price_cents").bitwiseAND(F.lit(255)))
+    flagged = global_prefix_agg_decomposed2(
+        banded,
+        "_band",
+        "_sub",
+        [F.asc("price_cents"), F.desc("size"), F.asc("p_partkey")],
+        "size",
+        agg="max",
+        out_name="_prev_max",
+        inclusive=False,
+    )
+    return (
+        flagged.filter(
+            F.col("_prev_max").isNull() | (F.col("size") > F.col("_prev_max"))
+        )
+        .select("p_partkey", "price_cents", "size")
+        .orderBy("price_cents", "p_partkey")
+    )
+
+
+register(
+    "part_pareto_frontier",
+    part_pareto_frontier,
+    """
+WITH pa AS (
+  SELECT p_partkey, CAST(round(p_retailprice * 100) AS BIGINT) AS price_cents,
+    CAST(p_size AS BIGINT) AS size
+  FROM part
+),
+flagged AS (
+  SELECT p_partkey, price_cents, size,
+    MAX(size) OVER (ORDER BY price_cents ASC, size DESC, p_partkey ASC
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+      AS prev_max
+  FROM pa
+)
+SELECT p_partkey, price_cents, size
+FROM flagged
+WHERE prev_max IS NULL OR size > prev_max
+ORDER BY price_cents, p_partkey
+""",
+)
+
+
+# ---------------------------------------------------------------------------
+# year-over-year monthly growth
+# ---------------------------------------------------------------------------
+
+
+def orders_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The BI staple the daily/weekday diagnostics don't cover —
+    monthly revenue with its YEAR-OVER-YEAR delta: each (year, month)
+    row carries the same month's prior-year cents (lag-12 by month
+    key), the absolute delta, and growth in bp (cross-multiplied
+    integer, floor division).  Months without a prior-year partner
+    (the first year) publish NULL growth rather than a fake zero.
+
+    Shape: one orders scan -> month-grain aggregate (map-side
+    combinable), one lag window PARTITIONED BY MONTH-OF-YEAR ordered
+    by year — 12 partitions of ~years rows, never a global window;
+    integer cents end to end.  Negative growth divides a negative
+    numerator: Spark ``div`` and DuckDB ``//`` BOTH truncate toward
+    zero on integers (verified: -7/2 -> -3 on each; the sf0.01 gate
+    hash-matches over 33 real negative rows), so the bp value is
+    engine-exact on declines too."""
+    from pyspark.sql import Window
+
+    od = load_table(spark, sf_dir, "orders")
+    d = F.col("o_orderdate").cast("date")
+    monthly = (
+        od.select(
+            F.year(d).alias("yr"),
+            F.month(d).alias("mo"),
+            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        )
+        .groupBy("yr", "mo")
+        .agg(F.sum("cents").alias("rev_cents"))
+    )
+    w = Window.partitionBy("mo").orderBy("yr")
+    prior = F.lag("rev_cents").over(w)
+    prior_yr = F.lag("yr").over(w)
+    # a gap year breaks the YoY pair: only an ADJACENT prior year counts
+    prev = F.when(prior_yr == F.col("yr") - 1, prior)
+    return (
+        monthly.withColumn("prev_cents", prev)
+        .select(
+            F.col("yr").cast("int").alias("yr"),
+            F.col("mo").cast("int").alias("mo"),
+            F.col("rev_cents").cast("bigint").alias("rev_cents"),
+            F.col("prev_cents").cast("bigint").alias("prev_cents"),
+            (F.col("rev_cents") - F.col("prev_cents"))
+            .cast("bigint")
+            .alias("delta_cents"),
+            F.expr(
+                "CASE WHEN prev_cents IS NULL OR prev_cents = 0 THEN NULL"
+                " ELSE (rev_cents - prev_cents) * 10000 div prev_cents END"
+            )
+            .cast("bigint")
+            .alias("growth_bp"),
+        )
+        .orderBy("yr", "mo")
+    )
+
+
+_YOY_ORACLE = """
+WITH monthly AS (
+  SELECT year(CAST(o_orderdate AS DATE)) AS yr,
+         month(CAST(o_orderdate AS DATE)) AS mo,
+         sum(CAST(round(o_totalprice * 100) AS BIGINT))::BIGINT AS rev_cents
+  FROM orders GROUP BY 1, 2
+), lagged AS (
+  SELECT yr, mo, rev_cents,
+    lag(rev_cents) OVER (PARTITION BY mo ORDER BY yr) AS prior,
+    lag(yr) OVER (PARTITION BY mo ORDER BY yr) AS prior_yr
+  FROM monthly
+)
+SELECT CAST(yr AS INT) AS yr, CAST(mo AS INT) AS mo, rev_cents,
+  CASE WHEN prior_yr = yr - 1 THEN prior END::BIGINT AS prev_cents,
+  (rev_cents - CASE WHEN prior_yr = yr - 1 THEN prior END)::BIGINT
+    AS delta_cents,
+  CASE WHEN prior_yr = yr - 1 AND prior <> 0
+       THEN (rev_cents - prior) * 10000 // prior END::BIGINT AS growth_bp
+FROM lagged ORDER BY yr, mo
+"""
+
+register("orders_yoy_growth", orders_yoy_growth, _YOY_ORACLE)
+
+
+# ---------------------------------------------------------------------------
+# Apriori frequent triples
+# ---------------------------------------------------------------------------
+
+
+def basket_brand_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frequent brand 3-itemsets across order baskets, minimum
+    support RELATIVE to the order count (max(5, n_orders // 200), the
+    standard fractional-minsup formulation — an absolute constant
+    either empties sf0.001 or never prunes sf0.1).
+
+    Shape is the distributed Apriori step, not the naive cube:
+    baskets self-join keyed on the ORDER (quadratic only within one
+    basket, ≤ C(11,2) here), pair supports aggregated, candidate
+    triples generated by joining frequent (a,b)×(a,c) pairs and
+    Apriori-checked against the frequent-pair set on the (b,c) edge
+    BEFORE any support counting, and only surviving candidates get
+    their third-edge support counted via a broadcast semi-join back
+    into the per-order pair stream.  On this dense 25-brand corpus
+    the pair-level prune is semantics-free (every pair is frequent —
+    the oracle therefore need not model it); on a realistically
+    sparse catalog it is the difference between |frequent_pairs|²
+    and |items|³ candidates.  minsup is a driver literal derived
+    from one count (the q11 pattern: a 1-row scalar belongs in the
+    plan as a literal, not as a nested-loop join)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    pt = load_table(spark, sf_dir, "part")
+    n_orders = load_table(spark, sf_dir, "orders").count()
+    minsup = max(5, n_orders // 200)
+
+    basket = (
+        li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
+        .select(F.col("l_orderkey").alias("o"), F.col("p_brand").alias("b"))
+        .distinct()
+    )
+    a, b2 = basket.alias("a"), basket.alias("b")
+    pair_stream = a.join(
+        b2, (F.col("a.o") == F.col("b.o")) & (F.col("a.b") < F.col("b.b"))
+    ).select(F.col("a.o").alias("o"), F.col("a.b").alias("b1"), F.col("b.b").alias("b2"))
+    freq_pairs = (
+        pair_stream.groupBy("b1", "b2")
+        .agg(F.count(F.lit(1)).alias("sup"))
+        .filter(F.col("sup") >= minsup)
+        .select("b1", "b2")
+    )
+    # candidate C3: (a,b)+(a,c) with b<c, Apriori-pruned on edge (b,c)
+    fp1, fp2 = freq_pairs.alias("p"), freq_pairs.alias("q")
+    cand = (
+        fp1.join(fp2, (F.col("p.b1") == F.col("q.b1")) & (F.col("p.b2") < F.col("q.b2")))
+        .select(
+            F.col("p.b1").alias("b1"),
+            F.col("p.b2").alias("b2"),
+            F.col("q.b2").alias("b3"),
+        )
+        .join(
+            freq_pairs.select(
+                F.col("b1").alias("b2"), F.col("b2").alias("b3")
+            ),
+            ["b2", "b3"],
+            "left_semi",
+        )
+    )
+    # support count: extend the per-order pair stream by the third
+    # member (order-keyed equi-join again), keep candidates only.
+    third = basket.select(F.col("o").alias("o3"), F.col("b").alias("b3"))
+    tri_stream = (
+        pair_stream.join(
+            third, (F.col("o") == F.col("o3")) & (F.col("b2") < F.col("b3"))
+        )
+        .select("b1", "b2", "b3")
+        .join(F.broadcast(cand), ["b1", "b2", "b3"], "left_semi")
+    )
+    return (
+        tri_stream.groupBy("b1", "b2", "b3")
+        .agg(F.count(F.lit(1)).alias("support"))
+        .filter(F.col("support") >= minsup)
+        .orderBy(F.desc("support"), "b1", "b2", "b3")
+    )
+
+
+def _triples_oracle() -> str:
+    return """
+WITH basket AS MATERIALIZED (
+  -- MATERIALIZED: DuckDB 1.0 inlines the CTE at every self-join
+  -- reference, re-running (and at sf0.1 join-reordering into a ~229 s
+  -- plan) the lineitem x part join per reference; materialized it is
+  -- a sub-second per-order enumeration.
+  SELECT DISTINCT l_orderkey AS o, p_brand AS b
+  FROM lineitem JOIN part ON l_partkey = p_partkey
+),
+thr AS (SELECT GREATEST(5, COUNT(*) // 200) AS minsup FROM orders),
+tri AS (
+  SELECT a.b AS b1, b.b AS b2, c.b AS b3, CAST(COUNT(*) AS BIGINT) AS support
+  FROM basket a
+  JOIN basket b ON a.o = b.o AND a.b < b.b
+  JOIN basket c ON a.o = c.o AND b.b < c.b
+  GROUP BY 1, 2, 3
+)
+SELECT b1, b2, b3, support FROM tri, thr
+WHERE support >= minsup
+ORDER BY support DESC, b1, b2, b3
+"""
+
+
+register("basket_brand_triples", basket_brand_triples, _triples_oracle)
+
+
+# ---------------------------------------------------------------------------
+# ABC classification (cumulative-share inventory classes)
+# ---------------------------------------------------------------------------
+
+
+def part_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Inventory ABC analysis — parts ranked by revenue, class A
+    while the INCLUSIVE cumulative share is ≤ 80%, B to 95%, C rest,
+    thresholds tested by integer cross-multiplication (cum·100 ≤
+    total·80) so no share is ever a float.  (revenue DESC, partkey)
+    is a total order so the running sum is engine-exact.
+
+    100 TB shape: the running sum was a global window over the
+    part-grain aggregate — parts scale linearly with the corpus (20M
+    at sf100), the same single-partition class as the customer-grain
+    RFM windows killed this round.  Now the decomposed global prefix
+    sum (rankdist.global_prefix_agg_decomposed2, the
+    ``agg_revenue_concentration`` descending
+    orientation: band = cents >> 18 descending, sub = inverted middle
+    cents bits); the 1-row total rides a broadcast cross join instead
+    of a second global window.  Census output: class, n_parts, class
+    revenue and exact-bp share of total."""
+    from xero_api_etl_utilities_spark.operators.rankdist import (
+        global_prefix_agg_decomposed2,
+    )
+
+    li = load_table(spark, sf_dir, "lineitem")
+    per_part = li.groupBy("l_partkey").agg(
+        F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("cents")
+    )
+    total = per_part.agg(F.sum("cents").cast("bigint").alias("total"))
+    banded = per_part.withColumn(
+        "_band", F.shiftright(F.col("cents"), 18)
+    ).withColumn(
+        "_sub",
+        F.lit(1023) - F.shiftright(F.col("cents"), 8).bitwiseAND(F.lit(1023)),
+    )
+    classed = global_prefix_agg_decomposed2(
+        banded,
+        "_band",
+        "_sub",
+        [F.desc("cents"), F.asc("l_partkey")],
+        "cents",
+        agg="sum",
+        out_name="cum",
+        inclusive=True,
+        descending_bands=True,
+    ).crossJoin(F.broadcast(total)).withColumn(
+        "abc_class",
+        F.when(F.col("cum") * 100 <= F.col("total") * 80, "A")
+        .when(F.col("cum") * 100 <= F.col("total") * 95, "B")
+        .otherwise("C"),
+    )
+    return (
+        classed.groupBy("abc_class")
+        .agg(
+            F.count(F.lit(1)).alias("n_parts"),
+            F.sum("cents").alias("class_cents"),
+            F.max("total").alias("_total"),
+        )
+        .select(
+            "abc_class",
+            "n_parts",
+            "class_cents",
+            F.expr("10000 * class_cents div _total").alias("share_bp"),
+        )
+        .orderBy("abc_class")
+    )
+
+
+register(
+    "part_abc_classification",
+    part_abc_classification,
+    """
+WITH per_part AS (
+  SELECT l_partkey,
+    SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
+  FROM lineitem GROUP BY l_partkey
+),
+classed AS (
+  SELECT l_partkey, cents,
+    SUM(cents) OVER (ORDER BY cents DESC, l_partkey ASC
+                     ROWS UNBOUNDED PRECEDING) AS cum,
+    SUM(cents) OVER () AS total
+  FROM per_part
+)
+SELECT
+  CASE WHEN cum * 100 <= total * 80 THEN 'A'
+       WHEN cum * 100 <= total * 95 THEN 'B'
+       ELSE 'C' END AS abc_class,
+  CAST(COUNT(*) AS BIGINT) AS n_parts,
+  CAST(SUM(cents) AS BIGINT) AS class_cents,
+  CAST((10000 * SUM(cents)) // MAX(total) AS BIGINT) AS share_bp
+FROM classed
+GROUP BY 1 ORDER BY abc_class
+""",
+)
+
+
+# ---------------------------------------------------------------------------
+# RFM segmentation
+# ---------------------------------------------------------------------------
+
+
+def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The marketing-analytics classic — customers quartiled on
+    Recency (days since last order, vs the corpus' newest order day),
+    Frequency (order count) and Monetary (total cents), composed into
+    a 3-digit segment code (r·100 + f·10 + m, quartiles 1..4) and
+    published as the segment census.  NTILE over a tied metric splits
+    ties by ROW ORDER — engine-dependent unless the ORDER BY is a
+    total order — so every quartile ranks over (metric, custkey);
+    with the tie-break the assignment is exact in any engine, no
+    float quantile anywhere.
+
+    100 TB shape: the three quartiles were global NTILE windows —
+    the customer frame (15M rows at sf100) would serialize onto ONE
+    partition.  Each is now the band-decomposed rank
+    (operators/rankdist.global_rank_decomposed2, the
+    ``diag_quality_deciles_dist`` lowering)
+    + closed-form NTILE, bit-identical to the engine's NTILE over the
+    same total order.  Bands are the metric itself for the massively
+    tied small-domain metrics (recency days, order count — bounded
+    distinct values regardless of frame size) and cents >> 18 for the
+    near-unique monetary total; the sub level (custkey >> k sized to
+    <2^10 from the collected max key, or middle cents bits) keeps
+    every window partition bounded by the sub width, never the frame.
+    The only SinglePartition exchange left is the 1-row customer-count
+    merge feeding the closed-form NTILE."""
+    from xero_api_etl_utilities_spark.operators.rankdist import (
+        global_rank_decomposed2,
+        ntile_closed_form,
+    )
+
+    od = load_table(spark, sf_dir, "orders")
+    head = od.agg(
+        F.max(F.col("o_orderdate").cast("date")).alias("d"),
+        F.max("o_custkey").alias("mk"),
+    ).collect()[0]
+    anchor, maxck = head["d"], int(head["mk"])
+    kshift = max(0, maxck.bit_length() - 10)  # custkey >> kshift < 1024
+    per_cust = od.groupBy("o_custkey").agg(
+        F.datediff(
+            F.lit(anchor.isoformat()).cast("date"),
+            F.max(F.col("o_orderdate").cast("date")),
+        ).alias("recency_days"),
+        F.count(F.lit(1)).alias("frequency"),
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
+            "monetary_cents"
+        ),
+    )
+    total = per_cust.agg(F.count(F.lit(1)).cast("bigint").alias("_n"))
+    from xero_api_etl_utilities_spark.operators.materialize import materialize
+
+    # materialize ONCE: the fused rank below reads this frame in three
+    # union branches plus histograms — cheap cached re-reads instead
+    # of re-aggregations of the fact table
+    base = materialize(
+        per_cust.crossJoin(F.broadcast(total)).withColumn(
+            "_ck_sub", F.shiftright(F.col("o_custkey"), kshift)
+        )
+    )
+
+    # the migration-query trick generalized: the three quartiles
+    # were three independent rank pipelines over the same frame; a
+    # metric TAG now rides a 3x union through ONE
+    # group_cols=['_tag'] decomposed rank (one window exchange over 3N
+    # customer-grain rows, one histogram family, two broadcast
+    # join-backs) and a customer-grain pivot reassembles (r, f, m).
+    # Recency quartile 4 = most recent, so its metric is NEGATED
+    # recency (asc(-recency) == desc(recency), same custkey
+    # tie-break); each tag's band stays a pure coarsening of its
+    # (metric, custkey) order.
+    variants = [
+        (
+            0,
+            (-F.col("recency_days")).cast("long"),
+            F.col("_ck_sub").cast("long"),
+            (-F.col("recency_days")).cast("long"),
+        ),
+        (
+            1,
+            F.col("frequency").cast("long"),
+            F.col("_ck_sub").cast("long"),
+            F.col("frequency").cast("long"),
+        ),
+        (
+            2,
+            F.shiftright(F.col("monetary_cents"), 18),
+            F.shiftright(F.col("monetary_cents"), 8).bitwiseAND(F.lit(1023)),
+            F.col("monetary_cents"),
+        ),
+    ]
+    tagged = None
+    for tag, band, sub, metric in variants:
+        v = base.select(
+            "o_custkey",
+            "_n",
+            F.lit(tag).alias("_tag"),
+            band.alias("_band"),
+            sub.alias("_sub"),
+            metric.alias("_metric"),
+        )
+        tagged = v if tagged is None else tagged.unionByName(v)
+    ranked = global_rank_decomposed2(
+        tagged,
+        "_band",
+        "_sub",
+        [F.asc("_metric"), F.asc("o_custkey")],
+        rank_name="_gr",
+        group_cols=["_tag"],
+    )
+    quarts = ranked.select(
+        "o_custkey",
+        "_tag",
+        ntile_closed_form(F.col("_gr"), F.col("_n"), 4).cast("int").alias("_q"),
+    )
+    pivot = quarts.groupBy("o_custkey").agg(
+        F.max(F.when(F.col("_tag") == 0, F.col("_q"))).alias("_rq"),
+        F.max(F.when(F.col("_tag") == 1, F.col("_q"))).alias("_fq"),
+        F.max(F.when(F.col("_tag") == 2, F.col("_q"))).alias("_mq"),
+    )
+    seg = base.select("o_custkey", "monetary_cents").join(
+        pivot, "o_custkey"
+    ).select(
+        "o_custkey",
+        "monetary_cents",
+        (F.col("_rq") * 100 + F.col("_fq") * 10 + F.col("_mq")).alias(
+            "segment"
+        ),
+    )
+    return (
+        seg.groupBy("segment")
+        .agg(
+            F.count(F.lit(1)).alias("n_customers"),
+            F.sum("monetary_cents").alias("segment_cents"),
+        )
+        .orderBy("segment")
+    )
+
+
+register(
+    "orders_rfm_segments",
+    orders_rfm_segments,
+    """
+WITH anchor AS (SELECT MAX(CAST(o_orderdate AS DATE)) AS d FROM orders),
+per_cust AS (
+  SELECT o_custkey,
+    CAST((SELECT d FROM anchor) - MAX(CAST(o_orderdate AS DATE)) AS BIGINT)
+      AS recency_days,
+    CAST(COUNT(*) AS BIGINT) AS frequency,
+    SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS monetary_cents
+  FROM orders GROUP BY o_custkey
+),
+quartiled AS (
+  SELECT o_custkey, monetary_cents,
+    NTILE(4) OVER (ORDER BY recency_days DESC, o_custkey ASC) * 100
+    + NTILE(4) OVER (ORDER BY frequency ASC, o_custkey ASC) * 10
+    + NTILE(4) OVER (ORDER BY monetary_cents ASC, o_custkey ASC) AS segment
+  FROM per_cust
+)
+SELECT CAST(segment AS INTEGER) AS segment,
+  CAST(COUNT(*) AS BIGINT) AS n_customers,
+  CAST(SUM(monetary_cents) AS BIGINT) AS segment_cents
+FROM quartiled
+GROUP BY segment ORDER BY segment
+""",
+)
+
+
+# ---------------------------------------------------------------------------
+# association rules (support / confidence / lift, integer-exact)
+# ---------------------------------------------------------------------------
+
+
+def basket_brand_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Directed association rules a→b over order baskets with the
+    full classic metric triple — support, confidence, lift — kept
+    integer-exact in basis points (lift_bp = 10000·N·sup(ab) div
+    (sup(a)·sup(b)); >10000 means positive association).  Same
+    relative minsup as the triples query.  Shape: the order-keyed
+    basket self-join for pair supports (quadratic only within one
+    basket), two broadcast joins against the 25-row per-brand support
+    dim, no window.  Directed rules are emitted for both directions
+    (confidence is asymmetric)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    pt = load_table(spark, sf_dir, "part")
+    n_orders = load_table(spark, sf_dir, "orders").count()
+    minsup = max(5, n_orders // 200)
+    basket = (
+        li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
+        .select(F.col("l_orderkey").alias("o"), F.col("p_brand").alias("b"))
+        .distinct()
+    )
+    a, b2 = basket.alias("a"), basket.alias("b")
+    sup2 = (
+        a.join(b2, (F.col("a.o") == F.col("b.o")) & (F.col("a.b") != F.col("b.b")))
+        .groupBy(
+            F.col("a.b").alias("antecedent"), F.col("b.b").alias("consequent")
+        )
+        .agg(F.count(F.lit(1)).alias("sup_ab"))
+        .filter(F.col("sup_ab") >= minsup)
+    )
+    sup1 = basket.groupBy("b").agg(F.count(F.lit(1)).alias("s"))
+    return (
+        sup2.join(
+            F.broadcast(sup1.select(F.col("b").alias("antecedent"), F.col("s").alias("sup_a"))),
+            "antecedent",
+        )
+        .join(
+            F.broadcast(sup1.select(F.col("b").alias("consequent"), F.col("s").alias("sup_b"))),
+            "consequent",
+        )
+        .select(
+            "antecedent",
+            "consequent",
+            "sup_ab",
+            F.expr("10000L * sup_ab div " + str(n_orders)).alias("support_bp"),
+            F.expr("10000L * sup_ab div sup_a").alias("confidence_bp"),
+            # long literals: 10000 * n_orders as INT literals overflowed
+            # int32 under ANSI at the 10x probe scale (n_orders 1.5M)
+            # before ever touching the long sup_ab column
+            F.expr(f"10000L * {n_orders}L * sup_ab div (sup_a * sup_b)").alias(
+                "lift_bp"
+            ),
+        )
+        .orderBy(F.desc("lift_bp"), "antecedent", "consequent")
+    )
+
+
+register(
+    "basket_brand_rules",
+    basket_brand_rules,
+    """
+WITH basket AS MATERIALIZED (
+  -- MATERIALIZED: DuckDB 1.0 inlines the CTE at every self-join
+  -- reference, re-running (and at sf0.1 join-reordering into a ~229 s
+  -- plan) the lineitem x part join per reference; materialized it is
+  -- a sub-second per-order enumeration.
+  SELECT DISTINCT l_orderkey AS o, p_brand AS b
+  FROM lineitem JOIN part ON l_partkey = p_partkey
+),
+n AS (SELECT CAST(COUNT(*) AS BIGINT) AS nn,
+             GREATEST(5, COUNT(*) // 200) AS minsup FROM orders),
+sup1 AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS s FROM basket GROUP BY b),
+sup2 AS (
+  SELECT a.b AS antecedent, b.b AS consequent, CAST(COUNT(*) AS BIGINT) AS sup_ab
+  FROM basket a JOIN basket b ON a.o = b.o AND a.b <> b.b
+  GROUP BY 1, 2
+)
+SELECT antecedent, consequent, sup_ab,
+  (10000 * sup_ab) // nn AS support_bp,
+  (10000 * sup_ab) // sa.s AS confidence_bp,
+  (10000 * nn * sup_ab) // (sa.s * sb.s) AS lift_bp
+FROM sup2
+JOIN sup1 sa ON sa.b = antecedent
+JOIN sup1 sb ON sb.b = consequent, n
+WHERE sup_ab >= minsup
+ORDER BY lift_bp DESC, antecedent, consequent
+""",
+)
+
+
+# ---------------------------------------------------------------------------
+# RFM monetary-quartile migration matrix (period-over-period)
+# ---------------------------------------------------------------------------
+
+_RFM_SPLIT_DATE = "1995-06-30"
+
+
+def orders_rfm_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Period-over-period customer-value MIGRATION — the
+    composition query on top of ``orders_rfm_segments``'s quartile machinery: customers
+    are monetary-quartiled separately in the first and second halves
+    of the order history (split at a fixed calendar date, so the
+    report means the same thing run over run) and the census counts
+    every (old quartile -> new quartile) cell, with quartile 0
+    standing for "absent in that half" — the top row is new-customer
+    acquisition, the left column is churn, the diagonal is stability:
+    the migration matrix every retention team reads.
+
+    Exactness: quartiles rank over (cents, custkey) total orders (the
+    ``orders_rfm_segments`` rule); the halves join FULL OUTER on custkey with quartile 0
+    via coalesce.  Shape: two order scans (one per half — the date
+    predicate pushes to parquet), two customer-grain aggregates, one
+    full-outer join on the customer dimension, one 25-cell census.
+
+    100 TB shape: each half's quartile was a global NTILE window
+    over the customer frame — single-partition at scale; the rewire
+    replaced that with the band-decomposed rank (operators/rankdist,
+    the ``orders_rfm_segments``/``diag_quality_deciles_dist`` lowering: band =
+    cents >> 18, sub = middle cents
+    bits, both pure coarsenings of the (cents, custkey) order) +
+    closed-form NTILE.  The two halves no
+    longer run one band-stats pipeline each — a half TAG rides the
+    customer grain through ONE ``group_cols=['_half']`` rank pass
+    (one window exchange, one histogram family, per-half totals from
+    one 2-row aggregate), and the old full-outer half-join collapses
+    into a customer-grain pivot aggregate.  No SinglePartition
+    exchange remains: the per-half totals are a 2-group hash
+    aggregate on ``_half`` feeding a broadcast exchange (the
+    explain_audit check for this query asserts zero
+    SinglePartition exchanges)."""
+    from xero_api_etl_utilities_spark.operators.rankdist import (
+        global_rank_decomposed2,
+        ntile_closed_form,
+    )
+
+    od = load_table(spark, sf_dir, "orders")
+    split = F.lit(_RFM_SPLIT_DATE).cast("date")
+
+    per_cust = (
+        od.select(
+            "o_custkey",
+            F.when(F.col("o_orderdate").cast("date") <= split, 0)
+            .otherwise(1)
+            .alias("_half"),
+            F.round(F.col("o_totalprice") * 100).cast("long").alias("_c"),
+        )
+        .groupBy("_half", "o_custkey")
+        .agg(F.sum("_c").alias("_cents"))
+    )
+    totals = per_cust.groupBy("_half").agg(
+        F.count(F.lit(1)).cast("bigint").alias("_n")
+    )
+    ranked = global_rank_decomposed2(
+        per_cust.withColumn(
+            "_band", F.shiftright(F.col("_cents"), 18)
+        ).withColumn(
+            "_sub", F.shiftright(F.col("_cents"), 8).bitwiseAND(F.lit(1023))
+        ),
+        "_band",
+        "_sub",
+        [F.asc("_cents"), F.asc("o_custkey")],
+        rank_name="_gr",
+        group_cols=["_half"],
+    ).join(F.broadcast(totals), "_half")
+    quart = ranked.select(
+        "_half",
+        "o_custkey",
+        ntile_closed_form(F.col("_gr"), F.col("_n"), 4).cast("int").alias("_q"),
+    )
+    joined = quart.groupBy("o_custkey").agg(
+        F.coalesce(
+            F.max(F.when(F.col("_half") == 0, F.col("_q"))), F.lit(0)
+        ).alias("m_old"),
+        F.coalesce(
+            F.max(F.when(F.col("_half") == 1, F.col("_q"))), F.lit(0)
+        ).alias("m_new"),
+    )
+    return (
+        joined.groupBy("m_old", "m_new")
+        .agg(F.count(F.lit(1)).alias("n_customers"))
+        .select(
+            F.col("m_old").cast("int").alias("m_old"),
+            F.col("m_new").cast("int").alias("m_new"),
+            "n_customers",
+        )
+        .orderBy("m_old", "m_new")
+    )
+
+
+_RFM_MIGRATION_ORACLE = f"""
+WITH old_h AS (
+  SELECT o_custkey,
+    ntile(4) OVER (ORDER BY sum(CAST(round(o_totalprice * 100) AS BIGINT)) ASC,
+                   o_custkey ASC) AS m_old
+  FROM orders WHERE CAST(o_orderdate AS DATE) <= DATE '{_RFM_SPLIT_DATE}'
+  GROUP BY o_custkey
+), new_h AS (
+  SELECT o_custkey,
+    ntile(4) OVER (ORDER BY sum(CAST(round(o_totalprice * 100) AS BIGINT)) ASC,
+                   o_custkey ASC) AS m_new
+  FROM orders WHERE CAST(o_orderdate AS DATE) > DATE '{_RFM_SPLIT_DATE}'
+  GROUP BY o_custkey
+)
+SELECT CAST(coalesce(m_old, 0) AS INT) AS m_old,
+       CAST(coalesce(m_new, 0) AS INT) AS m_new,
+       count(*)::BIGINT AS n_customers
+FROM old_h FULL OUTER JOIN new_h USING (o_custkey)
+GROUP BY 1, 2
+ORDER BY m_old, m_new
+"""
+
+register("orders_rfm_migration", orders_rfm_migration, _RFM_MIGRATION_ORACLE)
+
+
+# ---------------------------------------------------------------------------
+# cohort lifetime-value matrix
+# ---------------------------------------------------------------------------
+
+
+def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cohort LTV triangle — customers grouped by
+    first-order month, each cohort's per-month activity, revenue, and
+    CUMULATIVE revenue per founding member: the acquisition-payback
+    table every growth team reads next to the retention matrix
+    (``events_cohort_retention`` is the activity sibling; this is the
+    money one).  All integer cents; LTV = cumulative cents ``div``
+    cohort size, so the hash is exact.
+
+    Shape: one customer-grain first-order aggregate, one
+    customer-keyed equi-join back to the fact (AQE broadcasts the
+    first-order side when small; stays a shuffled equi-join at 100
+    TB), one (cohort, month) aggregate, then a cohort-partitioned
+    running sum over the cohort×month triangle — a dimension-sized
+    frame (~84×84 at any corpus size: partitions bounded by the
+    calendar, never the data)."""
+    od = load_table(spark, sf_dir, "orders").select(
+        "o_custkey",
+        F.date_trunc("month", F.col("o_orderdate").cast("date"))
+        .cast("date")
+        .alias("_m"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("_cents"),
+    )
+    first = od.groupBy("o_custkey").agg(F.min("_m").alias("cohort"))
+    monthnum = lambda c: F.year(c) * 12 + F.month(c)  # noqa: E731
+    cells = (
+        od.join(first, "o_custkey")
+        .withColumn("months_since", monthnum(F.col("_m")) - monthnum(F.col("cohort")))
+        .groupBy("cohort", "months_since")
+        .agg(
+            F.countDistinct("o_custkey").alias("n_active"),
+            F.sum("_cents").alias("revenue_cents"),
+        )
+    )
+    sizes = cells.filter(F.col("months_since") == 0).select(
+        "cohort", F.col("n_active").alias("_csize")
+    )
+    w = (
+        Window.partitionBy("cohort")
+        .orderBy("months_since")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        cells.withColumn("cum_revenue_cents", F.sum("revenue_cents").over(w))
+        .join(F.broadcast(sizes), "cohort")
+        .select(
+            "cohort",
+            F.col("months_since").cast("int").alias("months_since"),
+            F.col("n_active").cast("bigint").alias("n_active"),
+            F.col("revenue_cents").cast("bigint").alias("revenue_cents"),
+            F.col("cum_revenue_cents").cast("bigint").alias(
+                "cum_revenue_cents"
+            ),
+            F.expr("cum_revenue_cents div _csize")
+            .cast("bigint")
+            .alias("cum_ltv_cents"),
+        )
+        .orderBy("cohort", "months_since")
+    )
+
+
+register(
+    "orders_cohort_ltv",
+    orders_cohort_ltv,
+    """
+WITH od AS (
+  SELECT o_custkey,
+    date_trunc('month', CAST(o_orderdate AS DATE)) AS m,
+    CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+  FROM orders
+), first AS (
+  SELECT o_custkey, min(m) AS cohort FROM od GROUP BY o_custkey
+), cells AS (
+  SELECT cohort,
+    (year(m) * 12 + month(m)) - (year(cohort) * 12 + month(cohort))
+      AS months_since,
+    count(DISTINCT o_custkey) AS n_active,
+    sum(cents) AS revenue_cents
+  FROM od JOIN first USING (o_custkey)
+  GROUP BY 1, 2
+), cum AS (
+  SELECT cohort, months_since, n_active, revenue_cents,
+    sum(revenue_cents) OVER (PARTITION BY cohort ORDER BY months_since
+      ROWS UNBOUNDED PRECEDING) AS cum_revenue_cents
+  FROM cells
+), sizes AS (
+  SELECT cohort, n_active AS csize FROM cells WHERE months_since = 0
+)
+SELECT CAST(cohort AS DATE) AS cohort,
+  CAST(months_since AS INT) AS months_since,
+  CAST(n_active AS BIGINT) AS n_active,
+  CAST(revenue_cents AS BIGINT) AS revenue_cents,
+  CAST(cum_revenue_cents AS BIGINT) AS cum_revenue_cents,
+  CAST(cum_revenue_cents // csize AS BIGINT) AS cum_ltv_cents
+FROM cum JOIN sizes USING (cohort)
+ORDER BY cohort, months_since
 """,
 )
