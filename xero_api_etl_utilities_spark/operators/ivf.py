@@ -92,8 +92,8 @@ def train_centroids_prefix_widths(
     driver-side is the same bytes as slicing in the plan — but pays a
     single TakeOrdered job instead of ``len(widths)`` (a per-width
     collect would read the SAME sample rows once per width).  The
-    DuckDB oracle twin (plans/retrieval_ops._trunc_cents_from_parquet) uses exactly
-    this collect-once-slice-per-width recipe."""
+    DuckDB oracle twin (plans/retrieval_ops._trunc_cents_from_parquet)
+    uses exactly this collect-once-slice-per-width recipe."""
     rows = df.select(_ID_COL, _VEC_COL).orderBy(_ID_COL).limit(1000).collect()
     base = [[float(v) for v in r[1]] for r in rows]
     return {d: _kmeans_unit([v[:d] for v in base], 16, 4, 11) for d in widths}

@@ -1427,8 +1427,8 @@ _PACK_BUDGET = 4096
 
 def _publish_dir(sf_dir: str, run_suffix: str | None = None) -> str:
     """Deterministic artifact location: env-overridable, defaulting to
-    the git-ignored warehouse dir inside the repo (never /root/testdata
-    or any machine-absolute data path).  ``run_suffix`` (the Spark
+    the git-ignored warehouse dir inside the repo (never the input data
+    directory or any machine-absolute data path).  ``run_suffix`` (the Spark
     applicationId in :func:`publish_corpus`) isolates concurrent runs
     against the same base dir — two parallel gate sessions otherwise
     race on one artifact path."""

@@ -3,7 +3,7 @@
 Image decode and features, audio features and voice activity, video
 container metadata, perceptual-hash near-duplicate pairs and the video
 frame-sampling chain, over media synthesized deterministically per
-``documents`` row (the driver's test data has no media column).  No
+``documents`` row (the test tables have no media column).  No
 reference counterpart.
 """
 

@@ -4,7 +4,7 @@
 families.
 
 Each query re-expresses a relational operator of the reference ETL over
-the driver's star schema, with a DuckDB oracle: the charge scans and
+the star schema, with a DuckDB oracle: the charge scans and
 filters of ``src/queries.ts``, the charge verification join
 (``src/queries.ts:5-46``) as the ``reconcile_`` pair, the department
 pivot (``src/DataObject.ts:114-122``), the invoice line assembly
